@@ -10,6 +10,7 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * val spark = Graft.session()
   * val store = Graft.jobStore
+  * val kvs: Seq[(String, String)] = Seq("d1" -> "a b a", "d2" -> "b")
   * val Right(id) = store.launchAsync(spark,
   *   JobStore.JobSpec("wc", "wordcount", token = "t"), kvs)
   * // ... poll ...

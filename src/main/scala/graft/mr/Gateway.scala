@@ -17,6 +17,11 @@ import java.nio.charset.StandardCharsets
   *    master.cc:530-535); 200 `{"ok":true,"message":"","job_id":N}` on
   *    success (gateway.cc:110-127). Launch is asynchronous — clients poll,
   *    exactly like the reference example client (word_count_client.cc).
+  *    The body is parsed on the handler thread and its KV list, already in
+  *    driver memory, runs on the driver kernel ([[MRJob.runLocal]], the
+  *    reference master's in-memory merge, `job.cc:45-66`): a job whose
+  *    result stays inline starts no Spark job between `/launch` and
+  *    `/getresult` (see [[JobStore]] for the spill and budget fallbacks).
   *  - `GET /getresult?job_id=N&token=T` → 200
   *    `{"ok":true,"message":"","result":[…]}` when finished
   *    (gateway.cc:167-176); 500 `{"ok":false,"message":…}` for missing
@@ -39,18 +44,22 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
     sweepIntervalMillis: Long = Gateway.DefaultSweepIntervalMillis) {
 
   @volatile private var server: HttpServer = _
+  // HttpServer.stop never shuts down an executor it was handed.
+  @volatile private var handlers: java.util.concurrent.ExecutorService = _
   @volatile private var sweeper: java.util.concurrent.ScheduledExecutorService = _
 
   /** Bind + start; returns the actual port (use port 0 for ephemeral). */
   def start(): Int = {
+    Gateway.disableNagle()
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/helloworld", (ex: HttpExchange) =>
       respond(ex, 200, "Hello world.", "text/plain"))
     server.createContext("/launch", handleLaunch _)
     server.createContext("/getresult", handleGetResult _)
     server.createContext("/cancel", handleCancel _)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(
-      threads, r => { val t = new Thread(r, "graft-gateway"); t.setDaemon(true); t }))
+    handlers = java.util.concurrent.Executors.newFixedThreadPool(
+      threads, r => { val t = new Thread(r, "graft-gateway"); t.setDaemon(true); t })
+    server.setExecutor(handlers)
     server.start()
     // The reference master runs a detached background scanner that
     // evicts TTL-expired finished jobs every SCAN_PERIOD_SECOND = 10 s
@@ -74,6 +83,7 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
   def stop(): Unit = {
     if (sweeper != null) sweeper.shutdownNow()
     if (server != null) server.stop(0)
+    if (handlers != null) handlers.shutdownNow()
   }
 
   private def handleLaunch(ex: HttpExchange): Unit =
@@ -226,6 +236,18 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
 }
 
 object Gateway {
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Turn on TCP_NODELAY for the JDK server's sockets unless the operator
+    * set the property. The server writes a response's headers and body
+    * separately, so with Nagle on each response waits for the client's
+    * delayed ACK (~40 ms). The JDK reads the property once, when its first
+    * server is created, so this runs before [[Gateway.start]] creates one.
+    */
+  private def disableNagle(): Unit =
+    if (System.getProperty(NoDelayProperty) == null)
+      System.setProperty(NoDelayProperty, "true")
+
   /** Launch-body cap: far above any control-plane document, far below a
     * buffering hazard.
     */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Job lifecycle registry — the library-API analog of the reference's
   * master job table + HTTP gateway surface:
@@ -31,6 +32,15 @@ import java.util.concurrent.atomic.AtomicLong
   *    (`JOB_RESULT_TIMEOUT_SECOND=3600`, `master.h:27`; scanner
   *    `master.cc:449-463`) — eviction also deletes a spilled result's
   *    sink directory, so the TTL bounds disk exactly as it bounds RAM.
+  *
+  *  - two launch forms that share admission, TTL, cancel and the spill
+  *    gate, and differ in the kernel they run: a `Dataset` input runs the
+  *    Spark kernel ([[MRJob.run]]); a `Seq` input — a KV list the driver
+  *    already holds, e.g. a `/launch` body — runs the driver kernel
+  *    ([[MRJob.runLocal]]), the reference master's single in-memory merge
+  *    (`job.cc:45-66`), and starts no Spark job unless its result spills
+  *    or its buffered map output passes [[MRJob.LocalBufferBudgetBytes]],
+  *    in which case the same KV list reruns on the Spark kernel.
   *
   * The Raft/etcd/brpc machinery around this table is deliberately dropped
   * (SURVEY.md §7.6): Spark's driver is the single coordinator.
@@ -95,11 +105,18 @@ final class JobStore(
       spark: SparkSession,
       spec: JobSpec,
       input: Dataset[(String, String)]): Either[String, Long] =
-    validate(spark, spec, input).map { fns =>
-      val id = register(spec)
-      execute(spark, id, spec, input, fns)
-      id
-    }
+    submit(spark, spec, input.isEmpty, async = false)(
+      onSpark(spark, _, spec, input, _))
+
+  /** [[launch]] for a KV list held in driver memory: runs the driver
+    * kernel (see the class doc for when it falls back to Spark).
+    */
+  def launch(
+      spark: SparkSession,
+      spec: JobSpec,
+      input: Seq[(String, String)]): Either[String, Long] =
+    submit(spark, spec, input.isEmpty, async = false)(
+      onDriver(spark, _, spec, input, _))
 
   /** Async form — the reference's actual surface: `/launch` returns a job
     * id immediately and clients poll `/getresult`
@@ -114,22 +131,41 @@ final class JobStore(
       spark: SparkSession,
       spec: JobSpec,
       input: Dataset[(String, String)]): Either[String, Long] =
-    validate(spark, spec, input).map { fns =>
+    submit(spark, spec, input.isEmpty, async = true)(
+      onSpark(spark, _, spec, input, _))
+
+  /** [[launchAsync]] for a KV list held in driver memory — the form the
+    * gateway calls: same queue, the driver kernel.
+    */
+  def launchAsync(
+      spark: SparkSession,
+      spec: JobSpec,
+      input: Seq[(String, String)]): Either[String, Long] =
+    submit(spark, spec, input.isEmpty, async = true)(
+      onDriver(spark, _, spec, input, _))
+
+  /** Validate → register → execute, for every launch form: `compute` is the
+    * kernel run for the new job id; `async` queues it on the pool instead
+    * of running it on the caller's thread.
+    */
+  private def submit(
+      spark: SparkSession, spec: JobSpec, inputIsEmpty: => Boolean, async: Boolean)(
+      compute: (Long, JobTypeRegistry.MapReduceFn) => JobResult): Either[String, Long] =
+    validate(spec, inputIsEmpty).map { fns =>
       val id = register(spec)
-      pool.execute(() => execute(spark, id, spec, input, fns))
+      val run: Runnable = () => execute(spark, id, spec)(compute(id, fns))
+      if (async) pool.execute(run) else run.run()
       id
     }
 
   private def validate(
-      spark: SparkSession,
-      spec: JobSpec,
-      input: Dataset[(String, String)]): Either[String, JobTypeRegistry.MapReduceFn] =
+      spec: JobSpec, inputIsEmpty: => Boolean): Either[String, JobTypeRegistry.MapReduceFn] =
     if (spec.mappers <= 0 || spec.reducers <= 0)
       Left("mapper_num and reducer_num must be > 0") // master.cc:530-532
     else JobTypeRegistry.lookup(spec.jobType) match {
       case None => Left(s"unknown job type: ${spec.jobType}") // no capable worker
       case Some(fns) =>
-        if (input.isEmpty) Left("input kvs must be non-empty") // master.cc:533-535
+        if (inputIsEmpty) Left("input kvs must be non-empty") // master.cc:533-535
         else Right(fns)
     }
 
@@ -139,19 +175,18 @@ final class JobStore(
     id
   }
 
-  private def execute(
-      spark: SparkSession,
-      id: Long,
-      spec: JobSpec,
-      input: Dataset[(String, String)],
-      fns: JobTypeRegistry.MapReduceFn): Unit =
+  /** The job lifecycle around one kernel run (`compute`), shared by both
+    * launch forms: admission, cancel plumbing, the terminal transition.
+    */
+  private def execute(spark: SparkSession, id: Long, spec: JobSpec)(
+      compute: => JobResult): Unit =
     try {
       // Admission: only a still-Queued job starts running — a cancel
       // that landed while the job waited in the queue transitioned it to
       // the terminal Cancelled state, and no work may run for it. (A
       // cancel landing AFTER this transition is covered by the group
-      // kill for submitted stages and the thread interrupt for the gap
-      // between.)
+      // kill for submitted stages and the thread interrupt, which the
+      // driver kernel and the gap before a Spark job both observe.)
       var admitted = false
       jobs.computeIfPresent(id, (_, st) =>
         if (st.status == Queued) { admitted = true; st.copy(status = Running) }
@@ -164,28 +199,32 @@ final class JobStore(
       // — except Spark's cancellation is terminal, not a requeue).
       spark.sparkContext.setJobGroup(jobGroup(id),
         s"graft job $id: ${spec.name}", interruptOnCancel = true)
-      val out = MRJob
-        .run(spark, input, fns.mapFn, fns.reduceFn, spec.mappers,
-          spec.reducers, fns.combineFn)
-      val result = materialize(spark, id, out)
+      val result = compute
       finishIfRunning(id, _.copy(status = Finished, result = Some(result),
         finishedAt = Some(clock())))
-      // A cancel that won the race AFTER materialize() wrote a spill sink
+      // A cancel that won the race AFTER the result wrote a spill sink
       // left the job terminally Cancelled with result=None — nothing
       // would ever point at (or delete) the sink. If the Finished
       // transition did not take effect, the sink is orphaned: delete it.
       if (!Option(jobs.get(id)).exists(_.status == Finished))
         deleteDir(spillDir(id))
     } catch {
-      case e: Exception =>
+      case e: Throwable =>
         // A cancelled job's action dies with a SparkException (or the
         // interrupt) here; finishIfRunning leaves the Cancelled state in
         // place — only a still-Running job transitions to Failed. A
         // partially-written spill sink from the failed/cancelled attempt
         // is deleted — nothing points at it.
         deleteDir(spillDir(id))
-        finishIfRunning(id, _.copy(status = Failed(e.getMessage),
+        finishIfRunning(id, _.copy(
+          status = Failed(Option(e.getMessage).getOrElse(e.toString)),
           finishedAt = Some(clock())))
+        // User map/reduce code runs on this thread under the driver
+        // kernel, so an Error it throws (`assert`, `???`) lands here, where
+        // the Spark kernel would have seen a failed task: it fails the job
+        // like any task failure. Only a fatal error still propagates —
+        // after the job is Failed, so it never stays Running.
+        if (!NonFatal(e) && !e.isInstanceOf[InterruptedException]) throw e
     } finally {
       // Close the cancel gap: cancel()'s group kill only reaches Spark
       // jobs already submitted when it fires, so a job this thread
@@ -201,6 +240,38 @@ final class JobStore(
         Thread.interrupted() // clear a late interrupt; the pool thread moves on
       }
     }
+
+  private def onSpark(spark: SparkSession, id: Long, spec: JobSpec,
+      input: Dataset[(String, String)], fns: JobTypeRegistry.MapReduceFn): JobResult =
+    materialize(spark, id, MRJob.run(spark, input, fns.mapFn, fns.reduceFn,
+      spec.mappers, spec.reducers, fns.combineFn))
+
+  /** Driver kernel, size-gated like [[materialize]]: a result within
+    * `spillBytes` stays on the driver as it already is; a larger one is
+    * written to the spill sink from the driver rows in one Spark job. A
+    * map output past the kernel's budget reruns on the Spark kernel.
+    */
+  private def onDriver(spark: SparkSession, id: Long, spec: JobSpec,
+      input: Seq[(String, String)], fns: JobTypeRegistry.MapReduceFn): JobResult = {
+    val local =
+      try Some(MRJob.runLocal(input, fns.mapFn, fns.reduceFn,
+        spec.mappers, spec.reducers, fns.combineFn))
+      catch { case _: MRJob.LocalBudgetExceeded => None }
+    import spark.implicits._
+    local match {
+      case None => onSpark(spark, id, spec, input.toDS(), fns)
+      case Some(rows) =>
+        val bytes = rows.iterator.map(MRJob.utf8Length).sum
+        if (bytes <= spillBytes) InlineResult(rows.toArray)
+        else {
+          val dir = spillDir(id)
+          rows.iterator.zipWithIndex.map { case (r, i) => (i.toLong, r) }.toSeq
+            .toDF("mid", "result")
+            .write.mode("overwrite").parquet(dir)
+          SpilledResult(dir, rows.size.toLong, bytes)
+        }
+    }
+  }
 
   /** O8/O10 result materialization, size-gated: one distributed aggregate
     * measures the result's byte size WITHOUT bringing a row to the driver

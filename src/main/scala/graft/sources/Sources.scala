@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.graft.JsonBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,8 +14,9 @@ import org.apache.spark.sql.types._
   *  - O10 sink: `GET /getresult` returns the result strings as a JSON
   *    array (`gateway.cc:167-176`).
   *
-  * Here the gateway becomes a library API: schema-checked `spark.read
-  * .json` in, JSON array out. General tabular sources (parquet/csv/json/
+  * Here the gateway becomes a library API: schema-checked JSON in (the
+  * `spark.read.json` parser, run on the driver for an in-memory body),
+  * JSON array out. General tabular sources (parquet/csv/json/
   * text) are one-liners on `spark.read` and are exercised throughout
   * graft.Tables / the query surface.
   */
@@ -33,58 +35,63 @@ object Sources {
       StructField("key", StringType, nullable = false),
       StructField("value", StringType, nullable = false)))), nullable = false)))
 
+  /** One validated launch. `kvs` is the document's KV list as the driver
+    * holds it: [[graft.mr.JobStore]] runs a `Seq` on the driver kernel
+    * ([[graft.mr.MRJob.runLocal]], the reference master's in-memory merge,
+    * `job.cc:45-66`), so a launch plans and runs nothing.
+    */
   final case class Launch(
       name: String,
       jobType: String,
       mapperNum: Int,
       reducerNum: Int,
       token: String,
-      kvs: Dataset[(String, String)])
+      kvs: Seq[(String, String)])
+
+  private val launchOptions = Map("mode" -> "FAILFAST")
 
   /** Read + validate one launch JSON document (the `/launch` body). Errors
     * mirror the gateway's checks: missing/ill-typed fields and empty kvs
     * are rejected (gateway.cc:15-51, master.cc:530-535).
     */
   def readLaunchJson(spark: SparkSession, path: String): Either[String, Launch] =
-    validateLaunch(spark, spark.read
+    validateLaunch(spark.read
       .option("multiLine", "true")
       .schema(launchSchema)
-      .option("mode", "FAILFAST")
-      .json(path))
+      .options(launchOptions)
+      .json(path).collect().toSeq)
 
   /** Parse + validate a launch document held in memory (an HTTP `/launch`
-    * request body) — same schema and checks as [[readLaunchJson]].
+    * request body) — same schema, checks and results as
+    * `spark.read.schema(launchSchema).option("mode", "FAILFAST")
+    * .json(Seq(body).toDS())`, whose per-record parser stack (catalyst's
+    * `JacksonParser` under `FailureSafeParser`) runs here on the calling
+    * thread: no Spark job. A body that is a top-level array yields one
+    * row per element, as the reader does, so it is rejected unless it
+    * holds exactly one document.
     */
-  def parseLaunchJson(spark: SparkSession, body: String): Either[String, Launch] = {
-    import spark.implicits._
-    validateLaunch(spark, spark.read
-      .schema(launchSchema)
-      .option("mode", "FAILFAST")
-      .json(Seq(body).toDS()))
-  }
+  def parseLaunchJson(spark: SparkSession, body: String): Either[String, Launch] =
+    validateLaunch(JsonBridge.parse(spark, launchSchema, launchOptions, body))
 
-  private def validateLaunch(
-      spark: SparkSession, raw: DataFrame): Either[String, Launch] = {
-    import spark.implicits._
+  private def validateLaunch(parse: => Seq[Row]): Either[String, Launch] =
     try {
-      val rows = raw.collect()
+      val rows = parse
       if (rows.length != 1) Left(s"expected one launch document, got ${rows.length}")
       else {
-        val r = rows(0)
+        val r = rows.head
         val bad = launchSchema.fieldNames.filter(f => r.isNullAt(r.fieldIndex(f)))
         if (bad.nonEmpty) Left(s"missing/invalid fields: ${bad.mkString(", ")}")
         else {
-          val kvRows = r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("kvs"))
-            .map(kv => (kv.getString(0), kv.getString(1)))
+          val kvRows = r.getSeq[Row](r.fieldIndex("kvs"))
+            .map(kv => (kv.getString(0), kv.getString(1))).toVector
           if (kvRows.isEmpty) Left("kvs must be non-empty") // master.cc:533-535
           else Right(Launch(r.getString(0), r.getString(1), r.getInt(2),
-            r.getInt(3), r.getString(4), kvRows.toDS()))
+            r.getInt(3), r.getString(4), kvRows))
         }
       }
     } catch {
       case e: Exception => Left(s"malformed launch JSON: ${e.getMessage}")
     }
-  }
 
   /** O10 sink: write result strings as a single JSON array file (the
     * `/getresult` response body shape, gateway.cc:167-176).

@@ -122,7 +122,7 @@ class EdgeCasesSpec extends SparkSuite {
   }
 
   test("MRJob runs a one-record job") {
-    val out = graft.mr.MRJob.runLocal(spark, Seq(("k", "v")),
+    val out = graft.mr.MRJob.runLocal(Seq(("k", "v")),
       (k, _) => Seq((k, "1")),
       (k, vs) => Seq(s"$k\t${vs.size}"))
     assert(out === Seq("k\t1"))

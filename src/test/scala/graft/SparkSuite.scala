@@ -9,6 +9,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `f` runs (suites run one at a time, so
+    * every job in the window is `f`'s).
+    */
+  def sparkJobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.graft.ListenerBridge.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
 }
 
 object SparkSuite {

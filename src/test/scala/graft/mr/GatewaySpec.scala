@@ -365,6 +365,57 @@ class GatewaySpec extends SparkSuite {
     } finally gw.stop()
   }
 
+  test("an inline-result launch starts zero Spark jobs between /launch and /getresult") {
+    withGateway { base =>
+      val jobs = sparkJobsDuring {
+        val launch = post(s"$base/launch", launchBody("charcount_example"))
+        assert(launch.statusCode() == 200, launch.body())
+        val id = """"job_id":(\d+)""".r.findFirstMatchIn(launch.body()).get.group(1)
+        var resp = get(s"$base/getresult?job_id=$id&token=ztorchan")
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (resp.statusCode() != 200 && System.nanoTime() < deadline) {
+          Thread.sleep(20)
+          resp = get(s"$base/getresult?job_id=$id&token=ztorchan")
+        }
+        assert(resp.statusCode() == 200, resp.body())
+      }
+      assert(jobs == 0, s"$jobs Spark jobs ran for an inline launch")
+    }
+  }
+
+  test("responses are not held back by Nagle: median of 20 sequential GETs under 20 ms") {
+    withGateway { base =>
+      val url = java.net.URI.create(s"$base/helloworld").toURL
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        val c = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+        val in = c.getInputStream
+        try assert(new String(in.readAllBytes(), "UTF-8") == "Hello world.")
+        finally in.close()
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 3).foreach(_ => once()) // connection and class warm-up
+      val ms = Seq.fill(20)(once()).sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, s"median GET took $median ms: $ms")
+    }
+  }
+
+  test("stop() shuts down the handler pool: three start/stop cycles leave no handler thread") {
+    def handlerThreads(): Int = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .count(t => t.getName == "graft-gateway" && t.isAlive)
+    }
+    for (_ <- 1 to 3) withGateway { base =>
+      // use the pool, so its threads exist
+      assert(get(s"$base/helloworld").statusCode() == 200)
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (handlerThreads() > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(handlerThreads() == 0, s"${handlerThreads()} graft-gateway threads outlived stop()")
+  }
+
   test("getresult guards: missing params 400; bad job/token 500 in reference order") {
     withGateway { base =>
       assert(get(s"$base/getresult").statusCode() == 400)

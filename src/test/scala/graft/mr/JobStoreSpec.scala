@@ -330,6 +330,127 @@ class JobStoreSpec extends SparkSuite {
     assert(Option(new java.io.File(root).list()).forall(_.isEmpty),
       "an inline result wrote a spill directory")
   }
+
+  // ---- the `Seq` launch form: the driver kernel under the same lifecycle ----
+
+  test("launch → getResult on the driver kernel, no Spark job") {
+    val store = new JobStore(clock = () => 0L)
+    var id = -1L
+    val jobs = sparkJobsDuring {
+      id = store.launch(spark, JobSpec("wc", "wordcount", "tok"),
+        Seq(("d1", "a b a"), ("d2", "b"))).toOption.get
+    }
+    assert(store.getResult(id, "tok") == Right(Seq("2", "2")))
+    assert(jobs == 0, s"$jobs Spark jobs ran for an inline driver-kernel job")
+    // validation is the Dataset form's, without a Spark job for the emptiness check
+    assert(store.launch(spark, JobSpec("j", "wordcount", "t"), Seq.empty[(String, String)]) ==
+      Left("input kvs must be non-empty"))
+    assert(store.launch(spark, JobSpec("j", "wordcount", "t", reducers = 0),
+      Seq(("a", "b"))).isLeft)
+  }
+
+  test("cancel: a running driver-kernel job whose map sleeps lands Cancelled and never finishes") {
+    JobTypeRegistry.register("slow_local_spec",
+      (k, v) => { Thread.sleep(3000); JobStoreSpecBlocker.markRan(v); Iterator.single((k, v)) },
+      (k, vs) => vs.map(v => s"$k\t$v"))
+    val store = new JobStore(clock = () => 0L)
+    val Right(id) = store.launchAsync(spark,
+      JobSpec("slow", "slow_local_spec", "tok"), Seq(("a", "local1"), ("b", "local2")))
+    awaitStatus(store, id, JobStore.Running)
+    Thread.sleep(200) // the map is asleep in its first record
+    assert(store.cancel(spark, id, "tok") == Right(()))
+    assert(store.status(id) == Some(JobStore.Cancelled))
+    // longer than one record's sleep: an uninterrupted kernel would have
+    // finished its first record by now
+    Thread.sleep(4000)
+    assert(store.status(id) == Some(JobStore.Cancelled))
+    assert(store.getResult(id, "tok") == Left("job not finished"))
+    assert(!JobStoreSpecBlocker.ran("local1") && !JobStoreSpecBlocker.ran("local2"),
+      "the cancel did not interrupt the driver kernel")
+    assert(store.cancel(spark, id, "tok") == Left("job not running"))
+  }
+
+  test("map output past the driver budget completes on the Spark kernel, same result") {
+    // 3M empty values over 4 keys from one record, no combiner: the
+    // kernel's estimate (48 bytes a value) passes its 128 MiB budget, so
+    // the job reruns on the Spark kernel from the same kvs.
+    JobTypeRegistry.register("fanout_budget_spec",
+      (_, _) => Iterator.tabulate(3000000)(i => (s"k${i % 4}", "")),
+      (k, vs) => Iterator.single(s"$k=${vs.size}"))
+    val store = new JobStore(clock = () => 0L)
+    var id = -1L
+    val jobs = sparkJobsDuring {
+      id = store.launch(spark, JobSpec("fan", "fanout_budget_spec", "t"),
+        Seq(("d", "v"))).toOption.get
+    }
+    val want = (0 until 4).map(i => s"k$i=750000")
+    assert(store.getResult(id, "t") == Right(want))
+    assert(jobs > 0, "the over-budget job did not run on the Spark kernel")
+  }
+
+  test("an Error thrown by user code on the driver kernel fails the job") {
+    // `assert` and `???` throw Errors, not Exceptions; on the Spark kernel
+    // they failed a task and so the job, and the driver kernel must match.
+    JobTypeRegistry.register("assert_map_spec",
+      (_, v) => { Predef.assert(v != "bad", "bad record"); Iterator.single((v, v)) },
+      JobTypeRegistry.distinctReduce)
+    JobTypeRegistry.register("todo_reduce_spec",
+      JobTypeRegistry.identityMap, (_, _) => ???)
+    val store = new JobStore(clock = () => 0L)
+    val Right(sync) = store.launch(spark, JobSpec("a", "assert_map_spec", "t"),
+      Seq(("d1", "ok"), ("d2", "bad")))
+    assert(store.status(sync) == Some(JobStore.Failed("assertion failed: bad record")))
+    assert(store.getResult(sync, "t") == Left("job failed: assertion failed: bad record"))
+    val Right(async) = store.launchAsync(spark,
+      JobSpec("b", "todo_reduce_spec", "t"), Seq(("k", "v")))
+    awaitStatus(store, async, JobStore.Failed("an implementation is missing"))
+  }
+
+  test("bounded admission (driver kernel): FIFO Queued → Running order") {
+    JobTypeRegistry.register("blocking_gate_local",
+      (k, v) => { JobStoreSpecBlocker.await(v); Iterator.single((k, v)) },
+      (k, vs) => vs.map(v => s"$k=$v"))
+    val store = new JobStore(clock = () => 0L, maxConcurrent = 1)
+    def slow(tag: String) = store.launchAsync(spark,
+      JobSpec(tag, "blocking_gate_local", "t"), Seq(("k", tag))).toOption.get
+    val a = slow("lfifoA"); awaitStatus(store, a, JobStore.Running)
+    val b = slow("lfifoB")
+    val c = slow("lfifoC")
+    assert(store.status(b) == Some(JobStore.Queued))
+    assert(store.status(c) == Some(JobStore.Queued))
+    JobStoreSpecBlocker.release("lfifoC")
+    Thread.sleep(300)
+    assert(store.status(c) == Some(JobStore.Queued),
+      "C started ahead of B: admission is not FIFO")
+    JobStoreSpecBlocker.release("lfifoA")
+    awaitStatus(store, a, JobStore.Finished)
+    awaitStatus(store, b, JobStore.Running)
+    assert(store.status(c) == Some(JobStore.Queued))
+    JobStoreSpecBlocker.release("lfifoB")
+    awaitStatus(store, b, JobStore.Finished)
+    awaitStatus(store, c, JobStore.Finished)
+    assert(store.getResult(a, "t") == Right(Seq("k=lfifoA")))
+    assert(store.getResult(c, "t") == Right(Seq("k=lfifoC")))
+  }
+
+  test("driver-kernel result beyond spillBytes spills in one Spark job, streams back in key order") {
+    var now = 0L
+    val root = java.nio.file.Files.createTempDirectory("graft_local_spill").toString
+    val store = new JobStore(clock = () => now, ttlMillis = 1000L,
+      spillBytes = 2L, spillRoot = root)
+    var id = -1L
+    val jobs = sparkJobsDuring {
+      id = store.launch(spark, JobSpec("wc", "wordcount", "tok"),
+        Seq(("d1", "c a b a"), ("d2", "b z"))).toOption.get
+    }
+    assert(jobs == 1, s"the spill took $jobs Spark jobs")
+    val Right(sp: JobStore.SpilledResult) = store.fetchResult(id, "tok")
+    assert(sp.rows == 4L && sp.bytes == 4L, sp)
+    assert(JobStore.readSpilled(spark, sp).toSeq == Seq("2", "2", "1", "1"))
+    now = 1000L
+    assert(store.fetchResult(id, "tok") == Left(s"no such job: $id"))
+    assert(!new java.io.File(sp.dir).exists())
+  }
 }
 
 /** Shared latch registry for the admission specs — tasks run in-JVM

@@ -27,8 +27,11 @@ class SourcesSpec extends SparkSuite {
     assert(launch.name == "wc-test" && launch.jobType == "wordcount")
     assert(launch.mapperNum == 2 && launch.reducerNum == 2)
     val fns = JobTypeRegistry.lookup(launch.jobType).get
-    val result = MRJob.run(spark, launch.kvs, fns.mapFn, fns.reduceFn,
+    import spark.implicits._
+    val result = MRJob.run(spark, launch.kvs.toDS(), fns.mapFn, fns.reduceFn,
       launch.mapperNum, launch.reducerNum).collect().toSeq
+    assert(MRJob.runLocal(launch.kvs, fns.mapFn, fns.reduceFn,
+      launch.mapperNum, launch.reducerNum) == result)
     assert(result == Seq("3", "2", "1")) // a=3, b=2, c=1 in key order
     val out = Files.createTempFile("result", ".json").toString
     Sources.writeResultJson(result, out)
@@ -53,6 +56,86 @@ class SourcesSpec extends SparkSuite {
   test("malformed JSON rejected") {
     val path = writeTemp("""{"name": oops""")
     assert(Sources.readLaunchJson(spark, path).isLeft)
+  }
+
+  /** The launch parse as it ran through the Spark JSON reader, with the
+    * same checks: the reference the driver-side parse must reproduce.
+    */
+  private def readerParse(body: String): Either[String, Sources.Launch] = {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    try {
+      val rows = spark.read.schema(Sources.launchSchema)
+        .option("mode", "FAILFAST").json(Seq(body).toDS()).collect()
+      if (rows.length != 1) Left(s"expected one launch document, got ${rows.length}")
+      else {
+        val r = rows(0)
+        val bad = Sources.launchSchema.fieldNames.filter(f => r.isNullAt(r.fieldIndex(f)))
+        if (bad.nonEmpty) Left(s"missing/invalid fields: ${bad.mkString(", ")}")
+        else {
+          val kvRows = r.getSeq[Row](r.fieldIndex("kvs"))
+            .map(kv => (kv.getString(0), kv.getString(1)))
+          if (kvRows.isEmpty) Left("kvs must be non-empty")
+          else Right(Sources.Launch(r.getString(0), r.getString(1), r.getInt(2),
+            r.getInt(3), r.getString(4), kvRows))
+        }
+      }
+    } catch {
+      case e: Exception => Left(s"malformed launch JSON: ${e.getMessage}")
+    }
+  }
+
+  test("driver-side launch parse matches the Spark JSON reader, body by body") {
+    def doc(name: String = "\"wc\"", mapperNum: String = "2",
+        kvs: String = """[{"key": "k1", "value": "a b"}]""", extra: String = "") =
+      s"""{"name": $name, "type": "wordcount", "mapper_num": $mapperNum,""" +
+        s""" "reducer_num": 1, "token": "t", "kvs": $kvs$extra}"""
+    val bs = "\\"     // one backslash: JSON escapes, kept out of Scala's
+    val u = bs + "u"  // own unicode-escape processing
+    val bodies = Seq(
+      "well-formed" -> doc(),
+      "missing field" -> """{"name": "x", "mapper_num": 1, "reducer_num": 1,
+        | "token": "t", "kvs": [{"key": "a", "value": "b"}]}""".stripMargin,
+      "mapper_num string" -> doc(mapperNum = "\"2\""),
+      "mapper_num fraction" -> doc(mapperNum = "2.5"),
+      "mapper_num past Int" -> doc(mapperNum = "3000000000"),
+      "name a number" -> doc(name = "123"),
+      "null kvs element" -> doc(kvs = """[{"key": "a", "value": "b"}, null]"""),
+      "null key" -> doc(kvs = """[{"key": null, "value": "b"}]"""),
+      "empty kvs" -> doc(kvs = "[]"),
+      "extra fields" -> doc(extra = """, "priority": 3, "tags": {"a": [1]}"""),
+      "duplicate fields" -> doc(extra = """, "name": "second", "kvs": [{"key": "z", "value": "y"}]"""),
+      "array of one" -> s"[${doc()}]",
+      "array of two" -> s"[${doc()}, ${doc()}]",
+      "empty body" -> "",
+      "not json" -> "not json",
+      "text after the object" -> s"${doc()} trailing",
+      "unicode escapes" -> doc(name = s""""w${u}00e9${bs}n${u}20ac"""",
+        kvs = s"""[{"key": "${u}006b${u}d83d${u}de00", "value": "caf${u}00e9"}]"""),
+      "non-ASCII text" -> doc(name = "\"wörd～\"",
+        kvs = """[{"key": "😀", "value": "straße ü 日本"}]"""))
+    bodies.foreach { case (label, body) =>
+      val want = readerParse(body)
+      val got = Sources.parseLaunchJson(spark, body)
+      (want, got) match {
+        case (Right(w), Right(g)) => assert(g == w, s"$label: fields differ")
+        case (Left(w), Left(g)) =>
+          // The reader's own parse failure arrives wrapped in a stage
+          // failure; the kind of rejection must agree, the check
+          // messages exactly.
+          val malformed = "malformed launch JSON"
+          if (w.startsWith(malformed)) assert(g.startsWith(malformed), s"$label: $g")
+          else assert(g == w, label)
+        case _ => fail(s"$label: reader gave $want, driver parse gave $got")
+      }
+    }
+    // spot checks on what the shared parse accepts
+    val Right(esc) = Sources.parseLaunchJson(spark, bodies.toMap.apply("unicode escapes"))
+    assert(esc.name == "wé\n€" && esc.kvs == Seq(("k😀", "café")))
+    val Right(nonAscii) = Sources.parseLaunchJson(spark, bodies.toMap.apply("non-ASCII text"))
+    assert(nonAscii.name == "wörd～" && nonAscii.kvs == Seq(("😀", "straße ü 日本")))
+    assert(Sources.parseLaunchJson(spark, bodies.toMap.apply("array of two")) ==
+      Left("expected one launch document, got 2"))
   }
 
   test("escaped characters survive the result sink") {
