@@ -2692,8 +2692,8 @@ object SimOps {
     //    whole per-row kernel chained narrowly into that single task
     //    while the rest of the machine idled (thread-sampled: one hot
     //    task per micro-batch in the live gate). The partition count
-    //    follows spark.sql.shuffle.partitions (cpus for batch, the
-    //    statePartitions conf under the streaming runners) — scale-
+    //    follows spark.sql.shuffle.partitions (cpus for batch,
+    //    EventStream.StatePartitions under the streaming runner) — scale-
     //    adaptive, not a local constant; ~64 slim bytes/row cross.
     //  - ONE native kernel (PqProbeEnc) computes probes + residual +
     //    codes + ADC tables per arrival, replacing the interpreted

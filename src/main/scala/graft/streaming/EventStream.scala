@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface over the `events` schema — the streaming
   * analog of graft.queries.EventOps (SURVEY.md §7.5, an extension beyond
@@ -162,27 +163,6 @@ object EventStream {
         .map { case (t, n) => UserTypeStat(key, t, n, last) }
         .toList.iterator
     }
-  }
-
-  /** OSS Spark gates transformWithState on the RocksDB state-store
-    * provider (the HDFS-backed default doesn't implement the
-    * multi-column-family layout the typed state variables need) — which
-    * is also the provider a 100 TB deployment runs anyway (state larger
-    * than executor heap, changelog checkpointing). Scoped conf swap
-    * under the same lock as the state-partition sizing.
-    */
-  private def withRocksDbProvider[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    statePartitionsLock.lock()
-    try {
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try body finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    } finally statePartitionsLock.unlock()
   }
 
   /** Streaming event-type transitions — the sequence analytic NO native
@@ -651,12 +631,11 @@ object EventStream {
 
   // ---- driver-checkable batch surface -------------------------------
   // Each c5_stream_* query runs the REAL streaming operator (readStream
-  // file source → watermarked transform → memory sink) with an
-  // AvailableNow trigger over the static events table, then returns the
-  // sink contents as a batch DataFrame — so the driver's DuckDB oracle
-  // hash-checks the streaming execution path itself, not a batch
-  // re-derivation. Sink names are uniqued per invocation (Bench reruns
-  // queries in one session).
+  // file source → watermarked transform → sink) with an AvailableNow
+  // trigger over the static events table through [[runStream]], then
+  // returns the sink contents as a batch DataFrame — so the driver's
+  // DuckDB oracle hash-checks the streaming execution path itself, not a
+  // batch re-derivation.
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -686,325 +665,317 @@ object EventStream {
     graft.Tables.normalizeTs(raw)
   }
 
-  private def runAvailableNow(df: DataFrame, mode: OutputMode)
-      (implicit spark: SparkSession): DataFrame = withStatePartitions(spark) {
-    val name = s"graft_stream_q${runSeq.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    // Bounded wait: AvailableNow over a static table terminates in
-    // seconds; the cap only exists so an external stall can't wedge the
-    // caller (Bench watchdogs cancel job groups, which streaming's
-    // microbatch thread ignores). A stalled stream FAILS — returning the
-    // partially-filled sink would be plausible-but-wrong rows.
-    if (!q.awaitTermination(300000L)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"streaming query $name did not terminate within 300s; " +
-          "refusing to return a partially-filled sink")
-    }
-    // Single-batch invariant: the oracles are batch SQL over the whole
-    // table, equivalent to the streaming result only because every row
-    // arrives in ONE data micro-batch (the sf events table is a single
-    // parquet file). A multi-file table or maxFilesPerTrigger would let
-    // the 2h watermark drop late rows / evict dedup state mid-stream and
-    // diverge silently — fail loudly instead.
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != 1)
-      throw new IllegalStateException(
-        s"streaming query $name ran $dataBatches data micro-batches; " +
-          "the batch oracle is only valid for exactly one")
-    spark.table(name)
-  }
-
-  /** Run `body` (which STARTS a stateful streaming query) with the
-    * shuffle-partition count a stateful stream should actually use:
-    * every stateful operator creates one state-store instance PER
-    * SHUFFLE PARTITION per micro-batch, each with its own commit files —
-    * so the right number tracks stateful-KEY cardinality and state
-    * volume, not CPU count. The CPU-count default (sized for the batch
-    * surface's corpus shuffles) makes every micro-batch pay 32 state
-    * commits per operator for kilobytes of state. Tunable via
-    * `spark.graft.stream.statePartitions` (a cluster run with hot keyed
-    * state raises it); the partition count is baked into a checkpoint at
-    * first start, so restart lifecycles keep whatever they began with.
-    * The conf is restored after `body` returns — the runners await
-    * termination inside it, so no batch query of this session plans
-    * under the reduced setting.
+  /** Shuffle-partition count of every streaming run. Each stateful
+    * operator creates one state-store instance PER SHUFFLE PARTITION per
+    * micro-batch, each with its own commit files — so the right number
+    * tracks stateful-KEY cardinality and state volume, not CPU count. The
+    * CPU-count default (sized for the batch surface's corpus shuffles)
+    * makes every micro-batch pay 32 state commits per operator for
+    * kilobytes of state; round 19 measured 8 as the best value (4 and 32
+    * were both slower). The count is baked into a checkpoint at first
+    * start, so restart lifecycles keep whatever they began with.
     */
-  /** Serializes the conf swap: nested/concurrent invocations would
-    * otherwise race the save/restore and could reinstate a stale value
-    * (and two streaming checks never benefit from overlapping anyway —
-    * they contend for the same state-store and sink machinery). Batch
-    * queries PLANNED on the same session while a check holds the lock
-    * still see the reduced setting — a documented limitation of a
-    * session-scoped conf; the graft runners themselves always await
+  private val StatePartitions = 8
+
+  /** Serializes the conf swap of [[withStreamConfs]]: nested/concurrent
+    * invocations would otherwise race the save/restore and could
+    * reinstate a stale value (and two streaming checks never benefit
+    * from overlapping anyway — they contend for the same state-store and
+    * sink machinery). Batch queries PLANNED on the same session while a
+    * check holds the lock still see the streaming settings — a documented
+    * limitation of a session-scoped conf; [[runStream]] always awaits
     * termination inside the lock, so none of the library's own batch
-    * work plans under it.
+    * work plans under them.
     */
   private val statePartitionsLock = new java.util.concurrent.locks.ReentrantLock()
 
-  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+  /** Run `body` — which STARTS a streaming query and awaits its
+    * termination — under the session confs a streaming check needs. Each
+    * conf is saved before and restored after `body`:
+    *  - `spark.sql.shuffle.partitions` = [[StatePartitions]];
+    *  - with `rocksDb`, the RocksDB state-store provider. OSS Spark gates
+    *    transformWithState on it (the HDFS-backed default doesn't
+    *    implement the multi-column-family layout the typed state
+    *    variables need); it is also the provider a 100 TB deployment
+    *    runs (state larger than executor heap, changelog checkpointing).
+    *    Every other run keeps the session's provider — Spark's own
+    *    `spark.sql.streaming.stateStore.providerClass`, a session conf or
+    *    a `-D` system property;
+    *  - with `skipNoDataBatch`, Spark's no-data micro-batches disabled:
+    *    the final empty batch AvailableNow appends after the last data
+    *    batch to advance the watermark and run state EVICTION/TIMERS.
+    *    Callers may opt in ONLY when that batch is output-neutral:
+    *     - Append operators that emit on DATA (dropDuplicates[Within
+    *       Watermark], stream-stream INNER joins whose matches emit as
+    *       rows arrive, flatMapGroupsWithState with
+    *       GroupStateTimeout.NoTimeout): the no-data batch only evicts
+    *       state there is no further batch to read, so skipping it
+    *       removes one full commit cycle (measured at sf0.1: 0.47 s of
+    *       the dedup query, 1.07 s of the inner join — state-store
+    *       commits across [[StatePartitions]] × per-op stores, plus a
+    *       planning pass) with a bit-identical sink.
+    *     - NEVER for: outer joins (null-padded rows are emitted BY
+    *       eviction), EventTimeTimeout state functions (timers fire in
+    *       the no-data batch — gapfill's zero-days, anomaly
+    *       finalization), Append windowed aggregations (finalized windows
+    *       emit there), or transformWithState timers.
+    *    Eviction itself is semantics-free for the opted-in operators: a
+    *    retained dedup key only ever suppresses re-emission the batch
+    *    oracle suppresses anyway, and a retained join row can only match
+    *    within the join's own time-bound predicate (the oracle's WHERE
+    *    clause), so keeping state longer never adds or removes a pair.
+    *    The session kill-switch `spark.graft.stream.skipNoDataBatches`
+    *    (default true) forces the finalizing batch back on for every run
+    *    without touching the per-query opt-ins; EventStreamSpec pins
+    *    skip == finalize against it.
+    */
+  private def withStreamConfs[T](spark: SparkSession, rocksDb: Boolean,
+      skipNoDataBatch: Boolean)(body: => T): T = {
+    val skip = skipNoDataBatch &&
+      spark.conf.get("spark.graft.stream.skipNoDataBatches", "true").toBoolean
+    val confs = Seq("spark.sql.shuffle.partitions" -> StatePartitions.toString) ++
+      Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") ++
+      Option.when(skip)("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     statePartitionsLock.lock()
     try {
-      val prev = spark.conf.get(key)
-      spark.conf.set(key,
-        spark.conf.get("spark.graft.stream.statePartitions", "8"))
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
-        // SPARK_GRAFT_STATE_PROVIDER=rocksdb (env; or the system property
-        // spark.graft.stream.provider, which the provider-independence
-        // spec flips in-process) moves EVERY streaming runner onto the
-        // RocksDB state store — the provider a 100 TB deployment runs
-        // (state larger than executor heap, changelog checkpointing).
-        // The tws family always uses it (OSS Spark gates
-        // transformWithState on it); this switch exists so a bench pass
-        // can measure the other five state families on the deployment
-        // provider and pin that results are provider-independent
-        // (EventStreamSpec). Default stays the HDFS-backed store: faster
-        // on the bench corpus (BASELINE.md records the measured delta).
-        if (sys.props.get("spark.graft.stream.provider")
-            .orElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER"))
-            .contains("rocksdb")) {
-          val pk = "spark.sql.streaming.stateStore.providerClass"
-          val prevP = spark.conf.getOption(pk)
-          spark.conf.set(pk, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try body finally prevP match {
-            case Some(v) => spark.conf.set(pk, v)
-            case None => spark.conf.unset(pk)
-          }
-        } else body
-      } finally spark.conf.set(key, prev)
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        body
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     } finally statePartitionsLock.unlock()
   }
 
-  /** Like [[runAvailableNow]] but for deliberately MULTI-batch execution:
-    * asserts at least `minBatches` data micro-batches actually ran (a
-    * single-batch run would not exercise watermark advancement between
-    * batches, which is the property the caller is verifying).
-    */
-  private def runIncremental(df: DataFrame, mode: OutputMode, minBatches: Int)
-      (implicit spark: SparkSession): DataFrame = withStatePartitions(spark) {
-    val name = s"graft_stream_q${runSeq.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    if (!q.awaitTermination(300000L)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"streaming query $name did not terminate within 300s; " +
-          "refusing to return a partially-filled sink")
-    }
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches < minBatches)
-      throw new IllegalStateException(
-        s"streaming query $name ran $dataBatches data micro-batches; " +
-          s"this query exists to verify incremental arrival (>= $minBatches)")
-    spark.table(name)
-  }
+  /** Where [[runStream]] writes. */
+  private[streaming] sealed trait Sink
 
-  /** Parquet-sink twins of [[runAvailableNow]]/[[runIncremental]] for the
-    * Append-mode queries whose sink is O(events)-sized (per-event
-    * transitions/anomaly scores, dedup survivors, join matches, emitted
-    * sessions). A memory sink materializes its WHOLE output on the
-    * driver heap — the driver-side-materialization scale-killer the
-    * batch surface bans, and measured: c5_stream_transitions OOMs the
-    * 8 g harness heap at 10 M events purely in the sink while its
-    * operator state stays O(users). These runners write the sink to a
-    * temp parquet directory (executor-parallel, spillable) and return a
-    * distributed scan of it, so the downstream fold/orderBy runs as a
-    * normal distributed plan. Aggregated-output queries (windowed
-    * counts, top-k, per-user stats) keep the memory sink: their output
-    * is O(windows·types)/O(users) — driver-sized by contract — and
+  /** A named in-memory table, for the aggregated-output queries
+    * (windowed counts, top-k, per-user stats): their output is
+    * O(windows·types)/O(users) — driver-sized by contract — and
     * Update/Complete modes have no file sink anyway.
     */
-  // Sink dirs of COMPLETED runToParquet calls, swept at the next call:
-  // a long bench/verify session runs these queries sequentially and each
-  // result is fully consumed before the next query starts, so the
-  // previous generation's temp sinks are dead disk by then (deleteOnExit
-  // alone accumulated O(session) disk). Contract (scaladoc'd below): the
-  // returned scan is valid until the next streaming-runner invocation.
+  private[streaming] final case class MemorySink(mode: OutputMode) extends Sink
+
+  /** Append to a fresh temp parquet dir, for the queries whose output is
+    * O(events)-sized (per-event transitions/anomaly scores, dedup
+    * survivors, join matches, emitted sessions). A memory sink
+    * materializes its WHOLE output on the driver heap — the
+    * driver-side-materialization scale-killer the batch surface bans,
+    * and measured: c5_stream_transitions OOMs the 8 g harness heap at
+    * 10 M events purely in the sink while its operator state stays
+    * O(users). The parquet sink is written executor-parallel and
+    * spillable, and its distributed scan feeds the downstream
+    * fold/orderBy as a normal distributed plan. The checkpoint is
+    * deleted once the query has terminated; the sink dir follows the
+    * [[spentSinkDirs]] rule.
+    */
+  private[streaming] case object TempParquet extends Sink
+
+  /** Append to the exactly-once parquet file sink `out` with the DURABLE
+    * checkpoint `ckpt`, both owned by the caller — a restart lifecycle
+    * (the memory sink does NOT support checkpoint recovery; the file
+    * sink's `_spark_metadata` commit log is the production recovery
+    * surface).
+    */
+  private[streaming] final case class DurableParquet(ckpt: String, out: String)
+    extends Sink
+
+  /** The number of data micro-batches [[runStream]] requires. */
+  private[streaming] sealed trait Batches
+
+  /** Exactly `n`. With n = 1 this is the single-batch invariant: the
+    * oracles are batch SQL over the whole table, equivalent to the
+    * streaming result only because every row arrives in ONE data
+    * micro-batch (the sf events table is a single parquet file). A
+    * multi-file table or maxFilesPerTrigger would let the 2h watermark
+    * drop late rows / evict dedup state mid-stream and diverge silently
+    * — fail loudly instead.
+    */
+  private[streaming] final case class Exactly(n: Int) extends Batches
+
+  /** At least `n`: deliberately MULTI-batch execution. A single-batch run
+    * would not exercise watermark advancement or state carry between
+    * batches, which is the property the caller is verifying.
+    */
+  private[streaming] final case class AtLeast(n: Int) extends Batches
+
+  /** Run `df` to `sink` with an AvailableNow trigger under
+    * [[withStreamConfs]], require `batches` data micro-batches, and read
+    * the sink back as a batch DataFrame. The one streaming runner of the
+    * driver-checkable surface; `skipNoDataBatch` and `rocksDb` are the
+    * [[withStreamConfs]] opt-ins.
+    */
+  private[streaming] def runStream(df: DataFrame, sink: Sink, batches: Batches,
+      skipNoDataBatch: Boolean = false, rocksDb: Boolean = false)
+      (implicit spark: SparkSession): DataFrame = {
+    def run(label: String, writer: DataStreamWriter[Row]): Unit =
+      withStreamConfs(spark, rocksDb, skipNoDataBatch) {
+        val q = writer.trigger(Trigger.AvailableNow()).start()
+        // Bounded wait: AvailableNow over a static table terminates in
+        // seconds; the cap only exists so an external stall can't wedge
+        // the caller (Bench watchdogs cancel job groups, which
+        // streaming's microbatch thread ignores). A stalled stream FAILS —
+        // returning the partially-filled sink would be
+        // plausible-but-wrong rows.
+        if (!q.awaitTermination(300000L)) {
+          q.stop()
+          throw new IllegalStateException(
+            s"streaming query $label did not terminate within 300s; " +
+              "refusing to return a partially-filled sink")
+        }
+        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        batches match {
+          case Exactly(n) if dataBatches != n =>
+            throw new IllegalStateException(
+              s"streaming query $label ran $dataBatches data micro-batches; " +
+                s"the batch oracle is only valid for exactly $n")
+          case AtLeast(n) if dataBatches < n =>
+            throw new IllegalStateException(
+              s"streaming query $label ran $dataBatches data micro-batches; " +
+                s"this query exists to verify incremental arrival (>= $n)")
+          case _ => ()
+        }
+      }
+    sink match {
+      case MemorySink(mode) =>
+        // uniqued per run: Bench reruns queries in one session
+        val name = s"graft_stream_q${runSeq.incrementAndGet()}"
+        run(name, df.writeStream.format("memory").queryName(name).outputMode(mode))
+        spark.table(name)
+      case DurableParquet(ckpt, out) =>
+        run(s"to $out", df.writeStream.format("parquet").option("path", out)
+          .option("checkpointLocation", ckpt).outputMode(OutputMode.Append()))
+        // Read back with the KNOWN sink schema: an Append query that
+        // legitimately emits zero rows (e.g. a restart's first lifecycle)
+        // leaves a sink dir with no data files, and schema INFERENCE
+        // would fail it with an unrelated "unable to infer schema"
+        // instead of an empty result.
+        spark.read.schema(df.schema).parquet(out)
+      case TempParquet =>
+        withScratchSink(runStream(df, _, batches, skipNoDataBatch, rocksDb))
+    }
+  }
+
+  // Sink dirs of finished parquet runs, swept when the next one is
+  // created: a long bench/verify session runs these queries sequentially
+  // and each result is fully consumed before the next query starts, so
+  // the previous generation's sinks are dead disk by then (deleteOnExit
+  // alone accumulated O(session) disk). Contract: a returned parquet scan
+  // is valid until the next parquet sink is created.
   private val spentSinkDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
-  /** Run `body` with Spark's no-data micro-batches disabled — the final
-    * empty batch AvailableNow appends after the last data batch to
-    * advance the watermark and run state EVICTION/TIMERS. Callers may
-    * opt in ONLY when that batch is output-neutral for their query:
-    *  - Append operators that emit on DATA (dropDuplicates[Within
-    *    Watermark], stream-stream INNER joins whose matches emit as rows
-    *    arrive, flatMapGroupsWithState with GroupStateTimeout.NoTimeout):
-    *    the no-data batch only evicts state there is no further batch to
-    *    read, so skipping it removes one full commit cycle (measured at
-    *    sf0.1: 0.47 s of the dedup query, 1.07 s of the inner join —
-    *    state-store commits across statePartitions × per-op stores, plus
-    *    a planning pass) with a bit-identical sink.
-    *  - NEVER for: outer joins (null-padded rows are emitted BY
-    *    eviction), EventTimeTimeout state functions (timers fire in the
-    *    no-data batch — gapfill's zero-days, anomaly finalization),
-    *    Append windowed aggregations (finalized windows emit there), or
-    *    transformWithState timers.
-    * Eviction itself is semantics-free for the opted-in operators: a
-    * retained dedup key only ever suppresses re-emission the batch
-    * oracle suppresses anyway, and a retained join row can only match
-    * within the join's own time-bound predicate (the oracle's WHERE
-    * clause), so keeping state longer never adds or removes a pair.
-    * Pinned A/B (skip vs finalize, identical results) in
-    * EventStreamSpec; conf saved/restored around the run.
+  /** Run `body` against a fresh (checkpoint, sink) dir pair, first
+    * sweeping [[spentSinkDirs]]. Once `body` returns nothing resumes the
+    * checkpoint, so it is deleted NOW, not at JVM exit; the sink dir joins
+    * [[spentSinkDirs]].
     */
-  private def withNoDataBatchesSkipped[T](spark: SparkSession, skip: Boolean)
-      (body: => T): T = {
-    // session kill-switch (default on): lets a deployment — and the A/B
-    // equivalence spec — force the finalizing batch back on for every
-    // runner without touching per-query opt-ins.
-    val enabled =
-      spark.conf.get("spark.graft.stream.skipNoDataBatches", "true").toBoolean
-    if (!skip || !enabled) body
-    else {
-      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try body finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  private def runToParquet(df: DataFrame, minBatches: Int, exact: Boolean,
-      skipNoDataBatch: Boolean = false)
-      (implicit spark: SparkSession): DataFrame = withStatePartitions(spark) {
-    withNoDataBatchesSkipped(spark, skipNoDataBatch) {
+  private def withScratchSink[T](body: DurableParquet => T): T = {
     import java.nio.file.{Files => JFiles}
-    // Sweep the PRIOR generation's sinks — their results have been
-    // materialized (the harnesses are sequential); this bounds temp-disk
-    // at one live sink instead of one per query ever run.
+    import org.apache.commons.io.FileUtils
     var dead = spentSinkDirs.poll()
     while (dead != null) {
-      try org.apache.commons.io.FileUtils.deleteDirectory(dead.toFile)
-      catch { case _: Exception => () }
+      FileUtils.deleteQuietly(dead.toFile)
       dead = spentSinkDirs.poll()
     }
     val out = JFiles.createTempDirectory("graft_stream_sink")
-    val ckpt = JFiles.createTempDirectory("graft_stream_sink_ckpt")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    val q = df.writeStream.format("parquet").option("path", out.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try {
-      if (!q.awaitTermination(300000L)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"streaming query to $out did not terminate within 300s; " +
-            "refusing to return a partially-filled sink")
-      }
-    } finally {
-      // The checkpoint is dead the moment the query terminates (these
-      // runners never resume it) — delete it NOW, not at JVM exit.
-      try org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
-      catch { case _: Exception => () }
-    }
-    // Dev diagnostics (GRAFT_STREAM_DBG=1): per-micro-batch duration
-    // breakdown — addBatch vs planning vs commit — the round-18 lever
-    // that exposed the single-task frame stage.
-    if (sys.env.contains("GRAFT_STREAM_DBG"))
-      q.recentProgress.foreach(p => System.err.println(
-        s"[stream-dbg] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=${p.durationMs}"))
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (exact && dataBatches != minBatches)
-      throw new IllegalStateException(
-        s"streaming query to $out ran $dataBatches data micro-batches; " +
-          s"the batch oracle is only valid for exactly $minBatches")
-    if (!exact && dataBatches < minBatches)
-      throw new IllegalStateException(
-        s"streaming query to $out ran $dataBatches data micro-batches; " +
-          s"this query exists to verify incremental arrival (>= $minBatches)")
-    spentSinkDirs.add(out)
-    // Read back with the KNOWN sink schema (the restart runners' form):
-    // an Append query that legitimately emits zero rows leaves a sink
-    // dir with no data files, and schema INFERENCE would fail it with an
-    // unrelated "unable to infer schema" instead of an empty result.
-    spark.read.schema(df.schema).parquet(out.toString)
+    val ckpt = JFiles.createTempDirectory("graft_stream_ckpt")
+    FileUtils.forceDeleteOnExit(out.toFile)
+    try body(DurableParquet(ckpt.toString, out.toString))
+    finally {
+      FileUtils.deleteQuietly(ckpt.toFile)
+      spentSinkDirs.add(out)
     }
   }
 
-  /** Single-data-batch invariant of [[runAvailableNow]], parquet sink. */
-  private def runAvailableNowToParquet(df: DataFrame,
-      skipNoDataBatch: Boolean = false)
-      (implicit spark: SparkSession): DataFrame =
-    runToParquet(df, minBatches = 1, exact = true, skipNoDataBatch)
-
-  /** Multi-batch contract of [[runIncremental]], parquet sink. */
-  private def runIncrementalToParquet(df: DataFrame, minBatches: Int,
-      skipNoDataBatch: Boolean = false)
-      (implicit spark: SparkSession): DataFrame =
-    runToParquet(df, minBatches, exact = false, skipNoDataBatch)
-
-  /** c5_stream_tumbling_incr: the tumbling aggregation under REAL
-    * incremental arrival — the events table is split chronologically
-    * into two files, streamed with maxFilesPerTrigger=1 (two data
-    * micro-batches), output-mode Append so only watermark-FINALIZED
-    * windows reach the sink. This checks what the watermark actually
-    * does across batches — state eviction and append finalization —
-    * rather than asserting single-batch arrival made them unobservable
-    * (the other c5_stream_* oracles' posture).
-    *
-    * Determinism: the split is chronological (file 1 = events at or
-    * before the midpoint of the time span, file 2 = the rest) and file
-    * order is forced via modification times, so arrival is in-order and
-    * no row is ever late — the final watermark is max(ts) − 2h over the
-    * WHOLE table, and the sink holds exactly the windows whose end ≤
-    * that watermark (Spark runs a no-data batch after the last file to
-    * advance the watermark and flush — `noDataMicroBatches` default).
-    * Oracle: the batch tumbling aggregation filtered to those windows.
+  /** floor((min + max) / 2) of `by` over `rows`: the default cut of a
+    * two-file split, and the centre the cut pickers aim for.
     */
-  /** Chronological two-file split of the events table, written in-query
-    * (the b8 pattern); read back with `maxFilesPerTrigger=1` it yields
-    * two data micro-batches in event-time order (file order forced via
-    * modification times), so no row is ever late. Shared by the
-    * incremental streaming checks. Layouts are MEMOIZED per
-    * (sfDir, cut): the write is one-time scaffolding (the b8
-    * layout-idempotence posture), so bench reruns of the *_incr queries
-    * re-measure the streaming operator, not a repeated coalesce(1)
-    * write. Process-local; temp dirs are reclaimed on JVM exit.
-    */
-  private val splitCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Option[Long]),
-      (String, org.apache.spark.sql.types.StructType)]()
-
-  private def twoBatchSplitDir(spark: SparkSession, sfDir: String,
-      cutUsOpt: Option[Long] = None): (String, org.apache.spark.sql.types.StructType) = {
-    val cached = splitCache.get((sfDir, cutUsOpt))
-    // A cache hit must re-verify BOTH part files, not just the dir: a
-    // temp-dir pruner (tmpwatch) or partial cleanup between queries would
-    // otherwise replay the *_incr/restart checks over half the corpus and
-    // fail downstream with a confusing oracle mismatch. Rebuild instead.
-    if (cached != null &&
-        new java.io.File(cached._1, "00_early.parquet").isFile &&
-        new java.io.File(cached._1, "01_late.parquet").isFile) return cached
-    val fresh = writeTwoBatchSplitDir(spark, sfDir, cutUsOpt)
-    splitCache.put((sfDir, cutUsOpt), fresh)
-    fresh
+  private def midpoint(rows: DataFrame, by: Column): Long = {
+    val b = rows.agg(min(by).as("mn"), max(by).as("mx")).head()
+    Math.floorDiv(b.getLong(0) + b.getLong(1), 2L)
   }
 
-  private def writeTwoBatchSplitDir(spark: SparkSession, sfDir: String,
-      cutUsOpt: Option[Long]): (String, org.apache.spark.sql.types.StructType) = {
-    val ev = graft.Tables.load(spark, sfDir, "events")
-    val bounds = ev.agg(
-      min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx")).head()
-    val cutUs = cutUsOpt.getOrElse(
-      Math.floorDiv(bounds.getLong(0) + bounds.getLong(1), 2L))
-    (writeOrderedSplitDir(
-      ev.filter(unix_micros(col("ts")) <= cutUs),
-      ev.filter(unix_micros(col("ts")) > cutUs)), ev.schema)
+  /** A stream-source dir of two ordered part files, `00_early.parquet`
+    * and `01_late.parquet` (see [[writeOrderedSplitDir]]).
+    */
+  private[streaming] final case class Split(dir: String,
+      schema: org.apache.spark.sql.types.StructType)
+
+  /** Splits written so far, keyed by what they split. A split is
+    * one-time scaffolding (the b8 layout-idempotence posture), so bench
+    * reruns of the *_incr/restart queries re-measure the streaming
+    * operator, not a repeated coalesce(1) write. Process-local; the dirs
+    * are reclaimed on JVM exit.
+    */
+  private val splits = new java.util.concurrent.ConcurrentHashMap[Any, Split]()
+
+  /** The memoized split of `rows` into `by ≤ cut` (file 1) and
+    * `by > cut` (file 2); `cut` defaults to the [[midpoint]] of `by`.
+    */
+  private def memoSplit(key: Any, rows: => DataFrame, by: Column,
+      cut: Option[Long] = None): Split = {
+    val hit = splits.get(key)
+    // A hit must re-verify BOTH part files, not just the dir: a temp-dir
+    // pruner (tmpwatch), partial cleanup, or a restart check whose parked
+    // late file did not come back would otherwise replay the checks over
+    // half the corpus and fail downstream with a confusing oracle
+    // mismatch. Rebuild instead.
+    if (hit != null && Seq("00_early", "01_late")
+        .forall(f => new java.io.File(hit.dir, s"$f.parquet").isFile)) hit
+    else {
+      val t = rows
+      val c = cut.getOrElse(midpoint(t, by))
+      val fresh = Split(writeOrderedSplitDir(t.filter(by <= c), t.filter(by > c)),
+        t.schema)
+      splits.put(key, fresh)
+      fresh
+    }
   }
+
+  /** Chronological two-file split of the events table at `cut` (default:
+    * the midpoint of the event-time span). Streamed by [[splitStream]] it
+    * yields two data micro-batches in event-time order, so no row is
+    * ever late. Shared by the incremental and restart checks.
+    */
+  private[streaming] def eventSplit(spark: SparkSession, sfDir: String,
+      cut: Option[Long] = None): Split =
+    memoSplit(("events", sfDir, cut), graft.Tables.load(spark, sfDir, "events"),
+      unix_micros(col("ts")), cut)
+
+  /** Id-ordered two-file split of the DOCUMENTS table (the dedup-gate
+    * corpus) at the id midpoint — a production ingest assigns monotone
+    * ids, so id order IS arrival order.
+    */
+  private def docSplit(spark: SparkSession, sfDir: String): Split =
+    memoSplit(("documents", sfDir), graft.Tables.load(spark, sfDir, "documents"),
+      col("doc_id"))
+
+  /** An ARRIVING embedding slice (`vec_id % mod = rem` — the
+    * deterministic "today's crawl" slice; 10/7 for the static-index
+    * gates, matching the batch c2_incremental_semantic; 5/2 for the live
+    * gate, whose slice must hold cross-cut near-dup pairs at every SF).
+    */
+  private def vecSlice(spark: SparkSession, sfDir: String,
+      mod: Int, rem: Int): DataFrame =
+    graft.Tables.load(spark, sfDir, "embeddings")
+      .filter(col("vec_id") % mod === rem)
+      .select(col("vec_id"), col("embedding"))
+
+  /** Id-ordered two-file split of a [[vecSlice]] at its id midpoint. */
+  private def vecSplit(spark: SparkSession, sfDir: String,
+      mod: Int = 10, rem: Int = 7): Split =
+    memoSplit(("embeddings", sfDir, mod, rem), vecSlice(spark, sfDir, mod, rem),
+      col("vec_id"))
 
   /** Write `early`/`late` as the two ordered part files of a fresh
     * stream-source dir; read back with `maxFilesPerTrigger=1` they
     * arrive as two data micro-batches in that order (file order forced
-    * via modification times). Shared by the event-time split above and
-    * the doc-id split of the streaming dedup gate.
+    * via modification times).
     */
   private def writeOrderedSplitDir(early: DataFrame, late: DataFrame): String = {
     import java.nio.file.{Files => JFiles, StandardCopyOption}
@@ -1036,105 +1007,37 @@ object EventStream {
     streamDir.toString
   }
 
-  /** Id-ordered two-file split of the DOCUMENTS table (the dedup-gate
-    * corpus): file 1 = doc_id ≤ floor((min+max)/2), file 2 = the rest —
-    * a production ingest assigns monotone ids, so id order IS arrival
-    * order. Memoized per sfDir like the event split.
+  /** Stream a [[Split]] one file per micro-batch (`maxFilesPerTrigger=1`):
+    * two data micro-batches, in file order.
     */
-  private val docSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, org.apache.spark.sql.types.StructType)]()
-
-  private def docSplitDir(spark: SparkSession, sfDir: String)
-      : (String, org.apache.spark.sql.types.StructType) = {
-    val cached = docSplitCache.get(sfDir)
-    val valid = cached != null &&
-      new java.io.File(cached._1, "00_early.parquet").isFile &&
-      new java.io.File(cached._1, "01_late.parquet").isFile
-    if (valid) cached else {
-      val d = graft.Tables.load(spark, sfDir, "documents")
-      val cut = docCutId(spark, sfDir)
-      val fresh = (writeOrderedSplitDir(
-        d.filter(col("doc_id") <= cut), d.filter(col("doc_id") > cut)), d.schema)
-      docSplitCache.put(sfDir, fresh)
-      fresh
-    }
-  }
-
-  /** The doc split's cut id (file 1 = ids ≤ cut, file 2 = ids > cut) —
-    * exposed so the restart check can assert which lifecycle a doc / a
-    * bucket min came from.
-    */
-  private def docCutId(spark: SparkSession, sfDir: String): Long = {
-    val b = graft.Tables.load(spark, sfDir, "documents")
-      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head()
-    Math.floorDiv(b.getLong(0) + b.getLong(1), 2L)
-  }
-
-  private def twoBatchDocStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (dir, schema) = docSplitDir(spark, sfDir)
-    spark.readStream.schema(schema)
+  private[streaming] def splitStream(split: Split)
+      (implicit spark: SparkSession): DataFrame =
+    spark.readStream.schema(split.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-  }
+      .parquet(split.dir)
 
-  /** Id-ordered two-file split of an ARRIVING embedding slice
-    * (`vec_id % mod = rem` — the deterministic "today's crawl" slice;
-    * 10/7 for the static-index gates, matching the batch
-    * c2_incremental_semantic; 5/2 for the live gate, whose slice must
-    * hold cross-cut near-dup pairs at every SF), memoized like the doc
-    * split.
+  /** c5_stream_tumbling_incr: the tumbling aggregation under REAL
+    * incremental arrival — the events table is split chronologically
+    * into two files, streamed with maxFilesPerTrigger=1 (two data
+    * micro-batches), output-mode Append so only watermark-FINALIZED
+    * windows reach the sink. This checks what the watermark actually
+    * does across batches — state eviction and append finalization —
+    * rather than asserting single-batch arrival made them unobservable
+    * (the other c5_stream_* oracles' posture).
+    *
+    * Determinism: the split is chronological (file 1 = events at or
+    * before the midpoint of the time span, file 2 = the rest) and file
+    * order is forced via modification times, so arrival is in-order and
+    * no row is ever late — the final watermark is max(ts) − 2h over the
+    * WHOLE table, and the sink holds exactly the windows whose end ≤
+    * that watermark (Spark runs a no-data batch after the last file to
+    * advance the watermark and flush — `noDataMicroBatches` default).
+    * Oracle: the batch tumbling aggregation filtered to those windows.
     */
-  private val vecSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int),
-      (String, org.apache.spark.sql.types.StructType)]()
-
-  /** The vec split's cut id (file 1 = ids ≤ cut, file 2 = ids > cut) —
-    * exposed so the live gate can assert which batch a live match's
-    * target arrived in.
-    */
-  private def vecCutId(spark: SparkSession, sfDir: String,
-      mod: Int, rem: Int): Long = {
-    val b = graft.Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id") % mod === rem)
-      .agg(min(col("vec_id")).as("mn"), max(col("vec_id")).as("mx")).head()
-    Math.floorDiv(b.getLong(0) + b.getLong(1), 2L)
-  }
-
-  private def twoBatchVecStream(spark: SparkSession, sfDir: String,
-      mod: Int = 10, rem: Int = 7): DataFrame = {
-    val cached = vecSplitCache.get((sfDir, mod, rem))
-    val valid = cached != null &&
-      new java.io.File(cached._1, "00_early.parquet").isFile &&
-      new java.io.File(cached._1, "01_late.parquet").isFile
-    val (dir, schema) = if (valid) cached else {
-      val slice = graft.Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") % mod === rem)
-        .select(col("vec_id"), col("embedding"))
-      val cut = vecCutId(spark, sfDir, mod, rem)
-      val fresh = (writeOrderedSplitDir(
-        slice.filter(col("vec_id") <= cut),
-        slice.filter(col("vec_id") > cut)), slice.schema)
-      vecSplitCache.put((sfDir, mod, rem), fresh)
-      fresh
-    }
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-  }
-
-  private def twoBatchEventStream(spark: SparkSession, sfDir: String,
-      cutUsOpt: Option[Long] = None): DataFrame = {
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, cutUsOpt)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-  }
-
   def c5StreamTumblingIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runIncremental(tumblingCounts(twoBatchEventStream(spark, sfDir)),
-      OutputMode.Append(), minBatches = 2)
+    runStream(tumblingCounts(splitStream(eventSplit(spark, sfDir))),
+      MemorySink(OutputMode.Append()), AtLeast(2))
       .orderBy("window_start", "event_type")
   }
 
@@ -1158,9 +1061,7 @@ object EventStream {
     * span midpoint on a degenerate corpus with no intra-gap pairs.
     */
   private[streaming] def sessionCutUs(ev: DataFrame, gapUs: Long = 1800000000L): Long = {
-    val b = ev.agg(
-      min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx")).head()
-    val mid = Math.floorDiv(b.getLong(0) + b.getLong(1), 2L)
+    val mid = midpoint(ev, unix_micros(col("ts")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val cut = ev.select(col("user_id"), col("ts"), col("event_id"))
@@ -1178,8 +1079,8 @@ object EventStream {
   def c5StreamSessionizeIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val cut = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
-    runIncremental(sessionCounts(twoBatchEventStream(spark, sfDir, Some(cut))),
-      OutputMode.Append(), minBatches = 2)
+    runStream(sessionCounts(splitStream(eventSplit(spark, sfDir, Some(cut)))),
+      MemorySink(OutputMode.Append()), AtLeast(2))
       .orderBy("user_id", "session_start")
   }
 
@@ -1195,9 +1096,8 @@ object EventStream {
     */
   def c5StreamUserStatsIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runIncremental(
-      userRunningStats(spark, twoBatchEventStream(spark, sfDir)),
-      OutputMode.Update(), minBatches = 2)
+    runStream(userRunningStats(spark, splitStream(eventSplit(spark, sfDir))),
+      MemorySink(OutputMode.Update()), AtLeast(2))
       .groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"), max(col("last_ts")).as("last_ts"))
       .orderBy("user_id")
@@ -1214,9 +1114,7 @@ object EventStream {
     * the cross-batch assertion (any chronological cut stays oracle-safe).
     */
   private[streaming] def joinCutUs(ev: DataFrame, windowHours: Int = 6): Option[Long] = {
-    val b = ev.agg(
-      min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx")).head()
-    val mid = Math.floorDiv(b.getLong(0) + b.getLong(1), 2L)
+    val mid = midpoint(ev, unix_micros(col("ts")))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), unix_micros(col("ts")).as("p_us"))
     val c = ev.filter(col("event_type") === "click")
@@ -1230,6 +1128,14 @@ object EventStream {
       .limit(1).collect()
     cut.headOption.map(_.getLong(0))
   }
+
+  /** Whether a join sink holds a (purchase, click) pair whose click is at
+    * or before `cut` and whose purchase is after it — a pair only a
+    * join whose state crossed the cut can emit.
+    */
+  private def straddling(sink: DataFrame, cut: Long): Boolean =
+    sink.filter(unix_micros(col("c_ts")) <= cut && unix_micros(col("p_ts")) > cut)
+      .limit(1).count() != 0
 
   /** c5_stream_join_incr: the stream-stream interval join under REAL
     * incremental arrival — the fourth and last streaming-state family
@@ -1251,16 +1157,11 @@ object EventStream {
   def c5StreamJoinIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, cutOpt)
-    def side: DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val joined = runIncrementalToParquet(purchaseClickJoin(side, side),
-      minBatches = 2, skipNoDataBatch = true)
+    def side = splitStream(eventSplit(spark, sfDir, cutOpt))
+    val joined = runStream(purchaseClickJoin(side, side), TempParquet, AtLeast(2),
+      skipNoDataBatch = true)
     cutOpt.foreach { cut =>
-      val straddling = joined.filter(
-        unix_micros(col("c_ts")) <= cut && unix_micros(col("p_ts")) > cut)
-        .limit(1).count()
-      if (straddling == 0)
+      if (!straddling(joined, cut))
         throw new IllegalStateException(
           "no cross-batch pair in the join sink: stream-stream join state " +
             "was not carried across micro-batches")
@@ -1283,16 +1184,10 @@ object EventStream {
   def c5StreamJoinOuterIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, cutOpt)
-    def side: DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val joined = runIncrementalToParquet(purchaseClickJoinOuter(side, side),
-      minBatches = 2)
+    def side = splitStream(eventSplit(spark, sfDir, cutOpt))
+    val joined = runStream(purchaseClickJoinOuter(side, side), TempParquet, AtLeast(2))
     cutOpt.foreach { cut =>
-      val straddling = joined.filter(
-        unix_micros(col("c_ts")) <= cut && unix_micros(col("p_ts")) > cut)
-        .limit(1).count()
-      if (straddling == 0)
+      if (!straddling(joined, cut))
         throw new IllegalStateException(
           "no cross-batch pair in the outer-join sink: stream-stream join " +
             "state was not carried across micro-batches")
@@ -1335,9 +1230,7 @@ object EventStream {
     */
   private[streaming] def dedupCutUs(ev: DataFrame,
       horizonUs: Long = DedupHorizonUs): Option[(Long, Long, String, Double)] = {
-    val b = ev.agg(
-      min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx")).head()
-    val mid = Math.floorDiv(b.getLong(0) + b.getLong(1), 2L)
+    val mid = midpoint(ev, unix_micros(col("ts")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"), col("event_type"), col("value"))
       .orderBy(col("us"))
@@ -1382,12 +1275,11 @@ object EventStream {
   def c5StreamDedupIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val pairOpt = dedupCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val stream = twoBatchEventStream(spark, sfDir, pairOpt.map(_._1))
-    val sink = runIncrementalToParquet(
+    val stream = splitStream(eventSplit(spark, sfDir, pairOpt.map(_._1)))
+    val sink = runStream(
       dedupWithinWatermark(stream, DedupHorizonInterval)
         .select(col("user_id"), col("event_type"), col("value")),
-      skipNoDataBatch = true,
-      minBatches = 2)
+      TempParquet, AtLeast(2), skipNoDataBatch = true)
     val res = sink.groupBy(col("user_id"), col("event_type"), col("value"))
       .agg(count(lit(1)).as("n_emitted"))
     pairOpt.foreach { case (_, uid, etype, v) =>
@@ -1440,24 +1332,12 @@ object EventStream {
     */
   def c5StreamRestartDedup(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
     val pairOpt = dedupCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, pairOpt.map(_._1))
-    def src: DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    def dedup = dedupWithinWatermark(src, RestartDedupHorizonInterval)
-      .select(col("user_id"), col("event_type"), col("value"))
-    val ckpt = JFiles.createTempDirectory("graft_restart_dedup_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_dedup_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    withParkedLate(dir) {
-      runCheckpointedToParquet(dedup, ckpt.toString, out.toString, 1,
-        skipNoDataBatch = true)
-    }
-    runCheckpointedToParquet(dedup, ckpt.toString, out.toString, 1,
-        skipNoDataBatch = true)
-    val res = spark.read.parquet(out.toString)
+    val split = eventSplit(spark, sfDir, pairOpt.map(_._1))
+    val res = restartLifecycles(split,
+        dedupWithinWatermark(splitStream(split), RestartDedupHorizonInterval)
+          .select(col("user_id"), col("event_type"), col("value")),
+        skipNoDataBatch = true)(_ => ())
       .groupBy(col("user_id"), col("event_type"), col("value"))
       .agg(count(lit(1)).as("n_emitted"))
     pairOpt.foreach { case (_, uid, etype, v) =>
@@ -1485,13 +1365,13 @@ object EventStream {
     */
   def c5StreamGapfill(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val stream = twoBatchEventStream(spark, sfDir, None)
-    runIncremental(
+    val stream = splitStream(eventSplit(spark, sfDir))
+    runStream(
       gapfillDaily(spark, stream).toDF()
         .select(col("event_type"),
           expr("date_add(DATE '1970-01-01', CAST(day_idx AS INT))").as("day"),
           col("n_events")),
-      OutputMode.Append(), minBatches = 2)
+      MemorySink(OutputMode.Append()), AtLeast(2))
       .orderBy("event_type", "day")
   }
 
@@ -1506,8 +1386,8 @@ object EventStream {
     */
   def c5StreamAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNowToParquet(
-      anomalyOut(onlineAnomaly(spark, readEventsTable(spark, sfDir))))
+    runStream(anomalyOut(onlineAnomaly(spark, readEventsTable(spark, sfDir))),
+      TempParquet, Exactly(1))
       .orderBy("user_id", "hour")
   }
 
@@ -1521,50 +1401,19 @@ object EventStream {
     */
   def c5StreamAnomalyIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runIncrementalToParquet(
-      anomalyOut(onlineAnomaly(spark, twoBatchEventStream(spark, sfDir))),
-      minBatches = 2)
+    runStream(
+      anomalyOut(onlineAnomaly(spark, splitStream(eventSplit(spark, sfDir)))),
+      TempParquet, AtLeast(2))
       .orderBy("user_id", "hour")
   }
 
-  /** Run a streaming frame to the exactly-once PARQUET file sink with a
-    * DURABLE checkpoint, AvailableNow, asserting exactly `wantBatches`
-    * data micro-batches — the building block of the restart/recovery
-    * check (the memory sink explicitly does NOT support checkpoint
-    * recovery; the file sink's `_spark_metadata` commit log is the
-    * production recovery surface).
-    */
-  private def runCheckpointedToParquet(df: DataFrame, ckpt: String, out: String,
-      wantBatches: Int, skipNoDataBatch: Boolean = false)
-      (implicit spark: SparkSession): Unit =
-    withStatePartitions(spark) {
-    withNoDataBatchesSkipped(spark, skipNoDataBatch) {
-    val q = df.writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    if (!q.awaitTermination(300000L)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"streaming query to $out did not terminate within 300s")
-    }
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches != wantBatches)
-      throw new IllegalStateException(
-        s"streaming query to $out ran $dataBatches data micro-batches, " +
-          s"expected exactly $wantBatches")
-    }
-  }
-
   /** Park the split's late file so a restart lifecycle sees only the
-    * early half; restore it (and its order-bearing mtime) afterwards,
-    * poison-proofing the memoized split layout (`poison` clears the
-    * cache that memoized `dir` — the event split by default) if the
-    * restore fails.
+    * early half; restore it (and its order-bearing mtime) afterwards. If
+    * the restore fails, the split dir is left without its late file,
+    * which the memo's part-file check ([[memoSplit]]) rebuilds on the
+    * next lookup instead of silently running on half the rows.
     */
-  private def withParkedLate[T](dir: String,
-      poison: () => Unit = () => splitCache.clear())(body: => T): T = {
+  private def withParkedLate[T](dir: String)(body: => T): T = {
     val late = new java.io.File(dir, "01_late.parquet")
     val parked = new java.io.File(s"$dir.parked_01_late.parquet")
     val mtime = late.lastModified()
@@ -1572,19 +1421,38 @@ object EventStream {
       sys.error(s"could not park $late for the restart check")
     try body
     finally {
-      if (!parked.renameTo(late)) {
-        // the memoized layout is now missing a file — poison-proof the
-        // cache so later queries rebuild rather than silently running
-        // on half the events
-        poison()
+      if (!parked.renameTo(late))
         sys.error(s"could not restore $late; split dir is now incomplete")
-      }
       // rename preserves mtime on the same filesystem, but file ORDER is
       // this harness's correctness edge — re-assert it.
       if (late.lastModified() != mtime && !late.setLastModified(mtime))
         sys.error(s"could not restore mtime of $late")
     }
   }
+
+  /** The crash-restart harness of every c5_stream_restart_* query: two
+    * query lifecycles of `query` over `split`, sharing one DURABLE
+    * checkpoint and one parquet sink. Lifecycle A sees only the early
+    * file (the late file is parked outside the source dir) and
+    * terminates; `between` checks A's sink — each caller asserts there
+    * that the property B must recover is not yet visible, so its check
+    * is not vacuous. Lifecycle B — a fresh query object on the same
+    * checkpoint, as after a driver crash — sees the restored late file
+    * and resumes from A's checkpoint: committed offsets (the early file
+    * is NOT reprocessed — each lifecycle must run exactly one data
+    * batch), the advanced watermark and the operator state all come back
+    * from disk. Returns the union of both lifecycles' Append output,
+    * read with the query's schema; the checkpoint and sink follow
+    * [[withScratchSink]].
+    */
+  private def restartLifecycles(split: Split, query: => DataFrame,
+      skipNoDataBatch: Boolean = false, rocksDb: Boolean = false)
+      (between: DataFrame => Unit)(implicit spark: SparkSession): DataFrame =
+    withScratchSink { sink =>
+      def lifecycle() = runStream(query, sink, Exactly(1), skipNoDataBatch, rocksDb)
+      between(withParkedLate(split.dir)(lifecycle()))
+      lifecycle()
+    }
 
   /** c5_stream_restart_join: stream-stream JOIN BUFFERS recovered from a
     * durable checkpoint across a full query stop and restart — the state
@@ -1621,42 +1489,27 @@ object EventStream {
     */
   def c5StreamRestartJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
     val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, cutOpt)
-    def src: DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val sinkSchema = purchaseClickJoinOuter(src, src).schema
-    val ckpt = JFiles.createTempDirectory("graft_restart_oj_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_oj_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    def sink = spark.read.schema(sinkSchema).parquet(out.toString)
-    def straddles(cut: Long): Long = sink
-      .filter(unix_micros(col("c_ts")) <= cut && unix_micros(col("p_ts")) > cut)
-      .limit(1).count()
-    def earlyNulls(cut: Long): Long = sink
+    val split = eventSplit(spark, sfDir, cutOpt)
+    def src = splitStream(split)
+    def earlyNulls(sink: DataFrame, cut: Long): Long = sink
       .filter(col("c_id").isNull && unix_micros(col("p_ts")) <= cut).count()
-    withParkedLate(dir) {
-      runCheckpointedToParquet(
-        purchaseClickJoinOuter(src, src), ckpt.toString, out.toString, 1)
+    var nullsAfterA = Option.empty[Long]
+    val sink = restartLifecycles(split, purchaseClickJoinOuter(src, src)) { a =>
+      nullsAfterA = cutOpt.map { cut =>
+        if (straddling(a, cut))
+          throw new IllegalStateException(
+            "the cut-straddling pair was emitted before the restart; " +
+              "the recovery check would be vacuous")
+        earlyNulls(a, cut)
+      }
     }
-    val nullsAfterA = cutOpt.map { cut =>
-      if (straddles(cut) != 0)
-        throw new IllegalStateException(
-          "the cut-straddling pair was emitted before the restart; " +
-            "the recovery check would be vacuous")
-      earlyNulls(cut)
-    }
-    // lifecycle B: fresh query object, same checkpoint — crash-restart.
-    runCheckpointedToParquet(
-      purchaseClickJoinOuter(src, src), ckpt.toString, out.toString, 1)
     cutOpt.foreach { cut =>
-      if (straddles(cut) == 0)
+      if (!straddling(sink, cut))
         throw new IllegalStateException(
           "no cut-straddling pair after restart: outer-join buffers " +
             "did not survive the stop/restart")
-      if (nullsAfterA.exists(_ >= earlyNulls(cut)))
+      if (nullsAfterA.exists(_ >= earlyNulls(sink, cut)))
         throw new IllegalStateException(
           "lifecycle B emitted no additional null-matched batch-1 " +
             "purchase: eviction did not run against recovered state")
@@ -1675,43 +1528,20 @@ object EventStream {
 
   def c5StreamRestartJoin(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
     val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, cutOpt)
-    def src: DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val sinkSchema = purchaseClickJoin(src, src).schema
-    val ckpt = JFiles.createTempDirectory("graft_restart_join_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_join_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    // explicit sink schema: lifecycle A's sink may legitimately hold zero
-    // rows (no early-only pair), which schema inference cannot read
-    def sink = spark.read.schema(sinkSchema).parquet(out.toString)
-    def straddles(cut: Long): Long = sink
-      .filter(unix_micros(col("c_ts")) <= cut && unix_micros(col("p_ts")) > cut)
-      .limit(1).count()
-    withParkedLate(dir) {
-      runCheckpointedToParquet(
-        purchaseClickJoin(src, src), ckpt.toString, out.toString, 1,
-        skipNoDataBatch = true)
-    }
-    cutOpt.foreach { cut =>
-      if (straddles(cut) != 0)
+    val split = eventSplit(spark, sfDir, cutOpt)
+    def src = splitStream(split)
+    val sink = restartLifecycles(split, purchaseClickJoin(src, src),
+        skipNoDataBatch = true) { a =>
+      if (cutOpt.exists(straddling(a, _)))
         throw new IllegalStateException(
           "the cut-straddling pair was emitted before the restart; " +
             "the recovery check would be vacuous")
     }
-    // lifecycle B: fresh query object, same checkpoint — crash-restart.
-    runCheckpointedToParquet(
-      purchaseClickJoin(src, src), ckpt.toString, out.toString, 1,
-      skipNoDataBatch = true)
-    cutOpt.foreach { cut =>
-      if (straddles(cut) == 0)
-        throw new IllegalStateException(
-          "no cut-straddling pair after restart: stream-stream join " +
-            "buffers did not survive the stop/restart")
-    }
+    if (cutOpt.exists(!straddling(sink, _)))
+      throw new IllegalStateException(
+        "no cut-straddling pair after restart: stream-stream join " +
+          "buffers did not survive the stop/restart")
     sink.orderBy("p_id", "c_id")
   }
 
@@ -1736,44 +1566,28 @@ object EventStream {
     */
   def c5StreamRestart(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
-    val ev = graft.Tables.load(spark, sfDir, "events")
-    val bounds = ev.agg(
-      min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx")).head()
-    val cutUs = Math.floorDiv(bounds.getLong(0) + bounds.getLong(1), 2L)
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir)
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val ckpt = JFiles.createTempDirectory("graft_restart_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    // lifecycle A: only the early file is visible
-    withParkedLate(dir) {
-      runCheckpointedToParquet(tumblingCounts(src), ckpt.toString, out.toString, 1)
-    }
+    val cutUs = midpoint(graft.Tables.load(spark, sfDir, "events"), unix_micros(col("ts")))
+    val split = eventSplit(spark, sfDir)
     // the window containing the cut spans the restart: it must be ABSENT
     // from lifecycle A's committed output (still open in state) ...
     val cutWindowStartUs = Math.floorDiv(cutUs, 3600000000L) * 3600000000L
-    def cutWindowRows() = spark.read.parquet(out.toString)
+    def cutWindowRows(sink: DataFrame) = sink
       .filter(unix_micros(col("window_start")) === cutWindowStartUs)
       .limit(1).count()
-    if (cutWindowRows() != 0)
-      throw new IllegalStateException(
-        "the cut-spanning window was already finalized before the restart; " +
-          "the recovery check would be vacuous")
-    // lifecycle B: fresh query object, same checkpoint — crash-restart.
-    // Committed offsets, the advanced watermark, and the open-window
-    // partial counts all come back from disk.
-    runCheckpointedToParquet(tumblingCounts(src), ckpt.toString, out.toString, 1)
+    val sink = restartLifecycles(split, tumblingCounts(splitStream(split))) { a =>
+      if (cutWindowRows(a) != 0)
+        throw new IllegalStateException(
+          "the cut-spanning window was already finalized before the restart; " +
+            "the recovery check would be vacuous")
+    }
     // ... and emitted by the RESTARTED lifecycle, with its full count
     // guaranteed by the oracle hash only if the recovered state held
     // the pre-restart half.
-    if (cutWindowRows() == 0)
+    if (cutWindowRows(sink) == 0)
       throw new IllegalStateException(
         "the cut-spanning window was not emitted after restart: " +
           "checkpointed window state did not survive the stop/restart")
-    spark.read.parquet(out.toString).orderBy("window_start", "event_type")
+    sink.orderBy("window_start", "event_type")
   }
 
   /** c5_stream_restart_state: CUSTOM state (flatMapGroupsWithState with
@@ -1792,33 +1606,18 @@ object EventStream {
     */
   def c5StreamRestartState(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
-    val ev = graft.Tables.load(spark, sfDir, "events")
-    val cutUs = sessionCutUs(ev)
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, Some(cutUs))
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val ckpt = JFiles.createTempDirectory("graft_restart_state_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_state_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    withParkedLate(dir) {
-      runCheckpointedToParquet(
-        sessionizeWithState(spark, src).toDF()
-          .select("user_id", "session_start", "session_end", "n_events"),
-        ckpt.toString, out.toString, 1)
-    }
-    runCheckpointedToParquet(
-      sessionizeWithState(spark, src).toDF()
-        .select("user_id", "session_start", "session_end", "n_events"),
-      ckpt.toString, out.toString, 1)
+    val cutUs = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
+    val split = eventSplit(spark, sfDir, Some(cutUs))
+    val sink = restartLifecycles(split,
+      sessionizeWithState(spark, splitStream(split)).toDF()
+        .select("user_id", "session_start", "session_end", "n_events"))(_ => ())
     // the cut-spanning session must appear in the union CLOSED with a
     // start before the cut and its LAST EVENT after it (session_end
     // here is the last event time — the flatMapGroupsWithState shape,
     // no gap added) — it was open in custom state at the restart and
     // can only close (and emit) from lifecycle B, so its presence
     // proves the OpenSession object survived
-    val spanning = spark.read.parquet(out.toString)
+    val spanning = sink
       .filter(unix_micros(col("session_start")) <= cutUs &&
         unix_micros(col("session_end")) > cutUs)
       .limit(1).count()
@@ -1826,8 +1625,7 @@ object EventStream {
       throw new IllegalStateException(
         "no cut-spanning session in the sink: custom flatMapGroupsWithState " +
           "state did not survive the stop/restart")
-    spark.read.parquet(out.toString)
-      .orderBy("user_id", "session_start")
+    sink.orderBy("user_id", "session_start")
   }
 
   /** c5_stream_restart_session: NATIVE session_window state recovered
@@ -1856,37 +1654,22 @@ object EventStream {
     */
   def c5StreamRestartSession(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
-    val ev = graft.Tables.load(spark, sfDir, "events")
-    val cutUs = sessionCutUs(ev)
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir, Some(cutUs))
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val sinkSchema = sessionCounts(src).schema
-    val ckpt = JFiles.createTempDirectory("graft_restart_session_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_session_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    // explicit sink schema: lifecycle A's sink may hold zero finalized
-    // sessions (a short early half), which schema inference cannot read
-    def sink = spark.read.schema(sinkSchema).parquet(out.toString)
+    val cutUs = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
+    val split = eventSplit(spark, sfDir, Some(cutUs))
     // session_end is last event + gap, so "reaches past the cut" is
     // start ≤ cut < end; A's watermark bound makes this impossible pre-
     // restart and the recovered-and-extended session satisfies it after.
-    def spanning(): Long = sink
+    def spanning(sink: DataFrame): Long = sink
       .filter(unix_micros(col("session_start")) <= cutUs &&
         unix_micros(col("session_end")) > cutUs)
       .limit(1).count()
-    withParkedLate(dir) {
-      runCheckpointedToParquet(sessionCounts(src), ckpt.toString, out.toString, 1)
+    val sink = restartLifecycles(split, sessionCounts(splitStream(split))) { a =>
+      if (spanning(a) != 0)
+        throw new IllegalStateException(
+          "a cut-spanning session was finalized before the restart; " +
+            "the session-store recovery check would be vacuous")
     }
-    if (spanning() != 0)
-      throw new IllegalStateException(
-        "a cut-spanning session was finalized before the restart; " +
-          "the session-store recovery check would be vacuous")
-    // lifecycle B: fresh query object, same checkpoint — crash-restart.
-    runCheckpointedToParquet(sessionCounts(src), ckpt.toString, out.toString, 1)
-    if (spanning() == 0)
+    if (spanning(sink) == 0)
       throw new IllegalStateException(
         "no cut-spanning session after restart: native session_window " +
           "state did not survive the stop/restart (or was restarted, " +
@@ -1899,7 +1682,8 @@ object EventStream {
     */
   def c5StreamTumbling(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNow(tumblingCounts(readEventsTable(spark, sfDir)), OutputMode.Complete())
+    runStream(tumblingCounts(readEventsTable(spark, sfDir)),
+      MemorySink(OutputMode.Complete()), Exactly(1))
       .orderBy("window_start", "event_type")
   }
 
@@ -1936,7 +1720,7 @@ object EventStream {
         expr("CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)").as("sum_value"))
       .select(col("window.start").as("window_start"), col("tier"),
         col("n_events"), col("sum_value"))
-    runAvailableNow(enriched, OutputMode.Complete())
+    runStream(enriched, MemorySink(OutputMode.Complete()), Exactly(1))
       .orderBy("window_start", "tier")
   }
 
@@ -1946,7 +1730,8 @@ object EventStream {
     */
   def c5StreamSessionize(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNow(sessionCounts(readEventsTable(spark, sfDir)), OutputMode.Complete())
+    runStream(sessionCounts(readEventsTable(spark, sfDir)),
+      MemorySink(OutputMode.Complete()), Exactly(1))
       .orderBy("user_id", "session_start")
   }
 
@@ -1955,7 +1740,8 @@ object EventStream {
     */
   def c5StreamSliding(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNow(slidingCounts(readEventsTable(spark, sfDir)), OutputMode.Complete())
+    runStream(slidingCounts(readEventsTable(spark, sfDir)),
+      MemorySink(OutputMode.Complete()), Exactly(1))
       .orderBy("window_start")
   }
 
@@ -1967,9 +1753,8 @@ object EventStream {
     */
   def c5StreamUserStats(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNow(
-      userRunningStats(spark, readEventsTable(spark, sfDir)),
-      OutputMode.Update())
+    runStream(userRunningStats(spark, readEventsTable(spark, sfDir)),
+      MemorySink(OutputMode.Update()), Exactly(1))
       .orderBy("user_id")
   }
 
@@ -1983,11 +1768,8 @@ object EventStream {
     */
   def c5StreamTws(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    withRocksDbProvider(spark) {
-      runAvailableNow(
-        userTypeStats(spark, readEventsTable(spark, sfDir)).toDF(),
-        OutputMode.Update())
-    }
+    runStream(userTypeStats(spark, readEventsTable(spark, sfDir)).toDF(),
+      MemorySink(OutputMode.Update()), Exactly(1), rocksDb = true)
       .select(col("user_id"), col("event_type"), col("n_events"),
         timestamp_micros(col("last_us")).as("last_ts"))
       .orderBy("user_id", "event_type")
@@ -2004,11 +1786,8 @@ object EventStream {
     */
   def c5StreamTwsIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    withRocksDbProvider(spark) {
-      runIncremental(
-        userTypeStats(spark, twoBatchEventStream(spark, sfDir)).toDF(),
-        OutputMode.Update(), minBatches = 2)
-    }
+    runStream(userTypeStats(spark, splitStream(eventSplit(spark, sfDir))).toDF(),
+      MemorySink(OutputMode.Update()), AtLeast(2), rocksDb = true)
       .groupBy("user_id", "event_type")
       .agg(max(col("n_events")).as("n_events"), max(col("last_us")).as("last_us"))
       .select(col("user_id"), col("event_type"), col("n_events"),
@@ -2039,10 +1818,9 @@ object EventStream {
     */
   def c5StreamTransitions(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    transitionMatrix(withRocksDbProvider(spark) {
-      runAvailableNowToParquet(
-        userTransitions(spark, readEventsTable(spark, sfDir)).toDF())
-    })
+    transitionMatrix(runStream(
+      userTransitions(spark, readEventsTable(spark, sfDir)).toDF(),
+      TempParquet, Exactly(1), rocksDb = true))
   }
 
   /** c5_stream_transitions_incr: the transition spanning the micro-batch
@@ -2053,11 +1831,9 @@ object EventStream {
     */
   def c5StreamTransitionsIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    transitionMatrix(withRocksDbProvider(spark) {
-      runIncrementalToParquet(
-        userTransitions(spark, twoBatchEventStream(spark, sfDir)).toDF(),
-        minBatches = 2)
-    })
+    transitionMatrix(runStream(
+      userTransitions(spark, splitStream(eventSplit(spark, sfDir))).toDF(),
+      TempParquet, AtLeast(2), rocksDb = true))
   }
 
   /** c5_stream_pattern: consecutive view → click → purchase detection on
@@ -2067,10 +1843,8 @@ object EventStream {
     */
   def c5StreamPattern(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    withRocksDbProvider(spark) {
-      runAvailableNowToParquet(
-        userPatternHits(spark, readEventsTable(spark, sfDir)).toDF())
-    }
+    runStream(userPatternHits(spark, readEventsTable(spark, sfDir)).toDF(),
+      TempParquet, Exactly(1), rocksDb = true)
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
       .orderBy("user_id", "ts")
   }
@@ -2083,11 +1857,8 @@ object EventStream {
     */
   def c5StreamPatternIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    withRocksDbProvider(spark) {
-      runIncrementalToParquet(
-        userPatternHits(spark, twoBatchEventStream(spark, sfDir)).toDF(),
-        minBatches = 2)
-    }
+    runStream(userPatternHits(spark, splitStream(eventSplit(spark, sfDir))).toDF(),
+      TempParquet, AtLeast(2), rocksDb = true)
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
       .orderBy("user_id", "ts")
   }
@@ -2103,11 +1874,8 @@ object EventStream {
     */
   def c5StreamInactive(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    withRocksDbProvider(spark) {
-      runAvailableNow(
-        userInactivity(spark, readEventsTable(spark, sfDir)).toDF(),
-        OutputMode.Append())
-    }
+    runStream(userInactivity(spark, readEventsTable(spark, sfDir)).toDF(),
+      MemorySink(OutputMode.Append()), Exactly(1), rocksDb = true)
       .select(col("user_id"), timestamp_micros(col("last_us")).as("last_ts"))
       .orderBy("user_id")
   }
@@ -2128,12 +1896,8 @@ object EventStream {
     */
   def c5StreamRestartTws(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
     val ev = graft.Tables.load(spark, sfDir, "events")
-    val bounds = ev.agg(
-      min(unix_micros(col("ts"))).as("mn"),
-      max(unix_micros(col("ts"))).as("mx")).head()
-    val cutUs = Math.floorDiv(bounds.getLong(0) + bounds.getLong(1), 2L)
+    val cutUs = midpoint(ev, unix_micros(col("ts")))
     val span = ev.groupBy(col("user_id"), col("event_type"))
       .agg(sum(when(unix_micros(col("ts")) <= cutUs, 1L).otherwise(0L)).as("a"),
         sum(when(unix_micros(col("ts")) > cutUs, 1L).otherwise(0L)).as("b"))
@@ -2145,35 +1909,24 @@ object EventStream {
         "no (user, type) pair spans the cut; the recovery check would be vacuous")
     val (su, st) = (span(0).getLong(0), span(0).getString(1))
     val full = span(0).getLong(2) + span(0).getLong(3)
-    val (dir, schema) = twoBatchSplitDir(spark, sfDir)
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val ckpt = JFiles.createTempDirectory("graft_restart_tws_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_tws_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    def q = userTypeStats(spark, src, OutputMode.Append()).toDF()
-    def fullCountRows(): Long = spark.read.parquet(out.toString)
+    val split = eventSplit(spark, sfDir)
+    def fullCountRows(sink: DataFrame): Long = sink
       .filter(col("user_id") === su && col("event_type") === st &&
         col("n_events") === full)
       .limit(1).count()
-    withRocksDbProvider(spark) {
-      withParkedLate(dir) {
-        runCheckpointedToParquet(q, ckpt.toString, out.toString, 1)
-      }
-      if (fullCountRows() != 0)
+    val sink = restartLifecycles(split,
+        userTypeStats(spark, splitStream(split), OutputMode.Append()).toDF(),
+        rocksDb = true) { a =>
+      if (fullCountRows(a) != 0)
         throw new IllegalStateException(
           "the cut-spanning pair reached its full count before the restart; " +
             "the recovery check would be vacuous")
-      // lifecycle B: fresh query object, same checkpoint — crash-restart
-      runCheckpointedToParquet(q, ckpt.toString, out.toString, 1)
     }
-    if (fullCountRows() == 0)
+    if (fullCountRows(sink) == 0)
       throw new IllegalStateException(
         "cut-spanning pair never reached its full count after restart: " +
           "transformWithState MapState did not survive the stop/restart")
-    spark.read.parquet(out.toString)
-      .groupBy("user_id", "event_type")
+    sink.groupBy("user_id", "event_type")
       .agg(max(col("n_events")).as("n_events"), max(col("last_us")).as("last_us"))
       .select(col("user_id"), col("event_type"), col("n_events"),
         timestamp_micros(col("last_us")).as("last_ts"))
@@ -2188,9 +1941,8 @@ object EventStream {
     */
   def c5StreamSessionizeState(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNowToParquet(
-      sessionizeWithState(spark, readEventsTable(spark, sfDir)).toDF(),
-      skipNoDataBatch = true)
+    runStream(sessionizeWithState(spark, readEventsTable(spark, sfDir)).toDF(),
+      TempParquet, Exactly(1), skipNoDataBatch = true)
       .select("user_id", "session_start", "session_end", "n_events")
       .orderBy("user_id", "session_start")
   }
@@ -2203,10 +1955,10 @@ object EventStream {
     */
   def c5StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNowToParquet(
+    runStream(
       purchaseClickJoin(
         readEventsTable(spark, sfDir), readEventsTable(spark, sfDir)),
-      skipNoDataBatch = true)
+      TempParquet, Exactly(1), skipNoDataBatch = true)
       .orderBy("p_id", "c_id")
   }
 
@@ -2221,9 +1973,10 @@ object EventStream {
     */
   def c5StreamJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNowToParquet(
+    runStream(
       purchaseClickJoinOuter(
-        readEventsTable(spark, sfDir), readEventsTable(spark, sfDir)))
+        readEventsTable(spark, sfDir), readEventsTable(spark, sfDir)),
+      TempParquet, Exactly(1))
       .orderBy("p_id", "c_id")
   }
 
@@ -2234,10 +1987,10 @@ object EventStream {
     */
   def c5StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    runAvailableNowToParquet(
+    runStream(
       dedupWithinWatermark(readEventsTable(spark, sfDir))
         .select(col("user_id"), col("event_type"), col("value")),
-      skipNoDataBatch = true)
+      TempParquet, Exactly(1), skipNoDataBatch = true)
       .orderBy("user_id", "event_type", "value")
   }
 
@@ -2307,9 +2060,9 @@ object EventStream {
     */
   def c5StreamNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val perMember = runIncrementalToParquet(
-      docNearDupMins(spark, twoBatchDocStream(spark, sfDir)).toDF(),
-      minBatches = 2, skipNoDataBatch = true)
+    val perMember = runStream(
+      docNearDupMins(spark, splitStream(docSplit(spark, sfDir))).toDF(),
+      TempParquet, AtLeast(2), skipNoDataBatch = true)
     perMember.groupBy(col("doc_id"))
       .agg(min(col("bucket_min")).as("cluster_rep"))
       .withColumn("is_kept", col("doc_id") === col("cluster_rep"))
@@ -2340,23 +2093,10 @@ object EventStream {
     */
   def c5StreamRestartNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files => JFiles}
-    val (dir, schema) = docSplitDir(spark, sfDir)
-    def src: DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    def gate = docNearDupMins(spark, src).toDF()
-    val ckpt = JFiles.createTempDirectory("graft_restart_neardup_ckpt")
-    val out = JFiles.createTempDirectory("graft_restart_neardup_out")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt.toFile)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(out.toFile)
-    withParkedLate(dir, poison = () => docSplitCache.clear()) {
-      runCheckpointedToParquet(gate, ckpt.toString, out.toString, 1,
-        skipNoDataBatch = true)
-    }
-    runCheckpointedToParquet(gate, ckpt.toString, out.toString, 1,
-        skipNoDataBatch = true)
-    val perMember = spark.read.parquet(out.toString)
-    val cut = docCutId(spark, sfDir)
+    val split = docSplit(spark, sfDir)
+    val perMember = restartLifecycles(split,
+      docNearDupMins(spark, splitStream(split)).toDF(), skipNoDataBatch = true)(_ => ())
+    val cut = midpoint(graft.Tables.load(spark, sfDir, "documents"), col("doc_id"))
     val nRecovered = perMember
       .filter(col("doc_id") > cut && col("bucket_min") <= cut).count()
     if (nRecovered == 0L)
@@ -2407,7 +2147,7 @@ object EventStream {
   def c5StreamSemantic(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val src = twoBatchVecStream(spark, sfDir)
+    val src = splitStream(vecSplit(spark, sfDir))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
     val decisions = graft.queries.SimOps
       .semanticGateCandidates(spark, sfDir, src)
@@ -2434,8 +2174,7 @@ object EventStream {
           Iterator.single(SemDecision(id, best.isEmpty,
             best.map(_._2), best.map(_._1)))
       }
-    runIncrementalToParquet(decisions.toDF(), minBatches = 2,
-      skipNoDataBatch = true)
+    runStream(decisions.toDF(), TempParquet, AtLeast(2), skipNoDataBatch = true)
       .orderBy("vec_id")
   }
 
@@ -2471,7 +2210,7 @@ object EventStream {
     implicit val s: SparkSession = spark
     import s.implicits._
     val topc = graft.queries.SimOps.IncSemTopC
-    val src = twoBatchVecStream(spark, sfDir)
+    val src = splitStream(vecSplit(spark, sfDir))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
     val decisions = graft.queries.SimOps
       .semanticTopcCandidates(spark, sfDir, src)
@@ -2497,8 +2236,7 @@ object EventStream {
           Iterator.single(SemDecision(id, best.isEmpty,
             best.map(_._2), best.map(_._1)))
       }
-    runIncrementalToParquet(decisions.toDF(), minBatches = 2,
-      skipNoDataBatch = true)
+    runStream(decisions.toDF(), TempParquet, AtLeast(2), skipNoDataBatch = true)
       .orderBy("vec_id")
   }
 
@@ -2697,11 +2435,10 @@ object EventStream {
     implicit val s: SparkSession = spark
     val topc = graft.queries.SimOps.IncSemTopC
     val threshold = graft.queries.SimOps.IncSemThreshold
-    val src = twoBatchVecStream(spark, sfDir, LiveSliceMod, LiveSliceRem)
+    val src = splitStream(vecSplit(spark, sfDir, LiveSliceMod, LiveSliceRem))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
-    val pairs = runIncrementalToParquet(
-      semanticLivePairs(spark, sfDir, src, topc).toDF(), minBatches = 2,
-      skipNoDataBatch = true)
+    val pairs = runStream(semanticLivePairs(spark, sfDir, src, topc).toDF(),
+      TempParquet, AtLeast(2), skipNoDataBatch = true)
     // read side: global top-c cut over BOTH tiers, exact confirm, fold
     val base = graft.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -2719,7 +2456,7 @@ object EventStream {
       .filter(col("cosine") >= threshold)
       .select(col("n_id"), col("b_id"), col("cosine"), col("live"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cut = vecCutId(spark, sfDir, LiveSliceMod, LiveSliceRem)
+    val cut = midpoint(vecSlice(spark, sfDir, LiveSliceMod, LiveSliceRem), col("vec_id"))
     val straddle = confirmed
       .filter(col("live") && col("b_id") <= cut && col("n_id") > cut).count()
     if (straddle == 0L)
@@ -2752,10 +2489,10 @@ object EventStream {
     */
   def c5StreamTopK(spark: SparkSession, sfDir: String, k: Int = 2): DataFrame = {
     implicit val s: SparkSession = spark
-    val counts = runAvailableNow(
+    val counts = runStream(
       tumblingCounts(readEventsTable(spark, sfDir))
         .select("window_start", "event_type", "n_events"),
-      OutputMode.Complete())
+      MemorySink(OutputMode.Complete()), Exactly(1))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("window_start"))
       .orderBy(col("n_events").desc, col("event_type"))
@@ -2773,10 +2510,10 @@ object EventStream {
     */
   def c5StreamTopKIncr(spark: SparkSession, sfDir: String, k: Int = 2): DataFrame = {
     implicit val s: SparkSession = spark
-    val counts = runIncremental(
-      tumblingCounts(twoBatchEventStream(spark, sfDir))
+    val counts = runStream(
+      tumblingCounts(splitStream(eventSplit(spark, sfDir)))
         .select("window_start", "event_type", "n_events"),
-      OutputMode.Append(), minBatches = 2)
+      MemorySink(OutputMode.Append()), AtLeast(2))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("window_start"))
       .orderBy(col("n_events").desc, col("event_type"))

@@ -1077,10 +1077,10 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("skipping the no-data finalization batch leaves opted-in results identical") {
-    // One representative per opted-in class (see runToParquet's
-    // withNoDataBatchesSkipped scaladoc): dedup-key state, stream-stream
-    // INNER join buffers, the NoTimeout flatMapGroupsWithState gate, and
-    // the multi-batch incremental dedup. Each runs with the skip active
+    // One representative per opted-in class (see withStreamConfs's
+    // scaladoc): dedup-key state, stream-stream INNER join buffers, the
+    // NoTimeout flatMapGroupsWithState gate, and the multi-batch
+    // incremental dedup. Each runs with the skip active
     // (the default) and with the kill-switch forcing the finalizing
     // batch back on; the sinks must be identical — the no-data batch
     // only evicts state for these operators, it never emits.
@@ -1119,15 +1119,54 @@ class EventStreamSpec extends SparkSuite {
       "dedup" -> (EventStream.c5StreamDedup(_, _)),
       "session_state" -> (EventStream.c5StreamSessionizeState(_, _)),
       "join" -> (EventStream.c5StreamJoin(_, _)))
+    val key = "spark.sql.streaming.stateStore.providerClass"
     fams.foreach { case (name, q) =>
       val base = q(spark, sf).collect().map(_.toString).sorted
-      sys.props("spark.graft.stream.provider") = "rocksdb"
+      spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider")
       try {
         val rocks = q(spark, sf).collect().map(_.toString).sorted
         assert(rocks.sameElements(base),
           s"$name: RocksDB provider changed the result " +
             s"(${base.length} vs ${rocks.length} rows)")
-      } finally sys.props.remove("spark.graft.stream.provider")
+      } finally spark.conf.unset(key)
     }
+  }
+
+  test("the streaming runner rejects a run with the wrong data-batch count") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val sink = EventStream.MemorySink(org.apache.spark.sql.streaming.OutputMode.Append())
+    // the two-file split arrives as two data micro-batches: a
+    // single-batch oracle must refuse it
+    val split = EventStream.splitStream(EventStream.eventSplit(spark, sf))
+    val exact = intercept[IllegalStateException] {
+      EventStream.runStream(split.select("event_id"), sink, EventStream.Exactly(1))
+    }
+    assert(exact.getMessage.contains("ran 2 data micro-batches"), exact.getMessage)
+    assert(exact.getMessage.contains("only valid for exactly 1"), exact.getMessage)
+    // the single-file events table arrives as one: an incremental check
+    // must refuse it
+    val events = EventStream.readEventsTable(spark, sf)
+    val atLeast = intercept[IllegalStateException] {
+      EventStream.runStream(events.select("event_id"), sink, EventStream.AtLeast(2))
+    }
+    assert(atLeast.getMessage.contains("ran 1 data micro-batches"), atLeast.getMessage)
+    assert(atLeast.getMessage.contains("verify incremental arrival (>= 2)"),
+      atLeast.getMessage)
+  }
+
+  test("repeated restart checks leave no checkpoint and at most one sink dir") {
+    // The lifecycles' checkpoint is deleted once lifecycle B has
+    // terminated and their sink is swept when the next parquet sink is
+    // created; the split is memoized, so after one warm-up run the graft*
+    // temp entries may grow by the one live sink at most.
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries(): Int = Option(tmp.list()).toSeq.flatten.count(_.startsWith("graft"))
+    EventStream.c5StreamRestart(spark, sf).collect()
+    val before = graftEntries()
+    val results = (1 to 3).map(_ => EventStream.c5StreamRestart(spark, sf).collect().toSeq)
+    assert(results.forall(_ == results.head) && results.head.nonEmpty)
+    assert(graftEntries() - before <= 1,
+      s"graft* temp entries grew from $before to ${graftEntries()}")
   }
 }
