@@ -56,15 +56,15 @@ object SparkEntry {
     Warmup("ann_index",
       Set("c3_ann_pq_indexed", "c3_ann_pq_filtered",
         "c3_ann_staleness", "c3_ann_cells").contains(_),
-      (s, d) => { SimOps.ensureAnnIndex(s, d); () }),
+      (s, d) => { SimOps.ensureAnnIndex(s, SimOps.AnnLayout.fixed(s, d)); () }),
     // The incremental-semantic family reads the corpus-SCALED index
     // (≈√n cells — its batch is a corpus fraction; see
-    // SimOps.ensureScaledAnnIndex), a separate persisted layout.
+    // SimOps.AnnLayout.scaled), a separate persisted layout.
     Warmup("ann_index_scaled",
       Set("c2_incremental_semantic", "c5_stream_semantic",
         "c2_incremental_semantic_topc", "c5_stream_semantic_topc",
         "c5_stream_semantic_live").contains(_),
-      (s, d) => { SimOps.ensureScaledAnnIndex(s, d); () }),
+      (s, d) => { SimOps.ensureAnnIndex(s, SimOps.AnnLayout.scaled(s, d)); () }),
     Warmup("dedup_index", _ == "c2_incremental_dedup_indexed",
       (s, d) => { DedupOps.ensureDedupIndex(s, d); () }),
     Warmup("dedup_labels", _ == "c2_incremental_cc",

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.dedup.{ConnectedComponents, MinHash, SetSimJoin, SimHash}
+import graft.sources.Storage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -585,6 +586,25 @@ object DedupOps {
       Seq(base, mem))
   }
 
+  /** The dedup index layout (memberships, token sets), keyed by corpus
+    * fingerprint + banding. Every table of the dedup layout — the CC
+    * labels and the tombstones too — carries its suffix.
+    */
+  private def dedupLayout(dir: String, numHashes: Int, bands: Int): Storage.Layout =
+    Storage.layout(Seq("graft_mh_mem_", "graft_mh_toks_"),
+      Seq(s"$dir/documents.parquet"), s"${numHashes}h${bands}b")
+
+  /** The layout's TOMBSTONE table (`doc_id` rows appended by
+    * [[deleteFromDedupIndex]], cleared by [[compactDedupIndex]]) — absent
+    * until the first delete; readers treat absence as empty.
+    */
+  private def tombstoneTab(suffix: String): String = s"graft_mh_del_$suffix"
+
+  private def tombstones(spark: SparkSession, suffix: String): Option[DataFrame] = {
+    val t = tombstoneTab(suffix)
+    if (spark.catalog.tableExists(t)) Some(spark.table(t)) else None
+  }
+
   /** One-time LSH LAYOUT of the standing corpus — the ingest posture
     * incremental dedup has at 100 TB: the corpus is banded and tokenized
     * ONCE when documents arrive (the b8/ANN-index posture applied to the
@@ -598,50 +618,24 @@ object DedupOps {
     * not this layout); stale/differently-parameterized layouts are
     * swept. Idempotent; returns (membershipTable, tokenTable).
     */
-  /** Fingerprint+params key shared by every table of one dedup layout. */
-  private def dedupSuffix(dir: String, numHashes: Int, bands: Int): String =
-    graft.sources.Storage.sourceFingerprint(s"$dir/documents.parquet") +
-      s"_${numHashes}h${bands}b"
-
-  /** The layout's TOMBSTONE table (`doc_id` rows appended by
-    * [[deleteFromDedupIndex]], cleared by [[compactDedupIndex]]) — absent
-    * until the first delete; readers treat absence as empty.
-    */
-  private def tombstoneTab(suffix: String): String = s"graft_mh_del_$suffix"
-
-  private def tombstones(spark: SparkSession, suffix: String): Option[DataFrame] = {
-    val t = tombstoneTab(suffix)
-    if (spark.catalog.tableExists(t)) Some(spark.table(t)) else None
-  }
-
   private[graft] def ensureDedupIndex(spark: SparkSession, dir: String,
       numHashes: Int = IncHashes, bands: Int = IncBands,
       sweepStale: Boolean = true): (String, String) = {
-    import graft.sources.Storage.dropStaleLayouts
-    val suffix = dedupSuffix(dir, numHashes, bands)
-    val (memTab, toksTab) = (s"graft_mh_mem_$suffix", s"graft_mh_toks_$suffix")
-    if (spark.catalog.tableExists(memTab) && spark.catalog.tableExists(toksTab))
-      return (memTab, toksTab)
-    // sweepStale = false builds a side corpus's layout (MaintBench temp
-    // dirs, throwaway spec corpora) without dropping the live corpus's.
-    if (sweepStale) {
-      dropStaleLayouts(spark, "graft_mh_mem_", suffix)
-      dropStaleLayouts(spark, "graft_mh_toks_", suffix)
-      dropStaleLayouts(spark, "graft_mh_del_", suffix)
+    val Seq(memTab, toksTab) = Storage.ensureLayout(spark,
+        dedupLayout(dir, numHashes, bands), sweepStale,
+        alsoSweep = Seq("graft_mh_del_")) { case Seq(memTab, toksTab) =>
+      val corpus = docs(spark, dir).filter(col("doc_id") % 10 =!= 7)
+        .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // Token sets first, memberships last (they mark completion).
+        corpus.write.mode("overwrite").format("parquet").saveAsTable(toksTab)
+        MinHash.membershipsFromSets(
+          corpus, col("doc_id"), col("toks"), numHashes, bands)
+          .write.mode("overwrite").format("parquet").saveAsTable(memTab)
+      } finally corpus.unpersist(blocking = false)
     }
-    val corpus = docs(spark, dir).filter(col("doc_id") % 10 =!= 7)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Token sets first: a crash between the writes leaves at most a
-      // toks table with no membership table, which the existence check
-      // above rebuilds.
-      corpus.write.mode("overwrite").format("parquet").saveAsTable(toksTab)
-      MinHash.membershipsFromSets(
-        corpus, col("doc_id"), col("toks"), numHashes, bands)
-        .write.mode("overwrite").format("parquet").saveAsTable(memTab)
-      (memTab, toksTab)
-    } finally corpus.unpersist(blocking = false)
+    (memTab, toksTab)
   }
 
   /** C2e': [[c2IncrementalDedup]] answered from the PERSISTED corpus
@@ -674,7 +668,7 @@ object DedupOps {
     // table until compaction — they must never surface as match
     // candidates. Takedown-sized broadcast anti-join; absent table =
     // no deletes = plan unchanged.
-    val cand = tombstones(spark, dedupSuffix(dir, IncHashes, IncBands)) match {
+    val cand = tombstones(spark, dedupLayout(dir, IncHashes, IncBands).suffix) match {
       case Some(d) => cand0.join(
         broadcast(d.select(col("doc_id").as("c_id"))), Seq("c_id"), "left_anti")
       case None => cand0
@@ -771,18 +765,6 @@ object DedupOps {
       Seq(assigned))
   }
 
-  /** Append NEW documents to the persisted dedup index — the
-    * maintenance path a growing corpus needs (the
-    * [[graft.queries.SimOps.appendAnnIndex]] posture applied to the LSH
-    * layout): band the day's batch with the SAME hash family and
-    * banding, append its `(doc_id, band, bucket)` memberships AND its
-    * `(doc_id, toks)` token sets, so appended docs are full match
-    * candidates for every later batch check (candidate join and exact
-    * confirm both read the layout). Duplicate ids — against the index
-    * OR within the batch itself — are rejected loudly (an id banded
-    * twice would self-match). Returns the number of appended membership
-    * rows (docs × bands).
-    */
   /** Persisted CC cluster LABELS over the indexed corpus — the third leg
     * of the dedup layout: [[ensureDedupIndex]] gives memberships (the
     * candidate join) and token sets (the confirm); this gives the
@@ -797,18 +779,15 @@ object DedupOps {
   private[graft] def ensureDedupLabels(spark: SparkSession, dir: String,
       numHashes: Int = IncHashes, bands: Int = IncBands,
       sweepStale: Boolean = true): String = {
-    import graft.sources.Storage.dropStaleLayouts
     val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands, sweepStale)
-    val suffix = dedupSuffix(dir, numHashes, bands)
-    val labTab = s"graft_mh_lab_$suffix"
-    if (spark.catalog.tableExists(labTab)) return labTab
-    if (sweepStale) dropStaleLayouts(spark, "graft_mh_lab_", suffix)
-    ConnectedComponents.assignmentsFromMemberships(spark.table(memTab))
-      .select(col("doc_id"), col("cluster_rep"),
-        pmod(col("cluster_rep"), lit(64L)).as("lp"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("lp").saveAsTable(labTab)
-    labTab
+    Storage.ensureLayout(spark, dedupLayout(dir, numHashes, bands)
+        .copy(prefixes = Seq("graft_mh_lab_")), sweepStale) { case Seq(labTab) =>
+      ConnectedComponents.assignmentsFromMemberships(spark.table(memTab))
+        .select(col("doc_id"), col("cluster_rep"),
+          pmod(col("cluster_rep"), lit(64L)).as("lp"))
+        .write.mode("overwrite").format("parquet")
+        .partitionBy("lp").saveAsTable(labTab)
+    }.head
   }
 
   /** Union-by-min-rep of a batch against the persisted labels — the
@@ -884,6 +863,18 @@ object DedupOps {
       Seq(batch))
   }
 
+  /** Append NEW documents to the persisted dedup index — the
+    * maintenance path a growing corpus needs (the
+    * [[graft.queries.SimOps.appendAnnIndex]] posture applied to the LSH
+    * layout): band the day's batch with the SAME hash family and
+    * banding, append its `(doc_id, band, bucket)` memberships AND its
+    * `(doc_id, toks)` token sets, so appended docs are full match
+    * candidates for every later batch check (candidate join and exact
+    * confirm both read the layout). Duplicate ids — against the index
+    * OR within the batch itself — are rejected loudly (an id banded
+    * twice would self-match). Returns the number of appended membership
+    * rows (docs × bands).
+    */
   private[graft] def appendDedupIndex(spark: SparkSession, dir: String,
       newDocs: DataFrame, numHashes: Int = IncHashes,
       bands: Int = IncBands): Long = {
@@ -971,12 +962,9 @@ object DedupOps {
       .filter(col("lp").isin(touchedLp.map(Long.box).toIndexedSeq: _*))
       .select(col("doc_id"), col("cluster_rep"), col("lp"))
       .localCheckpoint(true)
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    graft.util.SessionConf.withDynamicOverwrite(spark) {
       writeRows.write.mode("overwrite").insertInto(labTab)
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    }
     val presentLp =
       writeRows.select("lp").distinct().collect().map(_.getLong(0)).toSet
     touchedLp.filterNot(presentLp).foreach { p =>
@@ -1086,7 +1074,7 @@ object DedupOps {
       bands: Int = IncBands): Long = {
     val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands)
     val labTab = ensureDedupLabels(spark, dir, numHashes, bands)
-    val suffix = dedupSuffix(dir, numHashes, bands)
+    val suffix = dedupLayout(dir, numHashes, bands).suffix
     val del = ids.select(col("doc_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1145,7 +1133,7 @@ object DedupOps {
   private[graft] def compactDedupIndex(spark: SparkSession, dir: String,
       numHashes: Int = IncHashes, bands: Int = IncBands): Long = {
     val (memTab, toksTab) = ensureDedupIndex(spark, dir, numHashes, bands)
-    val suffix = dedupSuffix(dir, numHashes, bands)
+    val suffix = dedupLayout(dir, numHashes, bands).suffix
     val delTab = tombstoneTab(suffix)
     if (!spark.catalog.tableExists(delTab)) return 0L
     val del = spark.table(delTab).select(col("doc_id")).distinct()

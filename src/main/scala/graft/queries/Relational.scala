@@ -512,44 +512,34 @@ object Relational {
       .orderBy("side")
   }
 
-  /** B8: bucketed-storage join — both fact tables persisted bucketed (and
-    * sorted) on the join key via sources/Storage, so the join plans with
-    * NO exchange on either side: SortMergeJoin reads co-located buckets
-    * straight off disk. At 100 TB this converts the lineitem⋈orders
-    * shuffle — the single largest network cost in the corpus — into a
-    * one-time layout decision; every subsequent join on the key is
-    * shuffle-free. Shuffle-freedom is pinned in PlanAuditSpec; the oracle
-    * is the plain join (layout must not change semantics).
-    */
-  import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
+  import graft.sources.Storage
 
   /** Ensure the bucketed lineitem/orders layout exists for `dir`; returns
     * the (lineitem, orders) catalog table names. The layout write is a
     * ONE-TIME decision (that is the operator's whole point), so it is
     * idempotent per session: reruns in the same session (bench reruns,
     * repeated timings) measure the join, not the write. Table names are
-    * keyed by a source fingerprint so two corpora in one session — or a
-    * REGENERATED corpus at the same path — never alias a stale layout.
+    * keyed by a source fingerprint and the bucket count so two corpora
+    * in one session, a REGENERATED corpus at the same path, or a call
+    * with another bucket count never alias a stale layout.
     * Exposed (via [[warmLayouts]]) so Bench can pay the write BEFORE
     * timing: the timed query then measures steady-state join cost, which
     * is the number a 2x perf gate should see.
     */
   private[graft] def ensureB8BucketedLayout(
       spark: SparkSession, dir: String, buckets: Int = 8): (String, String) = {
-    val suffix = sourceFingerprint(s"$dir/lineitem.parquet", s"$dir/orders.parquet")
-    val (ltab, otab) = (s"graft_b8_lineitem_$suffix", s"graft_b8_orders_$suffix")
-    if (!spark.catalog.tableExists(ltab) || !spark.catalog.tableExists(otab)) {
-      dropStaleLayouts(spark, "graft_b8_lineitem_", suffix)
-      dropStaleLayouts(spark, "graft_b8_orders_", suffix)
+    val Seq(ltab, otab) = Storage.ensureLayout(spark, Storage.layout(
+        Seq("graft_b8_lineitem_", "graft_b8_orders_"),
+        Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet"), s"${buckets}b")) {
+      case Seq(ltab, otab) =>
+        Storage.writeBucketed(
+          t(spark, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
+          ltab, "l_orderkey", buckets)
+        // orders last: its presence marks the layout complete
+        Storage.writeBucketed(
+          t(spark, dir, "orders").select("o_orderkey", "o_orderpriority"),
+          otab, "o_orderkey", buckets)
     }
-    if (!spark.catalog.tableExists(ltab))
-      graft.sources.Storage.writeBucketed(
-        t(spark, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
-        ltab, "l_orderkey", buckets)
-    if (!spark.catalog.tableExists(otab))
-      graft.sources.Storage.writeBucketed(
-        t(spark, dir, "orders").select("o_orderkey", "o_orderpriority"),
-        otab, "o_orderkey", buckets)
     (ltab, otab)
   }
 
@@ -562,6 +552,15 @@ object Relational {
     ensureB8PartitionedLayout(spark, dir)
   }
 
+  /** B8: bucketed-storage join — both fact tables persisted bucketed (and
+    * sorted) on the join key via sources/Storage, so the join plans with
+    * NO exchange on either side: SortMergeJoin reads co-located buckets
+    * straight off disk. At 100 TB this converts the lineitem⋈orders
+    * shuffle — the single largest network cost in the corpus — into a
+    * one-time layout decision; every subsequent join on the key is
+    * shuffle-free. Shuffle-freedom is pinned in PlanAuditSpec; the oracle
+    * is the plain join (layout must not change semantics).
+    */
   def b8BucketedJoin(spark: SparkSession, dir: String, buckets: Int = 8): DataFrame = {
     val (ltab, otab) = ensureB8BucketedLayout(spark, dir, buckets)
     spark.table(ltab)
@@ -570,6 +569,29 @@ object Relational {
       .groupBy(col("o_orderpriority"))
       .agg(Exact.col(revenueSql).as("revenue"), count(lit(1)).as("n_items"))
       .orderBy("o_orderpriority")
+  }
+
+  /** Ensure the date-partitioned events layout exists for `dir`; returns
+    * its path. One-time and idempotent per session (see
+    * [[ensureB8BucketedLayout]]); completion is detected via the writer's
+    * _SUCCESS marker so a half-written layout is re-written, never
+    * trusted, and the name is fingerprint-keyed so a regenerated events
+    * table at the same path gets a fresh layout instead of the stale one.
+    */
+  private[graft] def ensureB8PartitionedLayout(
+      spark: SparkSession, dir: String): String = {
+    val l = Storage.layout(Seq("graft_b8_events_bydate_"), Seq(s"$dir/events.parquet"))
+    val out = spark.conf.get("spark.sql.warehouse.dir")
+      .stripPrefix("file:") + "/" + l.tables.head
+    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      Storage.dropStaleLayouts(spark, l.prefixes.head, l.suffix)
+      Storage.writePartitioned(
+        t(spark, dir, "events")
+          .select(col("ts"), col("event_type"), col("value"),
+            to_date(col("ts")).as("event_date")),
+        out, Seq("event_date"))
+    }
+    out
   }
 
   /** B8b: partition-pruned scan — the events table persisted
@@ -581,30 +603,6 @@ object Relational {
     * listing, before any I/O. Oracle = the same filter over the unlaid
     * table (layout must not change semantics).
     */
-  /** Ensure the date-partitioned events layout exists for `dir`; returns
-    * its path. One-time and idempotent per session (see
-    * [[ensureB8BucketedLayout]]); completion is detected via the writer's
-    * _SUCCESS marker so a half-written layout is re-written, never
-    * trusted, and the name is fingerprint-keyed so a regenerated events
-    * table at the same path gets a fresh layout instead of the stale one.
-    */
-  private[graft] def ensureB8PartitionedLayout(
-      spark: SparkSession, dir: String): String = {
-    val out = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:") +
-      s"/graft_b8_events_bydate_${sourceFingerprint(s"$dir/events.parquet")}"
-    if (!new java.io.File(out, "_SUCCESS").exists()) {
-      dropStaleLayouts(spark, "graft_b8_events_bydate_",
-        out.substring(out.lastIndexOf('_') + 1))
-      graft.sources.Storage.writePartitioned(
-        t(spark, dir, "events")
-          .select(col("ts"), col("event_type"), col("value"),
-            to_date(col("ts")).as("event_date")),
-        out, Seq("event_date"))
-    }
-    out
-  }
-
   def b8PartitionedScan(spark: SparkSession, dir: String): DataFrame = {
     val out = ensureB8PartitionedLayout(spark, dir)
     spark.read.parquet(out)

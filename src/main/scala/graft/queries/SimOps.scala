@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.sources.Storage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -642,111 +643,101 @@ object SimOps {
       adcTopK(corpus, queries, k, subspaces), Seq(base))
   }
 
-  /** Ensure the PERSISTED IVFADC index layout for `dir`'s embeddings
-    * table; returns (codes table, model table) catalog names.
+  /** Training-sample bound of every persisted ANN build (the codebook
+    * and a split's 2-means). It is not in the layout key, so it is not a
+    * parameter either: a layout trained on another sample would be
+    * served under the same name.
+    */
+  private[graft] val AnnMaxSample = 100000
+
+  /** One PERSISTED IVFADC index layout over `dir`'s embeddings table:
+    * its namespace, build parameters and the catalog names they key.
     *
     * This is the b8 posture applied to ANN: at 100 TB the index is a
     * one-time LAYOUT, not something a query retrains — the codes table
     * holds `subspaces` small ints per corpus vector, PARTITIONED BY CELL
     * (the on-disk inverted file: each probe touches only its cell's
     * directory), and the model table holds the trained coarse centroids
-    * plus per-subspace residual codebooks (nCells + subspaces·kSub tiny
-    * rows — constant in corpus size). Names are keyed by the source
-    * fingerprint (sources.Storage.sourceFingerprint) so a regenerated
-    * corpus gets a fresh index and stale layouts are swept, exactly like
-    * the b8 bucketed tables. Building is idempotent per corpus; Bench
-    * warms it untimed via SparkEntry.warmups.
+    * plus per-subspace residual codebooks (cells + subspaces·kSub tiny
+    * rows — constant in corpus size). Names carry BOTH the corpus
+    * fingerprint and the hyperparameters ([[graft.sources.Storage.layout]]):
+    * a regenerated corpus gets a fresh index, and an index trained with
+    * other cells/subspaces/kSub is not this index — without the params
+    * in the key, a caller asking for 32 cells would silently get 16-cell
+    * codes back and rank them against 32-cell query tables. Sweeps are
+    * per namespace, so the fixed and scaled layouts of one corpus
+    * coexist, each with one live configuration (the b8 posture).
     */
-  private[graft] def ensureAnnIndex(spark: SparkSession, dir: String,
-      nCells: Int = AutoCells, subspaces: Int = 8, kSub: Int = 16,
-      maxSample: Int = 100000, sweepStale: Boolean = true): (String, String) = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val kC = resolveCells(spark, dir, nCells)
-    // The suffix carries BOTH the corpus fingerprint and the index
-    // hyperparameters: an index trained with different
-    // nCells/subspaces/kSub is not this index — without the params in
-    // the key, a caller asking for e.g. nCells = 32 would silently get
-    // 16-cell codes back and rank them against 32-cell query tables.
-    // Differently-parameterized layouts are swept as stale (one live
-    // configuration per corpus, the b8 posture).
-    val suffix = sourceFingerprint(s"$dir/embeddings.parquet") +
-      s"_${kC}c${subspaces}s${kSub}k"
-    val (codesTab, modelTab) =
-      (s"graft_ann_codes_$suffix", s"graft_ann_model_$suffix")
-    if (spark.catalog.tableExists(codesTab) && spark.catalog.tableExists(modelTab))
-      return (codesTab, modelTab)
-    // sweepStale = false is the side-corpus mode (MaintBench's temp-dir
-    // copies, throwaway spec corpora): build THIS corpus's layout
-    // without dropping another live corpus's — the one-live-
-    // configuration sweep only applies to the real corpus lifecycle.
-    if (sweepStale) {
-      dropStaleLayouts(spark, "graft_ann_codes_", suffix)
-      dropStaleLayouts(spark, "graft_ann_model_", suffix)
-    }
-    writeAnnLayout(spark, emb(spark, dir).select("vec_id", "embedding", "label"),
-      kC, subspaces, kSub, maxSample, modelTab, codesTab)
-    (codesTab, modelTab)
+  private[graft] final case class AnnLayout(dir: String, key: Storage.Layout,
+      cells: Int, subspaces: Int, kSub: Int) {
+    def codesTab: String = key.tables(0)
+    def modelTab: String = key.tables(1)
+    def tables: (String, String) = (codesTab, modelTab)
+    /** The stored (coarse, books) — see [[loadPqModel]]. */
+    def model(spark: SparkSession): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) =
+      loadPqModel(spark, modelTab, subspaces)
   }
 
-  /** The PERSISTED index of the incremental-semantic family
-    * (c2_incremental_semantic, c5_stream_semantic) at the CORPUS-SCALED
-    * cell count ([[scaledCells]], ≈ √n): those operators resolve a
-    * corpus FRACTION (the vec_id % 10 = 7 crawl slice) against the
-    * index, so their confirm cost is O((n/10) · nprobe · |cell|) —
-    * under the fixed 16-cell indexed-query layout |cell| grows linearly
-    * and the decade goes quadratic (measured: the sf10-sparse gate blew
-    * past the 500 s watchdog at 16 cells; ≈√n cells bound |cell| ≈ √n
-    * and the decade closes — BASELINE.md round 16). Lives in its OWN
-    * layout namespace (`graft_annk_*`) so it coexists with the fixed-16
-    * layout the per-query ANN operators keep (sweeps are per-prefix;
-    * the b8 one-live-configuration rule holds within each namespace).
-    * Returns (codesTab, modelTab, kCells).
-    *
-    * Maintenance posture: INCREMENTAL within a corpus generation —
-    * [[appendScaledAnnIndex]] / [[deleteFromScaledAnnIndex]] operate on
-    * this namespace (the production ingest loop appends admitted
-    * arrivals' codes per batch, never a per-batch rebuild), and the
-    * layout is additionally rebuilt from scratch whenever the corpus
-    * fingerprint changes. Retrain has no separate surgical form here
-    * BY DESIGN: the cell count itself is a function of corpus size
-    * ([[scaledCells]], a power-of-two step function, so appended
-    * growth within a step keeps |cell| ≈ √n), and once growth crosses
-    * a step the right action is the full rebuild this function already
-    * performs — a √n-cell codebook appended forever without stepping
-    * the cell count degrades toward the fixed-cell quadratic this
-    * layout exists to avoid.
-    */
-  private[graft] def ensureScaledAnnIndex(spark: SparkSession, dir: String,
-      subspaces: Int = IncSemSubspaces, maxSample: Int = 100000,
-      sweepStale: Boolean = true): (String, String, Int) = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val kCells = scaledCells(spark, dir)
-    // corpus-scaled sub-quantizer width (see [[scaledKSub]]): the ADC
-    // pre-rank consumer needs 8-bit fidelity at scale, and the cell
-    // assignment the unbounded twins read is kSub-independent
-    val kSub = scaledKSub(spark, dir)
-    val suffix = sourceFingerprint(s"$dir/embeddings.parquet") +
-      s"_${kCells}c${subspaces}s${kSub}k"
-    val (codesTab, modelTab) =
-      (s"graft_annk_codes_$suffix", s"graft_annk_model_$suffix")
-    if (spark.catalog.tableExists(codesTab) && spark.catalog.tableExists(modelTab))
-      return (codesTab, modelTab, kCells)
-    if (sweepStale) {
-      dropStaleLayouts(spark, "graft_annk_codes_", suffix)
-      dropStaleLayouts(spark, "graft_annk_model_", suffix)
-    }
-    writeAnnLayout(spark, emb(spark, dir).select("vec_id", "embedding", "label"),
-      kCells, subspaces, kSub, maxSample, modelTab, codesTab)
-    (codesTab, modelTab, kCells)
+  private[graft] object AnnLayout {
+    private def keyed(dir: String, prefix: String, cells: Int, subspaces: Int,
+        kSub: Int): AnnLayout =
+      AnnLayout(dir, Storage.layout(Seq(s"${prefix}codes_", s"${prefix}model_"),
+        Seq(s"$dir/embeddings.parquet"), s"${cells}c${subspaces}s${kSub}k"),
+        cells, subspaces, kSub)
+
+    /** The FIXED-parameter layout (`graft_ann_*`) the per-query ANN
+      * operators read (c3_ann_pq_indexed, the filtered pair, the cell and
+      * staleness monitors). Bench warms it untimed via SparkEntry.warmups.
+      */
+    def fixed(spark: SparkSession, dir: String, nCells: Int = AutoCells,
+        subspaces: Int = 8, kSub: Int = 16): AnnLayout =
+      keyed(dir, "graft_ann_", resolveCells(spark, dir, nCells), subspaces, kSub)
+
+    /** The layout of the incremental-semantic family
+      * (c2_incremental_semantic, c5_stream_semantic) at the CORPUS-SCALED
+      * cell count ([[scaledCells]], ≈ √n) and sub-quantizer width
+      * ([[scaledKSub]]: the ADC pre-rank consumer needs 8-bit fidelity at
+      * scale, and the cell assignment the unbounded twins read is
+      * kSub-independent): those operators resolve a corpus FRACTION (the
+      * vec_id % 10 = 7 crawl slice) against the index, so their confirm
+      * cost is O((n/10) · nprobe · |cell|) — under the fixed 16-cell
+      * indexed-query layout |cell| grows linearly and the decade goes
+      * quadratic (measured: the sf10-sparse gate blew past the 500 s
+      * watchdog at 16 cells; ≈√n cells bound |cell| ≈ √n and the decade
+      * closes — BASELINE.md round 16). Lives in its OWN namespace
+      * (`graft_annk_*`) so it coexists with the fixed layout.
+      *
+      * Maintenance posture: INCREMENTAL within a corpus generation —
+      * [[appendAnnIndex]] / [[deleteFromAnnIndex]] (the production ingest
+      * loop appends admitted arrivals' codes per batch, never a per-batch
+      * rebuild), and a from-scratch build whenever the corpus
+      * fingerprint changes. No surgical retrain is needed here: the cell
+      * count itself is a function of corpus size (a power-of-two step
+      * function, so appended growth within a step keeps |cell| ≈ √n),
+      * and once growth crosses a step the right action is the full
+      * rebuild a fresh key gets — a √n-cell codebook appended forever
+      * without stepping the cell count degrades toward the fixed-cell
+      * quadratic this layout exists to avoid.
+      */
+    def scaled(spark: SparkSession, dir: String,
+        subspaces: Int = IncSemSubspaces): AnnLayout =
+      keyed(dir, "graft_annk_", scaledCells(spark, dir), subspaces,
+        scaledKSub(spark, dir))
   }
 
-  /** Train a fresh codebook on `corpus`'s bounded sample, encode the
-    * corpus, and land the (model, codes) tables under the given names —
-    * the one layout-building pass shared by [[ensureAnnIndex]] (initial
-    * build) and [[retrainAnnIndex]] (staging build before the swap).
-    * Model first: a crash between the writes leaves at most a model
-    * with no codes table, which existence checks treat as absent.
+  /** Ensure `ann`'s tables exist ([[graft.sources.Storage.ensureLayout]]:
+    * build once per key, stale layouts of the namespace swept); returns
+    * `ann`. `sweepStale = false` is the side-corpus mode (MaintBench's
+    * temp-dir copies, throwaway spec corpora).
     */
+  private[graft] def ensureAnnIndex(spark: SparkSession, ann: AnnLayout,
+      sweepStale: Boolean = true): AnnLayout = {
+    Storage.ensureLayout(spark, ann.key, sweepStale) { _ =>
+      writeAnnLayout(spark, annCorpus(spark, ann), ann, ann.modelTab, ann.codesTab)
+    }
+    ann
+  }
+
   /** (Over)write a model table from a (coarse, books) pair — the
     * one model-landing pass shared by [[writeAnnLayout]] and
     * [[splitAnnCell]]'s stranded-slot rewrite. Overwrite of a tiny
@@ -764,25 +755,44 @@ object SimOps {
       .write.mode("overwrite").format("parquet").saveAsTable(modelTab)
   }
 
+  /** Train a fresh codebook with `ann`'s parameters on `corpus`'s bounded
+    * sample, encode the corpus, and land the (model, codes) tables under
+    * the given names — the one layout-building pass shared by
+    * [[ensureAnnIndex]] (initial build) and [[retrainAnnIndex]] (staging
+    * build before the swap). Model first, codes last (they mark
+    * completion).
+    */
   private def writeAnnLayout(spark: SparkSession, corpus: DataFrame,
-      nCells: Int, subspaces: Int, kSub: Int, maxSample: Int,
-      modelTab: String, codesTab: String): Unit = {
+      ann: AnnLayout, modelTab: String, codesTab: String): Unit = {
     val base = corpus
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val sample = boundedSample(base, maxSample)
-      val (coarse, books) = pqModel(sample, nCells, subspaces, kSub)
+      val sample = boundedSample(base, AnnMaxSample)
+      val (coarse, books) = pqModel(sample, ann.cells, ann.subspaces, ann.kSub)
       writeModelTable(spark, modelTab, coarse, books)
       // Filterable attributes (label) are stored INLINE with the codes —
       // the filtered-search posture: a metadata predicate restricts
       // candidates during the index scan itself, with no id join back to
       // the corpus at query time. The join happens once, at ingest.
-      pqEncodeCorpus(base, coarse, books, subspaces, residual = true)
+      pqEncodeCorpus(base, coarse, books, ann.subspaces, residual = true)
         .join(corpus.select(col("vec_id").as("b_id"), col("label")), "b_id")
         .write.mode("overwrite").format("parquet")
         .partitionBy("cell").saveAsTable(codesTab)
     } finally base.unpersist(blocking = false)
+  }
+
+  /** The vectors `ann` indexes: the corpus parquet plus `extraVectors`,
+    * raw embeddings of ids ingested via [[appendAnnIndex]] that live
+    * outside the parquet.
+    */
+  private def annCorpus(spark: SparkSession, ann: AnnLayout,
+      extraVectors: Option[DataFrame] = None): DataFrame = {
+    val live = emb(spark, ann.dir).select("vec_id", "embedding", "label")
+    extraVectors match {
+      case Some(x) => live.unionByName(x.select("vec_id", "embedding", "label"))
+      case None => live
+    }
   }
 
   /** RETRAIN the persisted IVFADC index — the EXECUTION half of the
@@ -813,8 +823,8 @@ object SimOps {
     * write; the swap is two catalog renames. Retrain cadence at 100 TB
     * is the rare, monitor-driven event; this is its cost shape.
     *
-    * Cell count under [[AutoCells]]: the PARQUET-resolved count — the
-    * same key the query path's ensure resolves, so the swap stays
+    * Cell count under [[AutoCells]]: `ann`'s PARQUET-resolved count —
+    * the same key the query path's ensure resolves, so the swap stays
     * invisible to it. An in-place retrain therefore covers drift and
     * growth WITHIN a √n scale step; growth that crosses a step arrives
     * as a corpus regeneration (the parquet fingerprint changes, every
@@ -822,26 +832,13 @@ object SimOps {
     * retraining a bigger index under the old key would make the name's
     * parameters lie about the layout.
     */
-  private[graft] def retrainAnnIndex(spark: SparkSession, dir: String,
-      extraVectors: Option[DataFrame] = None, nCells: Int = AutoCells,
-      subspaces: Int = 8, kSub: Int = 16,
-      maxSample: Int = 100000): (String, String) = {
-    import graft.sources.Storage.sourceFingerprint
-    val kC = resolveCells(spark, dir, nCells)
-    val suffix = sourceFingerprint(s"$dir/embeddings.parquet") +
-      s"_${kC}c${subspaces}s${kSub}k"
-    val (codesTab, modelTab) =
-      (s"graft_ann_codes_$suffix", s"graft_ann_model_$suffix")
+  private[graft] def retrainAnnIndex(spark: SparkSession, ann: AnnLayout,
+      extraVectors: Option[DataFrame] = None): AnnLayout = {
+    val (codesTab, modelTab) = ann.tables
     val (stCodes, stModel) = (s"${codesTab}_rt", s"${modelTab}_rt")
     spark.sql(s"DROP TABLE IF EXISTS $stCodes")
     spark.sql(s"DROP TABLE IF EXISTS $stModel")
-    val live = emb(spark, dir).select("vec_id", "embedding", "label")
-    val grown = extraVectors match {
-      case Some(x) => live.unionByName(x.select("vec_id", "embedding", "label"))
-      case None => live
-    }
-    writeAnnLayout(spark, grown, kC, subspaces, kSub, maxSample,
-      stModel, stCodes)
+    writeAnnLayout(spark, annCorpus(spark, ann, extraVectors), ann, stModel, stCodes)
     spark.sql(s"DROP TABLE IF EXISTS $modelTab")
     spark.sql(s"DROP TABLE IF EXISTS $codesTab")
     spark.sql(s"ALTER TABLE $stModel RENAME TO $modelTab")
@@ -852,20 +849,9 @@ object SimOps {
     spark.sql(s"MSCK REPAIR TABLE $codesTab")
     spark.catalog.refreshTable(modelTab)
     spark.catalog.refreshTable(codesTab)
-    (codesTab, modelTab)
+    ann
   }
 
-  /** C3h: [[c3AnnPq]] answered from the PERSISTED index — the query path
-    * reads the (cell, codes) table and the model table with ZERO train or
-    * encode stages over the corpus (pinned in PlanAuditSpec): the only
-    * corpus-sized input is the codes scan, and the only embeddings scan
-    * is the query subset (its `vec_id % queryMod` filter reaches the
-    * parquet reader). Results are identical to c3_ann_pq by construction
-    * — training is deterministic and the stored codes come from the same
-    * encode expressions — so it shares c3_ann_pq's dynamic oracle SQL.
-    * The model read collects nCells + subspaces·kSub tiny rows (constant
-    * in corpus size), the same driver-side bound as training's sample.
-    */
   /** Load the trained coarse centroids + residual codebooks back from a
     * persisted model table (nCells + subspaces·kSub tiny rows — the
     * bounded driver-side collect of the index design). Shared by the
@@ -890,8 +876,8 @@ object SimOps {
   private[graft] def scaledPqModelArrays(spark: SparkSession, dir: String,
       subspaces: Int = IncSemSubspaces)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val (_, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+    val (coarse, books) =
+      ensureAnnIndex(spark, AnnLayout.scaled(spark, dir, subspaces)).model(spark)
     (coarse.map(_.toArray).toArray, books.map(_.map(_.toArray).toArray).toArray)
   }
 
@@ -906,37 +892,16 @@ object SimOps {
     * bit-identical to what a from-scratch encode with this model would
     * produce (spec-pinned in SimOpsSpec). Duplicate ids are rejected
     * loudly — an id already in the index would silently rank twice.
+    * Filterable metadata (label) is stored inline, as in the build.
+    * On the scaled layout this is the production ingest loop's
+    * maintenance path: admitted-novel arrivals are appended so the NEXT
+    * batch resolves against them without a per-batch rebuild.
     * Returns the number of appended rows.
     */
-  private[graft] def appendAnnIndex(spark: SparkSession, dir: String,
-      newVectors: DataFrame, nCells: Int = AutoCells, subspaces: Int = 8,
-      kSub: Int = 16): Long = {
-    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    appendToLayout(spark, codesTab, modelTab, newVectors, subspaces)
-  }
-
-  /** [[appendAnnIndex]] for the SCALED layout (`graft_annk_*`) the
-    * incremental-semantic gates read — the production ingest loop's
-    * maintenance path: admitted-novel arrivals are encoded with the
-    * STORED scaled model and appended to the √n-cell inverted file, so
-    * the NEXT batch resolves against them without a per-batch rebuild
-    * (the round-17 verdict's #1 ask; rebuild cadence remains a
-    * separate, rarer retrain decision — see [[ensureScaledAnnIndex]]).
-    */
-  private[graft] def appendScaledAnnIndex(spark: SparkSession, dir: String,
-      newVectors: DataFrame, subspaces: Int = IncSemSubspaces): Long = {
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    appendToLayout(spark, codesTab, modelTab, newVectors, subspaces)
-  }
-
-  /** Layout-generic append shared by the fixed (`graft_ann_*`) and
-    * scaled (`graft_annk_*`) namespaces — see [[appendAnnIndex]] for
-    * the contract (stored-model encode bit-identity, loud duplicate
-    * rejection, inline label metadata).
-    */
-  private def appendToLayout(spark: SparkSession, codesTab: String,
-      modelTab: String, newVectors: DataFrame, subspaces: Int): Long = {
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+  private[graft] def appendAnnIndex(spark: SparkSession, ann: AnnLayout,
+      newVectors: DataFrame): Long = {
+    val codesTab = ensureAnnIndex(spark, ann).codesTab
+    val (coarse, books) = ann.model(spark)
     val base = newVectors
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
     val dup = spark.table(codesTab).select(col("b_id"))
@@ -948,7 +913,7 @@ object SimOps {
     require(newVectors.columns.contains("label"),
       "appendAnnIndex: new vectors must carry the label attribute — the " +
         "codes table stores filterable metadata inline")
-    val enc = pqEncodeCorpus(base, coarse, books, subspaces, residual = true)
+    val enc = pqEncodeCorpus(base, coarse, books, ann.subspaces, residual = true)
       .join(newVectors.select(col("vec_id").as("b_id"), col("label")), "b_id")
     val n = enc.count()
     // insertInto is positional — align to the table's physical column
@@ -975,47 +940,38 @@ object SimOps {
     * Ids not present in the index are ignored (idempotent). Returns the
     * number of removed rows.
     */
-  private[graft] def deleteFromAnnIndex(spark: SparkSession, dir: String,
-      ids: Seq[Long], nCells: Int = AutoCells, subspaces: Int = 8,
-      kSub: Int = 16): Long = {
-    val (codesTab, _) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    deleteFromLayout(spark, codesTab, ids)
-  }
-
-  /** [[deleteFromAnnIndex]] for the SCALED layout (`graft_annk_*`) —
-    * erasure/retention removal on the index the semantic gates read,
-    * same cell-pruned dynamic-partition rewrite.
-    */
-  private[graft] def deleteFromScaledAnnIndex(spark: SparkSession, dir: String,
-      ids: Seq[Long], subspaces: Int = IncSemSubspaces): Long = {
-    val (codesTab, _, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    deleteFromLayout(spark, codesTab, ids)
-  }
-
-  /** Layout-generic delete shared by both namespaces — see
-    * [[deleteFromAnnIndex]] for the contract (physical cell-partition
-    * rewrite of only the affected cells, idempotent on absent ids).
-    */
-  private def deleteFromLayout(spark: SparkSession, codesTab: String,
+  private[graft] def deleteFromAnnIndex(spark: SparkSession, ann: AnnLayout,
       ids: Seq[Long]): Long = {
+    val codesTab = ensureAnnIndex(spark, ann).codesTab
     val session = spark
     import session.implicits._
     val idsDf = ids.toDF("b_id")
-    val codes = spark.table(codesTab)
     // Affected cells: bounded by |ids| — the only corpus-sized input is
     // the (cell-pruned on write) codes scan.
-    val affected = codes.join(broadcast(idsDf), Seq("b_id"), "left_semi")
+    val affected = spark.table(codesTab).join(broadcast(idsDf), Seq("b_id"), "left_semi")
       .groupBy(col("cell").cast("int").as("cell")).agg(count(lit(1)).as("n_del"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (affected.isEmpty) return 0L
-    val cellList = affected.keys.toSeq
+    rewriteCells(spark, codesTab, affected.keys.toSeq, broadcast(idsDf))
+    affected.values.sum
+  }
+
+  /** Rewrite the `cells` partitions of `codesTab` with their rows MINUS
+    * `removeIds` (one column, `b_id`) — the physical-delete machinery of
+    * [[deleteFromAnnIndex]] and the stay-half landing of
+    * [[splitAnnCell]]'s step (3) and pending-split completion.
+    * Deterministic and idempotent (a re-run recomputes the same rows).
+    * Spark refuses to overwrite a table it is reading in the same plan,
+    * so the surviving rows of the cells stage through a temp dir (two
+    * passes over ONLY those cells), then land via dynamic partition
+    * overwrite.
+    */
+  private def rewriteCells(spark: SparkSession, codesTab: String,
+      cells: Seq[Int], removeIds: DataFrame): Unit = {
+    val codes = spark.table(codesTab)
     val survivors = codes
-      .filter(col("cell").isin(cellList: _*))
-      .join(broadcast(idsDf), Seq("b_id"), "left_anti")
-    // Spark refuses to overwrite a table it is reading in the same plan,
-    // so the surviving rows of the affected cells stage through a temp
-    // dir (two passes over ONLY those cells), then land via dynamic
-    // partition overwrite.
+      .filter(col("cell").cast("int").isin(cells: _*))
+      .join(removeIds, Seq("b_id"), "left_anti")
     val tmp = java.nio.file.Files.createTempDirectory("graft_ann_del").toString
     try {
       survivors.write.mode("overwrite").parquet(tmp)
@@ -1023,10 +979,7 @@ object SimOps {
       // one distinct pass over the staged cells, not one job per cell
       val stillPresent = back.select(col("cell").cast("int")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val emptied = cellList.filterNot(stillPresent)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
+      graft.util.SessionConf.withDynamicOverwrite(spark) {
         // Dynamic overwrite only touches partitions present in the data,
         // so a fully-emptied cell must be dropped explicitly — and it is
         // dropped BEFORE the overwrite: a crash between the two steps
@@ -1035,16 +988,13 @@ object SimOps {
         // re-applies it), never the half-applied state where the
         // overwrite landed but an emptied cell still serves its deleted
         // vectors as ghost rankings.
-        emptied.foreach(c => spark.sql(
+        cells.filterNot(stillPresent).foreach(c => spark.sql(
           s"ALTER TABLE $codesTab DROP IF EXISTS PARTITION (cell=$c)"))
-        back.select(codes.columns.map(col).toIndexedSeq: _*)
-          .write.mode("overwrite").insertInto(codesTab)
-      } finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        if (stillPresent.nonEmpty)
+          back.select(codes.columns.map(col).toIndexedSeq: _*)
+            .write.mode("overwrite").insertInto(codesTab)
       }
       spark.catalog.refreshTable(codesTab)
-      affected.values.sum
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
@@ -1069,11 +1019,11 @@ object SimOps {
     */
   def c3AnnCells(spark: SparkSession, dir: String, nCells: Int = AutoCells,
       subspaces: Int = 8, kSub: Int = 16): DataFrame = {
-    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
     // the uniform target is vs the TRAINED cell count (a tiny corpus
     // trains fewer cells than requested; a split appends one)
-    val nTrained = loadPqModel(spark, modelTab, subspaces)._1.length
-    val per = spark.table(codesTab)
+    val nTrained = ann.model(spark)._1.length
+    val per = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), min(col("b_id")).as("min_vec_id"))
@@ -1094,41 +1044,6 @@ object SimOps {
         col("skew"), col("oversized"), col("max_skew"), col("n_oversized"),
         col("rebalance"))
       .orderBy("cell")
-  }
-
-  /** Overwrite one cell partition of `codesTab` with its rows MINUS
-    * `removeIds` (column `b_id`) — the stay-half landing shared by
-    * [[splitAnnCell]]'s step (3) and its pending-split completion.
-    * Deterministic and idempotent (a re-run recomputes the same
-    * stay-half); a fully-emptied cell is dropped via its partition.
-    * Stages through a temp dir because Spark refuses to overwrite a
-    * table it reads in the same plan (the [[deleteFromAnnIndex]]
-    * machinery, single-cell form).
-    */
-  private def overwriteCellWithout(spark: SparkSession, codesTab: String,
-      cell: Int, removeIds: DataFrame): Unit = {
-    val stay = spark.table(codesTab)
-      .filter(col("cell").cast("int") === cell)
-      .join(removeIds.select(col("b_id")), Seq("b_id"), "left_anti")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_split").toString
-    try {
-      stay.write.mode("overwrite").parquet(tmp)
-      val back = spark.read.parquet(tmp)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        if (back.isEmpty)
-          spark.sql(s"ALTER TABLE $codesTab DROP IF EXISTS PARTITION (cell=$cell)")
-        else
-          back.select(spark.table(codesTab).columns.map(col).toIndexedSeq: _*)
-            .write.mode("overwrite").insertInto(codesTab)
-      } finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.catalog.refreshTable(codesTab)
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   /** SPLIT one oversized coarse cell of the persisted IVFADC index —
@@ -1157,8 +1072,8 @@ object SimOps {
     * (3) runs, a moved member ranks from both cells (duplicate
     * candidacy, never a wrong distance: both encodings decode against
     * their own cell's centroid); (3) the split cell's partition is
-    * overwritten with its stay-half (the [[deleteFromAnnIndex]]
-    * dynamic-partition machinery).
+    * overwritten with its stay-half ([[rewriteCells]], the
+    * [[deleteFromAnnIndex]] machinery).
     *
     * Crash recovery — RE-INVOKING splitAnnCell repairs every window
     * (a retry is the recovery procedure; there is no separate entry
@@ -1191,12 +1106,11 @@ object SimOps {
     * parquet (the [[retrainAnnIndex]] contract). Returns the number of
     * members moved to the new cell.
     */
-  private[graft] def splitAnnCell(spark: SparkSession, dir: String,
-      cell: Int, extraVectors: Option[DataFrame] = None, nCells: Int = AutoCells,
-      subspaces: Int = 8, kSub: Int = 16, maxSample: Int = 100000,
+  private[graft] def splitAnnCell(spark: SparkSession, ann: AnnLayout,
+      cell: Int, extraVectors: Option[DataFrame] = None,
       crashAfterStep: Int = 0): Long = {
-    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+    val (codesTab, modelTab) = ensureAnnIndex(spark, ann).tables
+    val (coarse, books) = ann.model(spark)
     require(cell >= 1 && cell <= coarse.length,
       s"splitAnnCell: cell $cell outside the codebook (1..${coarse.length})")
     // ---- pending-split detection & completion (crash windows (2)-(3)):
@@ -1215,8 +1129,7 @@ object SimOps {
     if (pendingBySrc.nonEmpty) {
       val topIds = spark.table(codesTab)
         .filter(col("cell").cast("int") === topCell).select(col("b_id"))
-      pendingBySrc.keys.foreach(src =>
-        overwriteCellWithout(spark, codesTab, src, topIds))
+      rewriteCells(spark, codesTab, pendingBySrc.keys.toSeq, topIds)
       // the pending split WAS this request: its move already landed
       pendingBySrc.get(cell) match {
         case Some(n) => return n
@@ -1231,12 +1144,8 @@ object SimOps {
     val memberIds = spark.table(codesTab)
       .filter(col("cell").cast("int") === cell)
       .select(col("b_id").as("vec_id"))
-    val live = emb(spark, dir).select("vec_id", "embedding", "label")
-    val corpus = extraVectors match {
-      case Some(x) => live.unionByName(x.select("vec_id", "embedding", "label"))
-      case None => live
-    }
-    val members = corpus.join(memberIds, Seq("vec_id"), "left_semi")
+    val members = annCorpus(spark, ann, extraVectors)
+      .join(memberIds, Seq("vec_id"), "left_semi")
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"), col("label"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1244,7 +1153,7 @@ object SimOps {
       require(nMembers >= 2L,
         s"splitAnnCell: cell $cell has $nMembers members — nothing to split")
       val children = trainCentroids(
-        boundedSample(members.select("vec_id", "embD"), maxSample), 2, iters = 5)
+        boundedSample(members.select("vec_id", "embD"), AnnMaxSample), 2, iters = 5)
       def d2(a: Seq[Double], b: Seq[Double]): Double =
         a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
       require(children.length == 2 && d2(children(0), children(1)) > 0.0,
@@ -1295,7 +1204,7 @@ object SimOps {
       // over the codebook it is given — a single centroid pins the
       // assignment to the new cell, and residuals are against it.
       val enc = pqEncodeCorpus(moved.select("vec_id", "embD"),
-          Seq(newC), books, subspaces, residual = true)
+          Seq(newC), books, ann.subspaces, residual = true)
         .withColumn("cell", lit(newCell))
         .join(moved.select(col("vec_id").as("b_id"), col("label")), "b_id")
       enc.select(spark.table(codesTab).columns.map(col).toIndexedSeq: _*)
@@ -1303,24 +1212,33 @@ object SimOps {
       if (crashAfterStep == 2)
         throw new IllegalStateException("splitAnnCell: injected crash after step (2)")
       // (3) overwrite the split cell's partition with its stay-half
-      overwriteCellWithout(spark, codesTab, cell,
-        moved.select(col("vec_id").as("b_id")))
+      rewriteCells(spark, codesTab, Seq(cell), moved.select(col("vec_id").as("b_id")))
       spark.catalog.refreshTable(modelTab)
       moved.unpersist(blocking = false)
       movedN
     } finally members.unpersist(blocking = false)
   }
 
+  /** C3h: [[c3AnnPq]] answered from the PERSISTED index — the query path
+    * reads the (cell, codes) table and the model table with ZERO train or
+    * encode stages over the corpus (pinned in PlanAuditSpec): the only
+    * corpus-sized input is the codes scan, and the only embeddings scan
+    * is the query subset (its `vec_id % queryMod` filter reaches the
+    * parquet reader). Results are identical to c3_ann_pq by construction
+    * — training is deterministic and the stored codes come from the same
+    * encode expressions — so it shares c3_ann_pq's dynamic oracle SQL.
+    * The model read collects nCells + subspaces·kSub tiny rows (constant
+    * in corpus size), the same driver-side bound as training's sample.
+    */
   def c3AnnPqIndexed(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
       queryMod: Int = 100): DataFrame = {
-    val (codesTab, modelTab) =
-      ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
+    val (coarse, books) = ann.model(spark)
     val queries = pqQueryTables(
       emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD")),
       coarse, books, subspaces, nprobe, queryMod, residual = true)
-    val corpus = spark.table(codesTab)
+    val corpus = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"), col("codes"))
     adcTopK(corpus, queries, k, subspaces)
   }
@@ -1340,14 +1258,13 @@ object SimOps {
   def c3AnnPqFiltered(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
       queryMod: Int = 100): DataFrame = {
-    val (codesTab, modelTab) =
-      ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
+    val (coarse, books) = ann.model(spark)
     val queries = pqQueryTables(
       emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD")),
       coarse, books, subspaces, nprobe, queryMod, residual = true)
       .join(emb(spark, dir).select(col("vec_id").as("q_id"), col("label")), "q_id")
-    val corpus = spark.table(codesTab)
+    val corpus = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"),
         col("codes"), col("label"))
     adcTopK(corpus, queries, k, subspaces, matchCols = Seq("cell", "label"))
@@ -1373,9 +1290,8 @@ object SimOps {
   def c3AnnPqFilteredAdaptive(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
       queryMod: Int = 100): DataFrame = {
-    val (codesTab, modelTab) =
-      ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
+    val (coarse, books) = ann.model(spark)
     val base = emb(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
     val qLab = emb(spark, dir).select(col("vec_id").as("q_id"), col("label"))
@@ -1383,7 +1299,7 @@ object SimOps {
       base, coarse, books, subspaces, nprobe, queryMod,
       residual = true)
       .join(qLab, "q_id")
-    val corpus = spark.table(codesTab)
+    val corpus = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"),
         col("codes"), col("label"))
     // labeled candidates the probed cells actually hold, per query
@@ -2144,7 +2060,7 @@ object SimOps {
         "FROM s ORDER BY cell"
     // Incremental-semantic replay: the stored SCALED codebook (≈√n
     // cells — the same [[scaledCells]] grid the engine's
-    // ensureScaledAnnIndex trains, identical by training determinism)
+    // scaled AnnLayout trains, identical by training determinism)
     // as a literal, corpus assignment (minus the batch slice), the
     // batch's nprobe=4 probe cells via the same sorted-(dist, cell)
     // slice as the ANN queries, exact-cosine confirm on candidates
@@ -2178,7 +2094,7 @@ object SimOps {
         "WHERE d.vec_id % 10 = 7 ORDER BY vec_id"
     // Bounded (_topc) incremental-semantic replay: the scaled codebook
     // AND its residual books as literals (retrained here exactly as
-    // ensureScaledAnnIndex does — the require below pins the identity),
+    // the scaled AnnLayout build does — the require below pins the identity),
     // corpus residual codes, per-arrival probe tables, round-6 ADC, the
     // GLOBAL top-c cut by (adc, b_id) — equal to the engine's per-cell
     // cut + global window because the global top-c is a subset of the
@@ -2190,7 +2106,7 @@ object SimOps {
       val mSubK = IncSemSubspaces
       val (coarseK2, booksK) = pqModel(
         boundedSample(emb(spark, dir)
-          .select(col("vec_id"), asDouble(col("embedding")).as("embD")), 100000),
+          .select(col("vec_id"), asDouble(col("embedding")).as("embD")), AnnMaxSample),
         kCells, mSubK, kSubK)
       require(coarseK2 == centsK,
         "scaled PQ coarse quantizer diverged from the scaled IVF centroids — " +
@@ -2461,8 +2377,8 @@ object SimOps {
     *    candidates are the codes table's rows for those cells — a
     *    cell-partition-PRUNED scan of (id, cell) pairs, never a corpus
     *    embedding scan (the scaled `graft_annk_*` layout carries its
-    *    own append/delete lifecycle — [[appendScaledAnnIndex]] /
-    *    [[deleteFromScaledAnnIndex]] — so the ingest loop feeds
+    *    own append/delete lifecycle — [[appendAnnIndex]] /
+    *    [[deleteFromAnnIndex]] — so the ingest loop feeds
     *    admitted arrivals back without a per-batch rebuild);
     *  - only candidates pay the exact-cosine confirm (corpus embeddings
     *    re-attached by id — O(batch · nprobe · cell), bounded), and the
@@ -2478,9 +2394,9 @@ object SimOps {
       subspaces: Int = IncSemSubspaces): DataFrame = {
     // the SCALED index (≈√n cells): the batch is a corpus fraction, so
     // the fixed-16 layout's linearly-growing cells turn the confirm
-    // join quadratic — see [[ensureScaledAnnIndex]]
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    val (coarse, _) = loadPqModel(spark, modelTab, subspaces)
+    // join quadratic — see [[AnnLayout.scaled]]
+    val ann = ensureAnnIndex(spark, AnnLayout.scaled(spark, dir, subspaces))
+    val (coarse, _) = ann.model(spark)
     val nTrained = coarse.length
     val base = emb(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
@@ -2497,7 +2413,7 @@ object SimOps {
         explode(col("probes")).as("cell"))
     // The index also holds the batch (appended as it landed) — exclude
     // it from the corpus side of the resolution.
-    val cand = spark.table(codesTab)
+    val cand = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"))
       .filter(col("b_id") % 10 =!= 7)
       .join(probed, Seq("cell"))
@@ -2546,8 +2462,8 @@ object SimOps {
       subspaces: Int = IncSemSubspaces): DataFrame = {
     // the SCALED index — the arrival stream is a corpus fraction, the
     // same quadratic-at-fixed-cells argument as the batch twin
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    val (coarse, _) = loadPqModel(spark, modelTab, subspaces)
+    val ann = ensureAnnIndex(spark, AnnLayout.scaled(spark, dir, subspaces))
+    val (coarse, _) = ann.model(spark)
     val nTrained = coarse.length
     val probed = arrivals
       .withColumn("cdists",
@@ -2561,7 +2477,7 @@ object SimOps {
         explode(col("probes")).as("cell"))
     // The index holds the full corpus (appended as it landed) — exclude
     // the arriving slice from the corpus side, as the batch twin does.
-    val corpusCodes = spark.table(codesTab)
+    val corpusCodes = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"))
       .filter(col("b_id") % 10 =!= 7)
     val baseEmb = emb(spark, dir)
@@ -2683,8 +2599,8 @@ object SimOps {
       arrivals: DataFrame, nprobe: Int = 4,
       subspaces: Int = IncSemSubspaces, excludeMod: Int = 10,
       excludeRem: Int = 7): DataFrame = {
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+    val ann = ensureAnnIndex(spark, AnnLayout.scaled(spark, dir, subspaces))
+    val (coarse, books) = ann.model(spark)
     val nTrained = coarse.length
     // Probe side, round-18 shape (guide §1.2 step 2 after step 1):
     //  - hash-repartition the arrivals BEFORE the heavy work: the
@@ -2716,7 +2632,7 @@ object SimOps {
     // The in-plan inverted file: one posting-array row per cell (the
     // index holds the arriving slice too — appended as it landed —
     // so the corpus side excludes it, as the unbounded twin does).
-    val cellCand = spark.table(codesTab)
+    val cellCand = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"), col("codes"))
       .filter(col("b_id") % excludeMod =!= excludeRem)
       .groupBy("cell")
@@ -2776,7 +2692,7 @@ object SimOps {
         col("s.adc").as("adc"), col("s.b_id").as("b_id"))
     // The exact-cosine confirm re-attaches candidate embeddings BY ID
     // from the corpus parquet; vectors ingested via
-    // [[appendScaledAnnIndex]] live outside it, so callers resolving
+    // [[appendAnnIndex]] live outside it, so callers resolving
     // against appended postings re-attach them through `extraVectors`
     // (the retrainAnnIndex / splitAnnCell contract).
     val corpusEmb = emb(spark, dir)
@@ -2837,7 +2753,7 @@ object SimOps {
     * rows, exact-cosine confirm, best surviving pick. `extraVectors`
     * re-attaches raw embeddings for index postings that live outside
     * the corpus parquet (vectors ingested via
-    * [[appendScaledAnnIndex]]) — the composed ingest-then-resolve
+    * [[appendAnnIndex]]) — the composed ingest-then-resolve
     * loop: resolve batch N, append its admitted novels, resolve batch
     * N+1 against them.
     */
@@ -2907,8 +2823,7 @@ object SimOps {
   def c3AnnStaleness(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, queryMod: Int = 100,
       maxSample: Int = 100000): DataFrame = {
-    val (_, modelTab) = ensureAnnIndex(spark, dir)
-    val (staleCents, _) = loadPqModel(spark, modelTab, subspaces = 8)
+    val (staleCents, _) = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir)).model(spark)
     val base = emb(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
     val grown = base.unionByName(base.select(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.sources.Storage
 import graft.text.LangId
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -720,80 +721,78 @@ object TextOps {
     // write) pass materializeFinal = true, which forces it before the
     // restore so even a cache-evicted recompute can never run the
     // training lineage at the restored width.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Shuffle partitions are read at ACTION time, so setting them here
+    // Shuffle partitions are read at ACTION time, so scoping them here
     // covers the initial w0 aggregate (materialized by round 1's
-    // pair-count action) and every per-round shuffle; restored with AQE.
-    sizedParts.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-    try {
-      var k = 0
-      var exhausted = false
-      while (k < rounds && !exhausted) {
-        k += 1
-        vocab = vocab.persist()
-        persisted += vocab
-        val arr = col("seq")
-        val top = vocab
-          .select(col("freq"), explode(zip_with(
-            slice(arr, lit(1), greatest(size(arr) - 1, lit(0))),
-            slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
-            (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("l"), col("r"))
-          .limit(BpeCandCap) // TakeOrdered: bounded heap, ≤candCap rows
-          .collect()
-        // round k is materialized (the top-cap action above) — the
-        // previous round's cached blocks are no longer reachable work
-        prevRound.foreach(_.unpersist(blocking = false))
-        prevRound = Some(vocab)
-        // Rank-order greedy disjointness scan: accept a pair iff neither
-        // symbol appears in any earlier-accepted pair, stopping at `cap`
-        // accepted. Pure driver logic over ≤candCap rows — replayed
-        // verbatim by the oracle's linear recursive CTE.
-        val used = scala.collection.mutable.Set[String]()
-        var nAcc = 0
-        val accepted = top.iterator
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-          .filter { case (l, r, _) =>
-            if (nAcc >= cap || used(l) || used(r)) false
-            else { used += l; used += r; nAcc += 1; true }
-          }.toSeq
-        if (accepted.isEmpty) exhausted = true
-        else {
-          accepted.zipWithIndex.foreach { case ((l, r, c), i) =>
-            merges += ((k, i + 1, l, r, l + r, c))
+    // pair-count action) and every per-round shuffle; restored with AQE
+    // after the materializeFinal force.
+    graft.util.SessionConf.withConfs(spark,
+        ("spark.sql.adaptive.enabled" -> "false") +:
+          sizedParts.map(p => "spark.sql.shuffle.partitions" -> p.toString).toSeq) {
+      try {
+        var k = 0
+        var exhausted = false
+        while (k < rounds && !exhausted) {
+          k += 1
+          vocab = vocab.persist()
+          persisted += vocab
+          val arr = col("seq")
+          val top = vocab
+            .select(col("freq"), explode(zip_with(
+              slice(arr, lit(1), greatest(size(arr) - 1, lit(0))),
+              slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
+              (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+            .agg(sum(col("freq")).as("cnt"))
+            .orderBy(col("cnt").desc, col("l"), col("r"))
+            .limit(BpeCandCap) // TakeOrdered: bounded heap, ≤candCap rows
+            .collect()
+          // round k is materialized (the top-cap action above) — the
+          // previous round's cached blocks are no longer reachable work
+          prevRound.foreach(_.unpersist(blocking = false))
+          prevRound = Some(vocab)
+          // Rank-order greedy disjointness scan: accept a pair iff neither
+          // symbol appears in any earlier-accepted pair, stopping at `cap`
+          // accepted. Pure driver logic over ≤candCap rows — replayed
+          // verbatim by the oracle's linear recursive CTE.
+          val used = scala.collection.mutable.Set[String]()
+          var nAcc = 0
+          val accepted = top.iterator
+            .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+            .filter { case (l, r, _) =>
+              if (nAcc >= cap || used(l) || used(r)) false
+              else { used += l; used += r; nAcc += 1; true }
+            }.toSeq
+          if (accepted.isEmpty) exhausted = true
+          else {
+            accepted.zipWithIndex.foreach { case ((l, r, c), i) =>
+              merges += ((k, i + 1, l, r, l + r, c))
+            }
+            vocab = vocab.select(col("word"), col("freq"),
+              mergeSeqBatch(accepted.map(t => (t._1, t._2))).as("seq"))
           }
-          vocab = vocab.select(col("word"), col("freq"),
-            mergeSeqBatch(accepted.map(t => (t._1, t._2))).as("seq"))
         }
+        // materializeFinal: force the final-round vocab's last merge pass
+        // to EXECUTE while the sized width / AQE-off confs still hold, so
+        // nothing of the training lineage can run post-restore (e.g. a
+        // recompute after executor loss evicting the cached prior round —
+        // at default width that reopens the big-vocab OOM the sizing
+        // exists to close). The count is one narrow pass over cached
+        // blocks, O(types); callers that never execute the final vocab
+        // after the loop (the merge-table query — its results were
+        // collected driver-side above) skip it. The returned cached
+        // handle becomes the final vocab itself.
+        if (materializeFinal) {
+          vocab = vocab.persist()
+          persisted += vocab
+          vocab.count()
+          prevRound.foreach(_.unpersist(blocking = false))
+          prevRound = Some(vocab)
+        }
+      } catch {
+        case e: Throwable =>
+          persisted.foreach(_.unpersist(blocking = false))
+          throw e
       }
-      // materializeFinal: force the final-round vocab's last merge pass
-      // to EXECUTE while the sized width / AQE-off confs still hold, so
-      // nothing of the training lineage can run post-restore (e.g. a
-      // recompute after executor loss evicting the cached prior round —
-      // at default width that reopens the big-vocab OOM the sizing
-      // exists to close). The count is one narrow pass over cached
-      // blocks, O(types); callers that never execute the final vocab
-      // after the loop (the merge-table query — its results were
-      // collected driver-side above) skip it. The returned cached
-      // handle becomes the final vocab itself.
-      if (materializeFinal) {
-        vocab = vocab.persist()
-        persisted += vocab
-        vocab.count()
-        prevRound.foreach(_.unpersist(blocking = false))
-        prevRound = Some(vocab)
-      }
-    } catch {
-      case e: Throwable =>
-        persisted.foreach(_.unpersist(blocking = false))
-        throw e
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     (merges.toSeq, vocab, prevRound)
   }
@@ -1123,35 +1122,31 @@ object TextOps {
     * closed-form one-pass trainer (no iteration, no matrix inversion,
     * nothing order-dependent). Idempotent; returns the model table name.
     */
-  private[graft] def ensureQualityModel(spark: SparkSession, dir: String): String = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val suffix = sourceFingerprint(s"$dir/documents.parquet")
-    val tab = s"graft_qm_$suffix"
-    if (spark.catalog.tableExists(tab)) return tab
-    dropStaleLayouts(spark, "graft_qm_", suffix)
-    val agg = qmFeatures(docs(spark, dir))
-      .groupBy("rule_keep")
-      .agg(count(lit(1)).as("cnt"), QmFeatures.map(n => sum(col(n)).as(n)): _*)
-      .collect()
-    require(agg.length == 2,
-      "quality-model training needs both keep and drop examples in the corpus")
-    def mus(keep: Boolean): Map[String, Double] = {
-      val r = agg.find(_.getBoolean(0) == keep).get
-      val cnt = r.getLong(1)
-      QmFeatures.zipWithIndex.map { case (n, i) =>
-        // same rounding as round(col, 6): HALF_UP on the IEEE quotient
-        n -> BigDecimal(r.getLong(i + 2).toDouble / cnt)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }.toMap
-    }
-    val (mk, md) = (mus(true), mus(false))
-    val session = spark
-    import session.implicits._
-    QmFeatures.map(n => (n, mk(n), md(n), mk(n) - md(n)))
-      .toDF("feature", "mu_keep", "mu_drop", "w")
-      .write.mode("overwrite").format("parquet").saveAsTable(tab)
-    tab
-  }
+  private[graft] def ensureQualityModel(spark: SparkSession, dir: String): String =
+    Storage.ensureLayout(spark, Storage.layout(
+        Seq("graft_qm_"), Seq(s"$dir/documents.parquet"))) { case Seq(tab) =>
+      val agg = qmFeatures(docs(spark, dir))
+        .groupBy("rule_keep")
+        .agg(count(lit(1)).as("cnt"), QmFeatures.map(n => sum(col(n)).as(n)): _*)
+        .collect()
+      require(agg.length == 2,
+        "quality-model training needs both keep and drop examples in the corpus")
+      def mus(keep: Boolean): Map[String, Double] = {
+        val r = agg.find(_.getBoolean(0) == keep).get
+        val cnt = r.getLong(1)
+        QmFeatures.zipWithIndex.map { case (n, i) =>
+          // same rounding as round(col, 6): HALF_UP on the IEEE quotient
+          n -> BigDecimal(r.getLong(i + 2).toDouble / cnt)
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        }.toMap
+      }
+      val (mk, md) = (mus(true), mus(false))
+      val session = spark
+      import session.implicits._
+      QmFeatures.map(n => (n, mk(n), md(n), mk(n) - md(n)))
+        .toDF("feature", "mu_keep", "mu_drop", "w")
+        .write.mode("overwrite").format("parquet").saveAsTable(tab)
+    }.head
 
   /** C4u: MODEL-BASED quality scoring — the classifier-shaped companion
     * to the rule gate (`c7_quality_filter`): a deterministic linear
@@ -1307,47 +1302,42 @@ object TextOps {
     */
   private[graft] def ensureLmRefModel(spark: SparkSession, dir: String)
       : (String, String, String, String) = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val fp = sourceFingerprint(s"$dir/documents.parquet")
-    val (unTab, bgTab, tgTab, tvTab) =
-      (s"graft_lm1_$fp", s"graft_lm2_$fp", s"graft_lm3_$fp", s"graft_lmtv_$fp")
-    if (Seq(unTab, bgTab, tgTab, tvTab).forall(spark.catalog.tableExists))
-      return (unTab, bgTab, tgTab, tvTab)
-    Seq("graft_lm1_", "graft_lm2_", "graft_lm3_", "graft_lmtv_")
-      .foreach(dropStaleLayouts(spark, _, fp))
-    val toks = split(col("text"), " ")
-    val dRef = docs(spark, dir).filter(ruleKeep)
-      .select(col("doc_id"), toks.as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      dRef.select(explode(col("toks")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("c1"))
-        .write.mode("overwrite").format("parquet").saveAsTable(unTab)
-      val n2 = greatest(size(col("toks")) - 1, lit(0))
-      dRef.select(explode(zip_with(
-          slice(col("toks"), lit(1), n2), slice(col("toks"), lit(2), n2),
-          (a, b) => struct(a.as("a"), b.as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("c2"))
-        .write.mode("overwrite").format("parquet").saveAsTable(bgTab)
-      val n3 = greatest(size(col("toks")) - 2, lit(0))
-      dRef.select(explode(zip_with(
-          zip_with(
-            slice(col("toks"), lit(1), n3), slice(col("toks"), lit(2), n3),
-            (a, b) => struct(a.as("u"), b.as("v"))),
-          slice(col("toks"), lit(3), n3),
-          (p, c) => struct(p.getField("u").as("u"),
-            p.getField("v").as("v"), c.as("w")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
-        .groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
-        .write.mode("overwrite").format("parquet").saveAsTable(tgTab)
-      // scalars LAST: their presence implies the count tables landed
-      // (the ensureDedupIndex crash-ordering convention)
-      dRef.select(explode(col("toks")).as("tok"))
-        .agg(count(lit(1)).as("t"), countDistinct(col("tok")).as("v"))
-        .write.mode("overwrite").format("parquet").saveAsTable(tvTab)
-      (unTab, bgTab, tgTab, tvTab)
-    } finally dRef.unpersist(blocking = false)
+    val Seq(un, bg, tg, tv) = Storage.ensureLayout(spark, Storage.layout(
+        Seq("graft_lm1_", "graft_lm2_", "graft_lm3_", "graft_lmtv_"),
+        Seq(s"$dir/documents.parquet"))) { case Seq(unTab, bgTab, tgTab, tvTab) =>
+      val dRef = docs(spark, dir).filter(ruleKeep)
+        .select(col("doc_id"), split(col("text"), " ").as("toks"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        dRef.select(explode(col("toks")).as("tok"))
+          .groupBy("tok").agg(count(lit(1)).as("c1"))
+          .write.mode("overwrite").format("parquet").saveAsTable(unTab)
+        val n2 = greatest(size(col("toks")) - 1, lit(0))
+        dRef.select(explode(zip_with(
+            slice(col("toks"), lit(1), n2), slice(col("toks"), lit(2), n2),
+            (a, b) => struct(a.as("a"), b.as("b")))).as("e"))
+          .select(col("e.a").as("a"), col("e.b").as("b"))
+          .groupBy("a", "b").agg(count(lit(1)).as("c2"))
+          .write.mode("overwrite").format("parquet").saveAsTable(bgTab)
+        val n3 = greatest(size(col("toks")) - 2, lit(0))
+        dRef.select(explode(zip_with(
+            zip_with(
+              slice(col("toks"), lit(1), n3), slice(col("toks"), lit(2), n3),
+              (a, b) => struct(a.as("u"), b.as("v"))),
+            slice(col("toks"), lit(3), n3),
+            (p, c) => struct(p.getField("u").as("u"),
+              p.getField("v").as("v"), c.as("w")))).as("e"))
+          .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
+          .groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
+          .write.mode("overwrite").format("parquet").saveAsTable(tgTab)
+        // scalars LAST: their presence implies the count tables landed
+        // (the Storage.ensureLayout write-order rule)
+        dRef.select(explode(col("toks")).as("tok"))
+          .agg(count(lit(1)).as("t"), countDistinct(col("tok")).as("v"))
+          .write.mode("overwrite").format("parquet").saveAsTable(tvTab)
+      } finally dRef.unpersist(blocking = false)
+    }
+    (un, bg, tg, tv)
   }
 
   /** C4s': REFERENCE-trained LM perplexity — the actual CCNet shape:
@@ -1517,6 +1507,25 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Persist the TRAINED tokenizer vocabulary as a fingerprint-keyed
+    * layout (the quality-model/ANN-codebook posture): one row per word
+    * type with its trained BPE token count. Training runs once per
+    * corpus fingerprint (Bench warms it untimed — the production shape,
+    * where a tokenizer is trained once and applied forever); the
+    * TRAINING cost itself stays timed in `c4_bpe_merges`, whose whole
+    * point is the train loop.
+    */
+  private[graft] def ensureBpeVocab(spark: SparkSession, dir: String,
+      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): String =
+    Storage.ensureLayout(spark, Storage.layout(Seq("graft_bpe_"),
+        Seq(s"$dir/documents.parquet"), s"${rounds}r${cap}c")) { case Seq(tab) =>
+      val (_, finalVocab, lastCached) =
+        bpeTrain(spark, dir, rounds, cap, materializeFinal = true)
+      finalVocab.select(col("word"), size(col("seq")).cast("long").as("n_bpe"))
+        .write.mode("overwrite").format("parquet").saveAsTable(tab)
+      lastCached.foreach(_.unpersist(blocking = false))
+    }.head
+
   /** C4q: BPE ENCODE — apply the trained merge table ([[c4BpeMerges]]'s
     * 10 rounds) to the corpus and report per-document BPE token counts
     * (plus tokens-per-word, the compression signal a tokenizer budget
@@ -1534,30 +1543,6 @@ object TextOps {
     * never a per-occurrence re-merge. Every count is exact int64; the
     * single per-doc double (bpe_per_word) is one division rounded 6dp.
     */
-  /** Persist the TRAINED tokenizer vocabulary as a fingerprint-keyed
-    * layout (the quality-model/ANN-codebook posture): one row per word
-    * type with its trained BPE token count. Training runs once per
-    * corpus fingerprint (Bench warms it untimed — the production shape,
-    * where a tokenizer is trained once and applied forever); the
-    * TRAINING cost itself stays timed in `c4_bpe_merges`, whose whole
-    * point is the train loop.
-    */
-  private[graft] def ensureBpeVocab(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): String = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val suffix = sourceFingerprint(s"$dir/documents.parquet") +
-      s"_${rounds}r${cap}c"
-    val tab = s"graft_bpe_$suffix"
-    if (spark.catalog.tableExists(tab)) return tab
-    dropStaleLayouts(spark, "graft_bpe_", suffix)
-    val (_, finalVocab, lastCached) =
-      bpeTrain(spark, dir, rounds, cap, materializeFinal = true)
-    finalVocab.select(col("word"), size(col("seq")).cast("long").as("n_bpe"))
-      .write.mode("overwrite").format("parquet").saveAsTable(tab)
-    lastCached.foreach(_.unpersist(blocking = false))
-    tab
-  }
-
   def c4BpeEncode(spark: SparkSession, dir: String,
       rounds: Int = BpeRounds, cap: Int = BpeBatchCap): DataFrame = {
     val enc = spark.table(ensureBpeVocab(spark, dir, rounds, cap))

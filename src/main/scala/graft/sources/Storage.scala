@@ -14,6 +14,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    low-cardinality derived column (e.g. event date); predicate-pruned
   *    scans read only matching directories (PartitionFilters in the scan
   *    node), the standard time-series layout.
+  *  - **Lifecycle**: every persisted layout (the b8 join tables, the ANN
+  *    and dedup indexes, the text models) is named, checked, swept and
+  *    built through [[ensureLayout]].
   *
   * The reference has no storage layer at all (inputs ride the RPC body,
   * `master.cc:270-293`; results live in master RAM, `job.h:86-88`).
@@ -68,12 +71,49 @@ object Storage {
     md.digest().take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Drop layouts (catalog tables / warehouse dirs) built for an earlier
-    * fingerprint of the same source. Superseded layouts are dead weight —
-    * the key that named them can never be derived again — so letting them
-    * accumulate across corpus regenerations leaks a full table copy each
-    * time. Called whenever a layout is (re)created.
+  /** One persisted layout's catalog identity: table `i` is named
+    * `prefixes(i) + suffix`. Each prefix is the layout's sweep namespace
+    * ([[dropStaleLayouts]]); one live suffix per prefix.
     */
+  final case class Layout(prefixes: Seq[String], suffix: String) {
+    val tables: Seq[String] = prefixes.map(_ + suffix)
+  }
+
+  /** Key a layout by what it was built from: the suffix is the
+    * [[sourceFingerprint]] of `sources` plus `_params` when the build
+    * has parameters. A regenerated source changes the fingerprint, and
+    * a layout built with other parameters (cell count, banding, bucket
+    * count) is not this layout — either way the name changes, so a
+    * stale or differently-built layout is never served.
+    */
+  def layout(prefixes: Seq[String], sources: Seq[String],
+      params: String = ""): Layout =
+    Layout(prefixes, sourceFingerprint(sources: _*) +
+      (if (params.isEmpty) "" else s"_$params"))
+
+  /** Ensure every table of `layout` exists; returns its table names.
+    * When one is missing: sweep the stale layouts of each prefix (and of
+    * `alsoSweep`, side tables keyed by the same suffix), then
+    * `build(tables)`. The sweep is skipped with `sweepStale = false` —
+    * the side-corpus mode (temp-dir copies, throwaway spec corpora) that
+    * must not drop another live corpus's layout.
+    *
+    * Write order: `build` writes the table whose presence marks
+    * completion LAST. A crash mid-build then leaves at most some tables
+    * without that one, and the all-tables check here rebuilds — a
+    * half-written layout is never served.
+    */
+  def ensureLayout(spark: SparkSession, layout: Layout,
+      sweepStale: Boolean = true, alsoSweep: Seq[String] = Nil)(
+      build: Seq[String] => Unit): Seq[String] = {
+    if (!layout.tables.forall(spark.catalog.tableExists)) {
+      if (sweepStale)
+        (layout.prefixes ++ alsoSweep).foreach(dropStaleLayouts(spark, _, layout.suffix))
+      build(layout.tables)
+    }
+    layout.tables
+  }
+
   /** STARTUP-ONLY sweep for the standalone tools that run against the
     * persistent default warehouse (MaintBench, SemTopcAccuracy): delete
     * `graft_*` layout directories a PREVIOUS process left behind. Every
@@ -98,6 +138,15 @@ object Storage {
       .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
 
+  /** Drop layouts (catalog tables / warehouse dirs) built for an earlier
+    * fingerprint or other parameters of the same source: every
+    * `prefix`-named table or directory whose name does not end in
+    * `keepSuffix`. Superseded layouts are dead weight — the key that
+    * named them can never be derived again — so letting them accumulate
+    * across corpus regenerations leaks a full table copy each time.
+    * Called by [[ensureLayout]] (and the b8 partitioned path layout)
+    * whenever a layout is (re)built.
+    */
   def dropStaleLayouts(
       spark: SparkSession, prefix: String, keepSuffix: String): Unit = {
     import scala.jdk.CollectionConverters._

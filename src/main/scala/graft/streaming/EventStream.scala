@@ -738,16 +738,8 @@ object EventStream {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") ++
       Option.when(skip)("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     statePartitionsLock.lock()
-    try {
-      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      try {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        body
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    } finally statePartitionsLock.unlock()
+    try graft.util.SessionConf.withConfs(spark, confs)(body)
+    finally statePartitionsLock.unlock()
   }
 
   /** Where [[runStream]] writes. */

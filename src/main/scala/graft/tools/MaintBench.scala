@@ -45,8 +45,9 @@ object MaintBench {
     val annDir = java.nio.file.Files.createTempDirectory("graft_maint_ann").toString
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .write.mode("overwrite").parquet(s"$annDir/embeddings.parquet")
-    val (codesTab, _) = graft.queries.SimOps.ensureAnnIndex(spark, annDir,
-      sweepStale = false)
+    val ann = graft.queries.SimOps.ensureAnnIndex(spark,
+      graft.queries.SimOps.AnnLayout.fixed(spark, annDir), sweepStale = false)
+    val codesTab = ann.codesTab
     val annIds = spark.table(codesTab).select(col("b_id"))
       .orderBy(xxhash64(col("b_id"))) // scattered across cells, deterministic
       .limit(nBatches * batchSize).collect().map(_.getLong(0))
@@ -59,7 +60,7 @@ object MaintBench {
         .join(broadcast(idsDf(batch.toSeq, "b_id")), Seq("b_id"), "left_semi")
         .select(col("cell").cast("int")).distinct().count()
       val (_, sec) = timed(
-        graft.queries.SimOps.deleteFromAnnIndex(spark, annDir, batch.toSeq))
+        graft.queries.SimOps.deleteFromAnnIndex(spark, ann, batch.toSeq))
       (sec, touched)
     }.toSeq
 

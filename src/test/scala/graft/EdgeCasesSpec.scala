@@ -185,10 +185,11 @@ class EdgeCasesSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("edge_ann_del").toString
     try {
       full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, _) = graft.queries.SimOps.ensureAnnIndex(spark, dir)
+      val ann = graft.queries.SimOps.AnnLayout.fixed(spark, dir)
+      val (codesTab, _) = graft.queries.SimOps.ensureAnnIndex(spark, ann).tables
       val before = spark.table(codesTab).count()
-      assert(graft.queries.SimOps.deleteFromAnnIndex(spark, dir, Seq.empty) == 0L)
-      assert(graft.queries.SimOps.deleteFromAnnIndex(spark, dir,
+      assert(graft.queries.SimOps.deleteFromAnnIndex(spark, ann, Seq.empty) == 0L)
+      assert(graft.queries.SimOps.deleteFromAnnIndex(spark, ann,
         Seq(Long.MaxValue - 1, Long.MaxValue)) == 0L)
       assert(spark.table(codesTab).count() == before)
     } finally {

@@ -66,7 +66,7 @@ class AdcTopCExprSpec extends SparkSuite {
     // the real per-(arrival × probed cell) frame the gate scores —
     // the builder's own posting arrays and ADC lookup tables, scored
     // through BOTH implementations and compared row by row
-    SimOps.ensureScaledAnnIndex(spark, sf)
+    SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.scaled(spark, sf))
     val probed = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
       .filter(col("vec_id") % 10 === 7)

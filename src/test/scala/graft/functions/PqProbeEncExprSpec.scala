@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 class PqProbeEncExprSpec extends SparkSuite {
 
   test("corpus: native kernel ≡ expression chain on the scaled model") {
-    val (_, modelTab, _) = SimOps.ensureScaledAnnIndex(spark, sf)
+    val modelTab = SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.scaled(spark, sf)).modelTab
     val (coarse, books) = SimOps.loadPqModel(spark, modelTab, 16)
     val arrivals = graft.Tables.load(spark, sf, "embeddings")
       .filter(col("vec_id") % 5 === 2)
@@ -46,7 +46,7 @@ class PqProbeEncExprSpec extends SparkSuite {
   }
 
   test("corpus: raw-PQ (residual=false) and nprobe=1 assignment paths match too") {
-    val (_, modelTab, _) = SimOps.ensureScaledAnnIndex(spark, sf)
+    val modelTab = SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.scaled(spark, sf)).modelTab
     val (coarse, books) = SimOps.loadPqModel(spark, modelTab, 16)
     val arrivals = graft.Tables.load(spark, sf, "embeddings")
       .filter(col("vec_id") % 7 === 0).limit(60)

@@ -115,4 +115,25 @@ class RelationalSpec extends SparkSuite {
         |   FROM graft_naaj_probe)""".stripMargin).count()
     assert(withNull == 0L, "a NULL in the NOT IN subquery must empty the result")
   }
+
+  test("b8 bucketed layout: the bucket count is part of the layout key") {
+    // A default (8-bucket) ensure, then a 4-bucket one over the same
+    // corpus: the second must build and return 4-bucket tables, never
+    // alias the existing 8-bucket pair.
+    def numBuckets(t: String): Option[Int] =
+      spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+        .bucketSpec.map(_.numBuckets)
+    val dflt = Relational.ensureB8BucketedLayout(spark, sf)
+    assert(Seq(dflt._1, dflt._2).map(numBuckets) == Seq(Some(8), Some(8)))
+    val four = Relational.ensureB8BucketedLayout(spark, sf, buckets = 4)
+    assert(Seq(four._1, four._2).map(numBuckets) == Seq(Some(4), Some(4)),
+      s"buckets = 4 returned $four")
+    // and the 4-bucket layout answers the join unchanged (the default
+    // join runs last, so the default layout is what stays behind)
+    val byPriority = Relational.b8BucketedJoin(spark, sf, buckets = 4).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(byPriority == Relational.b8BucketedJoin(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap)
+  }
 }

@@ -346,11 +346,12 @@ class SimOpsSpec extends SparkSuite {
     try {
       full.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, modelTab) = SimOps.ensureAnnIndex(spark, dir)
+      val (codesTab, modelTab) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir)).tables
       val before = spark.table(codesTab).count()
       val newVecs = full.filter(col("vec_id") % 2 =!= 0)
         .select(col("vec_id"), col("embedding"), col("label"))
-      val appended = SimOps.appendAnnIndex(spark, dir, newVecs)
+      val appended = SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir), newVecs)
       assert(appended == newVecs.count())
       assert(spark.table(codesTab).count() == before + appended)
       // appended codes == from-scratch encode with the stored model
@@ -366,7 +367,7 @@ class SimOpsSpec extends SparkSuite {
       assert(stored == expected, "appended codes diverged from the stored-model encode")
       // a second append of the same ids must be rejected
       val err = intercept[IllegalArgumentException] {
-        SimOps.appendAnnIndex(spark, dir, newVecs)
+        SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir), newVecs)
       }
       assert(err.getMessage.contains("already present"))
     } finally {
@@ -389,11 +390,12 @@ class SimOpsSpec extends SparkSuite {
     try {
       full.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, modelTab, _) = SimOps.ensureScaledAnnIndex(spark, dir)
+      val (codesTab, modelTab) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir)).tables
       val before = spark.table(codesTab).count()
       val newVecs = full.filter(col("vec_id") % 2 =!= 0)
         .select(col("vec_id"), col("embedding"), col("label"))
-      val appended = SimOps.appendScaledAnnIndex(spark, dir, newVecs)
+      val appended = SimOps.appendAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir), newVecs)
       assert(appended == newVecs.count())
       assert(spark.table(codesTab).count() == before + appended)
       val (coarse, books) = SimOps.loadPqModel(spark, modelTab, m)
@@ -408,7 +410,7 @@ class SimOpsSpec extends SparkSuite {
       assert(stored == encode(newVecs),
         "scaled append diverged from the stored-model encode")
       val err = intercept[IllegalArgumentException] {
-        SimOps.appendScaledAnnIndex(spark, dir, newVecs)
+        SimOps.appendAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir), newVecs)
       }
       assert(err.getMessage.contains("already present"))
       // delete one whole (smallest) cell plus a scattered slice
@@ -419,9 +421,11 @@ class SimOpsSpec extends SparkSuite {
       val wholeCell = byCell.filter(_._2 == victimCell).map(_._1).toSeq
       val scattered = byCell.filter(_._2 != victimCell).map(_._1)
         .filter(_ % 7 == 3).toSeq
-      val removed = SimOps.deleteFromScaledAnnIndex(spark, dir, wholeCell ++ scattered)
+      val removed = SimOps.deleteFromAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir),
+        wholeCell ++ scattered)
       assert(removed == (wholeCell ++ scattered).length)
-      assert(SimOps.deleteFromScaledAnnIndex(spark, dir, wholeCell ++ scattered) == 0L)
+      assert(SimOps.deleteFromAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir),
+        wholeCell ++ scattered) == 0L)
       val deleted = (wholeCell ++ scattered).toSet
       val survivors = spark.table(codesTab)
         .select(col("b_id"), col("cell").cast("int"), col("codes"))
@@ -439,7 +443,7 @@ class SimOpsSpec extends SparkSuite {
   test("composed ingest-then-resolve: batch N's admitted novels are batch N+1's duplicate targets") {
     // The production ingest loop over the SCALED index: resolve batch N
     // (drifted vectors — novel vs the standing corpus), append its
-    // admitted novels via appendScaledAnnIndex, then batch N+1 (near
+    // admitted novels via appendAnnIndex, then batch N+1 (near
     // twins of batch N) must resolve AGAINST THEM through the index —
     // no per-batch rebuild anywhere. extraVectors re-attaches the
     // appended vectors' raw embeddings for the exact-cosine confirm
@@ -449,7 +453,7 @@ class SimOpsSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-annk-ingest").toString
     try {
       full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      SimOps.ensureScaledAnnIndex(spark, dir)
+      SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir))
       // batch N: three drifted corpus vectors (a new mode the corpus
       // never had), ids in a fresh range ≢ 7 (mod 10) so the gates'
       // corpus-side slice exclusion keeps them
@@ -463,7 +467,7 @@ class SimOpsSpec extends SparkSuite {
       val resolvedN = SimOps.resolveSemanticTopc(spark, dir, arr(batchN)).collect()
       assert(resolvedN.length == 3 && resolvedN.forall(_.getBoolean(1)),
         s"batch N should be novel vs the corpus: ${resolvedN.mkString(";")}")
-      assert(SimOps.appendScaledAnnIndex(spark, dir, batchN) == 3L)
+      assert(SimOps.appendAnnIndex(spark, SimOps.AnnLayout.scaled(spark, dir), batchN) == 3L)
       // batch N+1: exact twins of batch N under fresh ids — duplicates
       // OF BATCH N, resolvable only through the appended postings
       val batchN1 = batchN.select(
@@ -505,14 +509,15 @@ class SimOpsSpec extends SparkSuite {
       full.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dirA/embeddings.parquet")
       full.write.mode("overwrite").parquet(s"$dirB/embeddings.parquet")
-      val (codesA, modelA) = SimOps.ensureAnnIndex(spark, dirA, nc)
+      val (codesA, modelA) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dirA, nc)).tables
       def results(dir: String) = SimOps.c3AnnPqIndexed(spark, dir, nCells = nc)
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
       // 1. SAME-corpus retrain: deterministic training → identical
       // codebook → the swap is invisible to the query path
       val before = results(dirA)
-      SimOps.retrainAnnIndex(spark, dirA, nCells = nc)
+      SimOps.retrainAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dirA, nc))
       assert(results(dirA) == before,
         "same-corpus retrain changed c3_ann_pq_indexed results")
       // staging tables are gone after the swap
@@ -523,8 +528,8 @@ class SimOpsSpec extends SparkSuite {
       // over the full corpus, model and codes both
       val batch = full.filter(col("vec_id") % 2 =!= 0)
         .select(col("vec_id"), col("embedding"), col("label"))
-      SimOps.appendAnnIndex(spark, dirA, batch, nCells = nc)
-      SimOps.retrainAnnIndex(spark, dirA, Some(batch), nCells = nc)
+      SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dirA, nc), batch)
+      SimOps.retrainAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dirA, nc), Some(batch))
       def codesContent(t: String) = spark.table(t)
         .select(col("b_id"), col("cell").cast("int"), col("codes"), col("label"))
         .collect().map(r => (r.getLong(0), r.getInt(1),
@@ -536,7 +541,8 @@ class SimOpsSpec extends SparkSuite {
       // one live configuration and sweeps dirA's tables as stale
       val (retrainedCodes, retrainedModel, retrainedResults) =
         (codesContent(codesA), modelContent(modelA), results(dirA))
-      val (codesB, modelB) = SimOps.ensureAnnIndex(spark, dirB, nc)
+      val (codesB, modelB) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dirB, nc)).tables
       assert(retrainedModel == modelContent(modelB),
         "retrained codebook diverged from the from-scratch model")
       assert(retrainedCodes == codesContent(codesB),
@@ -562,8 +568,9 @@ class SimOpsSpec extends SparkSuite {
     try {
       full.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, modelTab) = SimOps.ensureAnnIndex(spark, dir)
-      SimOps.appendAnnIndex(spark, dir,
+      val (codesTab, modelTab) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir)).tables
+      SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir),
         full.filter(col("vec_id") % 2 =!= 0)
           .select(col("vec_id"), col("embedding"), col("label")))
       // delete every id of one whole cell (exercises the partition-drop
@@ -575,10 +582,12 @@ class SimOpsSpec extends SparkSuite {
       val wholeCell = byCell.filter(_._2 == victimCell).map(_._1).toSeq
       val scattered = byCell.filter(_._2 != victimCell).map(_._1)
         .filter(_ % 7 == 3).toSeq
-      val removed = SimOps.deleteFromAnnIndex(spark, dir, wholeCell ++ scattered)
+      val removed = SimOps.deleteFromAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir),
+        wholeCell ++ scattered)
       assert(removed == (wholeCell ++ scattered).length)
       // idempotent: deleting the same ids again removes nothing
-      assert(SimOps.deleteFromAnnIndex(spark, dir, wholeCell ++ scattered) == 0L)
+      assert(SimOps.deleteFromAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir),
+        wholeCell ++ scattered) == 0L)
       // survivors == from-scratch encode of the surviving corpus with
       // the stored model (bit-identical codes, same cells)
       val deleted = (wholeCell ++ scattered).toSet
@@ -609,7 +618,8 @@ class SimOpsSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-cells").toString
     try {
       full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, modelTab) = SimOps.ensureAnnIndex(spark, dir)
+      val (codesTab, modelTab) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir)).tables
       def monitor() = SimOps.c3AnnCells(spark, dir).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(4), r.getBoolean(5),
           r.getDouble(6), r.getBoolean(8)))
@@ -623,7 +633,7 @@ class SimOpsSpec extends SparkSuite {
         transform(col("embedding").cast("array<double>"), x => x + lit(2.0d))
           .as("embedding"),
         col("label"))
-      SimOps.appendAnnIndex(spark, dir, batch)
+      SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir), batch)
       val after = monitor()
       assert(after.exists(_._4), "appended drift created no oversized cell")
       assert(after.forall(_._6), "rebalance verdict did not fire")
@@ -637,7 +647,8 @@ class SimOpsSpec extends SparkSuite {
         .collect().map(r => (r.getLong(0), r.getSeq[Int](1).toSeq, r.getInt(2))).toSet
       val preVictimRows = cellRows(victim)
       val totalBefore = spark.table(codesTab).count()
-      val movedN = SimOps.splitAnnCell(spark, dir, victim, Some(batch))
+      val movedN = SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dir),
+        victim, Some(batch))
       // surgical: total preserved, one new centroid, moved rows all in
       // the fresh cell, the stay-half byte-identical
       assert(movedN > 0L && movedN < victimBefore._2)
@@ -697,13 +708,14 @@ class SimOpsSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-rebal").toString
     try {
       full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, modelTab) = SimOps.ensureAnnIndex(spark, dir)
+      val (codesTab, modelTab) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir)).tables
       // engineered drift: a dense appended mode crams into few cells
       val batch = full.select((col("vec_id") + lit(1L << 40)).as("vec_id"),
         transform(col("embedding").cast("array<double>"), x => x + lit(2.0d))
           .as("embedding"),
         col("label"))
-      SimOps.appendAnnIndex(spark, dir, batch)
+      SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir), batch)
       // the GROWN corpus, driver-side (sf0.001: 1000 vectors)
       val baseArr = full.select(col("vec_id"), col("embedding").cast("array<double>"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
@@ -751,7 +763,8 @@ class SimOpsSpec extends SparkSuite {
         .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(5), r.getBoolean(8)))
       assert(mon.exists(_._4), "monitor did not call for a rebalance")
       val victim = mon.filter(_._3).maxBy(_._2)._1
-      val moved = SimOps.splitAnnCell(spark, dir, victim, Some(batch))
+      val moved = SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dir),
+        victim, Some(batch))
       assert(moved > 0L)
       val (scanPost, recallPost) = annEval()
       // the split must pay for itself: probed-candidate cost strictly
@@ -785,8 +798,9 @@ class SimOpsSpec extends SparkSuite {
       col("label"))
     // the same oversized-victim setup as the clean-split spec
     def prep(dir: String): (String, String, Int) = {
-      val (codesTab, modelTab) = SimOps.ensureAnnIndex(spark, dir)
-      SimOps.appendAnnIndex(spark, dir, drift)
+      val (codesTab, modelTab) =
+        SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir)).tables
+      SimOps.appendAnnIndex(spark, SimOps.AnnLayout.fixed(spark, dir), drift)
       val victim = spark.table(codesTab)
         .groupBy(col("cell").cast("int").as("cell")).count()
         .orderBy(col("count").desc, col("cell")).head().getInt(0)
@@ -805,7 +819,8 @@ class SimOpsSpec extends SparkSuite {
     try {
       // reference: the end state of a CLEAN split on a twin corpus
       val (codesC, modelC, victim) = prep(dirClean)
-      val cleanMoved = SimOps.splitAnnCell(spark, dirClean, victim, Some(drift))
+      val cleanMoved = SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirClean),
+        victim, Some(drift))
       val cleanState = stateOf(codesC)
       val cleanCoarse = SimOps.loadPqModel(spark, modelC, subspaces = 8)._1
 
@@ -815,7 +830,7 @@ class SimOpsSpec extends SparkSuite {
       assert(victim2 == victim, "twin corpora diverged — setup bug")
       val totalBefore = spark.table(codes2).count()
       intercept[IllegalStateException] {
-        SimOps.splitAnnCell(spark, dirCrash2, victim, Some(drift),
+        SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirCrash2), victim, Some(drift),
           crashAfterStep = 2)
       }
       assert(dupIds(codes2) == cleanMoved,
@@ -823,7 +838,8 @@ class SimOpsSpec extends SparkSuite {
       assert(spark.table(codes2).count() == totalBefore + cleanMoved)
       // retry: completes step (3) for THIS split — no second centroid,
       // no re-encode, end state identical to the clean split's
-      val retried = SimOps.splitAnnCell(spark, dirCrash2, victim, Some(drift))
+      val retried = SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirCrash2),
+        victim, Some(drift))
       assert(retried == cleanMoved)
       assert(dupIds(codes2) == 0L, "duplicate candidacy survived the retry")
       assert(SimOps.loadPqModel(spark, model2, subspaces = 8)._1 == cleanCoarse,
@@ -835,14 +851,15 @@ class SimOpsSpec extends SparkSuite {
       // retry re-derives the same centroid and REUSES the empty entry
       val (codes1, model1, _) = prep(dirCrash1)
       intercept[IllegalStateException] {
-        SimOps.splitAnnCell(spark, dirCrash1, victim, Some(drift),
+        SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirCrash1), victim, Some(drift),
           crashAfterStep = 1)
       }
       val coarseAfterCrash1 = SimOps.loadPqModel(spark, model1, subspaces = 8)._1
       assert(coarseAfterCrash1 == cleanCoarse,
         "step-(1) crash state should already hold the appended centroid")
       assert(dupIds(codes1) == 0L)
-      val retried1 = SimOps.splitAnnCell(spark, dirCrash1, victim, Some(drift))
+      val retried1 = SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirCrash1),
+        victim, Some(drift))
       assert(retried1 == cleanMoved)
       assert(SimOps.loadPqModel(spark, model1, subspaces = 8)._1 == cleanCoarse,
         "retry after a step-(1) crash appended a duplicate centroid")
@@ -855,14 +872,15 @@ class SimOpsSpec extends SparkSuite {
       val (codesS, modelS, victimS) = prep(dirStrand)
       assert(victimS == victim)
       intercept[IllegalStateException] {
-        SimOps.splitAnnCell(spark, dirStrand, victim, Some(drift),
+        SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirStrand), victim, Some(drift),
           crashAfterStep = 1)
       }
       val other = spark.table(codesS)
         .groupBy(col("cell").cast("int").as("cell")).count()
         .filter(col("cell") =!= victim)
         .orderBy(col("count").desc, col("cell")).head().getInt(0)
-      val movedOther = SimOps.splitAnnCell(spark, dirStrand, other, Some(drift))
+      val movedOther = SimOps.splitAnnCell(spark, SimOps.AnnLayout.fixed(spark, dirStrand),
+        other, Some(drift))
       assert(movedOther > 0L)
       val coarseS = SimOps.loadPqModel(spark, modelS, subspaces = 8)._1
       assert(coarseS.length == cleanCoarse.length,
@@ -984,9 +1002,9 @@ class SimOpsSpec extends SparkSuite {
     val batch = vecs.keySet.filter(_ % 10 == 7)
     assert(out.map(_._1).toSet == batch && out.length == batch.size)
     // ground truth: probe cells from the STORED model (the SCALED index
-    // this family reads — ensureScaledAnnIndex, round 16), exact cosine
+    // this family reads — AnnLayout.scaled, round 16), exact cosine
     // over the probed corpus cells
-    val (_, modelTab, _) = SimOps.ensureScaledAnnIndex(spark, sf)
+    val modelTab = SimOps.ensureAnnIndex(spark, SimOps.AnnLayout.scaled(spark, sf)).modelTab
     val (coarse, _) = SimOps.loadPqModel(spark, modelTab, subspaces = 8)
     def d2(v: Array[Double], c: Seq[Double]): Double =
       v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum
