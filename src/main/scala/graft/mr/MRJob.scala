@@ -37,7 +37,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   * Both kernels order keys by their UTF-8 bytes (the reference's
   * `std::string <`; Spark's binary string order) and, within a key, the
-  * values by `String` order.
+  * values by [[ValueOrder]] (nulls first, then `String` order).
   *
   * Documented deviation (SURVEY.md §2.1 note 3): within a key, the
   * reference presents values in map-subjob emission order, which is not
@@ -121,7 +121,7 @@ object MRJob {
           .groupByKey(_._1) // O6 shuffle replaces the master-side merge
           .flatMapGroups { (k, it) =>
             val values = it.map(_._2).toArray
-            java.util.Arrays.sort(values.asInstanceOf[Array[AnyRef]])
+            java.util.Arrays.sort(values, ValueOrder)
             // Keep (key, emissionIndex) so the final order is fully defined.
             reduceFn(k, scala.collection.immutable.ArraySeq.unsafeWrapArray(values))
               .iterator.zipWithIndex.map { case (out, i) => (k, i, out) }
@@ -247,7 +247,7 @@ object MRJob {
         if (combineFn.isDefined) Seq(groups.get(k).asInstanceOf[String])
         else {
           val arr = groups.get(k).asInstanceOf[scala.collection.mutable.ArrayBuffer[String]].toArray
-          java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]])
+          java.util.Arrays.sort(arr, ValueOrder)
           scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
         }
       out ++= reduceFn(k, values).iterator.map(asSparkString)
@@ -284,6 +284,12 @@ object MRJob {
         else x - y
       }
     }
+
+  /** Values within a key, in both kernels: nulls first, as Spark's
+    * ascending sort places them, then `String` order.
+    */
+  private[mr] val ValueOrder: java.util.Comparator[String] =
+    java.util.Comparator.nullsFirst(java.util.Comparator.naturalOrder[String]())
 
   private def liftSurrogate(c: Char): Int = if (c >= 0xE000) c - 0x800 else c + 0x2000
 

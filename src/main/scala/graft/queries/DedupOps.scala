@@ -297,9 +297,7 @@ object DedupOps {
           .hint("shuffle_hash"), "a_id")
         .join(vecs.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
           .hint("shuffle_hash"), "b_id")
-        .withColumn("cosine",
-          round(SimOps.dotD(col("a_emb"), col("b_emb")) /
-            (SimOps.normD(col("a_emb")) * SimOps.normD(col("b_emb"))), 6))
+        .withColumn("cosine", SimOps.cosine6(col("a_emb"), col("b_emb")))
         .filter(col("cosine") >= threshold)
         .select("a_id", "b_id", "cosine")
         .orderBy("a_id", "b_id"),
@@ -678,13 +676,30 @@ object DedupOps {
       Seq(newBase))
   }
 
+  /** Shared SemDeDup construction: the cell-assigned corpus (persisted —
+    * released by the caller) and the within-cell cosine-threshold edge
+    * list `(a_id < b_id)`.
+    */
+  private def semanticParts(spark: SparkSession, dir: String,
+      threshold: Double): (DataFrame, DataFrame) = {
+    // Corpus-scaled cell count (k ≈ √n, power-of-two grid): keeps the
+    // within-cell pair generation O(n·√n̄) instead of O(n²/16) — the
+    // SemDeDup recipe's cell growth, shared with c3_knn_join and
+    // replayed by the dynamic oracle from the same function.
+    val assigned = SimOps.scaledCellCorpus(spark, dir)
+    val edges = SimOps.cellPairs(assigned, col("a_id") < col("b_id"))
+      .filter(col("cosine") >= threshold)
+      .select("a_id", "b_id")
+    (assigned, edges)
+  }
+
   /** C2f: SEMANTIC dedup (the public SemDeDup recipe): cluster the
     * embedding space with the SAME deterministically-trained k-means
     * codebook as the IVF ANN operators, then resolve near-duplicates only
     * WITHIN each cluster (cosine ≥ `threshold`, keep the smallest id — one
     * min-propagation round, the c2_minhash_lsh posture applied to
     * embedding space). Training is the bounded driver sample
-    * (SimOps.ivfCentroids — constant cost at any corpus size); assignment
+    * (SimOps.scaledCellCorpus — constant cost at any corpus size); assignment
     * is one narrow argmin per row; the pair join shuffles on the cell id
     * only. Within-cell pair generation is O(Σ|cell|²) — the inherent
     * SemDeDup cost; at 100 TB the cell count scales with the corpus
@@ -693,40 +708,6 @@ object DedupOps {
     * Output `(vec_id, cell, cluster_rep, is_kept)` — O(n), hash-checked
     * end-to-end by a dynamic oracle embedding the trained centroids.
     */
-  /** Shared SemDeDup construction: the cell-assigned corpus (persisted —
-    * released by the caller) and the within-cell cosine-threshold edge
-    * list `(a_id < b_id)`.
-    */
-  private def semanticParts(spark: SparkSession, dir: String,
-      threshold: Double): (DataFrame, DataFrame) = {
-    val base = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
-    // Corpus-scaled cell count (k ≈ √n, power-of-two grid): keeps the
-    // within-cell pair generation O(n·√n̄) instead of O(n²/16) — the
-    // SemDeDup recipe's cell growth, shared with c3_knn_join and
-    // replayed by the dynamic oracle from the same function.
-    val cents = SimOps.ivfCentroids(spark, dir,
-      nCells = SimOps.scaledCells(spark, dir))
-    val assigned = base
-      .withColumn("dists",
-        graft.functions.VectorExprs.centroidDists(col("embD"), cents))
-      .withColumn("cell",
-        expr("array_position(dists, array_min(dists))").cast("int"))
-      .select(col("vec_id"), col("embD"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = assigned
-      .select(col("cell"), col("vec_id").as("a_id"), col("embD").as("a_emb"))
-      .join(assigned.select(col("cell"), col("vec_id").as("b_id"),
-        col("embD").as("b_emb")), Seq("cell"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cosine",
-        round(SimOps.dotD(col("a_emb"), col("b_emb")) /
-          (SimOps.normD(col("a_emb")) * SimOps.normD(col("b_emb"))), 6))
-      .filter(col("cosine") >= threshold)
-      .select("a_id", "b_id")
-    (assigned, edges)
-  }
-
   def c2SemanticDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.35): DataFrame = {
     val (assigned, edges) = semanticParts(spark, dir, threshold)

@@ -34,6 +34,10 @@ object SimOps {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
 
+  /** The embeddings table as (vec_id, embD: array<double>). */
+  private def embVecs(spark: SparkSession, dir: String): DataFrame =
+    emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+
   /** Sequential-fold dot product — native codegen'd Expression
     * (graft.functions.DotProductD); same fold order as the HOF form and
     * the DuckDB oracle, ~an order of magnitude faster (no per-element
@@ -54,6 +58,60 @@ object SimOps {
     sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
 
   private def asDouble(a: Column): Column = a.cast("array<double>")
+
+  /** The cosine every ANN, semantic-dedup and semantic-gate query ranks
+    * and thresholds on: rounded to 6 dp, the value the oracle hashes,
+    * and rounded BEFORE any rank window so fold-order drift between
+    * engines cannot flip a rank.
+    */
+  private[graft] def cosine6(a: Column, b: Column): Column =
+    round(dotD(a, b) / (normD(a) * normD(b)), 6)
+
+  /** The IVF cell a vector is assigned to, from its squared-L2 `dists`
+    * to the codebook: the 1-based FIRST minimum (the tie-break the
+    * Scala-side [[nearestCell]] and the oracle's `list_position` share).
+    */
+  private[graft] def assignCell(dists: Column): Column =
+    array_position(dists, array_min(dists)).cast("int")
+
+  /** The `nprobe` cells a query probes, nearest first: the (dist, cell)
+    * structs sorted ascending, cut to the first `nprobe`. Indices run
+    * over `nTrained`, the TRAINED codebook length, NOT the requested
+    * cell count — on a corpus smaller than the request the codebook is
+    * shorter (one cell per vector), and a zip against a longer index
+    * list would null-pad: the null-distance structs sort FIRST and
+    * every probe would be a phantom cell (silently empty results).
+    */
+  private[graft] def probeCells(dists: Column, nTrained: Int, nprobe: Int): Column =
+    slice(transform(array_sort(zip_with(dists, sequence(lit(1), lit(nTrained)),
+      (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
+      lit(1), lit(math.min(nprobe, nTrained)))
+
+  /** Rank `scored` rows per `key` by (cosine desc, b_id) and keep rank ≤ k. */
+  private def rankByCosine(scored: DataFrame, k: Int, key: String = "q_id"): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(Window.partitionBy(col(key))
+        .orderBy(col("cosine").desc, col("b_id"))))
+      .filter(col("rank") <= k)
+
+  /** The ANN rescore tail: distinct (q_id, b_id) candidate `pairs` get
+    * their corpus vectors back through an explicit shuffle hash join on
+    * id against `vecs` (vec_id, embD) — so no plan ever replicates the
+    * full embeddings table to every executor — and only then their
+    * query vectors, through a broadcast of the `isQ` rows (genuinely
+    * small, the filtered side), so the shuffle carries id pairs, not
+    * query vectors; then [[cosine6]] and the per-query top-k.
+    * Output (q_id, rank, b_id, cosine), unordered.
+    */
+  private def rescoreTopK(pairs: DataFrame, vecs: DataFrame, isQ: Column,
+      k: Int): DataFrame =
+    rankByCosine(pairs
+      .join(vecs.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
+        .hint("shuffle_hash"), "b_id")
+      .join(broadcast(vecs.filter(isQ)
+        .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
+      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb"))), k)
+      .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
 
   /** Benchmark instantiation of a caller-supplied query table: the first
     * [[MaxQueries]] multiples of `queryMod`. The cap is what makes the
@@ -77,6 +135,17 @@ object SimOps {
   private def queryPredSql(queryMod: Int, ref: String = "vec_id"): String =
     s"$ref % $queryMod = 0 AND $ref < ${queryMod.toLong * MaxQueries}"
 
+  /** Exact-cosine top-k join shared by the brute-force and kNN-vote
+    * queries: broadcast the (small-by-contract) query side, theta-join
+    * on q_id <> b_id, score at round-6, rank per query by (cosine desc,
+    * b_id). Keeps every column of both inputs plus (cosine, rank) so
+    * callers can carry labels through.
+    */
+  private def exactCosineTopK(corpus: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    rankByCosine(corpus.join(broadcast(queries), col("q_id") =!= col("b_id"))
+      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb"))), k)
+
   /** C3a: exact cosine top-k (k=5) of every corpus vector for each query
     * vector. Scores rounded to 6 decimals; ties broken by neighbor id in
     * both engines.
@@ -87,22 +156,6 @@ object SimOps {
     * production the query side is whatever small DataFrame the caller
     * passes; only its smallness matters (it is the broadcast side).
     */
-  /** Exact-cosine top-k join shared by the brute-force and kNN-vote
-    * queries: broadcast the (small-by-contract) query side, theta-join
-    * on q_id <> b_id, score at round-6, rank per query by (cosine desc,
-    * b_id). Keeps every column of both inputs plus (cosine, rank) so
-    * callers can carry labels through.
-    */
-  private def exactCosineTopK(corpus: DataFrame, queries: DataFrame,
-      k: Int): DataFrame =
-    corpus.join(broadcast(queries), col("q_id") =!= col("b_id"))
-      .withColumn("cosine",
-        round(dotD(col("q_emb"), col("b_emb")) /
-          (normD(col("q_emb")) * normD(col("b_emb"))), 6))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cosine").desc, col("b_id"))))
-      .filter(col("rank") <= k)
-
   def c3CosineTopK(spark: SparkSession, dir: String, k: Int = 5,
       queryMod: Int = 100): DataFrame = {
     val corpus = emb(spark, dir)
@@ -139,9 +192,7 @@ object SimOps {
       .filter(isQuery(col("vec_id"), queryMod))
       .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
     corpus.join(broadcast(queries), col("q_id") =!= col("b_id"))
-      .withColumn("cosine",
-        round(dotD(col("q_emb"), col("b_emb")) /
-          (normD(col("q_emb")) * normD(col("b_emb"))), 6))
+      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb")))
       .filter(col("cosine") >= tau)
       .select(col("q_id"), col("b_id"), col("cosine"))
       .orderBy("q_id", "b_id")
@@ -250,8 +301,7 @@ object SimOps {
     // Persisted (scoped): the sketch is consumed by the corpus side, the
     // query side, and the score re-attach joins (see DedupOps
     // .c2EmbedNearDup); CacheScope releases it after materialization.
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+    val base = embVecs(spark, dir)
       .withColumn("buckets", lshBuckets(col("embD"), tables, bits))
 
     // Bucket-membership rows carry ids only — embeddings re-attach after
@@ -271,28 +321,22 @@ object SimOps {
       .withColumnRenamed("pos", "tbl")
       .select(col("q_id"), col("tbl"), explode(col("col")).as("bucket"))
 
+    // Dedup candidates on ids only (cheap shuffle rows), then re-attach
+    // vectors for scoring: the query subset by broadcast, the corpus by
+    // shuffle hash join. Unlike [[rescoreTopK]], the query vectors join
+    // BEFORE the corpus shuffle (which then carries them): this plan is
+    // the perfbench `queries` baseline, so moving it onto the shared
+    // tail is a benchmark change.
     val scored = corpus.join(broadcast(queries), Seq("tbl", "bucket"))
       .filter(col("q_id") =!= col("b_id"))
-      // Dedup candidates on ids only (cheap shuffle rows), then re-attach
-      // vectors for scoring. Broadcast ONLY the query subset (genuinely
-      // small — it is the filtered side); the corpus side re-attaches via
-      // an explicit shuffle hash join on id so no plan ever materializes
-      // the full embeddings table on every executor.
       .select(col("q_id"), col("b_id")).distinct()
       .join(broadcast(base.filter(isQuery(col("vec_id"), queryMod))
         .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
       .join(base.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
         .hint("shuffle_hash"), "b_id")
-      .withColumn("cosine",
-        round(dotD(col("q_emb"), col("b_emb")) /
-          (normD(col("q_emb")) * normD(col("b_emb"))), 6))
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("b_id"))
+      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb")))
     graft.util.CacheScope.releaseAfterMaterialize(
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      rankByCosine(scored, k)
         .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
         .orderBy("q_id", "rank"),
       Seq(base))
@@ -366,78 +410,56 @@ object SimOps {
       .select(col("embD")).as[Seq[Double]].collect().map(_.toArray)
   }
 
+  /** The IVF training call: `cells` Lloyd centroids (5 iterations) on the
+    * [[AnnMaxSample]]-bounded sample of `base` (vec_id, embD) — the one
+    * recipe behind every coarse codebook, so a query and its dynamic
+    * oracle train the identical plan literal.
+    */
+  private def coarseCodebook(base: DataFrame, cells: Int): Seq[Seq[Double]] =
+    trainCentroids(boundedSample(base, AnnMaxSample), cells, iters = 5)
+
+  /** IVF candidates: every `vecs` (vec_id, embD) row assigned to its
+    * nearest `cents` cell, each `isQ` row probing its `nprobe` nearest
+    * cells (broadcast — the small query side), joined on the cell.
+    * Distinct (q_id, b_id) id pairs, q_id ≠ b_id.
+    */
+  private def ivfCandidates(vecs: DataFrame, isQ: Column,
+      cents: Seq[Seq[Double]], nprobe: Int): DataFrame = {
+    // squared L2 to each centroid — native fused pass (CentroidDists),
+    // same fold order as the HOF form (asserted in VectorExprsSpec).
+    def withDists(df: DataFrame): DataFrame = df.withColumn("dists",
+      graft.functions.VectorExprs.centroidDists(col("embD"), cents))
+    val corpus = withDists(vecs)
+      .select(col("vec_id").as("b_id"), assignCell(col("dists")).as("cell"))
+    val queries = withDists(vecs.filter(isQ))
+      .select(col("vec_id").as("q_id"),
+        explode(probeCells(col("dists"), cents.length, nprobe)).as("cell"))
+    corpus.join(broadcast(queries), Seq("cell"))
+      .filter(col("q_id") =!= col("b_id"))
+      .select("q_id", "b_id").distinct()
+  }
+
   /** C3d: ANN via IVF (inverted file): coarse k-means cells trained on a
-    * deterministic bounded sample (≤ `maxSample` rows on the driver, a
-    * constant independent of corpus size), corpus assigned to its nearest
-    * cell (one narrow HOF argmin per row — no shuffle), queries probe the
-    * `nprobe` nearest cells. At 100 TB: training stays sample-sized,
-    * assignment is embarrassingly parallel, and each query touches
-    * nprobe/nCells of the corpus. Rows-only driver check; recall and the
-    * sample bound asserted in SimOpsSpec.
+    * deterministic bounded sample (≤ [[AnnMaxSample]] rows on the driver,
+    * a constant independent of corpus size), corpus assigned to its
+    * nearest cell (one narrow HOF argmin per row — no shuffle), queries
+    * probe the `nprobe` nearest cells. At 100 TB: training stays
+    * sample-sized, assignment is embarrassingly parallel, and each query
+    * touches nprobe/nCells of the corpus. Rows-only driver check; recall
+    * and the sample bound asserted in SimOpsSpec.
     */
   def c3AnnIvf(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, queryMod: Int = 100,
-      maxSample: Int = 100000): DataFrame = {
+      nCells: Int = AutoCells, nprobe: Int = 4, queryMod: Int = 100): DataFrame = {
     // Persisted: read once, consumed by the sample collect (a
     // construction-time action — hence the explicit persist BEFORE it),
     // corpus/query cell assignment, and the score re-attach joins;
     // CacheScope releases it after the result materializes.
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+    val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sample = boundedSample(base, maxSample)
-    val centroids = trainCentroids(sample, resolveCells(spark, dir, nCells),
-      iters = 5)
-
-    // squared L2 to each centroid — native fused pass (CentroidDists),
-    // same fold order as the HOF form (asserted in VectorExprsSpec).
-    def dists(v: Column): Column =
-      graft.functions.VectorExprs.centroidDists(v, centroids)
-
-    val corpus = base
-      .withColumn("dists", dists(col("embD")))
-      .withColumn("cell", expr("array_position(dists, array_min(dists))").cast("int"))
-      .select(col("vec_id").as("b_id"), col("embD").as("b_emb"), col("cell"))
-
-    // queries probe the nprobe nearest cells: sort (dist, idx) structs.
-    // Indices run over centroids.length, NOT the requested nCells — on a
-    // corpus smaller than nCells the trained codebook is shorter (one
-    // cell per vector), and a zip against the longer literal would
-    // null-pad: the null-distance structs sort FIRST and every probe
-    // would be a phantom cell (silently empty results).
-    val nTrained = centroids.length
-    val queries = base.filter(isQuery(col("vec_id"), queryMod))
-      .withColumn("dists", dists(col("embD")))
-      .withColumn("probes",
-        slice(transform(array_sort(zip_with(
-          col("dists"), sequence(lit(1), lit(nTrained)),
-          (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
-          lit(1), lit(math.min(nprobe, nTrained))))
-      .select(col("vec_id").as("q_id"), col("embD").as("q_emb"),
-        explode(col("probes")).as("cell"))
-
-    // Same re-attach posture as c3AnnLsh: broadcast only the small query
-    // subset; the corpus side joins by shuffle so nothing corpus-sized is
-    // ever replicated to executors.
-    val scored = corpus.drop("b_emb")
-      .join(broadcast(queries.select(col("q_id"), col("cell"))), Seq("cell"))
-      .filter(col("q_id") =!= col("b_id"))
-      .select("q_id", "b_id").distinct()
-      .join(broadcast(base.filter(isQuery(col("vec_id"), queryMod))
-        .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
-      .join(base.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
-        .hint("shuffle_hash"), "b_id")
-      .withColumn("cosine",
-        round(dotD(col("q_emb"), col("b_emb")) /
-          (normD(col("q_emb")) * normD(col("b_emb"))), 6))
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("b_id"))
+    val centroids = coarseCodebook(base, resolveCells(spark, dir, nCells))
+    val isQ = isQuery(col("vec_id"), queryMod)
     graft.util.CacheScope.releaseAfterMaterialize(
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
+      rescoreTopK(ivfCandidates(base, isQ, centroids, nprobe), base, isQ, k)
         .orderBy("q_id", "rank"),
       Seq(base))
   }
@@ -495,37 +517,6 @@ object SimOps {
     (coarse, pqBooks(residuals, subspaces, kSub))
   }
 
-  /** C3g: ANN via IVF-PQ with residual encoding (IVFADC, Jégou et al.
-    * 2011 — public literature, PAPERS.md): IVF cells generate candidates
-    * exactly as [[c3AnnIvf]]; candidates are then ranked by the
-    * ASYMMETRIC DISTANCE (ADC) — the sum over `subspaces` per-subspace
-    * codebook table lookups — computed entirely from each vector's
-    * compressed CODE (one small int per subspace). Both sides quantize
-    * the RESIDUAL against the coarse centroid of the vector's cell
-    * (queries: of each probed cell), so the codebooks only have to span
-    * the within-cell displacement — the published method, and measurably
-    * better recall than raw-vector PQ at the same 8-byte code
-    * (spec-asserted in SimOpsSpec). The raw embeddings are never touched
-    * at query time: at 100 TB the query-side state is `subspaces` bytes
-    * per corpus vector plus a per-(query, probe) distance table, the
-    * memory posture that lets an ANN index fit in RAM at all. Every
-    * arithmetic step (residual subtraction, per-subspace squared-L2
-    * tables, argmin code assignment, the left-to-right ADC fold) is
-    * replayed bit-identically by the dynamic oracle with the trained
-    * codebooks embedded as literals — the full IVF-PQ pipeline is
-    * hash-checked, not just spot-sampled.
-    *
-    * @param residual false = quantize raw vectors (pre-IVFADC form); kept
-    *        for the recall A/B in SimOpsSpec, not declared as a query.
-    */
-  /** Corpus-side IVFADC encoding of `base` (vec_id, embD): nearest
-    * coarse cell + per-subspace argmin codes of the cell residual
-    * (1-based, matching SQL list_position). The encoded row is
-    * (b_id, cell, codes) — the raw vector is dropped before anything
-    * query-side happens. Shared by the in-plan query (c3_ann_pq) and the
-    * persisted index builder ([[ensureAnnIndex]]), so the stored layout
-    * is bit-identical to what the in-plan query computes.
-    */
   /** The IVFADC encode EXPRESSIONS, built once and shared by the
     * corpus encoder and the query-table builder: the persisted-index
     * contract (c3_ann_pq_indexed shares c3_ann_pq's oracle) requires
@@ -545,6 +536,14 @@ object SimOps {
       else v
   }
 
+  /** Corpus-side IVFADC encoding of `base` (vec_id, embD): nearest
+    * coarse cell + per-subspace argmin codes of the cell residual
+    * (1-based, matching SQL list_position). The encoded row is
+    * (b_id, cell, codes) — the raw vector is dropped before anything
+    * query-side happens. Shared by the in-plan query (c3_ann_pq) and the
+    * persisted index builder ([[ensureAnnIndex]]), so the stored layout
+    * is bit-identical to what the in-plan query computes.
+    */
   private[queries] def pqEncodeCorpus(base: DataFrame, coarse: Seq[Seq[Double]],
       books: Seq[Seq[Seq[Double]]], subspaces: Int,
       residual: Boolean): DataFrame =
@@ -570,8 +569,8 @@ object SimOps {
       books: Seq[Seq[Seq[Double]]], subspaces: Int, nprobe: Int,
       queryMod: Int, residual: Boolean): DataFrame = {
     // probe indices run over coarse.length — the TRAINED cell count, which
-    // the kernel derives from the model itself; see c3AnnIvf's nTrained
-    // comment (null-padded zip = phantom probes).
+    // the kernel derives from the model itself; see [[probeCells]]
+    // (null-padded zip = phantom probes).
     // One native PqProbeEnc kernel per query row (probe ranking +
     // residual + per-probe tables fused; bit-identity to the old
     // expression chain spec-pinned in PqProbeEncExprSpec).
@@ -595,8 +594,8 @@ object SimOps {
     * ranking on the raw double would make the hash depend on DuckDB's
     * list_sum reproducing Spark's left-to-right fold bit-for-bit — a
     * sub-1e-6 near-tie from a different summation order would flip ranks.
-    */
-  /** `matchCols` are the candidate-join keys: `cell` alone is the plain
+    *
+    * `matchCols` are the candidate-join keys: `cell` alone is the plain
     * IVF probe; adding an attribute column (both sides must carry it)
     * restricts candidates to matching metadata DURING the probe — the
     * pre-filter form of filtered vector search.
@@ -623,14 +622,35 @@ object SimOps {
       .orderBy("q_id", "rank")
   }
 
+  /** C3g: ANN via IVF-PQ with residual encoding (IVFADC, Jégou et al.
+    * 2011 — public literature, PAPERS.md): IVF cells generate candidates
+    * exactly as [[c3AnnIvf]]; candidates are then ranked by the
+    * ASYMMETRIC DISTANCE (ADC) — the sum over `subspaces` per-subspace
+    * codebook table lookups — computed entirely from each vector's
+    * compressed CODE (one small int per subspace). Both sides quantize
+    * the RESIDUAL against the coarse centroid of the vector's cell
+    * (queries: of each probed cell), so the codebooks only have to span
+    * the within-cell displacement — the published method, and measurably
+    * better recall than raw-vector PQ at the same 8-byte code
+    * (spec-asserted in SimOpsSpec). The raw embeddings are never touched
+    * at query time: at 100 TB the query-side state is `subspaces` bytes
+    * per corpus vector plus a per-(query, probe) distance table, the
+    * memory posture that lets an ANN index fit in RAM at all. Every
+    * arithmetic step (residual subtraction, per-subspace squared-L2
+    * tables, argmin code assignment, the left-to-right ADC fold) is
+    * replayed bit-identically by the dynamic oracle with the trained
+    * codebooks embedded as literals — the full IVF-PQ pipeline is
+    * hash-checked, not just spot-sampled.
+    *
+    * @param residual false = quantize raw vectors (pre-IVFADC form); kept
+    *        for the recall A/B in SimOpsSpec, not declared as a query.
+    */
   def c3AnnPq(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100, maxSample: Int = 100000,
-      residual: Boolean = true): DataFrame = {
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+      queryMod: Int = 100, residual: Boolean = true): DataFrame = {
+    val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sample = boundedSample(base, maxSample)
+    val sample = boundedSample(base, AnnMaxSample)
     val kC = resolveCells(spark, dir, nCells)
     val (coarse, books) =
       if (residual) pqModel(sample, kC, subspaces, kSub)
@@ -643,7 +663,7 @@ object SimOps {
       adcTopK(corpus, queries, k, subspaces), Seq(base))
   }
 
-  /** Training-sample bound of every persisted ANN build (the codebook
+  /** Training-sample bound of every ANN codebook (in-plan, persisted,
     * and a split's 2-means). It is not in the layout key, so it is not a
     * parameter either: a layout trained on another sample would be
     * served under the same name.
@@ -1152,8 +1172,7 @@ object SimOps {
       val nMembers = members.count()
       require(nMembers >= 2L,
         s"splitAnnCell: cell $cell has $nMembers members — nothing to split")
-      val children = trainCentroids(
-        boundedSample(members.select("vec_id", "embD"), AnnMaxSample), 2, iters = 5)
+      val children = coarseCodebook(members.select("vec_id", "embD"), 2)
       def d2(a: Seq[Double], b: Seq[Double]): Double =
         a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
       require(children.length == 2 && d2(children(0), children(1)) > 0.0,
@@ -1236,8 +1255,7 @@ object SimOps {
     val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
     val (coarse, books) = ann.model(spark)
     val queries = pqQueryTables(
-      emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD")),
-      coarse, books, subspaces, nprobe, queryMod, residual = true)
+      embVecs(spark, dir), coarse, books, subspaces, nprobe, queryMod, residual = true)
     val corpus = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"), col("codes"))
     adcTopK(corpus, queries, k, subspaces)
@@ -1261,8 +1279,7 @@ object SimOps {
     val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
     val (coarse, books) = ann.model(spark)
     val queries = pqQueryTables(
-      emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD")),
-      coarse, books, subspaces, nprobe, queryMod, residual = true)
+      embVecs(spark, dir), coarse, books, subspaces, nprobe, queryMod, residual = true)
       .join(emb(spark, dir).select(col("vec_id").as("q_id"), col("label")), "q_id")
     val corpus = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"),
@@ -1292,8 +1309,7 @@ object SimOps {
       queryMod: Int = 100): DataFrame = {
     val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
     val (coarse, books) = ann.model(spark)
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+    val base = embVecs(spark, dir)
     val qLab = emb(spark, dir).select(col("vec_id").as("q_id"), col("label"))
     val q1 = pqQueryTables(
       base, coarse, books, subspaces, nprobe, queryMod,
@@ -1342,46 +1358,41 @@ object SimOps {
     * assignment, blocking, scoring and rank bit-for-bit.
     */
   def c3KnnJoin(spark: SparkSession, dir: String, m: Int = 3): DataFrame = {
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
-    val cents = ivfCentroids(spark, dir, nCells = scaledCells(spark, dir))
-    // Persisted: both sides of the within-cell self-join scan it.
-    val assigned = base
-      .withColumn("dists",
-        graft.functions.VectorExprs.centroidDists(col("embD"), cents))
-      .withColumn("cell",
-        expr("array_position(dists, array_min(dists))").cast("int"))
-      .select(col("vec_id"), col("embD"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = assigned
-      .select(col("cell"), col("vec_id").as("a_id"), col("embD").as("a_emb"))
-      .join(assigned.select(col("cell"), col("vec_id").as("b_id"),
-        col("embD").as("b_emb")), Seq("cell"))
-      .filter(col("a_id") =!= col("b_id"))
-      .withColumn("cosine",
-        round(dotD(col("a_emb"), col("b_emb")) /
-          (normD(col("a_emb")) * normD(col("b_emb"))), 6))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("cosine").desc, col("b_id"))
+    val assigned = scaledCellCorpus(spark, dir)
     graft.util.CacheScope.releaseAfterMaterialize(
-      cand.withColumn("rank", row_number().over(w).cast("int"))
-        .filter(col("rank") <= m)
+      rankByCosine(cellPairs(assigned, col("a_id") =!= col("b_id")), m, key = "a_id")
         .select(col("a_id"), col("rank"), col("b_id"), col("cosine"))
         .orderBy("a_id", "rank"),
       Seq(assigned))
   }
 
-  /** C3e: driver-checked ANN quality — recall@k of the sign-LSH ANN
-    * against the exact brute-force top-k, per query, with an in-plan
-    * bound claim (the b2_agg_approx pattern): `recall_ok` = recall ≥
-    * 0.6, DuckDB supplies literal TRUE — if multi-probe LSH quality
-    * ever drifts below the bound the hash mismatches and the driver
-    * flags it. 0.6 is the tight portable bound: measured per-query
-    * minima are 0.6 / 0.8 / 0.6 at sf0.001 / 0.01 / 0.1 (means 0.72 /
-    * 0.96 / 0.91; SimOpsSpec asserts the mean separately).
-    * Scale posture: both inputs are the ANN and brute-force plans
-    * themselves; the recall join moves (q_id, b_id) id pairs only.
+  /** The corpus (vec_id, embD, cell) assigned to the corpus-scaled
+    * codebook ([[scaledCells]]) — the blocking of the every-vector-is-a-
+    * query operators (c3_knn_join, the c2_semantic_dedup pair).
+    * Persisted, since both sides of [[cellPairs]] scan it; the caller
+    * releases it.
     */
+  private[queries] def scaledCellCorpus(spark: SparkSession, dir: String): DataFrame = {
+    val cents = ivfCentroids(spark, dir, nCells = scaledCells(spark, dir))
+    embVecs(spark, dir)
+      .withColumn("dists",
+        graft.functions.VectorExprs.centroidDists(col("embD"), cents))
+      .withColumn("cell", assignCell(col("dists")))
+      .select(col("vec_id"), col("embD"), col("cell"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Within-cell pairs of an assigned corpus: (cell, a_id, a_emb, b_id,
+    * b_emb, cosine) for every same-cell pair `keep` admits.
+    */
+  private[queries] def cellPairs(assigned: DataFrame, keep: Column): DataFrame =
+    assigned
+      .select(col("cell"), col("vec_id").as("a_id"), col("embD").as("a_emb"))
+      .join(assigned.select(col("cell"), col("vec_id").as("b_id"),
+        col("embD").as("b_emb")), Seq("cell"))
+      .filter(keep)
+      .withColumn("cosine", cosine6(col("a_emb"), col("b_emb")))
+
   /** Per-query hit counts of `ann` against the brute-force top-k: one
     * row per query with `n_hits` = |ann ∩ brute-force| (0 for queries
     * the ANN missed entirely). Shared by both recall queries; the
@@ -1407,6 +1418,17 @@ object SimOps {
       Seq(bfp))
   }
 
+  /** C3e: driver-checked ANN quality — recall@k of the sign-LSH ANN
+    * against the exact brute-force top-k, per query, with an in-plan
+    * bound claim (the b2_agg_approx pattern): `recall_ok` = recall ≥
+    * 0.6, DuckDB supplies literal TRUE — if multi-probe LSH quality
+    * ever drifts below the bound the hash mismatches and the driver
+    * flags it. 0.6 is the tight portable bound: measured per-query
+    * minima are 0.6 / 0.8 / 0.6 at sf0.001 / 0.01 / 0.1 (means 0.72 /
+    * 0.96 / 0.91; SimOpsSpec asserts the mean separately).
+    * Scale posture: both inputs are the ANN and brute-force plans
+    * themselves; the recall join moves (q_id, b_id) id pairs only.
+    */
   def c3AnnRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
     recallHits(
       c3AnnLsh(spark, dir, k).select(col("q_id"), col("b_id")),
@@ -1464,11 +1486,10 @@ object SimOps {
     */
   def c3AnnPqRecall(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100, maxSample: Int = 100000): DataFrame = {
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+      queryMod: Int = 100): DataFrame = {
+    val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (coarse, books) = pqModel(boundedSample(base, maxSample),
+    val (coarse, books) = pqModel(boundedSample(base, AnnMaxSample),
       resolveCells(spark, dir, nCells), subspaces, kSub)
     val corpusCodes = pqEncodeCorpus(base, coarse, books, subspaces, residual = true)
     val queries = pqQueryTables(
@@ -1599,18 +1620,15 @@ object SimOps {
     * (the [[Exact]] money discipline applied to distances), so the
     * cross-engine hash can never drift with partial-agg visit order.
     */
-  def c3ClusterProfile(spark: SparkSession, dir: String, nCells: Int = AutoCells,
-      maxSample: Int = 100000): DataFrame = {
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
+  def c3ClusterProfile(spark: SparkSession, dir: String,
+      nCells: Int = AutoCells): DataFrame = {
+    val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = trainCentroids(boundedSample(base, maxSample),
-      resolveCells(spark, dir, nCells), iters = 5)
+    val centroids = coarseCodebook(base, resolveCells(spark, dir, nCells))
     val assigned = base
       .withColumn("dists",
         graft.functions.VectorExprs.centroidDists(col("embD"), centroids))
-      .select(col("vec_id"),
-        expr("array_position(dists, array_min(dists))").cast("int").as("cell"),
+      .select(col("vec_id"), assignCell(col("dists")).as("cell"),
         round(array_min(col("dists")), 6).cast("decimal(20,6)").as("d2"))
     graft.util.CacheScope.releaseAfterMaterialize(
       assigned.groupBy("cell")
@@ -1703,27 +1721,9 @@ object SimOps {
     * by SimOpsSpec (determinism + sample bound), not the oracle.
     */
   private[queries] def ivfCentroids(spark: SparkSession, dir: String,
-      nCells: Int = AutoCells, maxSample: Int = 100000): Seq[Seq[Double]] = {
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
-    trainCentroids(boundedSample(base, maxSample),
-      resolveCells(spark, dir, nCells), iters = 5)
-  }
+      nCells: Int = AutoCells): Seq[Seq[Double]] =
+    coarseCodebook(embVecs(spark, dir), resolveCells(spark, dir, nCells))
 
-  /** Corpus-scaled cell count for the EVERY-vector-is-a-query operators
-    * (c3_knn_join, c2_semantic_dedup): the smallest power of two ≥ √n,
-    * floored at 16. Their within-cell blocking cost is O(Σ|cell|²) =
-    * O(n²/k) under uniform cells, so a FIXED k turns the 10× corpus
-    * decade into ~100×/k per cell — the measured 8.7× sf1 decade at the
-    * old fixed 16. Growing k ≈ √n keeps expected |cell| ≈ √n and total
-    * pairs O(n·√n̄) — the published SemDeDup posture, now code rather
-    * than prose. Power-of-two grid: the count is a stable step function
-    * of n (a few appended docs don't retrain a different codebook), and
-    * the dynamic oracle calls this same function so it replays the
-    * identical codebook. The query-subset ANN operators keep their
-    * fixed coarse codebook (their cost is per-query, not per-pair, and
-    * the persisted-index fingerprint keys on the cell count).
-    */
   /** Sentinel default of every `nCells` parameter in the ANN family:
     * 0 = "corpus-scaled" — resolved to [[scaledCells]] (≈√n, the
     * power-of-two grid) by [[resolveCells]] at the functions that
@@ -1742,6 +1742,19 @@ object SimOps {
       nCells: Int): Int =
     if (nCells == AutoCells) scaledCells(spark, dir) else nCells
 
+  /** Corpus-scaled cell count for the EVERY-vector-is-a-query operators
+    * (c3_knn_join, c2_semantic_dedup): the smallest power of two ≥ √n,
+    * floored at 16. Their within-cell blocking cost is O(Σ|cell|²) =
+    * O(n²/k) under uniform cells, so a FIXED k turns the 10× corpus
+    * decade into ~100×/k per cell — the measured 8.7× sf1 decade at the
+    * old fixed 16. Growing k ≈ √n keeps expected |cell| ≈ √n and total
+    * pairs O(n·√n̄) — the published SemDeDup posture, now code rather
+    * than prose. Power-of-two grid: the count is a stable step function
+    * of n (a few appended docs don't retrain a different codebook), and
+    * the dynamic oracle calls this same function so it replays the
+    * identical codebook. The query-subset ANN operators reach the same
+    * count through [[AutoCells]].
+    */
   private[graft] def scaledCells(spark: SparkSession, dir: String): Int = {
     val n = corpusVecCount(spark, dir)
     val target = math.ceil(math.sqrt(n.toDouble)).toLong
@@ -1839,9 +1852,7 @@ object SimOps {
     val (mSub, kSub) = (8, 16)
     val sub = 64 / mSub
     val (coarsePq, books) = pqModel(
-      boundedSample(emb(spark, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("embD")), 100000),
-      kCells, mSub, kSub)
+      boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, mSub, kSub)
     require(coarsePq == cents,
       "PQ coarse quantizer diverged from the IVF centroids — the shared " +
         "ivfCandCtes would replay the wrong cells")
@@ -2105,9 +2116,7 @@ object SimOps {
       val kSubK = scaledKSub(spark, dir)
       val mSubK = IncSemSubspaces
       val (coarseK2, booksK) = pqModel(
-        boundedSample(emb(spark, dir)
-          .select(col("vec_id"), asDouble(col("embedding")).as("embD")), AnnMaxSample),
-        kCells, mSubK, kSubK)
+        boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, mSubK, kSubK)
       require(coarseK2 == centsK,
         "scaled PQ coarse quantizer diverged from the scaled IVF centroids — " +
           "the topc replay would embed the wrong codebook")
@@ -2180,13 +2189,7 @@ object SimOps {
     // re-scoring, exact ground truth, integer-sum means and the retrain
     // verdict all replay in SQL.
     val staleSql = {
-      val grownDf = emb(spark, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
-      val grownAll = grownDf.unionByName(grownDf.select(
-        (col("vec_id") + lit(DriftIdOffset)).as("vec_id"),
-        transform(col("embD"), x => x + lit(2.0d)).as("embD")))
-      val fresh = trainCentroids(boundedSample(grownAll, 100000), kCells,
-        iters = 5)
+      val fresh = coarseCodebook(grownCorpus(spark, dir), kCells)
       val nF = fresh.length
       def codebook(tag: String, lit: String, nn: Int): String =
         s"ct$tag AS (SELECT $lit AS c), " +
@@ -2391,55 +2394,24 @@ object SimOps {
     */
   def c2IncrementalSemantic(spark: SparkSession, dir: String,
       threshold: Double = IncSemThreshold, nprobe: Int = 4,
-      subspaces: Int = IncSemSubspaces): DataFrame = {
-    // the SCALED index (≈√n cells): the batch is a corpus fraction, so
-    // the fixed-16 layout's linearly-growing cells turn the confirm
-    // join quadratic — see [[AnnLayout.scaled]]
-    val ann = ensureAnnIndex(spark, AnnLayout.scaled(spark, dir, subspaces))
-    val (coarse, _) = ann.model(spark)
-    val nTrained = coarse.length
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
-    val isNew = col("vec_id") % 10 === 7
-    val probed = base.filter(isNew)
-      .withColumn("cdists",
-        graft.functions.VectorExprs.centroidDists(col("embD"), coarse))
-      .withColumn("probes",
-        slice(transform(array_sort(zip_with(
-          col("cdists"), sequence(lit(1), lit(nTrained)),
-          (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
-          lit(1), lit(math.min(nprobe, nTrained))))
-      .select(col("vec_id").as("n_id"), col("embD").as("n_emb"),
-        explode(col("probes")).as("cell"))
-    // The index also holds the batch (appended as it landed) — exclude
-    // it from the corpus side of the resolution.
-    val cand = spark.table(ann.codesTab)
-      .select(col("b_id"), col("cell").cast("int").as("cell"))
-      .filter(col("b_id") % 10 =!= 7)
-      .join(probed, Seq("cell"))
-      .select(col("n_id"), col("n_emb"), col("b_id"))
-    import graft.functions.VectorExprs.{dot, norm}
-    val scored = cand
-      .join(base.select(col("vec_id").as("b_id"), col("embD").as("b_emb")),
-        "b_id")
-      .withColumn("cosine", round(dot(col("n_emb"), col("b_emb")) /
-        (norm(col("n_emb")) * norm(col("b_emb"))), 6))
-      .filter(col("cosine") >= threshold)
-    val best = scored.groupBy(col("n_id"))
-      .agg(min(struct((-col("cosine")).as("nc"), col("b_id").as("bid"))).as("b"))
-      .select(col("n_id").as("vec_id"), col("b.bid").as("match_id"),
-        (-col("b.nc")).as("match_cosine"))
-    base.filter(isNew).select(col("vec_id"))
-      .join(best, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("match_id").isNull.as("is_novel"),
-        col("match_id"), col("match_cosine"))
+      subspaces: Int = IncSemSubspaces): DataFrame =
+    // The gate's left joins keep every arrival, so the best pick is one
+    // aggregate: min (-cosine, b_id) over the rows with a match; an
+    // arrival with none is novel.
+    semanticGateCandidates(spark, dir,
+        embVecs(spark, dir).filter(col("vec_id") % 10 === 7), threshold, nprobe, subspaces)
+      .groupBy(col("n_id").as("vec_id"))
+      .agg(min(when(col("cosine").isNotNull,
+        struct((-col("cosine")).as("nc"), col("b_id").as("bid")))).as("b"))
+      .select(col("vec_id"), col("b").isNull.as("is_novel"),
+        col("b.bid").as("match_id"), (-col("b.nc")).as("match_cosine"))
       .orderBy("vec_id")
-  }
 
-  /** Per-candidate scored plan of the STREAMING semantic admission gate
-    * (c5_stream_semantic) — [[c2IncrementalSemantic]]'s probe/confirm
-    * machinery factored over a caller-supplied `arrivals` frame
-    * (streaming or batch; columns `vec_id`, `embD: array<double>`).
+  /** Per-candidate scored plan of the unbounded semantic admission gate,
+    * over a caller-supplied `arrivals` frame (streaming or batch; columns
+    * `vec_id`, `embD: array<double>`) — the one probe/confirm definition
+    * behind both the batch [[c2IncrementalSemantic]] and the streaming
+    * c5_stream_semantic.
     * Every join here is stream-static when `arrivals` streams: the
     * arriving vector assigns to its `nprobe` nearest STORED coarse
     * cells (the persisted codebook as a plan literal), candidates come
@@ -2449,42 +2421,30 @@ object SimOps {
     * arrival with no candidate still reaches the decision fold as
     * novel; below-threshold cosines are nulled HERE so the fold
     * downstream is a pure max — the threshold contract stays in one
-    * place, and `threshold` is the same knob the batch twin
-    * [[c2IncrementalSemantic]] takes (one shared default,
-    * [[IncSemThreshold]], so a non-default batch threshold has a
-    * matching stream rendering instead of silently losing the
-    * stream/batch equivalence the oracle reuse rests on). One row per
-    * (arrival × probed candidate), bounded by nprobe · cell size per
-    * arrival.
+    * place. One row per (arrival × probed candidate), bounded by
+    * nprobe · cell size per arrival.
     */
   private[graft] def semanticGateCandidates(spark: SparkSession, dir: String,
       arrivals: DataFrame, threshold: Double = IncSemThreshold, nprobe: Int = 4,
       subspaces: Int = IncSemSubspaces): DataFrame = {
-    // the SCALED index — the arrival stream is a corpus fraction, the
-    // same quadratic-at-fixed-cells argument as the batch twin
+    // the SCALED index (≈√n cells): the arrivals are a corpus fraction,
+    // so the fixed-16 layout's linearly-growing cells turn the confirm
+    // join quadratic — see [[AnnLayout.scaled]]
     val ann = ensureAnnIndex(spark, AnnLayout.scaled(spark, dir, subspaces))
     val (coarse, _) = ann.model(spark)
-    val nTrained = coarse.length
     val probed = arrivals
       .withColumn("cdists",
         graft.functions.VectorExprs.centroidDists(col("embD"), coarse))
-      .withColumn("probes",
-        slice(transform(array_sort(zip_with(
-          col("cdists"), sequence(lit(1), lit(nTrained)),
-          (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
-          lit(1), lit(math.min(nprobe, nTrained))))
       .select(col("vec_id").as("n_id"), col("embD").as("n_emb"),
-        explode(col("probes")).as("cell"))
+        explode(probeCells(col("cdists"), coarse.length, nprobe)).as("cell"))
     // The index holds the full corpus (appended as it landed) — exclude
-    // the arriving slice from the corpus side, as the batch twin does.
+    // the arriving slice from the corpus side of the resolution.
     val corpusCodes = spark.table(ann.codesTab)
       .select(col("b_id"), col("cell").cast("int").as("cell"))
       .filter(col("b_id") % 10 =!= 7)
     val baseEmb = emb(spark, dir)
       .select(col("vec_id").as("b_id"), asDouble(col("embedding")).as("b_emb"))
-    import graft.functions.VectorExprs.{dot, norm}
-    val cos = round(dot(col("n_emb"), col("b_emb")) /
-      (norm(col("n_emb")) * norm(col("b_emb"))), 6)
+    val cos = cosine6(col("n_emb"), col("b_emb"))
     probed
       .join(corpusCodes, Seq("cell"), "left")
       .join(baseEmb, Seq("b_id"), "left")
@@ -2542,38 +2502,6 @@ object SimOps {
     */
   private[graft] val IncSemSubspaces = 16
 
-  /** Per-candidate scored plan of the BOUNDED (`_topc`) semantic
-    * family — [[c2IncrementalSemanticTopc]] and c5_stream_semantic_topc
-    * share this builder verbatim, so the batch and stream twins cannot
-    * drift. The unbounded family's confirm cost is O(arrival · nprobe ·
-    * |cell|) exact cosines — with |cell| ≈ √n that is the one
-    * super-linear decade left (10.9×/16× per 10×, BASELINE.md round
-    * 16). Here the stored PQ CODES pre-rank each (arrival, probed cell)
-    * pair list by ADC distance — `subspaces` table lookups per
-    * candidate, no embedding touched — and only the per-cell top-`topc`
-    * survivors reach the exact-cosine join, capping it at
-    * nprobe·topc ≈ 256 rows per arrival REGARDLESS of corpus size (the
-    * engine's bound, not the corpus's). The global top-`topc` by
-    * (adc, b_id) is a subset of the per-cell top-`topc` union, so the
-    * caller's final truncation (batch: one rank window over ≤
-    * nprobe·topc slim rows; stream: the decision fold's in-memory sort)
-    * is EXACT — and the approximation (ADC mis-ranking a true match out
-    * of the top-c, on top of IVF probe misses) is itself hash-checked:
-    * the dynamic oracle replays codebook, codes, ADC, the top-c cut and
-    * the confirm bit-for-bit.
-    *
-    * Plan shape: the static side rolls the cell-pruned codes table into
-    * one (cell → candidate array) row per cell (|cell| ≈ √n structs —
-    * the in-plan inverted-file posting list), the arrival side carries
-    * its per-probe ADC lookup tables (the [[pqQueryTables]] residual
-    * arithmetic via the shared [[PqEncExprs]]), and the pre-rank is a
-    * narrow transform/sort/slice per row — every join stream-static
-    * when `arrivals` streams. LEFT joins + explode_outer keep
-    * zero-candidate arrivals alive to the decision; `b_id`/`adc` are
-    * always the true values (the downstream truncation sorts on them),
-    * while below-`threshold` cosines are nulled HERE (the one-place
-    * threshold contract, as in [[semanticGateCandidates]]).
-    */
   /** Per (arrival × probed cell) frame of the bounded semantic family —
     * the shared front half of [[semanticTopcCandidates]] and the LIVE
     * streaming gate's stateful stage: probe assignment (`pos` 0 = the
@@ -2650,18 +2578,13 @@ object SimOps {
   private[graft] def pqProbeChainHof(arrivals: DataFrame,
       coarse: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
       subspaces: Int, nprobe: Int, residual: Boolean = true): DataFrame = {
-    val nTrained = coarse.length
     val e = PqEncExprs(coarse, books, subspaces, residual)
     val probed = arrivals
       .withColumn("cdists",
         graft.functions.VectorExprs.centroidDists(col("embD"), coarse))
-      .withColumn("probes",
-        slice(transform(array_sort(zip_with(
-          col("cdists"), sequence(lit(1), lit(nTrained)),
-          (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
-          lit(1), lit(math.min(nprobe, nTrained))))
       .select(col("vec_id").as("n_id"), col("embD").as("n_emb"),
-        posexplode(col("probes")).as(Seq("pos", "cell")))
+        posexplode(probeCells(col("cdists"), coarse.length, nprobe))
+          .as(Seq("pos", "cell")))
       .withColumn("enc", e.enc(col("n_emb"), col("cell")))
     (0 until subspaces).foldLeft(probed) {
         (df, m) => df.withColumn(s"sd$m", e.subDists(col("enc"), m))
@@ -2672,6 +2595,38 @@ object SimOps {
       .select(col("n_id"), col("pos"), col("cell"), col("codes"), col("tbls"))
   }
 
+  /** Per-candidate scored plan of the BOUNDED (`_topc`) semantic
+    * family — [[c2IncrementalSemanticTopc]] and c5_stream_semantic_topc
+    * share this builder verbatim, so the batch and stream twins cannot
+    * drift. The unbounded family's confirm cost is O(arrival · nprobe ·
+    * |cell|) exact cosines — with |cell| ≈ √n that is the one
+    * super-linear decade left (10.9×/16× per 10×, BASELINE.md round
+    * 16). Here the stored PQ CODES pre-rank each (arrival, probed cell)
+    * pair list by ADC distance — `subspaces` table lookups per
+    * candidate, no embedding touched — and only the per-cell top-`topc`
+    * survivors reach the exact-cosine join, capping it at
+    * nprobe·topc ≈ 256 rows per arrival REGARDLESS of corpus size (the
+    * engine's bound, not the corpus's). The global top-`topc` by
+    * (adc, b_id) is a subset of the per-cell top-`topc` union, so the
+    * caller's final truncation (batch: one rank window over ≤
+    * nprobe·topc slim rows; stream: the decision fold's in-memory sort)
+    * is EXACT — and the approximation (ADC mis-ranking a true match out
+    * of the top-c, on top of IVF probe misses) is itself hash-checked:
+    * the dynamic oracle replays codebook, codes, ADC, the top-c cut and
+    * the confirm bit-for-bit.
+    *
+    * Plan shape: the static side rolls the cell-pruned codes table into
+    * one (cell → candidate array) row per cell (|cell| ≈ √n structs —
+    * the in-plan inverted-file posting list), the arrival side carries
+    * its per-probe ADC lookup tables (the [[pqQueryTables]] residual
+    * arithmetic via the shared [[PqEncExprs]]), and the pre-rank is a
+    * narrow transform/sort/slice per row — every join stream-static
+    * when `arrivals` streams. LEFT joins + explode_outer keep
+    * zero-candidate arrivals alive to the decision; `b_id`/`adc` are
+    * always the true values (the downstream truncation sorts on them),
+    * while below-`threshold` cosines are nulled HERE (the one-place
+    * threshold contract, as in [[semanticGateCandidates]]).
+    */
   private[graft] def semanticTopcCandidates(spark: SparkSession, dir: String,
       arrivals: DataFrame, threshold: Double = IncSemThreshold,
       topc: Int = IncSemTopC, nprobe: Int = 4,
@@ -2702,9 +2657,7 @@ object SimOps {
         asDouble(col("embedding")).as("b_emb")))
       case None => corpusEmb
     }
-    import graft.functions.VectorExprs.{dot, norm}
-    val cos = round(dot(col("n_emb"), col("b_emb")) /
-      (norm(col("n_emb")) * norm(col("b_emb"))), 6)
+    val cos = cosine6(col("n_emb"), col("b_emb"))
     scored
       .join(baseEmb.withColumnRenamed("vec_id", "b_id"), Seq("b_id"), "left")
       .select(col("n_id"), col("adc"), col("b_id"),
@@ -2739,12 +2692,9 @@ object SimOps {
     */
   def c2IncrementalSemanticTopc(spark: SparkSession, dir: String,
       threshold: Double = IncSemThreshold, topc: Int = IncSemTopC,
-      nprobe: Int = 4, subspaces: Int = IncSemSubspaces): DataFrame = {
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
-    resolveSemanticTopc(spark, dir, base.filter(col("vec_id") % 10 === 7),
+      nprobe: Int = 4, subspaces: Int = IncSemSubspaces): DataFrame =
+    resolveSemanticTopc(spark, dir, embVecs(spark, dir).filter(col("vec_id") % 10 === 7),
       threshold, topc, nprobe, subspaces)
-  }
 
   /** The bounded gate's batch RESOLUTION over a caller-supplied
     * `arrivals` frame (columns `vec_id`, `embD`) — the
@@ -2787,6 +2737,17 @@ object SimOps {
     */
   private[queries] val DriftIdOffset = 1L << 40
 
+  /** The staleness monitor's GROWN corpus (vec_id, embD): the base plus
+    * its drifted twin — ids offset by [[DriftIdOffset]], every dimension
+    * shifted +2.0.
+    */
+  private def grownCorpus(spark: SparkSession, dir: String): DataFrame = {
+    val base = embVecs(spark, dir)
+    base.unionByName(base.select(
+      (col("vec_id") + lit(DriftIdOffset)).as("vec_id"),
+      transform(col("embD"), x => x + lit(2.0d)).as("embD")))
+  }
+
   /** C3o: ANN codebook STALENESS monitor — the retrain-trigger question
     * every production ANN index answers: after batches of appended data,
     * is the once-trained coarse quantizer still fit for the corpus it
@@ -2821,20 +2782,15 @@ object SimOps {
     * exactly what this does — not per production query).
     */
   def c3AnnStaleness(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, queryMod: Int = 100,
-      maxSample: Int = 100000): DataFrame = {
-    val (staleCents, _) = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir)).model(spark)
-    val base = emb(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
-    val grown = base.unionByName(base.select(
-        (col("vec_id") + lit(DriftIdOffset)).as("vec_id"),
-        transform(col("embD"), x => x + lit(2.0d)).as("embD")))
+      nprobe: Int = 4, queryMod: Int = 100): DataFrame = {
+    // Both codebooks at the one resolved cell count of the stored layout.
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir))
+    val (staleCents, _) = ann.model(spark)
+    val grown = grownCorpus(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshCents =
-      trainCentroids(boundedSample(grown, maxSample),
-        resolveCells(spark, dir, nCells), iters = 5)
-    val queries = grown
-      .filter(isQuery(col("vec_id") % lit(DriftIdOffset), queryMod))
+    val freshCents = coarseCodebook(grown, ann.cells)
+    val isQ = isQuery(col("vec_id") % lit(DriftIdOffset), queryMod)
+    val queries = grown.filter(isQ)
       .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))
     // NOT persisted here: recallHits persists its ground-truth side for
     // the result's lifetime, and both hits() calls below pass this same
@@ -2842,50 +2798,15 @@ object SimOps {
     val bf = exactCosineTopK(
       grown.select(col("vec_id").as("b_id"), col("embD").as("b_emb")),
       queries, k).select(col("q_id"), col("b_id"))
-    // IVF candidate set under one codebook: argmin cell assignment over
-    // the grown corpus, nprobe nearest cells per query, id pairs only.
-    def probeCand(cents: Seq[Seq[Double]]): DataFrame = {
-      val nTrained = cents.length
-      def dists(v: Column): Column =
-        graft.functions.VectorExprs.centroidDists(v, cents)
-      val corp = grown
-        .withColumn("dists", dists(col("embD")))
-        .withColumn("cell",
-          expr("array_position(dists, array_min(dists))").cast("int"))
-        .select(col("vec_id").as("b_id"), col("cell"))
-      val qs = queries
-        .withColumn("dists", dists(col("q_emb")))
-        .withColumn("probes",
-          slice(transform(array_sort(zip_with(
-            col("dists"), sequence(lit(1), lit(nTrained)),
-            (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
-            lit(1), lit(math.min(nprobe, nTrained))))
-        .select(col("q_id"),
-          explode(transform(col("probes"), p => p.cast("int"))).as("cell"))
-      corp.join(broadcast(qs), Seq("cell"))
-        .filter(col("q_id") =!= col("b_id"))
-        .select("q_id", "b_id").distinct()
-    }
-    // exact re-score of a candidate set, per-query top-k (id pairs)
-    def annTop(cand: DataFrame): DataFrame = cand
-      .join(grown.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
-        .hint("shuffle_hash"), "b_id")
-      .join(broadcast(queries), "q_id")
-      .withColumn("cosine",
-        round(dotD(col("q_emb"), col("b_emb")) /
-          (normD(col("q_emb")) * normD(col("b_emb"))), 6))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cosine").desc, col("b_id"))))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("b_id"))
-    val candS = probeCand(staleCents)
+    val candS = ivfCandidates(grown, isQ, staleCents, nprobe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candF = probeCand(freshCents)
+    val candF = ivfCandidates(grown, isQ, freshCents, nprobe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def scan(cand: DataFrame, as: String): DataFrame =
       cand.groupBy(col("q_id")).agg(count(lit(1)).as(as))
     def hits(cand: DataFrame, as: String): DataFrame =
-      recallHits(annTop(cand), bf).withColumnRenamed("n_hits", as)
+      recallHits(rescoreTopK(cand, grown, isQ, k).select(col("q_id"), col("b_id")), bf)
+        .withColumnRenamed("n_hits", as)
     val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val joined = queries.select(col("q_id"))
       .join(scan(candS, "n_cand_stale"), Seq("q_id"), "left")

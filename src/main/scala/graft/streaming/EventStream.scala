@@ -1033,16 +1033,6 @@ object EventStream {
       .orderBy("window_start", "event_type")
   }
 
-  /** c5_stream_sessionize_incr: the session_window operator under REAL
-    * incremental arrival (same two-file chronological split). Beyond
-    * what the tumbling twin checks, this exercises cross-batch session
-    * STATE MERGING: a session spanning the file cut sits open in the
-    * state store after batch 1 and must be extended (not restarted) by
-    * batch 2's rows. Append mode emits a session once the watermark
-    * passes its end (last event + gap); oracle = batch gaps-and-islands
-    * sessions whose end ≤ max(ts) − 2h, with full counts (in-order
-    * arrival, nothing late).
-    */
   /** Cut point for the incremental session check: the microsecond
     * midpoint of the adjacent same-user event pair that is closer than
     * the session gap AND nearest the center of the event-time span —
@@ -1068,6 +1058,16 @@ object EventStream {
     if (cut.isEmpty) mid else cut.head.getLong(0)
   }
 
+  /** c5_stream_sessionize_incr: the session_window operator under REAL
+    * incremental arrival (same two-file chronological split). Beyond
+    * what the tumbling twin checks, this exercises cross-batch session
+    * STATE MERGING: a session spanning the file cut sits open in the
+    * state store after batch 1 and must be extended (not restarted) by
+    * batch 2's rows. Append mode emits a session once the watermark
+    * passes its end (last event + gap); oracle = batch gaps-and-islands
+    * sessions whose end ≤ max(ts) − 2h, with full counts (in-order
+    * arrival, nothing late).
+    */
   def c5StreamSessionizeIncr(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val cut = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
@@ -2139,12 +2139,29 @@ object EventStream {
   def c5StreamSemantic(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
     import s.implicits._
+    decideSemanticStream(sfDir)(src =>
+      graft.queries.SimOps.semanticGateCandidates(spark, sfDir, src).as[SemCand])(
+      _.n_id)(_.flatMap(r => for { b <- r.b_id; c <- r.cosine } yield (b, c)))
+  }
+
+  /** The streaming semantic gates' shared run: `candidates` over the
+    * id-ordered two-file split of the vec_id % 10 = 7 slice, grouped per
+    * arrival by `nId`, decided ONCE by a flatMapGroupsWithState fold
+    * whose per-key flag is the never-retract guard (a key reappearing
+    * throws, it is not re-decided), over the (b_id, cosine) pairs
+    * `confirmed` keeps of the arrival's rows: the best pick is the
+    * highest cosine, ties to the smallest id — an order-free fold
+    * identical to the batch min(struct(-cosine, b_id)) — else novel.
+    */
+  private def decideSemanticStream[C](sfDir: String)(
+      candidates: DataFrame => org.apache.spark.sql.Dataset[C])(nId: C => Long)(
+      confirmed: Iterator[C] => Iterator[(Long, Double)])
+      (implicit spark: SparkSession, enc: org.apache.spark.sql.Encoder[C]): DataFrame = {
+    import spark.implicits._
     val src = splitStream(vecSplit(spark, sfDir))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
-    val decisions = graft.queries.SimOps
-      .semanticGateCandidates(spark, sfDir, src)
-      .as[SemCand]
-      .groupByKey(_.n_id)
+    val decisions = candidates(src)
+      .groupByKey(nId)
       .flatMapGroupsWithState[Boolean, SemDecision](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         case (id, rows, state: GroupState[Boolean]) =>
@@ -2152,16 +2169,10 @@ object EventStream {
             throw new IllegalStateException(
               s"vector $id reached the gate twice: a decision would retract")
           state.update(true)
-          // Order-free fold: max cosine, ties to the smallest id —
-          // identical to the batch twin's min(struct(-cosine, b_id)).
           var best: Option[(Double, Long)] = None
-          rows.foreach { r =>
-            (r.cosine, r.b_id) match {
-              case (Some(c), Some(b)) =>
-                if (best.forall(p => c > p._1 || (c == p._1 && b < p._2)))
-                  best = Some((c, b))
-              case _ => ()
-            }
+          confirmed(rows).foreach { case (b, c) =>
+            if (best.forall(p => c > p._1 || (c == p._1 && b < p._2)))
+              best = Some((c, b))
           }
           Iterator.single(SemDecision(id, best.isEmpty,
             best.map(_._2), best.map(_._1)))
@@ -2202,34 +2213,13 @@ object EventStream {
     implicit val s: SparkSession = spark
     import s.implicits._
     val topc = graft.queries.SimOps.IncSemTopC
-    val src = splitStream(vecSplit(spark, sfDir))
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
-    val decisions = graft.queries.SimOps
-      .semanticTopcCandidates(spark, sfDir, src)
-      .as[SemTopcCand]
-      .groupByKey(_.n_id)
-      .flatMapGroupsWithState[Boolean, SemDecision](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        case (id, rows, state: GroupState[Boolean]) =>
-          if (state.exists)
-            throw new IllegalStateException(
-              s"vector $id reached the gate twice: a decision would retract")
-          state.update(true)
-          val cands = rows.flatMap(r =>
-            for { a <- r.adc; b <- r.b_id } yield (a, b, r.cosine)).toArray
-          val top = cands.sortBy(t => (t._1, t._2)).take(topc)
-          var best: Option[(Double, Long)] = None
-          top.foreach {
-            case (_, b, Some(c)) =>
-              if (best.forall(p => c > p._1 || (c == p._1 && b < p._2)))
-                best = Some((c, b))
-            case _ => ()
-          }
-          Iterator.single(SemDecision(id, best.isEmpty,
-            best.map(_._2), best.map(_._1)))
-      }
-    runStream(decisions.toDF(), TempParquet, AtLeast(2), skipNoDataBatch = true)
-      .orderBy("vec_id")
+    decideSemanticStream(sfDir)(src =>
+      graft.queries.SimOps.semanticTopcCandidates(spark, sfDir, src).as[SemTopcCand])(
+      _.n_id) { rows =>
+      rows.flatMap(r => for { a <- r.adc; b <- r.b_id } yield (a, b, r.cosine))
+        .toArray.sortBy(t => (t._1, t._2)).take(topc).iterator
+        .flatMap { case (_, b, c) => c.map(b -> _) }
+    }
   }
 
   /** Row shapes of the LIVE semantic gate's stateful stage: one input
@@ -2439,12 +2429,11 @@ object EventStream {
         org.apache.spark.sql.expressions.Window.partitionBy(col("n_id"))
           .orderBy(col("adc").asc, col("b_id").asc)))
       .filter(col("rk") <= topc)
-    import graft.functions.VectorExprs.{dot, norm}
     val confirmed = ranked
       .join(base.select(col("vec_id").as("n_id"), col("v").as("n_emb")), "n_id")
       .join(base.select(col("vec_id").as("b_id"), col("v").as("b_emb")), "b_id")
-      .withColumn("cosine", round(dot(col("n_emb"), col("b_emb")) /
-        (norm(col("n_emb")) * norm(col("b_emb"))), 6))
+      .withColumn("cosine",
+        graft.queries.SimOps.cosine6(col("n_emb"), col("b_emb")))
       .filter(col("cosine") >= threshold)
       .select(col("n_id"), col("b_id"), col("cosine"), col("live"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -106,10 +106,10 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("ANN score re-attach never broadcasts the unfiltered embeddings table") {
-    // c3_ann_lsh / c3_ann_ivf: every broadcast must be the query subset
-    // (carries the `% 100` filter); the corpus re-attach side must come
-    // back as a shuffle join.
-    for (name <- Seq("c3_ann_lsh", "c3_ann_ivf")) {
+    // c3_ann_lsh / c3_ann_ivf / c3_ann_staleness: every broadcast must be
+    // the query subset (carries the `% 100` filter); the corpus re-attach
+    // side must come back as a shuffle join.
+    for (name <- Seq("c3_ann_lsh", "c3_ann_ivf", "c3_ann_staleness")) {
       val trees = broadcastSubtrees(name)
       assert(trees.nonEmpty, s"$name: expected query-subset broadcasts")
       val offenders = trees.filterNot(_.contains("% 100"))

@@ -93,6 +93,15 @@ class MRJobSpec extends SparkSuite {
     }
   }
 
+  test("a key with null values sorts them first on both kernels") {
+    // Sorting a key's values by their natural order threw on null.
+    val asIs: MRJob.MapFn = (k, v) => Iterator.single((k, v))
+    val show: MRJob.ReduceFn =
+      (k, vs) => Iterator.single(vs.map(String.valueOf).mkString(s"$k:", ",", ""))
+    val input = Seq(("k", null), ("k", "b"), ("k", null))
+    assert(runBoth(input, asIs, show) == Seq("k:null,null,b"))
+  }
+
   test("multi-emission reduce preserves per-group emission order") {
     val mapFn: MRJob.MapFn = (k, v) => Iterator.single((k, v))
     val reduceFn: MRJob.ReduceFn = (k, vs) => vs.iterator.map(v => s"$k:$v")
@@ -203,8 +212,7 @@ class MRJobSpec extends SparkSuite {
     // both null, one repeated key) and the shortest kvs with distinct keys
     // (`{"key":"a"}`, then two-char keys, ...). A map that emits each
     // record as it is must stay on the driver for both. (It emits a null
-    // value as "", which the estimate charges the same: both kernels sort
-    // a key's values, and that sort fails on nulls.)
+    // value as "", which the estimate charges the same.)
     val alphabet = (' ' to '~').filterNot(c => c == '"' || c == '\\').map(_.toString)
     def keysOfLength(n: Int): Iterator[String] =
       if (n == 1) alphabet.iterator

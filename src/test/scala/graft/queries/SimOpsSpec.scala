@@ -97,6 +97,24 @@ class SimOpsSpec extends SparkSuite {
     }
   }
 
+  test("probeCells indexes the trained codebook: 3 centroids, nprobe = 4") {
+    import org.apache.spark.sql.functions._
+    val cents = Seq(Seq(0.0, 0.0), Seq(10.0, 0.0), Seq(0.0, 10.0))
+    val vecs = Seq(Seq(1.0, 2.0), Seq(9.0, 1.0), Seq(1.0, 8.0), Seq(6.0, 5.0))
+    def d2(v: Seq[Double], c: Seq[Double]): Double =
+      v.zip(c).map { case (x, y) => (x - y) * (x - y) }.sum
+    val got = spark.createDataFrame(vecs.map(Tuple1(_))).toDF("v")
+      .withColumn("dists", graft.functions.VectorExprs.centroidDists(col("v"), cents))
+      .select(col("v"), SimOps.probeCells(col("dists"), cents.length, nprobe = 4))
+      .collect().map(r => r.getSeq[Double](0) -> r.getSeq[Any](1))
+    assert(got.length == vecs.length)
+    // exactly the cells 1..3, nearest first: no null or phantom fourth cell
+    got.foreach { case (v, probes) =>
+      assert(probes == cents.indices.sortBy(c => d2(v, cents(c))).map(_ + 1),
+        s"v=$v probes=$probes")
+    }
+  }
+
   test("IVF training sample is driver-bounded and deterministic") {
     import org.apache.spark.sql.functions._
     val base = graft.Tables.load(spark, sf, "embeddings")
