@@ -52,6 +52,31 @@ object PipelineOps {
   private val bucketSql = knuthBucketSql("doc_id", "div")
   private val bucketSqlDuck = knuthBucketSql("doc_id", "//")
 
+  /** The portable 80/10/10 carve-out on the bucket: train is
+    * `bucket < TrainBelow`, test is `bucket >= TestFrom`, val between.
+    */
+  private[queries] val TrainBelow = (0.8 * 4294967296L).toLong
+  private[queries] val TestFrom = (0.9 * 4294967296L).toLong
+
+  /** Fixed query parameters: each is written once here, used by the
+    * Spark plan and rendered as the same digits by the oracle replay.
+    */
+  private[queries] val SeqLen = 2048L // packed training-sequence length
+  /** The pipelines' length floor (c7_curate's gate is [[CurateMinTokens]]). */
+  private[queries] val PipelineMinTokens = 10
+  private[queries] val CurateMinTokens = 40
+  private[queries] val TokenBudget = 5000L // c7_token_budget, per language
+  private[queries] val BpeTokenBudget = 20000L // c7_token_budget_bpe, per language
+  private[queries] val MixBudget = 300L // c7_mix_sources total docs
+  private[queries] val ShingleK = 4 // decontamination word k-grams
+  private[queries] val CurriculumPhases = 4
+  private[queries] val Shards = 16
+  private[queries] val Epochs = 3
+  private[queries] val WeightedSampleK = 100
+  private[queries] val QuotaK = 50 // c7_sample_topk, per language
+  private[queries] val FuzzyThreshold = 0.8 // decontamination Jaccard
+  private[queries] val FuzzyTopC = 64
+
   /** Column rendering of [[knuthBucketSql]] — the identical sign-safe
     * reduce + 16/16 split-multiply arithmetic as Column expressions
     * (shiftright == div-by-2^16 on the already-non-negative reduced
@@ -89,8 +114,8 @@ object PipelineOps {
     docs(spark, dir)
       .withColumn("bucket", expr(bucketSql))
       .withColumn("split",
-        when(col("bucket") < (0.8 * 4294967296L).toLong, "train")
-          .when(col("bucket") < (0.9 * 4294967296L).toLong, "val")
+        when(col("bucket") < TrainBelow, "train")
+          .when(col("bucket") < TestFrom, "val")
           .otherwise("test"))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
@@ -124,8 +149,8 @@ object PipelineOps {
       // applied to the cluster rep instead of the doc id.
       .withColumn("bucket", expr(knuthBucketSql("cluster_rep", "div")))
       .withColumn("split",
-        when(col("bucket") < (0.8 * 4294967296L).toLong, "train")
-          .when(col("bucket") < (0.9 * 4294967296L).toLong, "val")
+        when(col("bucket") < TrainBelow, "train")
+          .when(col("bucket") < TestFrom, "val")
           .otherwise("test"))
       .select(col("doc_id"), col("cluster_rep"), col("split"))
       .orderBy("doc_id")
@@ -157,8 +182,8 @@ object PipelineOps {
     * exact selection fingerprint (sum of kept doc_ids), so the oracle
     * hash pins WHICH docs were chosen, not just how many.
     */
-  def c7MixSources(spark: SparkSession, dir: String, budget: Long = 300L): DataFrame =
-    mixSources(docs(spark, dir), budget)
+  def c7MixSources(spark: SparkSession, dir: String): DataFrame =
+    mixSources(docs(spark, dir), MixBudget)
 
   /** [[c7MixSources]] over an explicit (doc_id, source) frame — the
     * testable core (the sf fixtures have uniformly-sized sources, so the
@@ -249,12 +274,12 @@ object PipelineOps {
     * deterministic, resumable, and never serializes a whole language
     * through one task.
     */
-  def c7TokenBudget(spark: SparkSession, dir: String, budget: Long = 5000L): DataFrame = {
+  def c7TokenBudget(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir)
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
       .select(col("lang"), col("doc_id"), col("n_tokens"))
     withRunningSum(base, "n_tokens", "cum_tokens")
-      .filter(col("cum_tokens") <= budget)
+      .filter(col("cum_tokens") <= TokenBudget)
       .select(col("lang"), col("doc_id"), col("n_tokens"), col("cum_tokens"))
       .orderBy("lang", "doc_id")
   }
@@ -265,13 +290,11 @@ object PipelineOps {
     * ([[TextOps.bpeTrain]]'s final vocab, priced once per word TYPE and
     * joined — the c4_bpe_encode shape), then the same per-lang greedy
     * prefix selection through the two-phase bounded-partition running
-    * sum. Budget default 20000 ≈ the whitespace query's 5000-word
-    * budget at the corpus's ~4 BPE tokens/word.
+    * sum. [[BpeTokenBudget]] ≈ the whitespace query's [[TokenBudget]]
+    * at the corpus's ~4 BPE tokens/word.
     */
-  def c7TokenBudgetBpe(spark: SparkSession, dir: String,
-      budget: Long = 20000L, rounds: Int = TextOps.BpeRounds,
-      cap: Int = TextOps.BpeBatchCap): DataFrame = {
-    val enc = spark.table(TextOps.ensureBpeVocab(spark, dir, rounds, cap))
+  def c7TokenBudgetBpe(spark: SparkSession, dir: String): DataFrame = {
+    val enc = spark.table(TextOps.ensureBpeVocab(spark, dir))
     val perDoc = docs(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
@@ -283,7 +306,7 @@ object PipelineOps {
       .select(col("lang"), col("doc_id"),
         coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"))
     withRunningSum(base, "n_bpe_tokens", "cum_bpe")
-      .filter(col("cum_bpe") <= budget)
+      .filter(col("cum_bpe") <= BpeTokenBudget)
       .select(col("lang"), col("doc_id"), col("n_bpe_tokens"), col("cum_bpe"))
       .orderBy("lang", "doc_id")
   }
@@ -292,7 +315,7 @@ object PipelineOps {
     * "contiguous ≥L-token overlap" rule (the form the k-gram report
     * approximates): a training document is contaminated when it shares
     * a MAXIMAL repeated span of ≥16 tokens with any held-out test
-    * document, at ANY offset. Reuses [[TextOps.substringSpans]] (the
+    * document, at ANY offset. Reuses [[TextOps.substringSpansOf]] (the
     * Lee et al. machinery) filtered to pairs straddling the portable
     * train/test split; per contaminated train doc: span count, the
     * longest shared span, total shared-span tokens, and the worst
@@ -303,24 +326,12 @@ object PipelineOps {
     * doc — the cross-split filter is a narrow predicate on the span
     * stream, never a second corpus pass.
     */
-  def c7DecontaminateSpan(spark: SparkSession, dir: String,
-      window: Int = 16, maxOcc: Int = 16): DataFrame = {
-    val lo = (0.8 * 4294967296L).toLong
-    val hi = (0.9 * 4294967296L).toLong
-    // Overflow-safe Knuth bucket over the FULL int64 doc-id range — the
-    // 16/16 split mulmod of [[c7SplitClusterSafe]]: a naive id·m
-    // overflows int64 past ~3.47e9 (Spark wraps silently, DuckDB raises
-    // BIGINT overflow, so engine and oracle would diverge exactly at the
-    // 100 TB id scale this operator targets). Reduce sign-safe into
-    // [0,2^32), split the multiply at 2^16 (each partial product
-    // < 2^16·m ≈ 1.7e14 ≪ 2^63); bit-identical to the naive form for
-    // in-range ids.
-    def bucket(c: Column): Column = knuthBucketCol(c)
-    val spans = TextOps.substringSpans(spark, dir, window, maxOcc)
-      .withColumn("a_train", bucket(col("doc_a")) < lo)
-      .withColumn("a_test", bucket(col("doc_a")) >= hi)
-      .withColumn("b_train", bucket(col("doc_b")) < lo)
-      .withColumn("b_test", bucket(col("doc_b")) >= hi)
+  def c7DecontaminateSpan(spark: SparkSession, dir: String): DataFrame = {
+    val spans = TextOps.substringSpansOf(docs(spark, dir))
+      .withColumn("a_train", knuthBucketCol(col("doc_a")) < TrainBelow)
+      .withColumn("a_test", knuthBucketCol(col("doc_a")) >= TestFrom)
+      .withColumn("b_train", knuthBucketCol(col("doc_b")) < TrainBelow)
+      .withColumn("b_test", knuthBucketCol(col("doc_b")) >= TestFrom)
       .filter((col("a_train") && col("b_test")) ||
         (col("a_test") && col("b_train")))
       .select(
@@ -338,6 +349,43 @@ object PipelineOps {
         col("sum_span_len"), (-col("b.negid")).as("worst_test_doc"))
       .orderBy("doc_id")
   }
+
+  /** `(doc_id, split-bucket, xxhash64(shingle))` rows — the hashed
+    * word-k-gram stream every decontamination/contamination variant is
+    * built on. Hashing happens in the narrow scan, before any exchange.
+    */
+  private def hashedShingleBase(spark: SparkSession, dir: String): DataFrame = {
+    val (toks, k) = (split(col("text"), " "), ShingleK)
+    val shingles = when(size(toks) >= k,
+      transform(sequence(lit(1), size(toks) - (k - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(k)))))
+      .otherwise(array().cast("array<string>"))
+    docs(spark, dir)
+      .withColumn("bucket", expr(bucketSql))
+      .select(col("doc_id"), col("bucket"), explode(shingles).as("sh"))
+      .select(col("doc_id"), col("bucket"), xxhash64(col("sh")).as("h"))
+  }
+
+  /** Train-side `(doc_id, h)` hashed-shingle rows and the distinct
+    * held-out test shingle hashes — shared by the exact and
+    * bloom-prefiltered decontamination variants. Hashing happens BEFORE
+    * the exchange on both sides, so nothing shingle-string-sized ever
+    * shuffles.
+    */
+  private def shingleSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = hashedShingleBase(spark, dir)
+    val train = base.filter(col("bucket") < TrainBelow)
+      .select(col("doc_id"), col("h"))
+    val test = base.filter(col("bucket") >= TestFrom)
+      .select(col("h")).distinct()
+    (train, test)
+  }
+
+  private def decontamTail(hits: DataFrame): DataFrame =
+    hits.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_hits"),
+        countDistinct(col("h")).as("n_shingles_hit"))
+      .orderBy("doc_id")
 
   /** C7d: train/test decontamination — flag training documents sharing
     * any word k-gram with the held-out test split (the standard n-gram
@@ -358,45 +406,8 @@ object PipelineOps {
     * decontamination guarantee (no test contamination survives) is
     * unconditional; the string-exact DuckDB oracle holds whenever no
     * collision occurs.
-    */
-  /** Train-side `(doc_id, h)` hashed-shingle rows and the distinct
-    * held-out test shingle hashes — shared by the exact and
-    * bloom-prefiltered decontamination variants. Hashing happens BEFORE
-    * the exchange on both sides, so nothing shingle-string-sized ever
-    * shuffles.
-    */
-  /** `(doc_id, split-bucket, xxhash64(shingle))` rows — the hashed
-    * word-k-gram stream every decontamination/contamination variant is
-    * built on. Hashing happens in the narrow scan, before any exchange.
-    */
-  private def hashedShingleBase(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val toks = split(col("text"), " ")
-    val shingles = when(size(toks) >= k,
-      transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(k)))))
-      .otherwise(array().cast("array<string>"))
-    docs(spark, dir)
-      .withColumn("bucket", expr(bucketSql))
-      .select(col("doc_id"), col("bucket"), explode(shingles).as("sh"))
-      .select(col("doc_id"), col("bucket"), xxhash64(col("sh")).as("h"))
-  }
-
-  private def shingleSides(spark: SparkSession, dir: String, k: Int): (DataFrame, DataFrame) = {
-    val base = hashedShingleBase(spark, dir, k)
-    val train = base.filter(col("bucket") < (0.8 * 4294967296L).toLong)
-      .select(col("doc_id"), col("h"))
-    val test = base.filter(col("bucket") >= (0.9 * 4294967296L).toLong)
-      .select(col("h")).distinct()
-    (train, test)
-  }
-
-  private def decontamTail(hits: DataFrame): DataFrame =
-    hits.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_hits"),
-        countDistinct(col("h")).as("n_shingles_hit"))
-      .orderBy("doc_id")
-
-  /** The exact decontamination flag list. Since round 19 this runs the
+    *
+    * Since round 19 this exact flag list runs the
     * SAME bloom-prefiltered physical strategy as [[c7DecontaminateBloom]]
     * (guide §3.2): the test side is a DISTINCT hash set, so the confirm
     * join is semantically a semi-join filter with multiplicity 1 — a
@@ -407,23 +418,9 @@ object PipelineOps {
     * the bloom twin at sf0.1 — the exact variant shuffled every train
     * shingle only to discard >90% of them at the join.
     */
-  def c7Decontaminate(spark: SparkSession, dir: String, k: Int = 4): DataFrame =
-    c7DecontaminateBloom(spark, dir, k)
+  def c7Decontaminate(spark: SparkSession, dir: String): DataFrame =
+    c7DecontaminateBloom(spark, dir)
 
-  /** C7g: bloom-prefiltered decontamination — the 100 TB posture for
-    * c7_decontaminate. The exact variant shuffles EVERY train shingle
-    * into the join; here a bloom filter built over the (benchmark-sized)
-    * test shingles — one bounded aggregate, OR-merged so the bits are
-    * arrival-order-independent — is embedded as a ~1 MB binary literal
-    * and filters train shingles with the codegen'd `might_contain`
-    * BEFORE the shuffle: only might-contain rows (true matches + the
-    * bloom's false-positive sliver) reach the exact confirm join. Bloom
-    * filters have no false negatives, so the output is bit-identical to
-    * c7_decontaminate for ANY bloom parameters — the oracle is literally
-    * the same SQL. This is the runtime-filter / semi-join-reduction
-    * pattern lifted to an explicit operator (Spark's own injection can't
-    * see through the distinct-aggregate build side here).
-    */
   /** Bloom binary over the distinct test shingles, sized for
     * `expectedItems` (Spark's default FPP target, 3%). Accepts any frame
     * with a string `sh` column OR pre-hashed long `h` column — keys are
@@ -443,11 +440,25 @@ object PipelineOps {
       .head().getAs[Array[Byte]](0)
   }
 
-  def c7DecontaminateBloom(spark: SparkSession, dir: String, k: Int = 4,
+  /** C7g: bloom-prefiltered decontamination — the 100 TB posture for
+    * c7_decontaminate. The exact variant shuffles EVERY train shingle
+    * into the join; here a bloom filter built over the (benchmark-sized)
+    * test shingles — one bounded aggregate, OR-merged so the bits are
+    * arrival-order-independent — is embedded as a ~1 MB binary literal
+    * and filters train shingles with the codegen'd `might_contain`
+    * BEFORE the shuffle: only might-contain rows (true matches + the
+    * bloom's false-positive sliver) reach the exact confirm join. Bloom
+    * filters have no false negatives, so the output is bit-identical to
+    * c7_decontaminate for ANY bloom parameters — the oracle is literally
+    * the same SQL. This is the runtime-filter / semi-join-reduction
+    * pattern lifted to an explicit operator (Spark's own injection can't
+    * see through the distinct-aggregate build side here).
+    */
+  def c7DecontaminateBloom(spark: SparkSession, dir: String,
       expectedTestShingles: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graft.ColumnBridge
-    val (train, test0) = shingleSides(spark, dir, k)
+    val (train, test0) = shingleSides(spark, dir)
     // The test side feeds three consumers (count, bloom build, exact
     // confirm join). The first two are construction-time actions — hence
     // the explicit persist BEFORE them; CacheScope releases the cache
@@ -494,16 +505,16 @@ object PipelineOps {
     * big side never builds a corpus-wide distinct. Every exchange moves
     * 8-byte hashes (same collision note as c7_decontaminate).
     */
-  def c7Contamination(spark: SparkSession, dir: String, k: Int = 4): DataFrame = {
+  def c7Contamination(spark: SparkSession, dir: String): DataFrame = {
     // Persisted: both split filters scan the same hashed-shingle pass.
-    val base = hashedShingleBase(spark, dir, k)
+    val base = hashedShingleBase(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val te = base.filter(col("bucket") >= (0.9 * 4294967296L).toLong)
+    val te = base.filter(col("bucket") >= TestFrom)
       .select(col("doc_id"), col("h")).distinct()
     val teH = te.select("h").distinct()
     // Train-side hashes restricted to the test vocabulary before the
     // distinct: the set of test shingles that occur anywhere in train.
-    val leaked = base.filter(col("bucket") < (0.8 * 4294967296L).toLong)
+    val leaked = base.filter(col("bucket") < TrainBelow)
       .select("h").join(teH, "h").distinct()
     graft.util.CacheScope.releaseAfterMaterialize(
       te.join(leaked.withColumn("hit", lit(1)), Seq("h"), "left")
@@ -526,9 +537,8 @@ object PipelineOps {
     * is "the corpus" — so the 100 TB shape is already proven: O(doc)
     * signatures, shuffle on 8-byte band buckets, Ω(candidates) confirm.
     */
-  def c7DecontaminateFuzzy(spark: SparkSession, dir: String,
-      threshold: Double = 0.8): DataFrame =
-    fuzzyDecontam(spark, dir, threshold, topC = None)
+  def c7DecontaminateFuzzy(spark: SparkSession, dir: String): DataFrame =
+    fuzzyDecontam(spark, dir, topC = None)
 
   /** C7r': [[c7DecontaminateFuzzy]] with the BOUNDED confirm — the
     * duplicate-saturated-corpus scale path, exactly the
@@ -548,20 +558,19 @@ object PipelineOps {
     * Bucket caps and agreement rank are replayed verbatim by the
     * oracle, so the approximation itself is hash-checked.
     */
-  def c7DecontaminateFuzzyTopC(spark: SparkSession, dir: String,
-      threshold: Double = 0.8, c: Int = 64): DataFrame =
-    fuzzyDecontam(spark, dir, threshold, topC = Some(c))
+  def c7DecontaminateFuzzyTopC(spark: SparkSession, dir: String): DataFrame =
+    fuzzyDecontam(spark, dir, topC = Some(FuzzyTopC))
 
   private def fuzzyDecontam(spark: SparkSession, dir: String,
-      threshold: Double, topC: Option[Int]): DataFrame = {
+      topC: Option[Int]): DataFrame = {
     import graft.dedup.MinHash
     val d = docs(spark, dir).withColumn("sb", expr(bucketSql))
     def toksOf(side: Column) = d.filter(side)
       .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Persisted: each side feeds its banding pass AND the confirm join.
-    val trainToks = toksOf(col("sb") < (0.8 * 4294967296L).toLong)
-    val testToks = toksOf(col("sb") >= (0.9 * 4294967296L).toLong)
+    val trainToks = toksOf(col("sb") < TrainBelow)
+    val testToks = toksOf(col("sb") >= TestFrom)
     def memOf(toks: DataFrame) = MinHash.membershipsFromSets(
       toks, col("doc_id"), col("toks"), DedupOps.IncHashes, DedupOps.IncBands)
     val cand = topC match {
@@ -621,7 +630,7 @@ object PipelineOps {
             count(lit(1)).as("reranked_pairs"))
     }
     graft.util.CacheScope.releaseAfterMaterialize(
-      DedupOps.resolveBatch(cand, trainToks, testToks, threshold,
+      DedupOps.resolveBatch(cand, trainToks, testToks, FuzzyThreshold,
         confirmMetric =
           if (topC.isDefined) Some("graft_fuzzy_decontam_confirmed") else None)
         .select(col("doc_id"), (!col("is_novel")).as("contaminated"),
@@ -666,7 +675,7 @@ object PipelineOps {
     * Fully oracle-checked — dedup, lang-id scoring, argmax tie-break and
     * the final conjunction are all replayed in SQL.
     */
-  def c7Curate(spark: SparkSession, dir: String, minTokens: Int = 40): DataFrame = {
+  def c7Curate(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir)
     val firstIds = base.groupBy(col("text"))
       .agg(min(col("doc_id")).as("first_id"))
@@ -681,7 +690,7 @@ object PipelineOps {
       .withColumn("n_tokens", size(split(col("text"), " ")))
       .withColumn("keep",
         col("first_copy") && col("detected_lang") === col("lang") &&
-          col("n_tokens") >= minTokens)
+          col("n_tokens") >= CurateMinTokens)
       .select(col("doc_id"), col("lang"), col("detected_lang"),
         col("first_copy"), col("keep"))
       .orderBy("doc_id")
@@ -700,16 +709,62 @@ object PipelineOps {
     * (see [[withRunningSum]]) — no global-order scan, and no
     * one-task-per-language window either.
     */
-  def c7PackSequences(spark: SparkSession, dir: String, seqLen: Long = 2048L): DataFrame = {
-    val base = docs(spark, dir)
+  def c7PackSequences(spark: SparkSession, dir: String): DataFrame =
+    packTail(docs(spark, dir)
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-      .select(col("lang"), col("doc_id"), col("n_tokens"))
-    withRunningSum(base, "n_tokens", "cum")
-      .select(col("lang"), col("doc_id"), col("n_tokens"),
-        expr(s"(cum - n_tokens) div $seqLen").as("first_seq"),
-        expr(s"(cum - 1) div $seqLen").as("last_seq"))
+      .select(col("lang"), col("doc_id"), col("n_tokens")), "n_tokens")
+
+  /** The packing tail over a `(lang, doc_id, …)` frame: the per-lang
+    * running sum of `lenCol` ([[withRunningSum]]) and, per doc, the
+    * first/last [[SeqLen]]-token sequence it lands in and how many it
+    * spans; every input column passes through. [[packSelectSql]] is its
+    * DuckDB rendering.
+    */
+  private def packTail(df: DataFrame, lenCol: String): DataFrame =
+    withRunningSum(df, lenCol, "cum")
+      .select(df.columns.map(col) :+
+        expr(s"(cum - $lenCol) div $SeqLen").as("first_seq") :+
+        expr(s"(cum - 1) div $SeqLen").as("last_seq"): _*)
       .withColumn("n_seqs", col("last_seq") - col("first_seq") + 1L)
       .orderBy("lang", "doc_id")
+
+  /** The packing SELECT over relation `from` carrying the running sum
+    * `cum` of `len`: lang, doc_id, the `cols`, and the three sequence
+    * columns.
+    */
+  private def packSelectSql(cols: Seq[String], len: String, from: String): String =
+    ("SELECT lang, doc_id" +: cols).mkString(", ") + ", " +
+      s"(cum - $len) // $SeqLen AS first_seq, " +
+      s"(cum - 1) // $SeqLen AS last_seq, " +
+      s"((cum - 1) // $SeqLen) - ((cum - $len) // $SeqLen) + 1 AS n_seqs " +
+      s"FROM $from ORDER BY lang, doc_id"
+
+  /** The pipeline's shared doc-level prologue — first-copy MinHash
+    * dedup, langid agreement, length floor, train-split carve-out —
+    * returning survivors WITH text (the span stage needs it).
+    * ([[PipelineMinTokens]], not c7_curate's [[CurateMinTokens]]: the
+    * pipeline's length gate is a floor against fragments, and the
+    * corpus's first-copy survivors skew short — 40 would leave a
+    * near-empty train set at sf0.01.)
+    */
+  private[queries] def pipelineKept(spark: SparkSession, dir: String): DataFrame = {
+    val base = docs(spark, dir)
+    // 4 bands × 16 rows ⇒ collision threshold ≈ (1/4)^(1/16) ≈ 0.92
+    // Jaccard: curation dedup merges only true near-duplicates — the
+    // 16×4 banding of c2_minhash_lsh (threshold ≈ 0.5) would collapse
+    // most of a self-similar corpus into a handful of survivors, which
+    // is recall tuning, not a different operator.
+    val firstCopy = graft.dedup.MinHash
+      .dedupAssignments(base, col("doc_id"), col("text"), numHashes = 64, bands = 4)
+      .select(col("doc_id"), col("is_kept").as("first_copy"))
+    graft.text.LangId.detect(base, col("text"))
+      .select(col("doc_id"), col("lang"), col("detected_lang"), col("text"))
+      .join(firstCopy, "doc_id")
+      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .filter(col("first_copy") && col("detected_lang") === col("lang") &&
+        col("n_tokens") >= PipelineMinTokens &&
+        expr(bucketSql) < lit(TrainBelow))
+      .select(col("lang"), col("doc_id"), col("text"), col("n_tokens"))
   }
 
   /** C7h: the END-TO-END curation pipeline a training run actually
@@ -728,44 +783,24 @@ object PipelineOps {
     * statement: a user chains these operators and the result is still
     * engine-independent.
     */
-  /** The pipeline's shared doc-level prologue — first-copy MinHash
-    * dedup, langid agreement, length floor, train-split carve-out —
-    * returning survivors WITH text (the span stage needs it).
-    * (minTokens = 10, not c7_curate's 40: the pipeline's length gate is
-    * a floor against fragments, and the corpus's first-copy survivors
-    * skew short — 40 would leave a near-empty train set at sf0.01.)
-    */
-  private[queries] def pipelineKept(spark: SparkSession, dir: String,
-      minTokens: Int): DataFrame = {
-    val base = docs(spark, dir)
-    // 4 bands × 16 rows ⇒ collision threshold ≈ (1/4)^(1/16) ≈ 0.92
-    // Jaccard: curation dedup merges only true near-duplicates — the
-    // 16×4 banding of c2_minhash_lsh (threshold ≈ 0.5) would collapse
-    // most of a self-similar corpus into a handful of survivors, which
-    // is recall tuning, not a different operator.
-    val firstCopy = graft.dedup.MinHash
-      .dedupAssignments(base, col("doc_id"), col("text"), numHashes = 64, bands = 4)
-      .select(col("doc_id"), col("is_kept").as("first_copy"))
-    graft.text.LangId.detect(base, col("text"))
-      .select(col("doc_id"), col("lang"), col("detected_lang"), col("text"))
-      .join(firstCopy, "doc_id")
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-      .filter(col("first_copy") && col("detected_lang") === col("lang") &&
-        col("n_tokens") >= minTokens &&
-        expr(bucketSql) < lit((0.8 * 4294967296L).toLong))
-      .select(col("lang"), col("doc_id"), col("text"), col("n_tokens"))
-  }
+  def c7Pipeline(spark: SparkSession, dir: String): DataFrame =
+    packTail(pipelineKept(spark, dir)
+      .select(col("lang"), col("doc_id"), col("n_tokens")), "n_tokens")
 
-  def c7Pipeline(spark: SparkSession, dir: String, minTokens: Int = 10,
-      seqLen: Long = 2048L): DataFrame = {
-    val kept = pipelineKept(spark, dir, minTokens)
-      .select(col("lang"), col("doc_id"), col("n_tokens"))
-    withRunningSum(kept, "n_tokens", "cum")
-      .select(col("lang"), col("doc_id"), col("n_tokens"),
-        expr(s"(cum - n_tokens) div $seqLen").as("first_seq"),
-        expr(s"(cum - 1) div $seqLen").as("last_seq"))
-      .withColumn("n_seqs", col("last_seq") - col("first_seq") + 1L)
-      .orderBy("lang", "doc_id")
+  /** The pipelines' scrub-and-floor stage over survivors carrying
+    * `(doc_id, text, n_tokens, …)`: keep-first substring scrub AMONG
+    * them ([[TextOps.scrubRemovedCounts]]), `n_removed`/`n_eff` per doc,
+    * and the length floor re-applied on the effective count; `text`
+    * drops, every other column passes through. [[scrubPackSql]] is its
+    * DuckDB rendering (with the packing tail).
+    */
+  private def scrubFloor(kept: DataFrame): DataFrame = {
+    val rm = TextOps.scrubRemovedCounts(kept.select(col("doc_id"), col("text")))
+    kept.join(rm, Seq("doc_id"), "left")
+      .withColumn("n_removed", coalesce(col("n_removed"), lit(0L)))
+      .withColumn("n_eff", col("n_tokens") - col("n_removed"))
+      .filter(col("n_eff") >= PipelineMinTokens)
+      .select((kept.columns.filterNot(_ == "text") :+ "n_removed" :+ "n_eff").map(col): _*)
   }
 
   /** C7u: the curation pipeline WITH span-level scrub composed in — the
@@ -787,24 +822,22 @@ object PipelineOps {
     * prefix sum. Every stage composes without a second corpus
     * tokenization of the raw input.
     */
-  def c7PipelineV2(spark: SparkSession, dir: String, minTokens: Int = 10,
-      seqLen: Long = 2048L, window: Int = 16, maxOcc: Int = 16): DataFrame = {
-    val kept = pipelineKept(spark, dir, minTokens)
-    val rm = TextOps.scrubRemovedCounts(
-      kept.select(col("doc_id"), col("text")), window, maxOcc)
-    val k2 = kept.join(rm, Seq("doc_id"), "left")
-      .withColumn("n_removed", coalesce(col("n_removed"), lit(0L)))
-      .withColumn("n_eff", col("n_tokens") - col("n_removed"))
-      .filter(col("n_eff") >= minTokens)
-      .select(col("lang"), col("doc_id"), col("n_tokens"),
-        col("n_removed"), col("n_eff"))
-    withRunningSum(k2, "n_eff", "cum")
-      .select(col("lang"), col("doc_id"), col("n_tokens"),
-        col("n_removed"), col("n_eff"),
-        expr(s"(cum - n_eff) div $seqLen").as("first_seq"),
-        expr(s"(cum - 1) div $seqLen").as("last_seq"))
-      .withColumn("n_seqs", col("last_seq") - col("first_seq") + 1L)
-      .orderBy("lang", "doc_id")
+  def c7PipelineV2(spark: SparkSession, dir: String): DataFrame =
+    packTail(scrubFloor(pipelineKept(spark, dir)), "n_eff")
+
+  /** Per-lang CCNet tercile machinery shared by [[c7PplFilter]] and
+    * [[c7PipelineV3]] — ONE source of truth for the oracle-pinned
+    * boundary: deterministic (nll, doc_id) rank via the partitioned
+    * prefix sum, broadcast per-lang totals (O(langs) rows), exact
+    * integer bucket `(3·(rk−1)) div n`. Input must carry
+    * (lang, doc_id, nll); columns pass through plus `bucket`.
+    */
+  private def withPplTercile(df: DataFrame): DataFrame = {
+    val ranked = withRunningSum(df.withColumn("one", lit(1L)), "one", "rk",
+      keyCol = "lang", orderCols = Seq("nll", "doc_id"))
+    val totals = ranked.groupBy("lang").agg(count(lit(1)).as("n"))
+    ranked.join(broadcast(totals), "lang")
+      .withColumn("bucket", expr("(3 * (rk - 1)) div n"))
   }
 
   /** C7x: the FULL CCNet-shaped curation pipeline — [[pipelineKept]]'s
@@ -827,44 +860,14 @@ object PipelineOps {
     * set, and the two-phase packing sum. Nothing re-tokenizes the raw
     * corpus a second time.
     */
-  /** Per-lang CCNet tercile machinery shared by [[c7PplFilter]] and
-    * [[c7PipelineV3]] — ONE source of truth for the oracle-pinned
-    * boundary: deterministic (nll, doc_id) rank via the partitioned
-    * prefix sum, broadcast per-lang totals (O(langs) rows), exact
-    * integer bucket `(3·(rk−1)) div n`. Input must carry
-    * (lang, doc_id, nll); columns pass through plus `bucket`.
-    */
-  private def withPplTercile(df: DataFrame): DataFrame = {
-    val ranked = withRunningSum(df.withColumn("one", lit(1L)), "one", "rk",
-      keyCol = "lang", orderCols = Seq("nll", "doc_id"))
-    val totals = ranked.groupBy("lang").agg(count(lit(1)).as("n"))
-    ranked.join(broadcast(totals), "lang")
-      .withColumn("bucket", expr("(3 * (rk - 1)) div n"))
-  }
-
-  def c7PipelineV3(spark: SparkSession, dir: String, minTokens: Int = 10,
-      seqLen: Long = 2048L, window: Int = 16, maxOcc: Int = 16): DataFrame = {
-    val kept = pipelineKept(spark, dir, minTokens)
+  def c7PipelineV3(spark: SparkSession, dir: String): DataFrame = {
+    val kept = pipelineKept(spark, dir)
     val ppl = TextOps.c4LmPplRef(spark, dir).select(col("doc_id"), col("nll"))
     val pplKept = withPplTercile(kept.join(ppl, "doc_id"))
       .filter(col("bucket") <= 1)
       .select(col("lang"), col("doc_id"), col("text"), col("n_tokens"),
         col("nll"))
-    val rm = TextOps.scrubRemovedCounts(
-      pplKept.select(col("doc_id"), col("text")), window, maxOcc)
-    val k2 = pplKept.join(rm, Seq("doc_id"), "left")
-      .withColumn("n_removed", coalesce(col("n_removed"), lit(0L)))
-      .withColumn("n_eff", col("n_tokens") - col("n_removed"))
-      .filter(col("n_eff") >= minTokens)
-      .select(col("lang"), col("doc_id"), col("n_tokens"), col("nll"),
-        col("n_removed"), col("n_eff"))
-    withRunningSum(k2, "n_eff", "cum")
-      .select(col("lang"), col("doc_id"), col("n_tokens"), col("nll"),
-        col("n_removed"), col("n_eff"),
-        expr(s"(cum - n_eff) div $seqLen").as("first_seq"),
-        expr(s"(cum - 1) div $seqLen").as("last_seq"))
-      .withColumn("n_seqs", col("last_seq") - col("first_seq") + 1L)
-      .orderBy("lang", "doc_id")
+    packTail(scrubFloor(pplKept), "n_eff")
   }
 
   /** C7w: PERPLEXITY-bucketED curation — the CCNet head/middle/tail
@@ -904,9 +907,9 @@ object PipelineOps {
     * (the aggregator keeps largest keys; the sample wants smallest
     * buckets); bucket < 2^32 is exact in a double.
     */
-  def c7SampleTopk(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
+  def c7SampleTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val topk = new graft.functions.TopKAggregator[(Double, Long)](k, _._1, _._2)
+    val topk = new graft.functions.TopKAggregator[(Double, Long)](QuotaK, _._1, _._2)
       .toColumn.name("topk")
     docs(spark, dir)
       .selectExpr("lang", s"CAST(-($bucketSql) AS DOUBLE) AS negb", "doc_id")
@@ -938,7 +941,6 @@ object PipelineOps {
     * doc); the three per-doc tables then equi-join on doc_id.
     */
   def c7QualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val stopArr = array(TextOps.stopwords.map(lit): _*)
     val base = docs(spark, dir).select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"),
       length(regexp_replace(col("text"), "[^a-z]", "")).cast("long").as("alpha_chars"))
@@ -949,18 +951,8 @@ object PipelineOps {
       .agg(max(col("c")).as("max_c"),
         // rows are distinct (doc, token), so this counts distinct
         // stopword TYPES present, not occurrences
-        count(when(array_contains(stopArr, col("tok")), 1)).as("n_stop_types"))
-    val toks = split(col("text"), " ")
-    val bigrams = zip_with(
-      slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-      slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-      (a, b) => concat(a, lit(" "), b))
-    val bgStats = docs(spark, dir)
-      .select(col("doc_id"), explode(bigrams).as("bg"))
-      .groupBy("doc_id", "bg").agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id")
-      .agg(sum(col("cnt")).as("n_bigrams"),
-        sum(when(col("cnt") > 1, col("cnt")).otherwise(0L)).as("n_dup"))
+        count(when(array_contains(TextOps.stopArr, col("tok")), 1)).as("n_stop_types"))
+    val bgStats = TextOps.dupBigramStats(docs(spark, dir))
     base
       .join(tokStats, Seq("doc_id"), "left")
       .join(bgStats, Seq("doc_id"), "left")
@@ -1033,11 +1025,11 @@ object PipelineOps {
     * localCheckpoint'ed for the same pid-stability reason documented
     * there.
     */
-  def c7Curriculum(spark: SparkSession, dir: String, phases: Int = 4): DataFrame = {
+  def c7Curriculum(spark: SparkSession, dir: String): DataFrame = {
     val (ranked, nd) = tokenRank(spark, dir)
     ranked
       .withColumn("phase",
-        expr(s"CAST(((rank - 1) * $phases) div $nd + 1 AS INT)"))
+        expr(s"CAST(((rank - 1) * $CurriculumPhases) div $nd + 1 AS INT)"))
       .select("doc_id", "n_tokens", "rank", "phase")
       .orderBy("doc_id")
   }
@@ -1085,10 +1077,10 @@ object PipelineOps {
     * where). The rank reuses [[tokenRank]]'s two-phase construction —
     * never a corpus-wide single-task window.
     */
-  def c7ShardBalance(spark: SparkSession, dir: String, shards: Int = 16): DataFrame = {
+  def c7ShardBalance(spark: SparkSession, dir: String): DataFrame = {
     val (ranked, _) = tokenRank(spark, dir)
     ranked
-      .withColumn("shard", ((col("rank") - 1) % shards).cast("int"))
+      .withColumn("shard", ((col("rank") - 1) % Shards).cast("int"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"),
@@ -1157,12 +1149,12 @@ object PipelineOps {
     * shuffle, no window, no global sort; each task keeps a k-row heap
     * and the driver merges O(partitions·k).
     */
-  def c7SampleWeighted(spark: SparkSession, dir: String, k: Int = 100): DataFrame =
+  def c7SampleWeighted(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         expr(s"(($bucketSql) * 1048576) div greatest(n_chars, 1)").as("priority"))
       .orderBy(col("priority"), col("doc_id"))
-      .limit(k)
+      .limit(WeightedSampleK)
 
   /** C7u: per-epoch training-order reshuffle — a DIFFERENT reproducible
     * permutation of the corpus for each training epoch (epoch-salted
@@ -1185,7 +1177,7 @@ object PipelineOps {
     * whole corpus through one task; the range-partitioned construction
     * keeps every task bounded at any corpus size.
     */
-  def c7EpochOrder(spark: SparkSession, dir: String, epochs: Int = 3): DataFrame = {
+  def c7EpochOrder(spark: SparkSession, dir: String): DataFrame = {
     // ekey = (doc_id · m(e)) mod 2^32, computed OVERFLOW-SAFE for the
     // full int64 id range: a naive doc_id * m with m up to 2^32−1
     // overflows int64 once doc_id exceeds ~2.1e9 — Spark wraps silently
@@ -1199,7 +1191,7 @@ object PipelineOps {
     val base = docs(spark, dir)
       .select(col("doc_id"))
       .withColumn("epoch",
-        explode(array((0 until epochs).map(e => lit(e)): _*)))
+        explode(array((0 until Epochs).map(e => lit(e)): _*)))
       .withColumn("em",
         expr("(2654435761 + 2 * epoch * 2246822519) % 4294967296"))
       .withColumn("d32",
@@ -1226,7 +1218,13 @@ object PipelineOps {
     * as DECIMAL(20,6) (the [[graft.queries.Exact]] discipline) so
     * aggregation order can never drift the hash.
     */
-  def c7DatasetCard(spark: SparkSession, dir: String): DataFrame = {
+  def c7DatasetCard(spark: SparkSession, dir: String): DataFrame =
+    datasetCard(cardPerDoc(spark, dir), Nil, Nil)
+
+  /** The card's per-doc frame: (doc_id, source, lang, is_dup — a
+    * non-first copy by content hash, keep, n_tokens, simpson).
+    */
+  private def cardPerDoc(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
       .select(col("doc_id"), col("source"), col("lang"), md5(col("text")).as("h"))
     val fst = d.groupBy("h").agg(min(col("doc_id")).as("first_id"))
@@ -1237,20 +1235,27 @@ object PipelineOps {
       .withColumn("is_dup", col("doc_id") =!= col("first_id"))
       .join(qf, "doc_id")
       .join(dv, "doc_id")
-      .groupBy("source", "lang")
-      .agg(count(lit(1)).as("n_docs"),
+  }
+
+  /** The card rollup of a per-doc frame to (source, lang): the five base
+    * aggregates and their columns, then `aggs` and `cols` appended.
+    * [[datasetCardSql]] is its DuckDB rendering.
+    */
+  private def datasetCard(per: DataFrame, aggs: Seq[Column], cols: Seq[Column]): DataFrame =
+    per.groupBy("source", "lang")
+      .agg(count(lit(1)).as("n_docs"), Seq(
         sum(col("n_tokens")).as("total_tokens"),
         sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_docs"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_quality"),
-        sum(col("simpson").cast("decimal(20,6)")).as("sumdec"))
-      .select(col("source"), col("lang"), col("n_docs"), col("total_tokens"),
+        sum(col("simpson").cast("decimal(20,6)")).as("sumdec")) ++ aggs: _*)
+      .select(Seq(col("source"), col("lang"), col("n_docs"), col("total_tokens"),
         col("n_dup_docs"),
         round(col("n_dup_docs").cast("double") / col("n_docs"), 6).as("dup_rate"),
         col("n_quality"),
         round(col("n_quality").cast("double") / col("n_docs"), 6).as("quality_rate"),
-        round(col("sumdec").cast("double") / col("n_docs"), 6).as("mean_simpson"))
+        round(col("sumdec").cast("double") / col("n_docs"), 6).as("mean_simpson")) ++
+        cols: _*)
       .orderBy("source", "lang")
-  }
 
   /** C7w: the dataset card EXTENDED with the round-15 signal families —
     * a release profile that under-reports perplexity, PII and
@@ -1272,49 +1277,28 @@ object PipelineOps {
     * exchange beyond the components' own.
     */
   def c7DatasetCardV2(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-      .select(col("doc_id"), col("source"), col("lang"), md5(col("text")).as("h"))
-    val fst = d.groupBy("h").agg(min(col("doc_id")).as("first_id"))
-    val qf = c7QualityFilter(spark, dir).select(col("doc_id"), col("keep"))
-    val dv = TextOps.c4Diversity(spark, dir)
-      .select(col("doc_id"), col("n_tokens"), col("simpson"))
+    val per = cardPerDoc(spark, dir)
     val ppl = c7PplFilter(spark, dir).select(col("doc_id"), col("bucket"))
     val pii = TextOps.c4PiiScrub(spark, dir).select(col("doc_id"), col("n_pii"))
     val spans = TextOps.scrubRemovedCounts(docs(spark, dir))
-    d.join(fst, "h")
-      .withColumn("is_dup", col("doc_id") =!= col("first_id"))
-      .join(qf, "doc_id")
-      .join(dv, "doc_id")
+    datasetCard(per
       .join(ppl, "doc_id")
       .join(pii, "doc_id")
       .join(spans, Seq("doc_id"), "left")
-      .withColumn("n_removed", coalesce(col("n_removed"), lit(0L)))
-      .groupBy("source", "lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_docs"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_quality"),
-        sum(col("simpson").cast("decimal(20,6)")).as("sumdec"),
+      .withColumn("n_removed", coalesce(col("n_removed"), lit(0L))), Seq(
         sum(when(col("bucket") === 0L, 1L).otherwise(0L)).as("n_ppl_head"),
         sum(when(col("bucket") === 1L, 1L).otherwise(0L)).as("n_ppl_mid"),
         sum(when(col("bucket") === 2L, 1L).otherwise(0L)).as("n_ppl_tail"),
         sum(col("n_pii")).as("total_pii"),
         sum(when(col("n_pii") > 0L, 1L).otherwise(0L)).as("n_pii_docs"),
         sum(col("n_removed")).as("total_span_tokens"),
-        sum(when(col("n_removed") > 0L, 1L).otherwise(0L)).as("n_span_docs"))
-      .select(col("source"), col("lang"), col("n_docs"), col("total_tokens"),
-        col("n_dup_docs"),
-        round(col("n_dup_docs").cast("double") / col("n_docs"), 6).as("dup_rate"),
-        col("n_quality"),
-        round(col("n_quality").cast("double") / col("n_docs"), 6).as("quality_rate"),
-        round(col("sumdec").cast("double") / col("n_docs"), 6).as("mean_simpson"),
+        sum(when(col("n_removed") > 0L, 1L).otherwise(0L)).as("n_span_docs")), Seq(
         col("n_ppl_head"), col("n_ppl_mid"), col("n_ppl_tail"),
         col("total_pii"), col("n_pii_docs"),
         round(col("n_pii_docs").cast("double") / col("n_docs"), 6).as("pii_doc_rate"),
         col("total_span_tokens"), col("n_span_docs"),
         round(col("total_span_tokens").cast("double") /
-          col("total_tokens").cast("double"), 6).as("span_token_rate"))
-      .orderBy("source", "lang")
+          col("total_tokens").cast("double"), 6).as("span_token_rate")))
   }
 
   /** Shared replay of the quality-filter signal chain (base/tc/ts/bg/bs
@@ -1347,6 +1331,42 @@ object PipelineOps {
       "COALESCE(n_dup, 0) * 10 <= COALESCE(n_bigrams, 0) * 3 AND " +
       "n_stop_types >= 2"
 
+  /** The dataset-card replay: the per-doc signals — exact-dup first-copy
+    * (the c1_exact_dedup md5 grouping), the quality-filter keep (shared
+    * qualityCtes), and the diversity index (the c4_diversity formula over
+    * the shared tc CTE) — joined in `per`, then the (source, lang)
+    * rollup. `ctes` (each followed by ", "), `perCols`, `perJoins` and
+    * `aggs` extend it, as [[datasetCard]]'s extra joins, aggregates and
+    * columns do. Simpson means sum as DECIMAL(20,6) so the cross-engine
+    * hash is independent of aggregation order.
+    */
+  private def datasetCardSql(ctes: String, perCols: Seq[String],
+      perJoins: Seq[String], aggs: Seq[String]): String =
+    s"WITH $qualityCtes, " +
+      s"qf AS (SELECT base.doc_id, ($qualityKeepSql) AS keep " +
+      "FROM base LEFT JOIN ts USING (doc_id) LEFT JOIN bs USING (doc_id)), " +
+      "dv AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, " +
+      "round(1.0 - CAST(sum(c*c) AS DOUBLE) / (sum(c) * sum(c)), 6) AS simpson " +
+      "FROM tc GROUP BY doc_id), " + ctes +
+      "d AS (SELECT doc_id, source, lang, md5(text) AS h FROM documents), " +
+      "fst AS (SELECT h, min(doc_id) AS first_id FROM d GROUP BY h), " +
+      "per AS (SELECT d.doc_id, d.source, d.lang, " +
+      ("d.doc_id <> f.first_id AS is_dup, qf.keep, dv.simpson, dv.n_tokens" +: perCols)
+        .mkString(", ") + " FROM d JOIN fst f USING (h) " +
+      ("JOIN qf ON qf.doc_id = d.doc_id JOIN dv ON dv.doc_id = d.doc_id" +: perJoins)
+        .mkString(" ") + ") " +
+      "SELECT source, lang, " + (Seq("count(*) AS n_docs",
+        "CAST(sum(n_tokens) AS BIGINT) AS total_tokens",
+        "CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs",
+        "round(CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
+          "AS dup_rate",
+        "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_quality",
+        "round(CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
+          "AS quality_rate",
+        "round(CAST(sum(CAST(simpson AS DECIMAL(20,6))) AS DOUBLE) / count(*), 6) " +
+          "AS mean_simpson") ++ aggs).mkString(", ") +
+      " FROM per GROUP BY source, lang ORDER BY source, lang"
+
   /** Shared fuzzy-decontamination replay (IncBands MinHash chain over
     * the portable split buckets, exact-Jaccard confirm, best pick),
     * parameterized on the candidate CTE so the full-candidate and
@@ -1354,16 +1374,14 @@ object PipelineOps {
     * incrementalSqlWith pattern applied to the split-based form.
     */
   private def fuzzySqlWith(candCte: String): String = {
-    val t8 = (0.8 * 4294967296L).toLong
-    val t9 = (0.9 * 4294967296L).toLong
     s"WITH sb AS (SELECT doc_id, $bucketSqlDuck AS sb FROM documents), " +
       "base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-      s"FROM documents WHERE $bucketSqlDuck < $t8 OR $bucketSqlDuck >= $t9), " +
+      s"FROM documents WHERE $bucketSqlDuck < $TrainBelow OR $bucketSqlDuck >= $TestFrom), " +
       DedupOps.mhChainSql(DedupOps.IncBands, DedupOps.IncRows) + ", " +
       "nw AS (SELECT mem.doc_id AS n_id, band, bucket FROM mem " +
-      s"JOIN sb ON mem.doc_id = sb.doc_id WHERE sb.sb < $t8), " +
+      s"JOIN sb ON mem.doc_id = sb.doc_id WHERE sb.sb < $TrainBelow), " +
       "cp AS (SELECT mem.doc_id AS c_id, band, bucket FROM mem " +
-      s"JOIN sb ON mem.doc_id = sb.doc_id WHERE sb.sb >= $t9), " +
+      s"JOIN sb ON mem.doc_id = sb.doc_id WHERE sb.sb >= $TestFrom), " +
       candCte + ", " +
       "sc AS (SELECT n_id, c_id, " +
       "len(list_filter(a.toks, t -> list_contains(b.toks, t))) AS common, " +
@@ -1372,15 +1390,71 @@ object PipelineOps {
       "JOIN base b ON b.doc_id = cand.c_id), " +
       "cf AS (SELECT n_id, c_id, " +
       "round(CAST(common AS DOUBLE) / (na + nb - common), 6) AS jaccard " +
-      "FROM sc WHERE round(CAST(common AS DOUBLE) / (na + nb - common), 6) >= 0.8), " +
+      s"FROM sc WHERE round(CAST(common AS DOUBLE) / (na + nb - common), 6) >= $FuzzyThreshold), " +
       "best AS (SELECT n_id, c_id, jaccard, row_number() OVER " +
       "(PARTITION BY n_id ORDER BY jaccard DESC, c_id) AS rn FROM cf) " +
       "SELECT b.doc_id, m.c_id IS NOT NULL AS contaminated, " +
       "m.c_id AS test_match_id, m.jaccard AS match_jaccard " +
-      s"FROM (SELECT doc_id FROM sb WHERE sb < $t8) b " +
+      s"FROM (SELECT doc_id FROM sb WHERE sb < $TrainBelow) b " +
       "LEFT JOIN (SELECT n_id, c_id, jaccard FROM best WHERE rn = 1) m " +
       "ON b.doc_id = m.n_id ORDER BY doc_id"
   }
+
+  /** The pipeline prologue replay (MinHash first-copy, lang-id
+    * agreement, length floor, train bucket), from `WITH` through
+    * `kept(lang, doc_id, carry…, n_tokens)` — [[pipelineKept]]; the
+    * scrubbing pipelines carry `d.text` for the span chain.
+    */
+  private def pipelineKeptSql(carry: String*): String =
+    "WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
+      "FROM documents), " +
+      DedupOps.mhChainSql(bands = 4, rows = 16) + ", " +
+      "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
+      "AS bucket_min FROM mem), " +
+      "asg AS (SELECT doc_id, doc_id = min(bucket_min) AS first_copy " +
+      "FROM mm GROUP BY doc_id), " +
+      TextOps.langIdCtes + ", " +
+      "det AS (SELECT doc_id, struct_extract(best, 'code') AS detected_lang FROM b), " +
+      s"kept AS (SELECT ${("d.lang" +: "d.doc_id" +: carry).mkString(", ")}, " +
+      "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens " +
+      "FROM documents d JOIN asg USING (doc_id) JOIN det USING (doc_id) " +
+      "WHERE asg.first_copy AND det.detected_lang = d.lang " +
+      s"AND len(string_split(d.text, ' ')) >= $PipelineMinTokens " +
+      s"AND $bucketSqlDuck < $TrainBelow)"
+
+  /** [[scrubFloor]] then [[packTail]] replayed over relation `rel`
+    * carrying `cols` (lang, doc_id, n_tokens, …) and `text`: the
+    * z-prefixed span chain and removed counts (langIdCtes already owns
+    * t/s/b), the effective-length floor `k2`, the running sum `p2` and
+    * the packing SELECT over n_eff.
+    */
+  private def scrubPackSql(rel: String, cols: Seq[String]): String = {
+    val eff = s"$rel.n_tokens - COALESCE(zrm.n_removed, 0)"
+    TextOps.scrubRemovedSql(rel) + ", " +
+      s"k2 AS (SELECT ${cols.map(c => s"$rel.$c").mkString(", ")}, " +
+      "CAST(COALESCE(zrm.n_removed, 0) AS BIGINT) AS n_removed, " +
+      s"$eff AS n_eff FROM $rel LEFT JOIN zrm USING (doc_id) " +
+      s"WHERE $eff >= $PipelineMinTokens), " +
+      s"p2 AS (SELECT ${cols.mkString(", ")}, n_removed, n_eff, " +
+      "CAST(SUM(n_eff) OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) " +
+      "AS cum FROM k2) " +
+      packSelectSql(cols.drop(2) ++ Seq("n_removed", "CAST(n_eff AS BIGINT) AS n_eff"),
+        "n_eff", "p2")
+  }
+
+  /** The string-exact replay of the hashed decontamination join, shared
+    * by c7_decontaminate and c7_decontaminate_bloom.
+    */
+  private val decontamSql: String =
+    s"WITH d AS (SELECT doc_id, $bucketSqlDuck AS bucket, string_split(text, ' ') AS toks " +
+      "FROM documents), " +
+      s"sh AS (SELECT doc_id, bucket, unnest(list_transform(range(1, len(toks) - ${ShingleK - 2}), " +
+      s"i -> array_to_string(list_slice(toks, i, i + ${ShingleK - 1}), ' '))) AS sh FROM d), " +
+      s"te AS (SELECT DISTINCT sh FROM sh WHERE bucket >= $TestFrom), " +
+      s"tr AS (SELECT doc_id, sh FROM sh WHERE bucket < $TrainBelow) " +
+      "SELECT doc_id, count(*) AS n_hits, " +
+      "CAST(count(DISTINCT sh) AS BIGINT) AS n_shingles_hit " +
+      "FROM tr JOIN te USING (sh) GROUP BY doc_id ORDER BY doc_id"
 
   val oracle: Map[String, String] = Map(
     "c7_interleave" ->
@@ -1401,7 +1475,7 @@ object PipelineOps {
         "r AS (SELECT doc_id, n_tokens, CAST(row_number() OVER " +
         "(ORDER BY n_tokens, doc_id) AS BIGINT) AS rank FROM t) " +
         "SELECT doc_id, n_tokens, rank, " +
-        "CAST((rank - 1) * 4 // nd + 1 AS INT) AS phase " +
+        s"CAST((rank - 1) * $CurriculumPhases // nd + 1 AS INT) AS phase " +
         "FROM r, n ORDER BY doc_id"),
     // The same exact global (n_tokens, doc_id) rank, striped mod 16.
     "c7_shard_balance" ->
@@ -1409,7 +1483,7 @@ object PipelineOps {
         "AS n_tokens FROM documents), " +
         "r AS (SELECT doc_id, n_tokens, row_number() OVER " +
         "(ORDER BY n_tokens, doc_id) AS rank FROM t) " +
-        "SELECT CAST((rank - 1) % 16 AS INT) AS shard, count(*) AS n_docs, " +
+        s"SELECT CAST((rank - 1) % $Shards AS INT) AS shard, count(*) AS n_docs, " +
         "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
         "CAST(sum(doc_id) AS BIGINT) AS idsum " +
         "FROM r GROUP BY 1 ORDER BY shard"),
@@ -1419,10 +1493,10 @@ object PipelineOps {
     "c7_contamination" ->
       (s"WITH d AS (SELECT doc_id, $bucketSqlDuck AS bucket, string_split(text, ' ') AS toks " +
         "FROM documents), " +
-        "sh AS (SELECT doc_id, bucket, unnest(list_transform(range(1, len(toks) - 2), " +
-        "i -> array_to_string(list_slice(toks, i, i + 3), ' '))) AS sh FROM d), " +
-        s"te AS (SELECT DISTINCT doc_id, sh FROM sh WHERE bucket >= ${(0.9 * 4294967296L).toLong}), " +
-        s"leaked AS (SELECT DISTINCT sh FROM sh WHERE bucket < ${(0.8 * 4294967296L).toLong} " +
+        s"sh AS (SELECT doc_id, bucket, unnest(list_transform(range(1, len(toks) - ${ShingleK - 2}), " +
+        s"i -> array_to_string(list_slice(toks, i, i + ${ShingleK - 1}), ' '))) AS sh FROM d), " +
+        s"te AS (SELECT DISTINCT doc_id, sh FROM sh WHERE bucket >= $TestFrom), " +
+        s"leaked AS (SELECT DISTINCT sh FROM sh WHERE bucket < $TrainBelow " +
         "AND sh IN (SELECT sh FROM te)) " +
         "SELECT te.doc_id, count(*) AS n_shingles, count(leaked.sh) AS n_hit, " +
         "count(leaked.sh) * 10 >= count(*) AS dirty " +
@@ -1479,49 +1553,13 @@ object PipelineOps {
         s"($qualityKeepSql) AS keep " +
         "FROM base LEFT JOIN ts USING (doc_id) LEFT JOIN bs USING (doc_id) " +
         "ORDER BY doc_id"),
-    // Dataset card: the per-(source, lang) profile composed from the
-    // ALREADY-proven per-doc signals — exact-dup first-copy (the
-    // c1_exact_dedup md5 grouping), the quality-filter keep (shared
-    // qualityCtes), and the diversity index (the c4_diversity formula
-    // over the shared tc CTE). Simpson means sum as DECIMAL(20,6) so
-    // the cross-engine hash is independent of aggregation order.
-    "c7_dataset_card" ->
-      (s"WITH $qualityCtes, " +
-        s"qf AS (SELECT base.doc_id, ($qualityKeepSql) AS keep " +
-        "FROM base LEFT JOIN ts USING (doc_id) LEFT JOIN bs USING (doc_id)), " +
-        "dv AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, " +
-        "round(1.0 - CAST(sum(c*c) AS DOUBLE) / (sum(c) * sum(c)), 6) AS simpson " +
-        "FROM tc GROUP BY doc_id), " +
-        "d AS (SELECT doc_id, source, lang, md5(text) AS h FROM documents), " +
-        "fst AS (SELECT h, min(doc_id) AS first_id FROM d GROUP BY h), " +
-        "per AS (SELECT d.doc_id, d.source, d.lang, " +
-        "d.doc_id <> f.first_id AS is_dup, qf.keep, dv.simpson, dv.n_tokens " +
-        "FROM d JOIN fst f USING (h) " +
-        "JOIN qf ON qf.doc_id = d.doc_id JOIN dv ON dv.doc_id = d.doc_id) " +
-        "SELECT source, lang, count(*) AS n_docs, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-        "CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs, " +
-        "round(CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
-        "AS dup_rate, " +
-        "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_quality, " +
-        "round(CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
-        "AS quality_rate, " +
-        "round(CAST(sum(CAST(simpson AS DECIMAL(20,6))) AS DOUBLE) / count(*), 6) " +
-        "AS mean_simpson " +
-        "FROM per GROUP BY source, lang ORDER BY source, lang"),
-    // V2 card replay: the v1 fragments verbatim, plus the lm-prefixed
-    // reference-LM chain with the c7_ppl_filter tercile, the
-    // c4_pii_scrub counts, and the z-prefixed span chain's per-doc
-    // removed sums — all joined per doc, then the same (source, lang)
-    // rollup with the new exposure columns.
-    "c7_dataset_card_v2" ->
-      (s"WITH $qualityCtes, " +
-        s"qf AS (SELECT base.doc_id, ($qualityKeepSql) AS keep " +
-        "FROM base LEFT JOIN ts USING (doc_id) LEFT JOIN bs USING (doc_id)), " +
-        "dv AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, " +
-        "round(1.0 - CAST(sum(c*c) AS DOUBLE) / (sum(c) * sum(c)), 6) AS simpson " +
-        "FROM tc GROUP BY doc_id), " +
-        TextOps.lmPplRefCtes + ", " +
+    "c7_dataset_card" -> datasetCardSql("", Nil, Nil, Nil),
+    // V2 card replay: the v1 card, plus the lm-prefixed reference-LM
+    // chain with the c7_ppl_filter tercile, the c4_pii_scrub counts, and
+    // the z-prefixed span chain's per-doc removed sums — all joined per
+    // doc, then the same (source, lang) rollup with the exposure columns.
+    "c7_dataset_card_v2" -> datasetCardSql(
+      TextOps.lmPplRefCtes + ", " +
         "pj AS (SELECT dd.lang, p.doc_id, p.nll " +
         "FROM lmres p JOIN documents dd USING (doc_id)), " +
         "pr AS (SELECT doc_id, CAST(row_number() OVER " +
@@ -1532,50 +1570,21 @@ object PipelineOps {
         TextOps.PiiPatterns.map { case (_, pat, _) =>
           s"CAST(len(regexp_extract_all(text, '$pat')) AS BIGINT)"
         }.mkString(" + ") + " AS n_pii FROM documents), " +
-        TextOps.ssdupChainOver("documents", "z") + ", " +
-        "zsp AS (SELECT d1, d2, diag, min(o1) AS a0, max(o1) AS a1 " +
-        "FROM zi GROUP BY d1, d2, diag, isl), " +
-        "zrem AS (SELECT DISTINCT d2 AS doc_id, a0 + diag AS s, " +
-        "a0 + diag + (a1 - a0 + 16) - 1 AS e FROM zsp), " +
-        "zmx AS (SELECT *, max(e) OVER (PARTITION BY doc_id ORDER BY s, e " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe FROM zrem), " +
-        "zg AS (SELECT *, sum(CASE WHEN maxe IS NULL OR s > maxe THEN 1 " +
-        "ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp FROM zmx), " +
-        "zmi AS (SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM zg " +
-        "GROUP BY doc_id, grp), " +
-        "zrm AS (SELECT doc_id, CAST(sum(e - s + 1) AS BIGINT) AS n_removed " +
-        "FROM zmi GROUP BY doc_id), " +
-        "d AS (SELECT doc_id, source, lang, md5(text) AS h FROM documents), " +
-        "fst AS (SELECT h, min(doc_id) AS first_id FROM d GROUP BY h), " +
-        "per AS (SELECT d.doc_id, d.source, d.lang, " +
-        "d.doc_id <> f.first_id AS is_dup, qf.keep, dv.simpson, dv.n_tokens, " +
-        "pb.bucket, pz.n_pii, COALESCE(zrm.n_removed, 0) AS n_removed " +
-        "FROM d JOIN fst f USING (h) " +
-        "JOIN qf ON qf.doc_id = d.doc_id JOIN dv ON dv.doc_id = d.doc_id " +
-        "JOIN pb ON pb.doc_id = d.doc_id JOIN pz ON pz.doc_id = d.doc_id " +
-        "LEFT JOIN zrm ON zrm.doc_id = d.doc_id) " +
-        "SELECT source, lang, count(*) AS n_docs, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-        "CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs, " +
-        "round(CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
-        "AS dup_rate, " +
-        "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_quality, " +
-        "round(CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
-        "AS quality_rate, " +
-        "round(CAST(sum(CAST(simpson AS DECIMAL(20,6))) AS DOUBLE) / count(*), 6) " +
-        "AS mean_simpson, " +
-        "CAST(sum(CASE WHEN bucket = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ppl_head, " +
-        "CAST(sum(CASE WHEN bucket = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_ppl_mid, " +
-        "CAST(sum(CASE WHEN bucket = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_ppl_tail, " +
-        "CAST(sum(n_pii) AS BIGINT) AS total_pii, " +
-        "CAST(sum(CASE WHEN n_pii > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_docs, " +
+        TextOps.scrubRemovedSql("documents") + ", ",
+      Seq("pb.bucket", "pz.n_pii", "COALESCE(zrm.n_removed, 0) AS n_removed"),
+      Seq("JOIN pb ON pb.doc_id = d.doc_id", "JOIN pz ON pz.doc_id = d.doc_id",
+        "LEFT JOIN zrm ON zrm.doc_id = d.doc_id"),
+      Seq("CAST(sum(CASE WHEN bucket = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ppl_head",
+        "CAST(sum(CASE WHEN bucket = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_ppl_mid",
+        "CAST(sum(CASE WHEN bucket = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_ppl_tail",
+        "CAST(sum(n_pii) AS BIGINT) AS total_pii",
+        "CAST(sum(CASE WHEN n_pii > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_docs",
         "round(CAST(sum(CASE WHEN n_pii > 0 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) " +
-        "AS pii_doc_rate, " +
-        "CAST(sum(n_removed) AS BIGINT) AS total_span_tokens, " +
-        "CAST(sum(CASE WHEN n_removed > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_span_docs, " +
+          "AS pii_doc_rate",
+        "CAST(sum(n_removed) AS BIGINT) AS total_span_tokens",
+        "CAST(sum(CASE WHEN n_removed > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_span_docs",
         "round(CAST(sum(n_removed) AS DOUBLE) / CAST(sum(n_tokens) AS DOUBLE), 6) " +
-        "AS span_token_rate " +
-        "FROM per GROUP BY source, lang ORDER BY source, lang"),
+          "AS span_token_rate")),
     // Weighted priority replay: integer (bucket*2^20)//weight keys
     // (pre-scaled so bucket<weight can't collapse to 0), the k smallest
     // by (priority, doc_id).
@@ -1583,14 +1592,14 @@ object PipelineOps {
       ("SELECT doc_id, lang, n_chars, " +
         s"(($bucketSqlDuck) * 1048576) // greatest(n_chars, 1) " +
         "AS priority " +
-        "FROM documents ORDER BY priority, doc_id LIMIT 100"),
+        s"FROM documents ORDER BY priority, doc_id LIMIT $WeightedSampleK"),
     // Epoch-salted permutation replay: the per-epoch rank over the
     // (ekey, doc_id) total order. The epoch-dependent odd multiplier
     // mirrors c7EpochOrder exactly (additive salts only rotate), and
     // the 16/16 split mulmod mirrors the engine's overflow-safe form
     // (DuckDB would ERROR on the naive int64 overflow Spark wraps).
     "c7_epoch_order" ->
-      ("WITH e AS (SELECT doc_id, unnest([0, 1, 2]) AS epoch FROM documents), " +
+      (s"WITH e AS (SELECT doc_id, unnest(${(0 until Epochs).mkString("[", ", ", "]")}) AS epoch FROM documents), " +
         "k AS (SELECT doc_id, epoch, " +
         "(2654435761 + 2 * epoch * 2246822519) % 4294967296 AS em, " +
         "((doc_id % 4294967296) + 4294967296) % 4294967296 AS d32 FROM e), " +
@@ -1605,35 +1614,17 @@ object PipelineOps {
         s"SELECT lang, doc_id, $bucketSqlDuck AS bucket, " +
         "CAST(row_number() OVER (PARTITION BY lang " +
         s"ORDER BY $bucketSqlDuck, doc_id) AS INT) AS rn " +
-        "FROM documents) WHERE rn <= 50 ORDER BY lang, rn"),
+        s"FROM documents) WHERE rn <= $QuotaK ORDER BY lang, rn"),
     // The full composed pipeline: MinHash first-copy (the c2_minhash_lsh
     // replay), lang-id agreement (the c4_langid CTEs), length gate,
     // train bucket, then the pack window over the SURVIVING set — every
     // stage is the same SQL already proven bit-exact on its own query.
     "c7_pipeline" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        DedupOps.mhChainSql(bands = 4, rows = 16) + ", " +
-        "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-        "AS bucket_min FROM mem), " +
-        "asg AS (SELECT doc_id, doc_id = min(bucket_min) AS first_copy " +
-        "FROM mm GROUP BY doc_id), " +
-        TextOps.langIdCtes + ", " +
-        "det AS (SELECT doc_id, struct_extract(best, 'code') AS detected_lang FROM b), " +
-        "kept AS (SELECT d.lang, d.doc_id, " +
-        "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens " +
-        "FROM documents d JOIN asg USING (doc_id) JOIN det USING (doc_id) " +
-        "WHERE asg.first_copy AND det.detected_lang = d.lang " +
-        "AND len(string_split(d.text, ' ')) >= 10 " +
-        s"AND $bucketSqlDuck < ${(0.8 * 4294967296L).toLong}), " +
+      (pipelineKeptSql() + ", " +
         "p AS (SELECT lang, doc_id, n_tokens, " +
         "CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) " +
         "AS cum FROM kept) " +
-        "SELECT lang, doc_id, n_tokens, " +
-        "(cum - n_tokens) // 2048 AS first_seq, " +
-        "(cum - 1) // 2048 AS last_seq, " +
-        "((cum - 1) // 2048) - ((cum - n_tokens) // 2048) + 1 AS n_seqs " +
-        "FROM p ORDER BY lang, doc_id"),
+        packSelectSql(Seq("n_tokens"), "n_tokens", "p")),
     // CCNet tercile replay: the shared lm chain's per-doc nll, the
     // deterministic (nll, doc_id) per-lang rank, integer tercile split.
     "c7_ppl_filter" ->
@@ -1647,72 +1638,17 @@ object PipelineOps {
         "SELECT lang, doc_id, nll, (3 * (rk - 1)) // n AS bucket, " +
         "((3 * (rk - 1)) // n) <= 1 AS keep " +
         "FROM r ORDER BY lang, doc_id"),
-    // V2 replay: the v1 prologue (kept now carries text), the span
-    // chain over kept (z-prefixed names — langIdCtes already owns
-    // t/s/b), the interval union, Σ-length removed counts, the re-applied
-    // effective-length floor, and packing over n_eff.
+    // V2 replay: the v1 prologue (kept now carries text), then the
+    // scrub-floor-pack replay over kept.
     "c7_pipeline_v2" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        DedupOps.mhChainSql(bands = 4, rows = 16) + ", " +
-        "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-        "AS bucket_min FROM mem), " +
-        "asg AS (SELECT doc_id, doc_id = min(bucket_min) AS first_copy " +
-        "FROM mm GROUP BY doc_id), " +
-        TextOps.langIdCtes + ", " +
-        "det AS (SELECT doc_id, struct_extract(best, 'code') AS detected_lang FROM b), " +
-        "kept AS (SELECT d.lang, d.doc_id, d.text, " +
-        "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens " +
-        "FROM documents d JOIN asg USING (doc_id) JOIN det USING (doc_id) " +
-        "WHERE asg.first_copy AND det.detected_lang = d.lang " +
-        "AND len(string_split(d.text, ' ')) >= 10 " +
-        s"AND $bucketSqlDuck < ${(0.8 * 4294967296L).toLong}), " +
-        TextOps.ssdupChainOver("kept", "z") + ", " +
-        "zsp AS (SELECT d1, d2, diag, min(o1) AS a0, max(o1) AS a1 " +
-        "FROM zi GROUP BY d1, d2, diag, isl), " +
-        "zrem AS (SELECT DISTINCT d2 AS doc_id, a0 + diag AS s, " +
-        "a0 + diag + (a1 - a0 + 16) - 1 AS e FROM zsp), " +
-        "zmx AS (SELECT *, max(e) OVER (PARTITION BY doc_id ORDER BY s, e " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe FROM zrem), " +
-        "zg AS (SELECT *, sum(CASE WHEN maxe IS NULL OR s > maxe THEN 1 " +
-        "ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp FROM zmx), " +
-        "zmi AS (SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM zg " +
-        "GROUP BY doc_id, grp), " +
-        "zrm AS (SELECT doc_id, CAST(sum(e - s + 1) AS BIGINT) AS n_removed " +
-        "FROM zmi GROUP BY doc_id), " +
-        "k2 AS (SELECT kept.lang, kept.doc_id, kept.n_tokens, " +
-        "CAST(COALESCE(zrm.n_removed, 0) AS BIGINT) AS n_removed, " +
-        "kept.n_tokens - COALESCE(zrm.n_removed, 0) AS n_eff " +
-        "FROM kept LEFT JOIN zrm USING (doc_id) " +
-        "WHERE kept.n_tokens - COALESCE(zrm.n_removed, 0) >= 10), " +
-        "p2 AS (SELECT lang, doc_id, n_tokens, n_removed, n_eff, " +
-        "CAST(SUM(n_eff) OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) " +
-        "AS cum FROM k2) " +
-        "SELECT lang, doc_id, n_tokens, n_removed, CAST(n_eff AS BIGINT) AS n_eff, " +
-        "(cum - n_eff) // 2048 AS first_seq, " +
-        "(cum - 1) // 2048 AS last_seq, " +
-        "((cum - 1) // 2048) - ((cum - n_eff) // 2048) + 1 AS n_seqs " +
-        "FROM p2 ORDER BY lang, doc_id"),
-    // V3 replay: the v1 prologue, the lm-prefixed reference-LM chain
+      (pipelineKeptSql("d.text") + ", " +
+        scrubPackSql("kept", Seq("lang", "doc_id", "n_tokens"))),
+    // V3 replay: the v2 prologue, the lm-prefixed reference-LM chain
     // (names disjoint by prefix), the per-lang tercile over the kept
-    // slice, then v2's z-chain/floor/packing over the ppl-kept
+    // slice, then v2's scrub-floor-pack replay over the ppl-kept
     // survivors.
     "c7_pipeline_v3" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        DedupOps.mhChainSql(bands = 4, rows = 16) + ", " +
-        "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-        "AS bucket_min FROM mem), " +
-        "asg AS (SELECT doc_id, doc_id = min(bucket_min) AS first_copy " +
-        "FROM mm GROUP BY doc_id), " +
-        TextOps.langIdCtes + ", " +
-        "det AS (SELECT doc_id, struct_extract(best, 'code') AS detected_lang FROM b), " +
-        "kept AS (SELECT d.lang, d.doc_id, d.text, " +
-        "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens " +
-        "FROM documents d JOIN asg USING (doc_id) JOIN det USING (doc_id) " +
-        "WHERE asg.first_copy AND det.detected_lang = d.lang " +
-        "AND len(string_split(d.text, ' ')) >= 10 " +
-        s"AND $bucketSqlDuck < ${(0.8 * 4294967296L).toLong}), " +
+      (pipelineKeptSql("d.text") + ", " +
         TextOps.lmPplRefCtes + ", " +
         "pj AS (SELECT k.lang, k.doc_id, k.text, k.n_tokens, p.nll " +
         "FROM kept k JOIN lmres p USING (doc_id)), " +
@@ -1721,43 +1657,13 @@ object PipelineOps {
         "count(*) OVER (PARTITION BY lang) AS n FROM pj), " +
         "pk AS (SELECT lang, doc_id, text, n_tokens, nll FROM pr " +
         "WHERE (3 * (rk - 1)) // n <= 1), " +
-        TextOps.ssdupChainOver("pk", "z") + ", " +
-        "zsp AS (SELECT d1, d2, diag, min(o1) AS a0, max(o1) AS a1 " +
-        "FROM zi GROUP BY d1, d2, diag, isl), " +
-        "zrem AS (SELECT DISTINCT d2 AS doc_id, a0 + diag AS s, " +
-        "a0 + diag + (a1 - a0 + 16) - 1 AS e FROM zsp), " +
-        "zmx AS (SELECT *, max(e) OVER (PARTITION BY doc_id ORDER BY s, e " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe FROM zrem), " +
-        "zg AS (SELECT *, sum(CASE WHEN maxe IS NULL OR s > maxe THEN 1 " +
-        "ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp FROM zmx), " +
-        "zmi AS (SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM zg " +
-        "GROUP BY doc_id, grp), " +
-        "zrm AS (SELECT doc_id, CAST(sum(e - s + 1) AS BIGINT) AS n_removed " +
-        "FROM zmi GROUP BY doc_id), " +
-        "k2 AS (SELECT pk.lang, pk.doc_id, pk.n_tokens, pk.nll, " +
-        "CAST(COALESCE(zrm.n_removed, 0) AS BIGINT) AS n_removed, " +
-        "pk.n_tokens - COALESCE(zrm.n_removed, 0) AS n_eff " +
-        "FROM pk LEFT JOIN zrm USING (doc_id) " +
-        "WHERE pk.n_tokens - COALESCE(zrm.n_removed, 0) >= 10), " +
-        "p2 AS (SELECT lang, doc_id, n_tokens, nll, n_removed, n_eff, " +
-        "CAST(SUM(n_eff) OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) " +
-        "AS cum FROM k2) " +
-        "SELECT lang, doc_id, n_tokens, nll, n_removed, " +
-        "CAST(n_eff AS BIGINT) AS n_eff, " +
-        "(cum - n_eff) // 2048 AS first_seq, " +
-        "(cum - 1) // 2048 AS last_seq, " +
-        "((cum - 1) // 2048) - ((cum - n_eff) // 2048) + 1 AS n_seqs " +
-        "FROM p2 ORDER BY lang, doc_id"),
-    "c7_pack_sequences" ->
-      ("SELECT lang, doc_id, n_tokens, " +
-        "(cum - n_tokens) // 2048 AS first_seq, " +
-        "(cum - 1) // 2048 AS last_seq, " +
-        "((cum - 1) // 2048) - ((cum - n_tokens) // 2048) + 1 AS n_seqs " +
-        "FROM (SELECT lang, doc_id, " +
+        scrubPackSql("pk", Seq("lang", "doc_id", "n_tokens", "nll"))),
+    "c7_pack_sequences" -> packSelectSql(Seq("n_tokens"), "n_tokens",
+      "(SELECT lang, doc_id, " +
         "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, " +
         "CAST(SUM(len(string_split(text, ' '))) OVER " +
         "(PARTITION BY lang ORDER BY doc_id) AS BIGINT) AS cum " +
-        "FROM documents) ORDER BY lang, doc_id"),
+        "FROM documents)"),
     "c7_curate" ->
       (s"WITH ${TextOps.langIdCtes}, " +
         "det AS (SELECT doc_id, struct_extract(best, 'code') AS detected_lang FROM b), " +
@@ -1767,28 +1673,19 @@ object PipelineOps {
         "len(string_split(d.text, ' ')) AS n_tokens " +
         "FROM documents d JOIN det ON det.doc_id = d.doc_id) " +
         "SELECT doc_id, lang, detected_lang, first_copy, " +
-        "(first_copy AND detected_lang = lang AND n_tokens >= 40) AS keep " +
+        s"(first_copy AND detected_lang = lang AND n_tokens >= $CurateMinTokens) AS keep " +
         "FROM d2 ORDER BY doc_id"),
-    "c7_decontaminate" ->
-      (s"WITH d AS (SELECT doc_id, $bucketSqlDuck AS bucket, string_split(text, ' ') AS toks " +
-        "FROM documents), " +
-        "sh AS (SELECT doc_id, bucket, unnest(list_transform(range(1, len(toks) - 2), " +
-        "i -> array_to_string(list_slice(toks, i, i + 3), ' '))) AS sh FROM d), " +
-        s"te AS (SELECT DISTINCT sh FROM sh WHERE bucket >= ${(0.9 * 4294967296L).toLong}), " +
-        s"tr AS (SELECT doc_id, sh FROM sh WHERE bucket < ${(0.8 * 4294967296L).toLong}) " +
-        "SELECT doc_id, count(*) AS n_hits, " +
-        "CAST(count(DISTINCT sh) AS BIGINT) AS n_shingles_hit " +
-        "FROM tr JOIN te USING (sh) GROUP BY doc_id ORDER BY doc_id"),
+    "c7_decontaminate" -> decontamSql,
     "c7_token_budget" ->
       ("SELECT lang, doc_id, n_tokens, cum_tokens FROM (" +
         "SELECT lang, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, " +
         "CAST(SUM(len(string_split(text, ' '))) OVER " +
         "(PARTITION BY lang ORDER BY doc_id) AS BIGINT) AS cum_tokens " +
-        "FROM documents) WHERE cum_tokens <= 5000 ORDER BY lang, doc_id"),
+        s"FROM documents) WHERE cum_tokens <= $TokenBudget ORDER BY lang, doc_id"),
     // BPE-priced budget: the c4_bpe_encode chain (word-type pricing)
     // then the same per-lang prefix-sum selection.
     "c7_token_budget_bpe" ->
-      (s"WITH RECURSIVE ${TextOps.bpeChainCtes()}, " +
+      (s"WITH RECURSIVE ${TextOps.bpeChainCtes}, " +
         "enc AS (SELECT word, len(string_split(seq, ' ')) AS n_bpe " +
         s"FROM w${TextOps.BpeRounds}), " +
         "wd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word " +
@@ -1802,41 +1699,31 @@ object PipelineOps {
         "CAST(SUM(n_bpe_tokens) OVER (PARTITION BY lang ORDER BY doc_id) " +
         "AS BIGINT) AS cum_bpe FROM b) " +
         "SELECT lang, doc_id, n_bpe_tokens, cum_bpe FROM r " +
-        "WHERE cum_bpe <= 20000 ORDER BY lang, doc_id"),
+        s"WHERE cum_bpe <= $BpeTokenBudget ORDER BY lang, doc_id"),
     // Substring-decontamination replay: the shared span chain filtered
     // to cross-split pairs, same argmax tie-break via struct max.
     "c7_decontaminate_span" -> {
       // The shared overflow-safe split mulmod ([[knuthBucketSql]]),
       // applied to each side of the span pair.
       val b = (c: String) => s"(${knuthBucketSql(c, "//")})"
-      val (lo, hi) = ((0.8 * 4294967296L).toLong, (0.9 * 4294967296L).toLong)
       s"WITH ${TextOps.ssdupChain}, " +
         "sp AS (SELECT d1, d2, min(o1) AS a0, " +
-        "CAST(max(o1) - min(o1) + 16 AS INT) AS span_len " +
+        s"CAST(max(o1) - min(o1) + ${TextOps.SpanWindow} AS INT) AS span_len " +
         "FROM i GROUP BY d1, d2, diag, isl), " +
-        s"cx AS (SELECT CASE WHEN ${b("d1")} < $lo THEN d1 ELSE d2 END AS doc_id, " +
-        s"CASE WHEN ${b("d1")} < $lo THEN d2 ELSE d1 END AS test_doc, span_len " +
-        s"FROM sp WHERE (${b("d1")} < $lo AND ${b("d2")} >= $hi) " +
-        s"OR (${b("d1")} >= $hi AND ${b("d2")} < $lo)) " +
+        s"cx AS (SELECT CASE WHEN ${b("d1")} < $TrainBelow THEN d1 ELSE d2 END AS doc_id, " +
+        s"CASE WHEN ${b("d1")} < $TrainBelow THEN d2 ELSE d1 END AS test_doc, span_len " +
+        s"FROM sp WHERE (${b("d1")} < $TrainBelow AND ${b("d2")} >= $TestFrom) " +
+        s"OR (${b("d1")} >= $TestFrom AND ${b("d2")} < $TrainBelow)) " +
         "SELECT doc_id, count(*) AS n_spans, max(span_len) AS max_span_len, " +
         "CAST(sum(span_len) AS BIGINT) AS sum_span_len, " +
         "-struct_extract(max({'s': span_len, 'n': -test_doc}), 'n') " +
         "AS worst_test_doc " +
         "FROM cx GROUP BY doc_id ORDER BY doc_id"
     },
-    // Identical SQL to c7_decontaminate by design: the bloom prefilter
+    // The same SQL as c7_decontaminate by design: the bloom prefilter
     // must not change the result (no false negatives; the exact join
     // removes false positives).
-    "c7_decontaminate_bloom" ->
-      (s"WITH d AS (SELECT doc_id, $bucketSqlDuck AS bucket, string_split(text, ' ') AS toks " +
-        "FROM documents), " +
-        "sh AS (SELECT doc_id, bucket, unnest(list_transform(range(1, len(toks) - 2), " +
-        "i -> array_to_string(list_slice(toks, i, i + 3), ' '))) AS sh FROM d), " +
-        s"te AS (SELECT DISTINCT sh FROM sh WHERE bucket >= ${(0.9 * 4294967296L).toLong}), " +
-        s"tr AS (SELECT doc_id, sh FROM sh WHERE bucket < ${(0.8 * 4294967296L).toLong}) " +
-        "SELECT doc_id, count(*) AS n_hits, " +
-        "CAST(count(DISTINCT sh) AS BIGINT) AS n_shingles_hit " +
-        "FROM tr JOIN te USING (sh) GROUP BY doc_id ORDER BY doc_id"),
+    "c7_decontaminate_bloom" -> decontamSql,
     // Mixture math replayed verbatim: the only float steps are the
     // 6dp-rounded sqrt (IEEE-identical in both engines), an EXACT
     // decimal normalizing sum, and a fixed left-to-right double
@@ -1848,7 +1735,7 @@ object PipelineOps {
         "FROM c), " +
         "t AS (SELECT source, n_avail, sq, SUM(sq) OVER () AS tot FROM s), " +
         "q AS (SELECT source, n_avail, " +
-        "CAST(floor(300 * CAST(sq AS DOUBLE) / CAST(tot AS DOUBLE)) AS BIGINT) AS quota " +
+        s"CAST(floor($MixBudget * CAST(sq AS DOUBLE) / CAST(tot AS DOUBLE)) AS BIGINT) AS quota " +
         "FROM t), " +
         "q2 AS (SELECT *, CAST(floor(4294967296 * least(1.0, " +
         "CAST(quota AS DOUBLE) / n_avail)) AS BIGINT) AS keep_below FROM q), " +
@@ -1868,8 +1755,8 @@ object PipelineOps {
     "c7_split_assign" ->
       (s"SELECT split, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars, " +
         "CAST(count(DISTINCT lang) AS BIGINT) AS n_langs FROM (" +
-        s"SELECT *, CASE WHEN $bucketSqlDuck < ${(0.8 * 4294967296L).toLong} THEN 'train' " +
-        s"WHEN $bucketSqlDuck < ${(0.9 * 4294967296L).toLong} THEN 'val' ELSE 'test' END AS split " +
+        s"SELECT *, CASE WHEN $bucketSqlDuck < $TrainBelow THEN 'train' " +
+        s"WHEN $bucketSqlDuck < $TestFrom THEN 'val' ELSE 'test' END AS split " +
         "FROM documents) GROUP BY split ORDER BY split"),
     // Cluster-safe split: the c2_minhash_cc closure labels (fixed-round
     // min-propagation replay), then the Knuth bucket on cluster_rep —
@@ -1880,8 +1767,8 @@ object PipelineOps {
         "b AS (SELECT doc_id, cluster_rep, " +
         s"${knuthBucketSql("cluster_rep", "//")} AS bucket FROM cl) " +
         "SELECT doc_id, cluster_rep, " +
-        s"CASE WHEN bucket < ${(0.8 * 4294967296L).toLong} THEN 'train' " +
-        s"WHEN bucket < ${(0.9 * 4294967296L).toLong} THEN 'val' ELSE 'test' END " +
+        s"CASE WHEN bucket < $TrainBelow THEN 'train' " +
+        s"WHEN bucket < $TestFrom THEN 'val' ELSE 'test' END " +
         "AS split FROM b ORDER BY doc_id")
   )
 

@@ -20,6 +20,25 @@ object TextOps {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
 
+  /** Fixed query parameters: each is written once here, used by the
+    * Spark plan and rendered as the same digits by the oracle replay.
+    */
+  private[queries] val NgramTopK = 5 // c4_ngram_top, per language
+  private[queries] val TfidfTopK = 5 // c4_tfidf, per document
+  private[queries] val PmiWindow = 3
+  private[queries] val PmiMinCount = 5
+  private[queries] val PmiTopK = 50
+  private[queries] val VocabBuckets = 10 // c4_vocab_growth corpus slices
+  private[queries] val ZipfTopK = 50
+  private[queries] val ChunkWindow = 64 // c4_chunk tokens per chunk
+  private[queries] val ChunkStride = 48
+  private[queries] val HeavyHitterCap = 199 // Misra–Gries counters
+  /** Substring-span analysis: anchor width and the 2..maxOcc expansion
+    * cap (c4_substring_*, c7_decontaminate_span, the pipeline scrub).
+    */
+  private[queries] val SpanWindow = 16
+  private[queries] val SpanMaxOcc = 16
+
   /** C1: exact deduplication by content hash. One narrow md5 + one shuffle
     * on the hash; at 100 TB the group-by key is the 128-bit digest, never
     * the document body.
@@ -76,6 +95,48 @@ object TextOps {
       .orderBy("doc_id")
 
   private[queries] val stopwords = Seq("the", "a", "of", "to", "in", "and", "is")
+  private[queries] val stopArr: Column = array(stopwords.map(lit): _*)
+  private val stopList = stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
+
+  /** The adjacent-token window: `f(toks[i], toks[i + off])` for every
+    * in-range i, as ONE narrow zip of the array with its own off-shifted
+    * tail (no positional self-join; empty when the array has ≤ off
+    * elements). Every word bigram and the BPE trainer's symbol pairs
+    * are `off = 1`; c4_pmi's ±window pairs are `off = 1..PmiWindow`.
+    */
+  private def adjacent(toks: Column, off: Int = 1)(
+      f: (Column, Column) => Column): Column = {
+    val n = greatest(size(toks) - off, lit(0))
+    zip_with(slice(toks, lit(1), n), slice(toks, lit(1 + off), n), f)
+  }
+
+  /** Space-joined word bigrams `"a b"` of a token array. */
+  private def bigrams(toks: Column): Column =
+    adjacent(toks)((a, b) => concat(a, lit(" "), b))
+
+  /** Trigram events `struct(u, v, w)` of a token array (empty below 3
+    * tokens) — the order-3 LM's training and scoring unit.
+    */
+  private def trigrams(toks: Column): Column = {
+    val n = greatest(size(toks) - 2, lit(0))
+    zip_with(
+      zip_with(slice(toks, lit(1), n), slice(toks, lit(2), n),
+        (a, b) => struct(a.as("u"), b.as("v"))),
+      slice(toks, lit(3), n),
+      (p, c) => struct(p.getField("u").as("u"), p.getField("v").as("v"), c.as("w")))
+  }
+
+  /** Per-doc `(doc_id, n_bigrams, n_dup)` over a `(doc_id, text)` frame:
+    * bigram occurrences, and the occurrences of bigrams repeated within
+    * the same doc — two partial-agg shuffles, (doc, bigram) then doc. A
+    * doc with fewer than 2 tokens has no bigram and so no row.
+    */
+  private[queries] def dupBigramStats(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), explode(bigrams(split(col("text"), " "))).as("bg"))
+      .groupBy("doc_id", "bg").agg(count(lit(1)).as("cnt"))
+      .groupBy("doc_id")
+      .agg(sum(col("cnt")).as("n_bigrams"),
+        sum(when(col("cnt") > 1, col("cnt")).otherwise(0L)).as("n_dup"))
 
   /** C4b: per-document quality scoring — token count, mean token length,
     * stopword ratio, and a quality flag. All ratios are exact integer
@@ -83,7 +144,6 @@ object TextOps {
     */
   def c4QualityScore(spark: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
-    val stopArr = array(stopwords.map(lit): _*)
     docs(spark, dir)
       .withColumn("n_tokens", size(toks))
       .withColumn("n_stop",
@@ -146,39 +206,20 @@ object TextOps {
     * per-language count table. Ties broken by bigram text in both
     * engines.
     */
-  def c4NgramTop(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val toks = split(col("text"), " ")
-    val bigrams = zip_with(
-      slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-      slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-      (a, b) => concat(a, lit(" "), b))
+  def c4NgramTop(spark: SparkSession, dir: String): DataFrame = {
     val counts = docs(spark, dir)
-      .select(col("lang"), explode(bigrams).as("bigram"))
+      .select(col("lang"), explode(bigrams(split(col("text"), " "))).as("bigram"))
       .groupBy("lang", "bigram")
       .agg(count(lit(1)).as("cnt"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("cnt").desc, col("bigram"))
     counts
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= NgramTopK)
       .select("lang", "rank", "bigram", "cnt")
       .orderBy("lang", "rank")
   }
 
-  /** C4i: heavy hitters via the Misra–Gries mergeable sketch
-    * ([[graft.functions.MisraGriesAggregator]]) — the bounded-memory
-    * scale path for frequent-token mining (exact `groupBy(token)` must
-    * shuffle the whole vocabulary; the sketch shuffles ≤ cap counters
-    * per partial buffer). The sketch CONTENTS depend on merge order, so
-    * the query emits the order-INDEPENDENT facts: the deterministic set
-    * of guaranteed-heavy tokens (exact freq·(cap+1) > n — integer
-    * arithmetic, no float threshold) with exact counts, plus the three
-    * MG guarantees evaluated in-plan against the actual sketch
-    * (membership, no-overcount, bounded undercount). DuckDB supplies
-    * the exact side and literal TRUE — a buggy sketch breaks the hash
-    * (the b2_agg_approx pattern). The sketch itself is one bounded
-    * aggregate (≤ cap entries to the driver, embedded as a map literal).
-    */
   /** The product path at 100 TB: ONE bounded-memory sketch pass over a
     * token column — no full-vocabulary shuffle anywhere (the partial
     * buffers carry ≤ cap counters each; the merged sketch is a single
@@ -187,7 +228,7 @@ object TextOps {
     * entry with `freq − n/(cap+1) ≤ estimate ≤ freq` (the Misra–Gries
     * guarantee), so the keys are a complete heavy-hitter candidate set.
     */
-  def heavyHitterSketch(tokens: DataFrame, cap: Int = 199): (Map[String, Long], Long) = {
+  def heavyHitterSketch(tokens: DataFrame, cap: Int): (Map[String, Long], Long) = {
     val spark = tokens.sparkSession
     import spark.implicits._
     tokens.select(col(tokens.columns.head).as("tok")).as[String]
@@ -207,7 +248,7 @@ object TextOps {
     * confirm pass (e.g. [[c4HeavyHitters]]'s) would resolve.
     */
   def heavyHitterCandidates(spark: SparkSession, dir: String,
-      cap: Int = 199): DataFrame = {
+      cap: Int = HeavyHitterCap): DataFrame = {
     import spark.implicits._
     val toks = docs(spark, dir)
       .select(explode(split(col("text"), " ")).as("tok"))
@@ -219,7 +260,22 @@ object TextOps {
       .orderBy("tok")
   }
 
-  def c4HeavyHitters(spark: SparkSession, dir: String, cap: Int = 199): DataFrame = {
+  /** C4i: heavy hitters via the Misra–Gries mergeable sketch
+    * ([[graft.functions.MisraGriesAggregator]]) — the bounded-memory
+    * scale path for frequent-token mining (exact `groupBy(token)` must
+    * shuffle the whole vocabulary; the sketch shuffles ≤ cap counters
+    * per partial buffer). The sketch CONTENTS depend on merge order, so
+    * the query emits the order-INDEPENDENT facts: the deterministic set
+    * of guaranteed-heavy tokens (exact freq·(cap+1) > n — integer
+    * arithmetic, no float threshold) with exact counts, plus the three
+    * MG guarantees evaluated in-plan against the actual sketch
+    * (membership, no-overcount, bounded undercount). DuckDB supplies
+    * the exact side and literal TRUE — a buggy sketch breaks the hash
+    * (the b2_agg_approx pattern). The sketch itself is one bounded
+    * aggregate (≤ cap entries to the driver, embedded as a map literal).
+    */
+  def c4HeavyHitters(spark: SparkSession, dir: String): DataFrame = {
+    val cap = HeavyHitterCap
     val toks = docs(spark, dir)
       .select(explode(split(col("text"), " ")).as("tok"))
     // One fused pass computes the sketch AND the stream length; the
@@ -249,24 +305,11 @@ object TextOps {
     * explodes + per-doc aggregation; the ratio is one exact
     * integer-over-integer double division, so the oracle matches bitwise.
     */
-  def c4DupNgrams(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val bigrams = zip_with(
-      slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-      slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-      (a, b) => concat(a, lit(" "), b))
-    docs(spark, dir)
-      .select(col("doc_id"), explode(bigrams).as("bg"))
-      .groupBy("doc_id", "bg")
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id")
-      .agg(
-        sum(col("cnt")).as("n_bigrams"),
-        sum(when(col("cnt") > 1, col("cnt")).otherwise(0L)).as("n_dup"))
+  def c4DupNgrams(spark: SparkSession, dir: String): DataFrame =
+    dupBigramStats(docs(spark, dir))
       .select(col("doc_id"), col("n_bigrams"), col("n_dup"),
         (col("n_dup").cast("double") / col("n_bigrams")).as("dup_ratio"))
       .orderBy("doc_id")
-  }
 
   /** C4k: per-document top-k TF-IDF terms — the keyword-extraction shape
     * every curation/indexing pipeline runs (salient-term mining, topic
@@ -283,7 +326,7 @@ object TextOps {
     * a per-doc window bounded by per-doc vocabulary, pruned to k rows
     * per partition by WindowGroupLimit before the shuffle.
     */
-  def c4Tfidf(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def c4Tfidf(spark: SparkSession, dir: String): DataFrame = {
     val tc = docs(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -301,13 +344,13 @@ object TextOps {
       .partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("tok"))
     scored
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= TfidfTopK)
       .select("doc_id", "rk", "tok", "tf", "df", "tfidf")
       .orderBy("doc_id", "rk")
   }
 
   /** C4l: collocation mining — corpus-wide top-k co-occurring token
-    * pairs within a ±`window` position window, ranked by the PMI lift
+    * pairs within a ±[[PmiWindow]] position window, ranked by the PMI lift
     * `(c_ab/P) / ((c_a/n)(c_b/n))` (PMI = ln(lift); ranking by lift is
     * rank-equivalent and keeps the score rational — same libm argument
     * as [[c4Tfidf]]). Pairs are canonically ordered (least, greatest) so
@@ -321,14 +364,10 @@ object TextOps {
     * totals are 1-row broadcasts. The global top-k is WindowGroupLimit-
     * pruned to k per partition before the single final sort.
     */
-  def c4Pmi(spark: SparkSession, dir: String, window: Int = 3,
-      minCount: Int = 5, k: Int = 50): DataFrame = {
+  def c4Pmi(spark: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
-    val pairCols = (1 to window).map { off =>
-      zip_with(
-        slice(toks, lit(1), greatest(size(toks) - off, lit(0))),
-        slice(toks, lit(off + 1), greatest(size(toks) - off, lit(0))),
-        (a, b) => concat(least(a, b), lit(" "), greatest(a, b)))
+    val pairCols = (1 to PmiWindow).map { off =>
+      adjacent(toks, off)((a, b) => concat(least(a, b), lit(" "), greatest(a, b)))
     }
     val pc = docs(spark, dir)
       .select(explode(concat(pairCols: _*)).as("pair"))
@@ -339,7 +378,7 @@ object TextOps {
     val nTok = broadcast(uc.agg(sum(col("c_tok")).as("n")))
     val nPair = broadcast(pc.agg(sum(col("c_ab")).as("p")))
     val scored = pc
-      .filter(col("c_ab") >= minCount)
+      .filter(col("c_ab") >= PmiMinCount)
       .select(
         element_at(split(col("pair"), " "), 1).as("w1"),
         element_at(split(col("pair"), " "), 2).as("w2"),
@@ -358,7 +397,7 @@ object TextOps {
       .orderBy(col("lift").desc, col("w1"), col("w2"))
     scored
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= PmiTopK)
       .select("rk", "w1", "w2", "c_ab", "c_w1", "c_w2", "lift")
       .orderBy("rk")
   }
@@ -375,11 +414,6 @@ object TextOps {
       .select(col("doc_id"), col("detected_lang"), col("lang_score"))
       .orderBy("doc_id")
 
-  /** DuckDB replay of LangId.detect: same function-word lists, same
-    * `\s+` tokenization of lower(text), same CJK regexp count, same
-    * struct-max tie-break (score first, then language code — DuckDB
-    * struct comparison is field-order lexicographic like Spark's).
-    */
   /** CTE chain ending in `b(doc_id, nt, best)` — shared by the langid
     * oracle and the c7_curate composition oracle (PipelineOps).
     */
@@ -404,6 +438,11 @@ object TextOps {
       s"list_max([${langs.map("s_" + _).mkString(", ")}]) AS best FROM s)"
   }
 
+  /** DuckDB replay of LangId.detect: same function-word lists, same
+    * `\s+` tokenization of lower(text), same CJK regexp count, same
+    * struct-max tie-break (score first, then language code — DuckDB
+    * struct comparison is field-order lexicographic like Spark's).
+    */
   private def langIdOracle: String =
     s"WITH $langIdCtes " +
       "SELECT doc_id, struct_extract(best, 'code') AS detected_lang, " +
@@ -421,28 +460,25 @@ object TextOps {
     *
     * Scale posture: two partial-agg shuffles (per-type min over the
     * exploded token stream, then per-bucket count over the O(vocab)
-    * type table); the cumulative sum is a window over ≤`buckets` rows
+    * type table); the cumulative sum is a window over ≤[[VocabBuckets]] rows
     * per gram and the max-id normalizer is a broadcast 1-row aggregate.
     * Nothing corpus-sized is windowed or collected.
     */
-  def c4VocabGrowth(spark: SparkSession, dir: String, buckets: Int = 10): DataFrame = {
+  def c4VocabGrowth(spark: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
     val uni = docs(spark, dir)
       .select(col("doc_id"), explode(toks).as("term"))
       .withColumn("gram", lit("uni"))
     val bi = docs(spark, dir)
-      .select(col("doc_id"), explode(zip_with(
-        slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-        slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-        (a, b) => concat(a, lit(" "), b))).as("term"))
+      .select(col("doc_id"), explode(bigrams(toks)).as("term"))
       .withColumn("gram", lit("bi"))
     val first = uni.unionByName(bi)
       .groupBy(col("gram"), col("term"))
       .agg(min(col("doc_id")).as("first_doc"))
     val maxId = broadcast(docs(spark, dir).agg(max(col("doc_id")).as("max_id")))
     val growth = first.crossJoin(maxId)
-      .withColumn("bucket", least(lit(buckets - 1).cast("long"),
-        expr(s"(first_doc * $buckets) div (max_id + 1)")).cast("long"))
+      .withColumn("bucket", least(lit(VocabBuckets - 1).cast("long"),
+        expr(s"(first_doc * $VocabBuckets) div (max_id + 1)")).cast("long"))
       .groupBy(col("gram"), col("bucket"))
       .agg(count(lit(1)).as("new_terms"))
     val w = org.apache.spark.sql.expressions.Window
@@ -475,14 +511,14 @@ object TextOps {
     * collected rows, and the two 1-row normalizers (total tokens, f1)
     * are broadcast cross joins on a k-row side (the allowlisted shape).
     */
-  def c4Zipf(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
+  def c4Zipf(spark: SparkSession, dir: String): DataFrame = {
     val tok = docs(spark, dir)
       .select(explode(split(col("text"), " ")).as("tok"))
     val freq = tok.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
     // limit after orderBy = TakeOrdered: each partition keeps a k-heap,
     // the driver merges — the scale-safe global top-k (no full-vocab
     // window through one task).
-    val top = freq.orderBy(col("freq").desc, col("tok")).limit(k)
+    val top = freq.orderBy(col("freq").desc, col("tok")).limit(ZipfTopK)
     val tot = tok.agg(count(lit(1)).as("n_total"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("freq").desc, col("tok"))
@@ -579,9 +615,8 @@ object TextOps {
     * O(types)) with the two-round unpersist window — net-zero cached
     * blocks on return.
     */
-  def c4BpeMerges(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): DataFrame = {
-    val (merges, _, lastCached) = bpeTrain(spark, dir, rounds, cap)
+  def c4BpeMerges(spark: SparkSession, dir: String): DataFrame = {
+    val (merges, _, lastCached) = bpeTrain(spark, dir)
     lastCached.foreach(_.unpersist(blocking = false))
     import spark.implicits._
     merges
@@ -641,8 +676,7 @@ object TextOps {
     * it immediately).
     */
   private[queries] def bpeTrain(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap,
-      materializeFinal: Boolean = false)
+      rounds: Int = BpeRounds, materializeFinal: Boolean = false)
       : (Seq[(Int, Int, String, String, String, Long)], DataFrame, Option[DataFrame]) = {
     // The merge automaton is the native BpeMergeSeq expression (one
     // linear Java pass, O(1) hash probe per symbol); mergeSeqBatchHof
@@ -735,11 +769,8 @@ object TextOps {
           k += 1
           vocab = vocab.persist()
           persisted += vocab
-          val arr = col("seq")
           val top = vocab
-            .select(col("freq"), explode(zip_with(
-              slice(arr, lit(1), greatest(size(arr) - 1, lit(0))),
-              slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
+            .select(col("freq"), explode(adjacent(col("seq"))(
               (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
             .groupBy(col("p.l").as("l"), col("p.r").as("r"))
             .agg(sum(col("freq")).as("cnt"))
@@ -751,15 +782,15 @@ object TextOps {
           prevRound.foreach(_.unpersist(blocking = false))
           prevRound = Some(vocab)
           // Rank-order greedy disjointness scan: accept a pair iff neither
-          // symbol appears in any earlier-accepted pair, stopping at `cap`
-          // accepted. Pure driver logic over ≤candCap rows — replayed
-          // verbatim by the oracle's linear recursive CTE.
+          // symbol appears in any earlier-accepted pair, stopping at
+          // BpeBatchCap accepted. Pure driver logic over ≤candCap rows —
+          // replayed verbatim by the oracle's linear recursive CTE.
           val used = scala.collection.mutable.Set[String]()
           var nAcc = 0
           val accepted = top.iterator
             .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
             .filter { case (l, r, _) =>
-              if (nAcc >= cap || used(l) || used(r)) false
+              if (nAcc >= BpeBatchCap || used(l) || used(r)) false
               else { used += l; used += r; nAcc += 1; true }
             }.toSeq
           if (accepted.isEmpty) exhausted = true
@@ -799,8 +830,8 @@ object TextOps {
 
   /** C4r: sliding-window token CHUNKING — the segmentation primitive a
     * retrieval or pretraining pipeline runs before embedding/packing:
-    * each document becomes overlapping windows of `window` tokens with
-    * stride `stride` (overlap = window − stride), every chunk carrying
+    * each document becomes overlapping windows of [[ChunkWindow]] tokens
+    * with stride [[ChunkStride]] (overlap = window − stride), every chunk carrying
     * its 1-based start offset, token count, and the md5 of its
     * space-joined text (the content fingerprint downstream dedup/
     * embedding stages key on — the oracle pins chunk CONTENT through
@@ -815,9 +846,8 @@ object TextOps {
     * rows of scalars. No shuffle at all until the caller aggregates;
     * the final ORDER BY is the driver-check convention.
     */
-  def c4Chunk(spark: SparkSession, dir: String,
-      window: Int = 64, stride: Int = 48): DataFrame = {
-    require(stride > 0 && window >= stride, "need 0 < stride <= window")
+  def c4Chunk(spark: SparkSession, dir: String): DataFrame = {
+    val (window, stride) = (ChunkWindow, ChunkStride)
     val arr = split(col("text"), " ")
     docs(spark, dir)
       .select(col("doc_id"), arr.as("toks"))
@@ -853,9 +883,8 @@ object TextOps {
     * by the 128-bit fingerprint (never chunk text), output O(distinct
     * repeated chunks).
     */
-  def c4ChunkDedup(spark: SparkSession, dir: String,
-      window: Int = 64, stride: Int = 48): DataFrame =
-    c4Chunk(spark, dir, window, stride)
+  def c4ChunkDedup(spark: SparkSession, dir: String): DataFrame =
+    c4Chunk(spark, dir)
       .groupBy(col("chunk_hash"))
       .agg(count(lit(1)).as("n_copies"),
         countDistinct(col("doc_id")).as("n_docs"),
@@ -912,7 +941,7 @@ object TextOps {
   /** C4v: ARBITRARY-OFFSET repeated-substring dedup — the Lee et al.
     * "Deduplicating Training Data" analytic [[c4ChunkDedup]] cannot see:
     * a copied paragraph at an unaligned offset hides from stride-aligned
-    * windows, while here EVERY token offset anchors a `window`-token
+    * windows, while here EVERY token offset anchors a [[SpanWindow]]-token
     * span. Anchors hash with the portable 60-bit md5 prefix (8-byte
     * keys shuffle, never span text), occurrences group per hash,
     * and adjacent matched anchors merge per doc pair along their
@@ -925,7 +954,7 @@ object TextOps {
     * (O(n_tokens) windows/doc); the only shuffles key on the 8-byte
     * hash and the bounded (d1, d2, diag) island partition (≤ span
     * length rows). Pair expansion is capped: only anchors with
-    * 2..`maxOcc` occurrences expand (Σcnt² ≤ maxOcc·Σcnt — LINEAR in
+    * 2..[[SpanMaxOcc]] occurrences expand (Σcnt² ≤ maxOcc·Σcnt — LINEAR in
     * anchors at any duplication density; an ultra-frequent span is
     * boilerplate, the chunk-level report's job — the same
     * frequent-shingle skip the published suffix-array pipeline applies,
@@ -933,23 +962,21 @@ object TextOps {
     * skipped ultra-frequent interior window splits into two reported
     * spans — the documented approximation.
     */
-  /** The maximal repeated-span pairs shared by the REPORT
-    * ([[c4SubstringDup]]) and the ACTION ([[c4SubstringScrub]]):
-    * columns (doc_a, start_a, doc_b, start_b, span_len, n_anchors),
-    * (doc_a, start_a) < (doc_b, start_b) lexicographically.
-    */
-  private[queries] def substringSpans(spark: SparkSession, dir: String,
-      window: Int, maxOcc: Int): DataFrame =
-    substringSpansOf(docs(spark, dir), window, maxOcc)
+  def c4SubstringDup(spark: SparkSession, dir: String): DataFrame =
+    substringSpansOf(docs(spark, dir))
+      .orderBy("doc_a", "start_a", "doc_b", "start_b")
 
-  /** [[substringSpans]] over an arbitrary `(doc_id, text)` set — the
-    * composition point: the curation pipeline (c7_pipeline_v2) runs the
-    * span analysis over its doc-level-dedup SURVIVORS, not the raw
-    * corpus (a dropped duplicate must not scrub the copy that became
-    * the first surviving occurrence).
+  /** The maximal repeated-span pairs of an arbitrary `(doc_id, text)`
+    * set, shared by the REPORT ([[c4SubstringDup]]) and the ACTION
+    * ([[c4SubstringScrub]]): columns (doc_a, start_a, doc_b, start_b,
+    * span_len, n_anchors), (doc_a, start_a) < (doc_b, start_b)
+    * lexicographically. Over a frame rather than the corpus so the
+    * curation pipeline (c7_pipeline_v2) can run it over its
+    * doc-level-dedup SURVIVORS (a dropped duplicate must not scrub the
+    * copy that became the first surviving occurrence).
     */
-  private[queries] def substringSpansOf(base: DataFrame,
-      window: Int, maxOcc: Int): DataFrame = {
+  private[queries] def substringSpansOf(base: DataFrame): DataFrame = {
+    val (window, maxOcc) = (SpanWindow, SpanMaxOcc)
     val toks = split(col("text"), " ")
     val anchors = base
       .select(col("doc_id"), toks.as("toks"))
@@ -982,11 +1009,6 @@ object TextOps {
         col("n_anchors"))
   }
 
-  def c4SubstringDup(spark: SparkSession, dir: String,
-      window: Int = 16, maxOcc: Int = 16): DataFrame =
-    substringSpans(spark, dir, window, maxOcc)
-      .orderBy("doc_a", "start_a", "doc_b", "start_b")
-
   /** C4w: repeated-substring SCRUB — the ACTION half of the Lee et al.
     * analytic ([[c4SubstringDup]] reports the spans; this removes them):
     * for every maximal repeated span, the LATER occurrence (larger
@@ -1004,44 +1026,8 @@ object TextOps {
     * token positions against the broadcast-scale merged intervals
     * keyed by doc_id, and one per-doc ordered reassembly aggregate.
     */
-  /** Merged keep-first removal intervals `(doc_id, s, e)` of the span
-    * analysis over `base` — the classic running-max interval union per
-    * doc (bounded by doc length), shared by the scrub ACTION and the
-    * pipeline's effective-token accounting.
-    */
-  private def mergedScrubIntervals(base: DataFrame,
-      window: Int, maxOcc: Int): DataFrame = {
-    val rem = substringSpansOf(base, window, maxOcc)
-      .select(col("doc_b").as("doc_id"), col("start_b").as("s"),
-        (col("start_b") + col("span_len") - 1).as("e"))
-      .distinct()
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("s", "e")
-    rem
-      .withColumn("maxe", max(col("e")).over(
-        wDoc.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)))
-      .withColumn("brk",
-        when(col("maxe").isNull || col("s") > col("maxe"), 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(wDoc))
-      .groupBy("doc_id", "grp")
-      .agg(min(col("s")).as("s"), max(col("e")).as("e"))
-  }
-
-  /** Per-doc REMOVED-token counts of the substring scrub over an
-    * arbitrary `(doc_id, text)` set: Σ(e−s+1) of the merged intervals —
-    * the count needs no token explode (intervals are within-doc by
-    * construction), so the pipeline pays only the span analysis plus a
-    * model-sized aggregate.
-    */
-  private[queries] def scrubRemovedCounts(base: DataFrame,
-      window: Int = 16, maxOcc: Int = 16): DataFrame =
-    mergedScrubIntervals(base, window, maxOcc)
-      .groupBy("doc_id")
-      .agg(sum(col("e") - col("s") + 1).as("n_removed"))
-
-  def c4SubstringScrub(spark: SparkSession, dir: String,
-      window: Int = 16, maxOcc: Int = 16): DataFrame = {
-    val merged = mergedScrubIntervals(docs(spark, dir), window, maxOcc)
+  def c4SubstringScrub(spark: SparkSession, dir: String): DataFrame = {
+    val merged = mergedScrubIntervals(docs(spark, dir))
     val toks = docs(spark, dir)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
@@ -1067,6 +1053,39 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Merged keep-first removal intervals `(doc_id, s, e)` of the span
+    * analysis over `base` — the classic running-max interval union per
+    * doc (bounded by doc length), shared by the scrub ACTION and the
+    * pipeline's effective-token accounting.
+    */
+  private def mergedScrubIntervals(base: DataFrame): DataFrame = {
+    val rem = substringSpansOf(base)
+      .select(col("doc_b").as("doc_id"), col("start_b").as("s"),
+        (col("start_b") + col("span_len") - 1).as("e"))
+      .distinct()
+    val wDoc = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy("s", "e")
+    rem
+      .withColumn("maxe", max(col("e")).over(
+        wDoc.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)))
+      .withColumn("brk",
+        when(col("maxe").isNull || col("s") > col("maxe"), 1).otherwise(0))
+      .withColumn("grp", sum(col("brk")).over(wDoc))
+      .groupBy("doc_id", "grp")
+      .agg(min(col("s")).as("s"), max(col("e")).as("e"))
+  }
+
+  /** Per-doc REMOVED-token counts of the substring scrub over an
+    * arbitrary `(doc_id, text)` set: Σ(e−s+1) of the merged intervals —
+    * the count needs no token explode (intervals are within-doc by
+    * construction), so the pipeline pays only the span analysis plus a
+    * model-sized aggregate.
+    */
+  private[queries] def scrubRemovedCounts(base: DataFrame): DataFrame =
+    mergedScrubIntervals(base)
+      .groupBy("doc_id")
+      .agg(sum(col("e") - col("s") + 1).as("n_removed"))
+
   /** Feature order of the quality model — scores and the bias fold this
     * list LEFT TO RIGHT in BOTH engines; changing the order changes the
     * IEEE result, so the order is part of the contract.
@@ -1084,7 +1103,7 @@ object TextOps {
     */
   private def qmFeatures(df: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
-    val stopArr = array(stopwords.map(lit): _*)
+    val (nTokens, alpha, nStopTypes) = gateInputs
     // longest run in the sorted array = max occurrence count of any token
     def maxRun(sorted: Column): Column = {
       def st(prev: Column, run: Column, best: Column) =
@@ -1098,19 +1117,11 @@ object TextOps {
         },
         s => s.getField("best"))
     }
-    df.select(col("doc_id"),
-      size(toks).cast("long").as("n_tokens"),
-      length(regexp_replace(col("text"), "[^a-z]", ""))
-        .cast("long").as("alpha_chars"),
+    df.select(col("doc_id"), nTokens.as("n_tokens"), alpha.as("alpha_chars"),
       size(array_distinct(toks)).cast("long").as("n_types"),
-      size(filter(array_distinct(toks), t => array_contains(stopArr, t)))
-        .cast("long").as("n_stop_types"),
-      maxRun(array_sort(toks)).as("max_tok_c"))
+      nStopTypes.as("n_stop_types"), maxRun(array_sort(toks)).as("max_tok_c"))
       .withColumn("rule_keep",
-        col("n_tokens").between(30L, 10000L) &&
-          col("alpha_chars") >= col("n_tokens") * 2 &&
-          col("alpha_chars") <= col("n_tokens") * 12 &&
-          col("n_stop_types") >= 2)
+        ruleGate(col("n_tokens"), col("alpha_chars"), col("n_stop_types")))
   }
 
   /** Train-and-persist the centroid quality model (the ANN model-table
@@ -1233,13 +1244,8 @@ object TextOps {
     * bound.
     */
   def c4LmPpl(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val d = docs(spark, dir).select(col("doc_id"), toks.as("toks"))
-    val ev = d.select(col("doc_id"), explode(zip_with(
-        slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-        slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-        (a, b) => struct(a.as("u"), b.as("w")))).as("e"))
-      .select(col("doc_id"), col("e.u").as("u"), col("e.w").as("w"))
+    val d = docs(spark, dir).select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val ev = bigramEvents(d)
     val bg = ev.groupBy("u", "w").agg(count(lit(1)).as("c_uw"))
     val cx = bg.groupBy("u").agg(sum(col("c_uw")).as("c_u"))
     // V collected to the driver — ONE bounded row (the quality-model
@@ -1249,12 +1255,34 @@ object TextOps {
     val v = d.select(explode(col("toks")).as("tok"))
       .agg(countDistinct(col("tok"))).head().getLong(0)
     val model = bg.join(cx.hint("shuffle_hash"), "u")
-    val scored = ev.join(model.hint("shuffle_hash"), Seq("u", "w"))
-      .withColumn("li", round(lit(1000000.0) * log(
-        (col("c_uw") + 1).cast("double") /
-          (col("c_u") + lit(v)).cast("double")), 0).cast("long"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_events"), sum(col("li")).as("s"))
+    lmFinish(d, ev.join(model.hint("shuffle_hash"), Seq("u", "w"))
+      .withColumn("li", microLog((col("c_uw") + 1).cast("double") /
+        (col("c_u") + lit(v)).cast("double"))))
+  }
+
+  /** The bigram event stream `(doc_id, u, w)` of a `(doc_id, toks)`
+    * frame: every consecutive in-document token pair.
+    */
+  private def bigramEvents(d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
+        explode(adjacent(col("toks"))((a, b) => struct(a.as("u"), b.as("w")))).as("e"))
+      .select(col("doc_id"), col("e.u").as("u"), col("e.w").as("w"))
+
+  /** One event's int64 micro-log `round(1e6 · ln p)`. */
+  private def microLog(p: Column): Column =
+    round(lit(1000000.0) * log(p), 0).cast("long")
+
+  /** The LM scorers' shared finish over per-event micro-logs
+    * `(doc_id, li, …)`: per doc `n_events`, the scorer's own `counts`
+    * (name → aggregate), `s = Σ li` and the nll, then re-attached to
+    * every doc of `d` — a doc with no event (fewer tokens than the model
+    * order) gets `n_events = 0`, zero counts, `nll = 0.0`, `ppl = 1.0`.
+    */
+  private def lmFinish(d: DataFrame, events: DataFrame,
+      counts: (String, Column)*): DataFrame = {
+    val scored = events.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_events"),
+        counts.map { case (n, c) => c.as(n) } :+ sum(col("li")).as("s"): _*)
       // nll = HALF_UP(-s/n_events) in EXACT integer arithmetic, then one
       // exact-by-construction 6dp division: the former double division
       // round((-s)/(n·1e6), 6) breaks cross-engine exactly when -s/n
@@ -1265,28 +1293,38 @@ object TextOps {
       .withColumn("nll", round(expr(
         "CAST(((0 - s) * 2 + n_events) div (2 * n_events) AS DOUBLE)") /
         lit(1000000.0), 6))
+    val zeroed = ("n_events" +: counts.map(_._1)).map(n => coalesce(col(n), lit(0L)).as(n))
     d.select("doc_id").join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"),
-        coalesce(col("nll"), lit(0.0)).as("nll"),
-        coalesce(round(exp(col("nll")), 4), lit(1.0)).as("ppl"))
+      .select(col("doc_id") +: zeroed :+ coalesce(col("nll"), lit(0.0)).as("nll") :+
+        coalesce(round(exp(col("nll")), 4), lit(1.0)).as("ppl"): _*)
       .orderBy("doc_id")
   }
 
-  /** The narrow-computable rule gate shared with the quality model's
-    * training label (the c7_quality_filter subset): length bounds,
-    * mean-word-length bounds, stopword-diversity floor.
+  /** The rule gate's inputs over the `text` column: (n_tokens,
+    * alpha_chars, n_stop_types — distinct stopword TYPES present).
     */
-  private def ruleKeep: Column = {
+  private def gateInputs: (Column, Column, Column) = {
     val toks = split(col("text"), " ")
-    val stopArr = array(stopwords.map(lit): _*)
-    val nTokens = size(toks).cast("long")
-    val alpha = length(regexp_replace(col("text"), "[^a-z]", "")).cast("long")
-    val nStop = size(filter(array_distinct(toks),
-      t => array_contains(stopArr, t))).cast("long")
-    nTokens.between(30L, 10000L) &&
-      alpha >= nTokens * 2 && alpha <= nTokens * 12 && nStop >= 2L
+    (size(toks).cast("long"),
+      length(regexp_replace(col("text"), "[^a-z]", "")).cast("long"),
+      size(filter(array_distinct(toks), t => array_contains(stopArr, t))).cast("long"))
   }
+
+  /** The narrow-computable rule gate (the c7_quality_filter subset):
+    * length bounds, mean-word-length bounds, stopword-diversity floor.
+    * It is the quality model's training label and selects the reference
+    * LM's training slice; [[ruleGateSql]] is its DuckDB rendering.
+    */
+  private def ruleGate(nTokens: Column, alpha: Column, nStopTypes: Column): Column =
+    nTokens.between(30L, 10000L) &&
+      alpha >= nTokens * 2 && alpha <= nTokens * 12 && nStopTypes >= 2L
+
+  private def ruleGateSql(nTokens: String, alpha: String, nStopTypes: String): String =
+    s"$nTokens BETWEEN 30 AND 10000 AND $alpha >= $nTokens * 2 " +
+      s"AND $alpha <= $nTokens * 12 AND $nStopTypes >= 2"
+
+  /** [[ruleGate]] over a document's `text`. */
+  private def ruleKeep: Column = (ruleGate _).tupled(gateInputs)
 
   /** Train-and-persist the REFERENCE n-gram model (the BPE-vocab /
     * quality-model layout posture): unigram, bigram and trigram count
@@ -1312,21 +1350,12 @@ object TextOps {
         dRef.select(explode(col("toks")).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("c1"))
           .write.mode("overwrite").format("parquet").saveAsTable(unTab)
-        val n2 = greatest(size(col("toks")) - 1, lit(0))
-        dRef.select(explode(zip_with(
-            slice(col("toks"), lit(1), n2), slice(col("toks"), lit(2), n2),
+        dRef.select(explode(adjacent(col("toks"))(
             (a, b) => struct(a.as("a"), b.as("b")))).as("e"))
           .select(col("e.a").as("a"), col("e.b").as("b"))
           .groupBy("a", "b").agg(count(lit(1)).as("c2"))
           .write.mode("overwrite").format("parquet").saveAsTable(bgTab)
-        val n3 = greatest(size(col("toks")) - 2, lit(0))
-        dRef.select(explode(zip_with(
-            zip_with(
-              slice(col("toks"), lit(1), n3), slice(col("toks"), lit(2), n3),
-              (a, b) => struct(a.as("u"), b.as("v"))),
-            slice(col("toks"), lit(3), n3),
-            (p, c) => struct(p.getField("u").as("u"),
-              p.getField("v").as("v"), c.as("w")))).as("e"))
+        dRef.select(explode(trigrams(col("toks"))).as("e"))
           .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
           .groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
           .write.mode("overwrite").format("parquet").saveAsTable(tgTab)
@@ -1354,16 +1383,8 @@ object TextOps {
     * missed pair still needs its context count) is keyed and linear.
     */
   def c4LmPplRef(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val all = docs(spark, dir)
-    val dAll = all.select(col("doc_id"), toks.as("toks"))
-    def evOf(dd: DataFrame) = dd.select(col("doc_id"), explode(zip_with(
-        slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-        slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-        (a, b) => struct(a.as("u"), b.as("w")))).as("e"))
-      .select(col("doc_id"), col("e.u").as("u"), col("e.w").as("w"))
+    val dAll = docs(spark, dir).select(col("doc_id"), split(col("text"), " ").as("toks"))
     val (_, bgTab, _, tvTab) = ensureLmRefModel(spark, dir)
-    val ev = evOf(dAll)
     // stored reference model (trained once per corpus fingerprint):
     // bigram counts from the layout, context counts derived model-side
     val bg = spark.table(bgTab)
@@ -1372,34 +1393,13 @@ object TextOps {
     val v = spark.table(tvTab).head().getLong(1)
     require(v > 0L,
       "c4_lm_ppl_ref: the rule-keep reference slice is empty — no model")
-    val scored = ev
+    lmFinish(dAll, bigramEvents(dAll)
       .join(bg.hint("shuffle_hash"), Seq("u", "w"), "left")
       .join(cx.hint("shuffle_hash"), Seq("u"), "left")
       .withColumn("oov", when(col("c_uw").isNull, 1L).otherwise(0L))
-      .withColumn("li", round(lit(1000000.0) * log(
-        (coalesce(col("c_uw"), lit(0L)) + 1).cast("double") /
-          (coalesce(col("c_u"), lit(0L)) + lit(v)).cast("double")), 0)
-        .cast("long"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_events"), sum(col("oov")).as("n_oov_events"),
-        sum(col("li")).as("s"))
-      // nll = HALF_UP(-s/n_events) in EXACT integer arithmetic, then one
-      // exact-by-construction 6dp division: the former double division
-      // round((-s)/(n·1e6), 6) breaks cross-engine exactly when -s/n
-      // lands on a half-integer (a real event at sf0.001: -s/n =
-      // 4047796.5 — Spark's shortest-repr HALF_UP said ...97, DuckDB's
-      // exact-binary round said ...96). The integer form is the same
-      // definition with the tie decided before any float exists.
-      .withColumn("nll", round(expr(
-        "CAST(((0 - s) * 2 + n_events) div (2 * n_events) AS DOUBLE)") /
-        lit(1000000.0), 6))
-    dAll.select("doc_id").join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"),
-        coalesce(col("n_oov_events"), lit(0L)).as("n_oov_events"),
-        coalesce(col("nll"), lit(0.0)).as("nll"),
-        coalesce(round(exp(col("nll")), 4), lit(1.0)).as("ppl"))
-      .orderBy("doc_id")
+      .withColumn("li", microLog((coalesce(col("c_uw"), lit(0L)) + 1).cast("double") /
+        (coalesce(col("c_u"), lit(0L)) + lit(v)).cast("double"))),
+      "n_oov_events" -> sum(col("oov")))
   }
 
   /** C4s'': ORDER-3 LM perplexity with STUPID BACKOFF — the
@@ -1435,21 +1435,7 @@ object TextOps {
     * coverage cost of the cutoff, measured per doc.
     */
   def c4LmPpl3(spark: SparkSession, dir: String, minCount: Long = 1L): DataFrame = {
-    val toks = split(col("text"), " ")
-    val all = docs(spark, dir)
-    val dAll = all.select(col("doc_id"), toks.as("toks"))
-    def ev3Of(dd: DataFrame) = {
-      val n = greatest(size(col("toks")) - 2, lit(0))
-      dd.select(col("doc_id"), explode(zip_with(
-          zip_with(
-            slice(col("toks"), lit(1), n), slice(col("toks"), lit(2), n),
-            (a, b) => struct(a.as("u"), b.as("v"))),
-          slice(col("toks"), lit(3), n),
-          (p, c) => struct(p.getField("u").as("u"),
-            p.getField("v").as("v"), c.as("w")))).as("e"))
-        .select(col("doc_id"), col("e.u").as("u"), col("e.v").as("v"),
-          col("e.w").as("w"))
-    }
+    val dAll = docs(spark, dir).select(col("doc_id"), split(col("text"), " ").as("toks"))
     val (unTab, bgTab, tgTab, tvTab) = ensureLmRefModel(spark, dir)
     val tg = spark.table(tgTab).filter(col("c3") >= minCount)
     val bg = spark.table(bgTab)
@@ -1458,7 +1444,9 @@ object TextOps {
     val (tTot, vSize) = (tv.getLong(0), tv.getLong(1))
     require(vSize > 0L,
       "c4_lm_ppl3: the rule-keep reference slice is empty — no model")
-    val scored = ev3Of(dAll)
+    val ev3 = dAll.select(col("doc_id"), explode(trigrams(col("toks"))).as("e"))
+      .select(col("doc_id"), col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
+    lmFinish(dAll, ev3
       .join(tg.hint("shuffle_hash"), Seq("u", "v", "w"), "left")
       .join(bg.select(col("a").as("u"), col("b").as("v"),
         col("c2").as("c2uv")).hint("shuffle_hash"), Seq("u", "v"), "left")
@@ -1478,33 +1466,11 @@ object TextOps {
           .otherwise(lit(0.4) * lit(0.4) *
             ((coalesce(col("c1w"), lit(0L)) + 1).cast("double") /
               lit((tTot + vSize).toDouble))))
-      .withColumn("li",
-        round(lit(1000000.0) * log(col("sprob")), 0).cast("long"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("c3").isNull && col("c2vw").isNotNull, 1L)
-          .otherwise(0L)).as("n_backoff_bi"),
-        sum(when(col("c3").isNull && col("c2vw").isNull, 1L)
-          .otherwise(0L)).as("n_backoff_uni"),
-        sum(col("li")).as("s"))
-      // nll = HALF_UP(-s/n_events) in EXACT integer arithmetic, then one
-      // exact-by-construction 6dp division: the former double division
-      // round((-s)/(n·1e6), 6) breaks cross-engine exactly when -s/n
-      // lands on a half-integer (a real event at sf0.001: -s/n =
-      // 4047796.5 — Spark's shortest-repr HALF_UP said ...97, DuckDB's
-      // exact-binary round said ...96). The integer form is the same
-      // definition with the tie decided before any float exists.
-      .withColumn("nll", round(expr(
-        "CAST(((0 - s) * 2 + n_events) div (2 * n_events) AS DOUBLE)") /
-        lit(1000000.0), 6))
-    dAll.select("doc_id").join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"),
-        coalesce(col("n_backoff_bi"), lit(0L)).as("n_backoff_bi"),
-        coalesce(col("n_backoff_uni"), lit(0L)).as("n_backoff_uni"),
-        coalesce(col("nll"), lit(0.0)).as("nll"),
-        coalesce(round(exp(col("nll")), 4), lit(1.0)).as("ppl"))
-      .orderBy("doc_id")
+      .withColumn("li", microLog(col("sprob"))),
+      "n_backoff_bi" -> sum(when(col("c3").isNull && col("c2vw").isNotNull, 1L)
+        .otherwise(0L)),
+      "n_backoff_uni" -> sum(when(col("c3").isNull && col("c2vw").isNull, 1L)
+        .otherwise(0L)))
   }
 
   /** Persist the TRAINED tokenizer vocabulary as a fingerprint-keyed
@@ -1515,12 +1481,10 @@ object TextOps {
     * TRAINING cost itself stays timed in `c4_bpe_merges`, whose whole
     * point is the train loop.
     */
-  private[graft] def ensureBpeVocab(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): String =
+  private[graft] def ensureBpeVocab(spark: SparkSession, dir: String): String =
     Storage.ensureLayout(spark, Storage.layout(Seq("graft_bpe_"),
-        Seq(s"$dir/documents.parquet"), s"${rounds}r${cap}c")) { case Seq(tab) =>
-      val (_, finalVocab, lastCached) =
-        bpeTrain(spark, dir, rounds, cap, materializeFinal = true)
+        Seq(s"$dir/documents.parquet"), s"${BpeRounds}r${BpeBatchCap}c")) { case Seq(tab) =>
+      val (_, finalVocab, lastCached) = bpeTrain(spark, dir, materializeFinal = true)
       finalVocab.select(col("word"), size(col("seq")).cast("long").as("n_bpe"))
         .write.mode("overwrite").format("parquet").saveAsTable(tab)
       lastCached.foreach(_.unpersist(blocking = false))
@@ -1543,9 +1507,8 @@ object TextOps {
     * never a per-occurrence re-merge. Every count is exact int64; the
     * single per-doc double (bpe_per_word) is one division rounded 6dp.
     */
-  def c4BpeEncode(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): DataFrame = {
-    val enc = spark.table(ensureBpeVocab(spark, dir, rounds, cap))
+  def c4BpeEncode(spark: SparkSession, dir: String): DataFrame = {
+    val enc = spark.table(ensureBpeVocab(spark, dir))
     val words = docs(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
@@ -1565,7 +1528,7 @@ object TextOps {
   }
 
   /** DuckDB replay of [[c4BpeMerges]]: the same batched rounds. Per
-    * round: the top-`cap` pair ranking, the rank-order greedy
+    * round: the top-[[BpeBatchCap]] pair ranking, the rank-order greedy
     * disjointness scan as a LINEAR recursive CTE (row k joins row k−1,
     * carrying the accepted-symbol list — ≤cap steps), and the
     * simultaneous greedy merge expressed as a taken-parity window
@@ -1576,9 +1539,9 @@ object TextOps {
     * each prior round more than once, and inlining 24 rounds of window
     * stacks would blow the planner up (the closureChainSql lesson).
     */
-  private def bpeChainSql(rounds: Int, cap: Int): String =
-    s"WITH RECURSIVE ${bpeChainCtes(rounds, cap)} " +
-      (1 to rounds).map { k =>
+  private def bpeChainSql: String =
+    s"WITH RECURSIVE $bpeChainCtes " +
+      (1 to BpeRounds).map { k =>
         s"SELECT $k AS merge_round, merge_rank, l AS lhs, r AS rhs, " +
           s"merged, cnt AS pair_count FROM a$k"
       }.mkString("SELECT * FROM (", " UNION ALL ",
@@ -1589,8 +1552,7 @@ object TextOps {
     * replays. Callers must open with `WITH RECURSIVE` (the per-round
     * greedy-filter CTEs recurse).
     */
-  private[queries] def bpeChainCtes(
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): String = {
+  private[queries] def bpeChainCtes: String = {
     val base =
       "w0 AS MATERIALIZED (" +
         "SELECT word, " +
@@ -1598,9 +1560,9 @@ object TextOps {
         "count(*) AS freq " +
         "FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) " +
         "WHERE length(word) > 0 GROUP BY 1)"
-    val okCond = s"p.nacc < $cap AND NOT (list_contains(p.used, c.l) " +
+    val okCond = s"p.nacc < $BpeBatchCap AND NOT (list_contains(p.used, c.l) " +
       "OR list_contains(p.used, c.r))"
-    val rounds_sql = (1 to rounds).map { k =>
+    val rounds_sql = (1 to BpeRounds).map { k =>
       val prev = s"w${k - 1}"
       s"s$k AS (SELECT word AS w, freq, " +
         s"unnest(generate_series(1, len(string_split(seq, ' ')))) AS i, " +
@@ -1616,7 +1578,7 @@ object TextOps {
         s"ORDER BY cnt DESC, l, r LIMIT $BpeCandCap)), " +
         // rank-order greedy disjointness scan: linear recursion over the
         // ranked list, carrying the accepted-symbol set as a list and
-        // the accepted count (the batch stops at `cap` accepted)
+        // the accepted count (the batch stops at BpeBatchCap accepted)
         s"rec$k AS (SELECT rank, l, r, cnt, TRUE AS acc, [l, r] AS used, " +
         s"1 AS nacc FROM cand$k WHERE rank = 1 " +
         s"UNION ALL SELECT c.rank, c.l, c.r, c.cnt, " +
@@ -1651,9 +1613,9 @@ object TextOps {
     * final seq after all K rounds), per-word BPE length, the word
     * explode + join, and the left-join re-attach to the doc universe.
     */
-  private def bpeEncodeSql(rounds: Int, cap: Int): String =
-    s"WITH RECURSIVE ${bpeChainCtes(rounds, cap)}, " +
-      s"enc AS (SELECT word, len(string_split(seq, ' ')) AS n_bpe FROM w$rounds), " +
+  private def bpeEncodeSql: String =
+    s"WITH RECURSIVE $bpeChainCtes, " +
+      s"enc AS (SELECT word, len(string_split(seq, ' ')) AS n_bpe FROM w$BpeRounds), " +
       "wd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word " +
       "FROM documents), " +
       "pd AS (SELECT doc_id, count(*) AS n_words, " +
@@ -1665,23 +1627,21 @@ object TextOps {
       "round(CAST(pd.n_bpe_tokens AS DOUBLE) / pd.n_words, 6) END AS bpe_per_word " +
       "FROM documents d LEFT JOIN pd USING (doc_id) ORDER BY doc_id"
 
-  /** Shared span-analysis CTE chain of the substring-dup/scrub replays
-    * (t → anchors → cap → pairs → diagonal islands `i`).
-    */
-  /** The span-analysis CTE chain over relation `rel`, with every CTE
-    * name prefixed by `pfx` so the chain composes into oracles whose
-    * other fragments already use t/s/b (langIdCtes) — pfx "" over
-    * `documents` is the original standalone chain.
+  /** The span-analysis CTE chain of the substring replays (t → anchors
+    * → cap → pairs → diagonal islands `i`) over relation `rel`, with
+    * every CTE name prefixed by `pfx` so the chain composes into oracles
+    * whose other fragments already use t/s/b (langIdCtes) — pfx "" over
+    * `documents` is the standalone chain.
     */
   private[queries] def ssdupChainOver(rel: String, pfx: String): String =
     s"${pfx}t AS (SELECT doc_id, string_split(text, ' ') AS toks, " +
       s"len(string_split(text, ' ')) AS n FROM $rel), " +
-      s"${pfx}a AS (SELECT doc_id, unnest(generate_series(1, n - 15)) AS off, " +
-      s"toks FROM ${pfx}t WHERE n >= 16), " +
+      s"${pfx}a AS (SELECT doc_id, unnest(generate_series(1, n - ${SpanWindow - 1})) AS off, " +
+      s"toks FROM ${pfx}t WHERE n >= $SpanWindow), " +
       s"${pfx}h AS (SELECT doc_id, off, ('0x'||substr(md5(array_to_string(" +
-      s"list_slice(toks, off, off + 15), ' ')),1,15))::BIGINT AS h FROM ${pfx}a), " +
+      s"list_slice(toks, off, off + ${SpanWindow - 1}), ' ')),1,15))::BIGINT AS h FROM ${pfx}a), " +
       s"${pfx}c AS (SELECT h, count(*) AS cnt FROM ${pfx}h GROUP BY h " +
-      "HAVING count(*) BETWEEN 2 AND 16), " +
+      s"HAVING count(*) BETWEEN 2 AND $SpanMaxOcc), " +
       s"${pfx}e AS (SELECT h.doc_id, h.off, h.h " +
       s"FROM ${pfx}h h JOIN ${pfx}c c USING (h)), " +
       s"${pfx}p AS (SELECT e1.doc_id AS d1, e1.off AS o1, e2.doc_id AS d2, " +
@@ -1693,24 +1653,47 @@ object TextOps {
 
   private[queries] val ssdupChain: String = ssdupChainOver("documents", "")
 
+  /** [[mergedScrubIntervals]] replayed after the `pfx` span chain: the
+    * later-occurrence removal intervals and the running-max interval
+    * union, ending in `${pfx}mi(doc_id, grp, s, e)`.
+    */
+  private def scrubIntervalsSql(pfx: String): String =
+    s"${pfx}sp AS (SELECT d1, d2, diag, min(o1) AS a0, max(o1) AS a1 " +
+      s"FROM ${pfx}i GROUP BY d1, d2, diag, isl), " +
+      s"${pfx}rem AS (SELECT DISTINCT d2 AS doc_id, a0 + diag AS s, " +
+      s"a0 + diag + (a1 - a0 + $SpanWindow) - 1 AS e FROM ${pfx}sp), " +
+      s"${pfx}mx AS (SELECT *, max(e) OVER (PARTITION BY doc_id ORDER BY s, e " +
+      s"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe FROM ${pfx}rem), " +
+      s"${pfx}g AS (SELECT *, sum(CASE WHEN maxe IS NULL OR s > maxe THEN 1 " +
+      s"ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp FROM ${pfx}mx), " +
+      s"${pfx}mi AS (SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM ${pfx}g " +
+      "GROUP BY doc_id, grp)"
+
+  /** [[scrubRemovedCounts]] replayed over relation `rel` (z-prefixed
+    * names, so it composes next to langIdCtes), ending in
+    * `zrm(doc_id, n_removed)`.
+    */
+  private[queries] def scrubRemovedSql(rel: String): String =
+    ssdupChainOver(rel, "z") + ", " + scrubIntervalsSql("z") + ", " +
+      "zrm AS (SELECT doc_id, CAST(sum(e - s + 1) AS BIGINT) AS n_removed " +
+      "FROM zmi GROUP BY doc_id)"
+
+  private val nTokensSql = "len(string_split(text, ' '))"
+  private val alphaSql = "length(regexp_replace(text, '[^a-z]', '', 'g'))"
+  private val nStopTypesSql =
+    s"len(list_filter(list_distinct(string_split(text, ' ')), t -> list_contains($stopList, t)))"
+  /** [[ruleKeep]] over a document's `text`. */
+  private val ruleKeepSql = ruleGateSql(nTokensSql, alphaSql, nStopTypesSql)
+
   /** The c4_lm_ppl_ref replay as a reusable CTE chain ending in
     * `lmres(doc_id, n_events, n_oov_events, nll, ppl)` — shared with
     * the perplexity-bucketed curation pass (PipelineOps.c7_ppl_filter),
     * whose oracle composes on the per-doc nll.
     */
-  private[queries] def lmPplRefCtes: String = {
-    val stopList = stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
-    val rule =
-      "len(string_split(text, ' ')) BETWEEN 30 AND 10000 " +
-        "AND length(regexp_replace(text, '[^a-z]', '', 'g')) " +
-        ">= len(string_split(text, ' ')) * 2 " +
-        "AND length(regexp_replace(text, '[^a-z]', '', 'g')) " +
-        "<= len(string_split(text, ' ')) * 12 " +
-        "AND len(list_filter(list_distinct(string_split(text, ' ')), " +
-        s"t -> list_contains($stopList, t))) >= 2"
+  private[queries] def lmPplRefCtes: String =
     "lmt AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents), " +
       s"lmtr AS (SELECT doc_id, string_split(text, ' ') AS toks " +
-      s"FROM documents WHERE $rule), " +
+      s"FROM documents WHERE $ruleKeepSql), " +
       "lmev AS (SELECT doc_id, toks[i] AS u, toks[i + 1] AS w " +
       "FROM lmt, LATERAL (SELECT unnest(generate_series(1, len(toks) - 1)) AS i) g), " +
       "lmevt AS (SELECT doc_id, toks[i] AS u, toks[i + 1] AS w " +
@@ -1738,35 +1721,24 @@ object TextOps {
       "COALESCE(lmag2.nll, 0.0) AS nll, " +
       "COALESCE(round(exp(lmag2.nll), 4), 1.0) AS ppl " +
       "FROM lmt LEFT JOIN lmag2 USING (doc_id))"
-  }
 
   val oracle: Map[String, String] = Map(
-    "c4_bpe_merges" -> bpeChainSql(BpeRounds, BpeBatchCap),
-    "c4_bpe_encode" -> bpeEncodeSql(BpeRounds, BpeBatchCap),
+    "c4_bpe_merges" -> bpeChainSql,
+    "c4_bpe_encode" -> bpeEncodeSql,
     // Substring-dup replay: same portable anchor hash, same 2..maxOcc
     // cap, same diagonal gaps-and-islands merge.
     "c4_substring_dup" ->
       (s"WITH $ssdupChain " +
         "SELECT d1 AS doc_a, CAST(min(o1) AS INT) AS start_a, d2 AS doc_b, " +
         "CAST(min(o1) + diag AS INT) AS start_b, " +
-        "CAST(max(o1) - min(o1) + 16 AS INT) AS span_len, " +
+        s"CAST(max(o1) - min(o1) + $SpanWindow AS INT) AS span_len, " +
         "count(*) AS n_anchors FROM i GROUP BY d1, d2, diag, isl " +
         "ORDER BY doc_a, start_a, doc_b, start_b"),
     // Scrub replay: the same span chain, later-occurrence removal
     // intervals, the identical running-max interval union, NOT-EXISTS
     // token removal, and the ordered string_agg under md5.
     "c4_substring_scrub" ->
-      (s"WITH $ssdupChain, " +
-        "sp AS (SELECT d1, d2, diag, min(o1) AS a0, max(o1) AS a1 " +
-        "FROM i GROUP BY d1, d2, diag, isl), " +
-        "rem AS (SELECT DISTINCT d2 AS doc_id, a0 + diag AS s, " +
-        "a0 + diag + (a1 - a0 + 16) - 1 AS e FROM sp), " +
-        "mx AS (SELECT *, max(e) OVER (PARTITION BY doc_id ORDER BY s, e " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe FROM rem), " +
-        "g AS (SELECT *, sum(CASE WHEN maxe IS NULL OR s > maxe THEN 1 " +
-        "ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp FROM mx), " +
-        "mi AS (SELECT doc_id, grp, min(s) AS s, max(e) AS e FROM g " +
-        "GROUP BY doc_id, grp), " +
+      (s"WITH $ssdupChain, ${scrubIntervalsSql("")}, " +
         "tk0 AS (SELECT doc_id, unnest(generate_series(1, n)) AS pos, " +
         "toks FROM t), " +
         "tk AS (SELECT doc_id, pos, toks[pos] AS tok FROM tk0), " +
@@ -1788,13 +1760,11 @@ object TextOps {
     // from the identical IEEE expressions, so a drifted stored model
     // breaks the hash.
     "c4_quality_model" -> {
-      val stopList = stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
       val featDefs =
-        "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, " +
-          "CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT) AS alpha_chars, " +
+        s"CAST($nTokensSql AS BIGINT) AS n_tokens, " +
+          s"CAST($alphaSql AS BIGINT) AS alpha_chars, " +
           "CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_types, " +
-          "CAST(len(list_filter(list_distinct(string_split(text, ' ')), " +
-          s"t -> list_contains($stopList, t))) AS BIGINT) AS n_stop_types"
+          s"CAST($nStopTypesSql AS BIGINT) AS n_stop_types"
       val muDefs = QmFeatures.map { n =>
         s"round(CAST(k.$n AS DOUBLE) / k.cnt, 6) AS muk_$n, " +
           s"round(CAST(d.$n AS DOUBLE) / d.cnt, 6) AS mud_$n, " +
@@ -1811,8 +1781,7 @@ object TextOps {
         "SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) " +
         "GROUP BY doc_id, tok) GROUP BY doc_id), " +
         s"f AS (SELECT d.doc_id, $featDefs, tc.max_tok_c, " +
-        "(n_tokens BETWEEN 30 AND 10000 AND alpha_chars >= n_tokens * 2 " +
-        "AND alpha_chars <= n_tokens * 12 AND n_stop_types >= 2) AS rule_keep " +
+        s"(${ruleGateSql("n_tokens", "alpha_chars", "n_stop_types")}) AS rule_keep " +
         "FROM documents d JOIN tc USING (doc_id)), " +
         "m AS (SELECT rule_keep, count(*) AS cnt, " +
         QmFeatures.map(n => s"CAST(sum($n) AS BIGINT) AS $n").mkString(", ") +
@@ -1847,12 +1816,12 @@ object TextOps {
       ("WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, " +
         "len(string_split(text, ' ')) AS n FROM documents), " +
         "e AS (SELECT doc_id, toks, n, " +
-        "unnest(generate_series(0, CAST((greatest(n - 64, 0) + 47) // 48 AS INT))) " +
+        s"unnest(generate_series(0, CAST((greatest(n - $ChunkWindow, 0) + ${ChunkStride - 1}) // $ChunkStride AS INT))) " +
         "AS k FROM t WHERE n > 0) " +
         "SELECT doc_id, CAST(k + 1 AS INT) AS chunk_idx, " +
-        "CAST(k * 48 + 1 AS INT) AS start_tok, " +
-        "CAST(least(64, n - k * 48) AS INT) AS n_tokens, " +
-        "md5(array_to_string(list_slice(toks, k * 48 + 1, k * 48 + 64), ' ')) " +
+        s"CAST(k * $ChunkStride + 1 AS INT) AS start_tok, " +
+        s"CAST(least($ChunkWindow, n - k * $ChunkStride) AS INT) AS n_tokens, " +
+        s"md5(array_to_string(list_slice(toks, k * $ChunkStride + 1, k * $ChunkStride + $ChunkWindow), ' ')) " +
         "AS chunk_hash " +
         "FROM e ORDER BY doc_id, chunk_idx"),
     // Chunk-dedup replay: the same chunk chain grouped by fingerprint,
@@ -1861,10 +1830,10 @@ object TextOps {
       ("WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, " +
         "len(string_split(text, ' ')) AS n FROM documents), " +
         "e AS (SELECT doc_id, toks, n, " +
-        "unnest(generate_series(0, CAST((greatest(n - 64, 0) + 47) // 48 AS INT))) " +
+        s"unnest(generate_series(0, CAST((greatest(n - $ChunkWindow, 0) + ${ChunkStride - 1}) // $ChunkStride AS INT))) " +
         "AS k FROM t WHERE n > 0), " +
         "c AS (SELECT doc_id, CAST(k + 1 AS INT) AS chunk_idx, " +
-        "md5(array_to_string(list_slice(toks, k * 48 + 1, k * 48 + 64), ' ')) " +
+        s"md5(array_to_string(list_slice(toks, k * $ChunkStride + 1, k * $ChunkStride + $ChunkWindow), ' ')) " +
         "AS chunk_hash FROM e), " +
         "g AS (SELECT chunk_hash, count(*) AS n_copies, " +
         "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, " +
@@ -1884,7 +1853,7 @@ object TextOps {
         "(ORDER BY freq DESC, tok) AS INT) AS rank FROM f), " +
         "k AS (SELECT tok, freq, rank, CAST(sum(freq) OVER (ORDER BY rank " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_freq " +
-        "FROM r WHERE rank <= 50), " +
+        s"FROM r WHERE rank <= $ZipfTopK), " +
         "f1 AS (SELECT freq AS f1 FROM k WHERE rank = 1) " +
         "SELECT rank, tok, freq, " +
         "round(CAST(freq * rank AS DOUBLE) / f1, 6) AS zipf_ratio, " +
@@ -1898,7 +1867,7 @@ object TextOps {
         "f AS (SELECT gram, term, min(doc_id) AS first_doc " +
         "FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) GROUP BY 1, 2), " +
         "m AS (SELECT max(doc_id) AS max_id FROM documents), " +
-        "g AS (SELECT gram, CAST(least(9, (first_doc * 10) // (max_id + 1)) AS BIGINT) " +
+        s"g AS (SELECT gram, CAST(least(${VocabBuckets - 1}, (first_doc * $VocabBuckets) // (max_id + 1)) AS BIGINT) " +
         "AS bucket, count(*) AS new_terms FROM f, m GROUP BY 1, 2) " +
         "SELECT gram, bucket, new_terms, " +
         "CAST(sum(new_terms) OVER (PARTITION BY gram ORDER BY bucket " +
@@ -1957,7 +1926,7 @@ object TextOps {
         "e AS (SELECT tok, count(*) AS freq FROM t GROUP BY tok), " +
         "tot AS (SELECT count(*) AS n FROM t) " +
         "SELECT tok, freq, TRUE AS in_sketch, TRUE AS no_overcount, " +
-        "TRUE AS within_bound FROM e, tot WHERE freq * 200 > tot.n ORDER BY tok"),
+        s"TRUE AS within_bound FROM e, tot WHERE freq * ${HeavyHitterCap + 1} > tot.n ORDER BY tok"),
     "c4_ngram_top" ->
       ("WITH t AS (SELECT lang, string_split(text, ' ') AS toks FROM documents), " +
         "ex AS (SELECT lang, unnest(list_transform(range(1, len(toks)), " +
@@ -1965,7 +1934,7 @@ object TextOps {
         "c AS (SELECT lang, bigram, count(*) AS cnt FROM ex GROUP BY lang, bigram), " +
         "r AS (SELECT lang, bigram, cnt, CAST(row_number() OVER " +
         "(PARTITION BY lang ORDER BY cnt DESC, bigram) AS INT) AS rank FROM c) " +
-        "SELECT lang, rank, bigram, cnt FROM r WHERE rank <= 5 ORDER BY lang, rank"),
+        s"SELECT lang, rank, bigram, cnt FROM r WHERE rank <= $NgramTopK ORDER BY lang, rank"),
     "c4_tfidf" ->
       ("WITH tc AS (SELECT doc_id, tok, count(*) AS tf FROM (" +
         "SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) " +
@@ -1978,11 +1947,11 @@ object TextOps {
         "FROM tc JOIN pd USING (doc_id) JOIN dft USING (tok) CROSS JOIN n), " +
         "rk AS (SELECT doc_id, tok, tf, df, tfidf, CAST(row_number() OVER " +
         "(PARTITION BY doc_id ORDER BY tfidf DESC, tok) AS INT) AS rk FROM sc) " +
-        "SELECT doc_id, rk, tok, tf, df, tfidf FROM rk WHERE rk <= 5 " +
+        s"SELECT doc_id, rk, tok, tf, df, tfidf FROM rk WHERE rk <= $TfidfTopK " +
         "ORDER BY doc_id, rk"),
     "c4_pmi" ->
       ("WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents), " +
-        "pr AS (SELECT unnest(flatten(list_transform([1, 2, 3], o -> " +
+        s"pr AS (SELECT unnest(flatten(list_transform(${(1 to PmiWindow).mkString("[", ", ", "]")}, o -> " +
         "list_transform(range(1, len(toks) - o + 1), i -> " +
         "least(toks[i], toks[i + o]) || ' ' || greatest(toks[i], toks[i + o])" +
         ")))) AS pair FROM t), " +
@@ -1992,7 +1961,7 @@ object TextOps {
         "tot AS (SELECT CAST(sum(c_tok) AS BIGINT) AS n FROM uc), " +
         "ptot AS (SELECT CAST(sum(c_ab) AS BIGINT) AS p FROM pc), " +
         "sp AS (SELECT string_split(pair, ' ')[1] AS w1, " +
-        "string_split(pair, ' ')[2] AS w2, c_ab FROM pc WHERE c_ab >= 5), " +
+        s"string_split(pair, ' ')[2] AS w2, c_ab FROM pc WHERE c_ab >= $PmiMinCount), " +
         "sc AS (SELECT w1, w2, c_ab, u1.c_tok AS c_w1, u2.c_tok AS c_w2, " +
         "round(CAST(c_ab AS DOUBLE) * n * n / " +
         "(CAST(p AS DOUBLE) * u1.c_tok * u2.c_tok), 6) AS lift " +
@@ -2000,7 +1969,7 @@ object TextOps {
         "CROSS JOIN tot CROSS JOIN ptot), " +
         "rk AS (SELECT w1, w2, c_ab, c_w1, c_w2, lift, CAST(row_number() OVER " +
         "(ORDER BY lift DESC, w1, w2) AS INT) AS rk FROM sc) " +
-        "SELECT rk, w1, w2, c_ab, c_w1, c_w2, lift FROM rk WHERE rk <= 50 " +
+        s"SELECT rk, w1, w2, c_ab, c_w1, c_w2, lift FROM rk WHERE rk <= $PmiTopK " +
         "ORDER BY rk"),
     // Bigram add-1 LM replay: identical event stream, identical count
     // tables, the same per-event int64 micro-log and the same two final
@@ -2052,64 +2021,54 @@ object TextOps {
     * (`HAVING count >= minC3` in the tg CTE — the engine's read-side
     * `c3 >= minCount` filter; a no-op clause at minC3 = 1).
     */
-  private def lmPpl3Sql(minC3: Long): String = {
-      val stopList = stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
-      val rule =
-        "len(string_split(text, ' ')) BETWEEN 30 AND 10000 " +
-          "AND length(regexp_replace(text, '[^a-z]', '', 'g')) " +
-          ">= len(string_split(text, ' ')) * 2 " +
-          "AND length(regexp_replace(text, '[^a-z]', '', 'g')) " +
-          "<= len(string_split(text, ' ')) * 12 " +
-          "AND len(list_filter(list_distinct(string_split(text, ' ')), " +
-          s"t -> list_contains($stopList, t))) >= 2"
-      "WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents), " +
-        s"tr AS (SELECT doc_id, string_split(text, ' ') AS toks " +
-        s"FROM documents WHERE $rule), " +
-        "e3 AS (SELECT doc_id, toks[i] AS u, toks[i + 1] AS v, toks[i + 2] AS w " +
-        "FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks) - 2)) AS i) g), " +
-        "e3t AS (SELECT toks[i] AS u, toks[i + 1] AS v, toks[i + 2] AS w " +
-        "FROM tr, LATERAL (SELECT unnest(generate_series(1, len(toks) - 2)) AS i) g), " +
-        "e2t AS (SELECT toks[i] AS a, toks[i + 1] AS b " +
-        "FROM tr, LATERAL (SELECT unnest(generate_series(1, len(toks) - 1)) AS i) g), " +
-        "tg AS (SELECT u, v, w, count(*) AS c3 FROM e3t GROUP BY u, v, w " +
-        s"HAVING count(*) >= $minC3), " +
-        "bg AS (SELECT a, b, count(*) AS c2 FROM e2t GROUP BY a, b), " +
-        "un AS (SELECT tok, count(*) AS c1 FROM " +
-        "(SELECT unnest(toks) AS tok FROM tr) GROUP BY tok), " +
-        "tv AS (SELECT CAST(count(*) AS BIGINT) AS t, " +
-        "count(DISTINCT tok) AS v FROM (SELECT unnest(toks) AS tok FROM tr)), " +
-        "sc AS (SELECT e.doc_id, " +
-        "CASE WHEN tg.c3 IS NULL AND b2.c2 IS NOT NULL THEN 1 ELSE 0 END AS bo1, " +
-        "CASE WHEN tg.c3 IS NULL AND b2.c2 IS NULL THEN 1 ELSE 0 END AS bo2, " +
-        "CAST(round(1000000.0 * ln(" +
-        "CASE WHEN tg.c3 IS NOT NULL " +
-        "THEN CAST(tg.c3 AS DOUBLE) / CAST(b1.c2 AS DOUBLE) " +
-        "WHEN b2.c2 IS NOT NULL " +
-        "THEN 0.4 * (CAST(b2.c2 AS DOUBLE) / CAST(uv.c1 AS DOUBLE)) " +
-        "ELSE 0.4 * 0.4 * (CAST(COALESCE(uw.c1, 0) + 1 AS DOUBLE) / " +
-        "CAST(tv.t + tv.v AS DOUBLE)) END), 0) AS BIGINT) AS li " +
-        "FROM e3 e " +
-        "LEFT JOIN tg ON tg.u = e.u AND tg.v = e.v AND tg.w = e.w " +
-        "LEFT JOIN bg b1 ON b1.a = e.u AND b1.b = e.v " +
-        "LEFT JOIN bg b2 ON b2.a = e.v AND b2.b = e.w " +
-        "LEFT JOIN un uv ON uv.tok = e.v " +
-        "LEFT JOIN un uw ON uw.tok = e.w " +
-        "CROSS JOIN tv), " +
-        "ag AS (SELECT doc_id, count(*) AS n_events, " +
-        "CAST(sum(bo1) AS BIGINT) AS n_backoff_bi, " +
-        "CAST(sum(bo2) AS BIGINT) AS n_backoff_uni, " +
-        "CAST(sum(li) AS BIGINT) AS s FROM sc GROUP BY doc_id), " +
-        "ag2 AS (SELECT doc_id, n_events, n_backoff_bi, n_backoff_uni, " +
-        "round(CAST(((0 - s) * 2 + n_events) // (2 * n_events) AS DOUBLE) " +
-        "/ 1000000.0, 6) AS nll " +
-        "FROM ag) " +
-        "SELECT t.doc_id, COALESCE(ag2.n_events, 0) AS n_events, " +
-        "COALESCE(ag2.n_backoff_bi, 0) AS n_backoff_bi, " +
-        "COALESCE(ag2.n_backoff_uni, 0) AS n_backoff_uni, " +
-        "COALESCE(ag2.nll, 0.0) AS nll, " +
-        "COALESCE(round(exp(ag2.nll), 4), 1.0) AS ppl " +
-        "FROM t LEFT JOIN ag2 USING (doc_id) ORDER BY doc_id"
-  }
+  private def lmPpl3Sql(minC3: Long): String =
+    "WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents), " +
+      s"tr AS (SELECT doc_id, string_split(text, ' ') AS toks " +
+      s"FROM documents WHERE $ruleKeepSql), " +
+      "e3 AS (SELECT doc_id, toks[i] AS u, toks[i + 1] AS v, toks[i + 2] AS w " +
+      "FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks) - 2)) AS i) g), " +
+      "e3t AS (SELECT toks[i] AS u, toks[i + 1] AS v, toks[i + 2] AS w " +
+      "FROM tr, LATERAL (SELECT unnest(generate_series(1, len(toks) - 2)) AS i) g), " +
+      "e2t AS (SELECT toks[i] AS a, toks[i + 1] AS b " +
+      "FROM tr, LATERAL (SELECT unnest(generate_series(1, len(toks) - 1)) AS i) g), " +
+      "tg AS (SELECT u, v, w, count(*) AS c3 FROM e3t GROUP BY u, v, w " +
+      s"HAVING count(*) >= $minC3), " +
+      "bg AS (SELECT a, b, count(*) AS c2 FROM e2t GROUP BY a, b), " +
+      "un AS (SELECT tok, count(*) AS c1 FROM " +
+      "(SELECT unnest(toks) AS tok FROM tr) GROUP BY tok), " +
+      "tv AS (SELECT CAST(count(*) AS BIGINT) AS t, " +
+      "count(DISTINCT tok) AS v FROM (SELECT unnest(toks) AS tok FROM tr)), " +
+      "sc AS (SELECT e.doc_id, " +
+      "CASE WHEN tg.c3 IS NULL AND b2.c2 IS NOT NULL THEN 1 ELSE 0 END AS bo1, " +
+      "CASE WHEN tg.c3 IS NULL AND b2.c2 IS NULL THEN 1 ELSE 0 END AS bo2, " +
+      "CAST(round(1000000.0 * ln(" +
+      "CASE WHEN tg.c3 IS NOT NULL " +
+      "THEN CAST(tg.c3 AS DOUBLE) / CAST(b1.c2 AS DOUBLE) " +
+      "WHEN b2.c2 IS NOT NULL " +
+      "THEN 0.4 * (CAST(b2.c2 AS DOUBLE) / CAST(uv.c1 AS DOUBLE)) " +
+      "ELSE 0.4 * 0.4 * (CAST(COALESCE(uw.c1, 0) + 1 AS DOUBLE) / " +
+      "CAST(tv.t + tv.v AS DOUBLE)) END), 0) AS BIGINT) AS li " +
+      "FROM e3 e " +
+      "LEFT JOIN tg ON tg.u = e.u AND tg.v = e.v AND tg.w = e.w " +
+      "LEFT JOIN bg b1 ON b1.a = e.u AND b1.b = e.v " +
+      "LEFT JOIN bg b2 ON b2.a = e.v AND b2.b = e.w " +
+      "LEFT JOIN un uv ON uv.tok = e.v " +
+      "LEFT JOIN un uw ON uw.tok = e.w " +
+      "CROSS JOIN tv), " +
+      "ag AS (SELECT doc_id, count(*) AS n_events, " +
+      "CAST(sum(bo1) AS BIGINT) AS n_backoff_bi, " +
+      "CAST(sum(bo2) AS BIGINT) AS n_backoff_uni, " +
+      "CAST(sum(li) AS BIGINT) AS s FROM sc GROUP BY doc_id), " +
+      "ag2 AS (SELECT doc_id, n_events, n_backoff_bi, n_backoff_uni, " +
+      "round(CAST(((0 - s) * 2 + n_events) // (2 * n_events) AS DOUBLE) " +
+      "/ 1000000.0, 6) AS nll " +
+      "FROM ag) " +
+      "SELECT t.doc_id, COALESCE(ag2.n_events, 0) AS n_events, " +
+      "COALESCE(ag2.n_backoff_bi, 0) AS n_backoff_bi, " +
+      "COALESCE(ag2.n_backoff_uni, 0) AS n_backoff_uni, " +
+      "COALESCE(ag2.nll, 0.0) AS nll, " +
+      "COALESCE(round(exp(ag2.nll), 4), 1.0) AS ppl " +
+      "FROM t LEFT JOIN ag2 USING (doc_id) ORDER BY doc_id"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "c1_exact_dedup" -> (c1ExactDedup _),

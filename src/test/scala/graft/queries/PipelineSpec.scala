@@ -237,7 +237,7 @@ class PipelineSpec extends SparkSuite {
     // by (nll, doc_id) per lang in memory, keep bucket <= 1, and the
     // composed query's doc set must equal it exactly.
     import org.apache.spark.sql.functions._
-    val kept = PipelineOps.pipelineKept(spark, sf, 10)
+    val kept = PipelineOps.pipelineKept(spark, sf)
       .select("lang", "doc_id").collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val nll = TextOps.c4LmPplRef(spark, sf).collect()

@@ -121,6 +121,74 @@ class TextMiningSpec extends SparkSuite {
     assert(got.toSeq == want)
   }
 
+  /** Spark's string order: unsigned UTF-8 bytes. */
+  private val sparkOrder: Ordering[String] = (a: String, b: String) =>
+    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+
+  /** Space-joined bigrams of a text tokenized as the engine does (split
+    * on " ", trailing empties kept): none below 2 tokens.
+    */
+  private def bigramsOf(text: String): Seq[String] =
+    text.split(" ", -1).toSeq.sliding(2).filter(_.length == 2).map(_.mkString(" ")).toSeq
+
+  /** c4_ngram_top reference over (lang, text): per language the top
+    * NgramTopK bigrams by (count desc, bigram).
+    */
+  private def ngramTopRef(docs: Seq[(String, String)]): Seq[(String, Int, String, Long)] =
+    docs.groupBy(_._1).toSeq.flatMap { case (lang, ds) =>
+      ds.flatMap(d => bigramsOf(d._2)).groupBy(identity).toSeq
+        .map { case (bg, xs) => (bg, xs.size.toLong) }
+        .sortWith { case ((b1, c1), (b2, c2)) =>
+          c1 > c2 || (c1 == c2 && sparkOrder.lt(b1, b2)) }
+        .take(TextOps.NgramTopK).zipWithIndex
+        .map { case ((bg, c), i) => (lang, i + 1, bg, c) }
+    }.sortWith { case (x, y) =>
+      sparkOrder.lt(x._1, y._1) || (x._1 == y._1 && x._2 < y._2) }
+
+  /** c4_dup_ngrams reference over (doc_id, text): one row per doc with at
+    * least one bigram.
+    */
+  private def dupNgramsRef(docs: Seq[(Long, String)]): Seq[(Long, Long, Long, Double)] =
+    docs.flatMap { case (id, text) =>
+      val counts = bigramsOf(text).groupBy(identity).values.map(_.size.toLong)
+      if (counts.isEmpty) None
+      else {
+        val (n, dup) = (counts.sum, counts.filter(_ > 1).sum)
+        Some((id, n, dup, dup.toDouble / n))
+      }
+    }.sortBy(_._1)
+
+  private def ngramTop(dir: String) = TextOps.c4NgramTop(spark, dir).collect()
+    .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSeq
+  private def dupNgrams(dir: String) = TextOps.c4DupNgrams(spark, dir).collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+
+  test("c4_ngram_top and c4_dup_ngrams match an in-memory brute force") {
+    val rows = graft.Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("lang"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    val top = ngramTop(sf)
+    assert(top.nonEmpty)
+    assert(top == ngramTopRef(rows.map(r => (r._2, r._3))))
+    assert(dupNgrams(sf) == dupNgramsRef(rows.map(r => (r._1, r._3))))
+  }
+
+  test("c4_ngram_top and c4_dup_ngrams: docs below 2 tokens contribute no bigram") {
+    import spark.implicits._
+    val planted = Seq((1L, "", "en"), (2L, "solo", "en"), (3L, "a b", "en"),
+      (4L, "a b a b a", "en"), (5L, "a b c", "en"), (6L, "x y x y", "de"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ngram").toString
+    planted.toDF("doc_id", "text", "lang").write.parquet(s"$dir/documents.parquet")
+    val top = ngramTop(dir)
+    assert(top == ngramTopRef(planted.map(d => (d._3, d._2))))
+    assert(top == Seq(("de", 1, "x y", 2L), ("de", 2, "y x", 1L),
+      ("en", 1, "a b", 4L), ("en", 2, "b a", 2L), ("en", 3, "b c", 1L)))
+    val dup = dupNgrams(dir)
+    assert(dup == dupNgramsRef(planted.map(d => (d._1, d._2))))
+    assert(dup == Seq((3L, 1L, 0L, 0.0), (4L, 4L, 4L, 1.0), (5L, 2L, 0L, 0.0),
+      (6L, 3L, 2L, 2.0 / 3)))
+  }
+
   /** Plain-Scala BATCHED Sennrich BPE reference: per round, count
     * adjacent pairs weighted by word freq, rank (count desc, lhs, rhs),
     * take the top `cap`, greedily keep the rank-order symbol-disjoint
@@ -648,6 +716,31 @@ class TextMiningSpec extends SparkSuite {
     val surviving = c3.size
     assert(surviving >= 2, s"fixture lost its repeated trigrams: $surviving")
     assert(c3all.size > surviving, "fixture has no singleton trigrams")
+  }
+
+  test("LM scorers: a single-token doc scores n_events = 0, nll = 0.0, ppl = 1.0") {
+    import spark.implicits._
+    // Two rule-keep docs, so the reference slice (and its model) exist,
+    // next to a one-token doc that has no bigram and no trigram event.
+    val stop = Seq("the", "of", "and", "to", "in", "is")
+    def clean(seed: Int): String =
+      (1 to 15).flatMap(i => Seq(s"tok${seed}x$i", stop(i % stop.length)))
+        .mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("graft_lm_solo").toString
+    Seq((1L, clean(1), "en"), (2L, clean(2), "en"), (3L, "solo", "en"))
+      .toDF("doc_id", "text", "lang")
+      .write.parquet(s"$dir/documents.parquet")
+    def byDoc(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    val ppl = byDoc(TextOps.c4LmPpl(spark, dir))
+    val ref = byDoc(TextOps.c4LmPplRef(spark, dir))
+    val ppl3 = byDoc(TextOps.c4LmPpl3(spark, dir))
+    assert(ppl(3L) == Seq(3L, 0L, 0.0, 1.0), s"c4_lm_ppl: ${ppl(3L)}")
+    assert(ref(3L) == Seq(3L, 0L, 0L, 0.0, 1.0), s"c4_lm_ppl_ref: ${ref(3L)}")
+    assert(ppl3(3L) == Seq(3L, 0L, 0L, 0L, 0.0, 1.0), s"c4_lm_ppl3: ${ppl3(3L)}")
+    // the 30-token rule-keep docs score 29 bigram / 28 trigram events
+    Seq(ppl -> 29L, ref -> 29L, ppl3 -> 28L).foreach { case (m, n) =>
+      assert(m(1L)(1) == n, s"events: ${m(1L)}") }
   }
 
   test("c4_quality_model: closed-form training and scoring match an in-memory reference") {
