@@ -13,6 +13,8 @@ run-varying token is masked:
   - lambda-variable suffixes  `x_123`, `y_45`, ... (one lowercase letter,
     `_`, digits: the fresh names the higher-order functions draw)
   - the temporary warehouse   `graft_wh123...`
+  - streaming temp dirs       `graft_stream_sink123...` (the parquet sink a
+    streaming query's result is read from), `graft_incr_src123...`
   - RDD ids                   `MapPartitionsRDD[3366]` (localCheckpoint)
   - call-site lines           `PipelineOps.scala:224` (they move with
     any edit above them)
@@ -36,6 +38,7 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\b([a-z])_\d+\b"), r"\1_N"),
     (re.compile(r"graft_wh\d+"), "graft_whN"),
+    (re.compile(r"graft_(stream_sink|incr_src)\d+"), r"graft_\1N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),

@@ -90,12 +90,12 @@ object DedupOps {
     * "rare" prefix tokens aren't rare when every doc is a clique.
     * EVERY super-linear stage is bounded here:
     *  - candidate generation: each contained-side doc probes only its
-    *    `anchors` (8) RAREST tokens, and each token's posting list is
-    *    capped at its `postingCap` (64) smallest doc ids (the
+    *    [[ContainAnchors]] (8) RAREST tokens, and each token's posting
+    *    list is capped at its [[ContainPostingCap]] (64) smallest doc ids (the
     *    band-bucket cap discipline via [[graft.functions.BoundedMinIds]]
     *    — a partial aggregate, drops reported loudly), so agreement
-    *    pairs are ≤ anchors·postingCap per doc at ANY density;
-    *  - the exact intersect: only the top `c` candidates by
+    *    pairs are ≤ anchors·cap per doc at ANY density;
+    *  - the exact intersect: only the top [[ContainTopC]] candidates by
     *    anchor-agreement count (deterministic (agree desc, b_id asc)
     *    order through the bounded-heap TopKAggregator) pay it —
     *    O(docs · c) confirms and array re-attaches.
@@ -107,9 +107,7 @@ object DedupOps {
     * (corpus frequency, token) — byte-wise string comparison in both
     * engines.
     */
-  def c2ContainmentBestTopC(spark: SparkSession, dir: String,
-      cCap: Int = 64, anchors: Int = 8, postingCap: Int = 64,
-      minTokens: Int = 10): DataFrame = {
+  def c2ContainmentBestTopC(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.util.ObservedLog.register(spark)
     val base = docs(spark, dir)
@@ -118,18 +116,19 @@ object DedupOps {
     val ex = base.select(col("doc_id"), size(col("toks")).as("n"),
       explode(col("toks")).as("tok"))
     val tf = ex.groupBy("tok").agg(count(lit(1)).as("freq"))
-    // per-doc rarity-ordered anchor tokens (the `anchors` rarest).
+    // per-doc rarity-ordered anchor tokens (the `ContainAnchors` rarest).
     // The frequency table is vocab-sized — shuffle join, never broadcast
     // (the tf-idf posture); the per-doc sort is bounded by doc length.
     val pref = ex.join(tf.hint("shuffle_hash"), "tok")
-      .filter(col("n") >= minTokens)
+      .filter(col("n") >= ContainMinTokens)
       .groupBy(col("doc_id"), col("n"))
       .agg(array_sort(collect_list(struct(col("freq"), col("tok")))).as("st"))
       .select(col("doc_id").as("a_id"),
-        explode(expr(s"slice(transform(st, s -> s.tok), 1, $anchors)"))
+        explode(expr(s"slice(transform(st, s -> s.tok), 1, $ContainAnchors)"))
           .as("tok"))
-    // container-side posting lists capped at the postingCap smallest ids
-    val postAgg = new graft.functions.BoundedMinIds(postingCap)
+    // container-side posting lists capped at the ContainPostingCap
+    // smallest ids
+    val postAgg = new graft.functions.BoundedMinIds(ContainPostingCap)
       .toColumn.name("kc")
     val pb = ex.select(col("tok"), col("doc_id"))
       .as[(String, Long)]
@@ -139,8 +138,8 @@ object DedupOps {
       .toDF("tok", "kc")
       .select(col("tok"), col("kc._1").as("kept"), col("kc._2").as("n_mem"))
       .observe("graft_containment_posting_cap",
-        sum(greatest(col("n_mem") - postingCap, lit(0L))).as("dropped_postings"),
-        sum(when(col("n_mem") > postingCap, 1L).otherwise(0L)).as("capped_tokens"),
+        sum(greatest(col("n_mem") - ContainPostingCap, lit(0L))).as("dropped_postings"),
+        sum(when(col("n_mem") > ContainPostingCap, 1L).otherwise(0L)).as("capped_tokens"),
         count(lit(1)).as("n_tokens"))
       .select(col("tok"), explode(col("kept")).as("b_id"))
     // The posting table and the re-attaches are vocab/corpus-sized —
@@ -160,7 +159,7 @@ object DedupOps {
       .observe("graft_containment_agree",
         count(lit(1)).as("agree_pairs"))
     val topk = new graft.functions.TopKAggregator[(Double, Long)](
-      cCap, _._1, _._2).toColumn.name("topc")
+      ContainTopC, _._1, _._2).toColumn.name("topc")
     val cand = agree
       .select(col("a_id"), col("agree").cast("double"), col("b_id"))
       .as[(Long, Double, Long)]
@@ -385,6 +384,22 @@ object DedupOps {
     */
   private[queries] val IncBucketCap = 64
 
+  /** Per-arrival candidate depth of c2_incremental_dedup_topc's
+    * band-agreement rerank, rendered into its oracle by
+    * [[topCCandidateSql]].
+    */
+  private[queries] val IncDedupTopC = 64
+
+  /** c2_containment_best_topc's bounds, used by the plan and rendered
+    * into its oracle: the per-doc candidate depth, the rarest-token
+    * anchors per doc, the container-side posting cap per token, and the
+    * contained-side minimum token count.
+    */
+  private[queries] val ContainTopC = 64
+  private[queries] val ContainAnchors = 8
+  private[queries] val ContainPostingCap = 64
+  private[queries] val ContainMinTokens = 10
+
   /** The cap itself: bounded-heap smallest-`cap` ids per (band, bucket)
     * via [[graft.functions.BoundedMinIds]] — a partial aggregate
     * (O(cap) memory per group map-side), NEVER a window (a saturated
@@ -547,7 +562,7 @@ object DedupOps {
     * the approximation itself is hash-checked.
     */
   def c2IncrementalDedupTopC(spark: SparkSession, dir: String,
-      threshold: Double = 0.8, c: Int = 64): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     import spark.implicits._
     val base = docs(spark, dir)
       .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
@@ -568,7 +583,7 @@ object DedupOps {
       .join(corpCapped.withColumnRenamed("doc_id", "c_id"),
         Seq("band", "bucket"))
       .groupBy("n_id", "c_id").agg(count(lit(1)).as("bandsc"))
-    val topk = new graft.functions.TopKAggregator[(Double, Long)](c, _._1, _._2)
+    val topk = new graft.functions.TopKAggregator[(Double, Long)](IncDedupTopC, _._1, _._2)
       .toColumn.name("topc")
     val cand = agree
       .select(col("n_id"), col("bandsc").cast("double"), col("c_id"))
@@ -1320,16 +1335,17 @@ object DedupOps {
         "rk AS (SELECT ex.doc_id, ex.n, ex.tok, row_number() OVER " +
         "(PARTITION BY ex.doc_id ORDER BY tf.freq, ex.tok) AS rn " +
         "FROM ex JOIN tf USING (tok)), " +
-        "pref AS (SELECT doc_id, tok FROM rk WHERE n >= 10 AND rn <= 8), " +
+        s"pref AS (SELECT doc_id, tok FROM rk WHERE n >= $ContainMinTokens " +
+        s"AND rn <= $ContainAnchors), " +
         "pb AS (SELECT tok, doc_id AS b_id FROM (SELECT tok, doc_id, " +
         "row_number() OVER (PARTITION BY tok ORDER BY doc_id) AS prn FROM ex) " +
-        "WHERE prn <= 64), " +
+        s"WHERE prn <= $ContainPostingCap), " +
         "ag AS (SELECT p.doc_id AS a_id, pb.b_id, count(*) AS agree " +
         "FROM pref p JOIN pb ON p.tok = pb.tok AND p.doc_id <> pb.b_id " +
         "GROUP BY 1, 2), " +
         "cand AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, row_number() " +
         "OVER (PARTITION BY a_id ORDER BY agree DESC, b_id) AS crn FROM ag) " +
-        "WHERE crn <= 64), " +
+        s"WHERE crn <= $ContainTopC), " +
         "sc AS (SELECT a_id, b_id, " +
         "len(list_filter(x.toks, t -> list_contains(y.toks, t))) AS common, " +
         "len(x.toks) AS n FROM cand " +
@@ -1477,13 +1493,13 @@ object DedupOps {
   // surviving memberships, then the (agreement desc, c_id asc) rank —
   // the exact total orders the two bounded heaps implement.
   /** Bounded-candidate replay: per-bucket corpus cap, band-agreement
-    * counts, (agreement desc, c_id asc) top-64 rank. `capNewSide` also
+    * counts, (agreement desc, c_id asc) top-`c` rank. `capNewSide` also
     * caps the NEW/train side per bucket (the c7_decontaminate_fuzzy_topc
     * form — see its scaladoc for why both sides must be bounded on a
     * dense corpus); the incremental-dedup form leaves it off because
     * its new side is a batch, small by contract.
     */
-  private[queries] def topCCandidateSql(corpusCte: String,
+  private[queries] def topCCandidateSql(corpusCte: String, c: Int,
       capNewSide: Boolean = false): String = {
     val newCte =
       if (!capNewSide) ""
@@ -1499,18 +1515,18 @@ object DedupOps {
       "USING (band, bucket) GROUP BY n_id, c_id), " +
       "cand AS (SELECT n_id, c_id FROM (SELECT n_id, c_id, row_number() " +
       "OVER (PARTITION BY n_id ORDER BY bandsc DESC, c_id) AS rn FROM ag) " +
-      "WHERE rn <= 64)"
+      s"WHERE rn <= $c)"
   }
 
   private lazy val incrementalTopCSql: String =
-    incrementalSqlWith(topCCandidateSql("cp"))
+    incrementalSqlWith(topCCandidateSql("cp", IncDedupTopC))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "c2_ngram_jaccard" -> (c2NgramJaccard _),
     "c2_ngram_jaccard_topm" -> (c2NgramJaccardTopM _),
     "c2_containment" -> (c2Containment _),
     "c2_containment_best" -> (c2ContainmentBest _),
-    "c2_containment_best_topc" -> ((s: SparkSession, d: String) => c2ContainmentBestTopC(s, d)),
+    "c2_containment_best_topc" -> (c2ContainmentBestTopC _),
     "c2_minhash_lsh" -> (c2MinHashLsh _),
     "c2_minhash_cc" -> (c2MinHashCc _),
     "c2_incremental_cc" -> (c2IncrementalCc _),

@@ -24,8 +24,31 @@ object EventOps {
   private def ev(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "events")
 
-  private val sumValue =
+  private[graft] val sumValue =
     "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
+
+  /** The inactivity gap that closes a session, shared by the batch and
+    * streaming sessionizers and their oracles.
+    */
+  private[graft] val SessionGapMinutes = 30
+  private[graft] val SessionGapUs = SessionGapMinutes * 60000000L
+
+  /** Gaps-and-islands sessions in DuckDB: `flagged` marks each event that
+    * starts a session (first of its user, or a gap ≥ the session gap
+    * after the previous one); `sess` numbers the sessions per user. The
+    * one replay of every sessionizer here and in
+    * graft.streaming.EventStream.
+    */
+  private[graft] val sessionCtes: String =
+    "WITH flagged AS (SELECT user_id, ts, event_id, " +
+      "CASE WHEN lag(ts) OVER w IS NULL OR " +
+      s"epoch_us(ts) - epoch_us(lag(ts) OVER w) >= $SessionGapUs THEN 1 ELSE 0 END " +
+      "AS new_session FROM events WINDOW w AS " +
+      "(PARTITION BY user_id ORDER BY ts, event_id)), " +
+      "sess AS (SELECT user_id, ts, SUM(new_session) OVER " +
+      "(PARTITION BY user_id ORDER BY ts, event_id " +
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx " +
+      "FROM flagged)"
 
   /** C5a: tumbling 1-hour windows — event count, distinct users, exact
     * value sum per (window, event_type). Uses Spark's `window()` operator;
@@ -51,7 +74,7 @@ object EventOps {
       .select(col("w.start").as("window_start"), col("n_events"))
       .orderBy("window_start")
 
-  /** C5c: sessionization — 30-minute-gap sessions per user via the classic
+  /** C5c: sessionization — [[SessionGapMinutes]]-gap sessions per user via the classic
     * gaps-and-islands window plan (lag → new-session flag → running sum).
     * One shuffle on user_id; the same logic DuckDB can express, so this is
     * fully oracle-checked (unlike opaque session ids, session_idx is a
@@ -67,7 +90,7 @@ object EventOps {
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("new_session",
         when(col("prev_ts").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prev_ts")) >= 1800000000L, 1L)
+          unix_micros(col("ts")) - unix_micros(col("prev_ts")) >= SessionGapUs, 1L)
           .otherwise(0L))
       .withColumn("session_idx",
         sum(col("new_session")).over(
@@ -374,14 +397,8 @@ object EventOps {
         "time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes']) AS window_start " +
         "FROM events) GROUP BY window_start ORDER BY window_start"),
     "c5_sessionize" ->
-      ("WITH flagged AS (SELECT user_id, ts, event_id, " +
-        "CASE WHEN lag(ts) OVER w IS NULL OR " +
-        "epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END AS new_session " +
-        "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), " +
-        "sess AS (SELECT user_id, ts, " +
-        "SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged) " +
-        "SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx, count(*) AS n_events, " +
+      (s"$sessionCtes SELECT user_id, " +
+        "CAST(session_idx AS BIGINT) AS session_idx, count(*) AS n_events, " +
         "min(ts) AS session_start, max(ts) AS session_end, " +
         "CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec " +
         "FROM sess GROUP BY user_id, session_idx ORDER BY user_id, session_idx"),

@@ -1525,7 +1525,7 @@ object PipelineOps {
     // band-agreement counts and the (agreement desc, c_id asc) rank,
     // the exact total orders the bounded heaps implement).
     "c7_decontaminate_fuzzy_topc" -> fuzzySqlWith(
-      DedupOps.topCCandidateSql("cp", capNewSide = true)),
+      DedupOps.topCCandidateSql("cp", FuzzyTopC, capNewSide = true)),
     // Fixed-round min-propagation closure over the replayed MinHash
     // memberships (the c2_minhash_cc oracle chain — linear per round,
     // so this replays above the sf0.01 gate too), then the

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.queries.EventOps
+import graft.queries.EventOps.{SessionGapMinutes, SessionGapUs}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, Trigger}
 
 /** Structured Streaming surface over the `events` schema — the streaming
   * analog of graft.queries.EventOps (SURVEY.md §7.5, an extension beyond
@@ -17,13 +19,27 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   */
 object EventStream {
 
-  /** File-source reader over a directory of event parquet (schema must be
-    * supplied for streaming reads; reuse the batch schema).
+  /** Event-time watermark delay of every watermarked operator here, as
+    * the plans take it and as the oracles render it (interval string and
+    * milliseconds).
     */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.load(spark, dir, "events").schema
-    spark.readStream.schema(schema).parquet(dir)
-  }
+  private val WatermarkHours = 2
+  private val Watermark = s"$WatermarkHours hours"
+  private val WatermarkMs = WatermarkHours * 3600000L
+
+  /** Attribution window of [[purchaseClickJoin]]: a click matches a
+    * purchase of the same user at most this many hours before it.
+    */
+  private val JoinWindowHours = 6
+
+  /** Event types ranked per window by c5_stream_topk. */
+  private val TopK = 2
+
+  /** Inactivity deadline of [[userInactivity]] after a user's last event. */
+  private val InactivityGapMs = 6L * 3600000L
+
+  /** The consecutive event-type sequence [[userPatternHits]] detects. */
+  private val Pattern = Seq("view", "click", "purchase")
 
   /** Tumbling 1-hour windowed counts with a 2-hour watermark — the
     * streaming twin of EventOps.c5Tumbling. Late events beyond the
@@ -34,10 +50,10 @@ object EventStream {
     */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        expr("CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)").as("sum_value"))
+        expr(EventOps.sumValue).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
@@ -47,18 +63,19 @@ object EventStream {
     */
   def slidingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("window_start"), col("n_events"))
 
-  /** Session windows (30-minute gap) per user — the streaming twin of
-    * EventOps.c5Sessionize, via the native session_window operator.
+  /** Session windows ([[EventOps.SessionGapMinutes]] gap) per user — the
+    * streaming twin of EventOps.c5Sessionize, via the native
+    * session_window operator.
     */
   def sessionCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+      .withWatermark("ts", Watermark)
+      .groupBy(session_window(col("ts"), s"$SessionGapMinutes minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
         col("user_id"), col("n_events"))
@@ -228,7 +245,7 @@ object EventStream {
 
   /** Streaming CONSECUTIVE-pattern detection (CEP-lite, the
     * MATCH_RECOGNIZE shape): emit a hit whenever a user's last k events
-    * are exactly `pattern` (default view → click → purchase, the
+    * are exactly `pattern` ([[Pattern]]: view → click → purchase, the
     * attribution sequence). Adjacency across micro-batches needs a
     * buffer of the last k−1 events — transformWithState's ListState,
     * the typed primitive built for bounded per-key buffers (the old
@@ -272,22 +289,21 @@ object EventStream {
     }
   }
 
-  def userPatternHits(spark: SparkSession, events: DataFrame,
-      pattern: Seq[String] = Seq("view", "click", "purchase"))
+  def userPatternHits(spark: SparkSession, events: DataFrame)
       : org.apache.spark.sql.Dataset[PatternHit] = {
     import spark.implicits._
     events
       .selectExpr("user_id", "event_type", "unix_micros(ts) AS us", "event_id")
       .as[(Long, String, Long, Long)]
       .groupByKey(_._1)
-      .transformWithState(new PatternProcessor(pattern),
+      .transformWithState(new PatternProcessor(Pattern),
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
   /** Streaming INACTIVITY detection via transformWithState EVENT-TIME
     * TIMERS — the push-based absence alert (dormancy/churn detection):
     * a user is reported when the watermark passes their last event by
-    * `gapMs`, i.e. the stream itself notices nothing arrived. Absence
+    * [[InactivityGapMs]], i.e. the stream itself notices nothing arrived. Absence
     * is the one thing data-driven operators cannot see (every other
     * emission here is triggered by a row; this one is triggered by a
     * TIMER the row armed). One armed timer per user, re-armed on every
@@ -327,16 +343,15 @@ object EventStream {
       Iterator.single(InactiveUser(key, lastUs.get()))
   }
 
-  def userInactivity(spark: SparkSession, events: DataFrame,
-      gapMs: Long = 21600000L)
+  def userInactivity(spark: SparkSession, events: DataFrame)
       : org.apache.spark.sql.Dataset[InactiveUser] = {
     import spark.implicits._
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Watermark)
       .selectExpr("user_id", "unix_micros(ts) AS us")
       .as[(Long, Long)]
       .groupByKey(_._1)
-      .transformWithState(new InactivityProcessor(gapMs),
+      .transformWithState(new InactivityProcessor(InactivityGapMs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
   }
@@ -366,8 +381,8 @@ object EventStream {
   final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long, closed: Boolean)
 
-  def sessionizeWithState(spark: SparkSession, events: DataFrame,
-      gapSeconds: Long = 1800L): org.apache.spark.sql.Dataset[SessionOut] = {
+  def sessionizeWithState(spark: SparkSession, events: DataFrame)
+      : org.apache.spark.sql.Dataset[SessionOut] = {
     import spark.implicits._
     events
       .selectExpr("user_id", "ts")
@@ -381,7 +396,7 @@ object EventStream {
           var cur = state.getOption
           sorted.foreach { t =>
             cur match {
-              case Some(s) if t - s.last < gapSeconds * 1000000L =>
+              case Some(s) if t - s.last < SessionGapUs =>
                 cur = Some(OpenSession(s.start, t, s.n + 1))
               case Some(s) =>
                 out ::= SessionOut(uid, microsTs(s.start),
@@ -424,7 +439,7 @@ object EventStream {
       : org.apache.spark.sql.Dataset[GapfillOut] = {
     import spark.implicits._
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Watermark)
       .selectExpr("event_type", "ts")
       .as[(String, java.sql.Timestamp)]
       .groupByKey(_._1)
@@ -506,7 +521,7 @@ object EventStream {
       : org.apache.spark.sql.Dataset[AnomOut] = {
     import spark.implicits._
     events
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Watermark)
       .selectExpr("user_id", "ts")
       .as[(Long, java.sql.Timestamp)]
       .groupByKey(_._1)
@@ -547,61 +562,44 @@ object EventStream {
       }
   }
 
-  /** Stream-stream inner join — purchases joined to the same user's
-    * clicks within the preceding `windowHours` hours, both sides
+  /** Stream-stream interval join of purchases to the same user's clicks
+    * within the preceding [[JoinWindowHours]] hours, both sides
     * streaming. The time-range condition + watermarks bound the join
     * state: each side buffers only rows younger than watermark +
     * constraint span, so state is O(rows per horizon), not O(stream) —
     * the form an attribution pipeline runs forever. (Spark requires
     * watermarks on both inputs and a time constraint to age state out;
     * without them a stream-stream join is unbounded.)
+    *
+    * `joinType` "left_outer" keeps every purchase: matched purchases
+    * emit immediately (inner semantics), while a purchase with NO click
+    * in its window emits with null click columns only when the global
+    * watermark passes it (state eviction proves no matching click can
+    * still arrive: future clicks have c_ts > watermark, and a match
+    * needs c_ts <= p_ts) — the absence-detection shape ("purchases with
+    * no prior click") an inner join structurally cannot express on a
+    * stream. Boundary (pinned by EventStreamSpec's boundary test): a
+    * purchase emits null-matched iff epoch_us(p_ts) <
+    * global_watermark_ms·1000 — STRICTLY below, at microsecond
+    * granularity — where the watermark is min over both sides of
+    * (ms-floored max event time − [[Watermark]]). Purchases at or above
+    * the final watermark stay buffered in state and never reach an
+    * AvailableNow sink.
     */
   def purchaseClickJoin(purchases: DataFrame, clicks: DataFrame,
-      windowHours: Int = 6): DataFrame = {
+      joinType: String = "inner"): DataFrame = {
     val p = purchases.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
+      .withWatermark("p_ts", Watermark)
     val c = clicks.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
+      .withWatermark("c_ts", Watermark)
     p.join(c,
       col("user_id") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowHours HOURS") &&
-        col("c_ts") <= col("p_ts"))
-      .select(col("p_id"), col("user_id"), col("p_ts"), col("c_id"), col("c_ts"))
-  }
-
-  /** LEFT-OUTER twin of [[purchaseClickJoin]]: every purchase appears —
-    * matched purchases emit immediately (inner semantics), while a
-    * purchase with NO click in its 6h window emits with null click
-    * columns only when the global watermark passes it (state eviction
-    * proves no matching click can still arrive: future clicks have
-    * c_ts > watermark, and a match needs c_ts <= p_ts). The
-    * absence-detection join shape — "purchases with no prior click" —
-    * that an inner join structurally cannot express on a stream.
-    *
-    * Boundary (pinned by EventStreamSpec's boundary test): a purchase
-    * emits null-matched iff epoch_us(p_ts) < global_watermark_ms·1000
-    * — STRICTLY below, at microsecond granularity — where the watermark
-    * is min over both sides of (ms-floored max event time − 2h).
-    * Purchases at or above the final watermark stay buffered in state
-    * and never reach an AvailableNow sink.
-    */
-  def purchaseClickJoinOuter(purchases: DataFrame, clicks: DataFrame,
-      windowHours: Int = 6): DataFrame = {
-    val p = purchases.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    val c = clicks.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    p.join(c,
-      col("user_id") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowHours HOURS") &&
+        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $JoinWindowHours HOURS") &&
         col("c_ts") <= col("p_ts"),
-      "left_outer")
+      joinType)
       .select(col("p_id"), col("user_id"), col("p_ts"), col("c_id"), col("c_ts"))
   }
 
@@ -614,20 +612,11 @@ object EventStream {
     * streaming `dropDuplicates` would keep every key seen since the start
     * of the query.)
     */
-  def dedupWithinWatermark(events: DataFrame, horizon: String = "2 hours"): DataFrame =
+  def dedupWithinWatermark(events: DataFrame, horizon: String = Watermark): DataFrame =
     events
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
 
-  /** Run a streaming frame to a named in-memory sink until idle (test /
-    * demo harness; production callers use their own writeStream).
-    */
-  def runToMemory(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Complete()): StreamingQuery = {
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    q.processAllAvailable()
-    q
-  }
 
   // ---- driver-checkable batch surface -------------------------------
   // Each c5_stream_* query runs the REAL streaming operator (readStream
@@ -884,6 +873,7 @@ object EventStream {
     }
   }
 
+
   /** floor((min + max) / 2) of `by` over `rows`: the default cut of a
     * two-file split, and the centre the cut pickers aim for.
     */
@@ -893,10 +883,12 @@ object EventStream {
   }
 
   /** A stream-source dir of two ordered part files, `00_early.parquet`
-    * and `01_late.parquet` (see [[writeOrderedSplitDir]]).
+    * (`by ≤ cut`) and `01_late.parquet` (`by > cut`; see
+    * [[writeOrderedSplitDir]]). The cut travels with the split, so a
+    * boundary check never recomputes it.
     */
   private[streaming] final case class Split(dir: String,
-      schema: org.apache.spark.sql.types.StructType)
+      schema: org.apache.spark.sql.types.StructType, cut: Long)
 
   /** Splits written so far, keyed by what they split. A split is
     * one-time scaffolding (the b8 layout-idempotence posture), so bench
@@ -923,7 +915,7 @@ object EventStream {
       val t = rows
       val c = cut.getOrElse(midpoint(t, by))
       val fresh = Split(writeOrderedSplitDir(t.filter(by <= c), t.filter(by > c)),
-        t.schema)
+        t.schema, c)
       splits.put(key, fresh)
       fresh
     }
@@ -969,14 +961,14 @@ object EventStream {
     * arrive as two data micro-batches in that order (file order forced
     * via modification times).
     */
-  private def writeOrderedSplitDir(early: DataFrame, late: DataFrame): String = {
+  private[streaming] def writeOrderedSplitDir(early: DataFrame, late: DataFrame): String = {
     import java.nio.file.{Files => JFiles, StandardCopyOption}
+    import org.apache.commons.io.FileUtils
     val stage = JFiles.createTempDirectory("graft_incr_stage")
     val streamDir = JFiles.createTempDirectory("graft_incr_src")
     // Test-harness scaffolding, not an ingest pattern: coalesce(1)
     // single-task writes exist because the check needs EXACTLY one file
-    // per micro-batch; the temp split is reclaimed on JVM exit.
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(streamDir.toFile)
+    // per micro-batch.
     def writeHalf(half: DataFrame, tag: String, mtime: Long): Unit = {
       val out = stage.resolve(tag)
       half.coalesce(1).write.mode("overwrite").parquet(out.toString)
@@ -992,11 +984,23 @@ object EventStream {
           "two-batch arrival order would be undefined")
     }
     val now = System.currentTimeMillis()
-    writeHalf(early, "00_early", now - 120000L)
-    writeHalf(late, "01_late", now - 60000L)
-    // the staged writer dirs are empty shells after the part-file moves
-    org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-    streamDir.toString
+    try {
+      writeHalf(early, "00_early", now - 120000L)
+      writeHalf(late, "01_late", now - 60000L)
+      // the temp split is reclaimed on JVM exit; registered only now,
+      // because it registers the dir's CURRENT files (a dir registered
+      // empty is not deleted once it holds files)
+      FileUtils.forceDeleteOnExit(streamDir.toFile)
+      streamDir.toString
+    } catch {
+      case e: Throwable =>
+        // a half-written split is never returned, so nothing reads it
+        FileUtils.deleteQuietly(streamDir.toFile)
+        throw e
+    } finally
+      // after the part-file moves the staged writer dirs are empty
+      // shells; after a failed write they hold its partial output
+      FileUtils.deleteQuietly(stage.toFile)
   }
 
   /** Stream a [[Split]] one file per micro-batch (`maxFilesPerTrigger=1`):
@@ -1008,30 +1012,6 @@ object EventStream {
       .option("maxFilesPerTrigger", "1")
       .parquet(split.dir)
 
-  /** c5_stream_tumbling_incr: the tumbling aggregation under REAL
-    * incremental arrival — the events table is split chronologically
-    * into two files, streamed with maxFilesPerTrigger=1 (two data
-    * micro-batches), output-mode Append so only watermark-FINALIZED
-    * windows reach the sink. This checks what the watermark actually
-    * does across batches — state eviction and append finalization —
-    * rather than asserting single-batch arrival made them unobservable
-    * (the other c5_stream_* oracles' posture).
-    *
-    * Determinism: the split is chronological (file 1 = events at or
-    * before the midpoint of the time span, file 2 = the rest) and file
-    * order is forced via modification times, so arrival is in-order and
-    * no row is ever late — the final watermark is max(ts) − 2h over the
-    * WHOLE table, and the sink holds exactly the windows whose end ≤
-    * that watermark (Spark runs a no-data batch after the last file to
-    * advance the watermark and flush — `noDataMicroBatches` default).
-    * Oracle: the batch tumbling aggregation filtered to those windows.
-    */
-  def c5StreamTumblingIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(tumblingCounts(splitStream(eventSplit(spark, sfDir))),
-      MemorySink(OutputMode.Append()), AtLeast(2))
-      .orderBy("window_start", "event_type")
-  }
 
   /** Cut point for the incremental session check: the microsecond
     * midpoint of the adjacent same-user event pair that is closer than
@@ -1042,7 +1022,7 @@ object EventStream {
     * merge path provably exercised. Deterministic; falls back to the
     * span midpoint on a degenerate corpus with no intra-gap pairs.
     */
-  private[streaming] def sessionCutUs(ev: DataFrame, gapUs: Long = 1800000000L): Long = {
+  private[streaming] def sessionCutUs(ev: DataFrame): Long = {
     val mid = midpoint(ev, unix_micros(col("ts")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -1050,49 +1030,12 @@ object EventStream {
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("nxt", lead(col("us"), 1).over(w))
       .filter(col("nxt").isNotNull &&
-        col("nxt") - col("us") < gapUs && col("nxt") =!= col("us"))
+        col("nxt") - col("us") < SessionGapUs && col("nxt") =!= col("us"))
       .select((col("us") + (col("nxt") - col("us")) / 2L).cast("long").as("cut"))
       .withColumn("d", abs(col("cut") - mid))
       .orderBy(col("d"), col("cut"))
       .limit(1).collect()
     if (cut.isEmpty) mid else cut.head.getLong(0)
-  }
-
-  /** c5_stream_sessionize_incr: the session_window operator under REAL
-    * incremental arrival (same two-file chronological split). Beyond
-    * what the tumbling twin checks, this exercises cross-batch session
-    * STATE MERGING: a session spanning the file cut sits open in the
-    * state store after batch 1 and must be extended (not restarted) by
-    * batch 2's rows. Append mode emits a session once the watermark
-    * passes its end (last event + gap); oracle = batch gaps-and-islands
-    * sessions whose end ≤ max(ts) − 2h, with full counts (in-order
-    * arrival, nothing late).
-    */
-  def c5StreamSessionizeIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cut = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
-    runStream(sessionCounts(splitStream(eventSplit(spark, sfDir, Some(cut)))),
-      MemorySink(OutputMode.Append()), AtLeast(2))
-      .orderBy("user_id", "session_start")
-  }
-
-  /** c5_stream_user_stats_incr: mapGroupsWithState under REAL
-    * incremental arrival — the third streaming-state family (after the
-    * windowed and session incrementals) verified across micro-batches.
-    * A user with events in both halves is updated twice; the Update-mode
-    * sink then holds both emissions, and the final per-user row (max of
-    * the running counter) equals the full batch count ONLY if the
-    * custom state actually carried the batch-1 counter into batch 2 —
-    * a restarted state would report the second half alone. Oracle =
-    * the same per-user count + max ts as the single-batch twin.
-    */
-  def c5StreamUserStatsIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(userRunningStats(spark, splitStream(eventSplit(spark, sfDir))),
-      MemorySink(OutputMode.Update()), AtLeast(2))
-      .groupBy("user_id")
-      .agg(max(col("n_events")).as("n_events"), max(col("last_ts")).as("last_ts"))
-      .orderBy("user_id")
   }
 
   /** Cut point for the incremental stream-stream join check: the
@@ -1105,93 +1048,20 @@ object EventStream {
     * with no strictly-ordered attribution pair — the caller then skips
     * the cross-batch assertion (any chronological cut stays oracle-safe).
     */
-  private[streaming] def joinCutUs(ev: DataFrame, windowHours: Int = 6): Option[Long] = {
+  private[streaming] def joinCutUs(ev: DataFrame): Option[Long] = {
     val mid = midpoint(ev, unix_micros(col("ts")))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), unix_micros(col("ts")).as("p_us"))
     val c = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_us"))
     val cut = p.join(c, col("user_id") === col("c_user") &&
-        col("c_us") >= col("p_us") - lit(windowHours * 3600000000L) &&
+        col("c_us") >= col("p_us") - lit(JoinWindowHours * HourUs) &&
         col("c_us") < col("p_us"))
       .select((col("c_us") + (col("p_us") - col("c_us")) / 2L).cast("long").as("cutc"))
       .withColumn("d", abs(col("cutc") - lit(mid)))
       .orderBy(col("d"), col("cutc"))
       .limit(1).collect()
     cut.headOption.map(_.getLong(0))
-  }
-
-  /** Whether a join sink holds a (purchase, click) pair whose click is at
-    * or before `cut` and whose purchase is after it — a pair only a
-    * join whose state crossed the cut can emit.
-    */
-  private def straddling(sink: DataFrame, cut: Long): Boolean =
-    sink.filter(unix_micros(col("c_ts")) <= cut && unix_micros(col("p_ts")) > cut)
-      .limit(1).count() != 0
-
-  /** c5_stream_join_incr: the stream-stream interval join under REAL
-    * incremental arrival — the fourth and last streaming-state family
-    * (join row buffers) verified across micro-batches. Both sides stream
-    * the SAME chronological two-file split with maxFilesPerTrigger=1, so
-    * each data micro-batch advances both sides by one file. The cut (see
-    * [[joinCutUs]]) places a matched click/purchase pair across the file
-    * boundary: the click is buffered into join state in batch 1 and its
-    * purchase only arrives in batch 2 — the pair reaches the sink ONLY if
-    * buffered join rows survive the batch boundary, which the query
-    * asserts explicitly before returning.
-    *
-    * Oracle: the full batch interval join, identical to c5_stream_join.
-    * In-order arrival makes that exact: after batch 1 the watermark is
-    * max(early ts) − 2h, and a click evictable before batch 2 (c_ts + 6h
-    * < watermark) is > 6h older than any batch-2 purchase — outside the
-    * join window anyway, so state eviction can never drop a true pair.
-    */
-  def c5StreamJoinIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    def side = splitStream(eventSplit(spark, sfDir, cutOpt))
-    val joined = runStream(purchaseClickJoin(side, side), TempParquet, AtLeast(2),
-      skipNoDataBatch = true)
-    cutOpt.foreach { cut =>
-      if (!straddling(joined, cut))
-        throw new IllegalStateException(
-          "no cross-batch pair in the join sink: stream-stream join state " +
-            "was not carried across micro-batches")
-    }
-    joined.orderBy("p_id", "c_id")
-  }
-
-  /** c5_stream_join_outer_incr: the left-outer interval join under REAL
-    * two-batch arrival — the sink must hold (a) a matched pair whose
-    * sides arrived in DIFFERENT micro-batches (join row-buffer state
-    * crossed the boundary) and (b) a null-matched purchase from batch 1
-    * (the eviction predicate ran against buffered state under a
-    * watermark that only existed because batch 2 started). Same oracle
-    * as the single-batch twin: under in-order arrival the final
-    * emission set is identical — an early-evicted purchase (p_ts below
-    * the batch-1 watermark) can never match a later click anyway, since
-    * a match needs c_ts <= p_ts but every batch-2 click has
-    * c_ts > cut > watermark_1 > p_ts.
-    */
-  def c5StreamJoinOuterIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    def side = splitStream(eventSplit(spark, sfDir, cutOpt))
-    val joined = runStream(purchaseClickJoinOuter(side, side), TempParquet, AtLeast(2))
-    cutOpt.foreach { cut =>
-      if (!straddling(joined, cut))
-        throw new IllegalStateException(
-          "no cross-batch pair in the outer-join sink: stream-stream join " +
-            "state was not carried across micro-batches")
-      val evictedEarly = joined.filter(
-        col("c_id").isNull && unix_micros(col("p_ts")) <= cut)
-        .limit(1).count()
-      if (evictedEarly == 0)
-        throw new IllegalStateException(
-          "no null-matched batch-1 purchase in the outer-join sink: " +
-            "watermark eviction did not run against cross-batch state")
-    }
-    joined.orderBy("p_id", "c_id")
   }
 
   /** Dedup-state horizon for the incremental dedup check (24 h): the
@@ -1220,8 +1090,7 @@ object EventStream {
     * payloads at all) — the caller then runs cut-at-midpoint with the
     * assertion skipped (the oracle is cut-invariant by construction).
     */
-  private[streaming] def dedupCutUs(ev: DataFrame,
-      horizonUs: Long = DedupHorizonUs): Option[(Long, Long, String, Double)] = {
+  private[streaming] def dedupCutUs(ev: DataFrame): Option[(Long, Long, String, Double)] = {
     val mid = midpoint(ev, unix_micros(col("ts")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"), col("event_type"), col("value"))
@@ -1231,7 +1100,7 @@ object EventStream {
         unix_micros(col("ts")).as("us"))
       .withColumn("nxt", lead(col("us"), 1).over(w))
       .filter(col("nxt").isNotNull && col("nxt") > col("us") &&
-        col("nxt") - col("us") < lit(2L * horizonUs))
+        col("nxt") - col("us") < lit(2L * DedupHorizonUs))
       .select(col("user_id"), col("event_type"), col("value"),
         (col("us") + (col("nxt") - col("us")) / 2L).cast("long").as("cutc"))
       .withColumn("d", abs(col("cutc") - lit(mid)))
@@ -1239,54 +1108,6 @@ object EventStream {
       .limit(1).collect()
     cut.headOption.map(r =>
       (r.getLong(3), r.getLong(0), r.getString(1), r.getDouble(2)))
-  }
-
-  /** c5_stream_dedup_incr: dropDuplicatesWithinWatermark under REAL
-    * incremental arrival — the FIFTH streaming-state family (dedup key
-    * state), beyond the four the *_incr twins already cover. The cut
-    * (see [[dedupCutUs]]) places a duplicate payload pair across the
-    * file boundary with the first copy still inside the watermark
-    * horizon: the batch-2 copy is dropped ONLY if the key's state
-    * survived the batch boundary, which the query asserts (its
-    * `n_emitted` must be 1, not 2). The sink is grouped to
-    * (key, n_emitted) so any re-emission would change the hashed
-    * result instead of being collapsed away.
-    *
-    * Oracle: every distinct key exactly once. The operator GUARANTEES
-    * dedup within the horizon and MAY dedup beyond it (state eviction
-    * is lazy, at end-of-batch with the batch's entry watermark —
-    * verified empirically at sf0.1, where 29 keys whose state was
-    * expiry-eligible at the batch-2 watermark were still deduplicated):
-    * in a two-batch in-order run no state is evicted before the last
-    * data batch, so nothing is ever re-admitted and n_emitted is 1
-    * everywhere — which is exactly what makes the column a hard
-    * cross-batch signal: a state store that failed to carry keys over
-    * the boundary would re-emit every early/late duplicate as
-    * n_emitted = 2 and break the hash.
-    */
-  def c5StreamDedupIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val pairOpt = dedupCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val stream = splitStream(eventSplit(spark, sfDir, pairOpt.map(_._1)))
-    val sink = runStream(
-      dedupWithinWatermark(stream, DedupHorizonInterval)
-        .select(col("user_id"), col("event_type"), col("value")),
-      TempParquet, AtLeast(2), skipNoDataBatch = true)
-    val res = sink.groupBy(col("user_id"), col("event_type"), col("value"))
-      .agg(count(lit(1)).as("n_emitted"))
-    pairOpt.foreach { case (_, uid, etype, v) =>
-      // headOption: an entirely-absent key (empty sink, key dropped) is
-      // the same diagnosis as a re-emission — state/emission went wrong —
-      // not a bare NoSuchElementException.
-      val emitted = res.filter(col("user_id") === uid &&
-        col("event_type") === etype && col("value") === v)
-        .collect().headOption.map(_.getLong(3)).getOrElse(0L)
-      if (emitted != 1L)
-        throw new IllegalStateException(
-          s"straddling duplicate emitted $emitted times: dedup state was " +
-            "not carried across micro-batches")
-    }
-    res.orderBy("user_id", "event_type", "value")
   }
 
   /** Horizon for the restart-dedup check: LONGER THAN THE CORPUS SPAN
@@ -1306,44 +1127,448 @@ object EventStream {
     */
   private val RestartDedupHorizonInterval: String = s"${90 * 24} hours"
 
-  /** c5_stream_restart_dedup: DEDUP-KEY state recovered from a durable
-    * checkpoint across a query stop/restart — completing the restart
-    * matrix (window state: c5_stream_restart; custom state:
-    * c5_stream_restart_state; join buffers: c5_stream_restart_join;
-    * dedup keys: here). The cut (see [[dedupCutUs]]) places a duplicate
-    * payload pair across the file boundary: lifecycle A emits the first
-    * copy and stores its key; lifecycle B (fresh query object, same
-    * checkpoint) sees only the late file and must DROP the second copy —
-    * it can only know the key if the dedup state came back from disk,
-    * which the query asserts (the straddling key must appear exactly
-    * once in the union sink). The horizon outlives the corpus (see
-    * [[RestartDedupHorizonInterval]]), so the oracle is exact at any
-    * SF: every distinct key exactly once with n_emitted = 1 — a reset
-    * state store would re-emit every early/late duplicate as
-    * n_emitted = 2 and break the hash.
+  /** Park the split's late file so a restart lifecycle sees only the
+    * early half; restore it (and its order-bearing mtime) afterwards. If
+    * the restore fails, the split dir is left without its late file,
+    * which the memo's part-file check ([[memoSplit]]) rebuilds on the
+    * next lookup instead of silently running on half the rows.
     */
-  def c5StreamRestartDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val pairOpt = dedupCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val split = eventSplit(spark, sfDir, pairOpt.map(_._1))
-    val res = restartLifecycles(split,
-        dedupWithinWatermark(splitStream(split), RestartDedupHorizonInterval)
-          .select(col("user_id"), col("event_type"), col("value")),
-        skipNoDataBatch = true)(_ => ())
-      .groupBy(col("user_id"), col("event_type"), col("value"))
-      .agg(count(lit(1)).as("n_emitted"))
-    pairOpt.foreach { case (_, uid, etype, v) =>
-      // headOption, as in c5StreamDedupIncr: 0 emissions is also a state
-      // failure and deserves the diagnostic, not a NoSuchElementException.
-      val emitted = res.filter(col("user_id") === uid &&
-        col("event_type") === etype && col("value") === v)
-        .collect().headOption.map(_.getLong(3)).getOrElse(0L)
-      if (emitted != 1L)
-        throw new IllegalStateException(
-          s"straddling duplicate emitted $emitted times: dedup-key state " +
-            "did not survive the stop/restart")
+  private def withParkedLate[T](dir: String)(body: => T): T = {
+    val late = new java.io.File(dir, "01_late.parquet")
+    val parked = new java.io.File(s"$dir.parked_01_late.parquet")
+    val mtime = late.lastModified()
+    if (!late.renameTo(parked))
+      sys.error(s"could not park $late for the restart check")
+    try body
+    finally {
+      if (!parked.renameTo(late))
+        sys.error(s"could not restore $late; split dir is now incomplete")
+      // rename preserves mtime on the same filesystem, but file ORDER is
+      // this harness's correctness edge — re-assert it.
+      if (late.lastModified() != mtime && !late.setLastModified(mtime))
+        sys.error(s"could not restore mtime of $late")
     }
-    res.orderBy("user_id", "event_type", "value")
+  }
+
+  /** How a state family's input reaches its operator. Every stateful
+    * c5_stream_* key is one family builder at one arrival.
+    */
+  private[streaming] sealed trait Arrival
+
+  /** The whole events table as ONE data micro-batch ([[readEventsTable]],
+    * `Exactly(1)`): the single-batch invariant the batch oracles rest on.
+    */
+  private[streaming] case object WholeTable extends Arrival
+
+  /** The family's two-file split, one file per data micro-batch
+    * ([[splitStream]], `AtLeast(2)`): state must carry across the
+    * micro-batch boundary. In-order arrival makes no row late, so the
+    * oracle is the batch answer over the whole table (restricted, for
+    * operators that emit on the watermark, to what the final watermark
+    * finalized).
+    */
+  private[streaming] case object TwoFiles extends Arrival
+
+  /** The same split consumed by two query lifecycles on one durable
+    * checkpoint ([[restartLifecycles]]): state must survive a
+    * stop/restart. The union of both lifecycles' output must equal one
+    * lifecycle's, so a restart key shares its twin's oracle.
+    */
+  private[streaming] case object Restart extends Arrival
+
+  /** A named predicate over a family's raw sink. */
+  private final case class Check(what: String)(val holds: DataFrame => Boolean) {
+    def and(other: Check): Check =
+      Check(s"$what and ${other.what}")(sink => holds(sink) && other.holds(sink))
+  }
+
+  /** The check that some sink row satisfies `cond`. */
+  private def someRow(what: String)(cond: Column): Check =
+    Check(what)(_.filter(cond).limit(1).count() != 0)
+
+  /** Where a family cuts its input in two, and what proves its state
+    * crossed the cut. The `witness` is a sink property only carried state
+    * can produce: it must hold at the end of the two-file and restart
+    * arrivals, and must NOT hold after restart lifecycle A (else the
+    * recovery check would be vacuous). The `invariant` must hold at the
+    * end, whatever the lifecycle.
+    */
+  private final case class Boundary(split: Split, witness: Option[Check] = None,
+      invariant: Option[Check] = None)
+
+  private def expect(sink: DataFrame, check: Check, why: String): Unit =
+    if (!check.holds(sink))
+      throw new IllegalStateException(s"the sink lacks ${check.what}: $why")
+
+  /** Run a family's streaming `plan` at `arrival` and return its raw sink.
+    * `plan` builds the operator over a fresh source per call (a join
+    * reads two). `boundary` is evaluated only for the two-file and
+    * restart arrivals, so the whole-table arrival runs no cut picker and
+    * no check. `sink` serves the whole-table and two-file arrivals; a
+    * restart lands in its durable parquet pair.
+    */
+  private def arrive(arrival: Arrival, sfDir: String, sink: Sink,
+      skipNoDataBatch: Boolean = false, rocksDb: Boolean = false)(boundary: => Boundary)
+      (plan: (() => DataFrame) => DataFrame)(implicit spark: SparkSession): DataFrame =
+    arrival match {
+      case WholeTable =>
+        runStream(plan(() => readEventsTable(spark, sfDir)), sink, Exactly(1),
+          skipNoDataBatch, rocksDb)
+      case TwoFiles =>
+        val b = boundary
+        val out = runStream(plan(() => splitStream(b.split)), sink, AtLeast(2),
+          skipNoDataBatch, rocksDb)
+        (b.witness ++ b.invariant).foreach(
+          expect(out, _, "state was not carried across micro-batches"))
+        out
+      case Restart =>
+        val b = boundary
+        val out = restartLifecycles(b.split, plan(() => splitStream(b.split)),
+          b.witness, skipNoDataBatch, rocksDb)
+        b.invariant.foreach(expect(out, _, "state did not survive the stop/restart"))
+        out
+    }
+
+  /** The crash-restart harness of every c5_stream_restart_* query: two
+    * query lifecycles of `query` over `split`, sharing one DURABLE
+    * checkpoint and one parquet sink. Lifecycle A sees only the early
+    * file (the late file is parked outside the source dir) and
+    * terminates; the `witness` must not hold yet. Lifecycle B — a fresh
+    * query object on the same checkpoint, as after a driver crash — sees
+    * the restored late file and resumes from A's checkpoint: committed
+    * offsets (the early file is NOT reprocessed — each lifecycle must run
+    * exactly one data batch), the advanced watermark and the operator
+    * state all come back from disk, and the witness must now hold.
+    * Returns the union of both lifecycles' Append output, read with the
+    * query's schema; the checkpoint and sink follow [[withScratchSink]].
+    */
+  private def restartLifecycles(split: Split, query: => DataFrame,
+      witness: Option[Check], skipNoDataBatch: Boolean, rocksDb: Boolean)
+      (implicit spark: SparkSession): DataFrame =
+    withScratchSink { sink =>
+      def lifecycle() = runStream(query, sink, Exactly(1), skipNoDataBatch, rocksDb)
+      val a = withParkedLate(split.dir)(lifecycle())
+      witness.filter(_.holds(a)).foreach(w => throw new IllegalStateException(
+        s"lifecycle A's sink already has ${w.what}: the recovery check would be vacuous"))
+      val ab = lifecycle()
+      witness.foreach(expect(ab, _, "state did not survive the stop/restart"))
+      ab
+    }
+
+  private def events(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.load(spark, sfDir, "events")
+
+  /** Memory sink of the windowed families: Complete over one data batch;
+    * otherwise Append, so only watermark-finalized windows reach it.
+    */
+  private def windowSink(arrival: Arrival): Sink =
+    MemorySink(if (arrival == WholeTable) OutputMode.Complete() else OutputMode.Append())
+
+  /** The final row per key of a running-state sink: one data batch emits
+    * each key once; more batches emit a key once per batch that touched
+    * it, with non-decreasing running values.
+    */
+  private def latest(arrival: Arrival, sink: DataFrame, keys: String*)
+      (running: String*): DataFrame =
+    if (arrival == WholeTable) sink
+    else sink.groupBy(keys.map(col): _*)
+      .agg(max(col(running.head)).as(running.head),
+        running.tail.map(c => max(col(c)).as(c)): _*)
+
+  /** Tumbling/top-k: [[tumblingCounts]], or with `ranked` its per-window
+    * top-[[TopK]] event types, ranked on the sink read side — Spark
+    * (correctly) rejects rank windows inside a streaming plan, as a rank
+    * over an unfinalized window would retract; the lambda read-path
+    * pattern.
+    *  - c5_stream_tumbling, c5_stream_topk: the whole table, Complete.
+    *  - c5_stream_tumbling_incr, c5_stream_topk_incr: the chronological
+    *    midpoint split, Append — the sink holds exactly the windows whose
+    *    end ≤ the final watermark (max ts − [[Watermark]]), with full
+    *    counts, so a rank read from it never retracts.
+    *  - c5_stream_restart: the open-window partial counts recovered from
+    *    the checkpoint.
+    * Witness: the window containing the cut. It is still open when
+    * lifecycle A stops and reaches the sink, with a full count the oracle
+    * hash checks, only once the late file met the carried partial count.
+    */
+  private[streaming] def tumbling(arrival: Arrival, ranked: Boolean = false)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    val counts = arrive(arrival, sfDir, windowSink(arrival)) {
+      val split = eventSplit(spark, sfDir)
+      val cutWindowUs = Math.floorDiv(split.cut, HourUs) * HourUs
+      Boundary(split, Some(someRow("the window containing the cut")(
+        unix_micros(col("window_start")) === cutWindowUs)))
+    } { src =>
+      val t = tumblingCounts(src())
+      if (ranked) t.select("window_start", "event_type", "n_events") else t
+    }
+    if (!ranked) counts.orderBy("window_start", "event_type")
+    else counts
+      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("window_start"))
+        .orderBy(col("n_events").desc, col("event_type"))))
+      .filter(col("rk") <= TopK)
+      .orderBy("window_start", "rk")
+  }
+
+  /** The session witness: a session starting at or before `cut` that
+    * ends after it — open in state when the first half ended, so only
+    * carried state can extend it across the cut (instead of restarting
+    * it after the cut, which would also break the oracle's full count).
+    */
+  private def spanning(cut: Long): Check = someRow("a session spanning the cut")(
+    unix_micros(col("session_start")) <= cut && unix_micros(col("session_end")) > cut)
+
+  /** Native sessions: the session_window operator ([[sessionCounts]]; its
+    * merging store keeps per-key LISTS of open sessions and merges them
+    * on arrival). c5_stream_sessionize runs the whole table (Complete);
+    * c5_stream_sessionize_incr and c5_stream_restart_session split at
+    * [[sessionCutUs]], inside a session, and their Append sink holds
+    * the sessions whose end (last event + gap) the final watermark
+    * passed, with full counts: in-order arrival, and a session lifecycle
+    * A finalized ended more than a gap before any late event.
+    */
+  private[streaming] def sessions(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    arrive(arrival, sfDir, windowSink(arrival)) {
+      val cut = sessionCutUs(events(spark, sfDir))
+      Boundary(eventSplit(spark, sfDir, Some(cut)), Some(spanning(cut)))
+    }(src => sessionCounts(src()))
+      .orderBy("user_id", "session_start")
+  }
+
+  /** Custom sessions: [[sessionizeWithState]]'s flatMapGroupsWithState
+    * state, whose OpenSession encoder round-trips through the checkpoint.
+    * Only CLOSED sessions are emitted — by the event that closes them,
+    * not by the watermark — so c5_stream_sessionize_state (whole table)
+    * and c5_stream_restart_state (split at [[sessionCutUs]]) both hold
+    * the batch gaps-and-islands sessions minus each user's last one.
+    */
+  private[streaming] def customSessions(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    arrive(arrival, sfDir, TempParquet, skipNoDataBatch = true) {
+      val cut = sessionCutUs(events(spark, sfDir))
+      Boundary(eventSplit(spark, sfDir, Some(cut)), Some(spanning(cut)))
+    }(src => sessionizeWithState(spark, src()).toDF())
+      .select("user_id", "session_start", "session_end", "n_events")
+      .orderBy("user_id", "session_start")
+  }
+
+  /** User stats: [[userRunningStats]]'s mapGroupsWithState counter.
+    * c5_stream_user_stats (whole table) sees each user once; in
+    * c5_stream_user_stats_incr a user with events in both halves is
+    * updated twice, and its final row equals the full batch count only
+    * if batch 2 incremented the carried counter.
+    */
+  private[streaming] def userStats(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    val sink = arrive(arrival, sfDir, MemorySink(OutputMode.Update()))(
+      Boundary(eventSplit(spark, sfDir)))(src => userRunningStats(spark, src()))
+    latest(arrival, sink, "user_id")("n_events", "last_ts").orderBy("user_id")
+  }
+
+  /** The transformWithState witness: the first (user, type) pair with
+    * events on both sides of `cut` reaches its full count — batch 2
+    * incremented the MapState counter carried across the cut.
+    */
+  private def fullCount(ev: DataFrame, cut: Long): Check = {
+    val us = unix_micros(col("ts"))
+    val span = ev.groupBy(col("user_id"), col("event_type"))
+      .agg(sum(when(us <= cut, 1L).otherwise(0L)).as("a"),
+        sum(when(us > cut, 1L).otherwise(0L)).as("b"))
+      .filter(col("a") > 0 && col("b") > 0)
+      .orderBy(col("user_id"), col("event_type"))
+      .limit(1).collect()
+    if (span.isEmpty)
+      throw new IllegalStateException(
+        "no (user, type) pair spans the cut; the recovery check would be vacuous")
+    val (u, t) = (span(0).getLong(0), span(0).getString(1))
+    val full = span(0).getLong(2) + span(0).getLong(3)
+    someRow(s"the full count of ($u, $t), whose events span the cut")(
+      col("user_id") === u && col("event_type") === t && col("n_events") === full)
+  }
+
+  /** transformWithState stats: [[userTypeStats]]' MapState of per-type
+    * counts and ValueState of the last event time, on the RocksDB store
+    * the API requires (the multi-column-family checkpoint layout).
+    * c5_stream_tws, c5_stream_tws_incr and c5_stream_restart_tws share
+    * one oracle: the per-(user, type) counts with the user's last event
+    * time. A restart lands in a parquet sink, so its processor emits in
+    * Append mode.
+    */
+  private[streaming] def typeStats(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    val mode = if (arrival == Restart) OutputMode.Append() else OutputMode.Update()
+    val sink = arrive(arrival, sfDir, MemorySink(OutputMode.Update()), rocksDb = true) {
+      val split = eventSplit(spark, sfDir)
+      Boundary(split, Some(fullCount(events(spark, sfDir), split.cut)))
+    }(src => userTypeStats(spark, src(), mode).toDF())
+    latest(arrival, sink, "user_id", "event_type")("n_events", "last_us")
+      .select(col("user_id"), col("event_type"), col("n_events"),
+        timestamp_micros(col("last_us")).as("last_ts"))
+      .orderBy("user_id", "event_type")
+  }
+
+  /** Transitions: the event-type transition matrix computed ON THE STREAM
+    * (see [[TransitionsProcessor]]); the matrix is the read-side fold.
+    * Under the split, the transition across the cut (a user's last
+    * batch-1 event → first batch-2 event) comes from the carried
+    * ValueState; a reset state would drop it and shift the counts.
+    */
+  private[streaming] def transitions(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    transitionMatrix(arrive(arrival, sfDir, TempParquet, rocksDb = true)(
+      Boundary(eventSplit(spark, sfDir)))(src => userTransitions(spark, src()).toDF()))
+  }
+
+  /** Pattern: consecutive view → click → purchase hits (see
+    * [[PatternProcessor]]), each appended as (user_id, completion ts).
+    * Under the split, a pattern split by the cut completes only if the
+    * ListState buffer carried its first events across it.
+    */
+  private[streaming] def pattern(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    arrive(arrival, sfDir, TempParquet, rocksDb = true)(
+      Boundary(eventSplit(spark, sfDir)))(src => userPatternHits(spark, src()).toDF())
+      .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
+      .orderBy("user_id", "ts")
+  }
+
+  /** Anomaly: the online burst detector ([[onlineAnomaly]]), every
+    * watermark-finalized (user, hour) judged against the user's prior
+    * finalized hours. Under the split, hours finalized in batch 2 are
+    * judged against a baseline that must include the carried batch-1
+    * hours.
+    */
+  private[streaming] def anomaly(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    arrive(arrival, sfDir, TempParquet)(Boundary(eventSplit(spark, sfDir)))(
+      src => anomalyOut(onlineAnomaly(spark, src())))
+      .orderBy("user_id", "hour")
+  }
+
+  /** A null-matched purchase at or before `cut` that the first half's
+    * final watermark could not clear: at or above the early half's global
+    * watermark (the [[purchaseClickJoin]] boundary rule), so it was
+    * evicted only by a watermark the late file advanced — against
+    * buffered state that crossed the cut.
+    */
+  private def evictedLate(ev: DataFrame, cut: Long): Check = {
+    val us = unix_micros(col("ts"))
+    def last(t: String) = max(when(col("event_type") === t, us))
+    val m = ev.filter(us <= cut).agg(last("purchase"), last("click")).head()
+    val wmUs =
+      if (m.isNullAt(0) || m.isNullAt(1)) Long.MaxValue
+      else (math.min(Math.floorDiv(m.getLong(0), 1000L),
+        Math.floorDiv(m.getLong(1), 1000L)) - WatermarkMs) * 1000L
+    someRow("an early purchase evicted null-matched by the late watermark")(
+      col("c_id").isNull && unix_micros(col("p_ts")) >= wmUs &&
+        unix_micros(col("p_ts")) <= cut)
+  }
+
+  /** No purchase is both matched and null-matched: a restart that lost
+    * the per-row matched flag would re-emit a matched purchase as a
+    * phantom null once the watermark passed it.
+    */
+  private val oneMatchStatus = Check("one match status per purchase")(
+    _.groupBy(col("p_id"))
+      .agg(max(when(col("c_id").isNull, 1).otherwise(0)).as("has_null"),
+        max(when(col("c_id").isNotNull, 1).otherwise(0)).as("has_match"))
+      .filter(col("has_null") === 1 && col("has_match") === 1)
+      .limit(1).count() == 0)
+
+  /** Inner and left-outer joins: [[purchaseClickJoin]] with both sides
+    * streaming the same source. c5_stream_join / c5_stream_join_outer
+    * run the whole table; the _incr and restart keys split at
+    * [[joinCutUs]], placing a matched click/purchase pair across the cut.
+    * Witness: that pair in the sink, which only join buffers carried
+    * across the cut can emit; for the outer join also a purchase evicted
+    * null-matched by the late watermark ([[evictedLate]]). Oracle: the
+    * batch interval join (outer: plus the exact-microsecond eviction
+    * boundary) — in-order arrival makes it exact, since a buffered row
+    * evictable before the late file is outside every late row's join
+    * window anyway.
+    */
+  private[streaming] def join(arrival: Arrival, joinType: String)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    val outer = joinType != "inner"
+    arrive(arrival, sfDir, TempParquet, skipNoDataBatch = !outer) {
+      val ev = events(spark, sfDir)
+      val cut = joinCutUs(ev)
+      // a pair whose click is at or before the cut and whose purchase
+      // is after it, which only join buffers that crossed the cut can emit
+      val witness = cut.map { c =>
+        val pair = someRow("a purchase/click pair straddling the cut")(
+          unix_micros(col("c_ts")) <= c && unix_micros(col("p_ts")) > c)
+        if (outer) pair.and(evictedLate(ev, c)) else pair
+      }
+      Boundary(eventSplit(spark, sfDir, cut), witness, Option.when(outer)(oneMatchStatus))
+    }(src => purchaseClickJoin(src(), src(), joinType))
+      .orderBy("p_id", "c_id")
+  }
+
+  /** Exact dedup: [[dedupWithinWatermark]] projected to the dedup key.
+    * c5_stream_dedup runs the whole table under the [[Watermark]]
+    * horizon; oracle = batch DISTINCT. The _incr and restart keys split
+    * at [[dedupCutUs]], placing a duplicate pair across the cut, and
+    * group the sink to (key, n_emitted) so a re-emission changes the
+    * hashed result: every distinct key exactly once. Their horizons
+    * ([[DedupHorizonInterval]], [[RestartDedupHorizonInterval]]) keep the
+    * pair's first copy in state, so the straddling duplicate must be
+    * emitted once — the invariant; a store that lost the key would emit
+    * it twice.
+    */
+  private[streaming] def dedup(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    val horizon = arrival match {
+      case WholeTable => Watermark
+      case TwoFiles => DedupHorizonInterval
+      case Restart => RestartDedupHorizonInterval
+    }
+    val key = Seq(col("user_id"), col("event_type"), col("value"))
+    val sink = arrive(arrival, sfDir, TempParquet, skipNoDataBatch = true) {
+      val pair = dedupCutUs(events(spark, sfDir))
+      Boundary(eventSplit(spark, sfDir, pair.map(_._1)), invariant = pair.map {
+        case (_, u, t, v) => Check("exactly one emission of the duplicate straddling the cut")(
+          _.filter(col("user_id") === u && col("event_type") === t && col("value") === v)
+            .count() == 1L)
+      })
+    }(src => dedupWithinWatermark(src(), horizon).select(key: _*))
+    (if (arrival == WholeTable) sink
+    else sink.groupBy(key: _*).agg(count(lit(1)).as("n_emitted")))
+      .orderBy("user_id", "event_type", "value")
+  }
+
+  /** The near-dup gate ([[docNearDupMins]]) over the id-ordered document
+    * split — c5_stream_neardup two files, c5_stream_restart_neardup two
+    * lifecycles; it has no whole-table key. The per-doc assignment is
+    * the min over the doc's emitted bucket mins (the c5_stream_topk
+    * read-path pattern). Witness: a late doc assigned an early bucket
+    * min, which only (band, bucket) state carried across the cut can
+    * know. Oracle: c2_minhash_lsh's replay.
+    */
+  private[streaming] def nearDup(arrival: Arrival)
+      (spark: SparkSession, sfDir: String): DataFrame = {
+    implicit val s: SparkSession = spark
+    arrive(arrival, sfDir, TempParquet, skipNoDataBatch = true) {
+      val split = docSplit(spark, sfDir)
+      Boundary(split, Some(someRow("a late doc assigned an early bucket min")(
+        col("doc_id") > split.cut && col("bucket_min") <= split.cut)))
+    }(src => docNearDupMins(spark, src()).toDF())
+      .groupBy(col("doc_id"))
+      .agg(min(col("bucket_min")).as("cluster_rep"))
+      .withColumn("is_kept", col("doc_id") === col("cluster_rep"))
+      .orderBy("doc_id")
   }
 
   /** c5_stream_gapfill: the streaming gap-fill ([[gapfillDaily]]) under
@@ -1372,313 +1597,6 @@ object EventStream {
       timestamp_seconds(col("hour_idx") * 3600L).as("hour"),
       col("cnt"), col("is_burst"))
 
-  /** c5_stream_anomaly: the online burst detector through the real
-    * streaming path (every watermark-finalized (user, hour) judged
-    * against the user's prior finalized hours).
-    */
-  def c5StreamAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(anomalyOut(onlineAnomaly(spark, readEventsTable(spark, sfDir))),
-      TempParquet, Exactly(1))
-      .orderBy("user_id", "hour")
-  }
-
-  /** c5_stream_anomaly_incr: the online detector under REAL incremental
-    * arrival (the chronological two-file split). The running
-    * (nPrev, sumPrev) baseline must CARRY across the micro-batch
-    * boundary: hours finalized in batch 2 are judged against a baseline
-    * that includes batch-1 hours — a restarted state would judge them
-    * against the second half alone and flip flags. Oracle identical to
-    * the single-batch twin (in-order arrival, nothing late).
-    */
-  def c5StreamAnomalyIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(
-      anomalyOut(onlineAnomaly(spark, splitStream(eventSplit(spark, sfDir)))),
-      TempParquet, AtLeast(2))
-      .orderBy("user_id", "hour")
-  }
-
-  /** Park the split's late file so a restart lifecycle sees only the
-    * early half; restore it (and its order-bearing mtime) afterwards. If
-    * the restore fails, the split dir is left without its late file,
-    * which the memo's part-file check ([[memoSplit]]) rebuilds on the
-    * next lookup instead of silently running on half the rows.
-    */
-  private def withParkedLate[T](dir: String)(body: => T): T = {
-    val late = new java.io.File(dir, "01_late.parquet")
-    val parked = new java.io.File(s"$dir.parked_01_late.parquet")
-    val mtime = late.lastModified()
-    if (!late.renameTo(parked))
-      sys.error(s"could not park $late for the restart check")
-    try body
-    finally {
-      if (!parked.renameTo(late))
-        sys.error(s"could not restore $late; split dir is now incomplete")
-      // rename preserves mtime on the same filesystem, but file ORDER is
-      // this harness's correctness edge — re-assert it.
-      if (late.lastModified() != mtime && !late.setLastModified(mtime))
-        sys.error(s"could not restore mtime of $late")
-    }
-  }
-
-  /** The crash-restart harness of every c5_stream_restart_* query: two
-    * query lifecycles of `query` over `split`, sharing one DURABLE
-    * checkpoint and one parquet sink. Lifecycle A sees only the early
-    * file (the late file is parked outside the source dir) and
-    * terminates; `between` checks A's sink — each caller asserts there
-    * that the property B must recover is not yet visible, so its check
-    * is not vacuous. Lifecycle B — a fresh query object on the same
-    * checkpoint, as after a driver crash — sees the restored late file
-    * and resumes from A's checkpoint: committed offsets (the early file
-    * is NOT reprocessed — each lifecycle must run exactly one data
-    * batch), the advanced watermark and the operator state all come back
-    * from disk. Returns the union of both lifecycles' Append output,
-    * read with the query's schema; the checkpoint and sink follow
-    * [[withScratchSink]].
-    */
-  private def restartLifecycles(split: Split, query: => DataFrame,
-      skipNoDataBatch: Boolean = false, rocksDb: Boolean = false)
-      (between: DataFrame => Unit)(implicit spark: SparkSession): DataFrame =
-    withScratchSink { sink =>
-      def lifecycle() = runStream(query, sink, Exactly(1), skipNoDataBatch, rocksDb)
-      between(withParkedLate(split.dir)(lifecycle()))
-      lifecycle()
-    }
-
-  /** c5_stream_restart_join: stream-stream JOIN BUFFERS recovered from a
-    * durable checkpoint across a full query stop and restart — the state
-    * family c5_stream_join_incr verifies across micro-batches but never
-    * across query LIFECYCLES (the remaining gap after c5_stream_restart
-    * covered window state and c5_stream_restart_state custom state). The
-    * cut (see [[joinCutUs]]) places a matched click/purchase pair across
-    * the file boundary: lifecycle A sees only the early file, buffers
-    * the click into join state, and stops; lifecycle B — a fresh query
-    * object on the same checkpoint, as after a driver crash — sees only
-    * the late file, and the pair reaches the sink ONLY if the buffered
-    * click came back from disk (asserted: absent after A, present after
-    * B). Oracle: the full batch interval join, identical to
-    * c5_stream_join — the union of the two Append sinks must be the
-    * complete join, which in-order arrival plus recovered buffers
-    * guarantee (the c5_stream_join_incr eviction-soundness argument
-    * applies unchanged across the restart: the recovered watermark can
-    * only evict clicks already outside any batch-2 purchase's window).
-    */
-  /** c5_stream_restart_outer: LEFT-OUTER join state recovered across a
-    * full query stop/restart — three distinct recovery properties, each
-    * observable only in the outer form:
-    *  1. the buffered unmatched rows come back (a cross-lifecycle match
-    *     completes, as in c5_stream_restart_join);
-    *  2. eviction runs against RECOVERED state (lifecycle B emits
-    *     null-matched batch-1 purchases lifecycle A's lower watermark
-    *     could not clear);
-    *  3. the per-row MATCHED flag survives (asserted structurally: no
-    *     p_id appears both matched and null-matched — a restart that
-    *     lost the flag would re-emit lifecycle-A matches as phantom
-    *     nulls once the watermark passed them).
-    * Oracle = the same exact-microsecond batch replay as the live outer
-    * twins; it matches only if all three held.
-    */
-  def c5StreamRestartJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val split = eventSplit(spark, sfDir, cutOpt)
-    def src = splitStream(split)
-    def earlyNulls(sink: DataFrame, cut: Long): Long = sink
-      .filter(col("c_id").isNull && unix_micros(col("p_ts")) <= cut).count()
-    var nullsAfterA = Option.empty[Long]
-    val sink = restartLifecycles(split, purchaseClickJoinOuter(src, src)) { a =>
-      nullsAfterA = cutOpt.map { cut =>
-        if (straddling(a, cut))
-          throw new IllegalStateException(
-            "the cut-straddling pair was emitted before the restart; " +
-              "the recovery check would be vacuous")
-        earlyNulls(a, cut)
-      }
-    }
-    cutOpt.foreach { cut =>
-      if (!straddling(sink, cut))
-        throw new IllegalStateException(
-          "no cut-straddling pair after restart: outer-join buffers " +
-            "did not survive the stop/restart")
-      if (nullsAfterA.exists(_ >= earlyNulls(sink, cut)))
-        throw new IllegalStateException(
-          "lifecycle B emitted no additional null-matched batch-1 " +
-            "purchase: eviction did not run against recovered state")
-    }
-    val phantom = sink.groupBy(col("p_id"))
-      .agg(max(when(col("c_id").isNull, 1).otherwise(0)).as("has_null"),
-        max(when(col("c_id").isNotNull, 1).otherwise(0)).as("has_match"))
-      .filter(col("has_null") === 1 && col("has_match") === 1)
-      .limit(1).count()
-    if (phantom != 0)
-      throw new IllegalStateException(
-        "a purchase appears both matched and null-matched: the matched " +
-          "flag was lost across the restart (phantom outer row)")
-    sink.orderBy("p_id", "c_id")
-  }
-
-  def c5StreamRestartJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutOpt = joinCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val split = eventSplit(spark, sfDir, cutOpt)
-    def src = splitStream(split)
-    val sink = restartLifecycles(split, purchaseClickJoin(src, src),
-        skipNoDataBatch = true) { a =>
-      if (cutOpt.exists(straddling(a, _)))
-        throw new IllegalStateException(
-          "the cut-straddling pair was emitted before the restart; " +
-            "the recovery check would be vacuous")
-    }
-    if (cutOpt.exists(!straddling(sink, _)))
-      throw new IllegalStateException(
-        "no cut-straddling pair after restart: stream-stream join " +
-          "buffers did not survive the stop/restart")
-    sink.orderBy("p_id", "c_id")
-  }
-
-  /** c5_stream_restart: windowed-aggregation state recovered from a
-    * DURABLE CHECKPOINT across a full query STOP and RESTART — the
-    * failure-recovery dimension the *_incr twins (one continuous query,
-    * several micro-batches) never exercise. The two-file chronological
-    * split is consumed by TWO separate query lifecycles sharing one
-    * checkpoint directory: query A sees only the early file (the late
-    * file is parked outside the source dir), emits the windows its
-    * watermark finalizes, and terminates; the late file is restored and
-    * query B — a fresh query object, as after a driver crash — resumes
-    * from A's checkpoint: committed offsets (the early file is NOT
-    * reprocessed — exactly 1 data batch is asserted per lifecycle),
-    * the advanced watermark, and the open-window partial counts all
-    * come back from disk. The union of the two Append sinks must equal
-    * the c5_stream_tumbling_incr result: a window spanning the restart
-    * reaches the sink with its FULL count only if the recovered state
-    * still held the pre-restart partial count (a reset state would
-    * emit the second half alone and break the hash); the query asserts
-    * the cut-spanning window is emitted by the restarted lifecycle.
-    */
-  def c5StreamRestart(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutUs = midpoint(graft.Tables.load(spark, sfDir, "events"), unix_micros(col("ts")))
-    val split = eventSplit(spark, sfDir)
-    // the window containing the cut spans the restart: it must be ABSENT
-    // from lifecycle A's committed output (still open in state) ...
-    val cutWindowStartUs = Math.floorDiv(cutUs, 3600000000L) * 3600000000L
-    def cutWindowRows(sink: DataFrame) = sink
-      .filter(unix_micros(col("window_start")) === cutWindowStartUs)
-      .limit(1).count()
-    val sink = restartLifecycles(split, tumblingCounts(splitStream(split))) { a =>
-      if (cutWindowRows(a) != 0)
-        throw new IllegalStateException(
-          "the cut-spanning window was already finalized before the restart; " +
-            "the recovery check would be vacuous")
-    }
-    // ... and emitted by the RESTARTED lifecycle, with its full count
-    // guaranteed by the oracle hash only if the recovered state held
-    // the pre-restart half.
-    if (cutWindowRows(sink) == 0)
-      throw new IllegalStateException(
-        "the cut-spanning window was not emitted after restart: " +
-          "checkpointed window state did not survive the stop/restart")
-    sink.orderBy("window_start", "event_type")
-  }
-
-  /** c5_stream_restart_state: CUSTOM state (flatMapGroupsWithState with
-    * a user-defined case-class state) recovered from a durable
-    * checkpoint across a query restart — a different state-store
-    * serialization surface than [[c5StreamRestart]]'s built-in window
-    * state: the OpenSession encoder round-trips through the checkpoint.
-    * Same two-lifecycle harness; the cut (sessionCutUs) sits INSIDE a
-    * session, so that session is open in custom state when lifecycle A
-    * stops and must be EXTENDED (not restarted) by lifecycle B's rows —
-    * it reaches the sink with its full event count only if the state
-    * object came back from disk intact. Emission here is data-driven
-    * (a session is emitted when a later event closes it), not
-    * watermark-driven, so the two sinks' union is exactly the
-    * single-lifecycle c5_stream_sessionize_state result.
-    */
-  def c5StreamRestartState(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutUs = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val split = eventSplit(spark, sfDir, Some(cutUs))
-    val sink = restartLifecycles(split,
-      sessionizeWithState(spark, splitStream(split)).toDF()
-        .select("user_id", "session_start", "session_end", "n_events"))(_ => ())
-    // the cut-spanning session must appear in the union CLOSED with a
-    // start before the cut and its LAST EVENT after it (session_end
-    // here is the last event time — the flatMapGroupsWithState shape,
-    // no gap added) — it was open in custom state at the restart and
-    // can only close (and emit) from lifecycle B, so its presence
-    // proves the OpenSession object survived
-    val spanning = sink
-      .filter(unix_micros(col("session_start")) <= cutUs &&
-        unix_micros(col("session_end")) > cutUs)
-      .limit(1).count()
-    if (spanning == 0)
-      throw new IllegalStateException(
-        "no cut-spanning session in the sink: custom flatMapGroupsWithState " +
-          "state did not survive the stop/restart")
-    sink.orderBy("user_id", "session_start")
-  }
-
-  /** c5_stream_restart_session: NATIVE session_window state recovered
-    * from a durable checkpoint across a query stop/restart — a FIFTH
-    * state-store surface beyond the restart matrix's four (tumbling
-    * window state, flatMapGroupsWithState custom state, join buffers,
-    * dedup keys): the built-in merging-session store keeps per-key LISTS
-    * of open sessions and MERGES adjacent ones on arrival, a checkpoint
-    * format none of the other four exercise (previously verified only
-    * across micro-batches of one lifecycle, c5_stream_sessionize_incr).
-    * The cut (see [[sessionCutUs]]) sits INSIDE a session: lifecycle A
-    * sees only the early file, holds that session OPEN in the session
-    * store, and stops — structurally, A's sink cannot contain any
-    * session reaching past the cut (everything A finalized ended before
-    * its watermark, max(early ts) − 2h < cut), which the query asserts.
-    * Lifecycle B — a fresh query object on the same checkpoint — sees
-    * only the late file and must EXTEND the recovered open session, not
-    * restart it: the sink must gain a session STARTING at or before the
-    * cut and ENDING after it (a reset store would emit a session starting
-    * after the cut and break both the assertion and the oracle hash,
-    * since the full-count row would be missing). Oracle: identical to
-    * c5_stream_sessionize_incr — the union of the two Append sinks is
-    * exactly the sessions finalized by the final watermark, with full
-    * counts (in-order arrival; A's finalized sessions end > gap before
-    * any batch-2 event, so no finalized session is ever re-opened).
-    */
-  def c5StreamRestartSession(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val cutUs = sessionCutUs(graft.Tables.load(spark, sfDir, "events"))
-    val split = eventSplit(spark, sfDir, Some(cutUs))
-    // session_end is last event + gap, so "reaches past the cut" is
-    // start ≤ cut < end; A's watermark bound makes this impossible pre-
-    // restart and the recovered-and-extended session satisfies it after.
-    def spanning(sink: DataFrame): Long = sink
-      .filter(unix_micros(col("session_start")) <= cutUs &&
-        unix_micros(col("session_end")) > cutUs)
-      .limit(1).count()
-    val sink = restartLifecycles(split, sessionCounts(splitStream(split))) { a =>
-      if (spanning(a) != 0)
-        throw new IllegalStateException(
-          "a cut-spanning session was finalized before the restart; " +
-            "the session-store recovery check would be vacuous")
-    }
-    if (spanning(sink) == 0)
-      throw new IllegalStateException(
-        "no cut-spanning session after restart: native session_window " +
-          "state did not survive the stop/restart (or was restarted, " +
-          "not extended)")
-    sink.orderBy("user_id", "session_start")
-  }
-
-  /** c5_stream_tumbling: the streaming tumbling aggregation, driver-
-    * checked against the same oracle shape as the batch twin.
-    */
-  def c5StreamTumbling(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(tumblingCounts(readEventsTable(spark, sfDir)),
-      MemorySink(OutputMode.Complete()), Exactly(1))
-      .orderBy("window_start", "event_type")
-  }
-
   /** c5_stream_enrich: stream-STATIC enrichment join — the remaining
     * standard streaming join shape (c5_stream_join covers
     * stream-stream): each live event equi-joins a static per-user
@@ -1705,26 +1623,15 @@ object EventStream {
         when(col("n_total") * col("nu") >= col("te"), "heavy").otherwise("light"))
       .select("user_id", "tier")
     val enriched = readEventsTable(spark, sfDir)
-      .withWatermark("ts", "2 hours")
+      .withWatermark("ts", Watermark)
       .join(broadcast(profile), "user_id")
       .groupBy(window(col("ts"), "1 hour"), col("tier"))
       .agg(count(lit(1)).as("n_events"),
-        expr("CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)").as("sum_value"))
+        expr(EventOps.sumValue).as("sum_value"))
       .select(col("window.start").as("window_start"), col("tier"),
         col("n_events"), col("sum_value"))
     runStream(enriched, MemorySink(OutputMode.Complete()), Exactly(1))
       .orderBy("window_start", "tier")
-  }
-
-  /** c5_stream_sessionize: the native session_window operator under
-    * streaming execution; oracle = gaps-and-islands sessions with
-    * session_end = last event + gap.
-    */
-  def c5StreamSessionize(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(sessionCounts(readEventsTable(spark, sfDir)),
-      MemorySink(OutputMode.Complete()), Exactly(1))
-      .orderBy("user_id", "session_start")
   }
 
   /** c5_stream_sliding: the streaming sliding-window aggregation — same
@@ -1735,56 +1642,6 @@ object EventStream {
     runStream(slidingCounts(readEventsTable(spark, sfDir)),
       MemorySink(OutputMode.Complete()), Exactly(1))
       .orderBy("window_start")
-  }
-
-  /** c5_stream_user_stats: the mapGroupsWithState arbitrary-state surface
-    * under real streaming execution. With the single AvailableNow data
-    * batch, each user's state is updated once, so the Update-mode sink
-    * holds exactly the final per-user stats — oracle = per-user count +
-    * max ts in plain SQL.
-    */
-  def c5StreamUserStats(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(userRunningStats(spark, readEventsTable(spark, sfDir)),
-      MemorySink(OutputMode.Update()), Exactly(1))
-      .orderBy("user_id")
-  }
-
-  /** c5_stream_tws: the transformWithState surface (Spark 4's typed
-    * arbitrary-state API) under real streaming execution — per-user
-    * MapState of per-type counts + ValueState last-seen time (see
-    * [[UserTypeStatsProcessor]]), RocksDB state store (the provider the
-    * API requires and a 100 TB deployment runs anyway). Oracle = the
-    * per-(user, type) batch counts joined with the per-user max event
-    * time.
-    */
-  def c5StreamTws(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(userTypeStats(spark, readEventsTable(spark, sfDir)).toDF(),
-      MemorySink(OutputMode.Update()), Exactly(1), rocksDb = true)
-      .select(col("user_id"), col("event_type"), col("n_events"),
-        timestamp_micros(col("last_us")).as("last_ts"))
-      .orderBy("user_id", "event_type")
-  }
-
-  /** c5_stream_tws_incr: transformWithState state carry under REAL
-    * incremental arrival — the MapState counters and the ValueState
-    * last-seen time must cross the micro-batch boundary: a (user, type)
-    * split across the halves reaches its full count in the Update-mode
-    * sink only if batch 2 incremented the carried counter (a reset
-    * state would leave max(n_events) at the second-half count and
-    * hash-mismatch the full-table oracle), and every batch-2 emission
-    * re-reports batch-1-only types straight from the carried MapState.
-    */
-  def c5StreamTwsIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(userTypeStats(spark, splitStream(eventSplit(spark, sfDir))).toDF(),
-      MemorySink(OutputMode.Update()), AtLeast(2), rocksDb = true)
-      .groupBy("user_id", "event_type")
-      .agg(max(col("n_events")).as("n_events"), max(col("last_us")).as("last_us"))
-      .select(col("user_id"), col("event_type"), col("n_events"),
-        timestamp_micros(col("last_us")).as("last_ts"))
-      .orderBy("user_id", "event_type")
   }
 
   /** Read-side fold shared by the streaming transition queries: the
@@ -1799,60 +1656,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"))
       .withColumn("p", round(col("n").cast("double") / sum(col("n")).over(w), 6))
       .orderBy("prev_type", "event_type")
-  }
-
-  /** c5_stream_transitions: the event-type transition matrix computed ON
-    * THE STREAM — row-adjacency analytics no native streaming operator
-    * expresses (see [[TransitionsProcessor]]): per-user ValueState
-    * carries the last event across micro-batches, transitions append to
-    * the sink as they are observed, the matrix is the read-side fold.
-    * Oracle = the batch c5_transitions replay.
-    */
-  def c5StreamTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    transitionMatrix(runStream(
-      userTransitions(spark, readEventsTable(spark, sfDir)).toDF(),
-      TempParquet, Exactly(1), rocksDb = true))
-  }
-
-  /** c5_stream_transitions_incr: the transition spanning the micro-batch
-    * boundary (a user's last batch-1 event → first batch-2 event) is
-    * emitted by batch 2 USING THE CARRIED ValueState — a reset state
-    * would silently drop exactly those transitions and hash-mismatch
-    * the full-table oracle.
-    */
-  def c5StreamTransitionsIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    transitionMatrix(runStream(
-      userTransitions(spark, splitStream(eventSplit(spark, sfDir))).toDF(),
-      TempParquet, AtLeast(2), rocksDb = true))
-  }
-
-  /** c5_stream_pattern: consecutive view → click → purchase detection on
-    * the stream (see [[PatternProcessor]]) — each hit appends
-    * (user_id, completion ts) to the sink as it is observed. Oracle =
-    * the batch double-lag replay.
-    */
-  def c5StreamPattern(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(userPatternHits(spark, readEventsTable(spark, sfDir)).toDF(),
-      TempParquet, Exactly(1), rocksDb = true)
-      .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
-      .orderBy("user_id", "ts")
-  }
-
-  /** c5_stream_pattern_incr: a pattern instance SPLIT by the micro-batch
-    * boundary (view/click in batch 1, purchase in batch 2) completes
-    * only if the ListState buffer carried the first two events across
-    * the boundary — a reset buffer silently drops exactly those hits
-    * and hash-mismatches the full-table oracle.
-    */
-  def c5StreamPatternIncr(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(userPatternHits(spark, splitStream(eventSplit(spark, sfDir))).toDF(),
-      TempParquet, AtLeast(2), rocksDb = true)
-      .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
-      .orderBy("user_id", "ts")
   }
 
   /** c5_stream_inactive: event-time-timer inactivity detection (see
@@ -1870,120 +1673,6 @@ object EventStream {
       MemorySink(OutputMode.Append()), Exactly(1), rocksDb = true)
       .select(col("user_id"), timestamp_micros(col("last_us")).as("last_ts"))
       .orderBy("user_id")
-  }
-
-  /** c5_stream_restart_tws: transformWithState TYPED state (MapState +
-    * ValueState under the RocksDB multi-column-family checkpoint layout)
-    * recovered from a durable checkpoint across a full query stop and
-    * restart — the sixth state family joins the restart matrix. The cut
-    * splits some (user, type)'s events across the two lifecycles:
-    * lifecycle A sees only the early file and can emit at most the
-    * early-half count for that pair; lifecycle B — a fresh query object
-    * on the same checkpoint — sees only the late file and emits the pair
-    * at its FULL count only if batch B incremented the MapState counter
-    * recovered from disk (asserted: full count absent after A, present
-    * after B). Oracle = the same full-table replay as c5_stream_tws; the
-    * max-fold over the two lifecycles' Append sink matches it only with
-    * intact recovery.
-    */
-  def c5StreamRestartTws(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val ev = graft.Tables.load(spark, sfDir, "events")
-    val cutUs = midpoint(ev, unix_micros(col("ts")))
-    val span = ev.groupBy(col("user_id"), col("event_type"))
-      .agg(sum(when(unix_micros(col("ts")) <= cutUs, 1L).otherwise(0L)).as("a"),
-        sum(when(unix_micros(col("ts")) > cutUs, 1L).otherwise(0L)).as("b"))
-      .filter(col("a") > 0 && col("b") > 0)
-      .orderBy(col("user_id"), col("event_type"))
-      .limit(1).collect()
-    if (span.isEmpty)
-      throw new IllegalStateException(
-        "no (user, type) pair spans the cut; the recovery check would be vacuous")
-    val (su, st) = (span(0).getLong(0), span(0).getString(1))
-    val full = span(0).getLong(2) + span(0).getLong(3)
-    val split = eventSplit(spark, sfDir)
-    def fullCountRows(sink: DataFrame): Long = sink
-      .filter(col("user_id") === su && col("event_type") === st &&
-        col("n_events") === full)
-      .limit(1).count()
-    val sink = restartLifecycles(split,
-        userTypeStats(spark, splitStream(split), OutputMode.Append()).toDF(),
-        rocksDb = true) { a =>
-      if (fullCountRows(a) != 0)
-        throw new IllegalStateException(
-          "the cut-spanning pair reached its full count before the restart; " +
-            "the recovery check would be vacuous")
-    }
-    if (fullCountRows(sink) == 0)
-      throw new IllegalStateException(
-        "cut-spanning pair never reached its full count after restart: " +
-          "transformWithState MapState did not survive the stop/restart")
-    sink.groupBy("user_id", "event_type")
-      .agg(max(col("n_events")).as("n_events"), max(col("last_us")).as("last_us"))
-      .select(col("user_id"), col("event_type"), col("n_events"),
-        timestamp_micros(col("last_us")).as("last_ts"))
-      .orderBy("user_id", "event_type")
-  }
-
-  /** c5_stream_sessionize_state: the flatMapGroupsWithState surface
-    * (multi-row emission, explicit state lifecycle) under streaming
-    * execution. Only CLOSED sessions are emitted — each user's last
-    * session stays open in state — so the oracle is the batch
-    * gaps-and-islands sessions minus each user's final session.
-    */
-  def c5StreamSessionizeState(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(sessionizeWithState(spark, readEventsTable(spark, sfDir)).toDF(),
-      TempParquet, Exactly(1), skipNoDataBatch = true)
-      .select("user_id", "session_start", "session_end", "n_events")
-      .orderBy("user_id", "session_start")
-  }
-
-  /** c5_stream_join: the watermarked stream-stream interval join under
-    * real streaming execution (both sides are independent file-source
-    * streams of the same events table); oracle = the equivalent batch
-    * interval join. Inner-join matches emit as soon as both rows are
-    * buffered, so the single AvailableNow batch yields the full result.
-    */
-  def c5StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(
-      purchaseClickJoin(
-        readEventsTable(spark, sfDir), readEventsTable(spark, sfDir)),
-      TempParquet, Exactly(1), skipNoDataBatch = true)
-      .orderBy("p_id", "c_id")
-  }
-
-  /** c5_stream_join_outer: the watermarked LEFT-OUTER stream-stream
-    * interval join — the one stream-stream shape where a result row is
-    * emitted by state EVICTION rather than by data (the null-matched
-    * side appears only once the watermark proves no match can arrive).
-    * Inner matches reproduce c5_stream_join; the added rows are the
-    * watermark-cleared matchless purchases. Oracle = batch left join
-    * with the eviction boundary replayed in exact integer microseconds
-    * (see [[purchaseClickJoinOuter]]).
-    */
-  def c5StreamJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(
-      purchaseClickJoinOuter(
-        readEventsTable(spark, sfDir), readEventsTable(spark, sfDir)),
-      TempParquet, Exactly(1))
-      .orderBy("p_id", "c_id")
-  }
-
-  /** c5_stream_dedup: dropDuplicatesWithinWatermark over the event
-    * payload columns; projected to the dedup key so the surviving-row
-    * choice (arrival order) doesn't enter the result — oracle = batch
-    * DISTINCT.
-    */
-  def c5StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    runStream(
-      dedupWithinWatermark(readEventsTable(spark, sfDir))
-        .select(col("user_id"), col("event_type"), col("value")),
-      TempParquet, Exactly(1), skipNoDataBatch = true)
-      .orderBy("user_id", "event_type", "value")
   }
 
   /** Streaming MinHash-LSH NEAR-dup assignment — the ingest-time dedup
@@ -2042,64 +1731,6 @@ object EventStream {
           val bm = m
           ids.iterator.map(BucketMin(_, bm))
       }
-  }
-
-  /** c5_stream_neardup: the per-doc assignment read from the gate's
-    * Append sink — min over the doc's 16 emitted bucket mins (all in
-    * the doc's own arrival batch), the c5_stream_topk lambda read-path
-    * pattern. Sink is O(docs·bands) scalars, parquet (never a driver
-    * memory sink).
-    */
-  def c5StreamNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val perMember = runStream(
-      docNearDupMins(spark, splitStream(docSplit(spark, sfDir))).toDF(),
-      TempParquet, AtLeast(2), skipNoDataBatch = true)
-    perMember.groupBy(col("doc_id"))
-      .agg(min(col("bucket_min")).as("cluster_rep"))
-      .withColumn("is_kept", col("doc_id") === col("cluster_rep"))
-      .orderBy("doc_id")
-  }
-
-  /** c5_stream_restart_neardup: the near-dup gate's (band, bucket) min
-    * state recovered from a DURABLE checkpoint across a full query stop
-    * and restart — completing the restart matrix for the seventh state
-    * family (window: c5_stream_restart; custom: c5_stream_restart_state;
-    * tws: c5_stream_restart_tws; join buffers: c5_stream_restart_join /
-    * _outer; dedup keys: c5_stream_restart_dedup; sessions:
-    * c5_stream_restart_session; near-dup gate: here). Lifecycle A sees
-    * only the early doc file (ids ≤ cut), stores each touched bucket's
-    * min, and stops; lifecycle B — a fresh query object on the same
-    * checkpoint, as after a driver crash — sees only the late file
-    * (ids > cut). A late doc sharing a bucket with any early doc must be
-    * assigned that bucket's EARLY min, which lifecycle B can only know
-    * if the state came back from disk: without recovery every bucket_min
-    * B emits would be > cut (B's input contains no early id). That is
-    * asserted structurally (≥ 1 cut-straddling emission with
-    * bucket_min ≤ cut < doc_id, and zero is also rejected as a vacuous
-    * check — near-dup corpora always collide across the cut). Decisions
-    * never retract across the restart: an admitted doc stays admitted.
-    * Oracle: identical to c5_stream_neardup (id-ordered arrival makes
-    * the per-prefix decisions coincide with the batch assignment — the
-    * restart changes WHEN state is read back, not what it holds).
-    */
-  def c5StreamRestartNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val split = docSplit(spark, sfDir)
-    val perMember = restartLifecycles(split,
-      docNearDupMins(spark, splitStream(split)).toDF(), skipNoDataBatch = true)(_ => ())
-    val cut = midpoint(graft.Tables.load(spark, sfDir, "documents"), col("doc_id"))
-    val nRecovered = perMember
-      .filter(col("doc_id") > cut && col("bucket_min") <= cut).count()
-    if (nRecovered == 0L)
-      throw new IllegalStateException(
-        "no late doc was assigned an early bucket min: either the " +
-          "recovered state was lost across the stop/restart or the check " +
-          "is vacuous (no bucket straddles the cut)")
-    perMember.groupBy(col("doc_id"))
-      .agg(min(col("bucket_min")).as("cluster_rep"))
-      .withColumn("is_kept", col("doc_id") === col("cluster_rep"))
-      .orderBy("doc_id")
   }
 
   /** Row shapes of the streaming semantic gate: per-candidate input to
@@ -2417,7 +2048,8 @@ object EventStream {
     implicit val s: SparkSession = spark
     val topc = graft.queries.SimOps.IncSemTopC
     val threshold = graft.queries.SimOps.IncSemThreshold
-    val src = splitStream(vecSplit(spark, sfDir, LiveSliceMod, LiveSliceRem))
+    val split = vecSplit(spark, sfDir, LiveSliceMod, LiveSliceRem)
+    val src = splitStream(split)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
     val pairs = runStream(semanticLivePairs(spark, sfDir, src, topc).toDF(),
       TempParquet, AtLeast(2), skipNoDataBatch = true)
@@ -2437,9 +2069,8 @@ object EventStream {
       .filter(col("cosine") >= threshold)
       .select(col("n_id"), col("b_id"), col("cosine"), col("live"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cut = midpoint(vecSlice(spark, sfDir, LiveSliceMod, LiveSliceRem), col("vec_id"))
     val straddle = confirmed
-      .filter(col("live") && col("b_id") <= cut && col("n_id") > cut).count()
+      .filter(col("live") && col("b_id") <= split.cut && col("n_id") > split.cut).count()
     if (straddle == 0L)
       throw new IllegalStateException(
         "no batch-2 arrival live-matched a batch-1 arrival above the " +
@@ -2458,57 +2089,94 @@ object EventStream {
     graft.util.CacheScope.releaseAfterMaterialize(out, Seq(confirmed))
   }
 
-  /** c5_stream_topk: per-window top-k event types over the STREAMING
-    * hourly aggregation — the live-leaderboard serving composition: the
-    * stream maintains the windowed counts (state bounded by the
-    * watermark); the RANK runs on the sink read side, because Spark
-    * (correctly) rejects cross-row rank windows inside a streaming plan
-    * — a rank over an unfinalized window would retract. This is the
-    * lambda read-path pattern: the expensive aggregation is streaming
-    * and incremental, the top-k is a cheap query over the materialized
-    * view. Oracle = batch hourly counts ranked.
-    */
-  def c5StreamTopK(spark: SparkSession, sfDir: String, k: Int = 2): DataFrame = {
-    implicit val s: SparkSession = spark
-    val counts = runStream(
-      tumblingCounts(readEventsTable(spark, sfDir))
-        .select("window_start", "event_type", "n_events"),
-      MemorySink(OutputMode.Complete()), Exactly(1))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"))
-      .orderBy(col("n_events").desc, col("event_type"))
-    counts.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .orderBy("window_start", "rk")
-  }
-
-  /** c5_stream_topk_incr: the same ranking over the Append-mode sink of
-    * the two-batch incremental run — ranks are computed only over
-    * watermark-FINALIZED windows (the sink never holds a partial count,
-    * so a rank read from it can never retract; in-order arrival gives
-    * finalized windows their full counts). Oracle = the finalized-window
-    * filter of c5_stream_tumbling_incr plus the rank.
-    */
-  def c5StreamTopKIncr(spark: SparkSession, sfDir: String, k: Int = 2): DataFrame = {
-    implicit val s: SparkSession = spark
-    val counts = runStream(
-      tumblingCounts(splitStream(eventSplit(spark, sfDir)))
-        .select("window_start", "event_type", "n_events"),
-      MemorySink(OutputMode.Append()), AtLeast(2))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"))
-      .orderBy(col("n_events").desc, col("event_type"))
-    counts.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .orderBy("window_start", "rk")
-  }
-
   /** Oracles for the driver-checkable streaming queries (same tables,
-    * DuckDB SQL).
+    * DuckDB SQL): one string per family and arrival class; twins map to
+    * the same string.
+    */
+  private val finalWatermark =
+    s"wm AS (SELECT max(ts) - INTERVAL '$Watermark' AS w FROM events)"
+
+  private def hourlySql(sumValue: Boolean): String =
+    "SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n_events" +
+      (if (sumValue) s", ${EventOps.sumValue} AS sum_value" else "") +
+      " FROM events GROUP BY 1, 2"
+
+  /** Append-sink windows: those the final watermark (max ts − 2 h)
+    * finalized, with full counts — in-order arrival makes no row late.
+    */
+  private val finalWindows = "FROM agg, wm WHERE window_start + INTERVAL '1 hour' <= w"
+
+  private def rankedSql(from: String): String =
+    "r AS (SELECT window_start, event_type, n_events, " +
+      "CAST(row_number() OVER (PARTITION BY window_start " +
+      s"ORDER BY n_events DESC, event_type) AS INT) AS rk FROM $from) " +
+      "SELECT window_start, event_type, n_events, rk FROM r " +
+      s"WHERE rk <= $TopK ORDER BY window_start, rk"
+
+  private val finalWindowsSql =
+    s"WITH agg AS (${hourlySql(sumValue = true)}), $finalWatermark " +
+      s"SELECT window_start, event_type, n_events, sum_value $finalWindows ORDER BY 1, 2"
+
+  private val nativeSessions =
+    "SELECT min(ts) AS session_start, " +
+      s"max(ts) + INTERVAL '$SessionGapMinutes minutes' AS session_end, " +
+      "user_id, count(*) AS n_events FROM sess GROUP BY user_id, session_idx"
+
+  /** Append-sink sessions: those whose end (last event + gap) the final
+    * watermark passed, with full counts.
+    */
+  private val finalSessionsSql =
+    s"${EventOps.sessionCtes}, agg AS ($nativeSessions), $finalWatermark " +
+      "SELECT session_start, session_end, user_id, n_events FROM agg, wm " +
+      "WHERE session_end <= w ORDER BY user_id, session_start"
+
+  /** Closed custom sessions: the gaps-and-islands sessions minus each
+    * user's last (still open) one, session_end = last event.
+    */
+  private val closedSessionsSql =
+    s"${EventOps.sessionCtes}, " +
+      "agg AS (SELECT user_id, session_idx, min(ts) AS session_start, " +
+      "max(ts) AS session_end, count(*) AS n_events " +
+      "FROM sess GROUP BY user_id, session_idx), " +
+      "agg2 AS (SELECT *, max(session_idx) OVER (PARTITION BY user_id) " +
+      "AS last_idx FROM agg) " +
+      "SELECT user_id, session_start, session_end, n_events FROM agg2 " +
+      "WHERE session_idx < last_idx ORDER BY user_id, session_start"
+
+  private val userStatsSql =
+    "SELECT user_id, count(*) AS n_events, max(ts) AS last_ts " +
+      "FROM events GROUP BY user_id ORDER BY user_id"
+
+  /** transformWithState replay: per-(user, type) counts (the MapState)
+    * joined with the per-user max event time (the ValueState).
+    */
+  private val typeStatsSql =
+    "WITH u AS (SELECT user_id, max(ts) AS last_ts FROM events " +
+      "GROUP BY user_id) " +
+      "SELECT e.user_id, e.event_type, count(*) AS n_events, u.last_ts " +
+      "FROM events e JOIN u ON e.user_id = u.user_id " +
+      "GROUP BY e.user_id, e.event_type, u.last_ts " +
+      "ORDER BY e.user_id, e.event_type"
+
+  /** Pattern replay: the double-lag window finds every consecutive
+    * [[Pattern]] triple, including triples split across batches.
+    */
+  private val patternSql: String =
+    "WITH s AS (SELECT user_id, ts, event_type, " +
+      "lag(event_type, 1) OVER w AS l1, lag(event_type, 2) OVER w AS l2 " +
+      "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) " +
+      s"SELECT user_id, ts FROM s WHERE event_type = '${Pattern(2)}' " +
+      s"AND l1 = '${Pattern(1)}' AND l2 = '${Pattern(0)}' ORDER BY user_id, ts"
+
+  /** Online-anomaly replay: finalized hours are those ≤ the engine's
+    * final watermark (ms-truncated max ts − 2 h, exact integer µs); the
+    * running baseline is a per-user window over PRIOR finalized hours —
+    * row_number−1 and the preceding-rows sum — and the flag is the same
+    * integer comparison the operator evaluates.
     */
   private val anomalySql: String =
     "WITH u AS (SELECT user_id, epoch_us(ts) AS us FROM events), " +
-      "wm AS (SELECT (CAST(floor(max(us) / 1000.0) AS BIGINT) - 7200000) " +
+      s"wm AS (SELECT (CAST(floor(max(us) / 1000.0) AS BIGINT) - $WatermarkMs) " +
       "* 1000 AS wmus FROM u), " +
       "lh AS (SELECT CAST(floor((wmus - 1) / 3600000000.0) AS BIGINT) - 1 " +
       "AS lasth FROM wm), " +
@@ -2524,8 +2192,19 @@ object EventStream {
       "cnt, cnt * n_prev > 2 * sum_prev AS is_burst " +
       "FROM st ORDER BY user_id, hour"
 
-  /** Shared replay for both left-outer join twins: batch left join with
-    * the strictly-below microsecond eviction boundary.
+  private val innerJoinSql: String =
+    "SELECT p.event_id AS p_id, p.user_id, p.ts AS p_ts, " +
+      "c.event_id AS c_id, c.ts AS c_ts " +
+      "FROM (SELECT * FROM events WHERE event_type = 'purchase') p " +
+      "JOIN (SELECT * FROM events WHERE event_type = 'click') c " +
+      "ON p.user_id = c.user_id " +
+      s"AND c.ts >= p.ts - INTERVAL '$JoinWindowHours hours' AND c.ts <= p.ts " +
+      "ORDER BY p_id, c_id"
+
+  /** Left-outer replay: inner rows, plus each matchless purchase
+    * STRICTLY below the final global watermark (min over both sides of
+    * the ms-floored max event time − 2 h), in exact integer
+    * microseconds (boundary pinned by the spec's micro-test).
     */
   private val outerJoinSql: String =
     "WITH p AS (SELECT event_id AS p_id, user_id, ts AS p_ts " +
@@ -2535,40 +2214,33 @@ object EventStream {
       "wm AS (SELECT least(" +
       "(SELECT CAST(floor(epoch_us(max(p_ts)) / 1000.0) AS BIGINT) FROM p), " +
       "(SELECT CAST(floor(epoch_us(max(c_ts)) / 1000.0) AS BIGINT) FROM c)) " +
-      "- 7200000 AS wm_ms), " +
+      s"- $WatermarkMs AS wm_ms), " +
       "j AS (SELECT p_id, user_id, p_ts, c_id, c_ts " +
       "FROM p JOIN c ON p.user_id = c.c_user " +
-      "AND c_ts >= p_ts - INTERVAL '6 hours' AND c_ts <= p_ts), " +
+      s"AND c_ts >= p_ts - INTERVAL '$JoinWindowHours hours' AND c_ts <= p_ts), " +
       "um AS (SELECT p.p_id, p.user_id, p.p_ts, " +
       "CAST(NULL AS BIGINT) AS c_id, CAST(NULL AS TIMESTAMP) AS c_ts " +
       "FROM p, wm WHERE p.p_id NOT IN (SELECT p_id FROM j) " +
       "AND epoch_us(p.p_ts) < wm_ms * 1000) " +
       "SELECT * FROM j UNION ALL SELECT * FROM um ORDER BY p_id, c_id"
 
-  private val transitionsSql: String =
-    "WITH s AS (SELECT event_type, lag(event_type) OVER " +
-      "(PARTITION BY user_id ORDER BY ts, event_id) AS prev_type " +
-      "FROM events), " +
-      "t AS (SELECT prev_type, event_type, count(*) AS n FROM s " +
-      "WHERE prev_type IS NOT NULL GROUP BY 1, 2) " +
-      "SELECT prev_type, event_type, n, " +
-      "round(CAST(n AS DOUBLE) / CAST(sum(n) OVER " +
-      "(PARTITION BY prev_type) AS DOUBLE), 6) AS p " +
-      "FROM t ORDER BY prev_type, event_type"
+  /** Split/restart dedup: every distinct key exactly once — a two-batch
+    * in-order run never re-admits a key (eviction is lazy, end-of-batch),
+    * and the restart horizon outlives the corpus.
+    */
+  private val dedupOnceSql =
+    "SELECT user_id, event_type, value, CAST(1 AS BIGINT) AS n_emitted " +
+      "FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"
 
-  private val patternSql: String =
-    "WITH s AS (SELECT user_id, ts, event_type, " +
-      "lag(event_type, 1) OVER w AS l1, lag(event_type, 2) OVER w AS l2 " +
-      "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) " +
-      "SELECT user_id, ts FROM s WHERE event_type = 'purchase' " +
-      "AND l1 = 'click' AND l2 = 'view' ORDER BY user_id, ts"
+  private def twins(sql: String, keys: String*): Seq[(String, String)] = keys.map(_ -> sql)
 
   val oracle: Map[String, String] = Map(
-    "c5_stream_tumbling" ->
-      ("SELECT date_trunc('hour', ts) AS window_start, event_type, " +
-        "count(*) AS n_events, " +
-        "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value " +
-        "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
+    "c5_stream_tumbling" -> s"${hourlySql(sumValue = true)} ORDER BY 1, 2",
+    "c5_stream_topk" -> s"WITH agg AS (${hourlySql(sumValue = false)}), ${rankedSql("agg")}",
+    "c5_stream_topk_incr" ->
+      (s"WITH agg AS (${hourlySql(sumValue = false)}), $finalWatermark, " +
+        s"fin AS (SELECT window_start, event_type, n_events $finalWindows), " +
+        rankedSql("fin")),
     // Enrichment replay: profile tiers from exact integer counts, then
     // the same windowed aggregate over the joined stream.
     "c5_stream_enrich" ->
@@ -2578,257 +2250,33 @@ object EventStream {
         "ELSE 'light' END AS tier FROM p, t) " +
         "SELECT date_trunc('hour', ts) AS window_start, tier, " +
         "count(*) AS n_events, " +
-        "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value " +
+        s"${EventOps.sumValue} AS sum_value " +
         "FROM events JOIN pt USING (user_id) GROUP BY 1, 2 ORDER BY 1, 2"),
     "c5_stream_sessionize" ->
-      ("WITH flagged AS (SELECT user_id, ts, event_id, " +
-        "CASE WHEN lag(ts) OVER w IS NULL OR " +
-        "epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END " +
-        "AS new_session FROM events WINDOW w AS " +
-        "(PARTITION BY user_id ORDER BY ts, event_id)), " +
-        "sess AS (SELECT user_id, ts, SUM(new_session) OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx " +
-        "FROM flagged) " +
-        "SELECT min(ts) AS session_start, " +
-        "max(ts) + INTERVAL '30 minutes' AS session_end, " +
-        "user_id, count(*) AS n_events " +
-        "FROM sess GROUP BY user_id, session_idx ORDER BY user_id, session_start"),
-    // Incremental twin: only windows finalized by the final watermark
-    // (max ts − 2h) are in the Append-mode sink; arrival is in-order by
-    // construction so finalized windows carry their full batch counts.
-    // Restart twin: identical oracle to c5_stream_tumbling_incr — the
-    // union of the two query lifecycles' Append sinks must hold exactly
-    // the finalized windows with FULL counts, which requires the
-    // pre-restart partial counts to come back from the checkpoint.
-    "c5_stream_restart" ->
-      ("WITH agg AS (SELECT date_trunc('hour', ts) AS window_start, " +
-        "event_type, count(*) AS n_events, " +
-        "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value " +
-        "FROM events GROUP BY 1, 2), " +
-        "wm AS (SELECT max(ts) - INTERVAL '2 hours' AS w FROM events) " +
-        "SELECT window_start, event_type, n_events, sum_value FROM agg, wm " +
-        "WHERE window_start + INTERVAL '1 hour' <= w ORDER BY 1, 2"),
-    "c5_stream_topk" ->
-      ("WITH agg AS (SELECT date_trunc('hour', ts) AS window_start, " +
-        "event_type, count(*) AS n_events FROM events GROUP BY 1, 2), " +
-        "r AS (SELECT window_start, event_type, n_events, " +
-        "CAST(row_number() OVER (PARTITION BY window_start " +
-        "ORDER BY n_events DESC, event_type) AS INT) AS rk FROM agg) " +
-        "SELECT window_start, event_type, n_events, rk FROM r " +
-        "WHERE rk <= 2 ORDER BY window_start, rk"),
-    "c5_stream_topk_incr" ->
-      ("WITH agg AS (SELECT date_trunc('hour', ts) AS window_start, " +
-        "event_type, count(*) AS n_events FROM events GROUP BY 1, 2), " +
-        "wm AS (SELECT max(ts) - INTERVAL '2 hours' AS w FROM events), " +
-        "fin AS (SELECT window_start, event_type, n_events FROM agg, wm " +
-        "WHERE window_start + INTERVAL '1 hour' <= w), " +
-        "r AS (SELECT window_start, event_type, n_events, " +
-        "CAST(row_number() OVER (PARTITION BY window_start " +
-        "ORDER BY n_events DESC, event_type) AS INT) AS rk FROM fin) " +
-        "SELECT window_start, event_type, n_events, rk FROM r " +
-        "WHERE rk <= 2 ORDER BY window_start, rk"),
-    "c5_stream_tumbling_incr" ->
-      ("WITH agg AS (SELECT date_trunc('hour', ts) AS window_start, " +
-        "event_type, count(*) AS n_events, " +
-        "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value " +
-        "FROM events GROUP BY 1, 2), " +
-        "wm AS (SELECT max(ts) - INTERVAL '2 hours' AS w FROM events) " +
-        "SELECT window_start, event_type, n_events, sum_value FROM agg, wm " +
-        "WHERE window_start + INTERVAL '1 hour' <= w ORDER BY 1, 2"),
-    // Incremental session twin: only sessions whose end (last event +
-    // gap) the final watermark has passed are in the Append-mode sink;
-    // counts are full (in-order two-batch arrival, nothing late).
-    "c5_stream_sessionize_incr" ->
-      ("WITH flagged AS (SELECT user_id, ts, event_id, " +
-        "CASE WHEN lag(ts) OVER w IS NULL OR " +
-        "epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END " +
-        "AS new_session FROM events WINDOW w AS " +
-        "(PARTITION BY user_id ORDER BY ts, event_id)), " +
-        "sess AS (SELECT user_id, ts, SUM(new_session) OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx " +
-        "FROM flagged), " +
-        "agg AS (SELECT min(ts) AS session_start, " +
-        "max(ts) + INTERVAL '30 minutes' AS session_end, " +
-        "user_id, count(*) AS n_events " +
-        "FROM sess GROUP BY user_id, session_idx), " +
-        "wm AS (SELECT max(ts) - INTERVAL '2 hours' AS w FROM events) " +
-        "SELECT session_start, session_end, user_id, n_events FROM agg, wm " +
-        "WHERE session_end <= w ORDER BY user_id, session_start"),
-    // Restart twin of the NATIVE session store: identical oracle to
-    // c5_stream_sessionize_incr — the two lifecycles' Append sinks must
-    // union to exactly the watermark-finalized sessions with FULL
-    // counts, which requires the open-session list (with its pre-restart
-    // partial count) to come back from the checkpoint.
-    "c5_stream_restart_session" ->
-      ("WITH flagged AS (SELECT user_id, ts, event_id, " +
-        "CASE WHEN lag(ts) OVER w IS NULL OR " +
-        "epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END " +
-        "AS new_session FROM events WINDOW w AS " +
-        "(PARTITION BY user_id ORDER BY ts, event_id)), " +
-        "sess AS (SELECT user_id, ts, SUM(new_session) OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx " +
-        "FROM flagged), " +
-        "agg AS (SELECT min(ts) AS session_start, " +
-        "max(ts) + INTERVAL '30 minutes' AS session_end, " +
-        "user_id, count(*) AS n_events " +
-        "FROM sess GROUP BY user_id, session_idx), " +
-        "wm AS (SELECT max(ts) - INTERVAL '2 hours' AS w FROM events) " +
-        "SELECT session_start, session_end, user_id, n_events FROM agg, wm " +
-        "WHERE session_end <= w ORDER BY user_id, session_start"),
+      s"${EventOps.sessionCtes} $nativeSessions ORDER BY user_id, session_start",
     "c5_stream_dedup" ->
       ("SELECT DISTINCT user_id, event_type, value FROM events " +
         "ORDER BY user_id, event_type, value"),
-    // Streaming near-dup gate: with id-ordered arrival the per-batch
-    // admission decisions coincide with the batch MinHash-LSH
-    // assignment (a bucket's prefix min equals its global min once the
-    // prefix contains the min), so the oracle IS the c2_minhash_lsh
-    // replay — banding, bucket mins, per-doc min, keep flag.
-    "c5_stream_neardup" -> graft.queries.DedupOps.oracle("c2_minhash_lsh"),
-    // Restart twin of the near-dup gate: identical oracle — recovered
-    // (band, bucket) mins make the two-lifecycle run reproduce the
-    // batch assignment; a reset store would reassign every late doc
-    // a late cluster_rep and break the hash (plus the in-query
-    // structural assert on cut-straddling emissions).
-    "c5_stream_restart_neardup" -> graft.queries.DedupOps.oracle("c2_minhash_lsh"),
-    // Incremental dedup twin: every distinct key exactly once — lazy
-    // end-of-batch eviction means a two-batch in-order run never
-    // re-admits a key (see c5StreamDedupIncr); a state store that
-    // dropped keys at the batch boundary would re-emit straddling
-    // duplicates as n_emitted = 2 and break the hash.
-    "c5_stream_dedup_incr" ->
-      ("SELECT user_id, event_type, value, CAST(1 AS BIGINT) AS n_emitted " +
-        "FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"),
-    // Restart twin of the dedup-key state family: identical oracle — a
-    // state store that lost its keys at the restart would re-emit every
-    // early/late duplicate as n_emitted = 2 and break the hash.
-    "c5_stream_restart_dedup" ->
-      ("SELECT user_id, event_type, value, CAST(1 AS BIGINT) AS n_emitted " +
-        "FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"),
-    "c5_stream_sliding" ->
-      ("SELECT window_start, count(*) AS n_events FROM (" +
-        "SELECT unnest([time_bucket(INTERVAL '30 minutes', ts), " +
-        "time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes']) AS window_start " +
-        "FROM events) GROUP BY window_start ORDER BY window_start"),
-    "c5_stream_user_stats" ->
-      ("SELECT user_id, count(*) AS n_events, max(ts) AS last_ts " +
-        "FROM events GROUP BY user_id ORDER BY user_id"),
-    // transformWithState replay: per-(user, type) counts (the MapState)
-    // joined with the per-user max event time (the ValueState). The
-    // incremental twin shares it — the carried state must reproduce the
-    // full-table answer despite two-batch arrival.
-    "c5_stream_tws" ->
-      ("WITH u AS (SELECT user_id, max(ts) AS last_ts FROM events " +
-        "GROUP BY user_id) " +
-        "SELECT e.user_id, e.event_type, count(*) AS n_events, u.last_ts " +
-        "FROM events e JOIN u ON e.user_id = u.user_id " +
-        "GROUP BY e.user_id, e.event_type, u.last_ts " +
-        "ORDER BY e.user_id, e.event_type"),
-    "c5_stream_tws_incr" ->
-      ("WITH u AS (SELECT user_id, max(ts) AS last_ts FROM events " +
-        "GROUP BY user_id) " +
-        "SELECT e.user_id, e.event_type, count(*) AS n_events, u.last_ts " +
-        "FROM events e JOIN u ON e.user_id = u.user_id " +
-        "GROUP BY e.user_id, e.event_type, u.last_ts " +
-        "ORDER BY e.user_id, e.event_type"),
-    // Streaming transition matrix: identical replay to the batch
-    // c5_transitions — the streamed adjacency fold must reproduce the
-    // lag-window result (and the _incr twin despite two-batch arrival).
-    "c5_stream_transitions" -> transitionsSql,
-    "c5_stream_transitions_incr" -> transitionsSql,
-    // Pattern replay: the double-lag window finds every consecutive
-    // view -> click -> purchase triple; the streamed ListState buffer
-    // must reproduce it exactly (incl. triples split across batches).
-    "c5_stream_pattern" -> patternSql,
-    "c5_stream_pattern_incr" -> patternSql,
-    // Timer replay: the 6h deadline against the ms-floor watermark
-    // (max event time - 2h), exact integer arithmetic.
+    "c5_stream_sliding" -> EventOps.oracle("c5_sliding"),
+    // Timer replay: the inactivity deadline against the ms-floor
+    // watermark (max event time - 2h), exact integer arithmetic.
     "c5_stream_inactive" ->
       ("WITH u AS (SELECT user_id, max(ts) AS last_ts FROM events " +
         "GROUP BY user_id), " +
         "wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000.0) AS BIGINT) " +
-        "- 7200000 AS wm_ms FROM events) " +
+        s"- $WatermarkMs AS wm_ms FROM events) " +
         "SELECT user_id, last_ts FROM u, wm " +
         "WHERE CAST(floor(epoch_us(last_ts) / 1000.0) AS BIGINT) " +
-        "+ 21600000 <= wm_ms ORDER BY user_id"),
-    "c5_stream_restart_tws" ->
-      ("WITH u AS (SELECT user_id, max(ts) AS last_ts FROM events " +
-        "GROUP BY user_id) " +
-        "SELECT e.user_id, e.event_type, count(*) AS n_events, u.last_ts " +
-        "FROM events e JOIN u ON e.user_id = u.user_id " +
-        "GROUP BY e.user_id, e.event_type, u.last_ts " +
-        "ORDER BY e.user_id, e.event_type"),
-    // Incremental twin: identical oracle — the final running counter
-    // must equal the full count despite arriving in two batches.
-    "c5_stream_user_stats_incr" ->
-      ("SELECT user_id, count(*) AS n_events, max(ts) AS last_ts " +
-        "FROM events GROUP BY user_id ORDER BY user_id"),
-    "c5_stream_join" ->
-      ("SELECT p.event_id AS p_id, p.user_id, p.ts AS p_ts, " +
-        "c.event_id AS c_id, c.ts AS c_ts " +
-        "FROM (SELECT * FROM events WHERE event_type = 'purchase') p " +
-        "JOIN (SELECT * FROM events WHERE event_type = 'click') c " +
-        "ON p.user_id = c.user_id " +
-        "AND c.ts >= p.ts - INTERVAL '6 hours' AND c.ts <= p.ts " +
-        "ORDER BY p_id, c_id"),
-    // Left-outer twin: inner rows identical; a matchless purchase emits
-    // null-matched iff the final global watermark (min over both sides
-    // of ms-floored max event time - 2h) is STRICTLY above it — replayed
-    // in exact integer microseconds (boundary pinned by the spec's
-    // micro-test). Purchases at or above the watermark stay in state.
-    "c5_stream_join_outer" -> outerJoinSql,
-    // Incremental twin: identical oracle — under in-order two-batch
-    // arrival the final emission set matches the single-batch run (see
-    // c5StreamJoinOuterIncr for why early eviction can't lose a match).
-    "c5_stream_join_outer_incr" -> outerJoinSql,
-    // Incremental twin: identical oracle — inner-join matches emit as
-    // soon as both rows are buffered, in-order arrival never drops a
-    // matchable row (see c5StreamJoinIncr), so the two-batch sink must
-    // hold the complete batch join.
-    "c5_stream_join_incr" ->
-      ("SELECT p.event_id AS p_id, p.user_id, p.ts AS p_ts, " +
-        "c.event_id AS c_id, c.ts AS c_ts " +
-        "FROM (SELECT * FROM events WHERE event_type = 'purchase') p " +
-        "JOIN (SELECT * FROM events WHERE event_type = 'click') c " +
-        "ON p.user_id = c.user_id " +
-        "AND c.ts >= p.ts - INTERVAL '6 hours' AND c.ts <= p.ts " +
-        "ORDER BY p_id, c_id"),
-    // Restart twin of the stream-stream join: identical oracle — the two
-    // lifecycles' Append sinks must union to the complete batch join,
-    // which requires the buffered early-side rows to come back from the
-    // checkpoint (a reset buffer silently drops every cross-restart pair
-    // and breaks the hash).
-    "c5_stream_restart_join" ->
-      ("SELECT p.event_id AS p_id, p.user_id, p.ts AS p_ts, " +
-        "c.event_id AS c_id, c.ts AS c_ts " +
-        "FROM (SELECT * FROM events WHERE event_type = 'purchase') p " +
-        "JOIN (SELECT * FROM events WHERE event_type = 'click') c " +
-        "ON p.user_id = c.user_id " +
-        "AND c.ts >= p.ts - INTERVAL '6 hours' AND c.ts <= p.ts " +
-        "ORDER BY p_id, c_id"),
-    // Restart twin of the OUTER join: same exact-microsecond replay as
-    // the live twins — it matches only if the buffered rows, the
-    // eviction watermark, AND the per-row matched flags all came back
-    // from the checkpoint (see c5StreamRestartJoinOuter).
-    "c5_stream_restart_outer" -> outerJoinSql,
+        s"+ $InactivityGapMs <= wm_ms ORDER BY user_id"),
     // Streaming gap-fill: per-type zero-filled daily counts, restricted
     // to watermark-finalized days (day d final iff (d+1)·86400s ≤ wm; wm
     // is the engine's ms-truncated max-event-time − 2h, replayed exactly
     // in integer arithmetic). Each type's spine runs from ITS first
     // event day — per-key custom state cannot know about days before the
     // key existed.
-    // Online-anomaly replay: finalized hours are those ≤ the engine's
-    // final watermark (ms-truncated max ts − 2 h, exact integer µs);
-    // the running baseline is a per-user window over PRIOR finalized
-    // hours — row_number−1 and the preceding-rows sum — and the flag is
-    // the same integer comparison the operator evaluates.
-    "c5_stream_anomaly" -> anomalySql,
-    "c5_stream_anomaly_incr" -> anomalySql,
     "c5_stream_gapfill" ->
       ("WITH u AS (SELECT event_type, epoch_us(ts) AS us FROM events), " +
-        "wm AS (SELECT (CAST(floor(max(us) / 1000.0) AS BIGINT) - 7200000) " +
+        s"wm AS (SELECT (CAST(floor(max(us) / 1000.0) AS BIGINT) - $WatermarkMs) " +
         "* 1000 AS wmus FROM u), " +
         "lf AS (SELECT CAST(floor((wmus - 1) / 86400000000.0) AS BIGINT) - 1 " +
         "AS lastday FROM wm), " +
@@ -2840,87 +2288,68 @@ object EventStream {
         "SELECT spine.event_type, DATE '1970-01-01' + CAST(spine.day_idx AS INT) " +
         "AS day, COALESCE(daily.n, 0) AS n_events " +
         "FROM spine LEFT JOIN daily USING (event_type, day_idx) " +
-        "ORDER BY event_type, day"),
-    // Restart twin of the custom-state sessionizer: identical oracle —
-    // the two lifecycles' sinks must union to exactly the closed
-    // sessions with FULL counts, which requires the OpenSession state
-    // object to survive the checkpoint round-trip.
-    "c5_stream_restart_state" ->
-      ("WITH flagged AS (SELECT user_id, ts, event_id, " +
-        "CASE WHEN lag(ts) OVER w IS NULL OR " +
-        "epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END " +
-        "AS new_session FROM events WINDOW w AS " +
-        "(PARTITION BY user_id ORDER BY ts, event_id)), " +
-        "sess AS (SELECT user_id, ts, SUM(new_session) OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx " +
-        "FROM flagged), " +
-        "agg AS (SELECT user_id, session_idx, min(ts) AS session_start, " +
-        "max(ts) AS session_end, count(*) AS n_events " +
-        "FROM sess GROUP BY user_id, session_idx), " +
-        "agg2 AS (SELECT *, max(session_idx) OVER (PARTITION BY user_id) " +
-        "AS last_idx FROM agg) " +
-        "SELECT user_id, session_start, session_end, n_events FROM agg2 " +
-        "WHERE session_idx < last_idx ORDER BY user_id, session_start"),
-    "c5_stream_sessionize_state" ->
-      ("WITH flagged AS (SELECT user_id, ts, event_id, " +
-        "CASE WHEN lag(ts) OVER w IS NULL OR " +
-        "epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END " +
-        "AS new_session FROM events WINDOW w AS " +
-        "(PARTITION BY user_id ORDER BY ts, event_id)), " +
-        "sess AS (SELECT user_id, ts, SUM(new_session) OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx " +
-        "FROM flagged), " +
-        "agg AS (SELECT user_id, session_idx, min(ts) AS session_start, " +
-        "max(ts) AS session_end, count(*) AS n_events " +
-        "FROM sess GROUP BY user_id, session_idx), " +
-        "agg2 AS (SELECT *, max(session_idx) OVER (PARTITION BY user_id) " +
-        "AS last_idx FROM agg) " +
-        "SELECT user_id, session_start, session_end, n_events FROM agg2 " +
-        "WHERE session_idx < last_idx ORDER BY user_id, session_start")
-  )
+        "ORDER BY event_type, day")
+  ) ++
+    twins(finalWindowsSql, "c5_stream_tumbling_incr", "c5_stream_restart") ++
+    twins(finalSessionsSql, "c5_stream_sessionize_incr", "c5_stream_restart_session") ++
+    twins(closedSessionsSql, "c5_stream_sessionize_state", "c5_stream_restart_state") ++
+    twins(userStatsSql, "c5_stream_user_stats", "c5_stream_user_stats_incr") ++
+    twins(typeStatsSql, "c5_stream_tws", "c5_stream_tws_incr", "c5_stream_restart_tws") ++
+    // the streamed adjacency fold reproduces the batch lag-window matrix
+    twins(EventOps.oracle("c5_transitions"),
+      "c5_stream_transitions", "c5_stream_transitions_incr") ++
+    twins(patternSql, "c5_stream_pattern", "c5_stream_pattern_incr") ++
+    twins(anomalySql, "c5_stream_anomaly", "c5_stream_anomaly_incr") ++
+    twins(innerJoinSql, "c5_stream_join", "c5_stream_join_incr", "c5_stream_restart_join") ++
+    twins(outerJoinSql,
+      "c5_stream_join_outer", "c5_stream_join_outer_incr", "c5_stream_restart_outer") ++
+    twins(dedupOnceSql, "c5_stream_dedup_incr", "c5_stream_restart_dedup") ++
+    // with id-ordered arrival the gate's per-prefix decisions coincide
+    // with the batch MinHash-LSH assignment (a bucket's prefix min equals
+    // its global min once the prefix contains the min)
+    twins(graft.queries.DedupOps.oracle("c2_minhash_lsh"),
+      "c5_stream_neardup", "c5_stream_restart_neardup")
 
   /** Driver query registry (merged into SparkEntry.queries). */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c5_stream_tumbling" -> (c5StreamTumbling _),
+    "c5_stream_tumbling" -> (tumbling(WholeTable) _),
+    "c5_stream_tumbling_incr" -> (tumbling(TwoFiles) _),
+    "c5_stream_restart" -> (tumbling(Restart) _),
+    "c5_stream_topk" -> (tumbling(WholeTable, ranked = true) _),
+    "c5_stream_topk_incr" -> (tumbling(TwoFiles, ranked = true) _),
+    "c5_stream_sessionize" -> (sessions(WholeTable) _),
+    "c5_stream_sessionize_incr" -> (sessions(TwoFiles) _),
+    "c5_stream_restart_session" -> (sessions(Restart) _),
+    "c5_stream_sessionize_state" -> (customSessions(WholeTable) _),
+    "c5_stream_restart_state" -> (customSessions(Restart) _),
+    "c5_stream_user_stats" -> (userStats(WholeTable) _),
+    "c5_stream_user_stats_incr" -> (userStats(TwoFiles) _),
+    "c5_stream_tws" -> (typeStats(WholeTable) _),
+    "c5_stream_tws_incr" -> (typeStats(TwoFiles) _),
+    "c5_stream_restart_tws" -> (typeStats(Restart) _),
+    "c5_stream_transitions" -> (transitions(WholeTable) _),
+    "c5_stream_transitions_incr" -> (transitions(TwoFiles) _),
+    "c5_stream_pattern" -> (pattern(WholeTable) _),
+    "c5_stream_pattern_incr" -> (pattern(TwoFiles) _),
+    "c5_stream_anomaly" -> (anomaly(WholeTable) _),
+    "c5_stream_anomaly_incr" -> (anomaly(TwoFiles) _),
+    "c5_stream_join" -> (join(WholeTable, "inner") _),
+    "c5_stream_join_incr" -> (join(TwoFiles, "inner") _),
+    "c5_stream_restart_join" -> (join(Restart, "inner") _),
+    "c5_stream_join_outer" -> (join(WholeTable, "left_outer") _),
+    "c5_stream_join_outer_incr" -> (join(TwoFiles, "left_outer") _),
+    "c5_stream_restart_outer" -> (join(Restart, "left_outer") _),
+    "c5_stream_dedup" -> (dedup(WholeTable) _),
+    "c5_stream_dedup_incr" -> (dedup(TwoFiles) _),
+    "c5_stream_restart_dedup" -> (dedup(Restart) _),
+    "c5_stream_neardup" -> (nearDup(TwoFiles) _),
+    "c5_stream_restart_neardup" -> (nearDup(Restart) _),
     "c5_stream_enrich" -> (c5StreamEnrich _),
-    "c5_stream_topk" -> ((s: SparkSession, d: String) => c5StreamTopK(s, d)),
-    "c5_stream_topk_incr" -> ((s: SparkSession, d: String) => c5StreamTopKIncr(s, d)),
-    "c5_stream_tumbling_incr" -> (c5StreamTumblingIncr _),
-    "c5_stream_sessionize_incr" -> (c5StreamSessionizeIncr _),
-    "c5_stream_user_stats_incr" -> (c5StreamUserStatsIncr _),
-    "c5_stream_sessionize" -> (c5StreamSessionize _),
-    "c5_stream_dedup" -> (c5StreamDedup _),
-    "c5_stream_neardup" -> (c5StreamNearDup _),
     "c5_stream_sliding" -> (c5StreamSliding _),
-    "c5_stream_user_stats" -> (c5StreamUserStats _),
-    "c5_stream_tws" -> (c5StreamTws _),
-    "c5_stream_tws_incr" -> (c5StreamTwsIncr _),
-    "c5_stream_restart_tws" -> (c5StreamRestartTws _),
-    "c5_stream_transitions" -> (c5StreamTransitions _),
-    "c5_stream_transitions_incr" -> (c5StreamTransitionsIncr _),
-    "c5_stream_pattern" -> (c5StreamPattern _),
-    "c5_stream_pattern_incr" -> (c5StreamPatternIncr _),
     "c5_stream_inactive" -> (c5StreamInactive _),
-    "c5_stream_sessionize_state" -> (c5StreamSessionizeState _),
-    "c5_stream_join" -> (c5StreamJoin _),
-    "c5_stream_join_outer" -> (c5StreamJoinOuter _),
-    "c5_stream_join_outer_incr" -> (c5StreamJoinOuterIncr _),
-    "c5_stream_join_incr" -> (c5StreamJoinIncr _),
-    "c5_stream_dedup_incr" -> (c5StreamDedupIncr _),
-    "c5_stream_restart" -> (c5StreamRestart _),
-    "c5_stream_restart_state" -> (c5StreamRestartState _),
-    "c5_stream_restart_join" -> (c5StreamRestartJoin _),
-    "c5_stream_restart_outer" -> (c5StreamRestartJoinOuter _),
-    "c5_stream_restart_dedup" -> (c5StreamRestartDedup _),
-    "c5_stream_restart_neardup" -> (c5StreamRestartNearDup _),
+    "c5_stream_gapfill" -> (c5StreamGapfill _),
     "c5_stream_semantic" -> (c5StreamSemantic _),
     "c5_stream_semantic_topc" -> (c5StreamSemanticTopc _),
-    "c5_stream_semantic_live" -> (c5StreamSemanticLive _),
-    "c5_stream_restart_session" -> (c5StreamRestartSession _),
-    "c5_stream_gapfill" -> (c5StreamGapfill _),
-    "c5_stream_anomaly" -> (c5StreamAnomaly _),
-    "c5_stream_anomaly_incr" -> (c5StreamAnomalyIncr _)
+    "c5_stream_semantic_live" -> (c5StreamSemanticLive _)
   )
 }

@@ -22,6 +22,16 @@ case class VecRow(vec_id: Long, embD: Seq[Double])
   */
 class EventStreamSpec extends SparkSuite {
 
+  /** Run a streaming frame to a named in-memory sink until idle. */
+  private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
+      mode: org.apache.spark.sql.streaming.OutputMode =
+        org.apache.spark.sql.streaming.OutputMode.Complete())
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    q.processAllAvailable()
+    q
+  }
+
   private def eventRows: Seq[Ev] = {
     import spark.implicits._
     Tables.load(spark, sf, "events")
@@ -34,7 +44,7 @@ class EventStreamSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(eventRows)
-    val q = EventStream.runToMemory(
+    val q = runToMemory(
       EventStream.tumblingCounts(mem.toDF()), "tumbling_test")
     try {
       val streamed = spark.table("tumbling_test")
@@ -55,7 +65,7 @@ class EventStreamSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(eventRows)
-    val q = EventStream.runToMemory(
+    val q = runToMemory(
       EventStream.sessionCounts(mem.toDF()), "session_test")
     try {
       val streamed = spark.table("session_test")
@@ -87,7 +97,7 @@ class EventStreamSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(eventRows)
-    val q = EventStream.runToMemory(
+    val q = runToMemory(
       EventStream.userRunningStats(spark, mem.toDF()), "state_test",
       org.apache.spark.sql.streaming.OutputMode.Update())
     try {
@@ -104,7 +114,7 @@ class EventStreamSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(eventRows)
-    val q = EventStream.runToMemory(
+    val q = runToMemory(
       EventStream.sessionizeWithState(spark, mem.toDF()).toDF(), "fmgs_test",
       org.apache.spark.sql.streaming.OutputMode.Append())
     try {
@@ -146,7 +156,7 @@ class EventStreamSpec extends SparkSuite {
     // emit each distinct (user_id, event_type, value) payload once.
     val mem = MemoryStream[Ev]
     mem.addData(rows ++ rows)
-    val q = EventStream.runToMemory(
+    val q = runToMemory(
       EventStream.dedupWithinWatermark(mem.toDF()), "dedup_test",
       org.apache.spark.sql.streaming.OutputMode.Append())
     try {
@@ -166,7 +176,7 @@ class EventStreamSpec extends SparkSuite {
     // the sink must hold the batch tumbling windows whose end <= final
     // watermark (max ts - 2h) — full counts (in-order arrival, no late
     // rows) — and withhold the still-open tail.
-    val got = EventStream.c5StreamTumblingIncr(spark, sf)
+    val got = EventStream.queries("c5_stream_tumbling_incr")(spark, sf)
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     val ev = Tables.load(spark, sf, "events")
     val maxTs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
@@ -184,7 +194,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("incremental sessionize emits watermark-closed sessions incl. cut-spanning ones") {
-    val got = EventStream.c5StreamSessionizeIncr(spark, sf)
+    val got = EventStream.queries("c5_stream_sessionize_incr")(spark, sf)
       .collect()
       .map(r => (r.getLong(2), r.getTimestamp(0), r.getTimestamp(1), r.getLong(3)))
       .toSet
@@ -236,7 +246,7 @@ class EventStreamSpec extends SparkSuite {
         sum(when(unix_micros(col("ts")) > cutUs, 1).otherwise(0)).as("b"))
       .filter(col("a") > 0 && col("b") > 0).count()
     assert(spanning > 0, "fixture must have users on both sides of the cut")
-    val got = EventStream.c5StreamUserStatsIncr(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_user_stats_incr")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val want = ev.groupBy("user_id").agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -252,7 +262,7 @@ class EventStreamSpec extends SparkSuite {
       .agg(max(unix_micros(col("ts"))).as("l")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     // single-batch surface
-    val got = EventStream.c5StreamTws(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_tws")(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getString(1)),
         (r.getLong(2), r.getTimestamp(3)))).toMap
     assert(got.keySet == want.keySet)
@@ -271,7 +281,7 @@ class EventStreamSpec extends SparkSuite {
         sum(when(unix_micros(col("ts")) > cutUs, 1).otherwise(0)).as("b"))
       .filter(col("a") > 0 && col("b") > 0).count()
     assert(spanning > 0, "fixture must have (user, type) pairs on both sides of the cut")
-    val gotIncr = EventStream.c5StreamTwsIncr(spark, sf).collect()
+    val gotIncr = EventStream.queries("c5_stream_tws_incr")(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
     assert(gotIncr == want)
   }
@@ -284,7 +294,7 @@ class EventStreamSpec extends SparkSuite {
     // join-state retention
     val cut = EventStream.joinCutUs(ev)
     assert(cut.isDefined, "fixture must contain a click strictly before its purchase")
-    val got = EventStream.c5StreamJoinIncr(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_join_incr")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSet
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -310,7 +320,7 @@ class EventStreamSpec extends SparkSuite {
     val ev = Tables.load(spark, sf01, "events")
     assert(EventStream.dedupCutUs(ev).isDefined,
       "sf0.01 fixture must contain a duplicate pair within twice the horizon")
-    val got = EventStream.c5StreamDedupIncr(spark, sf01).collect()
+    val got = EventStream.queries("c5_stream_dedup_incr")(spark, sf01).collect()
     assert(got.forall(_.getLong(3) == 1L),
       "a two-batch in-order run must never re-emit a key")
     assert(got.length ==
@@ -322,9 +332,9 @@ class EventStreamSpec extends SparkSuite {
     // is absent before the restart and emitted after it; here we also
     // pin that the two-lifecycle union equals the single-lifecycle
     // incremental result — recovery must be invisible in the output
-    val got = EventStream.c5StreamRestart(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_restart")(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val want = EventStream.c5StreamTumblingIncr(spark, sf).collect()
+    val want = EventStream.queries("c5_stream_tumbling_incr")(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
     assert(got == want)
     assert(got.nonEmpty)
@@ -335,9 +345,9 @@ class EventStreamSpec extends SparkSuite {
     // closes afterwards with a pre-cut start; here we also pin that the
     // two-lifecycle union equals the single-lifecycle result — custom
     // state recovery must be invisible in the output
-    val got = EventStream.c5StreamRestartState(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_restart_state")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-    val want = EventStream.c5StreamSessionizeState(spark, sf).collect()
+    val want = EventStream.queries("c5_stream_sessionize_state")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
     assert(got == want)
     assert(got.nonEmpty)
@@ -347,7 +357,7 @@ class EventStreamSpec extends SparkSuite {
     val want = EventOps.c5Transitions(spark, sf).collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
       .toSeq
-    val got = EventStream.c5StreamTransitions(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_transitions")(spark, sf).collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
       .toSeq
     assert(got == want)
@@ -364,7 +374,7 @@ class EventStreamSpec extends SparkSuite {
       .filter(col("prev_us") <= cutUs && unix_micros(col("ts")) > cutUs)
       .count()
     assert(straddling > 0, "fixture must have a consecutive pair across the cut")
-    val gotIncr = EventStream.c5StreamTransitionsIncr(spark, sf).collect()
+    val gotIncr = EventStream.queries("c5_stream_transitions_incr")(spark, sf).collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
       .toSeq
     assert(gotIncr == want)
@@ -382,10 +392,10 @@ class EventStreamSpec extends SparkSuite {
       .select(col("user_id"), col("ts"))
     val want = wantDf.collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSet
     assert(want.nonEmpty, "fixture must contain the pattern")
-    val got = EventStream.c5StreamPattern(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_pattern")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
     assert(got == want)
-    val gotIncr = EventStream.c5StreamPatternIncr(spark, sf).collect()
+    val gotIncr = EventStream.queries("c5_stream_pattern_incr")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
     assert(gotIncr == want)
   }
@@ -418,7 +428,7 @@ class EventStreamSpec extends SparkSuite {
     val want = ev.groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n")).collect()
       .map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
-    val got = EventStream.c5StreamRestartTws(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_restart_tws")(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
     assert(got == want)
   }
@@ -436,9 +446,9 @@ class EventStreamSpec extends SparkSuite {
     spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
       "state.RocksDBStateStoreProvider")
     try {
-      val got = EventStream.c5StreamRestartState(spark, sf).collect()
+      val got = EventStream.queries("c5_stream_restart_state")(spark, sf).collect()
         .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-      val want = EventStream.c5StreamSessionizeState(spark, sf).collect()
+      val want = EventStream.queries("c5_stream_sessionize_state")(spark, sf).collect()
         .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
       assert(got == want)
       assert(got.nonEmpty)
@@ -456,7 +466,7 @@ class EventStreamSpec extends SparkSuite {
     val ev = Tables.load(spark, sf, "events")
     assert(EventStream.joinCutUs(ev).isDefined,
       "fixture must contain a click strictly before its purchase")
-    val got = EventStream.c5StreamRestartJoin(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_restart_join")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSet
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -479,9 +489,9 @@ class EventStreamSpec extends SparkSuite {
     // (extended, not restarted); here we also pin that the two-lifecycle
     // union equals the single-lifecycle incremental session result —
     // merging-session-store recovery must be invisible in the output
-    val got = EventStream.c5StreamRestartSession(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_restart_session")(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getLong(2), r.getLong(3))).toSet
-    val want = EventStream.c5StreamSessionizeIncr(spark, sf).collect()
+    val want = EventStream.queries("c5_stream_sessionize_incr")(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == want)
     assert(got.nonEmpty)
@@ -495,7 +505,7 @@ class EventStreamSpec extends SparkSuite {
     val ev = Tables.load(spark, sf01, "events")
     assert(EventStream.dedupCutUs(ev).isDefined,
       "sf0.01 fixture must contain a duplicate pair within twice the horizon")
-    val got = EventStream.c5StreamRestartDedup(spark, sf01).collect()
+    val got = EventStream.queries("c5_stream_restart_dedup")(spark, sf01).collect()
     assert(got.forall(_.getLong(3) == 1L),
       "a restarted dedup must never re-emit a key")
     assert(got.length ==
@@ -549,17 +559,17 @@ class EventStreamSpec extends SparkSuite {
     def run(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 3600000L,
         r.getLong(2), r.getBoolean(3))).toSet
-    val single = run(EventStream.c5StreamAnomaly(spark, sf))
+    val single = run(EventStream.queries("c5_stream_anomaly")(spark, sf))
     assert(single == want)
     assert(single.nonEmpty)
     // the incremental run must agree exactly — hours finalized in batch 2
     // judged against a baseline that includes batch-1 hours
-    assert(run(EventStream.c5StreamAnomalyIncr(spark, sf)) == single)
+    assert(run(EventStream.queries("c5_stream_anomaly_incr")(spark, sf)) == single)
   }
 
   test("streaming top-k ranks the streamed counts like the batch rank") {
     import org.apache.spark.sql.functions._
-    val got = EventStream.c5StreamTopK(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_topk")(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getInt(3)))
     assert(got.nonEmpty)
     val hourly = Tables.load(spark, sf, "events")
@@ -572,7 +582,7 @@ class EventStreamSpec extends SparkSuite {
     }.sortBy(r => (r._1.getTime, r._4))
     assert(got.toSeq == want)
     // the incremental form is the finalized-window subset, same ranks
-    val incr = EventStream.c5StreamTopKIncr(spark, sf).collect()
+    val incr = EventStream.queries("c5_stream_topk_incr")(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getInt(3)))
     assert(incr.nonEmpty)
     val wantSet = want.toSet
@@ -753,7 +763,7 @@ class EventStreamSpec extends SparkSuite {
       Ev(id, ts, u, typ, 1.0, "{}")
     val pMem = MemoryStream[Ev]
     val cMem = MemoryStream[Ev]
-    val q = EventStream.purchaseClickJoinOuter(pMem.toDF(), cMem.toDF())
+    val q = EventStream.purchaseClickJoin(pMem.toDF(), cMem.toDF(), "left_outer")
       .writeStream.format("memory").queryName("oj_boundary")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
     try {
@@ -778,7 +788,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("streaming left-outer interval join == batch replay with the eviction rule") {
-    val got = EventStream.c5StreamJoinOuter(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_join_outer")(spark, sf).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getLong(3))))
       .toSet
     val ev = Tables.load(spark, sf, "events")
@@ -803,6 +813,41 @@ class EventStreamSpec extends SparkSuite {
       .map(r => (r.getLong(0), None: Option[Long])).toSet
     assert(unmatched.nonEmpty, "corpus yields no watermark-cleared matchless purchase")
     assert(got == inner ++ unmatched)
+  }
+
+  test("outer join: the two-file and restart arrivals equal the whole-table arrival") {
+    // Pins the one outer-join builder at all three arrivals: each of the
+    // split arrivals runs with its witness (a pair straddling the cut and
+    // an early purchase evicted by the late watermark) and, after the
+    // restart, the one-match-status invariant, then must land on the
+    // single-batch result.
+    def rows(key: String) = EventStream.queries(key)(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getTimestamp(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+    val whole = rows("c5_stream_join_outer")
+    assert(whole.exists(_._3.isEmpty) && whole.exists(_._3.isDefined),
+      "fixture must yield matched and null-matched purchases")
+    assert(rows("c5_stream_join_outer_incr") == whole)
+    assert(rows("c5_stream_restart_outer") == whole)
+  }
+
+  test("a failed split write leaves no staging or source dir behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def splitDirs(): Set[String] = Option(tmp.list()).toSeq.flatten
+      .filter(n => n.startsWith("graft_incr_stage") || n.startsWith("graft_incr_src"))
+      .toSet
+    val before = splitDirs()
+    val ev = Tables.load(spark, sf, "events")
+    // the late half's write job fails at run time, after the early half
+    // was written and moved into the source dir
+    val failing = ev.withColumn("event_type",
+      raise_error(lit("injected half-write failure")).cast("string"))
+    val err = intercept[Exception](EventStream.writeOrderedSplitDir(ev, failing))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected half-write failure")),
+      s"unexpected failure: $err")
+    val left = splitDirs() -- before
+    assert(left.isEmpty, s"split dirs left behind: $left")
   }
 
   test("stream neardup gate: cross-batch bucket state dedups a later near-dup") {
@@ -1026,7 +1071,7 @@ class EventStreamSpec extends SparkSuite {
     // oracle reuse rests on. Run the REAL query (file split, two data
     // micro-batches, parquet sink, read-side fold) against the batch
     // machinery it claims to replay.
-    val streamed = EventStream.c5StreamNearDup(spark, sf)
+    val streamed = EventStream.queries("c5_stream_neardup")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     val batch = graft.dedup.MinHash.dedupAssignments(
         Tables.load(spark, sf, "documents"), col("doc_id"), col("text"),
@@ -1050,9 +1095,9 @@ class EventStreamSpec extends SparkSuite {
     // state — its input holds no early id) and rejects vacuity; here we
     // also pin that the two-lifecycle run equals the single-lifecycle
     // two-batch gate — recovery must be invisible in the assignment.
-    val got = EventStream.c5StreamRestartNearDup(spark, sf).collect()
+    val got = EventStream.queries("c5_stream_restart_neardup")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    val want = EventStream.c5StreamNearDup(spark, sf).collect()
+    val want = EventStream.queries("c5_stream_neardup")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(got.nonEmpty)
     assert(got.sameElements(want))
@@ -1087,11 +1132,11 @@ class EventStreamSpec extends SparkSuite {
     val key = "spark.graft.stream.skipNoDataBatches"
     val fams = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)](
-      "dedup" -> (EventStream.c5StreamDedup(_, _)),
-      "join" -> (EventStream.c5StreamJoin(_, _)),
-      "session_state" -> (EventStream.c5StreamSessionizeState(_, _)),
-      "neardup" -> (EventStream.c5StreamNearDup(_, _)),
-      "dedup_incr" -> (EventStream.c5StreamDedupIncr(_, _)))
+      "dedup" -> EventStream.queries("c5_stream_dedup"),
+      "join" -> EventStream.queries("c5_stream_join"),
+      "session_state" -> EventStream.queries("c5_stream_sessionize_state"),
+      "neardup" -> EventStream.queries("c5_stream_neardup"),
+      "dedup_incr" -> EventStream.queries("c5_stream_dedup_incr"))
     fams.foreach { case (name, q) =>
       val skipped = q(spark, sf).collect().map(_.toString).sorted
       spark.conf.set(key, "false")
@@ -1115,10 +1160,10 @@ class EventStreamSpec extends SparkSuite {
     // full 34-query equivalence at sf0.01 is in BASELINE.md round 13.
     val fams = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)](
-      "tumbling" -> (EventStream.c5StreamTumbling(_, _)),
-      "dedup" -> (EventStream.c5StreamDedup(_, _)),
-      "session_state" -> (EventStream.c5StreamSessionizeState(_, _)),
-      "join" -> (EventStream.c5StreamJoin(_, _)))
+      "tumbling" -> EventStream.queries("c5_stream_tumbling"),
+      "dedup" -> EventStream.queries("c5_stream_dedup"),
+      "session_state" -> EventStream.queries("c5_stream_sessionize_state"),
+      "join" -> EventStream.queries("c5_stream_join"))
     val key = "spark.sql.streaming.stateStore.providerClass"
     fams.foreach { case (name, q) =>
       val base = q(spark, sf).collect().map(_.toString).sorted
@@ -1162,9 +1207,9 @@ class EventStreamSpec extends SparkSuite {
     // temp entries may grow by the one live sink at most.
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def graftEntries(): Int = Option(tmp.list()).toSeq.flatten.count(_.startsWith("graft"))
-    EventStream.c5StreamRestart(spark, sf).collect()
+    EventStream.queries("c5_stream_restart")(spark, sf).collect()
     val before = graftEntries()
-    val results = (1 to 3).map(_ => EventStream.c5StreamRestart(spark, sf).collect().toSeq)
+    val results = (1 to 3).map(_ => EventStream.queries("c5_stream_restart")(spark, sf).collect().toSeq)
     assert(results.forall(_ == results.head) && results.head.nonEmpty)
     assert(graftEntries() - before <= 1,
       s"graft* temp entries grew from $before to ${graftEntries()}")
