@@ -11,10 +11,13 @@ written by
 Prints `DIFF <key>` (with the first differing character offset and a short
 window of each side) for each key whose SQL text is not byte-identical,
 `ONLY-A`/`ONLY-B` for a key present in one dump only, and a summary line.
-Exits 1 if anything differs, else 0.
+When anything differs it also prints a ready `SPARK_GRAFT_ONLY='^(k1|k2)$'`
+filter of the keys whose B text is new or changed, for re-running Verify and
+check_oracle.py on just those keys. Exits 1 if anything differs, else 0.
 """
 import json
 import os
+import re
 import sys
 
 
@@ -36,6 +39,7 @@ def main(argv):
         return 2
     a, b = load(argv[1]), load(argv[2])
     bad = 0
+    rerun = []
     for key in sorted(set(a) | set(b)):
         if key not in b:
             print(f"ONLY-A {key}")
@@ -43,13 +47,18 @@ def main(argv):
         elif key not in a:
             print(f"ONLY-B {key}")
             bad += 1
+            rerun.append(key)
         elif a[key] != b[key]:
             bad += 1
+            rerun.append(key)
             i = first_diff(a[key], b[key])
             lo = max(0, i - 30)
             print(f"DIFF {key} (char {i})\n  A: ...{a[key][lo:i + 40]!r}\n"
                   f"  B: ...{b[key][lo:i + 40]!r}")
     print(f"{len(set(a) | set(b)) - bad} same, {bad} different")
+    if rerun:
+        keys = "|".join(re.escape(k) for k in rerun)
+        print(f"SPARK_GRAFT_ONLY='^({keys})$'")
     return 1 if bad else 0
 
 

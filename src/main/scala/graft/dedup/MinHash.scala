@@ -45,24 +45,11 @@ object MinHash {
     * h_i(token) = (A_i · (base60(token) % P) + B_i) % P — a Carter–Wegman
     * affine family over the md5 base hash; every member is replayable in
     * portable SQL. Native fused expression (graft.functions.MinHashSig):
-    * one MD5 per token + cheap affine mixes, bit-identical to the HOF
-    * twin below (HashExprsSpec).
+    * one MD5 per token + cheap affine mixes, bit-identical to the
+    * test-side HOF twin HofTwins.signatureHof (HashExprsSpec).
     */
   def signature(tokens: Column, numHashes: Int): Column =
     graft.functions.HashExprs.minHashSig(tokens, numHashes)
-
-  /** HOF twin of `signature` (spec cross-validation only) — the same
-    * family composed from built-ins, and the shape the DuckDB oracle SQL
-    * mirrors.
-    */
-  def signatureHof(tokens: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      i => {
-        val a = ((i + 1) * lit(2654435761L)) % P
-        val b = ((i + 1) * lit(40503L)) % P
-        array_min(transform(tokens, t => (a * (base60(t) % P) + b) % P))
-      })
 
   /** Distinct whitespace tokens — the Jaccard universe used across the
     * dedup operators (documents.text is space-separated word soup).

@@ -23,34 +23,11 @@ object SimHash {
 
   /** 60-bit SimHash fingerprint of a token array, as a bigint column —
     * native fused expression (graft.functions.SimHashFp): one MD5 per
-    * token, bit-identical to the HOF twin below (HashExprsSpec).
+    * token, bit-identical to the test-side HOF twin HofTwins.fingerprintHof
+    * (HashExprsSpec).
     */
   def fingerprint(tokens: Column): Column =
     graft.functions.HashExprs.simHashFp(tokens)
-
-  /** HOF twin of `fingerprint` (spec cross-validation only; same shape as
-    * the DuckDB oracle SQL). Null tokens are skipped, matching the native
-    * expression.
-    */
-  def fingerprintHof(tokens: Column): Column = {
-    val hashes = transform(tokens, t => MinHash.base60(t))
-    // bitSum(j) = Σ (+1 | -1) over token-hash bit j; fold bits into a long.
-    aggregate(
-      sequence(lit(0), lit(Bits - 1)),
-      lit(0L),
-      (acc, j) => {
-        val bitSum = aggregate(
-          hashes,
-          lit(0),
-          (s, h) =>
-            s + when(h.isNull, 0)
-              .otherwise(
-                when(call_function("shiftright", h, j).bitwiseAND(lit(1L)) === 1L, 1)
-                  .otherwise(-1)))
-        acc.bitwiseOR(
-          when(bitSum > 0, call_function("shiftleft", lit(1L), j)).otherwise(lit(0L)))
-      })
-  }
 
   /** Per-document dedup assignment: cluster representative = smallest
     * doc_id sharing any fingerprint block (see MinHash.dedupAssignments

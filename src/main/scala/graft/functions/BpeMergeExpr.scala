@@ -96,8 +96,8 @@ object BpeMergeImpl {
 }
 
 /** See [[BpeMergeExpr.bpeMergeSeq]]. Provenance: replaces the HOF twin
-  * of TextOps.bpeTrain (kept as `mergeSeqBatchHof` for the bit-identity
-  * spec); reference trainer semantics per SURVEY §2.3 C4
+  * of TextOps.bpeTrain (kept as the test-side `HofTwins.mergeSeqBatchHof`
+  * for the bit-identity spec); reference trainer semantics per SURVEY §2.3 C4
   * (Sennrich-style BPE, batched disjoint rounds).
   */
 case class BpeMergeSeq(child: Expression, accepted: Seq[(String, String)])

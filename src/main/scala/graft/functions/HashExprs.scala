@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    divergence between Java and SQL).
   *  - SimHash: 60-bit fingerprint over the bits of `base60` directly.
   *
-  * The HOF twins in graft.dedup.{MinHash,SimHash} compose the same
+  * The HOF twins in the test-side graft.functions.HofTwins compose the same
   * family from built-ins (`md5`/`conv`/`transform`); these expressions
   * fuse the loops — ONE MD5 per token, then cheap affine mixes — and are
   * asserted bit-identical to the twins in HashExprsSpec.
@@ -153,7 +153,7 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
 
 /** 60-bit SimHash fingerprint of an `array<string>`: bit j is set iff
   * Σ_tokens (+1 if bit j of `base60(token)` else −1) > 0 — exactly the
-  * HOF composition in graft.dedup.SimHash.fingerprintHof. Null tokens
+  * HOF composition HofTwins.fingerprintHof (in the tests). Null tokens
   * are skipped.
   */
 case class SimHashFp(child: Expression) extends UnaryExpression {

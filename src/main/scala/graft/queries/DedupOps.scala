@@ -1442,19 +1442,9 @@ object DedupOps {
         mhChainSql(IncBands, IncRows) + ", " + closureSql("band")),
     "c2_embed_neardup" ->
       (s"WITH ${SimOps.sketchCte(tables = 8, bits = 12)}, " +
-        "aa AS (SELECT vec_id AS a_id, rt.t AS tbl, " +
-        "unnest(list_prepend(buckets[rt.t+1], list_transform(range(0, 12), i -> " +
-        "xor(buckets[rt.t+1], (1::BIGINT << i))))) AS bucket " +
-        "FROM bk CROSS JOIN range(0, 8) rt(t)), " +
-        "bb AS (SELECT vec_id AS b_id, rt.t AS tbl, buckets[rt.t+1] AS bucket " +
-        "FROM bk CROSS JOIN range(0, 8) rt(t)), " +
-        "cand AS (SELECT DISTINCT a_id, b_id FROM aa JOIN bb " +
-        "ON aa.tbl = bb.tbl AND aa.bucket = bb.bucket AND aa.a_id < bb.b_id), " +
-        "sc AS (SELECT a_id, b_id, round(list_dot_product(x.v, y.v) / " +
-        "(sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) " +
-        "AS cosine FROM cand JOIN e x ON x.vec_id = cand.a_id " +
-        "JOIN e y ON y.vec_id = cand.b_id) " +
-        "SELECT a_id, b_id, cosine FROM sc WHERE cosine >= 0.35 " +
+        SimOps.lshCandSql(tables = 8, bits = 12, "TRUE", "<") + ", " +
+        SimOps.rescoreSql("sc", "cand") + " " +
+        "SELECT q_id AS a_id, b_id, cosine FROM sc WHERE cosine >= 0.35 " +
         "ORDER BY a_id, b_id")
   )
 

@@ -41,21 +41,13 @@ object SimOps {
   /** Sequential-fold dot product — native codegen'd Expression
     * (graft.functions.DotProductD); same fold order as the HOF form and
     * the DuckDB oracle, ~an order of magnitude faster (no per-element
-    * boxing, no intermediate array). The HOF twin below is kept for
-    * spec cross-validation.
+    * boxing, no intermediate array). Its HOF twin, for spec
+    * cross-validation, is the test-side graft.functions.HofTwins.dotHof.
     */
   def dotD(a: Column, b: Column): Column = graft.functions.VectorExprs.dot(a, b)
 
   /** L2 norm via the same sequential fold (native). */
   def normD(a: Column): Column = graft.functions.VectorExprs.norm(a)
-
-  /** HOF twins of dotD/normD — used by specs to assert the native
-    * expressions are bitwise-identical to the declarative composition.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-  def normHof(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
 
   private def asDouble(a: Column): Column = a.cast("array<double>")
 
@@ -242,7 +234,7 @@ object SimOps {
     * embeddings; planes are generated lazily per (tables, bits) request.
     */
   private val Dim = 64
-  private def planeMatrix(nPlanes: Int): Seq[Seq[Double]] = {
+  private[graft] def planeMatrix(nPlanes: Int): Seq[Seq[Double]] = {
     val rng = new scala.util.Random(42)
     Seq.fill(nPlanes)(Seq.fill(Dim)(rng.nextGaussian()))
   }
@@ -259,20 +251,6 @@ object SimOps {
     */
   def lshBuckets(embD: Column, tables: Int, bits: Int): Column =
     graft.functions.VectorExprs.signSketch(embD, planeMatrix(tables * bits), tables, bits)
-
-  /** HOF twin of lshBuckets (spec cross-validation of SignSketch). */
-  def lshBucketsHof(embD: Column, tables: Int, bits: Int): Column = {
-    val planes = typedLit(planeMatrix(tables * bits))
-    transform(sequence(lit(0), lit(tables - 1)), t =>
-      aggregate(sequence(lit(0), lit(bits - 1)), lit(0L), (acc, i) => {
-        // dot(embD, plane_{t*bits+i}) inline — evaluated once per (t, i)
-        val dot = aggregate(
-          zip_with(embD, element_at(planes, t * bits + i + 1), (x, c) => x * c),
-          lit(0.0d), (a, x) => a + x)
-        acc.bitwiseOR(
-          when(dot > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L)))
-      }))
-  }
 
   /** Explode a bucket array to (table, bucket) rows; when `probe` is set
     * also emit every Hamming-1 variant of each bucket (query-side
@@ -523,7 +501,7 @@ object SimOps {
     * the two sides' residual/encode arithmetic to never drift, so the
     * expressions exist in exactly one place.
     */
-  private final case class PqEncExprs(coarse: Seq[Seq[Double]],
+  private[graft] final case class PqEncExprs(coarse: Seq[Seq[Double]],
       books: Seq[Seq[Seq[Double]]], subspaces: Int, residual: Boolean) {
     private val sub = coarse.head.length / subspaces
     // residual against a (1-based) cell id, as one fused zip_with
@@ -552,7 +530,7 @@ object SimOps {
     // array_position(cdists, array_min(cdists)) including ties (first
     // minimum), and its codes are the same per-subspace first-argmins
     // the sd-column chain computed (bit-identity spec-pinned in
-    // PqProbeEncExprSpec; the chain twin lives in [[pqProbeChainHof]]).
+    // PqProbeEncExprSpec against the test-side HofTwins.pqProbeChainHof).
     base
       .select(col("vec_id").as("b_id"),
         explode(graft.functions.PqProbeEncExpr.pqProbeEnc(
@@ -590,7 +568,7 @@ object SimOps {
     * Each corpus vector lives in exactly one cell and probes are
     * distinct, so (q_id, b_id) pairs are already unique — the ADC joins
     * back on (q_id, cell) to pick the matching per-probe table. `adc` is
-    * rounded to 6dp BEFORE the rank window (the annScoreTail posture):
+    * rounded to 6dp BEFORE the rank window (the annTopKTail posture):
     * ranking on the raw double would make the hash depend on DuckDB's
     * list_sum reproducing Spark's left-to-right fold bit-for-bit — a
     * sub-1e-6 near-tie from a different summation order would flip ranks.
@@ -1649,69 +1627,196 @@ object SimOps {
   private[queries] def matLit(m: Seq[Seq[Double]]): String =
     m.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
+  // The oracle vocabulary: the DuckDB spelling of the rules above, one
+  // renderer per rule, shared by every vector replay (the ANN, semantic
+  // dedup and semantic gate oracles, and DedupOps' c2_embed_neardup).
+
+  /** The embeddings as `e(vec_id, v, label)`, `v` cast as [[embVecs]]. */
+  private[queries] val embCte =
+    "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings)"
+
+  /** [[cosine6]]. */
+  private def cosineSql(a: String, b: String): String =
+    s"round(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * " +
+      s"sqrt(list_dot_product($b, $b))), 6)"
+
+  /** The PQ recall replays' exact squared L2, dot(a,a) + dot(b,b) −
+    * 2·dot(a,b) rounded to 6 dp, as the Spark side computes it.
+    */
+  private def l2sqSql(a: String, b: String): String =
+    s"round(list_dot_product($a, $a) + list_dot_product($b, $b) " +
+      s"- 2*list_dot_product($a, $b), 6)"
+
+  /** [[assignCell]] over a `dists` column. */
+  private val assignSql = "CAST(list_position(dists, list_min(dists)) AS INT)"
+
+  /** The codebook `cents` as `ct<tag>(c)`, every row of `src(vec_id, v)`
+    * with its squared-L2 `dists` to it as `d<tag>(vec_id, v, dists)`
+    * (materialized: assignment, probes and residuals all read it), and
+    * the assignment `asg<tag>(vec_id, v, cell)`.
+    */
+  private def codebookSql(cents: Seq[Seq[Double]], src: String = "e",
+      tag: String = ""): String =
+    s"ct$tag AS (SELECT ${matLit(cents)} AS c), " +
+      s"d$tag AS MATERIALIZED (SELECT vec_id, v, " +
+      s"list_transform(range(1, ${cents.length + 1}), k -> " +
+      "list_sum(list_transform(range(1, 65), j -> (v[j]-c[k][j])*(v[j]-c[k][j])))) " +
+      s"AS dists FROM $src CROSS JOIN ct$tag), " +
+      s"asg$tag AS (SELECT vec_id, v, $assignSql AS cell FROM d$tag)"
+
+  /** [[probeCells]] of the `d<tag>` rows matching `pred`, as
+    * `qs<tag>(q_id, v, cell)`, one row per probed cell.
+    */
+  private def probesSql(nTrained: Int, nprobe: Int, pred: String,
+      tag: String = ""): String =
+    s"qs$tag AS (SELECT vec_id AS q_id, v, unnest(list_transform(list_slice(" +
+      s"list_sort(list_transform(range(1, ${nTrained + 1}), k -> " +
+      s"[dists[k], CAST(k AS DOUBLE)])), 1, ${math.min(nprobe, nTrained)}), " +
+      s"s -> CAST(s[2] AS BIGINT))) AS cell FROM d$tag WHERE $pred)"
+
+  /** The IVF candidates `cand<tag>(q_id, b_id)`: each probe's other
+    * vectors in the probed cell, narrowed by `on` (aliases: `q` the
+    * probe, `a` the corpus assignment).
+    */
+  private def ivfCandSql(on: String = "", tag: String = ""): String =
+    s"cand$tag AS MATERIALIZED (SELECT DISTINCT q.q_id, a.vec_id AS b_id " +
+      s"FROM asg$tag a JOIN qs$tag q ON a.cell = q.cell AND q.q_id <> a.vec_id$on)"
+
+  /** [[cellPairs]]: vectors sharing an `asg` cell with
+    * `a.vec_id <op> b.vec_id`, as `cp(q_id, b_id)`.
+    */
+  private def cellPairsSql(op: String): String =
+    "cp AS (SELECT a.vec_id AS q_id, b.vec_id AS b_id FROM asg a JOIN asg b " +
+      s"ON a.cell = b.cell AND a.vec_id $op b.vec_id)"
+
+  /** The rescore of the pairs `cand(q_id, b_id)` against `src(vec_id, v)`,
+    * as `<name>(q_id, b_id, <score>)`; `x` is the query, `y` the corpus
+    * vector, and the score [[cosine6]] unless given.
+    */
+  private[queries] def rescoreSql(name: String, cand: String, src: String = "e",
+      score: String = s"${cosineSql("x.v", "y.v")} AS cosine"): String =
+    s"$name AS (SELECT q_id, b_id, $score FROM $cand " +
+      s"JOIN $src x ON x.vec_id = $cand.q_id JOIN $src y ON y.vec_id = $cand.b_id)"
+
+  /** The exact scan: every `src` vector `x` matching `on` scored against
+    * every other vector `y`, as `<name>(q_id, b_id, <score>)`.
+    */
+  private def exactSql(name: String, on: String, src: String = "e",
+      score: String = s"${cosineSql("x.v", "y.v")} AS cosine"): String =
+    s"$name AS (SELECT x.vec_id AS q_id, y.vec_id AS b_id, $score " +
+      s"FROM $src x JOIN $src y ON $on AND x.vec_id <> y.vec_id)"
+
+  /** [[rankByCosine]] and its ADC/L2 twins: the `from` rows ranked per
+    * q_id by (`order`, b_id), rank ≤ k kept, as `<name>(…, rank)`.
+    */
+  private def topKSql(name: String, from: String, k: Int,
+      order: String = "cosine DESC"): String =
+    s"$name AS (SELECT * FROM (SELECT *, CAST(row_number() OVER " +
+      s"(PARTITION BY q_id ORDER BY $order, b_id) AS INT) AS rank FROM $from) " +
+      s"WHERE rank <= $k)"
+
+  /** The ANN result over a scored `from(q_id, b_id, cosine)`. */
+  private def annTopKTail(from: String, k: Int): String =
+    topKSql("r", from, k) + " SELECT q_id, rank, b_id, cosine FROM r ORDER BY q_id, rank"
+
+  /** [[recallHits]]: per query, |truth ∩ ann| as `<name>(q_id, n_hits)`. */
+  private def hitsSql(name: String, truth: String, ann: String): String =
+    s"$name AS (SELECT q_id, count(*) AS n_hits FROM $truth JOIN $ann " +
+      "USING (q_id, b_id) GROUP BY q_id)"
+
+  private def nHitsSql(h: String): String = s"CAST(COALESCE($h.n_hits, 0) AS BIGINT)"
+  private def recallSql(h: String, k: Int): String =
+    s"round(COALESCE($h.n_hits, 0) / $k.0, 6)"
+  /** The query-set mean as one integer sum (no float fold order). */
+  private def meanRecallSql(h: String, k: Int): String =
+    s"round(sum(COALESCE($h.n_hits, 0)) OVER () / ($k.0 * count(*) OVER ()), 6)"
+
+  /** The cosine recall chain over a `cand(q_id, b_id)` in scope: the
+    * rescored ANN top-k `ann`, the exact top-k `bf` of the same query
+    * set and their `hits`.
+    */
+  private def recallCtes(k: Int): String =
+    Seq(rescoreSql("sc", "cand"), topKSql("ann", "sc", k),
+      exactSql("bsc", queryPredSql(100, "x.vec_id")), topKSql("bf", "bsc", k),
+      hitsSql("hits", "bf", "ann")).mkString(", ")
+
+  /** One recall row per query of `bf`: n_hits, recall_at_k, `extra`. */
+  private def recallTail(k: Int, extra: String): String =
+    s"SELECT q.q_id, ${nHitsSql("h")} AS n_hits, ${recallSql("h", k)} AS recall_at_$k, " +
+      s"$extra FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id) " +
+      "ORDER BY q_id"
+
+  /** IVFADC scoring ([[PqEncExprs]]: residual against the cell,
+    * sub-distances, codes; then the left-to-right ADC sum, round-6 before
+    * any rank so DuckDB's list_sum and Spark's fold cannot flip it): the
+    * codes `rcd(b_id, cell, codes)` of every `asg` row, the lookup tables
+    * `qsd(q_id, cell, sd)` of every `probes(q_id, v, cell)` row, and the
+    * pairs of `cand(q_id, b_id)` scored as `psc(q_id, b_id, adc)`.
+    */
+  private def adcSql(books: Seq[Seq[Seq[Double]]], kSub: Int,
+      probes: String = "qs", cand: String = "cand"): String = {
+    val m = books.length
+    val sub = 64 / m
+    def subDists(id: String, rows: String): String =
+      s"SELECT $id, cell, list_transform(range(1, ${m + 1}), m -> " +
+        s"list_transform(range(1, ${kSub + 1}), kk -> " +
+        s"list_sum(list_transform(range(1, ${sub + 1}), j -> " +
+        s"(r[(m-1)*$sub+j]-b[m][kk][j])*(r[(m-1)*$sub+j]-b[m][kk][j]))))) AS sd " +
+        s"FROM (SELECT $id, cell, list_transform(range(1, 65), j -> v[j] - c[cell][j]) " +
+        s"AS r FROM $rows CROSS JOIN ct) CROSS JOIN bks"
+    s"bks AS (SELECT ${books.map(matLit).mkString("[", ",", "]")} AS b), " +
+      "rcd AS (SELECT vec_id AS b_id, cell, " +
+      "list_transform(sd, s -> list_position(s, list_min(s))) AS codes " +
+      s"FROM (${subDists("vec_id", "asg")})), " +
+      s"qsd AS (${subDists("q_id", probes)}), " +
+      "psc AS (SELECT cand.q_id, cand.b_id, " +
+      s"round(list_sum(list_transform(range(1, ${m + 1}), m -> " +
+      "qsd.sd[m][rcd.codes[m]])), 6) AS adc " +
+      s"FROM $cand cand JOIN rcd ON rcd.b_id = cand.b_id " +
+      "JOIN qsd ON qsd.q_id = cand.q_id AND qsd.cell = rcd.cell)"
+  }
+
+  /** The semantic gates' confirm and pick over a `cand(q_id, b_id)` of
+    * the `vec_id % mod = rem` arrivals: [[cosine6]], the best pair at or
+    * above [[IncSemThreshold]] by (cosine desc, b_id), one row per
+    * arrival (novel when none).
+    */
+  private def gateSql(cand: String, mod: Int, rem: Int): String =
+    rescoreSql("sc", cand) + ", " +
+      topKSql("best", s"sc WHERE cosine >= $IncSemThreshold", 1) + " " +
+      "SELECT e.vec_id, best.b_id IS NULL AS is_novel, best.b_id AS match_id, " +
+      "best.cosine AS match_cosine FROM e LEFT JOIN best ON best.q_id = e.vec_id " +
+      s"WHERE e.vec_id % $mod = $rem ORDER BY vec_id"
+
   /** Shared oracle CTE: embeddings + the multi-table sign sketch, with
     * the hyperplane matrix embedded as a literal — the DuckDB replay of
     * `lshBuckets` (same sequential dot products, same sign rule, same
     * bit packing).
     */
   private[queries] def sketchCte(tables: Int, bits: Int): String =
-    s"pl AS (SELECT ${matLit(planeMatrix(tables * bits))} AS p), " +
-      "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+    s"pl AS (SELECT ${matLit(planeMatrix(tables * bits))} AS p), $embCte, " +
       s"bk AS (SELECT vec_id, v, list_transform(range(0, $tables), t -> " +
       s"CAST(list_sum(list_transform(range(0, $bits), i -> " +
       s"CASE WHEN list_dot_product(v, p[t*$bits+i+1]) > 0 " +
       "THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT)) AS buckets " +
       "FROM e CROSS JOIN pl)"
 
-  /** Shared candidate-generation CTEs for the sign-LSH ANN oracles:
-    * corpus bucket rows, multi-probe query bucket rows, and the distinct
-    * candidate pairs (the DuckDB replay of c3AnnLsh's bucket join).
-    * Expects [[sketchCte]]'s `e` and `bk` CTEs in scope.
+  /** The sign-LSH candidates (c3AnnLsh's bucket join): corpus bucket
+    * rows `corp(b_id, tbl, bucket)`, the Hamming-1 multi-probe rows
+    * `qs(q_id, tbl, bucket)` of the `pred` vectors, and the distinct
+    * pairs `cand(q_id, b_id)` sharing one with `q_id <op> b_id`.
+    * Expects [[sketchCte]] in scope.
     */
-  private def annCandCtes(tables: Int, bits: Int): String =
+  private[queries] def lshCandSql(tables: Int, bits: Int, pred: String,
+      op: String): String =
     s"corp AS (SELECT vec_id AS b_id, rt.t AS tbl, buckets[rt.t+1] AS bucket " +
       s"FROM bk CROSS JOIN range(0, $tables) rt(t)), " +
       "qs AS (SELECT vec_id AS q_id, rt.t AS tbl, " +
       s"unnest(list_prepend(buckets[rt.t+1], list_transform(range(0, $bits), i -> " +
       "xor(buckets[rt.t+1], (1::BIGINT << i))))) AS bucket " +
-      s"FROM bk CROSS JOIN range(0, $tables) rt(t) WHERE ${queryPredSql(100)}), " +
+      s"FROM bk CROSS JOIN range(0, $tables) rt(t) WHERE $pred), " +
       "cand AS (SELECT DISTINCT q_id, b_id FROM corp JOIN qs " +
-      "ON corp.tbl = qs.tbl AND corp.bucket = qs.bucket AND qs.q_id <> corp.b_id)"
-
-  /** Shared CTE chain of the recall oracles: rescored ANN top-k (from
-    * whatever `cand` CTE is in scope), brute-force top-k, and per-query
-    * hit counts. Expects `e` (vec_id, v) and `cand` (q_id, b_id) CTEs.
-    */
-  private def recallCtes(k: Int): String =
-    "sc AS (SELECT q_id, b_id, round(list_dot_product(q.v, c.v) / " +
-      "(sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) " +
-      "AS cosine FROM cand JOIN e q ON q.vec_id = cand.q_id " +
-      "JOIN e c ON c.vec_id = cand.b_id), " +
-      "annr AS (SELECT q_id, b_id, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY cosine DESC, b_id) AS rank FROM sc), " +
-      s"ann AS (SELECT q_id, b_id FROM annr WHERE rank <= $k), " +
-      "bsc AS (SELECT q.vec_id AS q_id, c.vec_id AS b_id, " +
-      "round(list_dot_product(q.v, c.v) / (sqrt(list_dot_product(q.v, q.v)) * " +
-      "sqrt(list_dot_product(c.v, c.v))), 6) AS cosine " +
-      s"FROM e q JOIN e c ON ${queryPredSql(100, "q.vec_id")} " +
-      "AND q.vec_id <> c.vec_id), " +
-      "bfr AS (SELECT q_id, b_id, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY cosine DESC, b_id) AS rank FROM bsc), " +
-      s"bf AS (SELECT q_id, b_id FROM bfr WHERE rank <= $k), " +
-      "hits AS (SELECT q_id, count(*) AS n_hits FROM bf JOIN ann " +
-      "USING (q_id, b_id) GROUP BY q_id)"
-
-  /** Exact-cosine rescore + per-query top-k tail shared by the ANN
-    * oracles (identical to the c3_cosine_topk oracle's scoring).
-    */
-  private def annScoreTail(k: Int): String =
-    "sc AS (SELECT q_id, b_id, round(list_dot_product(q.v, c.v) / " +
-      "(sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) " +
-      "AS cosine FROM cand JOIN e q ON q.vec_id = cand.q_id " +
-      "JOIN e c ON c.vec_id = cand.b_id), " +
-      "r AS (SELECT q_id, b_id, cosine, CAST(row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY cosine DESC, b_id) AS INT) AS rank FROM sc) " +
-      s"SELECT q_id, rank, b_id, cosine FROM r WHERE rank <= $k ORDER BY q_id, rank"
+      s"ON corp.tbl = qs.tbl AND corp.bucket = qs.bucket AND qs.q_id $op corp.b_id)"
 
   /** Deterministically retrain the IVF codebook the way c3AnnIvf does —
     * same bounded sample, same Lloyd iterations — so the dynamic oracle
@@ -1805,208 +1910,85 @@ object SimOps {
     * verify time (Verify merges it into oracle_sql.json).
     */
   def dynamicOracle(spark: SparkSession, dir: String): Map[String, String] = {
+    // Since round 18 the whole ANN family, the every-vector operators and
+    // the semantic gates train one codebook at the corpus-scaled cell
+    // count (resolveCells / scaledCells).
+    val kCells = scaledCells(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val n = cents.length
-    // The every-vector-is-a-query operators train on the corpus-scaled
-    // cell count (see scaledCells) — their replays must embed THAT
-    // codebook, not the fixed ANN coarse quantizer.
-    val kCells = scaledCells(spark, dir)
-    // since round 18 the whole ANN family trains at the corpus-scaled
-    // cell count (resolveCells), so the per-query and every-vector
-    // codebooks are one and the same
-    val centsK = cents
-    val nK = n
-    // IVF candidate CTEs (assignment + probing with the trained codebook
-    // embedded as a literal), shared by the ANN query, its recall twin,
-    // and the IVF-PQ query (same coarse quantizer by construction).
-    val ivfBaseCtes =
-      s"ct AS (SELECT ${matLit(cents)} AS c), " +
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        s"d AS (SELECT vec_id, v, list_transform(range(1, ${n + 1}), k -> " +
-        "list_sum(list_transform(range(1, 65), j -> " +
-        "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-        "corp AS (SELECT vec_id AS b_id, " +
-        "list_position(dists, list_min(dists)) AS cell FROM d), " +
-        "qs AS (SELECT vec_id AS q_id, unnest(list_transform(list_slice(" +
-        s"list_sort(list_transform(range(1, ${n + 1}), k -> " +
-        "[dists[k], CAST(k AS DOUBLE)])), 1, 4), s -> CAST(s[2] AS BIGINT))) " +
-        s"AS cell FROM d WHERE ${queryPredSql(100)})"
-    val ivfCandCtes = ivfBaseCtes +
-      ", cand AS (SELECT DISTINCT q_id, b_id FROM corp JOIN qs " +
-        "ON corp.cell = qs.cell AND qs.q_id <> corp.b_id)"
-    // Filtered-search twin: candidates additionally restricted to equal
-    // label on both sides (the pre-filter joins into candidate
-    // generation, exactly as the Spark plan's matchCols do).
-    val ivfCandCtesFiltered = ivfBaseCtes +
-      ", lab AS (SELECT vec_id, label FROM embeddings), " +
-        "cand AS (SELECT DISTINCT q_id, b_id FROM corp JOIN qs " +
-        "ON corp.cell = qs.cell AND qs.q_id <> corp.b_id " +
-        "JOIN lab la ON la.vec_id = qs.q_id " +
-        "JOIN lab lb ON lb.vec_id = corp.b_id AND la.label = lb.label)"
-    // IVFADC replay (residual PQ): corpus residuals are taken against the
-    // vector's own cell, query residuals against EACH probed cell (one
-    // lookup table per (query, probe)); codebooks are retrained on sample
+    // The ANN queries: the first MaxQueries multiples of 100 probe 4 cells.
+    val ivfCtes = s"WITH $embCte, ${codebookSql(cents)}, " +
+      probesSql(n, 4, queryPredSql(100))
+    // Filtered search: candidates further restricted to the query's label
+    // (the pre-filter joins into candidate generation, as the Spark
+    // plan's matchCols do).
+    val sameLabel = " JOIN e la ON la.vec_id = q.q_id " +
+      "JOIN e lb ON lb.vec_id = a.vec_id AND lb.label = la.label"
+    // IVFADC replay (residual PQ): the codebooks are retrained on sample
     // residuals exactly as pqModel does, so the embedded literals match
-    // the Spark plan's. The ADC is the left-to-right list_sum over table
-    // lookups, matching the Spark aggregate() fold exactly.
-    val (mSub, kSub) = (8, 16)
-    val sub = 64 / mSub
+    // the Spark plan's.
     val (coarsePq, books) = pqModel(
-      boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, mSub, kSub)
+      boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, 8, 16)
     require(coarsePq == cents,
       "PQ coarse quantizer diverged from the IVF centroids — the shared " +
-        "ivfCandCtes would replay the wrong cells")
-    def sdistsGen(r: String, ms: Int, ks: Int): String = {
-      val sb = 64 / ms
-      s"list_transform(range(1, ${ms + 1}), m -> " +
-        s"list_transform(range(1, ${ks + 1}), kk -> " +
-        s"list_sum(list_transform(range(1, ${sb + 1}), j -> " +
-        s"($r[(m-1)*$sb+j]-b[m][kk][j])*($r[(m-1)*$sb+j]-b[m][kk][j])))))"
-    }
-    val sdistsOf = (r: String) => sdistsGen(r, mSub, kSub)
-    def pqCtesOver(qsRel: String, candRel: String): String =
-      s"bks AS (SELECT ${books.map(matLit).mkString("[", ",", "]")} AS b), " +
-        // corpus residual v − c[cell] and its argmin codes
-        "rc AS (SELECT corp.b_id AS vec_id, corp.cell, " +
-        "list_transform(range(1, 65), j -> d.v[j] - c[corp.cell][j]) AS r " +
-        "FROM corp JOIN d ON d.vec_id = corp.b_id CROSS JOIN ct), " +
-        s"rsd AS (SELECT vec_id, cell, ${sdistsOf("r")} AS sdists " +
-        "FROM rc CROSS JOIN bks), " +
-        s"rcd AS (SELECT vec_id, cell, list_transform(range(1, ${mSub + 1}), m -> " +
-        "list_position(sdists[m], list_min(sdists[m]))) AS codes FROM rsd), " +
-        // query residual per PROBED cell and its lookup table
-        "qr AS (SELECT qs.q_id, qs.cell, " +
-        "list_transform(range(1, 65), j -> d.v[j] - c[qs.cell][j]) AS r " +
-        s"FROM $qsRel qs JOIN d ON d.vec_id = qs.q_id CROSS JOIN ct), " +
-        s"qsd AS (SELECT q_id, cell, ${sdistsOf("r")} AS sdists " +
-        "FROM qr CROSS JOIN bks), " +
-        // round-6 BEFORE the rank window, matching the Spark side — the
-        // rank must not depend on sub-1e-6 fold-order drift between
-        // DuckDB's list_sum and Spark's aggregate().
-        "psc AS (SELECT cand.q_id, cand.b_id, " +
-        s"round(list_sum(list_transform(range(1, ${mSub + 1}), m -> " +
-        "qsd.sdists[m][rcd.codes[m]])), 6) AS adc " +
-        s"FROM $candRel cand JOIN rcd ON rcd.vec_id = cand.b_id " +
-        "JOIN qsd ON qsd.q_id = cand.q_id AND qsd.cell = rcd.cell), " +
-        "pr AS (SELECT q_id, b_id, adc, CAST(row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY adc ASC, b_id) AS INT) AS rank FROM psc)"
-    val pqCtes = pqCtesOver("qs", "cand")
-    val pqSql = s"WITH $ivfCandCtes, $pqCtes " +
-      "SELECT q_id, rank, b_id, adc FROM pr " +
-      "WHERE rank <= 5 ORDER BY q_id, rank"
-    // Same replay over the label-restricted candidate set (pqCtes only
-    // references `cand`, so the swap is the whole difference).
-    val pqFilteredSql = s"WITH $ivfCandCtesFiltered, $pqCtes " +
-      "SELECT q_id, rank, b_id, adc FROM pr " +
-      "WHERE rank <= 5 ORDER BY q_id, rank"
-    // k-NN graph replay: same centroid assignment, within-cell exact
-    // cosine (6dp before the rank), (cosine desc, b_id) top-3 per vector.
-    val knnSql =
-      s"WITH ct AS (SELECT ${matLit(centsK)} AS c), " +
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        s"d AS (SELECT vec_id, v, list_transform(range(1, ${nK + 1}), k -> " +
-        "list_sum(list_transform(range(1, 65), j -> " +
-        "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-        "asg AS (SELECT vec_id, v, " +
-        "CAST(list_position(dists, list_min(dists)) AS INT) AS cell FROM d), " +
-        "sc AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, " +
-        "round(list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * " +
-        "sqrt(list_dot_product(b.v, b.v))), 6) AS cosine " +
-        "FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id <> b.vec_id), " +
-        "pr AS (SELECT a_id, b_id, cosine, CAST(row_number() OVER " +
-        "(PARTITION BY a_id ORDER BY cosine DESC, b_id) AS INT) AS rank FROM sc) " +
-        "SELECT a_id, rank, b_id, cosine FROM pr WHERE rank <= 3 " +
-        "ORDER BY a_id, rank"
-    // PQ quantization-loss recall replay: the ADC top-k from pr, the
-    // exact squared-L2 ranking over the SAME cand set via the
-    // three-dot-product formula the Spark side computes
-    // (dot(q,q)+dot(b,b)-2·dot(q,b), round-6 before rank), the hit
-    // join, and the integer-sum mean. mean_recall_ok is literal TRUE —
-    // the bound lives in the Spark plan.
-    val pqRecallSql = s"WITH $ivfCandCtes, $pqCtes, " +
-      "ann AS (SELECT q_id, b_id FROM pr WHERE rank <= 5), " +
-      "bsc AS (SELECT cand.q_id, cand.b_id, " +
-      "round(list_dot_product(q.v, q.v) + list_dot_product(c.v, c.v) " +
-      "- 2*list_dot_product(q.v, c.v), 6) AS l2sq " +
-      "FROM cand JOIN e q ON q.vec_id = cand.q_id " +
-      "JOIN e c ON c.vec_id = cand.b_id), " +
-      "bfr AS (SELECT q_id, b_id, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY l2sq ASC, b_id) AS rank FROM bsc), " +
-      "bf AS (SELECT q_id, b_id FROM bfr WHERE rank <= 5), " +
-      "hits AS (SELECT q_id, count(*) AS n_hits FROM bf JOIN ann " +
-      "USING (q_id, b_id) GROUP BY q_id) " +
-      "SELECT q.q_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits, " +
-      "round(COALESCE(h.n_hits, 0) / 5.0, 6) AS recall_at_5, " +
-      "round(sum(COALESCE(h.n_hits, 0)) OVER () / (5.0 * count(*) OVER ()), 6) " +
-      "AS mean_recall, TRUE AS mean_recall_ok " +
-      "FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id) " +
-      "ORDER BY q_id"
-    // Adaptive-filtered replay: the probe pass's candidate counts decide
-    // starvation (< k labeled candidates in the probed cells), starved
-    // queries escalate to all-cell probes and the full label slice; the
-    // merged probe/candidate sets ride the SAME ADC chain via
-    // pqCtesOver. Non-starved queries reproduce pqFilteredSql exactly.
-    val pqFilteredAdaptiveSql = s"WITH $ivfCandCtesFiltered, " +
+        "IVF CTEs would replay the wrong cells")
+    val pqTop = adcSql(books, 16) + ", " + topKSql("pr", "psc", 5, "adc")
+    val pqTail = " SELECT q_id, rank, b_id, adc FROM pr ORDER BY q_id, rank"
+    val pqSql = s"$ivfCtes, ${ivfCandSql()}, $pqTop$pqTail"
+    val pqFilteredSql = s"$ivfCtes, ${ivfCandSql(sameLabel)}, $pqTop$pqTail"
+    // PQ quantization-loss recall: the ADC top-k against the exact
+    // squared-L2 top-k over the SAME cand set. mean_recall_ok is literal
+    // TRUE — the bound lives in the Spark plan.
+    val pqRecallSql = s"$ivfCtes, ${ivfCandSql()}, $pqTop, " +
+      rescoreSql("bsc", "cand", score = s"${l2sqSql("x.v", "y.v")} AS l2sq") + ", " +
+      topKSql("bf", "bsc", 5, "l2sq") + ", " + hitsSql("hits", "bf", "pr") + " " +
+      recallTail(5, s"${meanRecallSql("h", 5)} AS mean_recall, TRUE AS mean_recall_ok")
+    // Adaptive-filtered replay: queries with < k labeled candidates in
+    // their probed cells are starved and escalate to all-cell probes and
+    // the full label slice; the merged probe/candidate sets ride the same
+    // ADC chain. Non-starved queries reproduce pqFilteredSql exactly.
+    val pqFilteredAdaptiveSql = s"$ivfCtes, ${ivfCandSql(sameLabel)}, " +
       "n1 AS (SELECT q_id, count(*) AS n1 FROM cand GROUP BY q_id), " +
       "qq AS (SELECT DISTINCT q_id FROM qs), " +
       "starved AS (SELECT qq.q_id FROM qq LEFT JOIN n1 USING (q_id) " +
       "WHERE COALESCE(n1.n1, 0) < 5), " +
-      "qsA AS (SELECT qs.q_id, qs.cell FROM qs ANTI JOIN starved USING (q_id) " +
-      "UNION ALL SELECT s.q_id, g.cell FROM starved s CROSS JOIN " +
-      s"(SELECT unnest(generate_series(1, $n)) AS cell) g), " +
-      "candA AS (SELECT cand.q_id, cand.b_id FROM cand " +
-      "ANTI JOIN starved USING (q_id) " +
+      "qsA AS (SELECT q_id, v, cell FROM qs ANTI JOIN starved USING (q_id) " +
+      "UNION ALL SELECT s.q_id, d.v, g.cell FROM starved s " +
+      s"JOIN d ON d.vec_id = s.q_id CROSS JOIN range(1, ${n + 1}) g(cell)), " +
+      "candA AS (SELECT q_id, b_id FROM cand ANTI JOIN starved USING (q_id) " +
       "UNION SELECT s.q_id, lb.vec_id AS b_id FROM starved s " +
-      "JOIN lab la ON la.vec_id = s.q_id " +
-      "JOIN lab lb ON lb.label = la.label AND lb.vec_id <> s.q_id), " +
-      pqCtesOver("qsA", "candA") +
-      " SELECT q_id, rank, b_id, adc FROM pr WHERE rank <= 5 ORDER BY q_id, rank"
-    // Filtered-recall replay: the filtered ADC top-k (pr over the
-    // label-restricted cand set), the exact LABEL-RESTRICTED top-k over
-    // the whole corpus (label-blocked three-dot-product L2, round-6
-    // before rank), per-query n_exact/n_ann/n_hits, honest-denominator
-    // recall and the integer-sum mean.
-    val pqFilteredRecallSql = s"WITH $ivfCandCtesFiltered, $pqCtes, " +
-      "ann AS (SELECT q_id, b_id FROM pr WHERE rank <= 5), " +
-      s"exq AS (SELECT vec_id AS q_id, v FROM e WHERE ${queryPredSql(100)}), " +
-      "exs AS (SELECT exq.q_id, lb.vec_id AS b_id, " +
-      "round(list_dot_product(exq.v, exq.v) + list_dot_product(c.v, c.v) " +
-      "- 2*list_dot_product(exq.v, c.v), 6) AS l2sq " +
-      "FROM exq JOIN lab la ON la.vec_id = exq.q_id " +
-      "JOIN lab lb ON lb.label = la.label AND lb.vec_id <> exq.q_id " +
-      "JOIN e c ON c.vec_id = lb.vec_id), " +
-      "exr AS (SELECT q_id, b_id, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY l2sq ASC, b_id) AS rank FROM exs), " +
-      "exk AS (SELECT q_id, b_id FROM exr WHERE rank <= 5), " +
+      "JOIN e la ON la.vec_id = s.q_id " +
+      "JOIN e lb ON lb.label = la.label AND lb.vec_id <> s.q_id), " +
+      adcSql(books, 16, "qsA", "candA") + ", " + topKSql("pr", "psc", 5, "adc") + pqTail
+    // Filtered recall: the filtered ADC top-k against the exact
+    // LABEL-RESTRICTED squared-L2 top-k over the whole corpus, per-query
+    // n_exact/n_ann/n_hits, honest-denominator recall, integer-sum mean.
+    val pqFilteredRecallSql = s"$ivfCtes, ${ivfCandSql(sameLabel)}, $pqTop, " +
+      exactSql("exs", s"${queryPredSql(100, "x.vec_id")} AND y.label = x.label",
+        score = s"${l2sqSql("x.v", "y.v")} AS l2sq") + ", " +
+      topKSql("exk", "exs", 5, "l2sq") + ", " +
       "nex AS (SELECT q_id, count(*) AS n_exact FROM exk GROUP BY q_id), " +
-      "nan AS (SELECT q_id, count(*) AS n_ann FROM ann GROUP BY q_id), " +
-      "hits AS (SELECT q_id, count(*) AS n_hits FROM exk JOIN ann " +
-      "USING (q_id, b_id) GROUP BY q_id) " +
+      "nan AS (SELECT q_id, count(*) AS n_ann FROM pr GROUP BY q_id), " +
+      hitsSql("hits", "exk", "pr") + " " +
       "SELECT nex.q_id, nex.n_exact, " +
       "CAST(COALESCE(na.n_ann, 0) AS BIGINT) AS n_ann, " +
-      "CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits, " +
+      s"${nHitsSql("h")} AS n_hits, " +
       "round(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / " +
       "CAST(nex.n_exact AS DOUBLE), 6) AS recall_at_k, " +
       "round(CAST(sum(COALESCE(h.n_hits, 0)) OVER () AS DOUBLE) / " +
       "CAST(sum(nex.n_exact) OVER () AS DOUBLE), 6) AS mean_recall " +
       "FROM nex LEFT JOIN nan na USING (q_id) LEFT JOIN hits h USING (q_id) " +
       "ORDER BY q_id"
-    // SemDeDup replay (DedupOps.c2SemanticDedup): same trained centroid
-    // literal, same argmin cell assignment as the `d` CTE above, then
-    // within-cell pairs at round-6 cosine >= 0.35 (the corpus's
-    // embed-neardup threshold) and the min-neighbor propagation round.
-    val semCtes =
-      s"ct AS (SELECT ${matLit(centsK)} AS c), " +
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        s"d AS (SELECT vec_id, v, list_transform(range(1, ${nK + 1}), k -> " +
-        "list_sum(list_transform(range(1, 65), j -> " +
-        "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-        "asg AS (SELECT vec_id, v, " +
-        "CAST(list_position(dists, list_min(dists)) AS INT) AS cell FROM d), " +
-        "ed AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id FROM asg a JOIN asg b " +
-        "ON a.cell = b.cell AND a.vec_id < b.vec_id " +
-        "AND round(list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * " +
-        "sqrt(list_dot_product(b.v, b.v))), 6) >= 0.35)"
+    // k-NN graph replay: within-cell exact cosine, top-3 per vector.
+    val knnSql = s"WITH $embCte, ${codebookSql(cents)}, ${cellPairsSql("<>")}, " +
+      rescoreSql("sc", "cp") + ", " + topKSql("pr", "sc", 3) +
+      " SELECT q_id AS a_id, rank, b_id, cosine FROM pr ORDER BY a_id, rank"
+    // SemDeDup replay (DedupOps.c2SemanticDedup): within-cell pairs at
+    // cosine >= 0.35 (the corpus's embed-neardup threshold).
+    val semCtes = s"$embCte, ${codebookSql(cents)}, ${cellPairsSql("<")}, " +
+      rescoreSql("sc", "cp") + ", " +
+      "ed AS (SELECT q_id AS a_id, b_id FROM sc WHERE cosine >= 0.35)"
+    // The min-neighbor propagation round.
     val semSql =
       s"WITH $semCtes, " +
         "reps AS (SELECT b_id AS vec_id, min(a_id) AS mn FROM ed GROUP BY b_id) " +
@@ -2029,17 +2011,12 @@ object SimOps {
         "SELECT asg.vec_id, cell, cl.cluster_rep, " +
         "asg.vec_id = cl.cluster_rep AS is_kept " +
         "FROM asg JOIN cl ON cl.doc_id = asg.vec_id ORDER BY vec_id"
-    // Cluster-profile replay: same centroid literal and argmin cell as
-    // the `d` CTE family, 6dp distortions summed as DECIMAL(20,6)
+    // Cluster-profile replay: 6dp distortions summed as DECIMAL(20,6)
     // (order-independent), one double division for the mean.
     val profileSql =
-      s"WITH ct AS (SELECT ${matLit(cents)} AS c), " +
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        s"d AS (SELECT vec_id, list_transform(range(1, ${n + 1}), k -> " +
-        "list_sum(list_transform(range(1, 65), j -> " +
-        "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-        "a AS (SELECT vec_id, CAST(list_position(dists, list_min(dists)) AS INT) " +
-        "AS cell, CAST(round(list_min(dists), 6) AS DECIMAL(20,6)) AS d2 FROM d) " +
+      s"WITH $embCte, ${codebookSql(cents)}, " +
+        s"a AS (SELECT vec_id, $assignSql AS cell, " +
+        "CAST(round(list_min(dists), 6) AS DECIMAL(20,6)) AS d2 FROM d) " +
         "SELECT cell, count(*) AS n_vecs, min(vec_id) AS min_vec_id, " +
         "round(CAST(sum(d2) AS DOUBLE), 6) AS sum_d2, " +
         "round(CAST(sum(d2) AS DOUBLE) / count(*), 6) AS mean_d2 " +
@@ -2049,15 +2026,9 @@ object SimOps {
     // pqSql identity), per-cell counts, and the integer-compared
     // oversized flag; share/skew are single rounded divisions.
     val cellsSql =
-      s"WITH ct AS (SELECT ${matLit(cents)} AS c), " +
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        s"d AS (SELECT vec_id, list_transform(range(1, ${n + 1}), k -> " +
-        "list_sum(list_transform(range(1, 65), j -> " +
-        "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-        "a AS (SELECT vec_id, CAST(list_position(dists, list_min(dists)) AS INT) " +
-        "AS cell FROM d), " +
+      s"WITH $embCte, ${codebookSql(cents)}, " +
         "per AS (SELECT cell, count(*) AS n_vecs, min(vec_id) AS min_vec_id " +
-        "FROM a GROUP BY cell), " +
+        "FROM asg GROUP BY cell), " +
         "g AS (SELECT *, CAST(sum(n_vecs) OVER () AS BIGINT) AS nt FROM per), " +
         "s AS (SELECT cell, n_vecs, min_vec_id, " +
         "round(CAST(n_vecs AS DOUBLE) / CAST(nt AS DOUBLE), 6) AS share, " +
@@ -2069,115 +2040,36 @@ object SimOps {
         "AS n_oversized, " +
         "(sum(CASE WHEN oversized THEN 1 ELSE 0 END) OVER ()) > 0 AS rebalance " +
         "FROM s ORDER BY cell"
-    // Incremental-semantic replay: the stored SCALED codebook (≈√n
-    // cells — the same [[scaledCells]] grid the engine's
-    // scaled AnnLayout trains, identical by training determinism)
-    // as a literal, corpus assignment (minus the batch slice), the
-    // batch's nprobe=4 probe cells via the same sorted-(dist, cell)
-    // slice as the ANN queries, exact-cosine confirm on candidates
-    // only, then the (cosine desc, b_id asc) best pick over the
-    // threshold floor.
-    val incSemSql =
-      s"WITH ct AS (SELECT ${matLit(centsK)} AS c), " +
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        s"d AS (SELECT vec_id, v, list_transform(range(1, ${nK + 1}), k -> " +
-        "list_sum(list_transform(range(1, 65), j -> " +
-        "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-        "corp AS (SELECT vec_id AS b_id, " +
-        "list_position(dists, list_min(dists)) AS cell FROM d " +
-        "WHERE vec_id % 10 <> 7), " +
-        "pr AS (SELECT vec_id AS n_id, unnest(list_transform(list_slice(" +
-        s"list_sort(list_transform(range(1, ${nK + 1}), k -> " +
-        "[dists[k], CAST(k AS DOUBLE)])), 1, 4), s -> CAST(s[2] AS BIGINT))) " +
-        "AS cell FROM d WHERE vec_id % 10 = 7), " +
-        "cand AS (SELECT n_id, b_id FROM pr JOIN corp USING (cell)), " +
-        "sc AS (SELECT n_id, b_id, round(list_dot_product(x.v, y.v) / " +
-        "(sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) " +
-        "AS cosine FROM cand JOIN e x ON x.vec_id = cand.n_id " +
-        "JOIN e y ON y.vec_id = cand.b_id), " +
-        "best AS (SELECT n_id, b_id, cosine, row_number() OVER " +
-        "(PARTITION BY n_id ORDER BY cosine DESC, b_id) AS rn FROM sc " +
-        s"WHERE cosine >= $IncSemThreshold) " +
-        "SELECT d.vec_id, b.b_id IS NULL AS is_novel, " +
-        "b.b_id AS match_id, b.cosine AS match_cosine " +
-        "FROM d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b " +
-        "ON b.n_id = d.vec_id " +
-        "WHERE d.vec_id % 10 = 7 ORDER BY vec_id"
-    // Bounded (_topc) incremental-semantic replay: the scaled codebook
-    // AND its residual books as literals (retrained here exactly as
-    // the scaled AnnLayout build does — the require below pins the identity),
-    // corpus residual codes, per-arrival probe tables, round-6 ADC, the
-    // GLOBAL top-c cut by (adc, b_id) — equal to the engine's per-cell
-    // cut + global window because the global top-c is a subset of the
-    // per-cell top-c union — then the exact-cosine confirm and best
-    // pick on the survivors only. The approximation itself (ADC
-    // mis-ranks, probe misses) is therefore hash-checked.
+    // The semantic gates: the `vec_id % mod = rem` arrivals probe the
+    // stored scaled codebook (identical by training determinism), their
+    // candidates are the corpus outside the slice — plus, for the
+    // SELF-ADMITTING `live` gate of c5_stream_semantic_live, earlier
+    // slice arrivals (b_id < q_id, strictly: the stream's
+    // insert-after-emit order).
+    def gateCtes(mod: Int, rem: Int, nprobe: Int, live: Boolean): String =
+      s"WITH $embCte, ${codebookSql(cents)}, " +
+        probesSql(n, nprobe, s"vec_id % $mod = $rem") + ", " +
+        ivfCandSql(s" AND (a.vec_id % $mod <> $rem" +
+          (if (live) " OR a.vec_id < q.q_id)" else ")")) + ", "
+    // Unbounded gate: the exact-cosine confirm over every candidate.
+    val incSemSql = gateCtes(10, 7, 4, live = false) + gateSql("cand", 10, 7)
+    // Bounded (_topc) gate: the residual books as literals (retrained
+    // here exactly as the scaled AnnLayout build does — the require pins
+    // the identity), the ADC of every candidate, the GLOBAL top-c by
+    // (adc, b_id) — equal to the engine's per-cell cut + global window
+    // because the global top-c is a subset of the per-cell top-c union —
+    // then the confirm on the survivors only. The approximation itself
+    // (ADC mis-ranks, probe misses) is therefore hash-checked.
     val incSemTopcGen: (Int, Int, Boolean, Int) => String = {
       val kSubK = scaledKSub(spark, dir)
-      val mSubK = IncSemSubspaces
       val (coarseK2, booksK) = pqModel(
-        boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, mSubK, kSubK)
-      require(coarseK2 == centsK,
+        boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, IncSemSubspaces, kSubK)
+      require(coarseK2 == cents,
         "scaled PQ coarse quantizer diverged from the scaled IVF centroids — " +
           "the topc replay would embed the wrong codebook")
-      // `live = true` adds the SELF-ADMITTING tier of
-      // c5_stream_semantic_live: earlier slice arrivals (b_id < n_id,
-      // strictly — the stream's insert-after-emit order) are candidates
-      // alongside the stored corpus postings, through the identical
-      // codes → ADC arithmetic, merged BEFORE the per-arrival global
-      // top-c cut. Residual codes (`rcd`) are computed for every
-      // vector; the two tiers select their slices at the candidate
-      // joins.
       (mod: Int, rem: Int, live: Boolean, nprobe: Int) =>
-        s"WITH ct AS (SELECT ${matLit(centsK)} AS c), " +
-          s"bks AS (SELECT ${booksK.map(matLit).mkString("[", ",", "]")} AS b), " +
-          "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-          s"d AS (SELECT vec_id, v, list_transform(range(1, ${nK + 1}), k -> " +
-          "list_sum(list_transform(range(1, 65), j -> " +
-          "(v[j]-c[k][j])*(v[j]-c[k][j])))) AS dists FROM e CROSS JOIN ct), " +
-          "asg AS (SELECT vec_id AS b_id, v, " +
-          "list_position(dists, list_min(dists)) AS cell FROM d), " +
-          "rc AS (SELECT b_id, cell, list_transform(range(1, 65), j -> " +
-          "asg.v[j] - c[asg.cell][j]) AS r FROM asg CROSS JOIN ct), " +
-          s"rsd AS (SELECT b_id, cell, ${sdistsGen("r", mSubK, kSubK)} AS sdists " +
-          "FROM rc CROSS JOIN bks), " +
-          s"rcd AS (SELECT b_id, cell, list_transform(range(1, ${mSubK + 1}), m -> " +
-          "list_position(sdists[m], list_min(sdists[m]))) AS codes FROM rsd), " +
-          "pq AS (SELECT vec_id AS n_id, unnest(list_transform(list_slice(" +
-          s"list_sort(list_transform(range(1, ${nK + 1}), k -> " +
-          s"[dists[k], CAST(k AS DOUBLE)])), 1, $nprobe), s -> CAST(s[2] AS BIGINT))) " +
-          s"AS cell FROM d WHERE vec_id % $mod = $rem), " +
-          "qr AS (SELECT pq.n_id, pq.cell, list_transform(range(1, 65), j -> " +
-          "d.v[j] - c[pq.cell][j]) AS r FROM pq JOIN d ON d.vec_id = pq.n_id " +
-          "CROSS JOIN ct), " +
-          s"qsd AS (SELECT n_id, cell, ${sdistsGen("r", mSubK, kSubK)} AS sdists " +
-          "FROM qr CROSS JOIN bks), " +
-          "adcs AS (SELECT q.n_id, rcd.b_id, " +
-          s"round(list_sum(list_transform(range(1, ${mSubK + 1}), m -> " +
-          "q.sdists[m][rcd.codes[m]])), 6) AS a " +
-          s"FROM qsd q JOIN rcd ON rcd.cell = q.cell AND rcd.b_id % $mod <> $rem" +
-          (if (live)
-            " UNION ALL SELECT q.n_id, rcd.b_id, " +
-              s"round(list_sum(list_transform(range(1, ${mSubK + 1}), m -> " +
-              "q.sdists[m][rcd.codes[m]])), 6) AS a " +
-              s"FROM qsd q JOIN rcd ON rcd.cell = q.cell " +
-              s"AND rcd.b_id % $mod = $rem AND rcd.b_id < q.n_id"
-          else "") + "), " +
-          "tc AS (SELECT n_id, b_id FROM (SELECT n_id, b_id, a, " +
-          "row_number() OVER (PARTITION BY n_id ORDER BY a ASC, b_id) AS rk " +
-          s"FROM adcs) WHERE rk <= $IncSemTopC), " +
-          "sc AS (SELECT n_id, b_id, round(list_dot_product(x.v, y.v) / " +
-          "(sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) " +
-          "AS cosine FROM tc JOIN e x ON x.vec_id = tc.n_id " +
-          "JOIN e y ON y.vec_id = tc.b_id), " +
-          "best AS (SELECT n_id, b_id, cosine, row_number() OVER " +
-          "(PARTITION BY n_id ORDER BY cosine DESC, b_id) AS rn FROM sc " +
-          s"WHERE cosine >= $IncSemThreshold) " +
-          "SELECT d.vec_id, b.b_id IS NULL AS is_novel, " +
-          "b.b_id AS match_id, b.cosine AS match_cosine " +
-          "FROM d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b " +
-          "ON b.n_id = d.vec_id " +
-          s"WHERE d.vec_id % $mod = $rem ORDER BY vec_id"
+        gateCtes(mod, rem, nprobe, live) + adcSql(booksK, kSubK) + ", " +
+          topKSql("tc", "psc", IncSemTopC, "adc") + ", " + gateSql("tc", mod, rem)
     }
     val incSemTopcSql = incSemTopcGen(10, 7, false, 4)
     // Staleness-monitor replay: BOTH codebooks embedded as literals —
@@ -2185,62 +2077,32 @@ object SimOps {
     // the persisted model by training determinism, the same identity the
     // indexed-PQ oracle rests on), the fresh one retrained here on the
     // grown corpus's bounded sample exactly as the engine does. The
-    // grown corpus, query twins, per-codebook assignment/probing/
+    // grown corpus `g`, its query twins, per-codebook assignment/probing/
     // re-scoring, exact ground truth, integer-sum means and the retrain
     // verdict all replay in SQL.
     val staleSql = {
       val fresh = coarseCodebook(grownCorpus(spark, dir), kCells)
-      val nF = fresh.length
-      def codebook(tag: String, lit: String, nn: Int): String =
-        s"ct$tag AS (SELECT $lit AS c), " +
-          s"d$tag AS MATERIALIZED (SELECT vec_id, v, list_transform(range(1, ${nn + 1}), kk -> " +
-          "list_sum(list_transform(range(1, 65), j -> " +
-          s"(v[j]-c[kk][j])*(v[j]-c[kk][j])))) AS dists FROM g CROSS JOIN ct$tag), " +
-          s"corp$tag AS (SELECT vec_id AS b_id, " +
-          s"list_position(dists, list_min(dists)) AS cell FROM d$tag), " +
-          s"qs$tag AS (SELECT d.vec_id AS q_id, unnest(list_transform(list_slice(" +
-          s"list_sort(list_transform(range(1, ${nn + 1}), kk -> " +
-          s"[dists[kk], CAST(kk AS DOUBLE)])), 1, ${math.min(4, nn)}), " +
-          "s -> CAST(s[2] AS BIGINT))) AS cell " +
-          s"FROM d$tag d JOIN q ON q.q_id = d.vec_id), " +
-          s"cand$tag AS MATERIALIZED (SELECT DISTINCT q_id, b_id FROM corp$tag " +
-          s"JOIN qs$tag ON corp$tag.cell = qs$tag.cell AND qs$tag.q_id <> corp$tag.b_id), " +
-          s"scan$tag AS (SELECT q_id, count(*) AS n_cand FROM cand$tag GROUP BY q_id), " +
-          s"asc$tag AS (SELECT c.q_id, c.b_id, round(list_dot_product(x.v, y.v) / " +
-          "(sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) " +
-          s"AS cosine FROM cand$tag c JOIN g x ON x.vec_id = c.q_id " +
-          "JOIN g y ON y.vec_id = c.b_id), " +
-          s"ann$tag AS (SELECT q_id, b_id FROM (SELECT q_id, b_id, row_number() OVER " +
-          s"(PARTITION BY q_id ORDER BY cosine DESC, b_id) AS rank FROM asc$tag) " +
-          "WHERE rank <= 5), " +
-          s"hit$tag AS (SELECT q_id, count(*) AS n_hits FROM bf JOIN ann$tag " +
-          "USING (q_id, b_id) GROUP BY q_id)"
+      def qPred(id: String): String = queryPredSql(100, s"($id % $DriftIdOffset)")
+      def monitor(tag: String, cb: Seq[Seq[Double]]): String =
+        Seq(codebookSql(cb, "g", tag), probesSql(cb.length, 4, qPred("vec_id"), tag),
+          ivfCandSql(tag = tag),
+          s"scan$tag AS (SELECT q_id, count(*) AS n_cand FROM cand$tag GROUP BY q_id)",
+          rescoreSql(s"asc$tag", s"cand$tag", "g"), topKSql(s"ann$tag", s"asc$tag", 5),
+          hitsSql(s"hit$tag", "bf", s"ann$tag")).mkString(", ")
       s"WITH g AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
         "FROM embeddings UNION ALL " +
         s"SELECT vec_id + $DriftIdOffset, " +
         "list_transform(CAST(embedding AS DOUBLE[]), x -> x + 2.0) FROM embeddings), " +
-        s"q AS (SELECT vec_id AS q_id, v FROM g " +
-        s"WHERE ${queryPredSql(100, s"(vec_id % $DriftIdOffset)")}), " +
-        "bsc AS (SELECT q.q_id, g.vec_id AS b_id, " +
-        "round(list_dot_product(q.v, g.v) / (sqrt(list_dot_product(q.v, q.v)) * " +
-        "sqrt(list_dot_product(g.v, g.v))), 6) AS cosine " +
-        "FROM q, g WHERE g.vec_id <> q.q_id), " +
-        "bf AS MATERIALIZED (SELECT q_id, b_id FROM (SELECT q_id, b_id, " +
-        "row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, b_id) " +
-        "AS rank FROM bsc) WHERE rank <= 5), " +
-        codebook("sta", matLit(cents), n) + ", " +
-        codebook("fre", matLit(fresh), nF) + ", " +
+        s"q AS (SELECT vec_id AS q_id FROM g WHERE ${qPred("vec_id")}), " +
+        exactSql("bsc", qPred("x.vec_id"), "g") + ", " + topKSql("bf", "bsc", 5) + ", " +
+        monitor("sta", cents) + ", " + monitor("fre", fresh) + ", " +
         "res AS (SELECT q.q_id, " +
         "CAST(COALESCE(ssta.n_cand, 0) AS BIGINT) AS n_cand_stale, " +
         "CAST(COALESCE(sfre.n_cand, 0) AS BIGINT) AS n_cand_fresh, " +
-        "CAST(COALESCE(hsta.n_hits, 0) AS BIGINT) AS n_hits_stale, " +
-        "CAST(COALESCE(hfre.n_hits, 0) AS BIGINT) AS n_hits_fresh, " +
-        "round(COALESCE(hsta.n_hits, 0) / 5.0, 6) AS recall_stale, " +
-        "round(COALESCE(hfre.n_hits, 0) / 5.0, 6) AS recall_fresh, " +
-        "round(sum(COALESCE(hsta.n_hits, 0)) OVER () / (5.0 * count(*) OVER ()), 6) " +
-        "AS mean_recall_stale, " +
-        "round(sum(COALESCE(hfre.n_hits, 0)) OVER () / (5.0 * count(*) OVER ()), 6) " +
-        "AS mean_recall_fresh, " +
+        s"${nHitsSql("hsta")} AS n_hits_stale, ${nHitsSql("hfre")} AS n_hits_fresh, " +
+        s"${recallSql("hsta", 5)} AS recall_stale, ${recallSql("hfre", 5)} AS recall_fresh, " +
+        s"${meanRecallSql("hsta", 5)} AS mean_recall_stale, " +
+        s"${meanRecallSql("hfre", 5)} AS mean_recall_fresh, " +
         "round(CAST(sum(COALESCE(ssta.n_cand, 0)) OVER () AS DOUBLE) / count(*) OVER (), 6) " +
         "AS mean_scan_stale, " +
         "round(CAST(sum(COALESCE(sfre.n_cand, 0)) OVER () AS DOUBLE) / count(*) OVER (), 6) " +
@@ -2267,9 +2129,9 @@ object SimOps {
       // Same prefix-consistency argument for the bounded stream twin.
       "c5_stream_semantic_topc" -> incSemTopcSql,
       // The SELF-ADMITTING gate: both tiers replayed — stored corpus
-      // postings plus earlier slice arrivals (b_id < n_id) — merged
-      // before the global top-c cut; id-ordered arrival makes the
-      // stream's per-prefix pair set coincide with this batch replay.
+      // postings plus earlier slice arrivals (b_id < q_id) — before the
+      // global top-c cut; id-ordered arrival makes the stream's
+      // per-prefix pair set coincide with this batch replay.
       "c5_stream_semantic_live" ->
         incSemTopcGen(LiveSliceMod, LiveSliceRem, true, LiveNprobe),
       "c2_semantic_dedup" -> semSql,
@@ -2285,73 +2147,45 @@ object SimOps {
       "c3_ann_pq_filtered_adaptive" -> pqFilteredAdaptiveSql,
       "c3_knn_join" -> knnSql,
       "c3_ann_pq_recall" -> pqRecallSql,
-      "c3_ann_ivf" -> (s"WITH $ivfCandCtes, " + annScoreTail(5)),
-      // Mean over the query set as one integer sum (no float fold order);
+      "c3_ann_ivf" ->
+        (s"$ivfCtes, ${ivfCandSql()}, ${rescoreSql("sc", "cand")}, " + annTopKTail("sc", 5)),
       // mean_recall_ok is literal TRUE — the bound lives in the Spark plan.
       "c3_ann_ivf_recall" ->
-        (s"WITH $ivfCandCtes, " + recallCtes(5) + " " +
-          "SELECT q.q_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits, " +
-          "round(COALESCE(h.n_hits, 0) / 5.0, 6) AS recall_at_5, " +
-          "round(sum(COALESCE(h.n_hits, 0)) OVER () / (5.0 * count(*) OVER ()), 6) " +
-          "AS mean_recall, TRUE AS mean_recall_ok " +
-          "FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id) " +
-          "ORDER BY q_id")
+        (s"$ivfCtes, ${ivfCandSql()}, ${recallCtes(5)} " +
+          recallTail(5, s"${meanRecallSql("h", 5)} AS mean_recall, TRUE AS mean_recall_ok"))
     )
   }
 
   val oracle: Map[String, String] = Map(
     "c3_ann_lsh" ->
       (s"WITH ${sketchCte(tables = 16, bits = 8)}, " +
-        annCandCtes(tables = 16, bits = 8) + ", " + annScoreTail(5)),
-    // Recall replay: the ANN top-k (candidates + rescore, identical to
-    // the c3_ann_lsh oracle) intersected with the brute-force top-k
-    // (identical to the c3_cosine_topk oracle) — both deterministic
-    // (round-6 cosine, b_id tie-break), so n_hits matches exactly;
-    // recall_ok is literal TRUE (the bound lives in the Spark plan).
+        lshCandSql(tables = 16, bits = 8, queryPredSql(100), "<>") + ", " +
+        rescoreSql("sc", "cand") + ", " + annTopKTail("sc", 5)),
+    // Recall replay: the c3_ann_lsh top-k intersected with the
+    // c3_cosine_topk top-k — both deterministic (round-6 cosine, b_id
+    // tie-break), so n_hits matches exactly; recall_ok is literal TRUE
+    // (the bound lives in the Spark plan).
     "c3_ann_recall" ->
       (s"WITH ${sketchCte(tables = 16, bits = 8)}, " +
-        annCandCtes(tables = 16, bits = 8) + ", " + recallCtes(5) + " " +
-        "SELECT q.q_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits, " +
-        "round(COALESCE(h.n_hits, 0) / 5.0, 6) AS recall_at_5, TRUE AS recall_ok " +
-        "FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id) " +
-        "ORDER BY q_id"),
-    // kNN vote replay: the c3_cosine_topk ranking (labels carried
-    // through), integer vote counts, deterministic (votes desc, label
-    // asc) argmax.
+        lshCandSql(tables = 16, bits = 8, queryPredSql(100), "<>") + ", " +
+        recallCtes(5) + " " + recallTail(5, "TRUE AS recall_ok")),
+    // kNN vote replay: the c3_cosine_topk ranking, labels joined back,
+    // integer vote counts, deterministic (votes desc, label asc) argmax.
     "c3_knn_classify" ->
-      ("WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb, " +
-        s"label AS true_label FROM embeddings WHERE ${queryPredSql(20)}), " +
-        "c AS (SELECT vec_id AS b_id, CAST(embedding AS DOUBLE[]) AS b_emb, " +
-        "label AS b_label FROM embeddings), " +
-        "s AS (SELECT q_id, true_label, b_id, b_label, " +
-        "round(list_dot_product(q_emb, b_emb) / " +
-        "(sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(b_emb, b_emb))), 6) AS cosine " +
-        "FROM q JOIN c ON q_id <> b_id), " +
-        "r AS (SELECT q_id, true_label, b_label, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cosine DESC, b_id) AS rank FROM s), " +
-        "v AS (SELECT q_id, true_label, b_label, count(*) AS n_votes " +
-        "FROM r WHERE rank <= 5 GROUP BY q_id, true_label, b_label), " +
+      (s"WITH $embCte, ${exactSql("s", queryPredSql(20, "x.vec_id"))}, " +
+        topKSql("r", "s", 5) + ", " +
+        "v AS (SELECT r.q_id, x.label AS true_label, y.label AS b_label, " +
+        "count(*) AS n_votes FROM r JOIN e x ON x.vec_id = r.q_id " +
+        "JOIN e y ON y.vec_id = r.b_id GROUP BY r.q_id, x.label, y.label), " +
         "p AS (SELECT q_id, true_label, b_label, n_votes, row_number() OVER " +
         "(PARTITION BY q_id ORDER BY n_votes DESC, b_label) AS vr FROM v) " +
         "SELECT q_id, true_label, b_label AS pred_label, n_votes, " +
         "b_label = true_label AS correct FROM p WHERE vr = 1 ORDER BY q_id"),
     "c3_cosine_topk" ->
-      ("WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb " +
-        s"FROM embeddings WHERE ${queryPredSql(100)}), " +
-        "c AS (SELECT vec_id AS b_id, CAST(embedding AS DOUBLE[]) AS b_emb FROM embeddings), " +
-        "s AS (SELECT q_id, b_id, round(list_dot_product(q_emb, b_emb) / " +
-        "(sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(b_emb, b_emb))), 6) AS cosine " +
-        "FROM q JOIN c ON q_id <> b_id), " +
-        "r AS (SELECT q_id, b_id, cosine, CAST(row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cosine DESC, b_id) AS INT) AS rank FROM s) " +
-        "SELECT q_id, rank, b_id, cosine FROM r WHERE rank <= 5 ORDER BY q_id, rank"),
+      (s"WITH $embCte, ${exactSql("s", queryPredSql(100, "x.vec_id"))}, " +
+        annTopKTail("s", 5)),
     "c3_range_search" ->
-      ("WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb " +
-        s"FROM embeddings WHERE ${queryPredSql(50)}), " +
-        "c AS (SELECT vec_id AS b_id, CAST(embedding AS DOUBLE[]) AS b_emb FROM embeddings), " +
-        "s AS (SELECT q_id, b_id, round(list_dot_product(q_emb, b_emb) / " +
-        "(sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(b_emb, b_emb))), 6) AS cosine " +
-        "FROM q JOIN c ON q_id <> b_id) " +
+      (s"WITH $embCte, ${exactSql("s", queryPredSql(50, "x.vec_id"))} " +
         "SELECT q_id, b_id, cosine FROM s WHERE cosine >= 0.25 " +
         "ORDER BY q_id, b_id"),
     "c3_norm_stats" ->
@@ -2544,7 +2378,7 @@ object SimOps {
     //    zip_with/array_sort/transform chain and subspaces separate
     //    table columns (~1 ms CPU per (arrival × probe) row measured;
     //    bit-identity to the old chain spec-pinned in
-    //    PqProbeEncExprSpec via [[pqProbeChainHof]]).
+    //    PqProbeEncExprSpec via HofTwins.pqProbeChainHof).
     // `tbls` is a GENERATOR output attribute, so per-posting consumers
     // reference a bound column — CollapseProject cannot inline the
     // table build into a consumer lambda (the round-17 ~4e12-op trap
@@ -2566,33 +2400,6 @@ object SimOps {
       .groupBy("cell")
       .agg(collect_list(struct(col("b_id"), col("codes"))).as("cands"))
     probed.join(cellCand, Seq("cell"), "left")
-  }
-
-  /** The expression-chain twin of [[graft.functions.PqProbeEncExpr
-    * .pqProbeEnc]] — the pre-round-18 probe/encode pipeline, kept
-    * SOLELY so PqProbeEncExprSpec can assert the native kernel
-    * bit-identical on the real corpus (the adcTopcHof discipline).
-    * Input: columns `vec_id`, `embD`; output (n_id, pos, cell, codes,
-    * tbls), one row per (arrival × probed cell).
-    */
-  private[graft] def pqProbeChainHof(arrivals: DataFrame,
-      coarse: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
-      subspaces: Int, nprobe: Int, residual: Boolean = true): DataFrame = {
-    val e = PqEncExprs(coarse, books, subspaces, residual)
-    val probed = arrivals
-      .withColumn("cdists",
-        graft.functions.VectorExprs.centroidDists(col("embD"), coarse))
-      .select(col("vec_id").as("n_id"), col("embD").as("n_emb"),
-        posexplode(probeCells(col("cdists"), coarse.length, nprobe))
-          .as(Seq("pos", "cell")))
-      .withColumn("enc", e.enc(col("n_emb"), col("cell")))
-    (0 until subspaces).foldLeft(probed) {
-        (df, m) => df.withColumn(s"sd$m", e.subDists(col("enc"), m))
-      }
-      .withColumn("tbls", array((0 until subspaces).map(m => col(s"sd$m")): _*))
-      .withColumn("codes", array((0 until subspaces).map(m =>
-        expr(s"CAST(array_position(sd$m, array_min(sd$m)) AS INT)")): _*))
-      .select(col("n_id"), col("pos"), col("cell"), col("codes"), col("tbls"))
   }
 
   /** Per-candidate scored plan of the BOUNDED (`_topc`) semantic
@@ -2636,8 +2443,8 @@ object SimOps {
     // round-6 BEFORE the rank, the adcTopK discipline), keep the cell's
     // (adc, b_id) top-`topc` — the NATIVE AdcTopC expression (one tight
     // Java pass + bounded heap; the interpreted HOF twin it replaces is
-    // kept in [[adcTopcHof]] for the bit-identity spec, and at sf10 its
-    // ~31M per-element lambda evaluations made the bounded gate slower
+    // the test-side HofTwins.adcTopcHof of the bit-identity spec, and at
+    // sf10 its ~31M per-element lambda evaluations made the bounded gate slower
     // than the unbounded one — BASELINE.md round 17).
     val scored = semanticProbeFrame(spark, dir, arrivals, nprobe, subspaces)
       .withColumn("scored",
@@ -2663,18 +2470,6 @@ object SimOps {
       .select(col("n_id"), col("adc"), col("b_id"),
         when(cos >= threshold, cos).as("cosine"))
   }
-
-  /** The built-ins twin of [[graft.functions.AdcTopCExpr.adcTopC]] —
-    * kept solely so AdcTopCExprSpec can assert the native expression
-    * bit-identical on the real corpus (the BpeMergeSeq discipline).
-    * Resolves columns `cands` and `tbls` by name from the input frame.
-    */
-  private[graft] def adcTopcHof(subspaces: Int, topc: Int): Column = expr(
-    s"""slice(array_sort(transform(cands, cd -> named_struct(
-       |'adc', round(aggregate(sequence(0, ${subspaces - 1}),
-       |  CAST(0.0 AS DOUBLE), (acc, m) -> acc +
-       |  element_at(element_at(tbls, m+1), element_at(cd.codes, m+1))), 6),
-       |'b_id', cd.b_id))), 1, $topc)""".stripMargin.replace("\n", " "))
 
   /** C2g': the BOUNDED incremental semantic gate —
     * [[c2IncrementalSemantic]] with the exact-cosine confirm capped at

@@ -624,49 +624,6 @@ object TextOps {
       .orderBy("merge_round", "merge_rank")
   }
 
-  /** Built-ins twin of the native BpeMergeSeq expression — the greedy
-    * left-to-right simultaneous merge of a BATCH of symbol-disjoint
-    * pairs over the symbol ARRAY, as a codegen'd fold: state =
-    * (out, held) where held is a pending symbol that is the LEFT of
-    * some accepted pair, waiting for its right. Disjointness makes this
-    * order-free: no occurrence can match two different accepted pairs
-    * (that would need a shared symbol), so a run of consecutive matches
-    * is only possible within one (a,a) pair and pairs up from the
-    * left — exactly the oracle's taken-parity window replay. Kept (and
-    * spec-compared on corpus + adversarial inputs) as the executable
-    * semantics the native expression must match bit-for-bit; the
-    * trainer itself runs the native pass (the HOF's per-symbol
-    * array_append copies are quadratic per word).
-    */
-  private[graft] def mergeSeqBatchHof(seq: Column,
-      accepted: Seq[(String, String)]): Column = {
-    val Sep = " " // symbols are split-on-space tokens: never contain a space
-    val pairMap = map(accepted.flatMap { case (a, b) =>
-      Seq(lit(a + Sep + b), lit(a + b)) }: _*)
-    val leftArr = typedlit(accepted.map(_._1).distinct)
-    val emptyOut = array().cast("array<string>")
-    val nullHeld = lit(null).cast("string")
-    def st(out: Column, held: Column) =
-      struct(out.as("out"), held.as("held"))
-    aggregate(
-      seq,
-      st(emptyOut, nullHeld),
-      (s, x) => {
-        val out = s.getField("out"); val held = s.getField("held")
-        // null held → null key → null lookup (try_: ANSI-safe)
-        val m = try_element_at(pairMap, concat(held, lit(Sep), x))
-        val flushed = when(held.isNotNull, array_append(out, held))
-          .otherwise(out)
-        when(held.isNotNull && m.isNotNull,
-          st(array_append(out, m), nullHeld))
-          .when(array_contains(leftArr, x), st(flushed, x))
-          .otherwise(st(array_append(flushed, x), nullHeld))
-      },
-      s => when(s.getField("held").isNotNull,
-        array_append(s.getField("out"), s.getField("held")))
-        .otherwise(s.getField("out")))
-  }
-
   /** The shared BPE training loop: returns the merge table (round,
     * rank-within-round, lhs, rhs, merged, count), the FINAL per-word
     * vocab (word, freq, seq — the symbol array after all rounds), and
@@ -679,8 +636,9 @@ object TextOps {
       rounds: Int = BpeRounds, materializeFinal: Boolean = false)
       : (Seq[(Int, Int, String, String, String, Long)], DataFrame, Option[DataFrame]) = {
     // The merge automaton is the native BpeMergeSeq expression (one
-    // linear Java pass, O(1) hash probe per symbol); mergeSeqBatchHof
-    // below is the built-ins twin it is spec-pinned bit-identical to.
+    // linear Java pass, O(1) hash probe per symbol); the test-side
+    // HofTwins.mergeSeqBatchHof is the built-ins twin it is spec-pinned
+    // bit-identical to.
     def mergeSeqBatch(accepted: Seq[(String, String)]): Column =
       graft.functions.BpeMergeExpr.bpeMergeSeq(col("seq"), accepted)
     // VOCAB-SIZED partitioning: the loop's per-task structures (the
@@ -1300,6 +1258,28 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** [[lmFinish]] in DuckDB, over a per-event micro-log `<p>sc(doc_id,
+    * li, …)`: the per-doc aggregate `<p>ag` (n_events, each count as
+    * `name → CAST(sum(src) AS BIGINT)`, `s`) and `<p>ag2` with the
+    * integer-exact nll — then `place` puts the SELECT that re-attaches
+    * every doc of `docs` after those CTEs.
+    */
+  private def lmFinishSql(p: String, docs: String, counts: (String, String)*)(
+      place: String => String): String = {
+    val ag2 = s"${p}ag2"
+    s"${p}ag AS (SELECT doc_id, count(*) AS n_events, " +
+      counts.map { case (n, src) => s"CAST(sum($src) AS BIGINT) AS $n, " }.mkString +
+      s"CAST(sum(li) AS BIGINT) AS s FROM ${p}sc GROUP BY doc_id), " +
+      s"$ag2 AS (SELECT doc_id, n_events, " + counts.map(_._1 + ", ").mkString +
+      "round(CAST(((0 - s) * 2 + n_events) // (2 * n_events) AS DOUBLE) " +
+      s"/ 1000000.0, 6) AS nll FROM ${p}ag)" + place(
+      s"SELECT $docs.doc_id, COALESCE($ag2.n_events, 0) AS n_events, " +
+        counts.map { case (n, _) => s"COALESCE($ag2.$n, 0) AS $n, " }.mkString +
+        s"COALESCE($ag2.nll, 0.0) AS nll, " +
+        s"COALESCE(round(exp($ag2.nll), 4), 1.0) AS ppl " +
+        s"FROM $docs LEFT JOIN $ag2 USING (doc_id)")
+  }
+
   /** The rule gate's inputs over the `text` column: (n_tokens,
     * alpha_chars, n_stop_types — distinct stopword TYPES present).
     */
@@ -1709,18 +1689,7 @@ object TextOps {
       "CAST(COALESCE(c.c_u, 0) + lmvv.v AS DOUBLE)), 0) AS BIGINT) AS li " +
       "FROM lmev e LEFT JOIN lmbg b ON b.u = e.u AND b.w = e.w " +
       "LEFT JOIN lmcx c ON c.u = e.u CROSS JOIN lmvv), " +
-      "lmag AS (SELECT doc_id, count(*) AS n_events, " +
-      "CAST(sum(oov) AS BIGINT) AS n_oov_events, " +
-      "CAST(sum(li) AS BIGINT) AS s FROM lmsc GROUP BY doc_id), " +
-      "lmag2 AS (SELECT doc_id, n_events, n_oov_events, " +
-      "round(CAST(((0 - s) * 2 + n_events) // (2 * n_events) AS DOUBLE) " +
-      "/ 1000000.0, 6) AS nll " +
-      "FROM lmag), " +
-      "lmres AS (SELECT lmt.doc_id, COALESCE(lmag2.n_events, 0) AS n_events, " +
-      "COALESCE(lmag2.n_oov_events, 0) AS n_oov_events, " +
-      "COALESCE(lmag2.nll, 0.0) AS nll, " +
-      "COALESCE(round(exp(lmag2.nll), 4), 1.0) AS ppl " +
-      "FROM lmt LEFT JOIN lmag2 USING (doc_id))"
+      lmFinishSql("lm", "lmt", "n_oov_events" -> "oov")(sel => s", lmres AS ($sel)")
 
   val oracle: Map[String, String] = Map(
     "c4_bpe_merges" -> bpeChainSql,
@@ -1987,16 +1956,7 @@ object TextOps {
         "AS BIGINT) AS li " +
         "FROM ev e JOIN bg b ON b.u = e.u AND b.w = e.w " +
         "JOIN cx c ON c.u = e.u CROSS JOIN vv), " +
-        "ag AS (SELECT doc_id, count(*) AS n_events, " +
-        "CAST(sum(li) AS BIGINT) AS s FROM sc GROUP BY doc_id), " +
-        "ag2 AS (SELECT doc_id, n_events, " +
-        "round(CAST(((0 - s) * 2 + n_events) // (2 * n_events) AS DOUBLE) " +
-        "/ 1000000.0, 6) AS nll " +
-        "FROM ag) " +
-        "SELECT t.doc_id, COALESCE(ag2.n_events, 0) AS n_events, " +
-        "COALESCE(ag2.nll, 0.0) AS nll, " +
-        "COALESCE(round(exp(ag2.nll), 4), 1.0) AS ppl " +
-        "FROM t LEFT JOIN ag2 USING (doc_id) ORDER BY doc_id"),
+        lmFinishSql("", "t")(sel => s" $sel ORDER BY doc_id")),
     // Reference-trained LM replay: the rule-keep slice trains, LEFT
     // joins with add-1 fallbacks score every doc, same micro-log and
     // final roundings as c4_lm_ppl.
@@ -2055,20 +2015,8 @@ object TextOps {
       "LEFT JOIN un uv ON uv.tok = e.v " +
       "LEFT JOIN un uw ON uw.tok = e.w " +
       "CROSS JOIN tv), " +
-      "ag AS (SELECT doc_id, count(*) AS n_events, " +
-      "CAST(sum(bo1) AS BIGINT) AS n_backoff_bi, " +
-      "CAST(sum(bo2) AS BIGINT) AS n_backoff_uni, " +
-      "CAST(sum(li) AS BIGINT) AS s FROM sc GROUP BY doc_id), " +
-      "ag2 AS (SELECT doc_id, n_events, n_backoff_bi, n_backoff_uni, " +
-      "round(CAST(((0 - s) * 2 + n_events) // (2 * n_events) AS DOUBLE) " +
-      "/ 1000000.0, 6) AS nll " +
-      "FROM ag) " +
-      "SELECT t.doc_id, COALESCE(ag2.n_events, 0) AS n_events, " +
-      "COALESCE(ag2.n_backoff_bi, 0) AS n_backoff_bi, " +
-      "COALESCE(ag2.n_backoff_uni, 0) AS n_backoff_uni, " +
-      "COALESCE(ag2.nll, 0.0) AS nll, " +
-      "COALESCE(round(exp(ag2.nll), 4), 1.0) AS ppl " +
-      "FROM t LEFT JOIN ag2 USING (doc_id) ORDER BY doc_id"
+      lmFinishSql("", "t", "n_backoff_bi" -> "bo1", "n_backoff_uni" -> "bo2")(
+        sel => s" $sel ORDER BY doc_id")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "c1_exact_dedup" -> (c1ExactDedup _),

@@ -853,7 +853,9 @@ object EventStream {
   /** Run `body` against a fresh (checkpoint, sink) dir pair, first
     * sweeping [[spentSinkDirs]]. Once `body` returns nothing resumes the
     * checkpoint, so it is deleted NOW, not at JVM exit; the sink dir joins
-    * [[spentSinkDirs]].
+    * [[spentSinkDirs]] and is registered for deletion at JVM exit only
+    * now, because that registers the dir's CURRENT files (a dir
+    * registered empty is not deleted once it holds files).
     */
   private def withScratchSink[T](body: DurableParquet => T): T = {
     import java.nio.file.{Files => JFiles}
@@ -865,10 +867,10 @@ object EventStream {
     }
     val out = JFiles.createTempDirectory("graft_stream_sink")
     val ckpt = JFiles.createTempDirectory("graft_stream_ckpt")
-    FileUtils.forceDeleteOnExit(out.toFile)
     try body(DurableParquet(ckpt.toString, out.toString))
     finally {
       FileUtils.deleteQuietly(ckpt.toFile)
+      FileUtils.forceDeleteOnExit(out.toFile)
       spentSinkDirs.add(out)
     }
   }

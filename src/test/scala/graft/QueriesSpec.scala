@@ -8,6 +8,24 @@ class QueriesSpec extends SparkSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("dynamic oracle renders one WITH text per known data-trained key") {
+    val dyn = SparkEntry.dynamicOracleSql(spark, sf)
+    val known = Set(
+      "c3_ann_staleness", "c3_cluster_profile", "c3_ann_cells",
+      "c2_incremental_semantic", "c5_stream_semantic",
+      "c2_incremental_semantic_topc", "c5_stream_semantic_topc",
+      "c5_stream_semantic_live", "c2_semantic_dedup", "c2_semantic_dedup_cc",
+      "c3_ann_pq", "c3_ann_pq_indexed", "c3_ann_pq_filtered",
+      "c3_ann_filtered_recall", "c3_ann_pq_filtered_adaptive", "c3_knn_join",
+      "c3_ann_pq_recall", "c3_ann_ivf", "c3_ann_ivf_recall")
+    assert(known.size == 19)
+    assert(dyn.keySet == known)
+    assert((dyn.keySet -- SparkEntry.queries.keySet).isEmpty)
+    assert((dyn.keySet & SparkEntry.oracleSql.keySet).isEmpty)
+    val bad = dyn.collect { case (k, sql) if !sql.startsWith("WITH ") => k }
+    assert(bad.isEmpty, s"not a WITH text: $bad")
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

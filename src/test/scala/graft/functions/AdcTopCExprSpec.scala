@@ -5,7 +5,7 @@ import graft.queries.SimOps
 import org.apache.spark.sql.functions._
 
 /** The native AdcTopC expression must be bit-identical to the HOF twin
-  * it replaced (SimOps.adcTopcHof: transform + aggregate + array_sort +
+  * it replaced (HofTwins.adcTopcHof: transform + aggregate + array_sort +
   * slice) — same round-6-before-rank, same (adc, b_id) order, same
   * slice — because the topc family's dynamic oracle replays exactly
   * that arithmetic: any divergence is a correctness failure.
@@ -16,7 +16,7 @@ class AdcTopCExprSpec extends SparkSuite {
       subspaces: Int, topc: Int): Unit = {
     val bad = df
       .withColumn("native", AdcTopCExpr.adcTopC(col("cands"), col("tbls"), topc))
-      .withColumn("hof", SimOps.adcTopcHof(subspaces, topc))
+      .withColumn("hof", HofTwins.adcTopcHof(subspaces, topc))
       .filter(not(col("native") <=> col("hof")))
     val rows = bad.take(3)
     assert(rows.isEmpty, rows.mkString("; "))

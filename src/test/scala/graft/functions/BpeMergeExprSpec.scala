@@ -1,11 +1,10 @@
 package graft.functions
 
 import graft.SparkSuite
-import graft.queries.TextOps
 import org.apache.spark.sql.functions._
 
 /** The native BpeMergeSeq expression must be bit-identical to the HOF
-  * fold it replaces (TextOps.mergeSeqBatchHof) — same (out, held)
+  * fold it replaces (HofTwins.mergeSeqBatchHof) — same (out, held)
   * automaton, same null handling — because the trainer's merge tables
   * are oracle-replayed verbatim: any divergence here is a correctness
   * failure, not a perf regression.
@@ -18,7 +17,7 @@ class BpeMergeExprSpec extends SparkSuite {
     val df = seqs.toDF("seq")
     val bad = df
       .withColumn("native", BpeMergeExpr.bpeMergeSeq(col("seq"), accepted))
-      .withColumn("hof", TextOps.mergeSeqBatchHof(col("seq"), accepted))
+      .withColumn("hof", HofTwins.mergeSeqBatchHof(col("seq"), accepted))
       .filter(not(col("native") <=> col("hof")))
     // collect once — assert's clue is evaluated eagerly, so a
     // bad.collect() clue would re-run the comparison job on every call
@@ -81,7 +80,7 @@ class BpeMergeExprSpec extends SparkSuite {
       ("a", "n"), ("i", "o"), ("c", "c"), ("s", "d"))
     val bad = vocab
       .withColumn("native", BpeMergeExpr.bpeMergeSeq(col("seq"), accepted))
-      .withColumn("hof", TextOps.mergeSeqBatchHof(col("seq"), accepted))
+      .withColumn("hof", HofTwins.mergeSeqBatchHof(col("seq"), accepted))
       .filter(not(col("native") <=> col("hof")))
       .count()
     assert(bad === 0)

@@ -16,7 +16,7 @@ class HashExprsSpec extends SparkSuite {
   test("MinHashSig == HOF signature over the corpus") {
     val n = toks
       .withColumn("native", MinHash.signature(col("toks"), 64))
-      .withColumn("hof", MinHash.signatureHof(col("toks"), 64))
+      .withColumn("hof", HofTwins.signatureHof(col("toks"), 64))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(n === 0)
@@ -25,7 +25,7 @@ class HashExprsSpec extends SparkSuite {
   test("SimHashFp == HOF fingerprint over the corpus") {
     val n = toks
       .withColumn("native", SimHash.fingerprint(col("toks")))
-      .withColumn("hof", SimHash.fingerprintHof(col("toks")))
+      .withColumn("hof", HofTwins.fingerprintHof(col("toks")))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(n === 0)
@@ -45,9 +45,9 @@ class HashExprsSpec extends SparkSuite {
     val df = docs.toDF("toks")
     val bad = df
       .withColumn("sig_n", MinHash.signature(col("toks"), 16))
-      .withColumn("sig_h", MinHash.signatureHof(col("toks"), 16))
+      .withColumn("sig_h", HofTwins.signatureHof(col("toks"), 16))
       .withColumn("fp_n", SimHash.fingerprint(col("toks")))
-      .withColumn("fp_h", SimHash.fingerprintHof(col("toks")))
+      .withColumn("fp_h", HofTwins.fingerprintHof(col("toks")))
       .filter(col("sig_n") =!= col("sig_h") || col("fp_n") =!= col("fp_h"))
       .count()
     assert(bad === 0)
@@ -59,9 +59,9 @@ class HashExprsSpec extends SparkSuite {
       .toDF("toks")
     val rows = df
       .withColumn("sig_n", MinHash.signature(col("toks"), 8))
-      .withColumn("sig_h", MinHash.signatureHof(col("toks"), 8))
+      .withColumn("sig_h", HofTwins.signatureHof(col("toks"), 8))
       .withColumn("fp_n", SimHash.fingerprint(col("toks")))
-      .withColumn("fp_h", SimHash.fingerprintHof(col("toks")))
+      .withColumn("fp_h", HofTwins.fingerprintHof(col("toks")))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Any](1) === r.getSeq[Any](2), s"sig mismatch for ${r.get(0)}")

@@ -5,7 +5,7 @@ import graft.queries.SimOps
 import org.apache.spark.sql.functions._
 
 /** The native PqProbeEnc kernel must be bit-identical to the
-  * expression chain it replaced (SimOps.pqProbeChainHof: CentroidDists
+  * expression chain it replaced (HofTwins.pqProbeChainHof: CentroidDists
   * → zip_with/array_sort/transform probe ranking → zip_with residual →
   * per-subspace CentroidDists tables → array_position(array_min)
   * argmins) — same probe order including distance ties, same residual
@@ -28,7 +28,7 @@ class PqProbeEncExprSpec extends SparkSuite {
           math.min(8, coarse.length))).as("pr"))
       .select(col("n_id"), col("pr.pos").as("pos"), col("pr.cell").as("cell"),
         col("pr.codes").as("codes"), col("pr.tbls").as("tbls"))
-    val chain = SimOps.pqProbeChainHof(arrivals, coarse, books,
+    val chain = HofTwins.pqProbeChainHof(arrivals, coarse, books,
       subspaces = 16, nprobe = 8)
     // exact row-set equality on every field, tables included: <=> on
     // the full struct is a bitwise double comparison, so even a 1-ulp
@@ -58,7 +58,7 @@ class PqProbeEncExprSpec extends SparkSuite {
             residual)).as("pr"))
         .select(col("n_id"), col("pr.pos").as("pos"), col("pr.cell").as("cell"),
           col("pr.codes").as("codes"), col("pr.tbls").as("tbls"))
-      val chain = SimOps.pqProbeChainHof(arrivals, coarse, books,
+      val chain = HofTwins.pqProbeChainHof(arrivals, coarse, books,
         subspaces = 16, nprobe = 1, residual = residual)
       val n = struct(col("n_id"), col("pos"), col("cell"),
         col("codes"), col("tbls"))

@@ -18,7 +18,7 @@ class VectorExprsSpec extends SparkSuite {
     val shifted = emb.withColumn("w", reverse(col("v")))
     val n = shifted
       .withColumn("native", VectorExprs.dot(col("v"), col("w")))
-      .withColumn("hof", SimOps.dotHof(col("v"), col("w")))
+      .withColumn("hof", HofTwins.dotHof(col("v"), col("w")))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(n === 0)
@@ -27,7 +27,7 @@ class VectorExprsSpec extends SparkSuite {
   test("native norm == HOF norm, bitwise") {
     val n = emb
       .withColumn("native", VectorExprs.norm(col("v")))
-      .withColumn("hof", SimOps.normHof(col("v")))
+      .withColumn("hof", HofTwins.normHof(col("v")))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(n === 0)
@@ -37,7 +37,7 @@ class VectorExprsSpec extends SparkSuite {
     val tables = 8; val bits = 12
     val n = emb
       .withColumn("native", SimOps.lshBuckets(col("v"), tables, bits))
-      .withColumn("hof", SimOps.lshBucketsHof(col("v"), tables, bits))
+      .withColumn("hof", HofTwins.lshBucketsHof(col("v"), tables, bits))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(n === 0)
