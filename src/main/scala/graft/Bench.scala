@@ -211,23 +211,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val queryTimeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "150").toLong
     sfDirForLine = sfDir
     Runtime.getRuntime.addShutdownHook(new Thread(() => emitLine()))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, set at session build: b8_bucketed_join persists
-      // bucketed tables into the session catalog
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     // Warm the session (classloading, codegen compiler, shuffle machinery)
     // so the first timed query doesn't absorb JVM startup.
     spark.range(100000).selectExpr("sum(id)", "count(distinct id % 7)").collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run named queries with formatted explain + repeated timing.
   * Usage: runMain graft.Explain <sfDir> <query...> [-n reps] [-x (explain)]
   *   [-b (cluster-planning mode: auto-broadcast off — the tiny local
@@ -21,16 +19,7 @@ object Explain {
       .filterNot(i => args(i).startsWith("-") || i == repsIdx)
       .map(args)
     val doExplain = args.contains("-x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     if (args.contains("-b"))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     for (name <- names) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone gateway process: `runMain graft.GatewayServer [port]` gives
   * a reference user the same curl surface as `scripts/single_node.sh`
   * (reference default port 2335; see graft.mr.Gateway for the routes).
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object GatewayServer {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(2335)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     val gateway = new mr.Gateway(spark, new mr.JobStore(), port)
     val actual = gateway.start()
     println(s"graft gateway listening on :$actual")

@@ -35,6 +35,28 @@ object Graft {
       .getOrCreate()
   }
 
+  /** The tools' local session (Bench, Verify, Explain, GatewayServer,
+    * ScaleGen): `local[SPARK_GRAFT_CPUS]` (default 32) with as many
+    * shuffle partitions, UTC, no UI, WARN logging, and a private
+    * warehouse dir — the persisted layouts and bucketed tables land
+    * there; a static conf, so it is set at session build — that is
+    * deleted at JVM exit.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(wh))
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", wh.toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Engine configuration applied to any builder (cluster or local). */
   def configure(b: SparkSession.Builder, shufflePartitions: String): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions)

@@ -51,14 +51,7 @@ object ScaleGen {
     val density = if (args.length > 3) args(3) else "dense"
     require(density == "dense" || density == "sparse",
       s"density must be dense|sparse, got $density")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     try generate(spark, src, out, mult, density)
     finally spark.stop()
   }

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.dedup.{ConnectedComponents, MinHash, SetSimJoin, SimHash}
 import graft.sources.Storage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Group C (near-dup) — C2: n-gram Jaccard, MinHash+LSH, SimHash
@@ -23,14 +23,26 @@ object DedupOps {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
 
+  /** Fixed query parameters: each is written once here, used by the
+    * Spark plan and rendered as the same digits by the oracle replay.
+    * The Jaccard cut of the token-set family (exact pairs, top-m, the
+    * recall audit, the ingest resolve) and its top-m depth; the cosine
+    * cut of the embedding family (c2_embed_neardup and SemDeDup) and the
+    * sign-LSH shape of c2_embed_neardup.
+    */
+  private[queries] val NearDupJaccard = 0.8
+  private[queries] val TopM = 5
+  private[queries] val NearDupCosine = 0.35
+  private[queries] val EmbedTables = 8
+  private[queries] val EmbedBits = 12
+
   /** C2a: exact token-set Jaccard pairs above a threshold via the
     * prefix-filtered set-similarity self-join (graft.dedup.SetSimJoin) —
     * exact output, sub-quadratic candidate generation.
     */
   def c2NgramJaccard(spark: SparkSession, dir: String): DataFrame =
     SetSimJoin.jaccardSelfJoin(
-      docs(spark, dir), col("doc_id"),
-      array_distinct(split(col("text"), " ")), threshold = 0.8)
+      docs(spark, dir), col("doc_id"), MinHash.tokenSet(col("text")), NearDupJaccard)
       .orderBy("a_id", "b_id")
 
   /** C2a': per-doc top-m nearest neighbors at Jaccard >= 0.8 — the
@@ -42,8 +54,8 @@ object DedupOps {
     */
   def c2NgramJaccardTopM(spark: SparkSession, dir: String): DataFrame =
     SetSimJoin.jaccardTopM(
-      docs(spark, dir), col("doc_id"),
-      array_distinct(split(col("text"), " ")), threshold = 0.8, m = 5)
+      docs(spark, dir), col("doc_id"), MinHash.tokenSet(col("text")),
+      NearDupJaccard, TopM)
       .orderBy("doc_id", "rk")
 
   /** C2a'': asymmetric NEAR-CONTAINMENT pairs — containment(A→B) =
@@ -62,8 +74,7 @@ object DedupOps {
     */
   def c2Containment(spark: SparkSession, dir: String): DataFrame =
     SetSimJoin.containmentSelfJoin(
-      docs(spark, dir), col("doc_id"),
-      array_distinct(split(col("text"), " ")))
+      docs(spark, dir), col("doc_id"), MinHash.tokenSet(col("text")))
       .orderBy("a_id", "b_id")
 
   /** C2a''': the O(n)-OUTPUT companion of [[c2Containment]] — per doc,
@@ -79,8 +90,7 @@ object DedupOps {
     */
   def c2ContainmentBest(spark: SparkSession, dir: String): DataFrame =
     SetSimJoin.containmentBestAssign(
-      docs(spark, dir), col("doc_id"),
-      array_distinct(split(col("text"), " ")))
+      docs(spark, dir), col("doc_id"), MinHash.tokenSet(col("text")))
       .orderBy("doc_id")
 
   /** C2a'''': BOUNDED-candidate best-container — the topc discipline
@@ -110,9 +120,7 @@ object DedupOps {
   def c2ContainmentBestTopC(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.util.ObservedLog.register(spark)
-    val base = docs(spark, dir)
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = tokenSets(docs(spark, dir))
     val ex = base.select(col("doc_id"), size(col("toks")).as("n"),
       explode(col("toks")).as("tok"))
     val tf = ex.groupBy("tok").agg(count(lit(1)).as("freq"))
@@ -152,25 +160,9 @@ object DedupOps {
     // confirmed — the three numbers that name the growing stage of a
     // scale decade in one run (CollectMetrics rides the plan, no second
     // scan).
-    val agree = pref
-      .join(pb, Seq("tok"))
-      .filter(col("a_id") =!= col("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("agree"))
-      .observe("graft_containment_agree",
-        count(lit(1)).as("agree_pairs"))
-    val topk = new graft.functions.TopKAggregator[(Double, Long)](
-      ContainTopC, _._1, _._2).toColumn.name("topc")
-    val cand = agree
-      .select(col("a_id"), col("agree").cast("double"), col("b_id"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(topk)
-      .toDF("a_id", "topc")
-      .select(col("a_id"), explode(col("topc")).as("p"))
-      .select(col("a_id"), col("p._2").as("b_id"))
-      .observe("graft_containment_topc",
-        count(lit(1)).as("reranked_pairs"))
+    val cand = rerankTopC(
+      pref.join(pb, Seq("tok")).filter(col("a_id") =!= col("b_id")),
+      "a_id", "b_id", "agree", ContainTopC, Some("graft_containment"))
     val conf = cand
       .join(base.select(col("doc_id").as("a_id"), col("toks").as("a_toks"),
         size(col("toks")).as("n")), "a_id")
@@ -263,21 +255,20 @@ object DedupOps {
     * cosine >= 0.9. Rows-only driver check; recall vs brute force is
     * asserted in DedupSpec. O(n·probes) shuffle, no all-pairs stage.
     */
-  def c2EmbedNearDup(spark: SparkSession, dir: String,
-      threshold: Double = 0.35, tables: Int = 8, bits: Int = 12): DataFrame = {
+  def c2EmbedNearDup(spark: SparkSession, dir: String): DataFrame = {
     // Persisted: the sketch column (tables×bits hyperplane dots per row) is
     // the dominant per-row cost and is consumed by both join sides plus the
     // two score-side re-attach joins — compute it once. O(n) rows of
     // (id, vec, sketch); spills to disk if it outgrows memory.
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
-      .withColumn("buckets", SimOps.lshBuckets(col("embD"), tables, bits))
+      .withColumn("buckets", SimOps.lshBuckets(col("embD"), EmbedTables, EmbedBits))
     val a = base.select(col("vec_id").as("a_id"), col("embD").as("a_emb"),
-      SimOps.explodeBuckets(col("buckets"), bits, probe = true))
+      SimOps.explodeBuckets(col("buckets"), EmbedBits, probe = true))
       .withColumnRenamed("pos", "tbl")
       .select(col("a_id"), col("a_emb"), col("tbl"), explode(col("col")).as("bucket"))
     val b = base.select(col("vec_id").as("b_id"), col("embD").as("b_emb"),
-      SimOps.explodeBuckets(col("buckets"), bits, probe = false))
+      SimOps.explodeBuckets(col("buckets"), EmbedBits, probe = false))
       .withColumnRenamed("pos", "tbl")
       .withColumn("bucket", element_at(col("col"), 1))
       .drop("col")
@@ -297,7 +288,7 @@ object DedupOps {
         .join(vecs.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
           .hint("shuffle_hash"), "b_id")
         .withColumn("cosine", SimOps.cosine6(col("a_emb"), col("b_emb")))
-        .filter(col("cosine") >= threshold)
+        .filter(col("cosine") >= NearDupCosine)
         .select("a_id", "b_id", "cosine")
         .orderBy("a_id", "b_id"),
       Seq(base))
@@ -319,7 +310,7 @@ object DedupOps {
   def c2LshRecall(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     val exact = SetSimJoin.jaccardSelfJoin(
-      d, col("doc_id"), array_distinct(split(col("text"), " ")), threshold = 0.8)
+      d, col("doc_id"), MinHash.tokenSet(col("text")), NearDupJaccard)
       .select(col("a_id"), col("b_id"), col("jaccard"))
     // Per-doc band-ordered bucket ARRAY — candidacy of a pair is then one
     // narrow zip (`exists i: bucketA[i] = bucketB[i]`) after two id
@@ -385,8 +376,7 @@ object DedupOps {
   private[queries] val IncBucketCap = 64
 
   /** Per-arrival candidate depth of c2_incremental_dedup_topc's
-    * band-agreement rerank, rendered into its oracle by
-    * [[topCCandidateSql]].
+    * band-agreement rerank.
     */
   private[queries] val IncDedupTopC = 64
 
@@ -399,6 +389,100 @@ object DedupOps {
   private[queries] val ContainAnchors = 8
   private[queries] val ContainPostingCap = 64
   private[queries] val ContainMinTokens = 10
+
+  // ---- The near-dup resolve vocabulary (Spark) ----
+  //
+  // One resolve serves c2_incremental_dedup, its _topc and _indexed
+  // forms and c7_decontaminate_fuzzy(_topc): token sets → band
+  // memberships → [[candidates]] (full, or [[Bounded]]) →
+  // [[resolveBatch]] (exact confirm, best pick re-attached to every
+  // arrival). c2_containment_best_topc shares the token sets and the
+  // [[rerankTopC]] stage. Each rule's DuckDB twin sits in the replay
+  // vocabulary below the query builders.
+
+  /** The persisted token-set slice `(doc_id, toks)` of a documents
+    * frame ([[MinHash.tokenSet]]): it feeds the banding AND the exact
+    * confirm, so it is computed once.
+    */
+  private[queries] def tokenSets(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The ingest batch: the deterministic 10% slice `doc_id % 10 = 7`,
+    * the oracle-stable stand-in for today's crawl; the rest is the
+    * standing corpus. SQL twins: [[BatchSql]], [[CorpusSql]].
+    */
+  private[queries] val InBatch: Column = col("doc_id") % 10 === 7
+
+  /** `(doc_id, band, bucket)` memberships of token sets under the
+    * [[IncBands]] × [[IncRows]] banding.
+    */
+  private[queries] def bandMemberships(toks: DataFrame): DataFrame =
+    MinHash.membershipsFromSets(toks, col("doc_id"), col("toks"), IncHashes, IncBands)
+
+  /** The bounded candidate form: each band bucket keeps its
+    * [[IncBucketCap]] smallest ids (the standing side always, the
+    * arrival side too when `capNewSide`), then each arrival keeps its
+    * top `c` candidates by band agreement.
+    */
+  private[queries] final case class Bounded(c: Int, capNewSide: Boolean)
+
+  /** Candidate pairs `(n_id, c_id)` of arrival memberships `nw` against
+    * standing memberships `cp`: every co-bucketed pair once, or the
+    * [[Bounded]] form — bucket caps through [[capBuckets]], then
+    * [[rerankTopC]] on band agreement (more shared bands ⇒ higher
+    * estimated Jaccard). `metric` prefixes the cap drop counters
+    * (`_bucket_cap` standing side, `_train_cap` arrival side) and, with
+    * `stages`, the rerank's pair counters. SQL twin: [[candidatesSql]].
+    */
+  private[queries] def candidates(nw: DataFrame, cp: DataFrame,
+      bound: Option[Bounded], metric: String, stages: Boolean): DataFrame = {
+    def coBucketed(n: DataFrame, c: DataFrame) = n.withColumnRenamed("doc_id", "n_id")
+      .join(c.withColumnRenamed("doc_id", "c_id"), Seq("band", "bucket"))
+    bound match {
+      case None => coBucketed(nw, cp).select("n_id", "c_id").distinct()
+      case Some(Bounded(c, capNewSide)) =>
+        val cpc = capBuckets(cp, IncBucketCap, s"${metric}_bucket_cap")
+        val nwc =
+          if (capNewSide) capBuckets(nw, IncBucketCap, s"${metric}_train_cap") else nw
+        rerankTopC(coBucketed(nwc, cpc), "n_id", "c_id", "bandsc", c,
+          if (stages) Some(metric) else None)
+    }
+  }
+
+  /** The top-`c` rerank: count the agreeing rows of `pairs` per `(l, r)`
+    * into column `n`, then keep each `l`'s `c` best `r` in the
+    * deterministic (count desc, `r` asc) order through the bounded-heap
+    * [[graft.functions.TopKAggregator]] — a partial aggregate, O(l · c)
+    * rows out, never a window. `stages` names the per-stage pair
+    * counters `<stages>_agree` and `<stages>_topc`. SQL twin:
+    * [[rerankSql]].
+    */
+  private[queries] def rerankTopC(pairs: DataFrame, l: String, r: String,
+      n: String, c: Int, stages: Option[String]): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val agree = observed(pairs.groupBy(l, r).agg(count(lit(1)).as(n)),
+      stages, "_agree", "agree_pairs")
+    val topk = new graft.functions.TopKAggregator[(Double, Long)](c, _._1, _._2)
+      .toColumn.name("topc")
+    observed(agree
+      .select(col(l), col(n).cast("double"), col(r))
+      .as[(Long, Double, Long)]
+      .groupByKey(_._1)
+      .mapValues(p => (p._2, p._3))
+      .agg(topk)
+      .toDF(l, "topc")
+      .select(col(l), explode(col("topc")).as("p"))
+      .select(col(l), col("p._2").as(r)), stages, "_topc", "reranked_pairs")
+  }
+
+  /** A per-stage pair counter: the row count of `df`, observed on the
+    * existing plan (no second scan) as `<stages><stage>`.
+    */
+  private def observed(df: DataFrame, stages: Option[String], stage: String,
+      field: String): DataFrame =
+    stages.fold(df)(s => df.observe(s + stage, count(lit(1)).as(field)))
 
   /** The cap itself: bounded-heap smallest-`cap` ids per (band, bucket)
     * via [[graft.functions.BoundedMinIds]] — a partial aggregate
@@ -430,12 +514,13 @@ object DedupOps {
       .select(col("band"), col("bucket"), explode(col("kept")).as("doc_id"))
   }
 
-  /** Shared tail of both incremental variants: exact-Jaccard confirm of
-    * the candidate pairs (token sets re-attached by id for candidate
-    * rows only), best match per new doc as ONE partial aggregate (min
-    * over the (-jaccard, c_id) struct = highest jaccard, smallest id on
-    * ties — no window over the candidate stream), left-joined back to
-    * the batch.
+  /** The resolve tail: exact-Jaccard confirm of the candidate pairs
+    * (token sets re-attached by id for candidate rows only), best match
+    * per new doc as ONE partial aggregate (min over the (-jaccard, c_id)
+    * struct = highest jaccard, smallest id on ties — no window over the
+    * candidate stream), left-joined back to the batch. `stages` adds the
+    * `<stages>_confirmed` pair counter. SQL twin: [[confirmSql]] +
+    * [[bestPickSql]].
     *
     * The confirm itself is ADAPTIVE (the SetSimJoin strategy
     * discipline): when the two sides' combined vocabulary fits in 64
@@ -456,7 +541,7 @@ object DedupOps {
   private[queries] def resolveBatch(cand: DataFrame, newToks: DataFrame,
       corpToks: DataFrame, threshold: Double,
       maxMaskVocab: Int = 64,
-      confirmMetric: Option[String] = None): DataFrame = {
+      stages: Option[String] = None): DataFrame = {
     val sampleVocab =
       if (maxMaskVocab <= 0) Long.MaxValue
       else newToks
@@ -492,11 +577,8 @@ object DedupOps {
         .withColumn("jaccard", round(col("common").cast("double") /
           (size(col("n_toks")) + size(col("c_toks")) - col("common")).cast("double"), 6))
         .filter(col("jaccard") >= threshold)
-    // Optional per-stage confirm counter (r12 verdict #4): pairs that
-    // passed the exact-Jaccard threshold, observed on the existing plan.
-    val counted = confirmMetric.fold(confirmed)(m =>
-      confirmed.observe(m, count(lit(1)).as("confirmed_pairs")))
-    val best = counted.groupBy(col("n_id"))
+    val best = observed(confirmed, stages, "_confirmed", "confirmed_pairs")
+      .groupBy(col("n_id"))
       .agg(min(struct((-col("jaccard")).as("nj"), col("c_id").as("cid"))).as("b"))
       .select(col("n_id").as("doc_id"), col("b.cid").as("match_id"),
         (-col("b.nj")).as("match_jaccard"))
@@ -508,37 +590,16 @@ object DedupOps {
   }
 
   /** C2e: INCREMENTAL near-dup check — the production ingest shape: a
-    * new batch of documents (here the deterministic 10% slice
-    * `doc_id % 10 = 7`, the oracle-stable stand-in for today's crawl)
-    * checked against the standing corpus, each new doc resolved to
-    * is_novel or its best-matching existing doc (highest exact Jaccard,
-    * smallest id on ties). Both sides band once ([[IncBands]] banding),
-    * the join is on (band, bucket), and only candidate pairs pay the
-    * exact confirm — O(batch · bands) shuffle against a PRE-BANDABLE
-    * corpus side (see [[c2IncrementalDedupIndexed]] for the
-    * persisted-layout form).
+    * new batch of documents ([[InBatch]]) checked against the standing
+    * corpus, each new doc resolved to is_novel or its best-matching
+    * existing doc (highest exact Jaccard, smallest id on ties). Both
+    * sides band once ([[IncBands]] banding), the join is on (band,
+    * bucket), and only candidate pairs pay the exact confirm —
+    * O(batch · bands) shuffle against a PRE-BANDABLE corpus side (see
+    * [[c2IncrementalDedupIndexed]] for the persisted-layout form).
     */
-  def c2IncrementalDedup(spark: SparkSession, dir: String,
-      threshold: Double = 0.8): DataFrame = {
-    // Persisted: token sets feed the banding AND both exact-confirm joins.
-    val base = docs(spark, dir)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val isNew = col("doc_id") % 10 === 7
-    // Persisted too: both filter sides of the candidate join scan the
-    // SAME membership table — without the cache each side recomputes the
-    // 128-hash signature pass (the dominant per-row cost) from scratch.
-    val mem = MinHash.membershipsFromSets(
-      base, col("doc_id"), col("toks"), IncHashes, IncBands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = mem.filter(isNew).withColumnRenamed("doc_id", "n_id")
-      .join(mem.filter(!isNew).withColumnRenamed("doc_id", "c_id"),
-        Seq("band", "bucket"))
-      .select("n_id", "c_id").distinct()
-    graft.util.CacheScope.releaseAfterMaterialize(
-      resolveBatch(cand, base.filter(isNew), base.filter(!isNew), threshold),
-      Seq(base, mem))
-  }
+  def c2IncrementalDedup(spark: SparkSession, dir: String): DataFrame =
+    inPlanResolve(spark, dir, None)
 
   /** C2e'': BOUNDED-CONFIRM incremental dedup — the duplicate-saturated-
     * corpus scale path: [[c2IncrementalDedup]]'s exact confirm is
@@ -549,9 +610,7 @@ object DedupOps {
     * corpus cap ([[capBuckets]]/[[IncBucketCap]] — O(batch·bands·cap)
     * pairs at any duplication density, drops logged loudly), and the
     * exact confirm via the per-new-doc RERANK: keep only the top `c`
-    * candidates by LSH band-agreement count (more shared bands ⇒ higher
-    * estimated Jaccard; deterministic (agreement desc, c_id asc) order)
-    * through the bounded-heap [[graft.functions.TopKAggregator]] —
+    * candidates by LSH band-agreement count ([[rerankTopC]]) —
     * O(batch · c) exact confirms, the c2_ngram_jaccard_topm contract
     * applied to the ingest check. Explicitly approximate: a true match
     * ranked below the c-th candidate — or outside its every bucket's
@@ -559,43 +618,24 @@ object DedupOps {
     * per-doc candidate counts rarely reach the bounds and the result
     * equals the full variant exactly, which the spec pins at sf0.001).
     * The oracle replays bucket cap and band-agreement rank verbatim, so
-    * the approximation itself is hash-checked.
+    * the approximation itself is hash-checked. The new side is a batch,
+    * small by contract, so only the corpus side is capped.
     */
-  def c2IncrementalDedupTopC(spark: SparkSession, dir: String,
-      threshold: Double = 0.8): DataFrame = {
-    import spark.implicits._
-    val base = docs(spark, dir)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
+  def c2IncrementalDedupTopC(spark: SparkSession, dir: String): DataFrame =
+    inPlanResolve(spark, dir, Some(Bounded(IncDedupTopC, capNewSide = false)))
+
+  private def inPlanResolve(spark: SparkSession, dir: String,
+      bound: Option[Bounded]): DataFrame = {
+    val base = tokenSets(docs(spark, dir))
+    // Persisted too: both filter sides of the candidate join scan the
+    // SAME membership table — without the cache each side recomputes the
+    // 128-hash signature pass (the dominant per-row cost) from scratch.
+    val mem = bandMemberships(base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val isNew = col("doc_id") % 10 === 7
-    val mem = MinHash.membershipsFromSets(
-      base, col("doc_id"), col("toks"), IncHashes, IncBands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Candidate GENERATION is bounded too (round-10 verdict #2): the
-    // corpus side is capped at IncBucketCap ids per band bucket BEFORE
-    // the join, so the pair shuffle is O(batch · bands · cap) even on a
-    // corpus where every bucket is a near-clique. Then band-agreement
-    // count per surviving pair (partial-aggregating count on the same
-    // shuffle shape).
-    val corpCapped = capBuckets(
-      mem.filter(!isNew), IncBucketCap, "graft_inc_dedup_bucket_cap")
-    val agree = mem.filter(isNew).withColumnRenamed("doc_id", "n_id")
-      .join(corpCapped.withColumnRenamed("doc_id", "c_id"),
-        Seq("band", "bucket"))
-      .groupBy("n_id", "c_id").agg(count(lit(1)).as("bandsc"))
-    val topk = new graft.functions.TopKAggregator[(Double, Long)](IncDedupTopC, _._1, _._2)
-      .toColumn.name("topc")
-    val cand = agree
-      .select(col("n_id"), col("bandsc").cast("double"), col("c_id"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(topk)
-      .toDF("n_id", "topc")
-      .select(col("n_id"), explode(col("topc")).as("p"))
-      .select(col("n_id"), col("p._2").as("c_id"))
+    val cand = candidates(mem.filter(InBatch), mem.filter(!InBatch), bound,
+      "graft_inc_dedup", stages = false)
     graft.util.CacheScope.releaseAfterMaterialize(
-      resolveBatch(cand, base.filter(isNew), base.filter(!isNew), threshold),
+      resolveBatch(cand, base.filter(InBatch), base.filter(!InBatch), NearDupJaccard),
       Seq(base, mem))
   }
 
@@ -603,9 +643,9 @@ object DedupOps {
     * fingerprint + banding. Every table of the dedup layout — the CC
     * labels and the tombstones too — carries its suffix.
     */
-  private def dedupLayout(dir: String, numHashes: Int, bands: Int): Storage.Layout =
+  private def dedupLayout(dir: String): Storage.Layout =
     Storage.layout(Seq("graft_mh_mem_", "graft_mh_toks_"),
-      Seq(s"$dir/documents.parquet"), s"${numHashes}h${bands}b")
+      Seq(s"$dir/documents.parquet"), s"${IncHashes}h${IncBands}b")
 
   /** The layout's TOMBSTONE table (`doc_id` rows appended by
     * [[deleteFromDedupIndex]], cleared by [[compactDedupIndex]]) — absent
@@ -632,19 +672,15 @@ object DedupOps {
     * swept. Idempotent; returns (membershipTable, tokenTable).
     */
   private[graft] def ensureDedupIndex(spark: SparkSession, dir: String,
-      numHashes: Int = IncHashes, bands: Int = IncBands,
       sweepStale: Boolean = true): (String, String) = {
     val Seq(memTab, toksTab) = Storage.ensureLayout(spark,
-        dedupLayout(dir, numHashes, bands), sweepStale,
+        dedupLayout(dir), sweepStale,
         alsoSweep = Seq("graft_mh_del_")) { case Seq(memTab, toksTab) =>
-      val corpus = docs(spark, dir).filter(col("doc_id") % 10 =!= 7)
-        .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = tokenSets(docs(spark, dir).filter(!InBatch))
       try {
         // Token sets first, memberships last (they mark completion).
         corpus.write.mode("overwrite").format("parquet").saveAsTable(toksTab)
-        MinHash.membershipsFromSets(
-          corpus, col("doc_id"), col("toks"), numHashes, bands)
+        bandMemberships(corpus)
           .write.mode("overwrite").format("parquet").saveAsTable(memTab)
       } finally corpus.unpersist(blocking = false)
     }
@@ -663,31 +699,22 @@ object DedupOps {
     * banding), so it SHARES its oracle SQL — a drifted or stale layout
     * breaks the hash.
     */
-  def c2IncrementalDedupIndexed(spark: SparkSession, dir: String,
-      threshold: Double = 0.8): DataFrame = {
+  def c2IncrementalDedupIndexed(spark: SparkSession, dir: String): DataFrame = {
     val (memTab, toksTab) = ensureDedupIndex(spark, dir)
-    val isNew = col("doc_id") % 10 === 7
-    // Persisted: the batch token sets feed the banding and the confirm.
-    val newBase = docs(spark, dir).filter(isNew)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newMem = MinHash.membershipsFromSets(
-      newBase, col("doc_id"), col("toks"), IncHashes, IncBands)
-    val cand0 = newMem.withColumnRenamed("doc_id", "n_id")
-      .join(spark.table(memTab).withColumnRenamed("doc_id", "c_id"),
-        Seq("band", "bucket"))
-      .select("n_id", "c_id").distinct()
+    val newBase = tokenSets(docs(spark, dir).filter(InBatch))
+    val cand0 = candidates(bandMemberships(newBase), spark.table(memTab), None,
+      "graft_inc_dedup", stages = false)
     // Tombstoned (takedown-deleted) docs stay in the raw membership
     // table until compaction — they must never surface as match
     // candidates. Takedown-sized broadcast anti-join; absent table =
     // no deletes = plan unchanged.
-    val cand = tombstones(spark, dedupLayout(dir, IncHashes, IncBands).suffix) match {
+    val cand = tombstones(spark, dedupLayout(dir).suffix) match {
       case Some(d) => cand0.join(
         broadcast(d.select(col("doc_id").as("c_id"))), Seq("c_id"), "left_anti")
       case None => cand0
     }
     graft.util.CacheScope.releaseAfterMaterialize(
-      resolveBatch(cand, newBase, spark.table(toksTab), threshold),
+      resolveBatch(cand, newBase, spark.table(toksTab), NearDupJaccard),
       Seq(newBase))
   }
 
@@ -695,15 +722,14 @@ object DedupOps {
     * released by the caller) and the within-cell cosine-threshold edge
     * list `(a_id < b_id)`.
     */
-  private def semanticParts(spark: SparkSession, dir: String,
-      threshold: Double): (DataFrame, DataFrame) = {
+  private def semanticParts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // Corpus-scaled cell count (k ≈ √n, power-of-two grid): keeps the
     // within-cell pair generation O(n·√n̄) instead of O(n²/16) — the
     // SemDeDup recipe's cell growth, shared with c3_knn_join and
     // replayed by the dynamic oracle from the same function.
     val assigned = SimOps.scaledCellCorpus(spark, dir)
     val edges = SimOps.cellPairs(assigned, col("a_id") < col("b_id"))
-      .filter(col("cosine") >= threshold)
+      .filter(col("cosine") >= NearDupCosine)
       .select("a_id", "b_id")
     (assigned, edges)
   }
@@ -723,9 +749,8 @@ object DedupOps {
     * Output `(vec_id, cell, cluster_rep, is_kept)` — O(n), hash-checked
     * end-to-end by a dynamic oracle embedding the trained centroids.
     */
-  def c2SemanticDedup(spark: SparkSession, dir: String,
-      threshold: Double = 0.35): DataFrame = {
-    val (assigned, edges) = semanticParts(spark, dir, threshold)
+  def c2SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
+    val (assigned, edges) = semanticParts(spark, dir)
     val reps = edges.groupBy(col("b_id").as("vec_id"))
       .agg(min(col("a_id")).as("min_nbr"))
     graft.util.CacheScope.releaseAfterMaterialize(
@@ -746,9 +771,8 @@ object DedupOps {
     * (O(log n) rounds over the within-cell edge list). Dynamic oracle:
     * recursive-CTE min-label closure over the replayed edges.
     */
-  def c2SemanticDedupCc(spark: SparkSession, dir: String,
-      threshold: Double = 0.35): DataFrame = {
-    val (assigned, edges) = semanticParts(spark, dir, threshold)
+  def c2SemanticDedupCc(spark: SparkSession, dir: String): DataFrame = {
+    val (assigned, edges) = semanticParts(spark, dir)
     val roots = graft.dedup.ConnectedComponents.starRoots(
       edges.select(col("a_id").as("u"), col("b_id").as("v")))
     graft.util.CacheScope.releaseAfterMaterialize(
@@ -773,10 +797,9 @@ object DedupOps {
     * partition overwrite, never an O(n) label rewrite per batch.
     */
   private[graft] def ensureDedupLabels(spark: SparkSession, dir: String,
-      numHashes: Int = IncHashes, bands: Int = IncBands,
       sweepStale: Boolean = true): String = {
-    val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands, sweepStale)
-    Storage.ensureLayout(spark, dedupLayout(dir, numHashes, bands)
+    val (memTab, _) = ensureDedupIndex(spark, dir, sweepStale)
+    Storage.ensureLayout(spark, dedupLayout(dir)
         .copy(prefixes = Seq("graft_mh_lab_")), sweepStale) { case Seq(labTab) =>
       ConnectedComponents.assignmentsFromMemberships(spark.table(memTab))
         .select(col("doc_id"), col("cluster_rep"),
@@ -847,11 +870,8 @@ object DedupOps {
   def c2IncrementalCc(spark: SparkSession, dir: String): DataFrame = {
     val labTab = ensureDedupLabels(spark, dir)
     val (memTab, _) = ensureDedupIndex(spark, dir)
-    val batch = docs(spark, dir).filter(col("doc_id") % 10 === 7)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batchMem = MinHash.membershipsFromSets(
-      batch, col("doc_id"), col("toks"), IncHashes, IncBands)
+    val batch = tokenSets(docs(spark, dir).filter(InBatch))
+    val batchMem = bandMemberships(batch)
     graft.util.CacheScope.releaseAfterMaterialize(
       mergedLabels(spark, labTab, memTab, batchMem, batch.select("doc_id"))
         .withColumn("is_kept", col("doc_id") === col("cluster_rep"))
@@ -872,17 +892,14 @@ object DedupOps {
     * rows (docs × bands).
     */
   private[graft] def appendDedupIndex(spark: SparkSession, dir: String,
-      newDocs: DataFrame, numHashes: Int = IncHashes,
-      bands: Int = IncBands): Long = {
-    val (memTab, toksTab) = ensureDedupIndex(spark, dir, numHashes, bands)
+      newDocs: DataFrame): Long = {
+    val (memTab, toksTab) = ensureDedupIndex(spark, dir)
     // Labels BEFORE the appends: they must describe the pre-batch corpus
     // for the contracted merge below to be sound.
-    val labTab = ensureDedupLabels(spark, dir, numHashes, bands)
+    val labTab = ensureDedupLabels(spark, dir)
     // Persisted: the token sets feed the dup checks, the toks append,
     // and the signature pass — one tokenization, not three.
-    val base = newDocs
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = tokenSets(newDocs)
     try {
       // one aggregate covers both the row count and the within-batch
       // duplicate check
@@ -908,8 +925,7 @@ object DedupOps {
           Seq("doc_id"), "left_anti")
         .select(spark.table(toksTab).columns.map(col).toIndexedSeq: _*)
         .write.mode("append").insertInto(toksTab)
-      val batchMem = MinHash.membershipsFromSets(
-        base, col("doc_id"), col("toks"), numHashes, bands)
+      val batchMem = bandMemberships(base)
       batchMem
         .select(spark.table(memTab).columns.map(col).toIndexedSeq: _*)
         .write.mode("append").insertInto(memTab)
@@ -932,7 +948,7 @@ object DedupOps {
         .filter(col("p").isNotNull).distinct()
         .collect().map(_.getLong(0))
       overwriteLabelPartitions(spark, labTab, merged, touchedLp)
-      nDocs * bands
+      nDocs * IncBands
     } finally base.unpersist(blocking = false)
   }
 
@@ -1032,7 +1048,7 @@ object DedupOps {
     val labTab = ensureDedupLabels(spark, dir)
     val (memTab, _) = ensureDedupIndex(spark, dir)
     val del = docs(spark, dir)
-      .filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 97 === 13)
+      .filter(!InBatch && col("doc_id") % 97 === 13)
       .select(col("doc_id"))
     relabelAfterDelete(spark, labTab, memTab, del)
       .withColumn("is_kept", col("doc_id") === col("cluster_rep"))
@@ -1066,11 +1082,10 @@ object DedupOps {
     * takedown that silently no-ops hides an unhonored removal.
     */
   private[graft] def deleteFromDedupIndex(spark: SparkSession, dir: String,
-      ids: DataFrame, numHashes: Int = IncHashes,
-      bands: Int = IncBands): Long = {
-    val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands)
-    val labTab = ensureDedupLabels(spark, dir, numHashes, bands)
-    val suffix = dedupLayout(dir, numHashes, bands).suffix
+      ids: DataFrame): Long = {
+    val (memTab, _) = ensureDedupIndex(spark, dir)
+    val labTab = ensureDedupLabels(spark, dir)
+    val suffix = dedupLayout(dir).suffix
     val del = ids.select(col("doc_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1126,10 +1141,9 @@ object DedupOps {
     * table; unpartitioned tables need no MSCK after the rename.
     * Returns the tombstone count compacted away.
     */
-  private[graft] def compactDedupIndex(spark: SparkSession, dir: String,
-      numHashes: Int = IncHashes, bands: Int = IncBands): Long = {
-    val (memTab, toksTab) = ensureDedupIndex(spark, dir, numHashes, bands)
-    val suffix = dedupLayout(dir, numHashes, bands).suffix
+  private[graft] def compactDedupIndex(spark: SparkSession, dir: String): Long = {
+    val (memTab, toksTab) = ensureDedupIndex(spark, dir)
+    val suffix = dedupLayout(dir).suffix
     val delTab = tombstoneTab(suffix)
     if (!spark.catalog.tableExists(delTab)) return 0L
     val del = spark.table(delTab).select(col("doc_id")).distinct()
@@ -1150,10 +1164,6 @@ object DedupOps {
     } finally del.unpersist(blocking = false)
   }
 
-  /** DuckDB replay of the portable MinHash pipeline (same family as
-    * graft.functions.HashExprs: md5-prefix base hash, affine members mod
-    * 2^31−1, md5-prefix band buckets — 64 hashes × 16 bands of 4 rows).
-    */
   /** The tokenset-agnostic tail of the MinHash replay — tb/sig/mem CTEs
     * over a preceding `base(doc_id, toks)` CTE, parameterized by the
     * banding (bands × rows must cover the 64-hash signature). Shared
@@ -1172,16 +1182,17 @@ object DedupOps {
       s"array_to_string(list_slice(sig, b*$rows+1, b*$rows+$rows), ':')),1,15))::BIGINT AS bucket " +
       s"FROM sig CROSS JOIN range(0, $bands) rt(b))"
 
-  private[queries] val mhBase: String =
-    "base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-      "FROM documents), " + mhChainSql()
+  /** DuckDB replay of the portable MinHash pipeline (same family as
+    * graft.functions.HashExprs: md5-prefix base hash, affine members mod
+    * 2^31−1, md5-prefix band buckets — 64 hashes × 16 bands of 4 rows).
+    */
+  private[queries] val mhBase: String = baseSql("documents") + ", " + mhChainSql()
 
   /** DuckDB replay of the portable SimHash pipeline (60-bit fingerprint
     * over md5-prefix hashes, 4 blocks of 15 bits).
     */
   private val shBase: String =
-    "base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-      "FROM documents), " +
+    baseSql("documents") + ", " +
       "tb AS (SELECT doc_id, list_transform(toks, t -> " +
       "('0x'||substr(md5(t),1,15))::BIGINT) AS hs FROM base), " +
       "fps AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 60), b -> " +
@@ -1190,6 +1201,144 @@ object DedupOps {
       "THEN (1::BIGINT << b) ELSE 0 END)) AS BIGINT) AS fp FROM tb), " +
       "mem AS (SELECT doc_id, fp, b AS block, (fp >> (b*15)) & 32767 AS bucket " +
       "FROM fps CROSS JOIN range(0, 4) rt(b))"
+
+  /** `mm(cols…, bucket_min)`: each membership row of `mem` with its
+    * bucket minimum over (`bandCol`, bucket) — the one-round assignment
+    * of c2_minhash_lsh, c2_simhash, c6_frame_neardup_minhash and the
+    * curation pipelines.
+    */
+  private[queries] def bucketMinSql(cols: String, bandCol: String): String =
+    s"mm AS (SELECT $cols, min(doc_id) OVER (PARTITION BY $bandCol, bucket) " +
+      "AS bucket_min FROM mem)"
+
+  // ---- The near-dup resolve vocabulary (DuckDB replay) ----
+  //
+  // Twins of the Spark vocabulary above, one renderer per rule. Pairs are
+  // `(a_id, b_id)` throughout: a_id the arrival (new doc, train doc,
+  // contained doc), b_id the standing candidate.
+
+  /** `base(doc_id, toks)`: the token sets ([[MinHash.tokenSet]]) of
+    * `from` — `documents`, or a filtered slice of it.
+    */
+  private[queries] def baseSql(from: String): String =
+    s"base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM $from)"
+
+  /** `ex(doc_id, n, tok)`: one row per distinct token of each `base`
+    * doc, with the doc's set size.
+    */
+  private val exSql = "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base)"
+
+  /** [[InBatch]] and its complement as SQL predicates. */
+  private[queries] val BatchSql = "doc_id % 10 = 7"
+  private[queries] val CorpusSql = "doc_id % 10 <> 7"
+
+  /** Exact Jaccard and containment of a pair sharing `c` tokens, with
+    * set sizes `a`, `b` (unrounded; every output rounds to 6 dp), and
+    * the containment cut as the exact rational c·10 ≥ 9·a.
+    */
+  private def jaccardSql(c: String, a: String, b: String) =
+    s"CAST($c AS DOUBLE) / ($a + $b - $c)"
+  private def containmentSql(c: String, a: String) = s"CAST($c AS DOUBLE) / $a"
+  private def containedSql(c: String, a: String) = s"$c * 10 >= 9 * $a"
+
+  /** `pairs(a_id, b_id, common, jaccard)`: every a_id < b_id pair at
+    * Jaccard ≥ [[NearDupJaccard]], from the token co-occurrence
+    * self-join of `ex` ([[SetSimJoin.jaccardSelfJoin]]).
+    */
+  private val jaccardPairsSql: String = {
+    val j = jaccardSql("count(*)", "a.n", "b.n")
+    "pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS common, " +
+      s"round($j, 6) AS jaccard " +
+      "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id < b.doc_id " +
+      s"GROUP BY a.doc_id, b.doc_id, a.n, b.n HAVING $j >= $NearDupJaccard)"
+  }
+
+  /** `pairs(a_id, b_id, common, containment)`: every ordered pair whose
+    * a_id (≥ [[ContainMinTokens]] tokens) is ≥0.9-contained in b_id
+    * ([[SetSimJoin.containmentSelfJoin]]).
+    */
+  private val containmentPairsSql: String =
+    "pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS common, " +
+      s"round(${containmentSql("count(*)", "a.n")}, 6) AS containment " +
+      "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id <> b.doc_id " +
+      s"WHERE a.n >= $ContainMinTokens GROUP BY a.doc_id, b.doc_id, a.n " +
+      s"HAVING ${containedSql("count(*)", "a.n")})"
+
+  /** `name`: the first `n` rows of `from` per `by` group in `order` —
+    * the one window of the id caps ([[capBuckets]], the posting cap),
+    * the top-c rank ([[rerankTopC]]), the rarity prefix and the best
+    * pick.
+    */
+  private def firstSql(name: String, by: String, order: String, from: String,
+      n: Int): String =
+    s"$name AS (SELECT * EXCLUDE (rn) FROM (SELECT *, row_number() OVER " +
+      s"(PARTITION BY $by ORDER BY $order) AS rn FROM $from) WHERE rn <= $n)"
+
+  /** [[rerankTopC]]: `ag(a_id, b_id, agree)` counts the agreeing rows of
+    * `join`, and `cand` keeps each a_id's top `c` by (agree desc, b_id).
+    */
+  private def rerankSql(join: String, c: Int): String =
+    s"ag AS (SELECT a_id, b_id, count(*) AS agree FROM $join GROUP BY a_id, b_id), " +
+      firstSql("cand", "a_id", "agree DESC, b_id", "ag", c)
+
+  /** [[candidates]]: `cand` over the band sides `nw(a_id, band, bucket)`
+    * and `cp(b_id, band, bucket)` — every co-bucketed pair once, or the
+    * [[Bounded]] form (bucket caps, then the band-agreement rerank).
+    */
+  private def candidatesSql(bound: Option[Bounded]): String = bound match {
+    case None => "cand AS (SELECT DISTINCT a_id, b_id FROM nw JOIN cp USING (band, bucket))"
+    case Some(Bounded(c, capNewSide)) =>
+      val nw = if (capNewSide) "nwc" else "nw"
+      firstSql("cpc", "band, bucket", "b_id", "cp", IncBucketCap) + ", " +
+        (if (capNewSide) firstSql("nwc", "band, bucket", "a_id", "nw", IncBucketCap) + ", "
+        else "") +
+        rerankSql(s"$nw JOIN cpc USING (band, bucket)", c)
+  }
+
+  /** The exact confirm of each `cand` pair over the `base` token sets:
+    * `sc` counts the shared tokens `common` and the set sizes `na`, `nb`;
+    * `cf(a_id, b_id, score…)` keeps the pairs passing `cut`.
+    */
+  private def confirmSql(score: String, cut: String): String =
+    "sc AS (SELECT a_id, b_id, " +
+      "len(list_filter(a.toks, t -> list_contains(b.toks, t))) AS common, " +
+      "len(a.toks) AS na, len(b.toks) AS nb " +
+      "FROM cand JOIN base a ON a.doc_id = cand.a_id JOIN base b ON b.doc_id = cand.b_id), " +
+      s"cf AS (SELECT a_id, b_id, $score FROM sc WHERE $cut)"
+
+  /** The best pick re-attached to every arrival: per a_id the `pairs`
+    * row with the highest `score`, smallest b_id on ties, LEFT JOINed to
+    * the ids `arrivals` selects; `cols` names the key's output over the
+    * match `m`.
+    */
+  private def bestPickSql(pairs: String, score: String, arrivals: String,
+      cols: String): String =
+    firstSql("best", "a_id", s"$score DESC, b_id", pairs, 1) + " " +
+      s"SELECT d.doc_id, $cols FROM ($arrivals) d " +
+      "LEFT JOIN best m ON d.doc_id = m.a_id ORDER BY doc_id"
+
+  /** The whole resolve replayed ([[candidates]] + [[resolveBatch]]): the
+    * `base` docs where `arrive` holds, against those where `stand` holds,
+    * over the [[IncBands]] × [[IncRows]] banding of `from`'s token sets,
+    * confirmed at Jaccard ≥ `threshold`.
+    */
+  private[queries] def resolveSql(from: String, arrive: String, stand: String,
+      bound: Option[Bounded], threshold: Double, cols: String): String = {
+    val j = s"round(${jaccardSql("common", "na", "nb")}, 6)"
+    s"WITH ${baseSql(from)}, ${mhChainSql(IncBands, IncRows)}, " +
+      s"nw AS (SELECT doc_id AS a_id, band, bucket FROM mem WHERE $arrive), " +
+      s"cp AS (SELECT doc_id AS b_id, band, bucket FROM mem WHERE $stand), " +
+      candidatesSql(bound) + ", " +
+      confirmSql(s"$j AS jaccard", s"$j >= $threshold") + ", " +
+      bestPickSql("cf", "jaccard", s"SELECT doc_id FROM base WHERE $arrive", cols)
+  }
+
+  private def incrementalSql(bound: Option[Bounded]): String =
+    resolveSql("documents", BatchSql, CorpusSql, bound, NearDupJaccard,
+      "m.b_id IS NULL AS is_novel, m.b_id AS match_id, m.jaccard AS match_jaccard")
+
+  private val containedCols =
+    "m.b_id IS NOT NULL AS is_contained, m.b_id AS container_id, m.containment"
 
   /** Rounds for the fixed-round closure oracle: hop+jump min
     * propagation at least doubles the radius a node's label has
@@ -1261,118 +1410,46 @@ object DedupOps {
 
   val oracle: Map[String, String] = Map(
     "c2_ngram_jaccard" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base) " +
-        "SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS common, " +
-        "round(CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)), 6) AS jaccard " +
-        "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id < b.doc_id " +
-        "GROUP BY a.doc_id, b.doc_id, a.n, b.n " +
-        "HAVING CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)) >= 0.8 " +
-        "ORDER BY a_id, b_id"),
+      (s"WITH ${baseSql("documents")}, $exSql, $jaccardPairsSql " +
+        "SELECT * FROM pairs ORDER BY a_id, b_id"),
     // Top-m twin: symmetrize the exact pair list, rank per doc by
     // (jaccard desc, neighbor asc) — the deterministic total order the
-    // engine's bounded-heap selection implements — and keep rk <= 5.
+    // engine's bounded-heap selection implements — and keep rk <= TopM.
     "c2_ngram_jaccard_topm" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base), " +
-        "pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS common, " +
-        "round(CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)), 6) AS jaccard " +
-        "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id < b.doc_id " +
-        "GROUP BY a.doc_id, b.doc_id, a.n, b.n " +
-        "HAVING CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)) >= 0.8), " +
+      (s"WITH ${baseSql("documents")}, $exSql, $jaccardPairsSql, " +
         "sym AS (SELECT a_id AS doc_id, b_id AS nbr_id, common, jaccard FROM pairs " +
         "UNION ALL SELECT b_id, a_id, common, jaccard FROM pairs), " +
         "rk AS (SELECT doc_id, nbr_id, common, jaccard, row_number() OVER " +
         "(PARTITION BY doc_id ORDER BY jaccard DESC, nbr_id) AS rk FROM sym) " +
-        "SELECT doc_id, nbr_id, common, jaccard, rk FROM rk WHERE rk <= 5 " +
+        s"SELECT doc_id, nbr_id, common, jaccard, rk FROM rk WHERE rk <= $TopM " +
         "ORDER BY doc_id, rk"),
-    // Containment replay: the same token co-occurrence join as the
-    // Jaccard oracle, with the asymmetric denominator (a.n) and the
-    // exact-rational cut common*10 >= 9*a.n.
     "c2_containment" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base) " +
-        "SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS common, " +
-        "round(CAST(count(*) AS DOUBLE) / a.n, 6) AS containment " +
-        "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id <> b.doc_id " +
-        "WHERE a.n >= 10 " +
-        "GROUP BY a.doc_id, b.doc_id, a.n " +
-        "HAVING count(*) * 10 >= 9 * a.n " +
-        "ORDER BY a_id, b_id"),
-    // Best-container replay: the containment pair CTE, then the
-    // (containment desc, b_id asc) pick per doc, left-joined to cover
-    // uncontained docs.
+      (s"WITH ${baseSql("documents")}, $exSql, $containmentPairsSql " +
+        "SELECT * FROM pairs ORDER BY a_id, b_id"),
     "c2_containment_best" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base), " +
-        "pr AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, " +
-        "round(CAST(count(*) AS DOUBLE) / a.n, 6) AS containment " +
-        "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id <> b.doc_id " +
-        "WHERE a.n >= 10 " +
-        "GROUP BY a.doc_id, b.doc_id, a.n " +
-        "HAVING count(*) * 10 >= 9 * a.n), " +
-        "bst AS (SELECT a_id, b_id, containment, row_number() OVER " +
-        "(PARTITION BY a_id ORDER BY containment DESC, b_id) AS rn FROM pr) " +
-        "SELECT d.doc_id, m.b_id IS NOT NULL AS is_contained, " +
-        "m.b_id AS container_id, m.containment " +
-        "FROM (SELECT doc_id FROM documents) d " +
-        "LEFT JOIN (SELECT a_id, b_id, containment FROM bst WHERE rn = 1) m " +
-        "ON d.doc_id = m.a_id ORDER BY doc_id"),
-    // Bounded best-container replay: rarity rank (corpus freq, token —
-    // byte-wise in both engines), per-doc prefix, prefix-agreement
-    // counts, the (agree desc, b_id asc) top-64 cap, exact confirm on
-    // the survivors, best pick. Every stage of the approximation is
-    // replayed, so the cap itself is hash-checked.
+      (s"WITH ${baseSql("documents")}, $exSql, $containmentPairsSql, " +
+        bestPickSql("pairs", "containment", "SELECT doc_id FROM documents", containedCols)),
+    // Bounded best-container replay: rarity prefix (corpus freq, token —
+    // byte-wise in both engines), capped posting lists, the
+    // prefix-agreement rerank, exact confirm on the survivors, best
+    // pick. Every stage of the approximation is replayed, so the caps
+    // themselves are hash-checked.
     "c2_containment_best_topc" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base), " +
+      (s"WITH ${baseSql("documents")}, $exSql, " +
         "tf AS (SELECT tok, count(*) AS freq FROM ex GROUP BY tok), " +
-        "rk AS (SELECT ex.doc_id, ex.n, ex.tok, row_number() OVER " +
-        "(PARTITION BY ex.doc_id ORDER BY tf.freq, ex.tok) AS rn " +
-        "FROM ex JOIN tf USING (tok)), " +
-        s"pref AS (SELECT doc_id, tok FROM rk WHERE n >= $ContainMinTokens " +
-        s"AND rn <= $ContainAnchors), " +
-        "pb AS (SELECT tok, doc_id AS b_id FROM (SELECT tok, doc_id, " +
-        "row_number() OVER (PARTITION BY tok ORDER BY doc_id) AS prn FROM ex) " +
-        s"WHERE prn <= $ContainPostingCap), " +
-        "ag AS (SELECT p.doc_id AS a_id, pb.b_id, count(*) AS agree " +
-        "FROM pref p JOIN pb ON p.tok = pb.tok AND p.doc_id <> pb.b_id " +
-        "GROUP BY 1, 2), " +
-        "cand AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, row_number() " +
-        "OVER (PARTITION BY a_id ORDER BY agree DESC, b_id) AS crn FROM ag) " +
-        s"WHERE crn <= $ContainTopC), " +
-        "sc AS (SELECT a_id, b_id, " +
-        "len(list_filter(x.toks, t -> list_contains(y.toks, t))) AS common, " +
-        "len(x.toks) AS n FROM cand " +
-        "JOIN base x ON x.doc_id = cand.a_id " +
-        "JOIN base y ON y.doc_id = cand.b_id), " +
-        "cf AS (SELECT a_id, b_id, " +
-        "round(CAST(common AS DOUBLE) / n, 6) AS containment " +
-        "FROM sc WHERE common * 10 >= 9 * n), " +
-        "bst AS (SELECT a_id, b_id, containment, row_number() OVER " +
-        "(PARTITION BY a_id ORDER BY containment DESC, b_id) AS rn FROM cf) " +
-        "SELECT d.doc_id, m.b_id IS NOT NULL AS is_contained, " +
-        "m.b_id AS container_id, m.containment " +
-        "FROM (SELECT doc_id FROM documents) d " +
-        "LEFT JOIN (SELECT a_id, b_id, containment FROM bst WHERE rn = 1) m " +
-        "ON d.doc_id = m.a_id ORDER BY doc_id"),
-    // Recall-audit replay: the exact-pair SQL (the c2_ngram_jaccard
-    // oracle) and the membership chain share one `base` CTE; the audit
-    // join and bucket aggregation mirror the engine verbatim.
+        firstSql("pref", "a_id", "freq, tok", "(SELECT doc_id AS a_id, tok, freq " +
+          s"FROM ex JOIN tf USING (tok) WHERE n >= $ContainMinTokens)", ContainAnchors) + ", " +
+        firstSql("pb", "tok", "b_id", "(SELECT tok, doc_id AS b_id FROM ex)",
+          ContainPostingCap) + ", " +
+        rerankSql("pref JOIN pb USING (tok) WHERE a_id <> b_id", ContainTopC) + ", " +
+        confirmSql(s"round(${containmentSql("common", "na")}, 6) AS containment",
+          containedSql("common", "na")) + ", " +
+        bestPickSql("cf", "containment", "SELECT doc_id FROM documents", containedCols)),
+    // Recall-audit replay: the exact pairs (the c2_ngram_jaccard replay)
+    // and the membership chain share one `base` CTE; the audit join and
+    // bucket aggregation mirror the engine verbatim.
     "c2_lsh_recall" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-        "FROM documents), " +
-        "ex AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM base), " +
-        "pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, " +
-        "round(CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)), 6) AS jaccard " +
-        "FROM ex a JOIN ex b ON a.tok = b.tok AND a.doc_id < b.doc_id " +
-        "GROUP BY a.doc_id, b.doc_id, a.n, b.n " +
-        "HAVING CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)) >= 0.8), " +
+      (s"WITH ${baseSql("documents")}, $exSql, $jaccardPairsSql, " +
         mhChainSql() + ", " +
         "cand AS (SELECT DISTINCT m1.doc_id AS a_id, m2.doc_id AS b_id " +
         "FROM mem m1 JOIN mem m2 ON m1.band = m2.band AND m1.bucket = m2.bucket " +
@@ -1387,9 +1464,7 @@ object DedupOps {
         "round(CAST(n_found AS DOUBLE) / n_pairs, 6) AS recall " +
         "FROM b ORDER BY sim_bucket"),
     "c2_minhash_lsh" ->
-      (s"WITH $mhBase, " +
-        "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-        "AS bucket_min FROM mem) " +
+      (s"WITH $mhBase, ${bucketMinSql("doc_id", "band")} " +
         "SELECT doc_id, min(bucket_min) AS cluster_rep, " +
         "doc_id = min(bucket_min) AS is_kept " +
         "FROM mm GROUP BY doc_id ORDER BY doc_id"),
@@ -1408,108 +1483,37 @@ object DedupOps {
         "round(CAST(cluster_size * n_clusters AS DOUBLE) / n_total, 6) " +
         "AS docs_share FROM h, tot ORDER BY cluster_size"),
     "c2_simhash" ->
-      (s"WITH $shBase, " +
-        "mm AS (SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY block, bucket) " +
-        "AS bucket_min FROM mem) " +
+      (s"WITH $shBase, ${bucketMinSql("doc_id, fp", "block")} " +
         "SELECT doc_id, min(fp) AS fp, min(bucket_min) AS cluster_rep, " +
         "doc_id = min(bucket_min) AS is_kept " +
         "FROM mm GROUP BY doc_id ORDER BY doc_id"),
     "c2_simhash_cc" ->
       (s"WITH $shBase, " + closureSql("block")),
-    // Incremental replay: the mhChainSql memberships split new/corpus,
-    // the (band, bucket) candidate join, the exact-Jaccard confirm on
-    // candidates only, and the (jaccard desc, c_id asc) best-match pick.
-    "c2_incremental_dedup" -> incrementalSql,
-    "c2_incremental_dedup_topc" -> incrementalTopCSql,
+    "c2_incremental_dedup" -> incrementalSql(None),
+    "c2_incremental_dedup_topc" -> incrementalSql(Some(Bounded(IncDedupTopC, capNewSide = false))),
     // The indexed variant is result-identical by construction (same hash
     // family, same banding, corpus side persisted at ingest), so it is
     // held to the SAME full replay — a stale layout breaks the hash.
-    "c2_incremental_dedup_indexed" -> incrementalSql,
+    "c2_incremental_dedup_indexed" -> incrementalSql(None),
     // Incremental CC labels equal from-scratch CC over the index
     // banding (IncBands × IncRows) by construction — the oracle replays
     // the from-scratch closure on the FULL corpus and the hash pins the
     // incremental == from-scratch equality.
     "c2_incremental_cc" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) " +
-        "AS toks FROM documents), " +
-        mhChainSql(IncBands, IncRows) + ", " + closureSql("band")),
+      s"WITH ${baseSql("documents")}, ${mhChainSql(IncBands, IncRows)}, ${closureSql("band")}",
     // From-scratch CC over the SURVIVING corpus (standing slice minus
     // the takedown) — the equality c2CcDelete's bounded re-resolution
     // must reproduce.
     "c2_cc_delete" ->
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) " +
-        "AS toks FROM documents WHERE doc_id % 10 <> 7 AND doc_id % 97 <> 13), " +
-        mhChainSql(IncBands, IncRows) + ", " + closureSql("band")),
+      (s"WITH ${baseSql(s"documents WHERE $CorpusSql AND doc_id % 97 <> 13")}, " +
+        s"${mhChainSql(IncBands, IncRows)}, ${closureSql("band")}"),
     "c2_embed_neardup" ->
-      (s"WITH ${SimOps.sketchCte(tables = 8, bits = 12)}, " +
-        SimOps.lshCandSql(tables = 8, bits = 12, "TRUE", "<") + ", " +
+      (s"WITH ${SimOps.sketchCte(EmbedTables, EmbedBits)}, " +
+        SimOps.lshCandSql(EmbedTables, EmbedBits, "TRUE", "<") + ", " +
         SimOps.rescoreSql("sc", "cand") + " " +
-        "SELECT q_id AS a_id, b_id, cosine FROM sc WHERE cosine >= 0.35 " +
+        s"SELECT q_id AS a_id, b_id, cosine FROM sc WHERE cosine >= $NearDupCosine " +
         "ORDER BY a_id, b_id")
   )
-
-  // Banded from the shared IncBands/IncRows constants (rationale on
-  // their declaration) so the replay can never drift from the engine.
-  // Parameterized on the candidate CTE so the full-candidate and
-  // bounded-top-C replays share every other stage verbatim.
-  private def incrementalSqlWith(candCte: String): String =
-      ("WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) " +
-        "AS toks FROM documents), " +
-        mhChainSql(bands = IncBands, rows = IncRows) + ", " +
-        "nw AS (SELECT doc_id AS n_id, band, bucket FROM mem WHERE doc_id % 10 = 7), " +
-        "cp AS (SELECT doc_id AS c_id, band, bucket FROM mem WHERE doc_id % 10 <> 7), " +
-        candCte + ", " +
-        "sc AS (SELECT n_id, c_id, " +
-        "len(list_filter(a.toks, t -> list_contains(b.toks, t))) AS common, " +
-        "len(a.toks) AS na, len(b.toks) AS nb " +
-        "FROM cand JOIN base a ON a.doc_id = cand.n_id " +
-        "JOIN base b ON b.doc_id = cand.c_id), " +
-        "cf AS (SELECT n_id, c_id, " +
-        "round(CAST(common AS DOUBLE) / (na + nb - common), 6) AS jaccard " +
-        "FROM sc WHERE round(CAST(common AS DOUBLE) / (na + nb - common), 6) >= 0.8), " +
-        "best AS (SELECT n_id, c_id, jaccard, row_number() OVER " +
-        "(PARTITION BY n_id ORDER BY jaccard DESC, c_id) AS rn FROM cf) " +
-        "SELECT b.doc_id, m.c_id IS NULL AS is_novel, " +
-        "m.c_id AS match_id, m.jaccard AS match_jaccard " +
-        "FROM (SELECT doc_id FROM base WHERE doc_id % 10 = 7) b " +
-        "LEFT JOIN (SELECT n_id, c_id, jaccard FROM best WHERE rn = 1) m " +
-        "ON b.doc_id = m.n_id ORDER BY doc_id")
-
-  private lazy val incrementalSql: String = incrementalSqlWith(
-    "cand AS (SELECT DISTINCT n_id, c_id FROM nw JOIN cp USING (band, bucket))")
-
-  // Top-C replay: per-bucket corpus cap (smallest IncBucketCap ids —
-  // the BoundedMinIds order), then band-agreement counts over the
-  // surviving memberships, then the (agreement desc, c_id asc) rank —
-  // the exact total orders the two bounded heaps implement.
-  /** Bounded-candidate replay: per-bucket corpus cap, band-agreement
-    * counts, (agreement desc, c_id asc) top-`c` rank. `capNewSide` also
-    * caps the NEW/train side per bucket (the c7_decontaminate_fuzzy_topc
-    * form — see its scaladoc for why both sides must be bounded on a
-    * dense corpus); the incremental-dedup form leaves it off because
-    * its new side is a batch, small by contract.
-    */
-  private[queries] def topCCandidateSql(corpusCte: String, c: Int,
-      capNewSide: Boolean = false): String = {
-    val newCte =
-      if (!capNewSide) ""
-      else s"nwc AS (SELECT n_id, band, bucket FROM (SELECT n_id, band, bucket, " +
-        s"row_number() OVER (PARTITION BY band, bucket ORDER BY n_id) AS brn " +
-        s"FROM nw) WHERE brn <= $IncBucketCap), "
-    val newSide = if (capNewSide) "nwc" else "nw"
-    s"cpc AS (SELECT c_id, band, bucket FROM (SELECT c_id, band, bucket, " +
-      s"row_number() OVER (PARTITION BY band, bucket ORDER BY c_id) AS brn " +
-      s"FROM $corpusCte) WHERE brn <= $IncBucketCap), " +
-      newCte +
-      s"ag AS (SELECT n_id, c_id, count(*) AS bandsc FROM $newSide JOIN cpc " +
-      "USING (band, bucket) GROUP BY n_id, c_id), " +
-      "cand AS (SELECT n_id, c_id FROM (SELECT n_id, c_id, row_number() " +
-      "OVER (PARTITION BY n_id ORDER BY bandsc DESC, c_id) AS rn FROM ag) " +
-      s"WHERE rn <= $c)"
-  }
-
-  private lazy val incrementalTopCSql: String =
-    incrementalSqlWith(topCCandidateSql("cp", IncDedupTopC))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "c2_ngram_jaccard" -> (c2NgramJaccard _),
@@ -1524,12 +1528,12 @@ object DedupOps {
     "c2_cc_stats" -> (c2CcStats _),
     "c2_simhash" -> (c2SimHash _),
     "c2_simhash_cc" -> (c2SimHashCc _),
-    "c2_embed_neardup" -> ((s: SparkSession, d: String) => c2EmbedNearDup(s, d)),
-    "c2_incremental_dedup" -> ((s: SparkSession, d: String) => c2IncrementalDedup(s, d)),
-    "c2_incremental_dedup_indexed" -> ((s: SparkSession, d: String) => c2IncrementalDedupIndexed(s, d)),
-    "c2_incremental_dedup_topc" -> ((s: SparkSession, d: String) => c2IncrementalDedupTopC(s, d)),
-    "c2_semantic_dedup" -> ((s: SparkSession, d: String) => c2SemanticDedup(s, d)),
-    "c2_semantic_dedup_cc" -> ((s: SparkSession, d: String) => c2SemanticDedupCc(s, d)),
+    "c2_embed_neardup" -> (c2EmbedNearDup _),
+    "c2_incremental_dedup" -> (c2IncrementalDedup _),
+    "c2_incremental_dedup_indexed" -> (c2IncrementalDedupIndexed _),
+    "c2_incremental_dedup_topc" -> (c2IncrementalDedupTopC _),
+    "c2_semantic_dedup" -> (c2SemanticDedup _),
+    "c2_semantic_dedup_cc" -> (c2SemanticDedupCc _),
     "c2_lsh_recall" -> (c2LshRecall _)
   )
 }

@@ -334,9 +334,7 @@ object MultiModalOps {
         "CAST(ceil(greatest(n_frames,1) / 4.0) AS BIGINT))) AS i) gs), " +
         "base AS (SELECT asset_id AS doc_id, list_distinct(list(frame_hash)) AS toks " +
         "FROM fr GROUP BY asset_id), " +
-        DedupOps.mhChainSql() + ", " +
-        "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-        "AS bucket_min FROM mem) " +
+        DedupOps.mhChainSql() + ", " + DedupOps.bucketMinSql("doc_id", "band") + " " +
         "SELECT doc_id AS asset_id, min(bucket_min) AS cluster_rep, " +
         "doc_id = min(bucket_min) AS is_kept " +
         "FROM mm GROUP BY doc_id ORDER BY asset_id"),

@@ -538,7 +538,7 @@ object PipelineOps {
     * signatures, shuffle on 8-byte band buckets, Ω(candidates) confirm.
     */
   def c7DecontaminateFuzzy(spark: SparkSession, dir: String): DataFrame =
-    fuzzyDecontam(spark, dir, topC = None)
+    fuzzyDecontam(spark, dir, None)
 
   /** C7r': [[c7DecontaminateFuzzy]] with the BOUNDED confirm — the
     * duplicate-saturated-corpus scale path, exactly the
@@ -559,80 +559,23 @@ object PipelineOps {
     * oracle, so the approximation itself is hash-checked.
     */
   def c7DecontaminateFuzzyTopC(spark: SparkSession, dir: String): DataFrame =
-    fuzzyDecontam(spark, dir, topC = Some(FuzzyTopC))
+    fuzzyDecontam(spark, dir, Some(DedupOps.Bounded(FuzzyTopC, capNewSide = true)))
 
+  /** The DedupOps near-dup resolve with the train split as the arrivals
+    * and the held-out split as the standing corpus; the bounded form
+    * also reports every stage's pair counter (`graft_fuzzy_decontam_*`).
+    */
   private def fuzzyDecontam(spark: SparkSession, dir: String,
-      topC: Option[Int]): DataFrame = {
-    import graft.dedup.MinHash
+      bound: Option[DedupOps.Bounded]): DataFrame = {
     val d = docs(spark, dir).withColumn("sb", expr(bucketSql))
-    def toksOf(side: Column) = d.filter(side)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Persisted: each side feeds its banding pass AND the confirm join.
-    val trainToks = toksOf(col("sb") < TrainBelow)
-    val testToks = toksOf(col("sb") >= TestFrom)
-    def memOf(toks: DataFrame) = MinHash.membershipsFromSets(
-      toks, col("doc_id"), col("toks"), DedupOps.IncHashes, DedupOps.IncBands)
-    val cand = topC match {
-      case None =>
-        memOf(trainToks).withColumnRenamed("doc_id", "n_id")
-          .join(memOf(testToks).withColumnRenamed("doc_id", "c_id"),
-            Seq("band", "bucket"))
-          .select("n_id", "c_id").distinct()
-      case Some(c) =>
-        // Bounded candidate GENERATION first (the DedupOps.IncBucketCap
-        // contract: the held-out side keeps its cap smallest ids per
-        // band bucket, drops logged loudly), then band-agreement count
-        // per surviving pair and the bounded-heap top-c rerank per
-        // train doc.
-        val testCapped = DedupOps.capBuckets(
-          memOf(testToks), DedupOps.IncBucketCap,
-          "graft_fuzzy_decontam_bucket_cap")
-        // BOTH sides of the candidate join are bucket-capped. The r13
-        // per-stage counters caught the test-side-only form's growing
-        // stage red-handed: on the dense sf10 decade, agree pairs grew
-        // 13.6× per 10× docs (Σ_buckets train_members · cap — the
-        // uncapped train occupancy multiplies the cap), while every
-        // capped stage grew ≤6×. With the train side capped too, the
-        // candidate stage is O(buckets · cap²) — bounded per bucket at
-        // any duplication density; a train doc capped out of one
-        // oversized bucket keeps its 15 other bands, the same recall
-        // argument as the test-side cap. The oracle replays both caps.
-        val trainCapped = DedupOps.capBuckets(
-          memOf(trainToks), DedupOps.IncBucketCap,
-          "graft_fuzzy_decontam_train_cap")
-        // Per-stage observed counters (r12 verdict #4): pairs surviving
-        // the bucket caps (candidate generation) and pairs surviving the
-        // top-c rerank — with the caps' own drop counters and the
-        // confirm counter in resolveBatch, every stage of a scale
-        // decade is named from one run's stderr.
-        val agree = trainCapped.withColumnRenamed("doc_id", "n_id")
-          .join(testCapped.withColumnRenamed("doc_id", "c_id"),
-            Seq("band", "bucket"))
-          .groupBy("n_id", "c_id")
-          .agg(count(lit(1)).as("bandsc"))
-          .observe("graft_fuzzy_decontam_agree",
-            count(lit(1)).as("agree_pairs"))
-        val session = spark
-        import session.implicits._
-        val topk = new graft.functions.TopKAggregator[(Double, Long)](
-          c, _._1, _._2).toColumn.name("topc")
-        agree
-          .select(col("n_id"), col("bandsc").cast("double"), col("c_id"))
-          .as[(Long, Double, Long)]
-          .groupByKey(_._1)
-          .mapValues(r => (r._2, r._3))
-          .agg(topk)
-          .toDF("n_id", "topc")
-          .select(col("n_id"), explode(col("topc")).as("p"))
-          .select(col("n_id"), col("p._2").as("c_id"))
-          .observe("graft_fuzzy_decontam_topc",
-            count(lit(1)).as("reranked_pairs"))
-    }
+    val trainToks = DedupOps.tokenSets(d.filter(col("sb") < TrainBelow))
+    val testToks = DedupOps.tokenSets(d.filter(col("sb") >= TestFrom))
+    val metric = "graft_fuzzy_decontam"
+    val cand = DedupOps.candidates(DedupOps.bandMemberships(trainToks),
+      DedupOps.bandMemberships(testToks), bound, metric, stages = true)
     graft.util.CacheScope.releaseAfterMaterialize(
       DedupOps.resolveBatch(cand, trainToks, testToks, FuzzyThreshold,
-        confirmMetric =
-          if (topC.isDefined) Some("graft_fuzzy_decontam_confirmed") else None)
+        stages = bound.map(_ => metric))
         .select(col("doc_id"), (!col("is_novel")).as("contaminated"),
           col("match_id").as("test_match_id"), col("match_jaccard")),
       Seq(trainToks, testToks))
@@ -1367,37 +1310,14 @@ object PipelineOps {
           "AS mean_simpson") ++ aggs).mkString(", ") +
       " FROM per GROUP BY source, lang ORDER BY source, lang"
 
-  /** Shared fuzzy-decontamination replay (IncBands MinHash chain over
-    * the portable split buckets, exact-Jaccard confirm, best pick),
-    * parameterized on the candidate CTE so the full-candidate and
-    * bounded-top-C variants share every other stage verbatim — the
-    * incrementalSqlWith pattern applied to the split-based form.
+  /** The fuzzy-decontamination replay: the DedupOps resolve replay with
+    * the portable split buckets as the arrival/standing partition.
     */
-  private def fuzzySqlWith(candCte: String): String = {
-    s"WITH sb AS (SELECT doc_id, $bucketSqlDuck AS sb FROM documents), " +
-      "base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-      s"FROM documents WHERE $bucketSqlDuck < $TrainBelow OR $bucketSqlDuck >= $TestFrom), " +
-      DedupOps.mhChainSql(DedupOps.IncBands, DedupOps.IncRows) + ", " +
-      "nw AS (SELECT mem.doc_id AS n_id, band, bucket FROM mem " +
-      s"JOIN sb ON mem.doc_id = sb.doc_id WHERE sb.sb < $TrainBelow), " +
-      "cp AS (SELECT mem.doc_id AS c_id, band, bucket FROM mem " +
-      s"JOIN sb ON mem.doc_id = sb.doc_id WHERE sb.sb >= $TestFrom), " +
-      candCte + ", " +
-      "sc AS (SELECT n_id, c_id, " +
-      "len(list_filter(a.toks, t -> list_contains(b.toks, t))) AS common, " +
-      "len(a.toks) AS na, len(b.toks) AS nb " +
-      "FROM cand JOIN base a ON a.doc_id = cand.n_id " +
-      "JOIN base b ON b.doc_id = cand.c_id), " +
-      "cf AS (SELECT n_id, c_id, " +
-      "round(CAST(common AS DOUBLE) / (na + nb - common), 6) AS jaccard " +
-      s"FROM sc WHERE round(CAST(common AS DOUBLE) / (na + nb - common), 6) >= $FuzzyThreshold), " +
-      "best AS (SELECT n_id, c_id, jaccard, row_number() OVER " +
-      "(PARTITION BY n_id ORDER BY jaccard DESC, c_id) AS rn FROM cf) " +
-      "SELECT b.doc_id, m.c_id IS NOT NULL AS contaminated, " +
-      "m.c_id AS test_match_id, m.jaccard AS match_jaccard " +
-      s"FROM (SELECT doc_id FROM sb WHERE sb < $TrainBelow) b " +
-      "LEFT JOIN (SELECT n_id, c_id, jaccard FROM best WHERE rn = 1) m " +
-      "ON b.doc_id = m.n_id ORDER BY doc_id"
+  private def fuzzySql(bound: Option[DedupOps.Bounded]): String = {
+    val (train, test) = (s"$bucketSqlDuck < $TrainBelow", s"$bucketSqlDuck >= $TestFrom")
+    DedupOps.resolveSql(s"documents WHERE $train OR $test", train, test, bound,
+      FuzzyThreshold, "m.b_id IS NOT NULL AS contaminated, " +
+        "m.b_id AS test_match_id, m.jaccard AS match_jaccard")
   }
 
   /** The pipeline prologue replay (MinHash first-copy, lang-id
@@ -1406,11 +1326,9 @@ object PipelineOps {
     * scrubbing pipelines carry `d.text` for the span chain.
     */
   private def pipelineKeptSql(carry: String*): String =
-    "WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks " +
-      "FROM documents), " +
+    s"WITH ${DedupOps.baseSql("documents")}, " +
       DedupOps.mhChainSql(bands = 4, rows = 16) + ", " +
-      "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-      "AS bucket_min FROM mem), " +
+      DedupOps.bucketMinSql("doc_id", "band") + ", " +
       "asg AS (SELECT doc_id, doc_id = min(bucket_min) AS first_copy " +
       "FROM mm GROUP BY doc_id), " +
       TextOps.langIdCtes + ", " +
@@ -1505,27 +1423,17 @@ object PipelineOps {
     // Cross-source overlap replay: the c2_minhash_lsh cluster chain,
     // source attach, distinct (cluster, source), pair count.
     "c7_source_overlap" ->
-      (s"WITH ${DedupOps.mhBase}, " +
-        "mm AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) " +
-        "AS bucket_min FROM mem), " +
+      (s"WITH ${DedupOps.mhBase}, ${DedupOps.bucketMinSql("doc_id", "band")}, " +
         "asg AS (SELECT doc_id, min(bucket_min) AS rep FROM mm GROUP BY doc_id), " +
         "cs AS (SELECT DISTINCT rep, source FROM asg JOIN documents USING (doc_id)) " +
         "SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_clusters " +
         "FROM cs a JOIN cs b ON a.rep = b.rep AND a.source < b.source " +
         "GROUP BY 1, 2 ORDER BY 1, 2"),
-    // Fuzzy decontamination: the incremental-dedup replay (IncBands
-    // MinHash chain, band-bucket candidates, exact-Jaccard confirm,
-    // (jaccard desc, id asc) best pick) with the portable split buckets
-    // as the batch/corpus partition.
-    "c7_decontaminate_fuzzy" -> fuzzySqlWith(
-      "cand AS (SELECT DISTINCT n_id, c_id FROM nw JOIN cp USING (band, bucket))"),
-    // Top-C replay: the shared bounded-candidate chain (per-bucket caps
-    // on BOTH sides — train occupancy would otherwise multiply the
-    // test cap on a dense corpus, the r13 decade finding — then
-    // band-agreement counts and the (agreement desc, c_id asc) rank,
-    // the exact total orders the bounded heaps implement).
-    "c7_decontaminate_fuzzy_topc" -> fuzzySqlWith(
-      DedupOps.topCCandidateSql("cp", FuzzyTopC, capNewSide = true)),
+    // Fuzzy decontamination: the DedupOps resolve replay over the split
+    // buckets; the top-c form replays both bucket caps and the rerank.
+    "c7_decontaminate_fuzzy" -> fuzzySql(None),
+    "c7_decontaminate_fuzzy_topc" ->
+      fuzzySql(Some(DedupOps.Bounded(FuzzyTopC, capNewSide = true))),
     // Fixed-round min-propagation closure over the replayed MinHash
     // memberships (the c2_minhash_cc oracle chain — linear per round,
     // so this replays above the sf0.01 gate too), then the

@@ -1984,10 +1984,10 @@ object SimOps {
       rescoreSql("sc", "cp") + ", " + topKSql("pr", "sc", 3) +
       " SELECT q_id AS a_id, rank, b_id, cosine FROM pr ORDER BY a_id, rank"
     // SemDeDup replay (DedupOps.c2SemanticDedup): within-cell pairs at
-    // cosine >= 0.35 (the corpus's embed-neardup threshold).
+    // the corpus's embed-neardup cosine.
     val semCtes = s"$embCte, ${codebookSql(cents)}, ${cellPairsSql("<")}, " +
       rescoreSql("sc", "cp") + ", " +
-      "ed AS (SELECT q_id AS a_id, b_id FROM sc WHERE cosine >= 0.35)"
+      s"ed AS (SELECT q_id AS a_id, b_id FROM sc WHERE cosine >= ${DedupOps.NearDupCosine})"
     // The min-neighbor propagation round.
     val semSql =
       s"WITH $semCtes, " +
