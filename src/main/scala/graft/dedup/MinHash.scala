@@ -187,41 +187,9 @@ object MinHash {
       bands: Int = 16,
       threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-
-    val base = df.select(id.as("doc_id"), tokenSet(text).as("toks"))
-      .withColumn("sig", signature(col("toks"), numHashes))
-
-    // One row per (doc, band); bucket key = portable hash of the band's
-    // signature slice. The band salt keeps identical slices in different
-    // bands from colliding into one bucket.
-    val banded = base.select(
-      col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => bandBucket(b, slice(col("sig"), b * rows + 1, lit(rows))))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-
-    // Skew guard: drop pathologically large buckets (they would generate
-    // |bucket|² candidates; near-identical members are still found through
-    // their other bands).
-    val bucketed = banded
-      .groupBy("band", "bucket")
-      .agg(collect_list(col("doc_id")).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-
-    // Within-bucket ordered pairs, de-duplicated across bands.
-    val candidates = bucketed
-      .select(explode(col("members")).as("a_id"), col("members"))
-      .select(col("a_id"), explode(col("members")).as("b_id"))
-      .filter(col("a_id") < col("b_id"))
-      .distinct()
-
     // Exact Jaccard confirmation on candidates only.
-    val sets = base.select(col("doc_id"), col("toks"))
-    candidates
+    val sets = df.select(id.as("doc_id"), tokenSet(text).as("toks"))
+    bucketPairs(memberships(df, id, text, numHashes, bands), Seq("band", "bucket"), maxBucket)
       .join(sets.select(col("doc_id").as("a_id"), col("toks").as("a_toks")), "a_id")
       .join(sets.select(col("doc_id").as("b_id"), col("toks").as("b_toks")), "b_id")
       .withColumn("common", size(array_intersect(col("a_toks"), col("b_toks"))))
@@ -231,4 +199,25 @@ object MinHash {
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("common"), round(col("jaccard"), 6).as("jaccard"))
   }
+
+  /** Within-bucket candidate pairs of `memberships` (doc_id, <keyCols>,
+    * <carry>): for every bucket holding 2 to `maxBucket` members, each
+    * pair of its members with a_id < b_id, de-duplicated across buckets,
+    * as `(a_id, b_id, a_<c>, b_<c>, …)` for each `carry` column. The size
+    * cap is the skew guard: a pathological bucket would generate
+    * |bucket|² candidates, and near-identical members still meet through
+    * their other buckets.
+    */
+  private[dedup] def bucketPairs(memberships: DataFrame, keyCols: Seq[String],
+      maxBucket: Int, carry: String*): DataFrame =
+    memberships
+      .groupBy(keyCols.map(col): _*)
+      .agg(collect_list(struct(col("doc_id") +: carry.map(col): _*)).as("members"))
+      .filter(size(col("members")).between(2, maxBucket))
+      .select(explode(col("members")).as("a"), col("members"))
+      .select(col("a"), explode(col("members")).as("b"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("a_id") +: col("b.doc_id").as("b_id") +:
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c"))): _*)
+      .distinct()
 }

@@ -99,46 +99,10 @@ object SimHash {
       id: Column,
       text: Column,
       maxHamming: Int = 3,
-      maxBucket: Int = 1000): DataFrame = {
-    val blocks = maxHamming + 1
-    val blockWidth = (Bits + blocks - 1) / blocks
-
-    val fp = df.select(
-      id.as("doc_id"),
-      fingerprint(MinHash.tokenSet(text)).as("fp"))
-
-    // (block index, block bits) bucketing; final (short) block masked to
-    // its true width.
-    val banded = fp.select(
-      col("doc_id"), col("fp"),
-      posexplode(transform(
-        sequence(lit(0), lit(blocks - 1)),
-        b => {
-          val width = least(lit(blockWidth), lit(Bits) - b * blockWidth)
-          val mask = call_function("shiftleft", lit(1L), width.cast("int")) - 1L
-          call_function("shiftrightunsigned", col("fp"), (b * blockWidth).cast("int"))
-            .bitwiseAND(mask)
-        })))
-      .withColumnRenamed("pos", "block")
-      .withColumnRenamed("col", "bucket")
-
-    val bucketed = banded
-      .groupBy("block", "bucket")
-      .agg(collect_list(struct(col("doc_id"), col("fp"))).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-
-    val pairs = bucketed
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(col("a"), explode(col("members")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.fp").as("a_fp"), col("b.fp").as("b_fp"))
-      .distinct()
-
-    pairs
+      maxBucket: Int = 1000): DataFrame =
+    MinHash.bucketPairs(memberships(df, id, text, maxHamming), Seq("block", "bucket"),
+        maxBucket, "fp")
       .withColumn("hamming", bit_count(col("a_fp").bitwiseXOR(col("b_fp"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
-  }
 }

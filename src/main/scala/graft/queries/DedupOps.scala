@@ -252,8 +252,9 @@ object DedupOps {
 
   /** C2d: embedding-cosine near-duplicates — sign-LSH bucketed candidate
     * pairs (plus Hamming-1 multi-probe on one side) confirmed by exact
-    * cosine >= 0.9. Rows-only driver check; recall vs brute force is
-    * asserted in DedupSpec. O(n·probes) shuffle, no all-pairs stage.
+    * cosine >= [[NearDupCosine]]. Rows-only driver check; recall vs brute
+    * force is asserted in DedupSpec. O(n·probes) shuffle, no all-pairs
+    * stage.
     */
   def c2EmbedNearDup(spark: SparkSession, dir: String): DataFrame = {
     // Persisted: the sketch column (tables×bits hyperplane dots per row) is
@@ -263,23 +264,15 @@ object DedupOps {
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embD"))
       .withColumn("buckets", SimOps.lshBuckets(col("embD"), EmbedTables, EmbedBits))
-    val a = base.select(col("vec_id").as("a_id"), col("embD").as("a_emb"),
-      SimOps.explodeBuckets(col("buckets"), EmbedBits, probe = true))
-      .withColumnRenamed("pos", "tbl")
-      .select(col("a_id"), col("a_emb"), col("tbl"), explode(col("col")).as("bucket"))
-    val b = base.select(col("vec_id").as("b_id"), col("embD").as("b_emb"),
-      SimOps.explodeBuckets(col("buckets"), EmbedBits, probe = false))
-      .withColumnRenamed("pos", "tbl")
-      .withColumn("bucket", element_at(col("col"), 1))
-      .drop("col")
     // Dedup candidate pairs on ids ONLY (an 8-byte shuffle row), then
     // re-attach vectors via shuffle hash joins on id — never shuffle the
     // embeddings through the distinct, and never broadcast a corpus-sized
     // table (both re-attach sides here are the FULL embeddings table; a
     // broadcast would replicate the whole corpus to every executor).
-    val pairs = a.drop("a_emb").join(b.drop("b_emb"), Seq("tbl", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
+    val pairs = SimOps.lshCand(
+      SimOps.bucketRows(base, "a_id", EmbedBits, probe = true),
+      SimOps.bucketRows(base, "b_id", EmbedBits, probe = false),
+      "a_id", col("a_id") < col("b_id"))
     val vecs = base.select(col("vec_id"), col("embD"))
     graft.util.CacheScope.releaseAfterMaterialize(
       pairs

@@ -186,18 +186,17 @@ object Relational {
     * column is typed nullable (the NAAJ plan is exercised — pinned in
     * RelationalSpec) while no null actually occurs (custkeys are
     * positive), so the result stays the non-degenerate anti-join rows
-    * rather than the empty set the trap produces.
+    * rather than the empty set the trap produces. Built with the
+    * DataFrame subquery API (`isin(Dataset)`), so it registers no
+    * session view for a long-lived session to keep or for a concurrent
+    * build over another dir to resolve.
     */
   def b3JoinNotIn(spark: SparkSession, dir: String): DataFrame = {
-    t(spark, dir, "customer").createOrReplaceTempView("graft_b3_customer")
-    t(spark, dir, "orders").createOrReplaceTempView("graft_b3_orders")
-    spark.sql(
-      """SELECT c_custkey, c_name
-        |FROM graft_b3_customer
-        |WHERE c_custkey NOT IN
-        |  (SELECT nullif(o_custkey, -1) FROM graft_b3_orders
-        |   WHERE o_totalprice > 400000.0)
-        |ORDER BY c_custkey""".stripMargin)
+    val o = t(spark, dir, "orders").filter(col("o_totalprice") > 400000.0)
+    t(spark, dir, "customer")
+      .filter(!col("c_custkey").isin(o.select(nullif(col("o_custkey"), lit(-1)))))
+      .select("c_custkey", "c_name")
+      .orderBy("c_custkey")
   }
 
   /** B4: ranking window — top-3 orders per customer by price. */
@@ -338,7 +337,9 @@ object Relational {
 
   /** B5d: correlated subqueries — customers above their nation's average
     * balance (a correlated SCALAR subquery) in nations that have at
-    * least one negative balance (a correlated EXISTS). Expressed in SQL
+    * least one negative balance (a correlated EXISTS), written with the
+    * DataFrame subquery API (`scalar`, `exists`, `outer`) — the same
+    * plan the SQL text gave, with no session view. Correlated subqueries
     * because the surface under test is Catalyst's DECORRELATION: the
     * optimizer must rewrite both subqueries into aggregate + join plans
     * (no per-row subquery execution exists in Spark's engine at all —
@@ -347,20 +348,17 @@ object Relational {
     * fold order enters the predicate and the oracle matches bitwise.
     */
   def b5SubqueryCorr(spark: SparkSession, dir: String): DataFrame = {
-    t(spark, dir, "customer").createOrReplaceTempView("graft_b5_customer")
-    spark.sql(
-      """SELECT c_custkey, c_nationkey, c_acctbal
-        |FROM graft_b5_customer o
-        |WHERE CAST(c_acctbal AS DECIMAL(18,6)) *
-        |        (SELECT COUNT(*) FROM graft_b5_customer i
-        |         WHERE i.c_nationkey = o.c_nationkey)
-        |      > (SELECT SUM(CAST(c_acctbal AS DECIMAL(18,6)))
-        |         FROM graft_b5_customer i2
-        |         WHERE i2.c_nationkey = o.c_nationkey)
-        |  AND EXISTS (SELECT 1 FROM graft_b5_customer e
-        |              WHERE e.c_nationkey = o.c_nationkey
-        |                AND e.c_acctbal < 0)
-        |ORDER BY c_custkey""".stripMargin)
+    def c(alias: String): DataFrame = t(spark, dir, "customer").as(alias)
+    def sameNation(alias: String): Column =
+      col(s"$alias.c_nationkey") === col("o.c_nationkey").outer()
+    val n = c("i").where(sameNation("i")).select(count(lit(1))).scalar()
+    val total = c("i2").where(sameNation("i2"))
+      .select(sum(col("c_acctbal").cast("decimal(18,6)"))).scalar()
+    val anyNegative = c("e").where(sameNation("e") && col("e.c_acctbal") < 0)
+      .select(lit(1)).exists()
+    c("o").where(col("c_acctbal").cast("decimal(18,6)") * n > total && anyNegative)
+      .select("c_custkey", "c_nationkey", "c_acctbal")
+      .orderBy("c_custkey")
   }
 
   /** B6: ROLLUP — revenue by (nation, order-year) with subtotals and a

@@ -51,59 +51,30 @@ object SimOps {
 
   private def asDouble(a: Column): Column = a.cast("array<double>")
 
-  /** The cosine every ANN, semantic-dedup and semantic-gate query ranks
-    * and thresholds on: rounded to 6 dp, the value the oracle hashes,
-    * and rounded BEFORE any rank window so fold-order drift between
-    * engines cannot flip a rank.
-    */
-  private[graft] def cosine6(a: Column, b: Column): Column =
-    round(dotD(a, b) / (normD(a) * normD(b)), 6)
+  // The fixed parameters of the c3 keys. The Spark plans and their DuckDB
+  // replays both render these, so a replay cannot drift from its plan.
 
-  /** The IVF cell a vector is assigned to, from its squared-L2 `dists`
-    * to the codebook: the 1-based FIRST minimum (the tie-break the
-    * Scala-side [[nearestCell]] and the oracle's `list_position` share).
+  /** k of every c3 top-k, recall and kNN vote. */
+  private[queries] val TopK = 5
+  /** Query subset of the ANN and recall keys (and of c3_cosine_topk). */
+  private[queries] val AnnQueryMod = 100
+  /** Probes per query of the IVF and PQ keys. */
+  private[queries] val AnnNprobe = 4
+  /** Code shape of the in-plan and fixed-layout IVFADC keys. */
+  private[queries] val PqSubspaces = 8
+  private[queries] val PqKSub = 16
+  /** c3_ann_lsh's sketch: L = 16 tables × 8 bits. */
+  private[queries] val LshTables = 16
+  private[queries] val LshBits = 8
+  /** c3_range_search's query subset and cosine floor (0.25 is exact in
+    * binary, so no boundary row can hash-flip between engines).
     */
-  private[graft] def assignCell(dists: Column): Column =
-    array_position(dists, array_min(dists)).cast("int")
-
-  /** The `nprobe` cells a query probes, nearest first: the (dist, cell)
-    * structs sorted ascending, cut to the first `nprobe`. Indices run
-    * over `nTrained`, the TRAINED codebook length, NOT the requested
-    * cell count — on a corpus smaller than the request the codebook is
-    * shorter (one cell per vector), and a zip against a longer index
-    * list would null-pad: the null-distance structs sort FIRST and
-    * every probe would be a phantom cell (silently empty results).
-    */
-  private[graft] def probeCells(dists: Column, nTrained: Int, nprobe: Int): Column =
-    slice(transform(array_sort(zip_with(dists, sequence(lit(1), lit(nTrained)),
-      (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
-      lit(1), lit(math.min(nprobe, nTrained)))
-
-  /** Rank `scored` rows per `key` by (cosine desc, b_id) and keep rank ≤ k. */
-  private def rankByCosine(scored: DataFrame, k: Int, key: String = "q_id"): DataFrame =
-    scored
-      .withColumn("rank", row_number().over(Window.partitionBy(col(key))
-        .orderBy(col("cosine").desc, col("b_id"))))
-      .filter(col("rank") <= k)
-
-  /** The ANN rescore tail: distinct (q_id, b_id) candidate `pairs` get
-    * their corpus vectors back through an explicit shuffle hash join on
-    * id against `vecs` (vec_id, embD) — so no plan ever replicates the
-    * full embeddings table to every executor — and only then their
-    * query vectors, through a broadcast of the `isQ` rows (genuinely
-    * small, the filtered side), so the shuffle carries id pairs, not
-    * query vectors; then [[cosine6]] and the per-query top-k.
-    * Output (q_id, rank, b_id, cosine), unordered.
-    */
-  private def rescoreTopK(pairs: DataFrame, vecs: DataFrame, isQ: Column,
-      k: Int): DataFrame =
-    rankByCosine(pairs
-      .join(vecs.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
-        .hint("shuffle_hash"), "b_id")
-      .join(broadcast(vecs.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
-      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb"))), k)
-      .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
+  private[queries] val RangeQueryMod = 50
+  private[queries] val RangeTau = 0.25
+  /** c3_knn_classify's query subset. */
+  private[queries] val KnnQueryMod = 20
+  /** Neighbors per vector of c3_knn_join. */
+  private[queries] val KnnJoinM = 3
 
   /** Benchmark instantiation of a caller-supplied query table: the first
     * [[MaxQueries]] multiples of `queryMod`. The cap is what makes the
@@ -127,105 +98,378 @@ object SimOps {
   private def queryPredSql(queryMod: Int, ref: String = "vec_id"): String =
     s"$ref % $queryMod = 0 AND $ref < ${queryMod.toLong * MaxQueries}"
 
-  /** Exact-cosine top-k join shared by the brute-force and kNN-vote
-    * queries: broadcast the (small-by-contract) query side, theta-join
-    * on q_id <> b_id, score at round-6, rank per query by (cosine desc,
-    * b_id). Keeps every column of both inputs plus (cosine, rank) so
-    * callers can carry labels through.
-    */
-  private def exactCosineTopK(corpus: DataFrame, queries: DataFrame,
-      k: Int): DataFrame =
-    rankByCosine(corpus.join(broadcast(queries), col("q_id") =!= col("b_id"))
-      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb"))), k)
+  // The vector vocabulary: each rule once as a Spark function and, next
+  // to it, once as the DuckDB renderer of the replays (the ANN, semantic
+  // dedup and semantic gate oracles, and DedupOps' c2_embed_neardup).
 
-  /** C3a: exact cosine top-k (k=5) of every corpus vector for each query
-    * vector. Scores rounded to 6 decimals; ties broken by neighbor id in
-    * both engines.
-    *
-    * `queryMod` selects the query subset (the first [[MaxQueries]]
-    * multiples of queryMod, see [[isQuery]]) — the oracle-stable,
-    * corpus-size-BOUNDED stand-in for a caller-supplied query table. In
-    * production the query side is whatever small DataFrame the caller
-    * passes; only its smallness matters (it is the broadcast side).
+  /** Render a literal double matrix as a DuckDB nested-list literal.
+    * Java's `Double.toString` emits the shortest decimal that round-trips,
+    * so DuckDB parses back bit-identical doubles — the planes/centroids in
+    * the oracle SQL are exactly the plan literals.
     */
-  def c3CosineTopK(spark: SparkSession, dir: String, k: Int = 5,
-      queryMod: Int = 100): DataFrame = {
-    val corpus = emb(spark, dir)
-      .select(col("vec_id").as("b_id"), asDouble(col("embedding")).as("b_emb"))
-    val queries = emb(spark, dir)
-      .filter(isQuery(col("vec_id"), queryMod))
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-    exactCosineTopK(corpus, queries, k)
+  private[queries] def matLit(m: Seq[Seq[Double]]): String =
+    m.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
+
+  /** The embeddings as `e(vec_id, v, label)`, `v` cast as [[embVecs]]. */
+  private[queries] val embCte =
+    "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings)"
+
+  /** The cosine every ANN, semantic-dedup and semantic-gate query ranks
+    * and thresholds on: rounded to 6 dp, the value the oracle hashes,
+    * and rounded BEFORE any rank window so fold-order drift between
+    * engines cannot flip a rank.
+    */
+  private[graft] def cosine6(a: Column, b: Column): Column =
+    round(dotD(a, b) / (normD(a) * normD(b)), 6)
+
+  /** [[cosine6]]. */
+  private def cosineSql(a: String, b: String): String =
+    s"round(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * " +
+      s"sqrt(list_dot_product($b, $b))), 6)"
+
+  /** The squared L2 the exact-L2 recall references rank by: dot(a,a) +
+    * dot(b,b) − 2·dot(a,b), three sequential-fold dot products, rounded
+    * to 6 dp before any rank window.
+    */
+  private def l2sq(a: Column, b: Column): Column =
+    round(dotD(a, a) + dotD(b, b) - lit(2.0) * dotD(a, b), 6)
+
+  /** [[l2sq]]. */
+  private def l2sqSql(a: String, b: String): String =
+    s"round(list_dot_product($a, $a) + list_dot_product($b, $b) " +
+      s"- 2*list_dot_product($a, $b), 6)"
+
+  /** The two scores of a (q_emb, b_emb) row, named as the oracles name them. */
+  private def cosineScore: Column = cosine6(col("q_emb"), col("b_emb")).as("cosine")
+  private def l2sqScore: Column = l2sq(col("q_emb"), col("b_emb")).as("l2sq")
+
+  /** The IVF cell a vector is assigned to, from its squared-L2 `dists`
+    * to the codebook: the 1-based FIRST minimum (the tie-break the
+    * Scala-side [[nearestCell]] and the oracle's `list_position` share).
+    */
+  private[graft] def assignCell(dists: Column): Column =
+    array_position(dists, array_min(dists)).cast("int")
+
+  /** [[assignCell]] over a `dists` column. */
+  private val assignSql = "CAST(list_position(dists, list_min(dists)) AS INT)"
+
+  /** The codebook `cents` as `ct<tag>(c)`, every row of `src(vec_id, v)`
+    * with its squared-L2 `dists` to it as `d<tag>(vec_id, v, dists)`
+    * (materialized: assignment, probes and residuals all read it), and
+    * the assignment `asg<tag>(vec_id, v, cell)`.
+    */
+  private def codebookSql(cents: Seq[Seq[Double]], src: String = "e",
+      tag: String = ""): String =
+    s"ct$tag AS (SELECT ${matLit(cents)} AS c), " +
+      s"d$tag AS MATERIALIZED (SELECT vec_id, v, " +
+      s"list_transform(range(1, ${cents.length + 1}), k -> " +
+      "list_sum(list_transform(range(1, 65), j -> (v[j]-c[k][j])*(v[j]-c[k][j])))) " +
+      s"AS dists FROM $src CROSS JOIN ct$tag), " +
+      s"asg$tag AS (SELECT vec_id, v, $assignSql AS cell FROM d$tag)"
+
+  /** The `nprobe` cells a query probes, nearest first: the (dist, cell)
+    * structs sorted ascending, cut to the first `nprobe`. Indices run
+    * over `nTrained`, the TRAINED codebook length, NOT the requested
+    * cell count — on a corpus smaller than the request the codebook is
+    * shorter (one cell per vector), and a zip against a longer index
+    * list would null-pad: the null-distance structs sort FIRST and
+    * every probe would be a phantom cell (silently empty results).
+    */
+  private[graft] def probeCells(dists: Column, nTrained: Int, nprobe: Int): Column =
+    slice(transform(array_sort(zip_with(dists, sequence(lit(1), lit(nTrained)),
+      (d, i) => struct(d.as("d"), i.as("i")))), s => s.getField("i")),
+      lit(1), lit(math.min(nprobe, nTrained)))
+
+  /** [[probeCells]] of the `d<tag>` rows matching `pred`, as
+    * `qs<tag>(q_id, v, cell)`, one row per probed cell.
+    */
+  private def probesSql(nTrained: Int, nprobe: Int, pred: String,
+      tag: String = ""): String =
+    s"qs$tag AS (SELECT vec_id AS q_id, v, unnest(list_transform(list_slice(" +
+      s"list_sort(list_transform(range(1, ${nTrained + 1}), k -> " +
+      s"[dists[k], CAST(k AS DOUBLE)])), 1, ${math.min(nprobe, nTrained)}), " +
+      s"s -> CAST(s[2] AS BIGINT))) AS cell FROM d$tag WHERE $pred)"
+
+  /** IVF candidates: every `vecs` (vec_id, embD) row assigned to its
+    * nearest `cents` cell, each `isQ` row probing its `nprobe` nearest
+    * cells (broadcast — the small query side), joined on the cell.
+    * Distinct (q_id, b_id) id pairs, q_id ≠ b_id.
+    */
+  private def ivfCandidates(vecs: DataFrame, isQ: Column,
+      cents: Seq[Seq[Double]], nprobe: Int): DataFrame = {
+    // squared L2 to each centroid — native fused pass (CentroidDists),
+    // same fold order as the HOF form (asserted in VectorExprsSpec).
+    def withDists(df: DataFrame): DataFrame = df.withColumn("dists",
+      graft.functions.VectorExprs.centroidDists(col("embD"), cents))
+    val corpus = withDists(vecs)
+      .select(col("vec_id").as("b_id"), assignCell(col("dists")).as("cell"))
+    val queries = withDists(vecs.filter(isQ))
+      .select(col("vec_id").as("q_id"),
+        explode(probeCells(col("dists"), cents.length, nprobe)).as("cell"))
+    corpus.join(broadcast(queries), Seq("cell"))
+      .filter(col("q_id") =!= col("b_id"))
+      .select("q_id", "b_id").distinct()
+  }
+
+  /** [[ivfCandidates]] as `cand<tag>(q_id, b_id)`: each probe's other
+    * vectors in the probed cell, narrowed by `on` (aliases: `q` the
+    * probe, `a` the corpus assignment).
+    */
+  private def ivfCandSql(on: String = "", tag: String = ""): String =
+    s"cand$tag AS MATERIALIZED (SELECT DISTINCT q.q_id, a.vec_id AS b_id " +
+      s"FROM asg$tag a JOIN qs$tag q ON a.cell = q.cell AND q.q_id <> a.vec_id$on)"
+
+  /** Within-cell pairs of an assigned corpus: (cell, a_id, a_emb, b_id,
+    * b_emb, cosine) for every same-cell pair `keep` admits.
+    */
+  private[queries] def cellPairs(assigned: DataFrame, keep: Column): DataFrame =
+    assigned
+      .select(col("cell"), col("vec_id").as("a_id"), col("embD").as("a_emb"))
+      .join(assigned.select(col("cell"), col("vec_id").as("b_id"),
+        col("embD").as("b_emb")), Seq("cell"))
+      .filter(keep)
+      .withColumn("cosine", cosine6(col("a_emb"), col("b_emb")))
+
+  /** [[cellPairs]]: vectors sharing an `asg` cell with
+    * `a.vec_id <op> b.vec_id`, as `cp(q_id, b_id)`.
+    */
+  private def cellPairsSql(op: String): String =
+    "cp AS (SELECT a.vec_id AS q_id, b.vec_id AS b_id FROM asg a JOIN asg b " +
+      s"ON a.cell = b.cell AND a.vec_id $op b.vec_id)"
+
+  /** The rescore of distinct (q_id, b_id) candidate `pairs`: their corpus
+    * vectors come back through an explicit shuffle hash join on id
+    * against `vecs` (vec_id, embD) — so no plan ever replicates the full
+    * embeddings table to every executor — and only then their query
+    * vectors, through a broadcast of the `isQ` rows (genuinely small, the
+    * filtered side), so the shuffle carries id pairs, not query vectors;
+    * then `score` of (q_emb, b_emb).
+    */
+  private def rescore(pairs: DataFrame, vecs: DataFrame, isQ: Column,
+      score: Column): DataFrame =
+    pairs
+      .join(vecs.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
+        .hint("shuffle_hash"), "b_id")
+      .join(broadcast(vecs.filter(isQ)
+        .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
+      .select(col("*"), score)
+
+  /** The ANN tail: [[rescore]] by cosine, then the per-query top-k.
+    * Output (q_id, rank, b_id, cosine), unordered.
+    */
+  private def rescoreTopK(pairs: DataFrame, vecs: DataFrame, isQ: Column): DataFrame =
+    topK(rescore(pairs, vecs, isQ, cosineScore), TopK)
       .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
+
+  /** [[rescore]] of the pairs `cand(q_id, b_id)` against `src(vec_id, v)`,
+    * as `<name>(q_id, b_id, <score>)`; `x` is the query, `y` the corpus
+    * vector, and the score [[cosine6]] unless given.
+    */
+  private[queries] def rescoreSql(name: String, cand: String, src: String = "e",
+      score: String = s"${cosineSql("x.v", "y.v")} AS cosine"): String =
+    s"$name AS (SELECT q_id, b_id, $score FROM $cand " +
+      s"JOIN $src x ON x.vec_id = $cand.q_id JOIN $src y ON y.vec_id = $cand.b_id)"
+
+  /** The exact scan's two sides over the embeddings: the corpus
+    * `(b_id, b_emb, …)` and its query subset `(q_id, q_emb, …)` ([[isQuery]]
+    * at `queryMod`), each with its half of every `carry` pair
+    * (corpus-side column, query-side column).
+    */
+  private def exactSides(spark: SparkSession, dir: String, queryMod: Int,
+      carry: (Column, Column)*): (DataFrame, DataFrame) =
+    (emb(spark, dir).select(col("vec_id").as("b_id") +:
+      asDouble(col("embedding")).as("b_emb") +: carry.map(_._1): _*),
+      emb(spark, dir).filter(isQuery(col("vec_id"), queryMod)).select(
+        col("vec_id").as("q_id") +: asDouble(col("embedding")).as("q_emb") +:
+          carry.map(_._2): _*))
+
+  /** The exact scan: every row of `queries` scored by `score` against
+    * every other `corpus` row with equal `on` columns. The query side is
+    * broadcast (small by contract) and the corpus scan stays narrow — at
+    * 1000 executors a map-side join over an arbitrarily large corpus, no
+    * corpus shuffle at all.
+    */
+  private def exact(corpus: DataFrame, queries: DataFrame, score: Column,
+      on: String*): DataFrame = {
+    val q = broadcast(queries)
+    corpus.join(q, on.foldLeft(col("q_id") =!= col("b_id"))((c, k) => c && corpus(k) === q(k)))
+      .select(col("*"), score)
+  }
+
+  /** [[exact]]: every `src` vector `x` matching `on` scored against
+    * every other vector `y`, as `<name>(q_id, b_id, <score>)`.
+    */
+  private def exactSql(name: String, on: String, src: String = "e",
+      score: String = s"${cosineSql("x.v", "y.v")} AS cosine"): String =
+    s"$name AS (SELECT x.vec_id AS q_id, y.vec_id AS b_id, $score " +
+      s"FROM $src x JOIN $src y ON $on AND x.vec_id <> y.vec_id)"
+
+  /** Rank `scored` rows per `key` by (`order`, b_id) and keep rank ≤ k. */
+  private def topK(scored: DataFrame, k: Int, order: Column = col("cosine").desc,
+      key: String = "q_id"): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(Window.partitionBy(col(key))
+        .orderBy(order, col("b_id"))))
+      .filter(col("rank") <= k)
+
+  /** [[topK]]: the `from` rows ranked per q_id by (`order`, b_id), rank ≤ k
+    * kept, as `<name>(…, rank)`.
+    */
+  private def topKSql(name: String, from: String, k: Int,
+      order: String = "cosine DESC"): String =
+    s"$name AS (SELECT * FROM (SELECT *, CAST(row_number() OVER " +
+      s"(PARTITION BY q_id ORDER BY $order, b_id) AS INT) AS rank FROM $from) " +
+      s"WHERE rank <= $k)"
+
+  /** The ANN result over a scored `from(q_id, b_id, cosine)`. */
+  private def annTopKTail(from: String): String =
+    topKSql("r", from, TopK) + " SELECT q_id, rank, b_id, cosine FROM r ORDER BY q_id, rank"
+
+  /** Per-query hit counts of `ann` against the brute-force top-k: one
+    * row per query with `n_hits` = |ann ∩ brute-force| (0 for queries
+    * the ANN missed entirely). Shared by the recall queries; the
+    * downstream frame is query-set-sized, never corpus-sized.
+    */
+  private def recallHits(ann: DataFrame, bf: DataFrame): DataFrame = {
+    // The ground-truth side feeds TWO branches of this frame (the hit
+    // semi join and the distinct-q_id spine), and several callers read
+    // the returned frame more than once — unpersisted, the brute-force
+    // top-k subtree (an |queries| × corpus cosine pass plus its rank
+    // window) re-executed once per branch inside the final plan
+    // (measured: ~3 s of c3_ann_staleness's ~7 s steady state at
+    // sf0.1). Persist it for the result's lifetime; CacheScope releases
+    // it after the first action that materializes a plan containing
+    // this frame.
+    val bfp = bf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hits = bfp.join(ann, Seq("q_id", "b_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
+    graft.util.CacheScope.releaseAfterMaterialize(
+      bfp.select(col("q_id")).distinct()
+        .join(hits, Seq("q_id"), "left")
+        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L))),
+      Seq(bfp))
+  }
+
+  /** [[recallHits]]: per query, |truth ∩ ann| as `<name>(q_id, n_hits)`. */
+  private def hitsSql(name: String, truth: String, ann: String): String =
+    s"$name AS (SELECT q_id, count(*) AS n_hits FROM $truth JOIN $ann " +
+      "USING (q_id, b_id) GROUP BY q_id)"
+
+  private def nHitsSql(h: String): String = s"CAST(COALESCE($h.n_hits, 0) AS BIGINT)"
+
+  /** Name of the per-query recall column. */
+  private val RecallAt = s"recall_at_$TopK"
+
+  /** Per-query recall@k of an `n_hits` column. */
+  private def recall(nHits: Column): Column = round(nHits.cast("double") / TopK, 6)
+
+  /** [[recall]]. */
+  private def recallSql(h: String): String =
+    s"round(COALESCE($h.n_hits, 0) / $TopK.0, 6)"
+
+  /** Every row of a per-query frame: the window of the query-set means
+    * (bounded by the caller's query set, never the corpus).
+    */
+  private val querySet =
+    Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
+  /** The query-set mean recall as one integer sum (no float fold order). */
+  private def meanRecall(nHits: Column): Column =
+    round(sum(nHits).over(querySet).cast("double") /
+      (lit(TopK) * count(lit(1)).over(querySet)), 6)
+
+  /** [[meanRecall]]. */
+  private def meanRecallSql(h: String): String =
+    s"round(sum(COALESCE($h.n_hits, 0)) OVER () / ($TopK.0 * count(*) OVER ()), 6)"
+
+  /** The mean-recall monitors over their [[recallHits]]: recall@k, the
+    * query-set mean and the in-plan bound claim `mean_recall_ok` (the
+    * replay renders it as literal TRUE: the bound lives in the plan).
+    */
+  private def meanRecallTail(hits: DataFrame, bound: Double): DataFrame =
+    hits
+      .withColumn(RecallAt, recall(col("n_hits")))
+      .withColumn("mean_recall", meanRecall(col("n_hits")))
+      .withColumn("mean_recall_ok", col("mean_recall") >= bound)
+      .orderBy("q_id")
+
+  /** The cosine recall chain over a `cand(q_id, b_id)` in scope: the
+    * rescored ANN top-k `ann`, the exact top-k `bf` of the same query
+    * set and their `hits`.
+    */
+  private def recallCtes: String =
+    Seq(rescoreSql("sc", "cand"), topKSql("ann", "sc", TopK),
+      exactSql("bsc", queryPredSql(AnnQueryMod, "x.vec_id")), topKSql("bf", "bsc", TopK),
+      hitsSql("hits", "bf", "ann")).mkString(", ")
+
+  /** One recall row per query of `bf`: n_hits, recall@k, `extra`. */
+  private def recallTail(extra: String): String =
+    s"SELECT q.q_id, ${nHitsSql("h")} AS n_hits, ${recallSql("h")} AS $RecallAt, " +
+      s"$extra FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id) " +
+      "ORDER BY q_id"
+
+  /** The ADC ranking tail shared by the in-plan and indexed PQ queries:
+    * candidates from the cell join, asymmetric distances from the
+    * per-probe lookup tables, per-query top-k.
+    *
+    * Each corpus vector lives in exactly one cell and probes are
+    * distinct, so (q_id, b_id) pairs are already unique — the ADC joins
+    * back on (q_id, cell) to pick the matching per-probe table. `adc` is
+    * rounded to 6dp BEFORE the rank window (the annTopKTail posture):
+    * ranking on the raw double would make the hash depend on DuckDB's
+    * list_sum reproducing Spark's left-to-right fold bit-for-bit — a
+    * sub-1e-6 near-tie from a different summation order would flip ranks.
+    *
+    * `matchCols` are the candidate-join keys: `cell` alone is the plain
+    * IVF probe; adding an attribute column (both sides must carry it)
+    * restricts candidates to matching metadata DURING the probe — the
+    * pre-filter form of filtered vector search.
+    */
+  private def adcTopK(corpus: DataFrame, queries: DataFrame,
+      matchCols: Seq[String] = Seq("cell")): DataFrame = {
+    val cand = corpus
+      .join(broadcast(queries.select(
+        (col("q_id") +: matchCols.map(col)): _*)), matchCols)
+      .filter(col("q_id") =!= col("b_id"))
+    val scored = cand
+      .join(broadcast(queries), "q_id" +: matchCols)
+      .withColumn("adc", round(expr(
+        s"aggregate(sequence(0, ${PqSubspaces - 1}), CAST(0.0 AS DOUBLE), " +
+          "(acc, m) -> acc + element_at(element_at(tbls, m+1), " +
+          "element_at(codes, m+1)))"), 6))
+    topK(scored, TopK, col("adc"))
+      .select(col("q_id"), col("rank"), col("b_id"), col("adc"))
       .orderBy("q_id", "rank")
   }
 
-  /** C3m: cosine RANGE search — every corpus neighbor with cosine ≥ τ
-    * per query (the FAISS/Milvus `range_search` API: variable-cardinality
-    * threshold retrieval, vs top-k's fixed fan-out — the shape recall
-    * pipelines and near-duplicate audits consume when "how many are this
-    * close" matters more than "the closest k"). Same deterministic
-    * discipline as [[c3CosineTopK]]: the score is rounded at 6dp BEFORE
-    * the threshold compare, and τ = 0.25 is exactly representable, so no
-    * boundary row can hash-flip between engines.
-    *
-    * Scale posture: the query side broadcasts (small by contract); the
-    * corpus scan is narrow and the threshold filter runs map-side under
-    * the broadcast join — no corpus shuffle at all, and unlike top-k no
-    * rank window either: output order is a plain sort of the O(matches)
-    * result. For corpus×corpus range search at scale, the LSH-bucketed
-    * path is [[graft.queries.DedupOps.c2EmbedNeardup]].
+  /** IVFADC scoring ([[PqEncExprs]]: residual against the cell,
+    * sub-distances, codes; then the left-to-right ADC sum, round-6 before
+    * any rank so DuckDB's list_sum and Spark's fold cannot flip it): the
+    * codes `rcd(b_id, cell, codes)` of every `asg` row, the lookup tables
+    * `qsd(q_id, cell, sd)` of every `probes(q_id, v, cell)` row, and the
+    * pairs of `cand(q_id, b_id)` scored as `psc(q_id, b_id, adc)`.
     */
-  def c3RangeSearch(spark: SparkSession, dir: String, tau: Double = 0.25,
-      queryMod: Int = 50): DataFrame = {
-    val corpus = emb(spark, dir)
-      .select(col("vec_id").as("b_id"), asDouble(col("embedding")).as("b_emb"))
-    val queries = emb(spark, dir)
-      .filter(isQuery(col("vec_id"), queryMod))
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-    corpus.join(broadcast(queries), col("q_id") =!= col("b_id"))
-      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb")))
-      .filter(col("cosine") >= tau)
-      .select(col("q_id"), col("b_id"), col("cosine"))
-      .orderBy("q_id", "b_id")
-  }
-
-  /** C3i: kNN classification — predict each query vector's label by
-    * majority vote of its k nearest corpus neighbors (exact cosine, the
-    * labeled-embedding evaluation loop every embedding pipeline runs:
-    * "do my vectors cluster by label?"). The top-k is the same
-    * deterministic ranking as c3_cosine_topk (round-6 cosine, b_id
-    * tie-break); the vote is pure integer counting and the argmax is a
-    * deterministic (votes desc, label asc) window — no float can flip
-    * the prediction. Scale: the query side broadcasts (caller-supplied
-    * and small by contract), the corpus scan is narrow, and the vote
-    * aggregate is O(queries × labels). On this synthetic corpus the
-    * labels are independent of the embedding geometry, so chance-level
-    * accuracy is the CORRECT output — the operator reports the
-    * (absence of) label-geometry alignment, and the oracle pins the
-    * full vote mechanics either way.
-    */
-  def c3KnnClassify(spark: SparkSession, dir: String, k: Int = 5,
-      queryMod: Int = 20): DataFrame = {
-    val corpus = emb(spark, dir)
-      .select(col("vec_id").as("b_id"), asDouble(col("embedding")).as("b_emb"),
-        col("label").as("b_label"))
-    val queries = emb(spark, dir)
-      .filter(isQuery(col("vec_id"), queryMod))
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"),
-        col("label").as("true_label"))
-
-    val votes = exactCosineTopK(corpus, queries, k)
-      .groupBy(col("q_id"), col("true_label"), col("b_label"))
-      .agg(count(lit(1)).as("n_votes"))
-    votes
-      .withColumn("vr", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("n_votes").desc, col("b_label"))))
-      .filter(col("vr") === 1)
-      .select(col("q_id"), col("true_label"),
-        col("b_label").as("pred_label"), col("n_votes"),
-        (col("b_label") === col("true_label")).as("correct"))
-      .orderBy("q_id")
+  private def adcSql(books: Seq[Seq[Seq[Double]]], kSub: Int,
+      probes: String = "qs", cand: String = "cand"): String = {
+    val m = books.length
+    val sub = 64 / m
+    def subDists(id: String, rows: String): String =
+      s"SELECT $id, cell, list_transform(range(1, ${m + 1}), m -> " +
+        s"list_transform(range(1, ${kSub + 1}), kk -> " +
+        s"list_sum(list_transform(range(1, ${sub + 1}), j -> " +
+        s"(r[(m-1)*$sub+j]-b[m][kk][j])*(r[(m-1)*$sub+j]-b[m][kk][j]))))) AS sd " +
+        s"FROM (SELECT $id, cell, list_transform(range(1, 65), j -> v[j] - c[cell][j]) " +
+        s"AS r FROM $rows CROSS JOIN ct) CROSS JOIN bks"
+    s"bks AS (SELECT ${books.map(matLit).mkString("[", ",", "]")} AS b), " +
+      "rcd AS (SELECT vec_id AS b_id, cell, " +
+      "list_transform(sd, s -> list_position(s, list_min(s))) AS codes " +
+      s"FROM (${subDists("vec_id", "asg")})), " +
+      s"qsd AS (${subDists("q_id", probes)}), " +
+      "psc AS (SELECT cand.q_id, cand.b_id, " +
+      s"round(list_sum(list_transform(range(1, ${m + 1}), m -> " +
+      "qsd.sd[m][rcd.codes[m]])), 6) AS adc " +
+      s"FROM $cand cand JOIN rcd ON rcd.b_id = cand.b_id " +
+      "JOIN qsd ON qsd.q_id = cand.q_id AND qsd.cell = rcd.cell)"
   }
 
   /** Deterministic hyperplanes: a fixed-seed Gaussian matrix embedded in
@@ -252,21 +496,137 @@ object SimOps {
   def lshBuckets(embD: Column, tables: Int, bits: Int): Column =
     graft.functions.VectorExprs.signSketch(embD, planeMatrix(tables * bits), tables, bits)
 
-  /** Explode a bucket array to (table, bucket) rows; when `probe` is set
-    * also emit every Hamming-1 variant of each bucket (query-side
-    * multi-probe).
+  /** Shared oracle CTE: embeddings + the multi-table sign sketch, with
+    * the hyperplane matrix embedded as a literal — the DuckDB replay of
+    * `lshBuckets` (same sequential dot products, same sign rule, same
+    * bit packing).
     */
-  def explodeBuckets(buckets: Column, bits: Int, probe: Boolean): Column = {
-    val withProbes =
-      if (!probe) transform(buckets, b => array(b))
-      else transform(buckets, b =>
+  private[queries] def sketchCte(tables: Int, bits: Int): String =
+    s"pl AS (SELECT ${matLit(planeMatrix(tables * bits))} AS p), $embCte, " +
+      s"bk AS (SELECT vec_id, v, list_transform(range(0, $tables), t -> " +
+      s"CAST(list_sum(list_transform(range(0, $bits), i -> " +
+      s"CASE WHEN list_dot_product(v, p[t*$bits+i+1]) > 0 " +
+      "THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT)) AS buckets " +
+      "FROM e CROSS JOIN pl)"
+
+  /** The sign-LSH bucket rows `(id, tbl, bucket)` of `base(vec_id,
+    * buckets)`: one per table, or — when `probe` — one per table for the
+    * bucket and for each of its Hamming-1 variants (multi-probe). Rows
+    * carry ids only: vectors re-attach after the candidate dedup, so the
+    * bucket join and distinct shuffle 16-byte rows, not 512-byte vectors.
+    */
+  private[queries] def bucketRows(base: DataFrame, id: String, bits: Int,
+      probe: Boolean): DataFrame = {
+    val rows = base.select(col("vec_id").as(id), posexplode(
+      if (!probe) transform(col("buckets"), b => array(b))
+      else transform(col("buckets"), b =>
         concat(array(b),
           transform(sequence(lit(0), lit(bits - 1)),
-            i => b.bitwiseXOR(call_function("shiftleft", lit(1L), i)))))
-    posexplode(withProbes)
+            i => b.bitwiseXOR(call_function("shiftleft", lit(1L), i)))))))
+      .withColumnRenamed("pos", "tbl")
+    if (probe) rows.select(col(id), col("tbl"), explode(col("col")).as("bucket"))
+    else rows.withColumn("bucket", element_at(col("col"), 1)).drop("col")
   }
 
-  /** C3b: ANN via multi-table sign-LSH (L=16 tables × 8 bits) with
+  /** The sign-LSH candidates: the distinct (`id`, b_id) pairs of the
+    * probe-side and corpus-side [[bucketRows]] — `left` and `right`, in
+    * join order — that share a (tbl, bucket), kept by `keep`.
+    */
+  private[queries] def lshCand(left: DataFrame, right: DataFrame, id: String,
+      keep: Column): DataFrame =
+    left.join(right, Seq("tbl", "bucket")).filter(keep)
+      .select(col(id), col("b_id")).distinct()
+
+  /** [[lshCand]]: corpus bucket rows `corp(b_id, tbl, bucket)`, the
+    * Hamming-1 multi-probe rows `qs(q_id, tbl, bucket)` of the `pred`
+    * vectors, and the distinct pairs `cand(q_id, b_id)` sharing one with
+    * `q_id <op> b_id`. Expects [[sketchCte]] in scope.
+    */
+  private[queries] def lshCandSql(tables: Int, bits: Int, pred: String,
+      op: String): String =
+    s"corp AS (SELECT vec_id AS b_id, rt.t AS tbl, buckets[rt.t+1] AS bucket " +
+      s"FROM bk CROSS JOIN range(0, $tables) rt(t)), " +
+      "qs AS (SELECT vec_id AS q_id, rt.t AS tbl, " +
+      s"unnest(list_prepend(buckets[rt.t+1], list_transform(range(0, $bits), i -> " +
+      "xor(buckets[rt.t+1], (1::BIGINT << i))))) AS bucket " +
+      s"FROM bk CROSS JOIN range(0, $tables) rt(t) WHERE $pred), " +
+      "cand AS (SELECT DISTINCT q_id, b_id FROM corp JOIN qs " +
+      s"ON corp.tbl = qs.tbl AND corp.bucket = qs.bucket AND qs.q_id $op corp.b_id)"
+
+  /** C3a: exact cosine top-k (k = [[TopK]]) of every corpus vector for
+    * each query vector. Scores rounded to 6 decimals; ties broken by
+    * neighbor id in both engines.
+    *
+    * `queryMod` selects the query subset (the first [[MaxQueries]]
+    * multiples of queryMod, see [[isQuery]]) — the oracle-stable,
+    * corpus-size-BOUNDED stand-in for a caller-supplied query table. In
+    * production the query side is whatever small DataFrame the caller
+    * passes; only its smallness matters (it is the broadcast side).
+    */
+  def c3CosineTopK(spark: SparkSession, dir: String,
+      queryMod: Int = AnnQueryMod): DataFrame = {
+    val (corpus, queries) = exactSides(spark, dir, queryMod)
+    topK(exact(corpus, queries, cosineScore), TopK)
+      .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
+      .orderBy("q_id", "rank")
+  }
+
+  /** C3m: cosine RANGE search — every corpus neighbor with cosine ≥ τ
+    * per query (the FAISS/Milvus `range_search` API: variable-cardinality
+    * threshold retrieval, vs top-k's fixed fan-out — the shape recall
+    * pipelines and near-duplicate audits consume when "how many are this
+    * close" matters more than "the closest k"). Same deterministic
+    * discipline as [[c3CosineTopK]]: the score is rounded at 6dp BEFORE
+    * the threshold compare, and τ = [[RangeTau]] is exactly
+    * representable, so no boundary row can hash-flip between engines.
+    *
+    * Scale posture: the query side broadcasts (small by contract); the
+    * corpus scan is narrow and the threshold filter runs map-side under
+    * the broadcast join — no corpus shuffle at all, and unlike top-k no
+    * rank window either: output order is a plain sort of the O(matches)
+    * result. For corpus×corpus range search at scale, the LSH-bucketed
+    * path is [[graft.queries.DedupOps.c2EmbedNearDup]].
+    */
+  def c3RangeSearch(spark: SparkSession, dir: String): DataFrame = {
+    val (corpus, queries) = exactSides(spark, dir, RangeQueryMod)
+    exact(corpus, queries, cosineScore)
+      .filter(col("cosine") >= RangeTau)
+      .select(col("q_id"), col("b_id"), col("cosine"))
+      .orderBy("q_id", "b_id")
+  }
+
+  /** C3i: kNN classification — predict each query vector's label by
+    * majority vote of its k nearest corpus neighbors (exact cosine, the
+    * labeled-embedding evaluation loop every embedding pipeline runs:
+    * "do my vectors cluster by label?"). The top-k is the same
+    * deterministic ranking as c3_cosine_topk (round-6 cosine, b_id
+    * tie-break); the vote is pure integer counting and the argmax is a
+    * deterministic (votes desc, label asc) window — no float can flip
+    * the prediction. Scale: the query side broadcasts (caller-supplied
+    * and small by contract), the corpus scan is narrow, and the vote
+    * aggregate is O(queries × labels). On this synthetic corpus the
+    * labels are independent of the embedding geometry, so chance-level
+    * accuracy is the CORRECT output — the operator reports the
+    * (absence of) label-geometry alignment, and the oracle pins the
+    * full vote mechanics either way.
+    */
+  def c3KnnClassify(spark: SparkSession, dir: String): DataFrame = {
+    val (corpus, queries) = exactSides(spark, dir, KnnQueryMod,
+      (col("label").as("b_label"), col("label").as("true_label")))
+    val votes = topK(exact(corpus, queries, cosineScore), TopK)
+      .groupBy(col("q_id"), col("true_label"), col("b_label"))
+      .agg(count(lit(1)).as("n_votes"))
+    votes
+      .withColumn("vr", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("n_votes").desc, col("b_label"))))
+      .filter(col("vr") === 1)
+      .select(col("q_id"), col("true_label"),
+        col("b_label").as("pred_label"), col("n_votes"),
+        (col("b_label") === col("true_label")).as("correct"))
+      .orderBy("q_id")
+  }
+
+  /** C3b: ANN via multi-table sign-LSH ([[LshTables]] × [[LshBits]]) with
     * Hamming-1 multi-probe on the query side — the standard composition
     * for high recall when single-table collision probability is low.
     * Output shape matches c3_cosine_topk (rows-only driver check; recall
@@ -274,50 +634,20 @@ object SimOps {
     * buckets are selective; on unstructured corpora LSH degrades toward
     * scan, which is information-theoretically unavoidable.
     */
-  def c3AnnLsh(spark: SparkSession, dir: String, k: Int = 5,
-      tables: Int = 16, bits: Int = 8, queryMod: Int = 100): DataFrame = {
-    // Persisted (scoped): the sketch is consumed by the corpus side, the
-    // query side, and the score re-attach joins (see DedupOps
-    // .c2EmbedNearDup); CacheScope releases it after materialization.
+  def c3AnnLsh(spark: SparkSession, dir: String): DataFrame = {
+    // Scoped cache: the sketch is consumed by the corpus side, the query
+    // side and the rescore joins (see DedupOps.c2EmbedNearDup);
+    // CacheScope persists it and releases it after materialization.
     val base = embVecs(spark, dir)
-      .withColumn("buckets", lshBuckets(col("embD"), tables, bits))
-
-    // Bucket-membership rows carry ids only — embeddings re-attach after
-    // the candidate dedup, so the bucket join/distinct shuffles 16-byte
-    // rows instead of 512-byte vectors.
-    val corpus = base
-      .select(col("vec_id").as("b_id"),
-        explodeBuckets(col("buckets"), bits, probe = false))
-      .withColumnRenamed("pos", "tbl")
-      .withColumn("bucket", element_at(col("col"), 1))
-      .drop("col")
-
-    val queries = base
-      .filter(isQuery(col("vec_id"), queryMod))
-      .select(col("vec_id").as("q_id"),
-        explodeBuckets(col("buckets"), bits, probe = true))
-      .withColumnRenamed("pos", "tbl")
-      .select(col("q_id"), col("tbl"), explode(col("col")).as("bucket"))
-
-    // Dedup candidates on ids only (cheap shuffle rows), then re-attach
-    // vectors for scoring: the query subset by broadcast, the corpus by
-    // shuffle hash join. Unlike [[rescoreTopK]], the query vectors join
-    // BEFORE the corpus shuffle (which then carries them): this plan is
-    // the perfbench `queries` baseline, so moving it onto the shared
-    // tail is a benchmark change.
-    val scored = corpus.join(broadcast(queries), Seq("tbl", "bucket"))
-      .filter(col("q_id") =!= col("b_id"))
-      .select(col("q_id"), col("b_id")).distinct()
-      .join(broadcast(base.filter(isQuery(col("vec_id"), queryMod))
-        .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
-      .join(base.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
-        .hint("shuffle_hash"), "b_id")
-      .withColumn("cosine", cosine6(col("q_emb"), col("b_emb")))
+      .withColumn("buckets", lshBuckets(col("embD"), LshTables, LshBits))
+    val isQ = isQuery(col("vec_id"), AnnQueryMod)
+    // Dedup candidates on ids only (cheap shuffle rows), then the shared
+    // rescore re-attaches the vectors.
+    val pairs = lshCand(bucketRows(base, "b_id", LshBits, probe = false),
+      broadcast(bucketRows(base.filter(isQ), "q_id", LshBits, probe = true)),
+      "q_id", col("q_id") =!= col("b_id"))
     graft.util.CacheScope.releaseAfterMaterialize(
-      rankByCosine(scored, k)
-        .select(col("q_id"), col("rank"), col("b_id"), col("cosine"))
-        .orderBy("q_id", "rank"),
-      Seq(base))
+      rescoreTopK(pairs, base, isQ).orderBy("q_id", "rank"), Seq(base))
   }
 
   /** Lloyd iterations on a driver-side sample — the standard IVF training
@@ -396,27 +726,6 @@ object SimOps {
   private def coarseCodebook(base: DataFrame, cells: Int): Seq[Seq[Double]] =
     trainCentroids(boundedSample(base, AnnMaxSample), cells, iters = 5)
 
-  /** IVF candidates: every `vecs` (vec_id, embD) row assigned to its
-    * nearest `cents` cell, each `isQ` row probing its `nprobe` nearest
-    * cells (broadcast — the small query side), joined on the cell.
-    * Distinct (q_id, b_id) id pairs, q_id ≠ b_id.
-    */
-  private def ivfCandidates(vecs: DataFrame, isQ: Column,
-      cents: Seq[Seq[Double]], nprobe: Int): DataFrame = {
-    // squared L2 to each centroid — native fused pass (CentroidDists),
-    // same fold order as the HOF form (asserted in VectorExprsSpec).
-    def withDists(df: DataFrame): DataFrame = df.withColumn("dists",
-      graft.functions.VectorExprs.centroidDists(col("embD"), cents))
-    val corpus = withDists(vecs)
-      .select(col("vec_id").as("b_id"), assignCell(col("dists")).as("cell"))
-    val queries = withDists(vecs.filter(isQ))
-      .select(col("vec_id").as("q_id"),
-        explode(probeCells(col("dists"), cents.length, nprobe)).as("cell"))
-    corpus.join(broadcast(queries), Seq("cell"))
-      .filter(col("q_id") =!= col("b_id"))
-      .select("q_id", "b_id").distinct()
-  }
-
   /** C3d: ANN via IVF (inverted file): coarse k-means cells trained on a
     * deterministic bounded sample (≤ [[AnnMaxSample]] rows on the driver,
     * a constant independent of corpus size), corpus assigned to its
@@ -426,18 +735,17 @@ object SimOps {
     * touches nprobe/nCells of the corpus. Rows-only driver check; recall
     * and the sample bound asserted in SimOpsSpec.
     */
-  def c3AnnIvf(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, queryMod: Int = 100): DataFrame = {
+  def c3AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     // Persisted: read once, consumed by the sample collect (a
     // construction-time action — hence the explicit persist BEFORE it),
     // corpus/query cell assignment, and the score re-attach joins;
     // CacheScope releases it after the result materializes.
     val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = coarseCodebook(base, resolveCells(spark, dir, nCells))
-    val isQ = isQuery(col("vec_id"), queryMod)
+    val centroids = coarseCodebook(base, scaledCells(spark, dir))
+    val isQ = isQuery(col("vec_id"), AnnQueryMod)
     graft.util.CacheScope.releaseAfterMaterialize(
-      rescoreTopK(ivfCandidates(base, isQ, centroids, nprobe), base, isQ, k)
+      rescoreTopK(ivfCandidates(base, isQ, centroids, AnnNprobe), base, isQ)
         .orderBy("q_id", "rank"),
       Seq(base))
   }
@@ -544,8 +852,7 @@ object SimOps {
     * never corpus-sized.
     */
   private def pqQueryTables(base: DataFrame, coarse: Seq[Seq[Double]],
-      books: Seq[Seq[Seq[Double]]], subspaces: Int, nprobe: Int,
-      queryMod: Int, residual: Boolean): DataFrame = {
+      books: Seq[Seq[Seq[Double]]], nprobe: Int, residual: Boolean): DataFrame = {
     // probe indices run over coarse.length — the TRAINED cell count, which
     // the kernel derives from the model itself; see [[probeCells]]
     // (null-padded zip = phantom probes).
@@ -553,51 +860,12 @@ object SimOps {
     // residual + per-probe tables fused; bit-identity to the old
     // expression chain spec-pinned in PqProbeEncExprSpec).
     val nTrained = coarse.length
-    base.filter(isQuery(col("vec_id"), queryMod))
+    base.filter(isQuery(col("vec_id"), AnnQueryMod))
       .select(col("vec_id").as("q_id"),
         explode(graft.functions.PqProbeEncExpr.pqProbeEnc(
           col("embD"), coarse, books, math.min(nprobe, nTrained), residual))
           .as("pr"))
       .select(col("q_id"), col("pr.cell").as("cell"), col("pr.tbls").as("tbls"))
-  }
-
-  /** The ADC ranking tail shared by the in-plan and indexed PQ queries:
-    * candidates from the cell join, asymmetric distances from the
-    * per-probe lookup tables, per-query top-k.
-    *
-    * Each corpus vector lives in exactly one cell and probes are
-    * distinct, so (q_id, b_id) pairs are already unique — the ADC joins
-    * back on (q_id, cell) to pick the matching per-probe table. `adc` is
-    * rounded to 6dp BEFORE the rank window (the annTopKTail posture):
-    * ranking on the raw double would make the hash depend on DuckDB's
-    * list_sum reproducing Spark's left-to-right fold bit-for-bit — a
-    * sub-1e-6 near-tie from a different summation order would flip ranks.
-    *
-    * `matchCols` are the candidate-join keys: `cell` alone is the plain
-    * IVF probe; adding an attribute column (both sides must carry it)
-    * restricts candidates to matching metadata DURING the probe — the
-    * pre-filter form of filtered vector search.
-    */
-  private def adcTopK(corpus: DataFrame, queries: DataFrame,
-      k: Int, subspaces: Int,
-      matchCols: Seq[String] = Seq("cell")): DataFrame = {
-    val cand = corpus
-      .join(broadcast(queries.select(
-        (col("q_id") +: matchCols.map(col)): _*)), matchCols)
-      .filter(col("q_id") =!= col("b_id"))
-    val scored = cand
-      .join(broadcast(queries), "q_id" +: matchCols)
-      .withColumn("adc", round(expr(
-        s"aggregate(sequence(0, ${subspaces - 1}), CAST(0.0 AS DOUBLE), " +
-          "(acc, m) -> acc + element_at(element_at(tbls, m+1), " +
-          "element_at(codes, m+1)))"), 6))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").asc, col("b_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("b_id"), col("adc"))
-      .orderBy("q_id", "rank")
   }
 
   /** C3g: ANN via IVF-PQ with residual encoding (IVFADC, Jégou et al.
@@ -623,22 +891,28 @@ object SimOps {
     * @param residual false = quantize raw vectors (pre-IVFADC form); kept
     *        for the recall A/B in SimOpsSpec, not declared as a query.
     */
-  def c3AnnPq(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100, residual: Boolean = true): DataFrame = {
+  def c3AnnPq(spark: SparkSession, dir: String, nCells: Int = AutoCells,
+      residual: Boolean = true): DataFrame = {
     val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (corpus, queries) = inPlanPq(base, resolveCells(spark, dir, nCells), residual)
+    graft.util.CacheScope.releaseAfterMaterialize(adcTopK(corpus, queries), Seq(base))
+  }
+
+  /** The in-plan IVFADC inputs over a persisted `base` (vec_id, embD):
+    * the corpus codes and the query tables of a model trained on its
+    * bounded sample at `cells` cells — [[pqModel]], or raw-vector PQ when
+    * not `residual`.
+    */
+  private def inPlanPq(base: DataFrame, cells: Int,
+      residual: Boolean): (DataFrame, DataFrame) = {
     val sample = boundedSample(base, AnnMaxSample)
-    val kC = resolveCells(spark, dir, nCells)
     val (coarse, books) =
-      if (residual) pqModel(sample, kC, subspaces, kSub)
-      else (trainCentroids(sample, kC, iters = 5),
-        pqBooks(sample, subspaces, kSub))
-    val corpus = pqEncodeCorpus(base, coarse, books, subspaces, residual)
-    val queries = pqQueryTables(
-      base, coarse, books, subspaces, nprobe, queryMod, residual)
-    graft.util.CacheScope.releaseAfterMaterialize(
-      adcTopK(corpus, queries, k, subspaces), Seq(base))
+      if (residual) pqModel(sample, cells, PqSubspaces, PqKSub)
+      else (trainCentroids(sample, cells, iters = 5),
+        pqBooks(sample, PqSubspaces, PqKSub))
+    (pqEncodeCorpus(base, coarse, books, PqSubspaces, residual),
+      pqQueryTables(base, coarse, books, AnnNprobe, residual))
   }
 
   /** Training-sample bound of every ANN codebook (in-plan, persisted,
@@ -687,9 +961,8 @@ object SimOps {
       * operators read (c3_ann_pq_indexed, the filtered pair, the cell and
       * staleness monitors). Bench warms it untimed via SparkEntry.warmups.
       */
-    def fixed(spark: SparkSession, dir: String, nCells: Int = AutoCells,
-        subspaces: Int = 8, kSub: Int = 16): AnnLayout =
-      keyed(dir, "graft_ann_", resolveCells(spark, dir, nCells), subspaces, kSub)
+    def fixed(spark: SparkSession, dir: String, nCells: Int = AutoCells): AnnLayout =
+      keyed(dir, "graft_ann_", resolveCells(spark, dir, nCells), PqSubspaces, PqKSub)
 
     /** The layout of the incremental-semantic family
       * (c2_incremental_semantic, c5_stream_semantic) at the CORPUS-SCALED
@@ -1015,9 +1288,8 @@ object SimOps {
     * The final window runs over ≤ nCells rows — bounded, like the
     * c7_mix_sources quota window.
     */
-  def c3AnnCells(spark: SparkSession, dir: String, nCells: Int = AutoCells,
-      subspaces: Int = 8, kSub: Int = 16): DataFrame = {
-    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
+  def c3AnnCells(spark: SparkSession, dir: String): DataFrame = {
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir))
     // the uniform target is vs the TRAINED cell count (a tiny corpus
     // trains fewer cells than requested; a split appends one)
     val nTrained = ann.model(spark)._1.length
@@ -1220,23 +1492,31 @@ object SimOps {
     * reads the (cell, codes) table and the model table with ZERO train or
     * encode stages over the corpus (pinned in PlanAuditSpec): the only
     * corpus-sized input is the codes scan, and the only embeddings scan
-    * is the query subset (its `vec_id % queryMod` filter reaches the
+    * is the query subset (its `vec_id % AnnQueryMod` filter reaches the
     * parquet reader). Results are identical to c3_ann_pq by construction
     * — training is deterministic and the stored codes come from the same
     * encode expressions — so it shares c3_ann_pq's dynamic oracle SQL.
     * The model read collects nCells + subspaces·kSub tiny rows (constant
     * in corpus size), the same driver-side bound as training's sample.
     */
-  def c3AnnPqIndexed(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100): DataFrame = {
-    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
+  def c3AnnPqIndexed(spark: SparkSession, dir: String,
+      nCells: Int = AutoCells): DataFrame = {
+    val (codes, tables) = indexedPq(spark, dir, nCells)
+    adcTopK(codes, tables(AnnNprobe))
+  }
+
+  /** The inputs of the indexed PQ keys, read from the fixed persisted
+    * layout at `nCells` (built on first use): its codes table as
+    * `(b_id, cell, codes, <cols>)`, and the query tables
+    * ([[pqQueryTables]]) of its stored model at a given probe width.
+    */
+  private def indexedPq(spark: SparkSession, dir: String, nCells: Int,
+      cols: String*): (DataFrame, Int => DataFrame) = {
+    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells))
     val (coarse, books) = ann.model(spark)
-    val queries = pqQueryTables(
-      embVecs(spark, dir), coarse, books, subspaces, nprobe, queryMod, residual = true)
-    val corpus = spark.table(ann.codesTab)
-      .select(col("b_id"), col("cell").cast("int").as("cell"), col("codes"))
-    adcTopK(corpus, queries, k, subspaces)
+    (spark.table(ann.codesTab).select(Seq(col("b_id"),
+      col("cell").cast("int").as("cell"), col("codes")) ++ cols.map(col): _*),
+      nprobe => pqQueryTables(embVecs(spark, dir), coarse, books, nprobe, residual = true))
   }
 
   /** C3h': FILTERED ANN over the persisted index — top-k restricted to
@@ -1251,19 +1531,15 @@ object SimOps {
     * query path as c3_ann_pq_indexed; the only additions are the label
     * columns on both join sides.
     */
-  def c3AnnPqFiltered(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100): DataFrame = {
-    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
-    val (coarse, books) = ann.model(spark)
-    val queries = pqQueryTables(
-      embVecs(spark, dir), coarse, books, subspaces, nprobe, queryMod, residual = true)
-      .join(emb(spark, dir).select(col("vec_id").as("q_id"), col("label")), "q_id")
-    val corpus = spark.table(ann.codesTab)
-      .select(col("b_id"), col("cell").cast("int").as("cell"),
-        col("codes"), col("label"))
-    adcTopK(corpus, queries, k, subspaces, matchCols = Seq("cell", "label"))
+  def c3AnnPqFiltered(spark: SparkSession, dir: String): DataFrame = {
+    val (codes, tables) = indexedPq(spark, dir, AutoCells, "label")
+    adcTopK(codes, tables(AnnNprobe).join(queryLabels(spark, dir), "q_id"),
+      matchCols = Seq("cell", "label"))
   }
+
+  /** Each vector's `label` keyed as a query, `(q_id, label)`. */
+  private def queryLabels(spark: SparkSession, dir: String): DataFrame =
+    emb(spark, dir).select(col("vec_id").as("q_id"), col("label"))
 
   /** C3h'': ADAPTIVE filtered search — [[c3AnnPqFiltered]] with the
     * starvation fallback production filtered-ANN serving uses: queries
@@ -1282,20 +1558,10 @@ object SimOps {
     * the probe pass failed, the adaptive contract. Dynamic oracle
     * replays detection, escalation and the merged ADC ranking.
     */
-  def c3AnnPqFilteredAdaptive(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100): DataFrame = {
-    val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir, nCells, subspaces, kSub))
-    val (coarse, books) = ann.model(spark)
-    val base = embVecs(spark, dir)
-    val qLab = emb(spark, dir).select(col("vec_id").as("q_id"), col("label"))
-    val q1 = pqQueryTables(
-      base, coarse, books, subspaces, nprobe, queryMod,
-      residual = true)
-      .join(qLab, "q_id")
-    val corpus = spark.table(ann.codesTab)
-      .select(col("b_id"), col("cell").cast("int").as("cell"),
-        col("codes"), col("label"))
+  def c3AnnPqFilteredAdaptive(spark: SparkSession, dir: String): DataFrame = {
+    val (corpus, tables) = indexedPq(spark, dir, AutoCells, "label")
+    val qLab = queryLabels(spark, dir)
+    val q1 = tables(AnnNprobe).join(qLab, "q_id")
     // labeled candidates the probed cells actually hold, per query
     val n1 = corpus
       .join(broadcast(q1.select(col("q_id"), col("cell"), col("label"))),
@@ -1304,19 +1570,18 @@ object SimOps {
       .groupBy("q_id").agg(count(lit(1)).as("n1"))
     val starved = q1.select("q_id").distinct()
       .join(n1, Seq("q_id"), "left")
-      .filter(coalesce(col("n1"), lit(0L)) < k)
+      .filter(coalesce(col("n1"), lit(0L)) < TopK)
       .select("q_id")
     // escalated probe set: starved queries get lookup tables for EVERY
-    // cell (nprobe = nCells), so the candidate join below reaches the
-    // whole label slice of the codes table for them
-    val q2 = pqQueryTables(
-      base, coarse, books, subspaces, coarse.length, queryMod,
-      residual = true)
+    // cell (a probe width past the trained cell count is cut to it), so
+    // the candidate join below reaches the whole label slice of the codes
+    // table for them
+    val q2 = tables(Int.MaxValue)
       .join(broadcast(starved), "q_id")
       .join(qLab, "q_id")
     val merged = q1.join(broadcast(starved), Seq("q_id"), "left_anti")
       .unionByName(q2)
-    adcTopK(corpus, merged, k, subspaces, matchCols = Seq("cell", "label"))
+    adcTopK(corpus, merged, matchCols = Seq("cell", "label"))
   }
 
   /** C3i: k-NN GRAPH construction — every vector's top-m neighbors by
@@ -1335,10 +1600,10 @@ object SimOps {
     * (cosine desc, b_id asc) order is portable, and the oracle replays
     * assignment, blocking, scoring and rank bit-for-bit.
     */
-  def c3KnnJoin(spark: SparkSession, dir: String, m: Int = 3): DataFrame = {
+  def c3KnnJoin(spark: SparkSession, dir: String): DataFrame = {
     val assigned = scaledCellCorpus(spark, dir)
     graft.util.CacheScope.releaseAfterMaterialize(
-      rankByCosine(cellPairs(assigned, col("a_id") =!= col("b_id")), m, key = "a_id")
+      topK(cellPairs(assigned, col("a_id") =!= col("b_id")), KnnJoinM, key = "a_id")
         .select(col("a_id"), col("rank"), col("b_id"), col("cosine"))
         .orderBy("a_id", "rank"),
       Seq(assigned))
@@ -1360,42 +1625,6 @@ object SimOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Within-cell pairs of an assigned corpus: (cell, a_id, a_emb, b_id,
-    * b_emb, cosine) for every same-cell pair `keep` admits.
-    */
-  private[queries] def cellPairs(assigned: DataFrame, keep: Column): DataFrame =
-    assigned
-      .select(col("cell"), col("vec_id").as("a_id"), col("embD").as("a_emb"))
-      .join(assigned.select(col("cell"), col("vec_id").as("b_id"),
-        col("embD").as("b_emb")), Seq("cell"))
-      .filter(keep)
-      .withColumn("cosine", cosine6(col("a_emb"), col("b_emb")))
-
-  /** Per-query hit counts of `ann` against the brute-force top-k: one
-    * row per query with `n_hits` = |ann ∩ brute-force| (0 for queries
-    * the ANN missed entirely). Shared by both recall queries; the
-    * downstream frame is query-set-sized, never corpus-sized.
-    */
-  private def recallHits(ann: DataFrame, bf: DataFrame): DataFrame = {
-    // The ground-truth side feeds TWO branches of this frame (the hit
-    // semi join and the distinct-q_id spine), and several callers read
-    // the returned frame more than once — unpersisted, the brute-force
-    // top-k subtree (an |queries| × corpus cosine pass plus its rank
-    // window) re-executed once per branch inside the final plan
-    // (measured: ~3 s of c3_ann_staleness's ~7 s steady state at
-    // sf0.1). Persist it for the result's lifetime; CacheScope releases
-    // it after the first action that materializes a plan containing
-    // this frame.
-    val bfp = bf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hits = bfp.join(ann, Seq("q_id", "b_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-    graft.util.CacheScope.releaseAfterMaterialize(
-      bfp.select(col("q_id")).distinct()
-        .join(hits, Seq("q_id"), "left")
-        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L))),
-      Seq(bfp))
-  }
-
   /** C3e: driver-checked ANN quality — recall@k of the sign-LSH ANN
     * against the exact brute-force top-k, per query, with an in-plan
     * bound claim (the b2_agg_approx pattern): `recall_ok` = recall ≥
@@ -1407,12 +1636,12 @@ object SimOps {
     * Scale posture: both inputs are the ANN and brute-force plans
     * themselves; the recall join moves (q_id, b_id) id pairs only.
     */
-  def c3AnnRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+  def c3AnnRecall(spark: SparkSession, dir: String): DataFrame =
     recallHits(
-      c3AnnLsh(spark, dir, k).select(col("q_id"), col("b_id")),
-      c3CosineTopK(spark, dir, k).select(col("q_id"), col("b_id")))
-      .withColumn("recall_at_5", round(col("n_hits").cast("double") / k, 6))
-      .withColumn("recall_ok", col("recall_at_5") >= 0.6)
+      c3AnnLsh(spark, dir).select(col("q_id"), col("b_id")),
+      c3CosineTopK(spark, dir).select(col("q_id"), col("b_id")))
+      .withColumn(RecallAt, recall(col("n_hits")))
+      .withColumn("recall_ok", col(RecallAt) >= 0.6)
       .orderBy("q_id")
 
   /** C3f: the IVF twin of [[c3AnnRecall]]. IVF at nprobe/nCells = 1/4
@@ -1425,18 +1654,10 @@ object SimOps {
     * set, never the corpus), computed as sum(n_hits)/(k·n_queries) so
     * no float fold order enters the hash.
     */
-  def c3AnnIvfRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    recallHits(
-      c3AnnIvf(spark, dir, k).select(col("q_id"), col("b_id")),
-      c3CosineTopK(spark, dir, k).select(col("q_id"), col("b_id")))
-      .withColumn("recall_at_5", round(col("n_hits").cast("double") / k, 6))
-      .withColumn("mean_recall",
-        round(sum(col("n_hits")).over(w).cast("double") /
-          (lit(k) * count(lit(1)).over(w)), 6))
-      .withColumn("mean_recall_ok", col("mean_recall") >= 0.3)
-      .orderBy("q_id")
-  }
+  def c3AnnIvfRecall(spark: SparkSession, dir: String): DataFrame =
+    meanRecallTail(recallHits(
+      c3AnnIvf(spark, dir).select(col("q_id"), col("b_id")),
+      c3CosineTopK(spark, dir).select(col("q_id"), col("b_id"))), 0.3)
 
   /** C3i: QUANTIZATION-loss recall of the IVFADC code ranking — the ADC
     * top-k scored against the exact squared-L2 ranking OVER THE SAME IVF
@@ -1462,50 +1683,23 @@ object SimOps {
     * encode/codebook regression moves a driver-checked result, not
     * just a spec.
     */
-  def c3AnnPqRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100): DataFrame = {
+  def c3AnnPqRecall(spark: SparkSession, dir: String): DataFrame = {
     val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (coarse, books) = pqModel(boundedSample(base, AnnMaxSample),
-      resolveCells(spark, dir, nCells), subspaces, kSub)
-    val corpusCodes = pqEncodeCorpus(base, coarse, books, subspaces, residual = true)
-    val queries = pqQueryTables(
-      base, coarse, books, subspaces, nprobe, queryMod, residual = true)
-    val annAdc = adcTopK(corpusCodes, queries, k, subspaces)
-      .select(col("q_id"), col("b_id"))
+    val (corpusCodes, queries) = inPlanPq(base, scaledCells(spark, dir), residual = true)
+    val annAdc = adcTopK(corpusCodes, queries).select(col("q_id"), col("b_id"))
     // the SAME candidates the ADC ranked, re-scored with the exact L2:
     // cells come from the persisted-code assignment, probes from the
     // query tables — identical join keys, vectors re-attached by id
-    // (query side broadcast: bounded by queryMod; corpus side shuffled)
+    // (query side broadcast: bounded by MaxQueries; corpus side shuffled)
     val cand = corpusCodes.select(col("b_id"), col("cell"))
       .join(broadcast(queries.select(col("q_id"), col("cell")).distinct()), Seq("cell"))
       .filter(col("q_id") =!= col("b_id"))
       .select("q_id", "b_id").distinct()
-    val exact = cand
-      .join(base.select(col("vec_id").as("b_id"), col("embD").as("b_emb"))
-        .hint("shuffle_hash"), "b_id")
-      .join(broadcast(base.filter(isQuery(col("vec_id"), queryMod))
-        .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))), "q_id")
-      .withColumn("l2sq",
-        round(dotD(col("q_emb"), col("q_emb")) + dotD(col("b_emb"), col("b_emb"))
-          - lit(2.0) * dotD(col("q_emb"), col("b_emb")), 6))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("l2sq").asc, col("b_id"))
-    val exactTopK = exact
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("b_id"))
-    val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val exactTopK = topK(rescore(cand, base, isQuery(col("vec_id"), AnnQueryMod),
+      l2sqScore), TopK, col("l2sq")).select(col("q_id"), col("b_id"))
     graft.util.CacheScope.releaseAfterMaterialize(
-      recallHits(annAdc, exactTopK)
-        .withColumn("recall_at_5", round(col("n_hits").cast("double") / k, 6))
-        .withColumn("mean_recall",
-          round(sum(col("n_hits")).over(w).cast("double") /
-            (lit(k) * count(lit(1)).over(w)), 6))
-        .withColumn("mean_recall_ok", col("mean_recall") >= 0.1)
-        .orderBy("q_id"),
-      Seq(base))
+      meanRecallTail(recallHits(annAdc, exactTopK), 0.1), Seq(base))
   }
 
   /** C3r: FILTERED-search recall monitor — recall of the pre-filtered
@@ -1527,39 +1721,20 @@ object SimOps {
     *
     * Scale posture: the ANN side is the indexed filtered plan itself;
     * the exact side blocks on the label (query side broadcast — bounded
-    * by queryMod — against a narrow corpus projection), so the monitor
+    * by MaxQueries — against a narrow corpus projection), so the monitor
     * costs O(|queries| · label frequency), never all-pairs.
     */
-  def c3AnnFilteredRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
-      queryMod: Int = 100): DataFrame = {
-    val ann = c3AnnPqFiltered(
-      spark, dir, k, nCells, nprobe, subspaces, kSub, queryMod)
-      .select(col("q_id"), col("b_id"))
-    val base = emb(spark, dir).select(col("vec_id"),
-      asDouble(col("embedding")).as("embD"), col("label"))
-    val qs = base.filter(isQuery(col("vec_id"), queryMod))
-      .select(col("vec_id").as("q_id"), col("embD").as("q_emb"), col("label"))
-    val exact = base
-      .select(col("vec_id").as("b_id"), col("embD").as("b_emb"), col("label"))
-      .join(broadcast(qs), "label")
-      .filter(col("q_id") =!= col("b_id"))
-      .withColumn("l2sq",
-        round(dotD(col("q_emb"), col("q_emb"))
-          + dotD(col("b_emb"), col("b_emb"))
-          - lit(2.0) * dotD(col("q_emb"), col("b_emb")), 6))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("l2sq").asc, col("b_id"))
-    val exactTopK = exact
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= k)
+  def c3AnnFilteredRecall(spark: SparkSession, dir: String): DataFrame = {
+    val ann = c3AnnPqFiltered(spark, dir).select(col("q_id"), col("b_id"))
+    val (corpus, queries) =
+      exactSides(spark, dir, AnnQueryMod, (col("label"), col("label")))
+    val exactTopK = topK(exact(corpus, queries, l2sqScore, "label"), TopK, col("l2sq"))
       .select(col("q_id"), col("b_id"))
     val nExact = exactTopK.groupBy(col("q_id"))
       .agg(count(lit(1)).as("n_exact"))
     val nAnn = ann.groupBy(col("q_id")).agg(count(lit(1)).as("n_ann"))
     val hits = exactTopK.join(ann, Seq("q_id", "b_id"), "left_semi")
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-    val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     nExact
       .join(nAnn, Seq("q_id"), "left")
       .join(hits, Seq("q_id"), "left")
@@ -1568,8 +1743,8 @@ object SimOps {
       .withColumn("recall_at_k", round(
         col("n_hits").cast("double") / col("n_exact").cast("double"), 6))
       .withColumn("mean_recall", round(
-        sum(col("n_hits")).over(w).cast("double") /
-          sum(col("n_exact")).over(w).cast("double"), 6))
+        sum(col("n_hits")).over(querySet).cast("double") /
+          sum(col("n_exact")).over(querySet).cast("double"), 6))
       .orderBy("q_id")
   }
 
@@ -1598,11 +1773,10 @@ object SimOps {
     * (the [[Exact]] money discipline applied to distances), so the
     * cross-engine hash can never drift with partial-agg visit order.
     */
-  def c3ClusterProfile(spark: SparkSession, dir: String,
-      nCells: Int = AutoCells): DataFrame = {
+  def c3ClusterProfile(spark: SparkSession, dir: String): DataFrame = {
     val base = embVecs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = coarseCodebook(base, resolveCells(spark, dir, nCells))
+    val centroids = coarseCodebook(base, scaledCells(spark, dir))
     val assigned = base
       .withColumn("dists",
         graft.functions.VectorExprs.centroidDists(col("embD"), centroids))
@@ -1618,205 +1792,6 @@ object SimOps {
         .orderBy("cell"),
       Seq(base))
   }
-
-  /** Render a literal double matrix as a DuckDB nested-list literal.
-    * Java's `Double.toString` emits the shortest decimal that round-trips,
-    * so DuckDB parses back bit-identical doubles — the planes/centroids in
-    * the oracle SQL are exactly the plan literals.
-    */
-  private[queries] def matLit(m: Seq[Seq[Double]]): String =
-    m.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-
-  // The oracle vocabulary: the DuckDB spelling of the rules above, one
-  // renderer per rule, shared by every vector replay (the ANN, semantic
-  // dedup and semantic gate oracles, and DedupOps' c2_embed_neardup).
-
-  /** The embeddings as `e(vec_id, v, label)`, `v` cast as [[embVecs]]. */
-  private[queries] val embCte =
-    "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings)"
-
-  /** [[cosine6]]. */
-  private def cosineSql(a: String, b: String): String =
-    s"round(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * " +
-      s"sqrt(list_dot_product($b, $b))), 6)"
-
-  /** The PQ recall replays' exact squared L2, dot(a,a) + dot(b,b) −
-    * 2·dot(a,b) rounded to 6 dp, as the Spark side computes it.
-    */
-  private def l2sqSql(a: String, b: String): String =
-    s"round(list_dot_product($a, $a) + list_dot_product($b, $b) " +
-      s"- 2*list_dot_product($a, $b), 6)"
-
-  /** [[assignCell]] over a `dists` column. */
-  private val assignSql = "CAST(list_position(dists, list_min(dists)) AS INT)"
-
-  /** The codebook `cents` as `ct<tag>(c)`, every row of `src(vec_id, v)`
-    * with its squared-L2 `dists` to it as `d<tag>(vec_id, v, dists)`
-    * (materialized: assignment, probes and residuals all read it), and
-    * the assignment `asg<tag>(vec_id, v, cell)`.
-    */
-  private def codebookSql(cents: Seq[Seq[Double]], src: String = "e",
-      tag: String = ""): String =
-    s"ct$tag AS (SELECT ${matLit(cents)} AS c), " +
-      s"d$tag AS MATERIALIZED (SELECT vec_id, v, " +
-      s"list_transform(range(1, ${cents.length + 1}), k -> " +
-      "list_sum(list_transform(range(1, 65), j -> (v[j]-c[k][j])*(v[j]-c[k][j])))) " +
-      s"AS dists FROM $src CROSS JOIN ct$tag), " +
-      s"asg$tag AS (SELECT vec_id, v, $assignSql AS cell FROM d$tag)"
-
-  /** [[probeCells]] of the `d<tag>` rows matching `pred`, as
-    * `qs<tag>(q_id, v, cell)`, one row per probed cell.
-    */
-  private def probesSql(nTrained: Int, nprobe: Int, pred: String,
-      tag: String = ""): String =
-    s"qs$tag AS (SELECT vec_id AS q_id, v, unnest(list_transform(list_slice(" +
-      s"list_sort(list_transform(range(1, ${nTrained + 1}), k -> " +
-      s"[dists[k], CAST(k AS DOUBLE)])), 1, ${math.min(nprobe, nTrained)}), " +
-      s"s -> CAST(s[2] AS BIGINT))) AS cell FROM d$tag WHERE $pred)"
-
-  /** The IVF candidates `cand<tag>(q_id, b_id)`: each probe's other
-    * vectors in the probed cell, narrowed by `on` (aliases: `q` the
-    * probe, `a` the corpus assignment).
-    */
-  private def ivfCandSql(on: String = "", tag: String = ""): String =
-    s"cand$tag AS MATERIALIZED (SELECT DISTINCT q.q_id, a.vec_id AS b_id " +
-      s"FROM asg$tag a JOIN qs$tag q ON a.cell = q.cell AND q.q_id <> a.vec_id$on)"
-
-  /** [[cellPairs]]: vectors sharing an `asg` cell with
-    * `a.vec_id <op> b.vec_id`, as `cp(q_id, b_id)`.
-    */
-  private def cellPairsSql(op: String): String =
-    "cp AS (SELECT a.vec_id AS q_id, b.vec_id AS b_id FROM asg a JOIN asg b " +
-      s"ON a.cell = b.cell AND a.vec_id $op b.vec_id)"
-
-  /** The rescore of the pairs `cand(q_id, b_id)` against `src(vec_id, v)`,
-    * as `<name>(q_id, b_id, <score>)`; `x` is the query, `y` the corpus
-    * vector, and the score [[cosine6]] unless given.
-    */
-  private[queries] def rescoreSql(name: String, cand: String, src: String = "e",
-      score: String = s"${cosineSql("x.v", "y.v")} AS cosine"): String =
-    s"$name AS (SELECT q_id, b_id, $score FROM $cand " +
-      s"JOIN $src x ON x.vec_id = $cand.q_id JOIN $src y ON y.vec_id = $cand.b_id)"
-
-  /** The exact scan: every `src` vector `x` matching `on` scored against
-    * every other vector `y`, as `<name>(q_id, b_id, <score>)`.
-    */
-  private def exactSql(name: String, on: String, src: String = "e",
-      score: String = s"${cosineSql("x.v", "y.v")} AS cosine"): String =
-    s"$name AS (SELECT x.vec_id AS q_id, y.vec_id AS b_id, $score " +
-      s"FROM $src x JOIN $src y ON $on AND x.vec_id <> y.vec_id)"
-
-  /** [[rankByCosine]] and its ADC/L2 twins: the `from` rows ranked per
-    * q_id by (`order`, b_id), rank ≤ k kept, as `<name>(…, rank)`.
-    */
-  private def topKSql(name: String, from: String, k: Int,
-      order: String = "cosine DESC"): String =
-    s"$name AS (SELECT * FROM (SELECT *, CAST(row_number() OVER " +
-      s"(PARTITION BY q_id ORDER BY $order, b_id) AS INT) AS rank FROM $from) " +
-      s"WHERE rank <= $k)"
-
-  /** The ANN result over a scored `from(q_id, b_id, cosine)`. */
-  private def annTopKTail(from: String, k: Int): String =
-    topKSql("r", from, k) + " SELECT q_id, rank, b_id, cosine FROM r ORDER BY q_id, rank"
-
-  /** [[recallHits]]: per query, |truth ∩ ann| as `<name>(q_id, n_hits)`. */
-  private def hitsSql(name: String, truth: String, ann: String): String =
-    s"$name AS (SELECT q_id, count(*) AS n_hits FROM $truth JOIN $ann " +
-      "USING (q_id, b_id) GROUP BY q_id)"
-
-  private def nHitsSql(h: String): String = s"CAST(COALESCE($h.n_hits, 0) AS BIGINT)"
-  private def recallSql(h: String, k: Int): String =
-    s"round(COALESCE($h.n_hits, 0) / $k.0, 6)"
-  /** The query-set mean as one integer sum (no float fold order). */
-  private def meanRecallSql(h: String, k: Int): String =
-    s"round(sum(COALESCE($h.n_hits, 0)) OVER () / ($k.0 * count(*) OVER ()), 6)"
-
-  /** The cosine recall chain over a `cand(q_id, b_id)` in scope: the
-    * rescored ANN top-k `ann`, the exact top-k `bf` of the same query
-    * set and their `hits`.
-    */
-  private def recallCtes(k: Int): String =
-    Seq(rescoreSql("sc", "cand"), topKSql("ann", "sc", k),
-      exactSql("bsc", queryPredSql(100, "x.vec_id")), topKSql("bf", "bsc", k),
-      hitsSql("hits", "bf", "ann")).mkString(", ")
-
-  /** One recall row per query of `bf`: n_hits, recall_at_k, `extra`. */
-  private def recallTail(k: Int, extra: String): String =
-    s"SELECT q.q_id, ${nHitsSql("h")} AS n_hits, ${recallSql("h", k)} AS recall_at_$k, " +
-      s"$extra FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id) " +
-      "ORDER BY q_id"
-
-  /** IVFADC scoring ([[PqEncExprs]]: residual against the cell,
-    * sub-distances, codes; then the left-to-right ADC sum, round-6 before
-    * any rank so DuckDB's list_sum and Spark's fold cannot flip it): the
-    * codes `rcd(b_id, cell, codes)` of every `asg` row, the lookup tables
-    * `qsd(q_id, cell, sd)` of every `probes(q_id, v, cell)` row, and the
-    * pairs of `cand(q_id, b_id)` scored as `psc(q_id, b_id, adc)`.
-    */
-  private def adcSql(books: Seq[Seq[Seq[Double]]], kSub: Int,
-      probes: String = "qs", cand: String = "cand"): String = {
-    val m = books.length
-    val sub = 64 / m
-    def subDists(id: String, rows: String): String =
-      s"SELECT $id, cell, list_transform(range(1, ${m + 1}), m -> " +
-        s"list_transform(range(1, ${kSub + 1}), kk -> " +
-        s"list_sum(list_transform(range(1, ${sub + 1}), j -> " +
-        s"(r[(m-1)*$sub+j]-b[m][kk][j])*(r[(m-1)*$sub+j]-b[m][kk][j]))))) AS sd " +
-        s"FROM (SELECT $id, cell, list_transform(range(1, 65), j -> v[j] - c[cell][j]) " +
-        s"AS r FROM $rows CROSS JOIN ct) CROSS JOIN bks"
-    s"bks AS (SELECT ${books.map(matLit).mkString("[", ",", "]")} AS b), " +
-      "rcd AS (SELECT vec_id AS b_id, cell, " +
-      "list_transform(sd, s -> list_position(s, list_min(s))) AS codes " +
-      s"FROM (${subDists("vec_id", "asg")})), " +
-      s"qsd AS (${subDists("q_id", probes)}), " +
-      "psc AS (SELECT cand.q_id, cand.b_id, " +
-      s"round(list_sum(list_transform(range(1, ${m + 1}), m -> " +
-      "qsd.sd[m][rcd.codes[m]])), 6) AS adc " +
-      s"FROM $cand cand JOIN rcd ON rcd.b_id = cand.b_id " +
-      "JOIN qsd ON qsd.q_id = cand.q_id AND qsd.cell = rcd.cell)"
-  }
-
-  /** The semantic gates' confirm and pick over a `cand(q_id, b_id)` of
-    * the `vec_id % mod = rem` arrivals: [[cosine6]], the best pair at or
-    * above [[IncSemThreshold]] by (cosine desc, b_id), one row per
-    * arrival (novel when none).
-    */
-  private def gateSql(cand: String, mod: Int, rem: Int): String =
-    rescoreSql("sc", cand) + ", " +
-      topKSql("best", s"sc WHERE cosine >= $IncSemThreshold", 1) + " " +
-      "SELECT e.vec_id, best.b_id IS NULL AS is_novel, best.b_id AS match_id, " +
-      "best.cosine AS match_cosine FROM e LEFT JOIN best ON best.q_id = e.vec_id " +
-      s"WHERE e.vec_id % $mod = $rem ORDER BY vec_id"
-
-  /** Shared oracle CTE: embeddings + the multi-table sign sketch, with
-    * the hyperplane matrix embedded as a literal — the DuckDB replay of
-    * `lshBuckets` (same sequential dot products, same sign rule, same
-    * bit packing).
-    */
-  private[queries] def sketchCte(tables: Int, bits: Int): String =
-    s"pl AS (SELECT ${matLit(planeMatrix(tables * bits))} AS p), $embCte, " +
-      s"bk AS (SELECT vec_id, v, list_transform(range(0, $tables), t -> " +
-      s"CAST(list_sum(list_transform(range(0, $bits), i -> " +
-      s"CASE WHEN list_dot_product(v, p[t*$bits+i+1]) > 0 " +
-      "THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT)) AS buckets " +
-      "FROM e CROSS JOIN pl)"
-
-  /** The sign-LSH candidates (c3AnnLsh's bucket join): corpus bucket
-    * rows `corp(b_id, tbl, bucket)`, the Hamming-1 multi-probe rows
-    * `qs(q_id, tbl, bucket)` of the `pred` vectors, and the distinct
-    * pairs `cand(q_id, b_id)` sharing one with `q_id <op> b_id`.
-    * Expects [[sketchCte]] in scope.
-    */
-  private[queries] def lshCandSql(tables: Int, bits: Int, pred: String,
-      op: String): String =
-    s"corp AS (SELECT vec_id AS b_id, rt.t AS tbl, buckets[rt.t+1] AS bucket " +
-      s"FROM bk CROSS JOIN range(0, $tables) rt(t)), " +
-      "qs AS (SELECT vec_id AS q_id, rt.t AS tbl, " +
-      s"unnest(list_prepend(buckets[rt.t+1], list_transform(range(0, $bits), i -> " +
-      "xor(buckets[rt.t+1], (1::BIGINT << i))))) AS bucket " +
-      s"FROM bk CROSS JOIN range(0, $tables) rt(t) WHERE $pred), " +
-      "cand AS (SELECT DISTINCT q_id, b_id FROM corp JOIN qs " +
-      s"ON corp.tbl = qs.tbl AND corp.bucket = qs.bucket AND qs.q_id $op corp.b_id)"
 
   /** Deterministically retrain the IVF codebook the way c3AnnIvf does —
     * same bounded sample, same Lloyd iterations — so the dynamic oracle
@@ -1916,9 +1891,10 @@ object SimOps {
     val kCells = scaledCells(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val n = cents.length
-    // The ANN queries: the first MaxQueries multiples of 100 probe 4 cells.
+    // The ANN queries: the first MaxQueries multiples of AnnQueryMod probe
+    // AnnNprobe cells.
     val ivfCtes = s"WITH $embCte, ${codebookSql(cents)}, " +
-      probesSql(n, 4, queryPredSql(100))
+      probesSql(n, AnnNprobe, queryPredSql(AnnQueryMod))
     // Filtered search: candidates further restricted to the query's label
     // (the pre-filter joins into candidate generation, as the Spark
     // plan's matchCols do).
@@ -1928,11 +1904,11 @@ object SimOps {
     // residuals exactly as pqModel does, so the embedded literals match
     // the Spark plan's.
     val (coarsePq, books) = pqModel(
-      boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, 8, 16)
+      boundedSample(embVecs(spark, dir), AnnMaxSample), kCells, PqSubspaces, PqKSub)
     require(coarsePq == cents,
       "PQ coarse quantizer diverged from the IVF centroids — the shared " +
         "IVF CTEs would replay the wrong cells")
-    val pqTop = adcSql(books, 16) + ", " + topKSql("pr", "psc", 5, "adc")
+    val pqTop = adcSql(books, PqKSub) + ", " + topKSql("pr", "psc", TopK, "adc")
     val pqTail = " SELECT q_id, rank, b_id, adc FROM pr ORDER BY q_id, rank"
     val pqSql = s"$ivfCtes, ${ivfCandSql()}, $pqTop$pqTail"
     val pqFilteredSql = s"$ivfCtes, ${ivfCandSql(sameLabel)}, $pqTop$pqTail"
@@ -1941,8 +1917,8 @@ object SimOps {
     // TRUE — the bound lives in the Spark plan.
     val pqRecallSql = s"$ivfCtes, ${ivfCandSql()}, $pqTop, " +
       rescoreSql("bsc", "cand", score = s"${l2sqSql("x.v", "y.v")} AS l2sq") + ", " +
-      topKSql("bf", "bsc", 5, "l2sq") + ", " + hitsSql("hits", "bf", "pr") + " " +
-      recallTail(5, s"${meanRecallSql("h", 5)} AS mean_recall, TRUE AS mean_recall_ok")
+      topKSql("bf", "bsc", TopK, "l2sq") + ", " + hitsSql("hits", "bf", "pr") + " " +
+      recallTail(s"${meanRecallSql("h")} AS mean_recall, TRUE AS mean_recall_ok")
     // Adaptive-filtered replay: queries with < k labeled candidates in
     // their probed cells are starved and escalate to all-cell probes and
     // the full label slice; the merged probe/candidate sets ride the same
@@ -1951,7 +1927,7 @@ object SimOps {
       "n1 AS (SELECT q_id, count(*) AS n1 FROM cand GROUP BY q_id), " +
       "qq AS (SELECT DISTINCT q_id FROM qs), " +
       "starved AS (SELECT qq.q_id FROM qq LEFT JOIN n1 USING (q_id) " +
-      "WHERE COALESCE(n1.n1, 0) < 5), " +
+      s"WHERE COALESCE(n1.n1, 0) < $TopK), " +
       "qsA AS (SELECT q_id, v, cell FROM qs ANTI JOIN starved USING (q_id) " +
       "UNION ALL SELECT s.q_id, d.v, g.cell FROM starved s " +
       s"JOIN d ON d.vec_id = s.q_id CROSS JOIN range(1, ${n + 1}) g(cell)), " +
@@ -1959,14 +1935,14 @@ object SimOps {
       "UNION SELECT s.q_id, lb.vec_id AS b_id FROM starved s " +
       "JOIN e la ON la.vec_id = s.q_id " +
       "JOIN e lb ON lb.label = la.label AND lb.vec_id <> s.q_id), " +
-      adcSql(books, 16, "qsA", "candA") + ", " + topKSql("pr", "psc", 5, "adc") + pqTail
+      adcSql(books, PqKSub, "qsA", "candA") + ", " + topKSql("pr", "psc", TopK, "adc") + pqTail
     // Filtered recall: the filtered ADC top-k against the exact
     // LABEL-RESTRICTED squared-L2 top-k over the whole corpus, per-query
     // n_exact/n_ann/n_hits, honest-denominator recall, integer-sum mean.
     val pqFilteredRecallSql = s"$ivfCtes, ${ivfCandSql(sameLabel)}, $pqTop, " +
-      exactSql("exs", s"${queryPredSql(100, "x.vec_id")} AND y.label = x.label",
+      exactSql("exs", s"${queryPredSql(AnnQueryMod, "x.vec_id")} AND y.label = x.label",
         score = s"${l2sqSql("x.v", "y.v")} AS l2sq") + ", " +
-      topKSql("exk", "exs", 5, "l2sq") + ", " +
+      topKSql("exk", "exs", TopK, "l2sq") + ", " +
       "nex AS (SELECT q_id, count(*) AS n_exact FROM exk GROUP BY q_id), " +
       "nan AS (SELECT q_id, count(*) AS n_ann FROM pr GROUP BY q_id), " +
       hitsSql("hits", "exk", "pr") + " " +
@@ -1981,7 +1957,7 @@ object SimOps {
       "ORDER BY q_id"
     // k-NN graph replay: within-cell exact cosine, top-3 per vector.
     val knnSql = s"WITH $embCte, ${codebookSql(cents)}, ${cellPairsSql("<>")}, " +
-      rescoreSql("sc", "cp") + ", " + topKSql("pr", "sc", 3) +
+      rescoreSql("sc", "cp") + ", " + topKSql("pr", "sc", KnnJoinM) +
       " SELECT q_id AS a_id, rank, b_id, cosine FROM pr ORDER BY a_id, rank"
     // SemDeDup replay (DedupOps.c2SemanticDedup): within-cell pairs at
     // the corpus's embed-neardup cosine.
@@ -2082,27 +2058,27 @@ object SimOps {
     // verdict all replay in SQL.
     val staleSql = {
       val fresh = coarseCodebook(grownCorpus(spark, dir), kCells)
-      def qPred(id: String): String = queryPredSql(100, s"($id % $DriftIdOffset)")
+      def qPred(id: String): String = queryPredSql(AnnQueryMod, s"($id % $DriftIdOffset)")
       def monitor(tag: String, cb: Seq[Seq[Double]]): String =
-        Seq(codebookSql(cb, "g", tag), probesSql(cb.length, 4, qPred("vec_id"), tag),
+        Seq(codebookSql(cb, "g", tag), probesSql(cb.length, AnnNprobe, qPred("vec_id"), tag),
           ivfCandSql(tag = tag),
           s"scan$tag AS (SELECT q_id, count(*) AS n_cand FROM cand$tag GROUP BY q_id)",
-          rescoreSql(s"asc$tag", s"cand$tag", "g"), topKSql(s"ann$tag", s"asc$tag", 5),
+          rescoreSql(s"asc$tag", s"cand$tag", "g"), topKSql(s"ann$tag", s"asc$tag", TopK),
           hitsSql(s"hit$tag", "bf", s"ann$tag")).mkString(", ")
       s"WITH g AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
         "FROM embeddings UNION ALL " +
         s"SELECT vec_id + $DriftIdOffset, " +
         "list_transform(CAST(embedding AS DOUBLE[]), x -> x + 2.0) FROM embeddings), " +
         s"q AS (SELECT vec_id AS q_id FROM g WHERE ${qPred("vec_id")}), " +
-        exactSql("bsc", qPred("x.vec_id"), "g") + ", " + topKSql("bf", "bsc", 5) + ", " +
+        exactSql("bsc", qPred("x.vec_id"), "g") + ", " + topKSql("bf", "bsc", TopK) + ", " +
         monitor("sta", cents) + ", " + monitor("fre", fresh) + ", " +
         "res AS (SELECT q.q_id, " +
         "CAST(COALESCE(ssta.n_cand, 0) AS BIGINT) AS n_cand_stale, " +
         "CAST(COALESCE(sfre.n_cand, 0) AS BIGINT) AS n_cand_fresh, " +
         s"${nHitsSql("hsta")} AS n_hits_stale, ${nHitsSql("hfre")} AS n_hits_fresh, " +
-        s"${recallSql("hsta", 5)} AS recall_stale, ${recallSql("hfre", 5)} AS recall_fresh, " +
-        s"${meanRecallSql("hsta", 5)} AS mean_recall_stale, " +
-        s"${meanRecallSql("hfre", 5)} AS mean_recall_fresh, " +
+        s"${recallSql("hsta")} AS recall_stale, ${recallSql("hfre")} AS recall_fresh, " +
+        s"${meanRecallSql("hsta")} AS mean_recall_stale, " +
+        s"${meanRecallSql("hfre")} AS mean_recall_fresh, " +
         "round(CAST(sum(COALESCE(ssta.n_cand, 0)) OVER () AS DOUBLE) / count(*) OVER (), 6) " +
         "AS mean_scan_stale, " +
         "round(CAST(sum(COALESCE(sfre.n_cand, 0)) OVER () AS DOUBLE) / count(*) OVER (), 6) " +
@@ -2148,32 +2124,32 @@ object SimOps {
       "c3_knn_join" -> knnSql,
       "c3_ann_pq_recall" -> pqRecallSql,
       "c3_ann_ivf" ->
-        (s"$ivfCtes, ${ivfCandSql()}, ${rescoreSql("sc", "cand")}, " + annTopKTail("sc", 5)),
+        (s"$ivfCtes, ${ivfCandSql()}, ${rescoreSql("sc", "cand")}, " + annTopKTail("sc")),
       // mean_recall_ok is literal TRUE — the bound lives in the Spark plan.
       "c3_ann_ivf_recall" ->
-        (s"$ivfCtes, ${ivfCandSql()}, ${recallCtes(5)} " +
-          recallTail(5, s"${meanRecallSql("h", 5)} AS mean_recall, TRUE AS mean_recall_ok"))
+        (s"$ivfCtes, ${ivfCandSql()}, $recallCtes " +
+          recallTail(s"${meanRecallSql("h")} AS mean_recall, TRUE AS mean_recall_ok"))
     )
   }
 
   val oracle: Map[String, String] = Map(
     "c3_ann_lsh" ->
-      (s"WITH ${sketchCte(tables = 16, bits = 8)}, " +
-        lshCandSql(tables = 16, bits = 8, queryPredSql(100), "<>") + ", " +
-        rescoreSql("sc", "cand") + ", " + annTopKTail("sc", 5)),
+      (s"WITH ${sketchCte(LshTables, LshBits)}, " +
+        lshCandSql(LshTables, LshBits, queryPredSql(AnnQueryMod), "<>") + ", " +
+        rescoreSql("sc", "cand") + ", " + annTopKTail("sc")),
     // Recall replay: the c3_ann_lsh top-k intersected with the
     // c3_cosine_topk top-k — both deterministic (round-6 cosine, b_id
     // tie-break), so n_hits matches exactly; recall_ok is literal TRUE
     // (the bound lives in the Spark plan).
     "c3_ann_recall" ->
-      (s"WITH ${sketchCte(tables = 16, bits = 8)}, " +
-        lshCandSql(tables = 16, bits = 8, queryPredSql(100), "<>") + ", " +
-        recallCtes(5) + " " + recallTail(5, "TRUE AS recall_ok")),
+      (s"WITH ${sketchCte(LshTables, LshBits)}, " +
+        lshCandSql(LshTables, LshBits, queryPredSql(AnnQueryMod), "<>") + ", " +
+        recallCtes + " " + recallTail("TRUE AS recall_ok")),
     // kNN vote replay: the c3_cosine_topk ranking, labels joined back,
     // integer vote counts, deterministic (votes desc, label asc) argmax.
     "c3_knn_classify" ->
-      (s"WITH $embCte, ${exactSql("s", queryPredSql(20, "x.vec_id"))}, " +
-        topKSql("r", "s", 5) + ", " +
+      (s"WITH $embCte, ${exactSql("s", queryPredSql(KnnQueryMod, "x.vec_id"))}, " +
+        topKSql("r", "s", TopK) + ", " +
         "v AS (SELECT r.q_id, x.label AS true_label, y.label AS b_label, " +
         "count(*) AS n_votes FROM r JOIN e x ON x.vec_id = r.q_id " +
         "JOIN e y ON y.vec_id = r.b_id GROUP BY r.q_id, x.label, y.label), " +
@@ -2182,11 +2158,11 @@ object SimOps {
         "SELECT q_id, true_label, b_label AS pred_label, n_votes, " +
         "b_label = true_label AS correct FROM p WHERE vr = 1 ORDER BY q_id"),
     "c3_cosine_topk" ->
-      (s"WITH $embCte, ${exactSql("s", queryPredSql(100, "x.vec_id"))}, " +
-        annTopKTail("s", 5)),
+      (s"WITH $embCte, ${exactSql("s", queryPredSql(AnnQueryMod, "x.vec_id"))}, " +
+        annTopKTail("s")),
     "c3_range_search" ->
-      (s"WITH $embCte, ${exactSql("s", queryPredSql(50, "x.vec_id"))} " +
-        "SELECT q_id, b_id, cosine FROM s WHERE cosine >= 0.25 " +
+      (s"WITH $embCte, ${exactSql("s", queryPredSql(RangeQueryMod, "x.vec_id"))} " +
+        s"SELECT q_id, b_id, cosine FROM s WHERE cosine >= $RangeTau " +
         "ORDER BY q_id, b_id"),
     "c3_norm_stats" ->
       ("SELECT label, count(*) AS n_vecs, " +
@@ -2286,6 +2262,18 @@ object SimOps {
         when(cos >= threshold, col("b_id")).as("b_id"),
         when(cos >= threshold, cos).as("cosine"))
   }
+
+  /** The semantic gates' confirm and pick over a `cand(q_id, b_id)` of
+    * the `vec_id % mod = rem` arrivals: [[cosine6]], the best pair at or
+    * above [[IncSemThreshold]] by (cosine desc, b_id), one row per
+    * arrival (novel when none).
+    */
+  private def gateSql(cand: String, mod: Int, rem: Int): String =
+    rescoreSql("sc", cand) + ", " +
+      topKSql("best", s"sc WHERE cosine >= $IncSemThreshold", 1) + " " +
+      "SELECT e.vec_id, best.b_id IS NULL AS is_novel, best.b_id AS match_id, " +
+      "best.cosine AS match_cosine FROM e LEFT JOIN best ON best.q_id = e.vec_id " +
+      s"WHERE e.vec_id % $mod = $rem ORDER BY vec_id"
 
   /** Duplicate-call floor shared with the c2_embed_neardup family: the
     * synthetic embedding geometry puts near-dups well above it.
@@ -2576,33 +2564,32 @@ object SimOps {
     * is the price of MEASURING recall (run it on a sampled query set —
     * exactly what this does — not per production query).
     */
-  def c3AnnStaleness(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 4, queryMod: Int = 100): DataFrame = {
+  def c3AnnStaleness(spark: SparkSession, dir: String): DataFrame = {
     // Both codebooks at the one resolved cell count of the stored layout.
     val ann = ensureAnnIndex(spark, AnnLayout.fixed(spark, dir))
     val (staleCents, _) = ann.model(spark)
     val grown = grownCorpus(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val freshCents = coarseCodebook(grown, ann.cells)
-    val isQ = isQuery(col("vec_id") % lit(DriftIdOffset), queryMod)
+    val isQ = isQuery(col("vec_id") % lit(DriftIdOffset), AnnQueryMod)
     val queries = grown.filter(isQ)
       .select(col("vec_id").as("q_id"), col("embD").as("q_emb"))
     // NOT persisted here: recallHits persists its ground-truth side for
     // the result's lifetime, and both hits() calls below pass this same
     // frame — one compute, four branch reads.
-    val bf = exactCosineTopK(
-      grown.select(col("vec_id").as("b_id"), col("embD").as("b_emb")),
-      queries, k).select(col("q_id"), col("b_id"))
-    val candS = ivfCandidates(grown, isQ, staleCents, nprobe)
+    val bf = topK(exact(grown.select(col("vec_id").as("b_id"), col("embD").as("b_emb")),
+      queries, cosineScore), TopK).select(col("q_id"), col("b_id"))
+    val candS = ivfCandidates(grown, isQ, staleCents, AnnNprobe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candF = ivfCandidates(grown, isQ, freshCents, nprobe)
+    val candF = ivfCandidates(grown, isQ, freshCents, AnnNprobe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def scan(cand: DataFrame, as: String): DataFrame =
       cand.groupBy(col("q_id")).agg(count(lit(1)).as(as))
     def hits(cand: DataFrame, as: String): DataFrame =
-      recallHits(rescoreTopK(cand, grown, isQ, k).select(col("q_id"), col("b_id")), bf)
+      recallHits(rescoreTopK(cand, grown, isQ).select(col("q_id"), col("b_id")), bf)
         .withColumnRenamed("n_hits", as)
-    val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def meanScan(nCand: String): Column =
+      round(sum(col(nCand)).over(querySet).cast("double") / count(lit(1)).over(querySet), 6)
     val joined = queries.select(col("q_id"))
       .join(scan(candS, "n_cand_stale"), Seq("q_id"), "left")
       .join(scan(candF, "n_cand_fresh"), Seq("q_id"), "left")
@@ -2615,22 +2602,12 @@ object SimOps {
         coalesce(col("n_hits_fresh"), lit(0L)).as("n_hits_fresh"))
       // query-set means: integer sums under the window, ONE double
       // division each (no float fold order in the hash)
-      .withColumn("recall_stale",
-        round(col("n_hits_stale").cast("double") / k, 6))
-      .withColumn("recall_fresh",
-        round(col("n_hits_fresh").cast("double") / k, 6))
-      .withColumn("mean_recall_stale",
-        round(sum(col("n_hits_stale")).over(w).cast("double") /
-          (lit(k) * count(lit(1)).over(w)), 6))
-      .withColumn("mean_recall_fresh",
-        round(sum(col("n_hits_fresh")).over(w).cast("double") /
-          (lit(k) * count(lit(1)).over(w)), 6))
-      .withColumn("mean_scan_stale",
-        round(sum(col("n_cand_stale")).over(w).cast("double") /
-          count(lit(1)).over(w), 6))
-      .withColumn("mean_scan_fresh",
-        round(sum(col("n_cand_fresh")).over(w).cast("double") /
-          count(lit(1)).over(w), 6))
+      .withColumn("recall_stale", recall(col("n_hits_stale")))
+      .withColumn("recall_fresh", recall(col("n_hits_fresh")))
+      .withColumn("mean_recall_stale", meanRecall(col("n_hits_stale")))
+      .withColumn("mean_recall_fresh", meanRecall(col("n_hits_fresh")))
+      .withColumn("mean_scan_stale", meanScan("n_cand_stale"))
+      .withColumn("mean_scan_fresh", meanScan("n_cand_fresh"))
       .withColumn("retrain",
         (col("mean_recall_stale") + lit(0.05) < col("mean_recall_fresh")) ||
           (col("mean_scan_stale") > lit(2.0) * col("mean_scan_fresh")))
@@ -2644,22 +2621,22 @@ object SimOps {
     "c2_incremental_semantic_topc" ->
       ((s: SparkSession, d: String) => c2IncrementalSemanticTopc(s, d)),
     "c3_cosine_topk" -> ((s: SparkSession, d: String) => c3CosineTopK(s, d)),
-    "c3_range_search" -> ((s: SparkSession, d: String) => c3RangeSearch(s, d)),
-    "c3_knn_classify" -> ((s: SparkSession, d: String) => c3KnnClassify(s, d)),
-    "c3_ann_lsh" -> ((s: SparkSession, d: String) => c3AnnLsh(s, d)),
-    "c3_ann_ivf" -> ((s: SparkSession, d: String) => c3AnnIvf(s, d)),
+    "c3_range_search" -> (c3RangeSearch _),
+    "c3_knn_classify" -> (c3KnnClassify _),
+    "c3_ann_lsh" -> (c3AnnLsh _),
+    "c3_ann_ivf" -> (c3AnnIvf _),
     "c3_ann_pq" -> ((s: SparkSession, d: String) => c3AnnPq(s, d)),
     "c3_ann_pq_indexed" -> ((s: SparkSession, d: String) => c3AnnPqIndexed(s, d)),
-    "c3_ann_pq_filtered" -> ((s: SparkSession, d: String) => c3AnnPqFiltered(s, d)),
-    "c3_knn_join" -> ((s: SparkSession, d: String) => c3KnnJoin(s, d)),
-    "c3_ann_recall" -> ((s: SparkSession, d: String) => c3AnnRecall(s, d)),
-    "c3_ann_ivf_recall" -> ((s: SparkSession, d: String) => c3AnnIvfRecall(s, d)),
-    "c3_ann_pq_recall" -> ((s: SparkSession, d: String) => c3AnnPqRecall(s, d)),
-    "c3_ann_filtered_recall" -> ((s: SparkSession, d: String) => c3AnnFilteredRecall(s, d)),
-    "c3_ann_pq_filtered_adaptive" -> ((s: SparkSession, d: String) => c3AnnPqFilteredAdaptive(s, d)),
-    "c3_ann_staleness" -> ((s: SparkSession, d: String) => c3AnnStaleness(s, d)),
+    "c3_ann_pq_filtered" -> (c3AnnPqFiltered _),
+    "c3_knn_join" -> (c3KnnJoin _),
+    "c3_ann_recall" -> (c3AnnRecall _),
+    "c3_ann_ivf_recall" -> (c3AnnIvfRecall _),
+    "c3_ann_pq_recall" -> (c3AnnPqRecall _),
+    "c3_ann_filtered_recall" -> (c3AnnFilteredRecall _),
+    "c3_ann_pq_filtered_adaptive" -> (c3AnnPqFilteredAdaptive _),
+    "c3_ann_staleness" -> (c3AnnStaleness _),
     "c3_norm_stats" -> (c3NormStats _),
-    "c3_cluster_profile" -> ((s: SparkSession, d: String) => c3ClusterProfile(s, d)),
-    "c3_ann_cells" -> ((s: SparkSession, d: String) => c3AnnCells(s, d))
+    "c3_cluster_profile" -> (c3ClusterProfile _),
+    "c3_ann_cells" -> (c3AnnCells _)
   )
 }

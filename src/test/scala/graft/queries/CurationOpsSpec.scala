@@ -556,7 +556,7 @@ class CurationOpsSpec extends SparkSuite {
       .select(col("vec_id"), col("label")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     // ground-truth neighbor ranking from the already-verified exact top-k
-    val topk = SimOps.c3CosineTopK(spark, sf, k = 5, queryMod = 20).collect()
+    val topk = SimOps.c3CosineTopK(spark, sf, queryMod = 20).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     preds.foreach { case (q, trueLabel, pred, votes, correct) =>

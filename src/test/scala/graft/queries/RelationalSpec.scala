@@ -89,7 +89,12 @@ class RelationalSpec extends SparkSuite {
     assert(plan.contains("LeftSemi"), s"EXISTS should plan as a semi join:\n${plan.take(1200)}")
     assert(!plan.toLowerCase.contains("scalar-subquery"),
       s"correlated scalar subquery not decorrelated:\n${plan.take(1200)}")
+    assert(strayViews("graft_b5_").isEmpty, "b5_subquery_corr left a session view behind")
   }
+
+  /** Session tables and views whose name starts with `prefix`. */
+  private def strayViews(prefix: String): Seq[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix)).toSeq
 
   test("NOT IN plans as a null-aware anti join and honors three-valued semantics") {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -104,6 +109,7 @@ class RelationalSpec extends SparkSuite {
     val notIn = Relational.b3JoinNotIn(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(notIn.nonEmpty)
+    assert(strayViews("graft_b3_").isEmpty, "b3_join_notin left a session view behind")
     // the trap the null-aware path exists for: one NULL in the subquery
     // empties the result entirely (every membership test is UNKNOWN)
     graft.Tables.load(spark, sf, "customer")

@@ -16,9 +16,8 @@ class SimOpsSpec extends SparkSuite {
   }
 
   test("c3_range_search: exactly the rounded-cosine >= tau pairs of brute force") {
-    val out = SimOps.c3RangeSearch(spark, sf).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(out.nonEmpty)
+    def pairs(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
+      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val vecs = graft.Tables.load(spark, sf, "embeddings").collect()
       .map(r => r.getLong(0) -> r.getAs[scala.collection.Seq[Float]]("embedding")
         .map(_.toDouble).toArray).toMap
@@ -29,13 +28,25 @@ class SimOpsSpec extends SparkSuite {
     }
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val expect = (for {
-      (q, qv) <- vecs.toSeq if q % 50 == 0
-      (b, bv) <- vecs.toSeq if b != q
-      c = round6(dot(qv, bv) / (math.sqrt(dot(qv, qv)) * math.sqrt(dot(bv, bv))))
-      if c >= 0.25
-    } yield (q, b) -> c).toMap
-    assert(out == expect)
+    def brute(keep: (Long, Long) => Boolean, tau: Double): Map[(Long, Long), Double] =
+      (for {
+        (q, qv) <- vecs.toSeq
+        (b, bv) <- vecs.toSeq if keep(q, b)
+        c = round6(dot(qv, bv) / (math.sqrt(dot(qv, qv)) * math.sqrt(dot(bv, bv))))
+        if c >= tau
+      } yield (q, b) -> c).toMap
+    val out = pairs(SimOps.c3RangeSearch(spark, sf))
+    assert(out.nonEmpty)
+    assert(out == brute((q, b) => q % 50 == 0 && b != q, 0.25))
+    // c2_embed_neardup is the LSH-bucketed corpus×corpus range search:
+    // approximate, so its pairs are a subset of the brute-force a < b
+    // pairs at the near-dup floor, each with the same rounded cosine.
+    val nearDup = pairs(DedupOps.c2EmbedNearDup(spark, sf))
+    assert(nearDup.nonEmpty)
+    val want = brute((a, b) => a < b, DedupOps.NearDupCosine)
+    nearDup.foreach { case (ab, c) =>
+      assert(want.get(ab).contains(c), s"c2_embed_neardup pair $ab at $c is not a brute-force pair")
+    }
   }
 
   test("LSH ANN recall@5 >= 0.6 vs brute force") {
@@ -89,11 +100,18 @@ class SimOpsSpec extends SparkSuite {
       .mapValues(_.count(ivf.contains).toLong).toMap
     val got = SimOps.c3AnnIvfRecall(spark, sf).collect()
     assert(got.map(_.getLong(0)).toSet == wantHits.keySet)
-    val wantMean = wantHits.values.sum.toDouble / (5 * wantHits.size)
-    got.foreach { r =>
-      assert(r.getLong(1) == wantHits(r.getLong(0)))
-      assert(math.abs(r.getDouble(3) - wantMean) < 1e-6)
-      assert(r.getBoolean(4), s"mean recall ${r.getDouble(3)} below the 0.3 bound")
+    got.foreach(r => assert(r.getLong(1) == wantHits(r.getLong(0))))
+    // The shared recall tail, here and in c3_ann_pq_recall: per-query
+    // recall = n_hits / 5, the integer-sum query-set mean, its bound.
+    for ((name, rows, bound) <- Seq(("c3_ann_ivf_recall", got, 0.3),
+        ("c3_ann_pq_recall", SimOps.c3AnnPqRecall(spark, sf).collect(), 0.1))) {
+      assert(rows.nonEmpty, name)
+      val wantMean = rows.map(_.getLong(1)).sum.toDouble / (5 * rows.length)
+      rows.foreach { r =>
+        assert(r.getDouble(2) == r.getLong(1) / 5.0, s"$name q=${r.getLong(0)}")
+        assert(math.abs(r.getDouble(3) - wantMean) < 1e-6, name)
+        assert(r.getBoolean(4), s"$name: mean recall ${r.getDouble(3)} below the $bound bound")
+      }
     }
   }
 
